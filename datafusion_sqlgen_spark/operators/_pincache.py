@@ -100,14 +100,15 @@ class PinRegistry:
             except Exception:
                 same = False
             if same:
-                old.unpersist()
+                # blocking: the old blocks are gone before this build runs
+                old.unpersist(blocking=True)
                 self._entries.remove(old)
         while len(self._entries) >= self.cap:
-            self._entries.pop(0).unpersist()
+            self._entries.pop(0).unpersist(blocking=True)
         df = df.persist(level)
         self._entries.append(df)
         return df
 
     def release_all(self) -> None:
         while self._entries:
-            self._entries.pop().unpersist()
+            self._entries.pop().unpersist(blocking=True)

@@ -1169,7 +1169,7 @@ def semantic_dedup(
         ivf_assign,
     )
 
-    cents = _kmeans_centroids(df, n_cells, n_iter, id_col, vec_col, 6)
+    _, cents = _kmeans_centroids(df, n_cells, n_iter, id_col, vec_col, 6)
     # Round-13 optimization (guide 2.4): materialize the assignment
     # ONCE — it feeds both pair-join sides AND the final anti-join, so
     # the lazy form re-ran the corpus argmax pass (and re-inlined the

@@ -528,6 +528,32 @@ def mergeable_rollup(
     )
 
 
+def rollup_state_rows(
+    events: DataFrame,
+    ts_col: str = "ts",
+    key_col: str = "event_type",
+    val_col: str = "value",
+) -> DataFrame:
+    """Each raw event lifted, unaggregated, to its own
+    :func:`mergeable_rollup` state row ``(hr, key, n=1, sum_v=v,
+    sum_sq=v*v, min_v=v, max_v=v)`` — so raw rows can be unioned with an
+    already-aggregated state table and folded by ONE
+    :func:`merge_rollups` aggregate (the streaming sink's per-trigger
+    merge) instead of being pre-aggregated first.  A NULL value yields
+    n=1 and NULL sums, which the state algebra ignores exactly as
+    ``mergeable_rollup`` does."""
+    v = F.col(val_col)
+    return events.select(
+        F.date_trunc("hour", F.col(ts_col)).alias("hr"),
+        F.col(key_col),
+        F.lit(1).cast("bigint").alias("n"),
+        v.alias("sum_v"),
+        (v * v).alias("sum_sq"),
+        v.alias("min_v"),
+        v.alias("max_v"),
+    )
+
+
 def merge_rollups(a: DataFrame, b: DataFrame) -> DataFrame:
     """Merge two mergeable_rollup state tables: union + re-aggregate
     with the state algebra (counts and sums add; min/max combine).

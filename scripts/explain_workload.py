@@ -1,10 +1,17 @@
 #!/usr/bin/env python
 """Dev tool: plan-quality audit for any catalog workload.
 
-Usage: python scripts/explain_workload.py <workload> [sf_dir] [--full]
+Usage: python scripts/explain_workload.py <workload> [sf_dir] [--full] [--jobs]
 
 Prints the audit_plan summary (pushdown, pruning, exchange/broadcast
 counts, red flags) and, with --full, the formatted physical plan.
+
+With --jobs it instead runs the workload once to warm up, then once
+more, and prints the Spark jobs, stages and tasks of that second run,
+split into build (the query function: IR construction plus any eager
+driver work such as checkpoints or streaming replays) and execute (a
+``noop`` write of the result) — the counts quoted in docstrings and
+job-count tests.
 """
 
 import os
@@ -26,12 +33,16 @@ def main() -> None:
     from datafusion_sqlgen_spark.workloads import build_queries
 
     spark = get_spark(app_name="explain-workload", cpus=8,
-                      shuffle_partitions=8)
+                      shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     queries = build_queries()
     if name not in queries:
         raise SystemExit(f"unknown workload {name!r}; "
                          f"{len(queries)} available")
+    if "--jobs" in sys.argv:
+        print_jobs(spark, name, queries[name], sf_dir)
+        return
     a = audit_plan(queries[name](spark, sf_dir))
     print(f"workload            {name}")
     print(f"shuffle exchanges   {a.n_exchanges}")
@@ -50,6 +61,27 @@ def main() -> None:
         print(f"WARNING             {w}")
     if full:
         print("\n" + a.plan_text)
+
+
+def print_jobs(spark, name: str, query, sf_dir: str) -> None:
+    from datafusion_sqlgen_spark import jobstats
+
+    def run() -> tuple[dict, dict]:
+        start = jobstats.mark(spark)
+        df = query(spark, sf_dir)
+        build = jobstats.since(spark, start)
+        start = jobstats.mark(spark)
+        df.write.format("noop").mode("overwrite").save()
+        return build, jobstats.since(spark, start)
+
+    run()  # warm-up
+    build, execute = run()
+    print(f"workload  {name}")
+    print(f"{'phase':8}  {'jobs':>5}  {'stages':>6}  {'skipped':>7}  "
+          f"{'tasks':>6}")
+    for phase, c in (("build", build), ("execute", execute)):
+        print(f"{phase:8}  {c['jobs']:>5}  {c['stages']:>6}  "
+              f"{c['stages_skipped']:>7}  {c['tasks']:>6}")
 
 
 if __name__ == "__main__":

@@ -831,35 +831,61 @@ def test_pin_registry_evicts_same_plan_rebuilds(spark):
     the old entry and register exactly one live pin."""
     from datafusion_sqlgen_spark.operators._pincache import PinRegistry
 
-    import time
-
-    def cached_bytes() -> int:
+    def cached_bytes(rdd_ids=None) -> dict:
         # DataFrame.storageLevel cannot observe the eviction (it looks
         # up by canonical plan and finds the NEW entry), so assert on
-        # the materialized blocks themselves.
+        # the materialized blocks themselves — only this test's own:
+        # pins left by earlier tests in the shared session are not ours.
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return sum(i.memSize() + i.diskSize() for i in infos)
+        return {
+            i.id(): i.memSize() + i.diskSize() for i in infos
+            if rdd_ids is None or i.id() in rdd_ids
+        }
 
+    before = set(cached_bytes())
     reg = PinRegistry(4)
     base = _df(spark, "documents").limit(20).select("doc_id")
     first = reg.pin(base.groupBy("doc_id").count())
     first.count()
-    assert cached_bytes() > 0  # first build materialized
-    # identical plan, fresh build: evicts the old entry's blocks; the
-    # new pin is unmaterialized until its own action runs -> a rebuilt
+    ours = set(cached_bytes()) - before
+    assert ours and sum(cached_bytes(ours).values()) > 0  # materialized
+    # identical plan, fresh build: evicts the old entry's blocks (the
+    # eviction unpersists with blocking=True, so no polling); the new
+    # pin is unmaterialized until its own action runs -> a rebuilt
     # query recomputes instead of reading the previous build's cache
     second = reg.pin(base.groupBy("doc_id").count())
     assert len(reg) == 1
-    for _ in range(50):  # unpersist is async
-        if cached_bytes() == 0:
-            break
-        time.sleep(0.1)
-    assert cached_bytes() == 0
+    assert sum(cached_bytes(ours).values()) == 0
     # a DIFFERENT plan coexists (bounded-cap discipline unchanged)
     other = reg.pin(base.distinct())
     assert len(reg) == 2
     reg.release_all()
     assert len(reg) == 0
+
+
+def test_kmeans_fit_job_count(spark, tmp_path):
+    """The Lloyd loop's job floor, pinned: building kmeans_fit(n_iter=2)
+    launches no job, and executing it runs 13 — per iteration one
+    codebook step (the means shuffle, one global collect of the means
+    into the next broadcast row, its broadcast), never a (cell_id)
+    regroup or a posexplode of the output (the regrouping loop ran 15
+    on this input).  Re-derive for any workload with
+    ``scripts/explain_workload.py <workload> <sf_dir> --jobs``."""
+    from datafusion_sqlgen_spark import jobstats
+
+    path = str(tmp_path / "emb")
+    spark.range(256).coalesce(1).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(0, 15), i -> CAST(sin(id * 7 + i) AS FLOAT)) "
+        "AS embedding",
+    ).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    start = jobstats.mark(spark)
+    fit = similarity.kmeans_fit(corpus, k=8, n_iter=2)
+    assert jobstats.since(spark, start)["jobs"] == 0
+    start = jobstats.mark(spark)
+    fit.write.format("noop").mode("overwrite").save()
+    assert jobstats.since(spark, start)["jobs"] == 13
 
 
 def test_reliable_cut_mode_selection(spark, tmp_path, monkeypatch):

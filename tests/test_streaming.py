@@ -672,6 +672,114 @@ def test_rollup_sink_fails_loud_on_corrupt_state(spark, stream_dir, tmp_path):
     assert not os.path.exists(os.path.join(state, "gen-1"))
 
 
+def test_rollup_merge_batch_is_one_aggregate_job_pair(
+    spark, stream_dir, tmp_path
+):
+    """A non-first trigger is ONE aggregate over the previous generation
+    unioned with the batch rows: one shuffle-map job plus the generation
+    write — no emptiness probe, no schema-inference read of the
+    previous generation, no second aggregate."""
+    from datafusion_sqlgen_spark import jobstats
+
+    state = str(tmp_path / "state")
+    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
+    st.rollup_merge_batch(batch, 0, state)
+    start = jobstats.mark(spark)
+    st.rollup_merge_batch(batch, 1, state)
+    assert jobstats.since(spark, start)["jobs"] == 2
+
+
+def test_rollup_empty_batch_leaves_state_unchanged(
+    spark, stream_dir, tmp_path
+):
+    """An empty batch is not special-cased: it commits its generation
+    (the batch id is recorded) holding exactly the previous state."""
+    state = str(tmp_path / "state")
+    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
+    st.rollup_merge_batch(batch, 0, state)
+    once = sorted(
+        tuple(r) for r in st.read_rollup_state(spark, state).collect()
+    )
+    st.rollup_merge_batch(batch.limit(0), 1, state)
+    assert os.path.isdir(os.path.join(state, "gen-1"))
+    assert sorted(
+        tuple(r) for r in st.read_rollup_state(spark, state).collect()
+    ) == once
+
+
+@pytest.fixture(scope="module")
+def stream_dir_with_empty(stream_dir, tmp_path_factory):
+    """The 3 event files plus an EMPTY one, ordered by mtime so the
+    empty file is the second trigger of a 4-trigger replay."""
+    import duckdb
+
+    d = tmp_path_factory.mktemp("events_stream_empty")
+    order = ["part0.parquet", "empty.parquet", "part1.parquet",
+             "part2.parquet"]
+    for name in order:
+        if name != "empty.parquet":
+            shutil.copy(os.path.join(stream_dir, name), d / name)
+    duckdb.connect().execute(
+        f"COPY (SELECT * FROM read_parquet('{stream_dir}/part0.parquet') "
+        f"WHERE false) TO '{d}/empty.parquet' (FORMAT PARQUET)"
+    )
+    for i, name in enumerate(order):
+        os.utime(d / name, (1_000_000 + i, 1_000_000 + i))
+    return str(d)
+
+
+def test_bounded_rollup_runs_one_trigger_per_file(
+    spark, stream_dir, stream_dir_with_empty, tmp_path
+):
+    """run_bounded_rollup over 4 files runs exactly 4 triggers (one
+    committed batch per file), and the empty file in the middle of the
+    stream leaves the finalized state equal to the batch rollup."""
+    from datafusion_sqlgen_spark.operators import timeseries as ts
+
+    work = tmp_path / "work"
+    out = st.run_bounded_rollup(spark, stream_dir_with_empty, str(work))
+    commits = os.listdir(work / "checkpoint" / "commits")
+    assert sorted(c for c in commits if not c.startswith(".")) == [
+        "0", "1", "2", "3"
+    ]
+    batch = ts.finalize_rollup(ts.mergeable_rollup(
+        spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
+    ))
+    streamed = sorted(tuple(r) for r in out.collect())
+    assert streamed == sorted(tuple(r) for r in batch.collect())
+    assert len(streamed) > 0
+
+
+@pytest.mark.parametrize(
+    "drift, cause",
+    [
+        (lambda df: df.drop("max_v"), r"missing columns \['max_v'\]"),
+        (lambda df: df.withColumn("n", F.col("n").cast("int")),
+         r"n: int \(expected bigint\)"),
+    ],
+    ids=["missing_column", "wrong_type"],
+)
+def test_rollup_sink_fails_loud_on_drifted_state(
+    spark, stream_dir, tmp_path, drift, cause
+):
+    """A committed generation whose schema drifted (a column missing,
+    or of the wrong type) FAILS the next merging batch, naming the
+    column, before any merge runs; the drifted generation stays as it
+    was and no new generation commits."""
+    from datafusion_sqlgen_spark.operators import timeseries as ts
+
+    state = str(tmp_path / "state")
+    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
+    drift(ts.mergeable_rollup(batch)).write.parquet(
+        os.path.join(state, "gen-0")
+    )
+    with pytest.raises(IOError, match=cause):
+        st.rollup_merge_batch(batch, 1, state)
+    assert sorted(
+        d for d in os.listdir(state) if not d.startswith(".")
+    ) == ["gen-0"]
+
+
 def test_streaming_sketch_sink_matches_one_pass(spark, stream_dir, tmp_path):
     """The union law, trigger-at-a-time: N max-merges of per-batch HLL
     register tables equal the one-pass register build over all data."""
