@@ -283,14 +283,22 @@ def _codebook(
 
 
 def _cells_from_means_sql(field: str) -> str:
-    """Aggregate expression: the (cell_id, pos, m) means of a group,
-    collected once (sorted by cell, then pos) and sliced per cell
-    in-row into array<(cell_id, <field> = array of m in pos order)>."""
+    """Aggregate expression: the (cell_id, pos, m) means of a group as
+    array<(cell_id, <field> = array of m in pos order)>.
+
+    The means are collected and sorted (by cell, then pos) ONCE and
+    bound to ``s`` by a one-element ``transform``.  Every vector of the
+    group has the same dimension d, so every present cell holds exactly
+    d means and the j-th present cell is the slice [j*d, (j+1)*d) of
+    ``s``, with d = the last entry's pos + 1: O(k*d) after the one
+    O(k*d log(k*d)) sort, not one scan of all k*d means per cell."""
     means = "array_sort(collect_list(struct(cell_id, pos, m)))"
+    d = "(element_at(s, -1).pos + 1)"
     return (
-        f"transform(array_distinct(transform({means}, e -> e.cell_id)), "
-        f"c -> named_struct('cell_id', c, '{field}', "
-        f"transform(filter({means}, e -> e.cell_id = c), e -> e.m)))"
+        f"transform(array({means}), s -> transform("
+        "array_distinct(transform(s, e -> e.cell_id)), (c, j) -> "
+        f"named_struct('cell_id', c, '{field}', "
+        f"transform(slice(s, j * {d} + 1, {d}), e -> e.m))))[0]"
     )
 
 
@@ -2029,12 +2037,16 @@ def ivf_pq_topk(
 
     Scale shape — the corpus never shuffles: cell assignment and PQ
     encoding are broadcast-join passes (the one-time index build, both
-    persisted/bucketed in production); at query time every join is
-    against a broadcast small side (nprobe cells per query, the
-    per-query m x kcode distance table, the refine*k shortlist).
-    Candidate volume per query is nprobe/n_cells of the corpus read as
-    m-row CODES, not dim-float vectors — the 100-TB bandwidth win PQ
-    exists for.
+    persisted/bucketed in production); at query time the broadcast
+    sides are the nprobe cells per query, the per-query m x kcode
+    distance table, the refine*k shortlist — and the candidate list
+    (query_id, neighbor_id), which is NOT small: it holds nprobe/n_cells
+    of the corpus per query (a quarter at the defaults), so it grows
+    with the query count.  That suits the ad-hoc query batches this
+    operator serves; a corpus-scale batch of queries belongs to
+    :func:`ann_join`, which broadcasts neither side.  Candidates are
+    scored from m-row CODES, not dim-float vectors — the 100-TB
+    bandwidth win PQ exists for.
 
     Determinism (driver-hash requirements): ADC subspace distances are
     fixed-point BIGINTs (floor(l2 * 1e6 + 0.5)), so their SUM is
@@ -2107,8 +2119,9 @@ def ivf_pq_topk(
     ).where(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id", "neighbor_id"
     )
-    # the candidate list (queries x probed-cell members) is the small
-    # side; the corpus-scale m-row codes stream past it
+    # broadcast the candidate list (two longs per query x probed-cell
+    # member: nprobe/n_cells of the corpus per query, see the docstring)
+    # so the corpus-scale m-row codes stream past it unshuffled
     adc = (
         F.broadcast(cand).join(
             codes.select(

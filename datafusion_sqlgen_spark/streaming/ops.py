@@ -881,11 +881,23 @@ def run_bounded_dedup(
     )
 
 
+def _rollup_writer(
+    events_stream: DataFrame, state_path: str, checkpoint: str
+) -> "object":
+    """The rollup sink's ``DataStreamWriter``: every micro-batch merges
+    into the standing state table via :func:`rollup_merge_batch`."""
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        rollup_merge_batch(batch_df, batch_id, state_path)
+
+    return events_stream.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+
+
 def streaming_rollup_sink(
     events_stream: DataFrame,
     state_path: str,
     checkpoint: str,
-    available_now: bool = False,
 ) -> "object":
     """Continuously-maintained rollup (the materialized-view pattern):
     each micro-batch MERGES into the standing state table of mergeable
@@ -915,20 +927,8 @@ def streaming_rollup_sink(
     probed explicitly via the Hadoop FileSystem API, and their parquet
     footers are checked on the driver — a corrupt state file or schema
     drift FAILS the batch (and the query) instead of silently
-    discarding accumulated state.
-
-    ``available_now`` runs the query as ``trigger(availableNow=True)``:
-    it drains the input present at start (still honouring the source's
-    ``maxFilesPerTrigger``) and then terminates by itself."""
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rollup_merge_batch(batch_df, batch_id, state_path)
-
-    writer = events_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    discarding accumulated state."""
+    return _rollup_writer(events_stream, state_path, checkpoint).start()
 
 
 def _hadoop_exists(spark: SparkSession, p: str) -> bool:
@@ -1109,11 +1109,12 @@ def run_bounded_rollup(
     per-trigger state merges, yet it is a static DataFrame an oracle can
     hash against the batch twin (``mergeable_rollup_oracle``).
 
-    Shape: the replay is ONE ``availableNow`` query awaited to its own
-    termination — one trigger per input file at
-    ``max_files_per_trigger=1``, each a single merge aggregate plus its
-    generation write (:func:`rollup_merge_batch`) — then one read of the
-    last generation, finalized lazily.
+    Shape: the replay is ONE ``trigger(availableNow=True)`` query of the
+    sink's writer, awaited to its own termination (it drains the input
+    present at start, honouring ``maxFilesPerTrigger``) — one trigger
+    per input file at ``max_files_per_trigger=1``, each a single merge
+    aggregate plus its generation write (:func:`rollup_merge_batch`) —
+    then one read of the last generation, finalized lazily.
 
     ``work_dir`` holds the standing state table and the checkpoint;
     callers pass a fresh temp dir (the workload uses a per-run
@@ -1126,12 +1127,9 @@ def run_bounded_rollup(
         spark, events_path, max_files_per_trigger=max_files_per_trigger
     )
     state_path = os.path.join(work_dir, "rollup_state")
-    streaming_rollup_sink(
-        stream,
-        state_path=state_path,
-        checkpoint=os.path.join(work_dir, "checkpoint"),
-        available_now=True,
-    ).awaitTermination()
+    _rollup_writer(
+        stream, state_path, os.path.join(work_dir, "checkpoint")
+    ).trigger(availableNow=True).start().awaitTermination()
     states = read_rollup_state(spark, state_path)
     if states is None:
         # empty source -> zero triggers wrote state; return an empty

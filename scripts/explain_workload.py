@@ -64,15 +64,17 @@ def main() -> None:
 
 
 def print_jobs(spark, name: str, query, sf_dir: str) -> None:
-    from datafusion_sqlgen_spark import jobstats
+    from perfbench.probes import SparkCounters
+
+    counters = SparkCounters(spark)
 
     def run() -> tuple[dict, dict]:
-        start = jobstats.mark(spark)
+        start = counters.mark()
         df = query(spark, sf_dir)
-        build = jobstats.since(spark, start)
-        start = jobstats.mark(spark)
+        build = counters.delta(start, counters.mark())
+        start = counters.mark()
         df.write.format("noop").mode("overwrite").save()
-        return build, jobstats.since(spark, start)
+        return build, counters.delta(start, counters.mark())
 
     run()  # warm-up
     build, execute = run()
@@ -81,7 +83,7 @@ def print_jobs(spark, name: str, query, sf_dir: str) -> None:
           f"{'tasks':>6}")
     for phase, c in (("build", build), ("execute", execute)):
         print(f"{phase:8}  {c['jobs']:>5}  {c['stages']:>6}  "
-              f"{c['stages_skipped']:>7}  {c['tasks']:>6}")
+              f"{c['stages_skipped']:>7.0f}  {c['tasks']:>6.0f}")
 
 
 if __name__ == "__main__":

@@ -871,8 +871,9 @@ def test_kmeans_fit_job_count(spark, tmp_path):
     regroup or a posexplode of the output (the regrouping loop ran 15
     on this input).  Re-derive for any workload with
     ``scripts/explain_workload.py <workload> <sf_dir> --jobs``."""
-    from datafusion_sqlgen_spark import jobstats
+    from perfbench.probes import SparkCounters
 
+    counters = SparkCounters(spark)
     path = str(tmp_path / "emb")
     spark.range(256).coalesce(1).selectExpr(
         "id AS vec_id",
@@ -880,12 +881,38 @@ def test_kmeans_fit_job_count(spark, tmp_path):
         "AS embedding",
     ).write.parquet(path)
     corpus = spark.read.parquet(path)
-    start = jobstats.mark(spark)
+    start = counters.mark()
     fit = similarity.kmeans_fit(corpus, k=8, n_iter=2)
-    assert jobstats.since(spark, start)["jobs"] == 0
-    start = jobstats.mark(spark)
+    assert counters.delta(start, counters.mark())["jobs"] == 0
+    start = counters.mark()
     fit.write.format("noop").mode("overwrite").save()
-    assert jobstats.since(spark, start)["jobs"] == 13
+    assert counters.delta(start, counters.mark())["jobs"] == 13
+
+
+def test_codebook_from_means_slices_every_cell(spark):
+    """The next-iteration codebook cuts the once-sorted means by
+    position: with hundreds of cells, some absent (empty cells drop
+    out) and the means arriving unordered across partitions, every
+    present cell still gets exactly its own components in pos order."""
+    d = 5
+    cells = [c for c in range(300) if c % 7 != 3]
+    rows = [(c, p, float(c * 10 + p)) for c in cells for p in range(d)]
+    means = spark.createDataFrame(
+        rows[::-1], "cell_id INT, pos INT, m DOUBLE"
+    ).repartition(4)
+    (cb,) = similarity._codebook_from_means(means).collect()
+    assert [(e.cell_id, list(e.centroid)) for e in cb["__cb"]] == [
+        (c, [float(c * 10 + p) for p in range(d)]) for c in cells
+    ]
+
+
+def test_kmeans_fit_many_cells_matches_oracle(spark, duck):
+    """k=64 cells (an eighth of the corpus): the per-cell codebook cut
+    and the broadcast argmax agree with the DuckDB Lloyd chain well
+    beyond the k=8 of the catalog workload."""
+    check(spark, duck,
+          similarity.kmeans_fit(_df(spark, "embeddings"), k=64, n_iter=2),
+          similarity.kmeans_fit_oracle(k=64, n_iter=2))
 
 
 def test_reliable_cut_mode_selection(spark, tmp_path, monkeypatch):

@@ -679,14 +679,15 @@ def test_rollup_merge_batch_is_one_aggregate_job_pair(
     unioned with the batch rows: one shuffle-map job plus the generation
     write — no emptiness probe, no schema-inference read of the
     previous generation, no second aggregate."""
-    from datafusion_sqlgen_spark import jobstats
+    from perfbench.probes import SparkCounters
 
+    counters = SparkCounters(spark)
     state = str(tmp_path / "state")
     batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
     st.rollup_merge_batch(batch, 0, state)
-    start = jobstats.mark(spark)
+    start = counters.mark()
     st.rollup_merge_batch(batch, 1, state)
-    assert jobstats.since(spark, start)["jobs"] == 2
+    assert counters.delta(start, counters.mark())["jobs"] == 2
 
 
 def test_rollup_empty_batch_leaves_state_unchanged(
