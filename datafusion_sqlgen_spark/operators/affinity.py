@@ -15,20 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_sqlgen_spark.operators._pincache import PinRegistry
-
-# Pinned deduplicated (basket, item) relations, bounded-registry
-# discipline (similarity._TRAINED_CACHE et al.): the persist is
-# load-bearing — five branches read the table (both self-join sides,
-# the per-item counts via two aliases, and the 1-row basket total) —
-# but an unbounded session would accumulate one pinned corpus per
-# call. Fresh-build eviction (see _pincache) keeps rebuilt queries
-# honest: they recompute instead of reading the previous build's cache.
-_ITEMS_CACHE = PinRegistry(2)
-
-
-def _pin_items(df: DataFrame) -> DataFrame:
-    return _ITEMS_CACHE.pin(df)
+from datafusion_sqlgen_spark.materialize import materialize
 
 
 def basket_pairs(
@@ -57,10 +44,11 @@ def basket_pairs(
     sides, the two item-count aliases, the basket total) with zero
     runtime exchange reuse; 3.25s warm at sf0.1 for what is one
     distinct plus bounded joins. Identical row set, identical output."""
-    items = _pin_items(
+    items = materialize(
         df.select(
             F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-        ).distinct()
+        ).distinct(),
+        eager=False,
     )
     n_baskets = items.agg(
         F.countDistinct("b").cast("double").alias("nb")

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_sqlgen_spark.operators._pincache import PinRegistry
+from datafusion_sqlgen_spark.materialize import materialize
 from datafusion_sqlgen_spark.operators.text import words_col
 
 
@@ -176,25 +176,6 @@ def minhash_buckets_oracle(table: str = "documents", k: int = 4, bands: int = 2,
     """
 
 
-# Pinned minhash-pipeline intermediates (banded corpus, candidate
-# pairs, candidate shingles). Before round 14 the two persists inside
-# minhash_dedup_pairs had NO registry — beyond the session-lifetime
-# leak (three catalog rows build through here, the bench runs each
-# 6x), Spark's CacheManager matches persists by CANONICALIZED plan, so
-# a repeated identical query silently read the first build's cached
-# intermediates instead of recomputing: the leak doubled as an
-# unintended cross-run memo that flattered bench medians. The registry
-# bounds the footprint (one call pins three frames; cap keeps two
-# calls' worth) and its fresh-build eviction (see _pincache) makes
-# every rebuilt query recompute from source while keeping the
-# within-build sharing the pins exist for.
-_PAIRS_CACHE = PinRegistry(6)
-
-
-def _pin_pairs(df: DataFrame) -> DataFrame:
-    return _PAIRS_CACHE.pin(df)
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -223,10 +204,7 @@ def minhash_dedup_pairs(
     is pinned too — it feeds three lineages (the union's two arms that
     prune the shingle semi-join, and the final verify join), each of
     which re-ran the band self-join + pair DISTINCT from the cached
-    band table (a candidate-scale shuffle per reference at 100 TB);
-    and all pins now go through the bounded _PAIRS_CACHE registry
-    (fresh-build eviction) instead of leaking two cached frames per
-    call."""
+    band table (a candidate-scale shuffle per reference at 100 TB)."""
     sigs = minhash_signatures(df, text_col, id_col, k=k, shingle=shingle)
     rows_per_band = k // bands
     band_structs = []
@@ -238,17 +216,19 @@ def minhash_dedup_pairs(
                 F.md5(F.concat_ws("|", *members)).alias("bucket"),
             )
         )
-    exploded = _pin_pairs(
+    exploded = materialize(
         sigs.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("bb"))
-        .select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        .select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")),
+        eager=False,
     )
     a = exploded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b_side = exploded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    cand = _pin_pairs(
+    cand = materialize(
         a.join(b_side, on=["band", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct()
+        .distinct(),
+        eager=False,
     )
     cand_ids = (
         cand.select(F.col("id_a").alias(id_col))
@@ -257,11 +237,12 @@ def minhash_dedup_pairs(
     )
     # pinned: the pair join reads `sh` twice (id_a and id_b sides) —
     # without the cut, candidate docs are re-shingled per side
-    sh = _pin_pairs(
+    sh = materialize(
         df.join(cand_ids, id_col, "left_semi").select(
             F.col(id_col),
             F.array_distinct(_shingles(F.col(text_col), shingle)).alias("sh"),
-        )
+        ),
+        eager=False,
     )
     pairs = (
         cand.join(sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
@@ -492,38 +473,36 @@ def connected_components(
     shrinking-information) label table against the symmetrized edge list
     plus a min-aggregation — O(diameter) rounds, and near-dup graphs are
     shallow (dominated by tiny cliques), so 3-5 rounds converge in
-    practice. ``reliable_cut`` truncates the lineage each round so the
-    plan doesn't grow exponentially — localCheckpoint in local mode, a
+    practice. The edge lists and every round's label table are
+    corpus-scale cuts (``materialize(scale="corpus")``), so the plan
+    doesn't grow exponentially — a local checkpoint in local mode, a
     reliable checkpoint when ``SPARK_GRAFT_CHECKPOINT_DIR`` (or a
-    session checkpoint dir) is configured, as a cluster must (r14,
-    VERDICT r13 item 5: label tables are node-scale; an executor lost
-    mid-iteration would otherwise kill the query). There is no
+    session checkpoint dir) is configured, as a cluster must: an
+    executor lost mid-iteration cannot kill the query. There is no
     recursive SQL here by design — iteration is driver-coordinated,
     exactly like GraphX/GraphFrames.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    # Materialize the edge list BEFORE symmetrizing: the union reads it
-    # twice, and without a persisted cut the whole upstream pipeline
-    # (for near-dup edges: the full MinHash+verify pass) runs twice.
-    edges = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # Cut the edge list BEFORE symmetrizing: the union reads it twice,
+    # and without a cut the whole upstream pipeline (for near-dup edges:
+    # the full MinHash+verify pass) runs twice.
+    edges = materialize(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
+        scale="corpus",
     )
-    edges.count()
     sym = edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    # Partition the (static) symmetrized edge list by the join key ONCE:
-    # the persisted scan reports hashpartitioning(s), so every iteration's
-    # join shuffles only the (smaller) label table. No distinct() first —
+    # Partition the (static) symmetrized edge list by the join key ONCE,
+    # for the round joins to reuse. No distinct() first —
     # duplicate edges cannot change a min-propagation result, and deduping
     # the edge table would cost a second full shuffle of it (r2 shave).
-    sym = sym.repartition(F.col("s")).persist()
+    # Lazy: the round-0 label cut below fills it.
+    sym = materialize(sym.repartition(F.col("s")), scale="corpus", eager=False)
     # Fused round 0: label(node) = min(node, min(neighbors)) directly from
     # the grouped edge list — one aggregation replaces the identity-label
     # table AND the first join round.
-    labels = (
+    labels = materialize(
         sym.groupBy(F.col("s").alias("node"))
-        .agg(F.least(F.first("s"), F.min("d")).alias("label"))
-        .localCheckpoint(eager=True)
+        .agg(F.least(F.first("s"), F.min("d")).alias("label")),
+        scale="corpus",
     )
     # Convergence check: labels move strictly monotonically down (min-
     # propagation), so the global label sum strictly decreases iff any
@@ -534,18 +513,17 @@ def connected_components(
             sym.join(labels.withColumnRenamed("node", "s"), "s")
             .select(F.col("d").alias("node"), "label")
         )
-        # lazy checkpoint: the convergence aggregate below is what
+        # lazy cut: the convergence aggregate below is what
         # materializes it, so each round is ONE job, not two
-        labels = (
-            labels.union(prop).groupBy("node").agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
+        labels = materialize(
+            labels.union(prop).groupBy("node").agg(F.min("label").alias("label")),
+            scale="corpus",
+            eager=False,
         )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    sym.unpersist()
-    edges.unpersist()
     return labels
 
 
@@ -936,10 +914,6 @@ def block_dedup_oracle(table: str = "documents", block: int = 16) -> str:
     """
 
 
-# see incremental_dedup: holds at most the latest call's pinned frame
-_INCREMENTAL_CACHE: list = []
-
-
 def _banded(
     df: DataFrame,
     text_col: str,
@@ -995,15 +969,6 @@ def incremental_dedup(
     takes any DataFrame, e.g. a parquet-backed band table); (3) exact
     Jaccard verification on the candidate pairs only. Returns surviving
     new rows as (id, text_md5)."""
-    from pyspark.storagelevel import StorageLevel
-
-    # bound the cache footprint across repeated calls (a continuous
-    # ingest loop calls this per batch): release the PREVIOUS call's
-    # pinned survivors before pinning this one — at most one batch's
-    # cache outlives its call
-    while _INCREMENTAL_CACHE:
-        _INCREMENTAL_CACHE.pop().unpersist()
-
     corpus_md5 = corpus_df.select(
         F.md5(F.col(text_col)).alias("__md5")
     ).distinct()
@@ -1014,10 +979,9 @@ def incremental_dedup(
     # persisted: the survivors feed three lineages (banding, candidate
     # shingling, final anti-join) — without the cut each re-executes the
     # corpus-hash anti-join
-    exact_ok = hashed.join(corpus_md5, "__md5", "left_anti").persist(
-        StorageLevel.MEMORY_AND_DISK
+    exact_ok = materialize(
+        hashed.join(corpus_md5, "__md5", "left_anti"), eager=False
     )
-    _INCREMENTAL_CACHE.append(exact_ok)
 
     new_bands = _banded(exact_ok, text_col, id_col, k, bands, shingle) \
         .select(F.col(id_col).alias("new_id"), "band", "bucket")
@@ -1027,13 +991,12 @@ def incremental_dedup(
     # semi-join prunes and the final verify join) — without the cut each
     # re-executes the corpus-side banding + band join. Candidate pairs
     # are the small side by construction (LSH bands exist to shrink them)
-    cand = (
+    cand = materialize(
         new_bands.join(corpus_bands, ["band", "bucket"])
         .select("new_id", "corpus_id")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        eager=False,
     )
-    _INCREMENTAL_CACHE.append(cand)
     sh_new = exact_ok.join(
         cand.select(F.col("new_id").alias(id_col)).distinct(),
         id_col, "left_semi",
@@ -1175,8 +1138,8 @@ def semantic_dedup(
     # the lazy form re-ran the corpus argmax pass (and re-inlined the
     # k-means lineage) three times. Identical row set; at 100 TB this
     # is the persisted/bucketed index-build step the docstring names.
-    assigned = ivf_assign(df, cents, id_col, vec_col).localCheckpoint(
-        eager=True
+    assigned = materialize(
+        ivf_assign(df, cents, id_col, vec_col), scale="corpus"
     )
     # norm once per vector before the pair join (pair count is quadratic
     # in cell size; per-pair array passes dominate otherwise)

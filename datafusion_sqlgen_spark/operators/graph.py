@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from datafusion_sqlgen_spark.operators._pincache import reliable_cut
+from datafusion_sqlgen_spark.materialize import materialize
 from datafusion_sqlgen_spark.operators.similarity import lsh_buckets
 
 
@@ -105,9 +105,7 @@ def _pagerank_plan(
     # caller's edge-build subtree (for the catalog row: the whole LSH
     # kNN-graph build) into their own lineage, so the invariants'
     # checkpoint jobs re-derived it up to 6x. Identical row set.
-    # Reliable cut, not localCheckpoint (r14, VERDICT r13 item 5):
-    # the edge list is corpus-scale and read by every iteration.
-    edges = reliable_cut(edges)
+    edges = materialize(edges, scale="corpus")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -119,28 +117,18 @@ def _pagerank_plan(
     )
     # The two loop-invariant tables, pre-partitioned on their join keys
     # so each iteration shuffles ONLY the (small) ranks/contrib side,
-    # and EAGERLY localCheckpoint-ed so iteration 2+ reads materialized
-    # partitions instead of re-deriving the join/distinct from lineage
-    # (VERDICT r7 §3).  Checkpoint, not persist (r11 rework of the r10
-    # cleanup): persist leaked CacheManager entries for the session
-    # unless unpersisted, and the r10 fix — eager-checkpointing the
-    # FINAL ranks so the invariants could be unpersisted before
-    # returning — materialized the whole query inside pagerank() and
-    # again at the caller's action (the 1.49x bench regression VERDICT
-    # r10 put on watch; isolated A/B this session: ~2x).  A checkpoint
-    # holds no CacheManager entry and the ContextCleaner reclaims its
-    # blocks when the frame's references drop, so nothing needs manual
-    # release; the two invariants are small (m edge rows / n node
-    # rows), so their eager jobs cost what the lazy cache fill did.
-    # (r14: both invariants go through reliable_cut — ed is edge-scale,
-    # base node-scale; partitioning survives the cut either way.)
-    ed = reliable_cut(
-        edges.join(outdeg, "src")
-        .repartition(F.col("src"))
+    # and cut EAGERLY so iteration 2+ reads materialized partitions
+    # instead of re-deriving the join/distinct from lineage (VERDICT r7
+    # §3).  A cut, not a pin: the partitioning survives it, and the
+    # returned ranks stay lazy, so the caller's action is the only full
+    # pass.  ed is edge-scale, base node-scale: both corpus cuts.
+    ed = materialize(
+        edges.join(outdeg, "src").repartition(F.col("src")), scale="corpus"
     )
-    base = reliable_cut(
+    base = materialize(
         nodes.crossJoin(F.broadcast(n1))  # (node, __n)
-        .repartition(F.col("node"))
+        .repartition(F.col("node")),
+        scale="corpus",
     )
     ranks = base.select(
         "node", "__n", F.expr(f"CAST({scale} AS BIGINT) DIV __n").alias("rank_fp")
@@ -196,7 +184,7 @@ def pagerank(
 
     Scale shape: each iteration is one shuffle — contributions map over
     the (edges ⋈ degree) table partitioned by ``src`` (built once,
-    eagerly ``localCheckpoint``-ed, and reused every iteration —
+    eagerly cut, and reused every iteration —
     without the materialization each iteration re-derives the join
     from lineage) and sum by ``dst``; ranks re-join by node against
     the likewise-checkpointed ``(node, n)`` base.  The node count
@@ -205,16 +193,10 @@ def pagerank(
     cluster scale checkpoint the RANKS every ~5 iterations too (the
     CC operator's pattern, `dedup.py` connected_components).
 
-    Cache-hygiene history: the invariants were persisted in r7 (leak:
-    CacheManager entries lived for the session, ADVICE r9), then r10
-    eager-checkpointed the FINAL ranks so they could be unpersisted
-    before returning — which materialized the entire query inside
-    pagerank() and again at the caller's first action (the 1.49x
-    bench regression, VERDICT r10 watch item).  Checkpointing the
-    INVARIANTS instead gives both properties at once: no CacheManager
-    entry exists at any point (the ContextCleaner reclaims checkpoint
-    blocks when the frame's references drop), and the returned ranks
-    stay lazy, so the caller's action is the only full pass."""
+    The cuts hold no CacheManager entry and are released with the
+    query's scope (:mod:`datafusion_sqlgen_spark.materialize`); the
+    returned ranks stay lazy, so the caller's action is the only full
+    pass."""
     return _pagerank_plan(edges, iterations, damp_pct, scale)
 
 
@@ -294,16 +276,15 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # compiling to a 244-exchange plan (~9 copies of the edge build).
     # Cohen's MapReduce formulation materializes these between rounds
     # for the same reason; results are identical row sets. Edge lists
-    # are corpus-scale, so the cut is a RELIABLE checkpoint (r14,
-    # VERDICT r13 item 5): localCheckpoint blocks die with their
-    # executor and the truncated lineage cannot recompute them.
-    und = reliable_cut(
+    # are corpus-scale cuts.
+    und = materialize(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
         )
-        .distinct()
+        .distinct(),
+        scale="corpus",
     )
     deg = (
         und.select(F.col("a").alias("v"))
@@ -316,12 +297,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     lower_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = reliable_cut(
+    oriented = materialize(
         und.join(da, "a").join(db, "b")
         .select(
             F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
+        ),
+        scale="corpus",
     )  # read 3x by the wedge join
     e1 = oriented.select(F.col("u"), F.col("v"))
     e2 = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))

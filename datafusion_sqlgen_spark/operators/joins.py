@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datafusion_sqlgen_spark.materialize import materialize
+
 
 def asof_join(
     left: DataFrame,
@@ -670,16 +672,19 @@ def scd2_history_from_cdc(
     dimension input for :func:`scd2_point_in_time`.
 
     Scale shape: each fold is scd2_merge's single full-outer join of
-    the dimension-sized open slice; localCheckpoint between folds
+    the dimension-sized open slice; a corpus-scale cut between folds
     bounds plan depth (the k-means/BPE iteration pattern — a reliable
-    checkpoint dir on a real cluster)."""
+    checkpoint when a checkpoint dir is configured)."""
     from pyspark.sql import Window
 
-    staged = cdc.withColumn(
-        "__b",
-        F.ntile(n_batches).over(
-            Window.orderBy(*[F.col(c).asc() for c in order_cols])),
-    ).localCheckpoint(eager=True)
+    staged = materialize(
+        cdc.withColumn(
+            "__b",
+            F.ntile(n_batches).over(
+                Window.orderBy(*[F.col(c).asc() for c in order_cols])),
+        ),
+        scale="corpus",
+    )
     w = Window.partitionBy(key).orderBy(
         F.col(ts_col).desc(), *[F.col(c).desc() for c in order_cols])
     history = None
@@ -702,7 +707,7 @@ def scd2_history_from_cdc(
                 history, snap, key, list(attrs),
                 effective_from_col=ts_col,
             )
-        history = history.localCheckpoint(eager=True)
+        history = materialize(history, scale="corpus")
     return history
 
 

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datafusion_sqlgen_spark.materialize import materialize
+
 MEDIA_META = T.StructType(
     [
         T.StructField("mime", T.StringType()),
@@ -463,7 +465,7 @@ def phash_near_dup_pairs(
     # fabrication + aHash pass twice. (id, phash) is 16 bytes/row —
     # exactly the fingerprint table §8 of the guide says to
     # materialize instead of re-deriving from payload bytes.
-    hashed = perceptual_hash(mm).localCheckpoint(eager=True)
+    hashed = materialize(perceptual_hash(mm))
     chunks = hashed.select(
         "doc_id", "phash",
         F.explode(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_sqlgen_spark.materialize import materialize
+
 # 4 hex chars = 65536 buckets: 0.0015% rate granularity, plenty for
 # corpus work. Membership compares the *lowercase hex string* (identical
 # lexicographic order in every engine) — never parse hex to int, which
@@ -749,7 +751,10 @@ def mixture_waterfill(
         Window.partitionBy().orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    scanned = (
+    # both the fixpoint pick and the final flags read this ≤|domains|-row
+    # table; materialize it once so the corpus aggregate underneath runs
+    # ONE scan, not one per consumer
+    scanned = materialize(
         stats
         .withColumn("__p", F.sum("weight").over(wall).cast("bigint"))
         .withColumn(
@@ -768,11 +773,6 @@ def mixture_waterfill(
             F.coalesce(F.sum("weight").over(wpre), F.lit(0)).cast("bigint"),
         )
         .withColumn("__idx", F.row_number().over(Window.orderBy(*order)))
-        # both the fixpoint pick and the final flags read this
-        # ≤|domains|-row table; materialize it once so the corpus
-        # aggregate underneath runs ONE scan, not one per consumer
-        # (on a cluster: a reliable checkpoint dir, same call)
-        .localCheckpoint(eager=True)
     )
     # fixpoint: FIRST row in ratio order whose own cap survives the
     # water level implied by capping everything before it

@@ -15,7 +15,7 @@ import pandas as pd  # noqa: F401 — pandas-UDF type hints resolve here
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_sqlgen_spark.operators._pincache import PinRegistry
+from datafusion_sqlgen_spark.materialize import materialize
 
 # Deterministic stopword list used by quality scoring and language ID.
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
@@ -1655,20 +1655,6 @@ def ngram_counts_oracle(table: str = "documents", k: int = 50) -> str:
     """
 
 
-# Pinned per-doc DSIR weight tables, same bounded-registry discipline as
-# similarity._TRAINED_CACHE / dedup._INCREMENTAL_CACHE: the persist is
-# load-bearing (the table branches into a max agg AND a rate
-# projection), but an unbounded session would otherwise accumulate one
-# pinned plan per dsir_resample call. Fresh-build eviction (round 14,
-# see _pincache): a rebuilt identical query recomputes its weights
-# instead of silently reading the previous build's cache.
-_WEIGHTS_CACHE = PinRegistry(4)
-
-
-def _pin_weights(df: DataFrame) -> DataFrame:
-    return _WEIGHTS_CACHE.pin(df)
-
-
 def dsir_resample(
     df: DataFrame,
     target_df: DataFrame,
@@ -1703,10 +1689,8 @@ def dsir_resample(
     # the whole weights pipeline (vocab builds + corpus tokenization)
     # once per branch — measured 14 Generate nodes / 28 scans in one
     # plan. The cached table is (id, double) per document — the one
-    # intermediate small enough to pin at any corpus scale. Bounded
-    # registry (round-6 ADVICE): repeated calls in one session evict
-    # the oldest pinned weight table instead of accumulating forever.
-    wts = _pin_weights(wts)
+    # intermediate small enough to pin at any corpus scale.
+    wts = materialize(wts, eager=False)
     mx = wts.agg(F.max("mean_logratio").alias("__mx"))
     rate = F.round(
         F.exp((F.col("mean_logratio") - F.col("__mx")) / temperature), 4
@@ -1960,8 +1944,8 @@ def lr_train_hashed(
     occurrence count, so past ~10^9 occurrences per bucket the BIGINT
     sum should shed the 1e6 error scale (or move to DECIMAL) to stay
     within double-exact range for the update's float step."""
-    feats = _pin_weights(
-        _hashed_gram_features(df, vocab_size, text_col, id_col)
+    feats = materialize(
+        _hashed_gram_features(df, vocab_size, text_col, id_col), eager=False
     )
     labs = df.select(
         F.col(id_col),
@@ -3556,12 +3540,12 @@ def pmi_collocations(
     # materialize each so its corpus pass runs exactly once — pc is the
     # co-occurrence matrix (bounded by pair-vocab, the intermediate a
     # real pipeline persists anyway), uni is vocab-sized
-    pc = pairs.groupBy("a", "b").agg(
+    pc = materialize(pairs.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("pair_count")
-    ).localCheckpoint(eager=True)
-    uni = toks.groupBy("term").agg(
+    ))
+    uni = materialize(toks.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
-    ).localCheckpoint(eager=True)
+    ))
     # marginals' totals come from the already-aggregated pair/unigram
     # tables (pre-min_count), so the corpus subtree is never re-scanned
     totals = pc.agg(

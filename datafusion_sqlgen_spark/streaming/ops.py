@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datafusion_sqlgen_spark.materialize import query_scope
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -714,15 +716,18 @@ def dedup_ingest_batch(
     # a corrupt corpus must FAIL the batch, not silently re-admit every
     # document as if the corpus were empty
     corpus = read_dedup_corpus(spark, corpus_path)
-    if corpus is not None:
-        admitted_ids = incremental_dedup(batch_unique, corpus).select(
-            "doc_id"
-        )
-        admitted = batch_unique.join(admitted_ids, "doc_id", "left_semi")
-    else:
-        admitted = batch_unique
     staging = f"{corpus_path}/.staging-batch-{batch_id}"
-    _atomic_commit_dir(spark, admitted, staging, commit_dir)
+    # the batch's own scope: its admission intermediates are released
+    # once it commits, so a running stream holds at most one batch's
+    with query_scope():
+        if corpus is not None:
+            admitted_ids = incremental_dedup(batch_unique, corpus).select(
+                "doc_id"
+            )
+            admitted = batch_unique.join(admitted_ids, "doc_id", "left_semi")
+        else:
+            admitted = batch_unique
+        _atomic_commit_dir(spark, admitted, staging, commit_dir)
 
 
 def read_dedup_corpus(spark: SparkSession, corpus_path: str):

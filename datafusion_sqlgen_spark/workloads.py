@@ -59,6 +59,9 @@ from datafusion_sqlgen_spark.operators import (
     timeseries,
 )
 from datafusion_sqlgen_spark.functions import udfs
+from datafusion_sqlgen_spark.materialize import (
+    materialize, release_session, work_dir,
+)
 from datafusion_sqlgen_spark.tpch import tpch_workloads
 
 
@@ -1745,13 +1748,12 @@ def _source_jsonl_roundtrip(s: SparkSession) -> DataFrame:
     job), aggregate per language. First driver-sampled workload through
     the JSON source path; values must match aggregating the parquet
     source directly — which is what the oracle does."""
-    import tempfile
 
     from pyspark.sql import types as T
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="src_jsonl_") + "/docs_meta"
+    out = work_dir("src_jsonl_") + "/docs_meta"
     src = s.table("documents").select("doc_id", "lang", "n_chars")
     sio.write_json(src, out)
     schema = T.StructType([
@@ -1780,11 +1782,10 @@ def _source_schema_evolution(s: SparkSession) -> DataFrame:
     reconciled by name; old files surface NULL for the new column), and
     aggregate per language counting which rows carry the new column.
     The oracle computes the same split from the source table directly."""
-    import tempfile
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="src_evo_") + "/docs_evolved"
+    out = work_dir("src_evo_") + "/docs_evolved"
     docs = s.table("documents")
     gen1 = docs.filter(F.col("doc_id") < 250).select("doc_id", "lang", "n_chars")
     gen2 = docs.filter(F.col("doc_id") >= 250).select(
@@ -1816,11 +1817,10 @@ def _sink_zorder_roundtrip(s: SparkSession) -> DataFrame:
     multiset. The layout property itself (tight per-file footer spans on
     BOTH dimensions) is pinned by
     tests/test_multimodal_sources_udfs.py::test_zorder_write_tightens_footers."""
-    import tempfile
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="sink_z_") + "/orders_z"
+    out = work_dir("sink_z_") + "/orders_z"
     orders = s.table("orders")
     # bounds computed inside the write job (broadcast 1-row min/max) —
     # no .first() driver round-trip (VERDICT r4 item 6)
@@ -1895,11 +1895,10 @@ def _streaming_rollup_result(s: SparkSession) -> DataFrame:
     table is returned for the driver's hash check against the batch
     rollup of all raw rows. First workload whose result's compute path
     runs through a streaming query (VERDICT r4 item 8)."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import run_bounded_rollup
 
-    work = tempfile.mkdtemp(prefix="stream_rollup_")
+    work = work_dir("stream_rollup_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     with _replay_shuffle(s):
@@ -1917,7 +1916,6 @@ def _streaming_drift_psi_result(s: SparkSession) -> DataFrame:
     streaming twin of operators.profiling.drift_psi). The edge lookup
     is a 1-row aggregate collect at plan-build time (setup, not
     per-row compute)."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         drift_psi_finalize,
@@ -1943,7 +1941,7 @@ def _streaming_drift_psi_result(s: SparkSession) -> DataFrame:
     ref = ref_src.groupBy(bucket.alias("bucket")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_ref"))
 
-    work = tempfile.mkdtemp(prefix="stream_psi_")
+    work = work_dir("stream_psi_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2026,11 +2024,10 @@ def _streaming_kmeans_result(s: SparkSession) -> DataFrame:
     model (cell, dim, n, centroid) is hash-checked against the same 4
     batches replayed as unrolled SQL stages."""
     import os
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import run_bounded_kmeans
 
-    work = tempfile.mkdtemp(prefix="stream_km_")
+    work = work_dir("stream_km_")
     src = os.path.join(work, "emb_files")
     os.makedirs(src, exist_ok=True)
     # one pass + one partitioned write for all 4 replay files
@@ -2136,7 +2133,6 @@ def _streaming_topk_result(s: SparkSession) -> DataFrame:
     fallback), then the top-5 users per day cut batch-side with id
     tie-breaks (streaming/ops.py windowed_topk_stream +
     topk_finalize)."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
@@ -2145,7 +2141,7 @@ def _streaming_topk_result(s: SparkSession) -> DataFrame:
         windowed_topk_stream,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_topk_")
+    work = work_dir("stream_topk_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2204,13 +2200,12 @@ def _run_scd2_replay(
     s: SparkSession, tombstone_where: str | None = None
 ) -> DataFrame:
     import os
-    import tempfile
 
     from pyspark.sql import Window
 
     from datafusion_sqlgen_spark.streaming.ops import run_bounded_scd2
 
-    work = tempfile.mkdtemp(prefix="stream_scd2_")
+    work = work_dir("stream_scd2_")
     src = os.path.join(work, "events_files")
     os.makedirs(src, exist_ok=True)
     # one ntile pass + one partitioned write for all 4 replay files
@@ -2341,9 +2336,8 @@ def _mm_binary_ingest(s: SparkSession) -> DataFrame:
     (setup), then ingest the directory through the binaryFile source
     and fingerprint each payload executor-side."""
     import os
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="mm_bin_")
+    work = work_dir("mm_bin_")
     rows = (
         s.table("documents")
         .where("doc_id < 40 AND text IS NOT NULL")
@@ -2380,11 +2374,10 @@ def _streaming_hll_result(s: SparkSession) -> DataFrame:
     built by 4 successive max-merges (the idempotent state class, vs
     the rollup sink's additive class), then returned for the driver's
     hash check against the one-pass register build (union law)."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import run_bounded_sketch
 
-    work = tempfile.mkdtemp(prefix="stream_hll_")
+    work = work_dir("stream_hll_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     with _replay_shuffle(s):
@@ -2398,7 +2391,6 @@ def _streaming_sessions_result(s: SparkSession) -> DataFrame:
     sink), so sessions MERGE across triggers — the stateful-session
     path, not a batch re-run.  DECIMAL-exact value sums make the result
     hash-identical to the DuckDB gaps-and-islands twin."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
@@ -2406,7 +2398,7 @@ def _streaming_sessions_result(s: SparkSession) -> DataFrame:
         stream_to_memory,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_sess_")
+    work = work_dir("stream_sess_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2455,7 +2447,6 @@ def _streaming_running_totals_result(s: SparkSession) -> DataFrame:
     snapshot per user is its max-n_events emission in the update-mode
     sink (the counter is strictly increasing).  Makes the custom-
     stateful tier — previously pytest-only — driver-hash-checkable."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
@@ -2463,7 +2454,7 @@ def _streaming_running_totals_result(s: SparkSession) -> DataFrame:
         user_running_totals_stream_exact,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_totals_")
+    work = work_dir("stream_totals_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2502,7 +2493,6 @@ def _streaming_sliding_result(s: SparkSession) -> DataFrame:
     sessions workload's documented pattern), so overlapping windows
     accumulate counts ACROSS triggers.  Pure counts: no float hazard
     anywhere."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
@@ -2510,7 +2500,7 @@ def _streaming_sliding_result(s: SparkSession) -> DataFrame:
         stream_to_memory,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_slide_")
+    work = work_dir("stream_slide_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2547,7 +2537,6 @@ def _streaming_enrich_result(s: SparkSession) -> DataFrame:
     micro-batch broadcast-joins the STATIC customer dimension — the
     facts-stream/dims-broadcast pattern, stateless (append mode, no
     watermark, no state store).  Exact integer/string columns only."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
@@ -2555,7 +2544,7 @@ def _streaming_enrich_result(s: SparkSession) -> DataFrame:
         stream_to_memory,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_enrich_")
+    work = work_dir("stream_enrich_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2589,7 +2578,6 @@ def _streaming_attribution_result(s: SparkSession) -> DataFrame:
     emit matches immediately, so the watermark only governs eviction.
     ``exact=True`` passes values through unrounded (bit-identical
     doubles, no cross-engine rounding hazard)."""
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import (
         click_purchase_attribution_stream,
@@ -2597,7 +2585,7 @@ def _streaming_attribution_result(s: SparkSession) -> DataFrame:
         stream_to_memory,
     )
 
-    work = tempfile.mkdtemp(prefix="stream_attr_")
+    work = work_dir("stream_attr_")
     src = work + "/events_files"
     s.table("events").repartition(4).write.parquet(src)
     stream = read_events_stream(s, src, max_files_per_trigger=1)
@@ -2641,11 +2629,10 @@ def _quartile_sentinel_replay(s: SparkSession, prefix: str) -> str:
     sentinel rows out by user_id sign."""
     import datetime
     import os
-    import tempfile
 
     from pyspark.sql import Window
 
-    work = tempfile.mkdtemp(prefix=prefix)
+    work = work_dir(prefix)
     src = os.path.join(work, "events_files")
     os.makedirs(src, exist_ok=True)
     ev = s.table("events").select(
@@ -2811,11 +2798,10 @@ def _streaming_dedup_result(s: SparkSession) -> DataFrame:
     then the final corpus (doc_id, text_md5) is returned for the
     driver's hash check against the sequential two-stage batch twin."""
     import os
-    import tempfile
 
     from datafusion_sqlgen_spark.streaming.ops import run_bounded_dedup
 
-    work = tempfile.mkdtemp(prefix="stream_dedup_")
+    work = work_dir("stream_dedup_")
     src = os.path.join(work, "docs_files")
     os.makedirs(src, exist_ok=True)
     # one pass + one partitioned write for both replay halves
@@ -2901,10 +2887,13 @@ def _pipeline_semantic_curation(s: SparkSession) -> DataFrame:
     # round-13: materialize the C4-kept slice once (guide 2.4) — it
     # feeds the embedding semi-join AND the post-dedup survivor join,
     # and the filter chain re-ran per reference otherwise
-    kept = docs.join(
-        text.c4_filters(docs).filter("keep").select("doc_id"),
-        "doc_id", "left_semi",
-    ).localCheckpoint(eager=True)
+    kept = materialize(
+        docs.join(
+            text.c4_filters(docs).filter("keep").select("doc_id"),
+            "doc_id", "left_semi",
+        ),
+        scale="corpus",
+    )
     emb_kept = s.table("embeddings").join(
         kept.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
@@ -3038,13 +3027,12 @@ def _source_csv_roundtrip(s: SparkSession) -> DataFrame:
     explicit-schema path, join against the parquet region table and
     count per region — CSV source + cross-source join in one driver
     workload (the reference's CSV surface: tests/select.rs:90-95)."""
-    import tempfile
 
     from pyspark.sql import types as T
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="src_csv_") + "/nation_csv"
+    out = work_dir("src_csv_") + "/nation_csv"
     sio.write_csv(s.table("nation"), out)
     schema = T.StructType([
         T.StructField("n_nationkey", T.LongType()),
@@ -3066,11 +3054,10 @@ def _source_orc_roundtrip(s: SparkSession) -> DataFrame:
     and aggregate — the partition column survives the roundtrip as data.
     DuckDB never sees the ORC; the oracle is the same aggregate over the
     original parquet table, which the roundtrip must preserve."""
-    import tempfile
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="src_orc_") + "/orders_orc"
+    out = work_dir("src_orc_") + "/orders_orc"
     sio.write_orc(
         s.table("orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -3108,11 +3095,10 @@ def _sink_sharded_write(s: SparkSession) -> DataFrame:
     computes the identical md5-derived shard assignment directly on the
     source table — equality proves the write/read roundtrip preserved
     every row in its assigned shard."""
-    import tempfile
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="sink_shards_") + "/docs"
+    out = work_dir("sink_shards_") + "/docs"
     sio.write_training_shards(s.table("documents"), out, n_shards=8)
     back = sio.read_parquet(s, out)
     return (
@@ -3140,11 +3126,10 @@ def _sink_partitioned_roundtrip(s: SparkSession) -> DataFrame:
     the roundtrip as a (string-typed) directory key. Values must be
     bit-identical to aggregating the source directly — which is exactly
     what the oracle computes."""
-    import tempfile
 
     from datafusion_sqlgen_spark.sources import io as sio
 
-    out = tempfile.mkdtemp(prefix="sink_rt_") + "/orders_by_status"
+    out = work_dir("sink_rt_") + "/orders_by_status"
     src = s.table("orders").filter(F.col("o_orderkey") < 5000)
     sio.write_parquet(src, out, partition_by=["o_orderstatus"],
                       max_records_per_file=100_000)
@@ -4796,25 +4781,20 @@ def _sample_order(d: dict) -> dict:
 def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
-    def ir_runner(plan: Plan):
+    def runner(build: Callable[[SparkSession], DataFrame]):
+        # the previous build's materialisations and work dirs go before
+        # this build starts; this build's live until the next one
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release_session()
             register_tables(spark, sf_dir)
-            return plan.to_df(spark)
+            return build(spark)
 
         return run
 
     for name, plan in _ir_workloads().items():
-        out[name] = ir_runner(plan)
-
-    def op_runner(fn_):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            register_tables(spark, sf_dir)
-            return fn_(spark)
-
-        return run
-
+        out[name] = runner(plan.to_df)
     for name, (fn_, _oracle) in _operator_workloads().items():
-        out[name] = op_runner(fn_)
+        out[name] = runner(fn_)
     return _sample_order(out)
 
 

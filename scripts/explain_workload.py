@@ -11,7 +11,8 @@ more, and prints the Spark jobs, stages and tasks of that second run,
 split into build (the query function: IR construction plus any eager
 driver work such as checkpoints or streaming replays) and execute (a
 ``noop`` write of the result) — the counts quoted in docstrings and
-job-count tests.
+job-count tests — followed by the intermediates the build materialised
+(kind, scale, eager), read from its query scope.
 """
 
 import os
@@ -64,26 +65,34 @@ def main() -> None:
 
 
 def print_jobs(spark, name: str, query, sf_dir: str) -> None:
+    from datafusion_sqlgen_spark.materialize import query_scope
     from perfbench.probes import SparkCounters
 
     counters = SparkCounters(spark)
 
-    def run() -> tuple[dict, dict]:
-        start = counters.mark()
-        df = query(spark, sf_dir)
-        build = counters.delta(start, counters.mark())
-        start = counters.mark()
-        df.write.format("noop").mode("overwrite").save()
-        return build, counters.delta(start, counters.mark())
+    def run() -> tuple[dict, dict, list]:
+        with query_scope() as scope:
+            start = counters.mark()
+            df = query(spark, sf_dir)
+            build = counters.delta(start, counters.mark())
+            start = counters.mark()
+            df.write.format("noop").mode("overwrite").save()
+            execute = counters.delta(start, counters.mark())
+            made = [(m.kind, m.scale, m.eager)
+                    for m in scope.materializations]
+        return build, execute, made
 
     run()  # warm-up
-    build, execute = run()
+    build, execute, made = run()
     print(f"workload  {name}")
     print(f"{'phase':8}  {'jobs':>5}  {'stages':>6}  {'skipped':>7}  "
           f"{'tasks':>6}")
     for phase, c in (("build", build), ("execute", execute)):
         print(f"{phase:8}  {c['jobs']:>5}  {c['stages']:>6}  "
               f"{c['stages_skipped']:>7.0f}  {c['tasks']:>6.0f}")
+    print(f"materialisations  {len(made)}")
+    for kind, scale, eager in made:
+        print(f"  {kind:8}  {scale:6}  eager={eager}")
 
 
 if __name__ == "__main__":

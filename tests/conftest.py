@@ -18,6 +18,16 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _release_session_scope():
+    """Release the session scope after every test, so no test sees the
+    pins, checkpoints or work dirs another test left behind."""
+    yield
+    from datafusion_sqlgen_spark.materialize import release_session
+
+    release_session()
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb
@@ -33,6 +43,14 @@ def duck():
                 f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
             )
     yield con
+
+
+def cached_rdds(spark) -> set:
+    """Ids of the RDDs that hold storage blocks right now."""
+    return {
+        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if i.memSize() + i.diskSize() > 0
+    }
 
 
 def normalize_rows(rows, ndigits=4):

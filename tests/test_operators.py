@@ -3,7 +3,7 @@
 import pytest
 
 from datafusion_sqlgen_spark.operators import dedup, joins, sampling, similarity, text, timeseries
-from tests.conftest import normalize_rows
+from tests.conftest import cached_rdds, normalize_rows
 
 
 def _df(spark, name):
@@ -810,57 +810,51 @@ def test_dsir_resample_selects_and_matches_oracle(spark, duck):
                                     temperature=0.05))
 
 
-def test_dsir_resample_weight_cache_bounded(spark):
-    """Round-6 ADVICE: repeated dsir_resample calls must not accumulate
-    pinned weight tables without bound — the registry evicts oldest."""
-    docs = _df(spark, "documents").limit(50)
-    target = docs.filter("lang = 'de'")
-    for _ in range(6):
-        text.dsir_resample(docs, target).count()
-    assert len(text._WEIGHTS_CACHE) <= 4
-    # still-registered frames remain pinned (the cut stays load-bearing)
-    for frame in text._WEIGHTS_CACHE:
-        assert frame.storageLevel.useMemory or frame.storageLevel.useDisk
+def test_kmeans_rebuild_holds_no_blocks_of_previous_build(spark):
+    """A fresh build of the same query recomputes: the build_queries()
+    runner releases the previous build's pins before it builds, so the
+    second sim_kmeans_fit build holds none of the first build's blocks
+    (and cannot read them through CacheManager's canonical-plan match)."""
+    from datafusion_sqlgen_spark.workloads import build_queries
+    from tests.conftest import SF_DIR
+
+    fit = build_queries()["sim_kmeans_fit"]
+    before = cached_rdds(spark)
+    fit(spark, SF_DIR).count()
+    first = cached_rdds(spark) - before
+    assert first  # the Lloyd means stay pinned while the build is live
+    fit(spark, SF_DIR).count()
+    now = cached_rdds(spark)
+    assert not first & now
+    assert now - before  # the second build pinned its own means
 
 
-def test_pin_registry_evicts_same_plan_rebuilds(spark):
-    """Round-14: CacheManager matches persists by CANONICALIZED plan, so
-    without fresh-build eviction a rebuilt identical query silently read
-    the previous build's cached blocks (bench medians timed cache reads,
-    not computation). Pinning a canonically-identical plan must unpersist
-    the old entry and register exactly one live pin."""
-    from datafusion_sqlgen_spark.operators._pincache import PinRegistry
+def test_query_scope_releases_its_rdds(spark, monkeypatch):
+    """A pin, a model-scale cut and a corpus-scale cut made inside a
+    query_scope() hold storage blocks while it is open; after it exits
+    getRDDStorageInfo() shows none of them."""
+    from pyspark.sql import functions as F
 
-    def cached_bytes(rdd_ids=None) -> dict:
-        # DataFrame.storageLevel cannot observe the eviction (it looks
-        # up by canonical plan and finds the NEW entry), so assert on
-        # the materialized blocks themselves — only this test's own:
-        # pins left by earlier tests in the shared session are not ours.
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return {
-            i.id(): i.memSize() + i.diskSize() for i in infos
-            if rdd_ids is None or i.id() in rdd_ids
-        }
+    from datafusion_sqlgen_spark.materialize import materialize, query_scope
 
-    before = set(cached_bytes())
-    reg = PinRegistry(4)
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     base = _df(spark, "documents").limit(20).select("doc_id")
-    first = reg.pin(base.groupBy("doc_id").count())
-    first.count()
-    ours = set(cached_bytes()) - before
-    assert ours and sum(cached_bytes(ours).values()) > 0  # materialized
-    # identical plan, fresh build: evicts the old entry's blocks (the
-    # eviction unpersists with blocking=True, so no polling); the new
-    # pin is unmaterialized until its own action runs -> a rebuilt
-    # query recomputes instead of reading the previous build's cache
-    second = reg.pin(base.groupBy("doc_id").count())
-    assert len(reg) == 1
-    assert sum(cached_bytes(ours).values()) == 0
-    # a DIFFERENT plan coexists (bounded-cap discipline unchanged)
-    other = reg.pin(base.distinct())
-    assert len(reg) == 2
-    reg.release_all()
-    assert len(reg) == 0
+    before = cached_rdds(spark)
+    with query_scope() as scope:
+        materialize(base.distinct(), eager=False).count()
+        materialize(base.groupBy("doc_id").count())
+        materialize(base.select((F.col("doc_id") * 2).alias("d")),
+                    scale="corpus")
+        assert [(m.kind, m.scale, m.eager)
+                for m in scope.materializations] == [
+            ("pin", "model", False),
+            ("local", "model", True),
+            ("local", "corpus", True),
+        ]
+        ours = cached_rdds(spark) - before
+        assert len(ours) == 3
+    assert not ours & cached_rdds(spark)
+    assert scope.materializations == []
 
 
 def test_kmeans_fit_job_count(spark, tmp_path):
@@ -915,27 +909,44 @@ def test_kmeans_fit_many_cells_matches_oracle(spark, duck):
           similarity.kmeans_fit_oracle(k=64, n_iter=2))
 
 
-def test_reliable_cut_mode_selection(spark, tmp_path, monkeypatch):
-    """Round-14 (VERDICT r13 item 5): corpus-scale lineage cuts go
-    through reliable_cut — localCheckpoint when no checkpoint dir is
-    configured (local mode: executor loss == process loss, replication
-    buys nothing), a RELIABLE checkpoint to the configured dir when a
-    cluster provides one. Same rows either way."""
+def test_corpus_cuts_leave_no_checkpoint_files(spark, tmp_path, monkeypatch):
+    """A corpus-scale cut is a local checkpoint when no checkpoint dir is
+    configured (local mode: executor loss == process loss) and a
+    RELIABLE checkpoint to SPARK_GRAFT_CHECKPOINT_DIR when one is; same
+    rows either way. A scope that runs graph_triangle_count and the PCA
+    component leaves that dir with no files once it exits — the files
+    are deleted with the scope, not left to GC-driven cleanCheckpoints."""
     import os
 
-    from datafusion_sqlgen_spark.operators._pincache import reliable_cut
+    from datafusion_sqlgen_spark.materialize import materialize, query_scope
+    from datafusion_sqlgen_spark.workloads import build_queries
+    from tests.conftest import SF_DIR
 
+    def files() -> list:
+        return [f for _root, _dirs, fs in os.walk(ck) for f in fs]
+
+    queries = build_queries()
     base = _df(spark, "documents").limit(10).select("doc_id")
-    # default: no dir configured -> localCheckpoint (no checkpoint files)
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     assert spark.sparkContext.getCheckpointDir() is None
-    local_rows = sorted(r[0] for r in reliable_cut(base).collect())
+    with query_scope() as scope:
+        local_rows = sorted(
+            r[0] for r in materialize(base, scale="corpus").collect())
+        assert [m.kind for m in scope.materializations] == ["local"]
     assert spark.sparkContext.getCheckpointDir() is None
-    # env set -> reliable checkpoint files land under the dir
     ck = tmp_path / "ckpt"
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ck))
     try:
-        rel_rows = sorted(r[0] for r in reliable_cut(base).collect())
+        with query_scope() as scope:
+            rel_rows = sorted(
+                r[0] for r in materialize(base, scale="corpus").collect())
+            assert files(), "reliable mode must write checkpoint partitions"
+            for name in ("graph_triangle_count", "sim_pca_component"):
+                assert queries[name](spark, SF_DIR).count() > 0
+            assert {m.kind for m in scope.materializations
+                    if m.scale == "corpus"} == {"reliable"}
+            assert len(scope.materializations) >= 4
+        assert files() == []
     finally:
         # unset the session-wide checkpoint dir so later tests (shared
         # spark fixture) stay in local mode
@@ -945,10 +956,36 @@ def test_reliable_cut_mode_selection(spark, tmp_path, monkeypatch):
         )
     assert spark.sparkContext.getCheckpointDir() is None
     assert rel_rows == local_rows
-    written = []
-    for root, _dirs, files in os.walk(ck):
-        written.extend(files)
-    assert written, "reliable mode must write checkpoint partitions"
+
+
+def test_work_dirs_live_until_the_next_build(spark):
+    """Workloads that stage files take their dir from the current scope:
+    three such builds in a row through build_queries() leave at most one
+    of their dirs (the live build's) under the temp dir, and releasing
+    the session scope removes that one too."""
+    import glob
+    import os
+    import tempfile
+
+    from datafusion_sqlgen_spark.materialize import release_session
+    from datafusion_sqlgen_spark.workloads import build_queries
+    from tests.conftest import SF_DIR
+
+    def dirs() -> set:
+        return {
+            p for prefix in ("src_jsonl_", "src_csv_", "src_orc_")
+            for p in glob.glob(os.path.join(tempfile.gettempdir(),
+                                            prefix + "*"))
+        }
+
+    before = dirs()
+    queries = build_queries()
+    for name in ("source_jsonl_roundtrip", "source_csv_roundtrip",
+                 "source_orc_roundtrip"):
+        assert queries[name](spark, SF_DIR).count() > 0
+    assert len(dirs() - before) <= 1
+    release_session()
+    assert not dirs() - before
 
 
 def test_leakage_safe_split_groups_never_straddle_folds(spark, duck):
@@ -1425,8 +1462,8 @@ def test_pagerank_leaves_no_session_cache(spark):
     """ADVICE r9 / VERDICT r9 item 5, r11 rework: pagerank must leave
     NO CacheManager entry behind — now trivially true because nothing
     persists at any point (checkpoint blocks live outside the
-    CacheManager and the ContextCleaner reclaims them when the frame's
-    references drop).  The returned frame is lazy: the caller's action
+    CacheManager and are released with the query's scope).  The
+    returned frame is lazy: the caller's action
     is the only full pass (the r10 eager-final-checkpoint version ran
     the whole query twice — the 1.49x bench regression)."""
     from datafusion_sqlgen_spark.operators import graph

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_sqlgen_spark import streaming as st
-from tests.conftest import SF_DIR, normalize_rows
+from tests.conftest import SF_DIR, cached_rdds, normalize_rows
 
 
 @pytest.fixture(scope="module")
@@ -423,6 +423,32 @@ def test_streaming_incremental_dedup_sink(spark, docs_stream_dir, tmp_path):
     q2.processAllAvailable()
     q2.stop()
     assert st.read_dedup_corpus(spark, corpus).count() == n
+
+
+def test_bounded_dedup_batches_leave_no_blocks(spark, tmp_path):
+    """Each dedup ingest batch runs in its own query_scope(): after a
+    4-file bounded replay (3 batches pin incremental_dedup
+    intermediates) none of the storage blocks its batches created
+    remain, so a continuous stream holds at most one batch's."""
+    import duckdb
+
+    from datafusion_sqlgen_spark.streaming.ops import run_bounded_dedup
+
+    src = tmp_path / "docs_files"
+    src.mkdir()
+    con = duckdb.connect()
+    for i in range(4):
+        path = src / f"part{i}.parquet"
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{SF_DIR}/documents.parquet')"
+            f" WHERE doc_id % 4 = {i}) TO '{path}' (FORMAT PARQUET)"
+        )
+        os.utime(path, (1_000_000_000 + i * 3600,) * 2)
+
+    before = cached_rdds(spark)
+    corpus = run_bounded_dedup(spark, str(src), str(tmp_path / "work"))
+    assert corpus.count() > 0
+    assert cached_rdds(spark) - before == set()
 
 
 def test_dedup_ingest_batch_replay_and_crash_recovery(spark, tmp_path):
