@@ -454,6 +454,33 @@ def _calibrate_idle_floor() -> float:
     return round(statistics.median(ratios), 2) if ratios else 1.0
 
 
+def _session_cpus(spark) -> int:
+    """Worker threads of the running session: the N of a ``local[N]``
+    master (``local[*]``: the cores this process may run on), else the
+    session's default parallelism."""
+    import re
+
+    sc = spark.sparkContext
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", sc.master)
+    if m is None:
+        return sc.defaultParallelism
+    if m.group(1) == "*":
+        return len(os.sched_getaffinity(0))
+    return int(m.group(1) or 1)
+
+
+def _artifact_names(cpus: int, subset: bool, contended: bool) -> list[str]:
+    """Full-artifact file names, keyed by the run's thread count so a run
+    at one core count never overwrites another's record. Only a clean,
+    full-headline run whose threads match the cores this process may run
+    on is also written to the canonical ``bench_full.json``."""
+    name = (f"bench_full{'_subset' if subset else ''}.c{cpus}"
+            f"{'.contended' if contended else ''}.json")
+    if subset or contended or cpus != len(os.sched_getaffinity(0)):
+        return [name]
+    return [name, "bench_full.json"]
+
+
 def main() -> None:
     # Idle-floor calibration runs first: before the Spark JVM exists,
     # the only loads the probes can see are co-tenants and the
@@ -582,18 +609,8 @@ def main() -> None:
     contended = ratio is not None and ratio > contention_threshold
     if contended:
         payload["contended"] = True
-    # Artifact naming (VERDICT r13 items 1/8): full artifacts are keyed
-    # by core count so a low-core scaling run can never overwrite the
-    # full-core record (the driver's 8-core r13 run destroyed the only
-    # 32-core r13 artifact). A clean full-core, full-headline run is
-    # ADDITIONALLY copied to the canonical bench_full.json name.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)))
-    subset_part = "_subset" if only else ""
-    contended_part = ".contended" if contended else ""
-    full_name = f"bench_full{subset_part}.c{cpus}{contended_part}.json"
-    names = [full_name]
-    if not only and cpus >= (os.cpu_count() or cpus):
-        names.append(f"bench_full{contended_part}.json")
+    names = _artifact_names(_session_cpus(spark), bool(only), contended)
+    full_name = names[0]
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     for name in names:
         with open(os.path.join(repo_dir, name), "w") as f:

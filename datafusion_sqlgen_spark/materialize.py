@@ -17,11 +17,12 @@ size of the table, so a plan's shape depends only on the call:
   reliable write would only pay a second compute). Same plan node as
   the local cut.
 
-Every materialisation and every :func:`work_dir` belongs to the
-innermost open :func:`query_scope` of the calling thread, or to the
-session scope when none is open. Releasing a scope unpersists its pins,
-drops its local checkpoint blocks, deletes its reliable checkpoint files
-and removes its work dirs. A ``query_scope()`` releases on exit; the
+Every materialisation, every :func:`work_dir` and every
+:func:`scoped_view` belongs to the innermost open :func:`query_scope` of
+the calling thread, or to the session scope when none is open. Releasing
+a scope unpersists its pins, drops its local checkpoint blocks, deletes
+its reliable checkpoint files, removes its work dirs and drops its temp
+views. A ``query_scope()`` releases on exit; the
 session scope is released by :func:`release_session`, which the
 ``build_queries()`` runners call before each build, so a build's
 intermediates live until the next build starts.
@@ -37,7 +38,7 @@ import threading
 from dataclasses import dataclass
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 
@@ -66,17 +67,22 @@ class Materialization:
 
 
 class Scope:
-    """The materialisations and work dirs of one query, oldest first."""
+    """The materialisations, work dirs and temp views of one query,
+    oldest first."""
 
     def __init__(self) -> None:
         self.materializations: list[Materialization] = []
         self.work_dirs: list[str] = []
+        self.views: list[tuple[SparkSession, str]] = []
 
     def release(self) -> None:
         while self.materializations:
             self.materializations.pop().release()
         while self.work_dirs:
             shutil.rmtree(self.work_dirs.pop(), ignore_errors=True)
+        while self.views:
+            spark, name = self.views.pop()
+            spark.catalog.dropTempView(name)
 
 
 _SESSION = Scope()
@@ -135,6 +141,11 @@ def work_dir(prefix: str) -> str:
     path = tempfile.mkdtemp(prefix=prefix)
     _current_scope().work_dirs.append(path)
     return path
+
+
+def scoped_view(spark: SparkSession, name: str) -> None:
+    """Drop the temp view ``name`` when the current scope is released."""
+    _current_scope().views.append((spark, name))
 
 
 def _checkpoint_dir_set(df: DataFrame) -> bool:

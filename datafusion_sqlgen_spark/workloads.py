@@ -1840,88 +1840,42 @@ FROM orders GROUP BY o_orderstatus
 """
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _replay_shuffle(s: SparkSession, n: int = 8):
-    """Scope the bounded streaming replays to ``n`` shuffle/state
-    partitions.  Stateful streaming fixes the state-store count at the
-    session's shuffle-partition setting per stateful operator per
-    micro-batch — at the default 32 a k-file replay of driver-table
-    data spends its whole wall-clock on hundreds of near-empty state
-    tasks and checkpoint files (measured: the stream-stream attribution
-    replay drops 23s -> 5s at sf0.1 going 32 -> 4).  At production
-    scale the same knob is sized UP to the key cardinality instead —
-    state partitioning should always track state size, not the batch
-    default.  Restores the previous setting afterwards."""
-    old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        s.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _move_replay_part(tmp: str, part_dir: str, dst: str, mtime: int) -> None:
-    """Move the single parquet file of one partitionBy bucket into its
-    replay slot and stamp its mtime. Fails with the bucket name when
-    the bucket produced no directory (ADVICE r13: an empty bucket —
-    e.g. fewer rows than ntile buckets — would otherwise surface as a
-    bare IndexError on ``glob(...)[0]``; the old per-bucket
-    ``coalesce(1)`` writes emitted an empty file instead, but a replay
-    with a silently-empty trigger would diverge from its unrolled-SQL
-    oracle anyway, so fail loudly)."""
-    import glob
-    import os
-    import shutil
-
-    files = glob.glob(os.path.join(tmp, part_dir, "part-*.parquet"))
-    if not files:
-        raise RuntimeError(
-            f"replay bucket {part_dir!r} under {tmp} is empty — the "
-            f"input has too few rows to fill every replay trigger"
-        )
-    shutil.move(files[0], dst)
-    os.utime(dst, (mtime, mtime))
 
 
 def _streaming_rollup_result(s: SparkSession) -> DataFrame:
     """Bounded-stream replay of the materialized-rollup sink: events are
-    split into 4 parquet files, streamed one file per trigger through
-    ``streaming_rollup_sink`` (so the standing state table is built by
-    4 successive foreachBatch merges, exercising the additive state
-    algebra AND the batch-id idempotency guard), then the finalized
-    table is returned for the driver's hash check against the batch
-    rollup of all raw rows. First workload whose result's compute path
-    runs through a streaming query (VERDICT r4 item 8)."""
+    staged as 4 files and replayed one file per trigger through
+    ``rollup_merge_batch``, so the standing state table is built by 4
+    successive merges (the additive state algebra and the batch-id
+    idempotency guard); the finalized table is hash-checked against the
+    batch rollup of all raw rows."""
+    from datafusion_sqlgen_spark.streaming.ops import (
+        run_bounded_rollup,
+        stage_replay,
+    )
 
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_rollup
-
-    work = work_dir("stream_rollup_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    with _replay_shuffle(s):
-        return run_bounded_rollup(s, src, work, max_files_per_trigger=1)
+    work, src = stage_replay(s.table("events"), "stream_rollup_")
+    return run_bounded_rollup(s, src, work)
 
 
 def _streaming_drift_psi_result(s: SparkSession) -> DataFrame:
-    """STREAMING drift monitoring (round 12): the purchase value stream
-    is bucketed against FIXED reference edges (min/max of the batch
-    click cohort — the reference snapshot) and counted per (event-time
-    day, bucket) through a real streaming query replayed over 4 file
-    triggers into a complete-mode memory sink; the PSI terms are then
-    finalized batch-side against the click distribution
-    (streaming/ops.py drift_psi_stream + drift_psi_finalize — the
-    streaming twin of operators.profiling.drift_psi). The edge lookup
-    is a 1-row aggregate collect at plan-build time (setup, not
-    per-row compute)."""
+    """STREAMING drift monitoring: the purchase value stream is bucketed
+    against FIXED reference edges (min/max of the batch click cohort —
+    the reference snapshot) and counted per (event-time day, bucket)
+    through a streaming query replayed over 4 file triggers into a
+    complete-mode memory table; the PSI terms are then finalized
+    batch-side against the click distribution (streaming/ops.py
+    drift_psi_stream + drift_psi_finalize — the streaming twin of
+    operators.profiling.drift_psi). The edge lookup is a 1-row
+    aggregate collect at plan-build time (setup, not per-row
+    compute)."""
 
     from datafusion_sqlgen_spark.streaming.ops import (
         drift_psi_finalize,
         drift_psi_stream,
         read_events_stream,
-        stream_to_memory,
+        replay,
+        stage_replay,
     )
 
     n = 10
@@ -1941,17 +1895,12 @@ def _streaming_drift_psi_result(s: SparkSession) -> DataFrame:
     ref = ref_src.groupBy(bucket.alias("bucket")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_ref"))
 
-    work = work_dir("stream_psi_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s):
-        stream_to_memory(
-            drift_psi_stream(stream, lo, hi, n),
-            "streaming_drift_psi_tbl",
-        )
-        return drift_psi_finalize(
-            s.table("streaming_drift_psi_tbl"), ref, n)
+    work, src = stage_replay(s.table("events"), "stream_psi_")
+    cur = replay(
+        drift_psi_stream(read_events_stream(s, src), lo, hi, n), work,
+        "streaming_drift_psi_tbl", "complete",
+    )
+    return drift_psi_finalize(cur, ref, n)
 
 
 # Batch SQL twin of the streamed per-day PSI: same fixed click-cohort
@@ -2012,36 +1961,25 @@ FROM j
 
 
 def _streaming_kmeans_result(s: SparkSession) -> DataFrame:
-    """STREAMING k-means model maintenance (round 12): embeddings are
-    hash-split into 4 files (vec_id % 4 — deterministic batch
-    membership, unlike repartition) with strictly increasing mtimes,
-    streamed one file per trigger through ``streaming_kmeans_sink``:
-    each trigger assigns its vectors to the CURRENT centroids and
-    accumulates order-free fixed-point per-(cell, dim) sums into a new
-    state generation (the MODEL state-algebra class — a batch's
-    contribution depends on the state it observed, so batch order is
-    load-bearing and the replay guard is mandatory). The finalized
-    model (cell, dim, n, centroid) is hash-checked against the same 4
-    batches replayed as unrolled SQL stages."""
-    import os
+    """STREAMING k-means model maintenance: embeddings are hash-split
+    into 4 files (vec_id % 4 — deterministic batch membership, unlike
+    repartition) with strictly increasing mtimes, replayed one file per
+    trigger through ``kmeans_update_batch``: each trigger assigns its
+    vectors to the CURRENT centroids and accumulates order-free
+    fixed-point per-(cell, dim) sums into a new state generation (the
+    MODEL state-algebra class — a batch's contribution depends on the
+    state it observed, so batch order is load-bearing and the replay
+    guard is mandatory). The finalized model (cell, dim, n, centroid)
+    is hash-checked against the same 4 batches replayed as unrolled SQL
+    stages."""
+    from datafusion_sqlgen_spark.streaming.ops import (
+        run_bounded_kmeans,
+        stage_replay,
+    )
 
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_kmeans
-
-    work = work_dir("stream_km_")
-    src = os.path.join(work, "emb_files")
-    os.makedirs(src, exist_ok=True)
-    # one pass + one partitioned write for all 4 replay files
-    # (round-13 optimization, guide 1.2 — was 4 filter+write jobs)
-    emb = s.table("embeddings").withColumn(
-        "__b", F.col("vec_id") % 4)
-    tmp = os.path.join(work, "tmpb")
-    emb.repartition("__b").write.partitionBy("__b").parquet(tmp)
-    for i in range(4):
-        _move_replay_part(tmp, f"__b={i}",
-                          os.path.join(src, f"part{i}.parquet"),
-                          1_000_000_000 + i * 3600)
-    with _replay_shuffle(s):
-        return run_bounded_kmeans(s, src, work, k=8)
+    emb = s.table("embeddings").withColumn("__b", F.col("vec_id") % 4)
+    work, src = stage_replay(emb, "stream_km_", bucket="__b")
+    return run_bounded_kmeans(s, src, work, k=8)
 
 
 def _streaming_kmeans_oracle(k: int = 8, n_batches: int = 4) -> str:
@@ -2126,29 +2064,26 @@ FROM st{n_batches}
 
 
 def _streaming_topk_result(s: SparkSession) -> DataFrame:
-    """STREAMING windowed top-k (round 12): per-day per-user event
-    counts aggregated through a real streaming query replayed over 4
-    file-triggers (state O(open windows x distinct users) — the honest
-    exact-top-k cost; the CMS sketch sink is the unbounded-key
-    fallback), then the top-5 users per day cut batch-side with id
-    tie-breaks (streaming/ops.py windowed_topk_stream +
-    topk_finalize)."""
+    """STREAMING windowed top-k: per-day per-user event counts
+    aggregated through a streaming query replayed over 4 file-triggers
+    (state O(open windows x distinct users) — the honest exact-top-k
+    cost; the CMS sketch sink is the unbounded-key fallback), then the
+    top-5 users per day cut batch-side with id tie-breaks
+    (streaming/ops.py windowed_topk_stream + topk_finalize)."""
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
-        stream_to_memory,
+        replay,
+        stage_replay,
         topk_finalize,
         windowed_topk_stream,
     )
 
-    work = work_dir("stream_topk_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s):
-        stream_to_memory(
-            windowed_topk_stream(stream), "streaming_topk_tbl")
-        return topk_finalize(s.table("streaming_topk_tbl"))
+    work, src = stage_replay(s.table("events"), "stream_topk_")
+    return topk_finalize(replay(
+        windowed_topk_stream(read_events_stream(s, src)), work,
+        "streaming_topk_tbl", "complete",
+    ))
 
 
 # Batch SQL twin of the streamed windowed top-k: same day truncation
@@ -2170,60 +2105,46 @@ SELECT day, user_id, n, rnk FROM (
 
 
 def _streaming_scd2_result(s: SparkSession) -> DataFrame:
-    """STREAMING CDC-apply / SCD2 sink (round 13): events are split
-    into 4 TIME-ORDERED files (ntile(4) over event_id — deterministic
-    batch membership AND chronological batch order, so the versioned
-    history reads like a real CDC feed) with strictly increasing
-    mtimes, streamed one file per trigger through
-    ``streaming_scd2_sink``: each trigger CDC-compacts its batch (last
-    row per user by ts) and applies it as a type-2 merge to the
-    standing history — changed users close their open version at their
-    event time and re-open from it (the HISTORY state-algebra class:
-    a batch's merge depends on the open slice it observed, so the
-    batch-id replay guard is mandatory). The final history table is
-    hash-checked against the same 4 merges unrolled as MATERIALIZED
-    CTE stages."""
+    """STREAMING CDC-apply / SCD2 sink: events are split into 4
+    TIME-ORDERED files (ntile(4) over event_id — deterministic batch
+    membership AND chronological batch order, so the versioned history
+    reads like a real CDC feed) with strictly increasing mtimes,
+    replayed one file per trigger through ``scd2_apply_batch``: each
+    trigger CDC-compacts its batch (last row per user by ts) and applies
+    it as a type-2 merge to the standing history — changed users close
+    their open version at their event time and re-open from it (the
+    HISTORY state-algebra class: a batch's merge depends on the open
+    slice it observed, so the batch-id replay guard is mandatory). The
+    final history table is hash-checked against the same 4 merges
+    unrolled as MATERIALIZED CTE stages."""
     return _run_scd2_replay(s)
 
 
 def _streaming_scd2_tombstones_result(s: SparkSession) -> DataFrame:
-    """The CDC-DELETE variant (round 13): same 4 time-ordered file
-    triggers, but a compacted row matching ``event_type = 'error'`` is
-    a TOMBSTONE — it closes the key's open version at its event time
-    without re-opening (the key may re-appear later as a fresh
-    version). Hash-checked against the tombstone-armed unrolled batch
-    twin."""
+    """The CDC-DELETE variant: same 4 time-ordered file triggers, but a
+    compacted row matching ``event_type = 'error'`` is a TOMBSTONE — it
+    closes the key's open version at its event time without re-opening
+    (the key may re-appear later as a fresh version). Hash-checked
+    against the tombstone-armed unrolled batch twin."""
     return _run_scd2_replay(s, tombstone_where="event_type = 'error'")
 
 
 def _run_scd2_replay(
     s: SparkSession, tombstone_where: str | None = None
 ) -> DataFrame:
-    import os
-
     from pyspark.sql import Window
 
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_scd2
-
-    work = work_dir("stream_scd2_")
-    src = os.path.join(work, "events_files")
-    os.makedirs(src, exist_ok=True)
-    # one ntile pass + one partitioned write for all 4 replay files
-    # (round-13 optimization, guide 1.2 — the per-file filter loop
-    # re-sorted events 4 times); partitionBy drops __b from the data
-    # files and the stream source reads with an explicit schema
-    ev = s.table("events").withColumn(
-        "__b", F.ntile(4).over(Window.orderBy(F.col("event_id").asc()))
+    from datafusion_sqlgen_spark.streaming.ops import (
+        run_bounded_scd2,
+        stage_replay,
     )
-    tmp = os.path.join(work, "tmpb")
-    ev.repartition("__b").write.partitionBy("__b").parquet(tmp)
-    for i in range(1, 5):
-        _move_replay_part(tmp, f"__b={i}",
-                          os.path.join(src, f"part{i}.parquet"),
-                          1_000_000_000 + i * 3600)
-    with _replay_shuffle(s):
-        return run_bounded_scd2(
-            s, src, work, tombstone_where=tombstone_where)
+
+    ev = s.table("events").withColumn(
+        "__b",
+        F.ntile(4).over(Window.orderBy(F.col("event_id").asc())) - 1,
+    )
+    work, src = stage_replay(ev, "stream_scd2_", bucket="__b")
+    return run_bounded_scd2(s, src, work, tombstone_where=tombstone_where)
 
 
 def _streaming_scd2_oracle(
@@ -2368,46 +2289,43 @@ def _mm_phash_pairs(s: SparkSession) -> DataFrame:
 
 
 def _streaming_hll_result(s: SparkSession) -> DataFrame:
-    """Bounded-stream replay of the streaming-sketch sink: events split
-    into 4 parquet files, streamed one file per trigger through
-    ``streaming_sketch_sink`` so the standing HLL register table is
-    built by 4 successive max-merges (the idempotent state class, vs
-    the rollup sink's additive class), then returned for the driver's
-    hash check against the one-pass register build (union law)."""
+    """Bounded-stream replay of the streaming-sketch sink: events staged
+    as 4 files and replayed one file per trigger through
+    ``sketch_merge_batch``, so the standing HLL register table is built
+    by 4 successive max-merges (the idempotent state class, vs the
+    rollup sink's additive class), then hash-checked against the
+    one-pass register build (union law)."""
 
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_sketch
+    from datafusion_sqlgen_spark.streaming.ops import (
+        run_bounded_sketch,
+        stage_replay,
+    )
 
-    work = work_dir("stream_hll_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    with _replay_shuffle(s):
-        return run_bounded_sketch(s, src, work, max_files_per_trigger=1)
+    work, src = stage_replay(s.table("events"), "stream_hll_")
+    return run_bounded_sketch(s, src, work)
 
 
 def _streaming_sessions_result(s: SparkSession) -> DataFrame:
-    """Session-window aggregation through a real streaming query
-    (round 7): events split into 4 parquet files and streamed one file
-    per trigger into ``session_window_stream`` (complete-mode memory
-    sink), so sessions MERGE across triggers — the stateful-session
-    path, not a batch re-run.  DECIMAL-exact value sums make the result
-    hash-identical to the DuckDB gaps-and-islands twin."""
+    """Session-window aggregation through a streaming query: events
+    staged as 4 files and replayed one file per trigger into
+    ``session_window_stream`` (complete-mode memory table), so sessions
+    MERGE across triggers — the stateful-session path, not a batch
+    re-run.  DECIMAL-exact value sums make the result hash-identical to
+    the DuckDB gaps-and-islands twin."""
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
+        replay,
         session_window_stream,
-        stream_to_memory,
+        stage_replay,
     )
 
-    work = work_dir("stream_sess_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s):
-        stream_to_memory(
-            session_window_stream(stream, watermark=None, exact=True),
-            "streaming_sessions_tbl",
-        )
-    return s.table("streaming_sessions_tbl")
+    work, src = stage_replay(s.table("events"), "stream_sess_")
+    return replay(
+        session_window_stream(
+            read_events_stream(s, src), watermark=None, exact=True),
+        work, "streaming_sessions_tbl", "complete",
+    )
 
 
 # Gaps-and-islands batch twin of the streaming session windows: a new
@@ -2441,35 +2359,28 @@ GROUP BY user_id, sid
 
 
 def _streaming_running_totals_result(s: SparkSession) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState) through a real
-    streaming query (round 7): per-user running totals accumulate in
-    1e4 fixed-point BIGINT state across 4 file-triggers; the final
-    snapshot per user is its max-n_events emission in the update-mode
-    sink (the counter is strictly increasing).  Makes the custom-
-    stateful tier — previously pytest-only — driver-hash-checkable."""
+    """Custom stateful operator (applyInPandasWithState) through a
+    streaming query: per-user running totals accumulate in 1e4
+    fixed-point BIGINT state across 4 file-triggers; the final snapshot
+    per user is its max-n_events emission in the update-mode memory
+    table (the counter is strictly increasing)."""
+    from pyspark.sql import Window
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
-        stream_to_memory,
+        replay,
+        stage_replay,
         user_running_totals_stream_exact,
     )
 
-    work = work_dir("stream_totals_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s):
-        stream_to_memory(
-            user_running_totals_stream_exact(stream),
-            "streaming_totals_tbl",
-            output_mode="update",
-        )
-    from pyspark.sql import Window
-
+    work, src = stage_replay(s.table("events"), "stream_totals_")
+    totals = replay(
+        user_running_totals_stream_exact(read_events_stream(s, src)),
+        work, "streaming_totals_tbl", "update",
+    )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        s.table("streaming_totals_tbl")
-        .withColumn("__rn", F.row_number().over(w))
+        totals.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .select("user_id", "n_events", "total_fx")
     )
@@ -2486,30 +2397,25 @@ GROUP BY user_id
 
 
 def _streaming_sliding_result(s: SparkSession) -> DataFrame:
-    """Sliding event-time windows through a real streaming query
-    (round 7): events split into 4 parquet files streamed one file per
-    trigger into ``sliding_window_stream`` without a watermark
-    (complete-mode memory sink over an id-split bounded replay — the
-    sessions workload's documented pattern), so overlapping windows
-    accumulate counts ACROSS triggers.  Pure counts: no float hazard
-    anywhere."""
+    """Sliding event-time windows through a streaming query: events
+    staged as 4 files and replayed one file per trigger into
+    ``sliding_window_stream`` without a watermark (complete-mode memory
+    table over an id-split replay — the sessions workload's documented
+    pattern), so overlapping windows accumulate counts ACROSS triggers.
+    Pure counts: no float hazard anywhere."""
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
+        replay,
         sliding_window_stream,
-        stream_to_memory,
+        stage_replay,
     )
 
-    work = work_dir("stream_slide_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s):
-        stream_to_memory(
-            sliding_window_stream(stream, watermark=None),
-            "streaming_sliding_tbl",
-        )
-    return s.table("streaming_sliding_tbl")
+    work, src = stage_replay(s.table("events"), "stream_slide_")
+    return replay(
+        sliding_window_stream(read_events_stream(s, src), watermark=None),
+        work, "streaming_sliding_tbl", "complete",
+    )
 
 
 # Each event lands in exactly window/slide = 2 overlapping windows:
@@ -2532,32 +2438,31 @@ GROUP BY ws
 
 
 def _streaming_enrich_result(s: SparkSession) -> DataFrame:
-    """Stream-static broadcast enrichment through a real streaming
-    query (round 7): events stream one file per trigger and every
-    micro-batch broadcast-joins the STATIC customer dimension — the
+    """Stream-static broadcast enrichment through a streaming query:
+    events replay one file per trigger and every micro-batch
+    broadcast-joins the STATIC customer dimension — the
     facts-stream/dims-broadcast pattern, stateless (append mode, no
     watermark, no state store).  Exact integer/string columns only."""
 
     from datafusion_sqlgen_spark.streaming.ops import (
         read_events_stream,
+        replay,
+        stage_replay,
         stream_static_enrich,
-        stream_to_memory,
     )
 
-    work = work_dir("stream_enrich_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
+    work, src = stage_replay(s.table("events"), "stream_enrich_")
     dim = s.table("customer").select(
         F.col("c_custkey").alias("user_id"),
         "c_mktsegment",
         "c_nationkey",
     )
-    enriched = stream_static_enrich(stream, dim, on="user_id").select(
+    enriched = stream_static_enrich(
+        read_events_stream(s, src), dim, on="user_id"
+    ).select(
         "event_id", "user_id", "event_type", "c_mktsegment", "c_nationkey"
     )
-    stream_to_memory(enriched, "streaming_enrich_tbl", output_mode="append")
-    return s.table("streaming_enrich_tbl")
+    return replay(enriched, work, "streaming_enrich_tbl")
 
 
 _STREAMING_ENRICH_ORACLE = """
@@ -2568,36 +2473,30 @@ LEFT JOIN customer c ON c.c_custkey = e.user_id
 
 
 def _streaming_attribution_result(s: SparkSession) -> DataFrame:
-    """Stream-stream interval join through a real streaming query
-    (round 7): events split into 4 parquet files streamed one per
-    trigger; purchases attribute to prior clicks within 30 minutes
-    across trigger boundaries (the stateful stream-join path).  The
-    replay watermark is deliberately wide — the 4 files are
-    event-id-split, not time-ordered, and a production-width watermark
-    would drop whole earlier-timestamped batches as late; inner joins
-    emit matches immediately, so the watermark only governs eviction.
-    ``exact=True`` passes values through unrounded (bit-identical
-    doubles, no cross-engine rounding hazard)."""
+    """Stream-stream interval join through a streaming query: events
+    staged as 4 files replayed one per trigger; purchases attribute to
+    prior clicks within 30 minutes across trigger boundaries (the
+    stateful stream-join path).  The replay watermark is deliberately
+    wide — the 4 files are not time-ordered, and a production-width
+    watermark would drop whole earlier-timestamped batches as late;
+    inner joins emit matches immediately, so the watermark only governs
+    eviction. ``exact=True`` passes values through unrounded
+    (bit-identical doubles, no cross-engine rounding hazard)."""
 
     from datafusion_sqlgen_spark.streaming.ops import (
         click_purchase_attribution_stream,
         read_events_stream,
-        stream_to_memory,
+        replay,
+        stage_replay,
     )
 
-    work = work_dir("stream_attr_")
-    src = work + "/events_files"
-    s.table("events").repartition(4).write.parquet(src)
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s, 4):
-        stream_to_memory(
-            click_purchase_attribution_stream(
-                stream, watermark="3650 days", exact=True
-            ),
-            "streaming_attribution_tbl",
-            output_mode="append",
-        )
-    return s.table("streaming_attribution_tbl")
+    work, src = stage_replay(s.table("events"), "stream_attr_")
+    return replay(
+        click_purchase_attribution_stream(
+            read_events_stream(s, src), watermark="3650 days", exact=True
+        ),
+        work, "streaming_attribution_tbl", shuffle_partitions=4,
+    )
 
 
 _STREAMING_ATTRIBUTION_ORACLE = """
@@ -2615,70 +2514,43 @@ JOIN events p
 """
 
 
-def _quartile_sentinel_replay(s: SparkSession, prefix: str) -> str:
-    """Build the watermark-eviction replay source shared by the LEFT
-    OUTER attribution and point-in-time enrichment workloads (review
-    r11 #5 — the two copies must not drift): the events table split
-    into four event-TIME quartile files with strictly increasing
-    mtimes (the file source triggers them in order), plus two trailing
-    sentinel click+purchase pairs for reserved ``user_id -1`` (10 and
-    20 days past max ts) that advance BOTH sides' watermark nodes past
-    all real data — watermarks computed in batch N evict and emit in
-    batch N+1, so the last sentinel's batch flushes every real
-    unmatched row.  Returns the source directory; callers filter
-    sentinel rows out by user_id sign."""
+def _sentinel_quartiles(s: SparkSession) -> DataFrame:
+    """The watermark-eviction replay input shared by the LEFT OUTER
+    attribution and point-in-time enrichment workloads: the events
+    table as four event-TIME quartiles (``__b`` 0-3, staged as files in
+    that trigger order), plus two trailing sentinel click+purchase
+    pairs for reserved ``user_id -1`` (``__b`` 4 and 5; 10 and 20 days
+    past max ts) that advance BOTH sides' watermark nodes past all real
+    data — watermarks computed in batch N evict and emit in batch N+1,
+    so the last sentinel's batch flushes every real unmatched row.
+    Callers filter sentinel rows out by user_id sign."""
     import datetime
-    import os
 
     from pyspark.sql import Window
 
-    work = work_dir(prefix)
-    src = os.path.join(work, "events_files")
-    os.makedirs(src, exist_ok=True)
     ev = s.table("events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    # Round-13 optimization (guide 1.2 "don't compute things twice" /
-    # 2.4): the previous builder wrote each quartile with its own
-    # `q.filter(__q == i).coalesce(1)` job — FOUR full re-sorts of the
-    # events table for one ntile window — plus two more tiny jobs for
-    # the sentinel files. Now the window runs ONCE and a single
-    # partitioned write emits all six replay files (sentinels ride
-    # along as __q partitions 5 and 6); the mover renames them into
-    # mtime order exactly as before. File contents are byte-equal in
-    # meaning: partitionBy drops __q from the data files and the
-    # stream source reads with an explicit schema.
     max_ts = ev.agg(F.max("ts")).collect()[0][0]  # 1-row fixture agg
     q = ev.withColumn(
-        "__q", F.ntile(4).over(Window.orderBy("ts", "event_id"))
+        "__b", F.ntile(4).over(Window.orderBy("ts", "event_id")) - 1
     )
     sent_rows = []
     for j in (1, 2):  # sentinel click+purchase pair per file
         sent_ts = max_ts + datetime.timedelta(days=10 * j)
         sent_rows += [
-            (10**9 + 2 * j, sent_ts, -1, "click", 0.0, "", 4 + j),
-            (10**9 + 2 * j + 1, sent_ts, -1, "purchase", 0.0, "", 4 + j),
+            (10**9 + 2 * j, sent_ts, -1, "click", 0.0, "", 3 + j),
+            (10**9 + 2 * j + 1, sent_ts, -1, "purchase", 0.0, "", 3 + j),
         ]
-    tmp = os.path.join(work, "tmpq")
-    (
-        q.unionByName(s.createDataFrame(sent_rows, q.schema))
-        .repartition("__q")
-        .write.partitionBy("__q")
-        .parquet(tmp)
-    )
-    for i in range(6):
-        _move_replay_part(tmp, f"__q={i + 1}",
-                          os.path.join(src, f"part{i}.parquet"),
-                          1_000_000_000 + i * 3600)
-    return src
+    return q.unionByName(s.createDataFrame(sent_rows, q.schema))
 
 
 def _streaming_attribution_left_result(s: SparkSession) -> DataFrame:
-    """LEFT OUTER stream-stream interval join through a real streaming
-    query (round 10b): unattributed clicks — the funnel-drop side —
-    surface with NULL purchase/value.  Unlike the inner replay, outer
-    rows only emit when the GLOBAL watermark passes the join window,
-    which forces the production replay discipline end-to-end:
+    """LEFT OUTER stream-stream interval join through a streaming
+    query: unattributed clicks — the funnel-drop side — surface with
+    NULL purchase/value.  Unlike the inner replay, outer rows only emit
+    when the GLOBAL watermark passes the join window, which forces the
+    production replay discipline end-to-end:
 
     * the 4 source files are event-TIME quartiles with increasing
       mtimes (the file source triggers them in order), so a REAL
@@ -2697,56 +2569,50 @@ def _streaming_attribution_left_result(s: SparkSession) -> DataFrame:
     from datafusion_sqlgen_spark.streaming.ops import (
         click_purchase_attribution_stream,
         read_events_stream,
-        stream_to_memory,
+        replay,
+        stage_replay,
     )
 
-    src = _quartile_sentinel_replay(s, "stream_attr_left_")
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s, 4):
-        stream_to_memory(
-            click_purchase_attribution_stream(
-                stream, watermark="1 hour", exact=True, how="leftOuter"
-            ),
-            "streaming_attribution_left_tbl",
-            output_mode="append",
-        )
-    return s.table("streaming_attribution_left_tbl").filter(
-        F.col("user_id") >= 0
-    )
+    work, src = stage_replay(
+        _sentinel_quartiles(s), "stream_attr_left_", files=6, bucket="__b")
+    return replay(
+        click_purchase_attribution_stream(
+            read_events_stream(s, src), watermark="1 hour", exact=True,
+            how="leftOuter",
+        ),
+        work, "streaming_attribution_left_tbl", shuffle_partitions=4,
+    ).filter(F.col("user_id") >= 0)
 
 
 def _streaming_pit_enrich_result(s: SparkSession) -> DataFrame:
-    """Streaming point-in-time (ASOF) enrichment (round 11): TWO
-    chained stateful operators — a LEFT OUTER interval join feeding a
-    per-click max_by aggregation — through a real streaming query, so
-    each click surfaces with the single most recent same-user purchase
-    in its 30-minute lookback window (NULL-enriched otherwise).  The
-    replay discipline is the shared `_quartile_sentinel_replay`
-    (event-time-quartile files in mtime order, two far-future sentinel
-    pairs so both watermark nodes advance past all real data and the
-    aggregate groups close); sentinel rows filter out by user_id sign.
-    Values pass through unrounded; the hand oracle is a batch window
-    twin (rank over the lookback join), a formulation that shares no
-    streaming machinery."""
+    """Streaming point-in-time (ASOF) enrichment: TWO chained stateful
+    operators — a LEFT OUTER interval join feeding a per-click max_by
+    aggregation — through a streaming query, so each click surfaces
+    with the single most recent same-user purchase in its 30-minute
+    lookback window (NULL-enriched otherwise).  The replay input is the
+    shared `_sentinel_quartiles` (event-time-quartile files in mtime
+    order, two far-future sentinel pairs so both watermark nodes
+    advance past all real data and the aggregate groups close);
+    sentinel rows filter out by user_id sign.  Values pass through
+    unrounded; the hand oracle is a batch window twin (rank over the
+    lookback join), a formulation that shares no streaming
+    machinery."""
     from datafusion_sqlgen_spark.streaming.ops import (
         point_in_time_enrich_stream,
         read_events_stream,
-        stream_to_memory,
+        replay,
+        stage_replay,
     )
 
-    src = _quartile_sentinel_replay(s, "stream_pit_")
-    stream = read_events_stream(s, src, max_files_per_trigger=1)
-    with _replay_shuffle(s, 4):
-        stream_to_memory(
-            point_in_time_enrich_stream(
-                stream, tolerance="30 minutes", watermark="1 hour"
-            ),
-            "streaming_pit_enrich_tbl",
-            output_mode="append",
-        )
-    return s.table("streaming_pit_enrich_tbl").filter(
-        F.col("user_id") >= 0
-    )
+    work, src = stage_replay(
+        _sentinel_quartiles(s), "stream_pit_", files=6, bucket="__b")
+    return replay(
+        point_in_time_enrich_stream(
+            read_events_stream(s, src), tolerance="30 minutes",
+            watermark="1 hour",
+        ),
+        work, "streaming_pit_enrich_tbl", shuffle_partitions=4,
+    ).filter(F.col("user_id") >= 0)
 
 
 # Batch window twin: rank the lookback join per click (ties on a
@@ -2789,34 +2655,23 @@ LEFT JOIN (SELECT user_id, ts, value FROM events
 
 
 def _streaming_dedup_result(s: SparkSession) -> DataFrame:
-    """Bounded-stream replay of the continuous-dedup corpus sink
-    (round 6): documents split into 2 parquet files with strictly
-    increasing mtimes (batch order is load-bearing for dedup — the
-    first-arrived member of a dup pair is the one kept), streamed one
-    file per trigger through ``streaming_incremental_dedup_sink`` so
-    the corpus is built by successive atomic ``batch=<id>`` commits,
-    then the final corpus (doc_id, text_md5) is returned for the
-    driver's hash check against the sequential two-stage batch twin."""
-    import os
+    """Bounded-stream replay of the continuous-dedup corpus sink:
+    documents split into 2 files with strictly increasing mtimes (batch
+    order is load-bearing for dedup — the first-arrived member of a dup
+    pair is the one kept), replayed one file per trigger through
+    ``dedup_ingest_batch`` so the corpus is built by successive atomic
+    ``batch=<id>`` commits; the final corpus (doc_id, text_md5) is
+    hash-checked against the sequential two-stage batch twin."""
+    from datafusion_sqlgen_spark.streaming.ops import (
+        run_bounded_dedup,
+        stage_replay,
+    )
 
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_dedup
-
-    work = work_dir("stream_dedup_")
-    src = os.path.join(work, "docs_files")
-    os.makedirs(src, exist_ok=True)
-    # one pass + one partitioned write for both replay halves
-    # (round-13 optimization, guide 1.2 — was 2 filter+write jobs)
     docs = s.table("documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     ).withColumn("__b", (F.col("doc_id") >= 250).cast("int"))
-    tmp = os.path.join(work, "tmpb")
-    docs.repartition("__b").write.partitionBy("__b").parquet(tmp)
-    for i in range(2):
-        _move_replay_part(tmp, f"__b={i}",
-                          os.path.join(src, f"part{i}.parquet"),
-                          1_000_000_000 + i * 3600)
-    with _replay_shuffle(s):
-        return run_bounded_dedup(s, src, work, max_files_per_trigger=1)
+    work, src = stage_replay(docs, "stream_dedup_", files=2, bucket="__b")
+    return run_bounded_dedup(s, src, work)
 
 
 def _streaming_dedup_oracle() -> str:

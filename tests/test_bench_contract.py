@@ -29,10 +29,10 @@ COMPACT_KEYS = {
     "full_artifact", "queries", "n_queries_reported",
 }
 
-# bench.py keys full artifacts by core count (VERDICT r13 items 1/8) so
-# the driver's low-core scaling run can never overwrite the full-core
-# record; tests must compute the expected suffix the same way.
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)))
+# bench.py keys full artifacts by the session's thread count (the
+# local[N] master get_spark builds); tests must compute the expected
+# suffix the same way.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def test_bench_stdout_last_line_is_compact_and_parsable():
@@ -172,3 +172,35 @@ def test_headline_names_all_exist_in_catalog():
     assert missing == [], missing
     # and no duplicates (a dup would double-count the headline total)
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+
+
+def test_artifact_cpus_come_from_the_session_master():
+    """The core count in an artifact's name is the running session's,
+    not the host's: an unset SPARK_GRAFT_CPUS builds local[32], which a
+    4-core host must not label c4 or write as the canonical
+    bench_full.json. Only a clean full-headline run whose thread count
+    matches the cores this process may run on gets the canonical name,
+    and a contended run never gets an unkeyed name."""
+    from types import SimpleNamespace
+
+    import bench
+
+    def session(master: str, parallelism: int = 0):
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            master=master, defaultParallelism=parallelism))
+
+    host = len(os.sched_getaffinity(0))
+    assert bench._session_cpus(session("local[32]")) == 32
+    assert bench._session_cpus(session("local[3,2]")) == 3
+    assert bench._session_cpus(session("local")) == 1
+    assert bench._session_cpus(session("local[*]")) == host
+    assert bench._session_cpus(session("spark://h:7077", 48)) == 48
+
+    assert bench._artifact_names(host, False, False) == [
+        f"bench_full.c{host}.json", "bench_full.json"]
+    assert bench._artifact_names(host + 28, False, False) == [
+        f"bench_full.c{host + 28}.json"]
+    assert bench._artifact_names(host, False, True) == [
+        f"bench_full.c{host}.contended.json"]
+    assert bench._artifact_names(host, True, False) == [
+        f"bench_full_subset.c{host}.json"]

@@ -3,6 +3,7 @@ verify streamed results equal the batch equivalents."""
 
 import os
 import shutil
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,9 +32,10 @@ def stream_dir(tmp_path_factory):
     return str(d)
 
 
-def test_tumbling_window_matches_batch(spark, stream_dir):
+def test_tumbling_window_matches_batch(spark, stream_dir, tmp_path):
     ev = st.read_events_stream(spark, stream_dir)
-    st.stream_to_memory(st.tumbling_window_stream(ev), "t_tumble")
+    st.replay(st.tumbling_window_stream(ev), str(tmp_path), "t_tumble",
+              "complete")
     streamed = normalize_rows(
         [tuple(r) for r in spark.sql("SELECT * FROM t_tumble").collect()], 2
     )
@@ -52,9 +54,10 @@ def test_tumbling_window_matches_batch(spark, stream_dir):
     assert len(streamed) > 0
 
 
-def test_session_window_stream_runs(spark, stream_dir):
+def test_session_window_stream_runs(spark, stream_dir, tmp_path):
     ev = st.read_events_stream(spark, stream_dir)
-    st.stream_to_memory(st.session_window_stream(ev, gap="30 minutes"), "t_sess")
+    st.replay(st.session_window_stream(ev, gap="30 minutes"),
+              str(tmp_path), "t_sess", "complete")
     rows = spark.sql("SELECT * FROM t_sess").collect()
     assert len(rows) > 0
     # sessions are per-user, disjoint, end > start
@@ -68,7 +71,7 @@ def test_stream_dedup(spark, stream_dir, tmp_path):
     shutil.copytree(stream_dir, dup_dir)
     shutil.copy(f"{stream_dir}/part0.parquet", f"{dup_dir}/part0_copy.parquet")
     ev = st.read_events_stream(spark, dup_dir)
-    st.stream_to_memory(st.stream_dedup(ev), "t_dedup", output_mode="append")
+    st.replay(st.stream_dedup(ev), str(tmp_path / "work"), "t_dedup")
     n_dedup = spark.sql("SELECT count(DISTINCT event_id) FROM t_dedup").collect()[0][0]
     n_total = spark.sql("SELECT count(*) FROM t_dedup").collect()[0][0]
     n_batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir).count()
@@ -76,10 +79,10 @@ def test_stream_dedup(spark, stream_dir, tmp_path):
     assert n_total == n_batch  # duplicates within watermark dropped
 
 
-def test_stateful_running_totals(spark, stream_dir):
+def test_stateful_running_totals(spark, stream_dir, tmp_path):
     ev = st.read_events_stream(spark, stream_dir)
-    st.stream_to_memory(
-        st.user_running_totals_stream(ev), "t_state", output_mode="update"
+    st.replay(
+        st.user_running_totals_stream(ev), str(tmp_path), "t_state", "update"
     )
     # final state per user (last update) must equal the batch totals
     final = spark.sql(
@@ -98,16 +101,14 @@ def test_stateful_running_totals(spark, stream_dir):
     }
 
 
-def test_stream_static_enrich(spark, stream_dir):
+def test_stream_static_enrich(spark, stream_dir, tmp_path):
     batch_ev = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
     dim = (
         batch_ev.select("user_id").distinct()
         .withColumn("segment", F.col("user_id") % 10)
     )
     ev = st.read_events_stream(spark, stream_dir)
-    st.stream_to_memory(
-        st.stream_static_enrich(ev, dim), "t_enrich", output_mode="append"
-    )
+    st.replay(st.stream_static_enrich(ev, dim), str(tmp_path), "t_enrich")
     streamed = normalize_rows(
         [tuple(r) for r in spark.sql(
             "SELECT event_id, segment FROM t_enrich").collect()]
@@ -120,12 +121,12 @@ def test_stream_static_enrich(spark, stream_dir):
     assert len(streamed) > 0
 
 
-def test_stream_stream_attribution_matches_batch(spark, stream_dir):
+def test_stream_stream_attribution_matches_batch(spark, stream_dir, tmp_path):
     ev = st.read_events_stream(spark, stream_dir)
-    st.stream_to_memory(
+    st.replay(
         st.click_purchase_attribution_stream(ev, attribution="30 minutes"),
+        str(tmp_path),
         "t_attr",
-        output_mode="append",
     )
     streamed = normalize_rows(
         [tuple(r) for r in spark.sql("SELECT * FROM t_attr").collect()], 2
@@ -201,7 +202,7 @@ def disordered_stream_dir(tmp_path_factory):
 
 
 def test_stream_attribution_under_event_time_disorder(
-    spark, stream_dir, disordered_stream_dir
+    spark, stream_dir, disordered_stream_dir, tmp_path
 ):
     """The stream-stream attribution join must produce EXACTLY the batch
     result under late, shuffled delivery — late rows are within the
@@ -222,12 +223,12 @@ def test_stream_attribution_under_event_time_disorder(
     assert a.exceptAll(b).count() == 0
 
     ev = st.read_events_stream(spark, disordered_stream_dir)
-    st.stream_to_memory(
+    st.replay(
         st.click_purchase_attribution_stream(
             ev, attribution="30 minutes", watermark="3 days"
         ),
+        str(tmp_path),
         "t_attr_disorder",
-        output_mode="append",
     )
     streamed = normalize_rows(
         [tuple(r) for r in spark.sql("SELECT * FROM t_attr_disorder").collect()],
@@ -322,7 +323,9 @@ def test_foreach_batch_idempotent_sink(spark, stream_dir, tmp_path):
     assert again == first
 
 
-def test_session_window_stream_matches_batch_sessionize(spark, stream_dir):
+def test_session_window_stream_matches_batch_sessionize(
+    spark, stream_dir, tmp_path
+):
     """Cross-layer invariant: streaming session_window totals equal the
     batch operator's (timeseries.sessionize) on the same data — backfill
     and live paths must agree on session boundaries. session_window's
@@ -331,9 +334,11 @@ def test_session_window_stream_matches_batch_sessionize(spark, stream_dir):
     from datafusion_sqlgen_spark.operators import timeseries
 
     ev = st.read_events_stream(spark, stream_dir)
-    st.stream_to_memory(
+    st.replay(
         st.session_window_stream(ev, gap="30 minutes", watermark="365 days"),
+        str(tmp_path),
         "t_sess_twin",
+        "complete",
     )
     streamed = sorted(
         (r.user_id, r.session_start, r.n_events, r.session_value)
@@ -374,7 +379,7 @@ def docs_stream_dir(tmp_path_factory):
     return str(d)
 
 
-def test_streaming_text_filter_matches_batch(spark, docs_stream_dir):
+def test_streaming_text_filter_matches_batch(spark, docs_stream_dir, tmp_path):
     """The text tier's pure-projection operators run on a stream
     UNCHANGED: streamed c4_filters == batch c4_filters row-for-row.
     (Stateless map — no watermark, no state store, append mode.)"""
@@ -382,7 +387,7 @@ def test_streaming_text_filter_matches_batch(spark, docs_stream_dir):
 
     stream = st.read_documents_stream(spark, docs_stream_dir)
     out = st.streaming_text_filter(stream)
-    st.stream_to_memory(out, "docs_filtered", output_mode="append")
+    st.replay(out, str(tmp_path), "docs_filtered")
     got = normalize_rows(
         tuple(r) for r in spark.table("docs_filtered").collect()
     )
@@ -632,17 +637,32 @@ def test_rollup_crash_mid_promote_leaves_committed_generation(
     assert len(gens) <= 2
 
 
-def test_bounded_rollup_empty_source_yields_empty_frame(spark, tmp_path):
-    """Zero input files -> zero triggers -> no state table; the bounded
-    driver must return an empty finalized frame, not a read error."""
-    import os
+@pytest.mark.parametrize(
+    "runner, columns",
+    [
+        ("run_bounded_rollup",
+         ["hr", "event_type", "n", "total", "mean", "lo", "hi"]),
+        ("run_bounded_sketch", ["event_type", "register", "rho"]),
+        ("run_bounded_kmeans", ["cell", "dim", "n", "centroid"]),
+        ("run_bounded_scd2",
+         ["user_id", "event_type", "valid_from", "valid_to", "is_current"]),
+        ("run_bounded_dedup", ["doc_id", "text_md5"]),
+    ],
+    ids=["rollup", "sketch", "kmeans", "scd2", "dedup"],
+)
+def test_bounded_replay_empty_source_returns_empty_schema(
+    spark, tmp_path, runner, columns
+):
+    """Zero input files -> zero triggers -> no committed state; every
+    bounded replay returns an empty frame with its output schema, not
+    a read error."""
+    from datafusion_sqlgen_spark.streaming import ops
 
-    src = str(tmp_path / "empty_events")
-    os.makedirs(src, exist_ok=True)
-    out = st.run_bounded_rollup(spark, src, str(tmp_path / "work"))
+    src = str(tmp_path / "empty_src")
+    os.makedirs(src)
+    out = getattr(ops, runner)(spark, src, str(tmp_path / "work"))
+    assert out.columns == columns
     assert out.count() == 0
-    assert out.columns == ["hr", "event_type", "n", "total", "mean",
-                           "lo", "hi"]
 
 
 def test_legacy_flat_layout_fails_loud_not_silent_reset(
@@ -719,19 +739,37 @@ def test_rollup_merge_batch_is_one_aggregate_job_pair(
 def test_rollup_empty_batch_leaves_state_unchanged(
     spark, stream_dir, tmp_path
 ):
-    """An empty batch is not special-cased: it commits its generation
-    (the batch id is recorded) holding exactly the previous state."""
-    state = str(tmp_path / "state")
-    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
-    st.rollup_merge_batch(batch, 0, state)
-    once = sorted(
-        tuple(r) for r in st.read_rollup_state(spark, state).collect()
-    )
-    st.rollup_merge_batch(batch.limit(0), 1, state)
-    assert os.path.isdir(os.path.join(state, "gen-1"))
-    assert sorted(
-        tuple(r) for r in st.read_rollup_state(spark, state).collect()
-    ) == once
+    """No foreachBatch body special-cases an empty batch: it commits its
+    generation (the batch id is recorded) holding exactly the previous
+    state — for the dedup corpus, an empty ``batch=<id>`` marker. The
+    one exception is an empty FIRST k-means batch, which has no rows to
+    seed the centroids from and commits nothing."""
+    from datafusion_sqlgen_spark.streaming import ops
+
+    events = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
+    emb = spark.table("embeddings").limit(40)
+    bodies = {
+        "rollup": (st.rollup_merge_batch, events, "gen-1"),
+        "sketch": (st.sketch_merge_batch, events, "gen-1"),
+        "kmeans": (partial(ops.kmeans_update_batch, k=4), emb, "gen-1"),
+        "scd2": (ops.scd2_apply_batch, events, "gen-1"),
+        "dedup": (st.dedup_ingest_batch,
+                  spark.table("documents").limit(20), "batch=1"),
+    }
+    for name, (body, batch, commit) in bodies.items():
+        read = st.read_dedup_corpus if name == "dedup" else st.read_rollup_state
+        state = str(tmp_path / name)
+        body(batch, 0, state)
+        once = sorted(tuple(r) for r in read(spark, state).collect())
+        assert once, name
+        body(batch.limit(0), 1, state)
+        assert os.path.isdir(os.path.join(state, commit)), name
+        assert sorted(
+            tuple(r) for r in read(spark, state).collect()
+        ) == once, name
+    first = str(tmp_path / "kmeans_first")
+    ops.kmeans_update_batch(emb.limit(0), 0, first, k=4)
+    assert not os.path.exists(first)
 
 
 @pytest.fixture(scope="module")
@@ -753,6 +791,14 @@ def stream_dir_with_empty(stream_dir, tmp_path_factory):
     for i, name in enumerate(order):
         os.utime(d / name, (1_000_000 + i, 1_000_000 + i))
     return str(d)
+
+
+def test_stage_replay_fails_naming_an_empty_bucket(spark):
+    """A bucketed split whose bucket column leaves a trigger without
+    rows fails before any replay runs, naming the empty bucket."""
+    rows = spark.range(6).withColumn("__b", (F.col("id") % 2).cast("int"))
+    with pytest.raises(RuntimeError, match=r"__b=2 .* is empty"):
+        st.stage_replay(rows, "stage_test_", files=3, bucket="__b")
 
 
 def test_bounded_rollup_runs_one_trigger_per_file(
@@ -878,17 +924,21 @@ def test_sketch_crash_mid_promote_leaves_committed_generation(
     ) == once
 
 
-def test_session_stream_unwatermarked_exact_multi_trigger(spark, stream_dir):
+def test_session_stream_unwatermarked_exact_multi_trigger(
+    spark, stream_dir, tmp_path
+):
     """The driver-workload path (round 7): watermark=None + exact=True
     over event-id-split files (NOT time-ordered), one file per trigger.
     A watermark would wrongly drop whole earlier-timestamped batches as
     late; without it the complete-mode state must merge sessions across
     triggers to exactly the single-batch result, with DECIMAL-exact
     value sums."""
-    ev = st.read_events_stream(spark, stream_dir, max_files_per_trigger=1)
-    st.stream_to_memory(
+    ev = st.read_events_stream(spark, stream_dir)
+    st.replay(
         st.session_window_stream(ev, watermark=None, exact=True),
+        str(tmp_path),
         "t_sess_nowm",
+        "complete",
     )
     streamed = sorted(
         tuple(r) for r in spark.sql("SELECT * FROM t_sess_nowm").collect()
@@ -906,7 +956,7 @@ def test_session_stream_unwatermarked_exact_multi_trigger(spark, stream_dir):
 
 
 def test_attribution_stream_exact_multi_trigger_wide_watermark(
-    spark, stream_dir
+    spark, stream_dir, tmp_path
 ):
     """The driver-workload path (round 7): event-id-split files, one
     per trigger, wide watermark (the files are NOT time-ordered — a
@@ -914,13 +964,13 @@ def test_attribution_stream_exact_multi_trigger_wide_watermark(
     exact value passthrough.  The stream-stream join state must match
     purchases to clicks ACROSS trigger boundaries to exactly the batch
     self-join result."""
-    ev = st.read_events_stream(spark, stream_dir, max_files_per_trigger=1)
-    st.stream_to_memory(
+    ev = st.read_events_stream(spark, stream_dir)
+    st.replay(
         st.click_purchase_attribution_stream(
             ev, watermark="3650 days", exact=True
         ),
+        str(tmp_path),
         "t_attr_exact",
-        output_mode="append",
     )
     streamed = sorted(
         tuple(r) for r in spark.sql("SELECT * FROM t_attr_exact").collect()
@@ -937,14 +987,17 @@ def test_attribution_stream_exact_multi_trigger_wide_watermark(
     assert len(streamed) > 0
 
 
-def test_sliding_stream_unwatermarked_multi_trigger(spark, stream_dir):
+def test_sliding_stream_unwatermarked_multi_trigger(
+    spark, stream_dir, tmp_path
+):
     """The driver-workload path (round 7): overlapping sliding windows
     must accumulate counts across file-triggers (complete-mode state),
     matching the single-batch result exactly; every event lands in
     exactly window/slide = 2 windows."""
-    ev = st.read_events_stream(spark, stream_dir, max_files_per_trigger=1)
-    st.stream_to_memory(
-        st.sliding_window_stream(ev, watermark=None), "t_slide_nowm"
+    ev = st.read_events_stream(spark, stream_dir)
+    st.replay(
+        st.sliding_window_stream(ev, watermark=None), str(tmp_path),
+        "t_slide_nowm", "complete",
     )
     streamed = sorted(
         tuple(r) for r in spark.sql("SELECT * FROM t_slide_nowm").collect()
@@ -961,16 +1014,17 @@ def test_sliding_stream_unwatermarked_multi_trigger(spark, stream_dir):
     assert sum(r[2] for r in streamed) == 2 * n_events
 
 
-def test_running_totals_exact_multi_trigger(spark, stream_dir):
+def test_running_totals_exact_multi_trigger(spark, stream_dir, tmp_path):
     """The driver-workload path (round 7): fixed-point BIGINT state in
     applyInPandasWithState must accumulate exactly across triggers —
     the final per-user snapshot (max-n_events emission) equals the
     batch GROUP BY with the same value snap, as integers."""
-    ev = st.read_events_stream(spark, stream_dir, max_files_per_trigger=1)
-    st.stream_to_memory(
+    ev = st.read_events_stream(spark, stream_dir)
+    st.replay(
         st.user_running_totals_stream_exact(ev),
+        str(tmp_path),
         "t_totals_fx",
-        output_mode="update",
+        "update",
     )
     import pyspark.sql.functions as F
 
@@ -1091,21 +1145,6 @@ def test_stream_point_in_time_enrich_matches_batch_twin(spark):
         == sorted(map(tuple, batch.collect()), key=key)
 
 
-def test_bounded_kmeans_empty_source_returns_empty_schema(spark, tmp_path):
-    """Empty stream -> zero triggers wrote model state; the finalize
-    returns an empty frame with the output schema instead of a
-    gen-None read error (same contract as run_bounded_rollup)."""
-    import os
-
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_kmeans
-
-    src = os.path.join(str(tmp_path), "empty_src")
-    os.makedirs(src, exist_ok=True)
-    out = run_bounded_kmeans(spark, src, str(tmp_path), k=4)
-    assert out.columns == ["cell", "dim", "n", "centroid"]
-    assert out.count() == 0
-
-
 def test_kmeans_sink_replay_is_idempotent(spark, tmp_path):
     """Replaying an already-committed batch id is a no-op: MODEL state
     would re-observe a different model on replay, so the batch-id guard
@@ -1130,22 +1169,6 @@ def test_kmeans_sink_replay_is_idempotent(spark, tmp_path):
     again = sorted(
         map(tuple, spark.read.parquet(f"{state}/gen-{g2}").collect()))
     assert again == first
-
-
-def test_bounded_scd2_empty_source_returns_empty_schema(spark, tmp_path):
-    """Empty stream -> zero triggers committed history; the finalize
-    returns an empty frame with the history schema instead of a
-    gen-None read error (same contract as the other sinks)."""
-    import os
-
-    from datafusion_sqlgen_spark.streaming.ops import run_bounded_scd2
-
-    src = os.path.join(str(tmp_path), "empty_src")
-    os.makedirs(src, exist_ok=True)
-    out = run_bounded_scd2(spark, src, str(tmp_path))
-    assert out.columns == [
-        "user_id", "event_type", "valid_from", "valid_to", "is_current"]
-    assert out.count() == 0
 
 
 def test_scd2_sink_replay_is_idempotent(spark, tmp_path):
@@ -1317,3 +1340,35 @@ def test_scd2_point_in_time_semantics(spark):
         4: None,       # tombstone gap
         5: "buy",
     }
+
+
+def test_replays_release_queries_views_and_dirs(spark):
+    """A memory-table replay, a foreachBatch replay and a sentinel
+    replay built through the catalog leave nothing behind once the
+    session scope is released: no active streaming query, no
+    ``streaming_*_tbl`` temp view, and no new replay dir (work dirs or
+    Spark's temporary checkpoints) under the temp dir."""
+    import glob
+    import tempfile
+
+    from datafusion_sqlgen_spark.materialize import release_session
+    from datafusion_sqlgen_spark.workloads import build_queries
+
+    def dirs() -> set:
+        return {
+            p for pattern in ("stream_*", "temporary*")
+            for p in glob.glob(os.path.join(tempfile.gettempdir(), pattern))
+        }
+
+    before = dirs()
+    queries = build_queries()
+    for name in ("streaming_sessions_result", "streaming_hll_registers",
+                 "streaming_attribution_left_result"):
+        assert queries[name](spark, SF_DIR).collect(), name
+    release_session()
+    assert spark.streams.active == []
+    assert [
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("streaming_")
+    ] == []
+    assert not dirs() - before
