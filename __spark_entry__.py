@@ -3,9 +3,10 @@
 ``entry(spark)`` — flagship query (revenue by region/nation, broadcast
 dims) at sf0.001. ``queries()`` / ``oracle_sql()`` — the full workload
 catalog from ``datafusion_sqlgen_spark.workloads``: every SURVEY.md §2
-operator has an IR-built query whose DuckDB oracle is *generated from
-the same plan IR* (``plan.to_sql("duckdb")``), plus the LLM-pipeline
-operator workloads with hand-built oracles.
+operator has an IR-built query whose DuckDB oracle is hand-written in a
+different formulation from the plan's own render, plus the LLM-pipeline
+operator workloads with the DuckDB oracles shipped next to each
+operator.
 """
 
 from __future__ import annotations
@@ -45,6 +46,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (generated from the plan IR for IR
-    workloads; hand-built for operator workloads)."""
+    """DuckDB-equivalent SQL per query, hand-written for every
+    workload."""
     return dict(_catalog()[1])

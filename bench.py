@@ -55,300 +55,18 @@ CONTENTION_HARD_MAX = 1.5
 # top-N per-query dict) must stay under this budget to survive intact.
 TAIL_LINE_BUDGET = 1900
 
-# Representative slice of the catalog: scan/filter, the two canonical agg
-# shapes, multi-join, window, set-op, and the LLM-pipeline operators.
-HEADLINE = [
-    # round-13 additions (second wave)
-    "text_weighted_hybrid_topk",
-    "join_asof_nearest",
-    "sample_mixture_waterfill",
-    "profile_snapshot_drift",
-    "text_pmi_collocations",
-    "ts_time_weighted_avg",
-    "dedup_ngram_containment",
-    # round-13 additions
-    "text_rrf_hybrid_topk",
-    "streaming_scd2_result",
-    "streaming_scd2_tombstones_result",
-    "text_unigram_train",
-    "text_unigram_encode",
-    "text_pii_scrub",
-    "text_tokenizer_fertility",
-    "join_scd2_pointlookup",
-    "text_label_agreement",
-    "profile_embedding_dims",
-    "sample_curriculum_buckets",
-    "profile_winsorize",
-    "dedup_cross_source_matrix",
-    "join_snapshot_diff",
-    "ts_lateness_audit",
-    # round-12 additions
-    "parsed_asof_tolerance",
-    "streaming_drift_psi_result",
-    "streaming_kmeans_result",
-    "streaming_topk_result",
-    "parsed_asof_tolerance_left",
-    "parsed_asof_multikey",
-    "profile_drift_psi",
-    "profile_drift_ks",
-    "sim_mmr_diversify",
-    "text_calibration_bins",
-    "ref_scan_filter",
-    "ref_project_cast_arith",
-    "agg_tpch_q1",
-    "agg_rollup",
-    "agg_percentiles",
-    "join_broadcast_dims",
-    "join_tpch_q5ish",
-    "join_semi",
-    "join_salted_skew",
-    "win_rank_topn",
-    "win_running_sum",
-    "parsed_win_exclude_current",
-    "setop_union_all",
-    "events_hourly_rollup",
-    "dedup_exact",
-    "dedup_minhash_buckets",
-    "dedup_minhash_verify",
-    "dedup_cluster_cc",
-    "dedup_embedding_cosine",
-    "text_quality_score",
-    "text_language_id",
-    "text_top_terms",
-    "sim_cosine_topk",
-    "sim_ivf_topk",
-    "sim_lsh_bucket_stats",
-    "join_asof_events",
-    "udf_bpeish_token_count",
-    "mm_feature_extract",
-    # adapted TPC-H: multi-join agg, 5-way join, left-join distribution,
-    # correlated scalar subquery, IN-over-grouped-having
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q9",
-    "tpch_q13",
-    "tpch_q17",
-    "tpch_q18",
-    # round-2 surface: lateral explode + chunking (LLM prep), recursion
-    "lat_explode_words",
-    "text_chunk_documents",
-    "cte_recursive_month_spine",
-    # round-2 additions: codegen'd lambda HOFs over arrays, decorrelated
-    # LATERAL top-1, single-pass regression/bitwise aggregate, bucketized
-    # range join (the no-nested-loop scale path), one-scan profiling
-    "expr_higher_order",
-    "lat_topn_per_group",
-    "agg_regr_bitwise",
-    "join_range_bucketed",
-    "profile_orders",
-    "text_pack_sequences",
-    # round-4 additions: the write path (partitioned parquet sink +
-    # read-back aggregate — sink throughput is a first-class cost at
-    # 100 TB) and the audited-builtins expression batch
-    "sink_partitioned_roundtrip",
-    "expr_scalar_funcs5",
-    # round-4 operators: sessionization (one shared key shuffle),
-    # benchmark decontamination (broadcast shingle set), int8
-    # quantization (pure narrow map), repetition filters (one reused
-    # doc-keyed shuffle)
-    "ts_sessionize",
-    "text_decontaminate",
-    "sim_quantize_int8",
-    "text_repetition",
-    # round-4b: single-pass TF-IDF, rolling anomaly gate
-    "text_tfidf_topk",
-    "ts_rolling_anomaly",
-    # round-4c: sub-document block dedup (one group-limit shuffle),
-    # C4 filter chain (zero-shuffle narrow map), temperature source
-    # mixing (broadcast rate table), ANN recall audit, sharded write
-    "dedup_block_level",
-    "text_c4_filters",
-    "text_gopher_filters",
-    "sample_global_shuffle",
-    "text_bm25_topk",
-    "text_dsir_weights",
-    "join_fuzzy_names",
-    "sim_pq_encode",
-    "profile_correlations",
-    "sink_zorder_roundtrip",
-    "join_interval_overlap",
-    "text_ngram_counts",
-    "text_dsir_resample",
-    "ts_mergeable_rollup",
-    "join_scd2_merge",
-    "sample_capped_per_group",
-    "profile_robust_stats",
-    "sample_temperature_mix",
-    "sim_recall_at_k",
-    "sink_sharded_write",
-    "sim_kmeans_fit",
-    "sim_pca_component",
-    "profile_key_skew",
-    "sim_ivf_topk_trained",
-    "parsed_pivot_status",
-    "dedup_incremental",
-    "ts_funnel_steps",
-    "ts_cohort_retention",
-    "pipeline_curation",
-    "text_unigram_logprob",
-    # round-5: the streaming tier's driver-visible workload (bounded
-    # 4-file replay through the foreachBatch rollup sink — streaming
-    # throughput is a first-class cost, not a pytest-only path)
-    "streaming_rollup_result",
-    # round-6: the continuous-dedup corpus sink's driver-visible twin
-    # (2-file replay, per-trigger incremental_dedup admission, atomic
-    # batch-directory commits)
-    "streaming_dedup_result",
-    # round-6: group-aware leakage-safe folds (LSH -> CC -> group-keyed
-    # fold hash) — the split-hygiene primitive
-    "sample_leakage_safe_split",
-    # round-6b: cluster-then-prune semantic dedup (cell-keyed pair join)
-    # and per-domain token-budget mixture (one window shuffle)
-    "dedup_semantic",
-    "sample_token_budget_mix",
-    # round-6c: full semantic-curation composition (C4 -> SemDeDup ->
-    # token-budget mix in ONE plan), oracle-checkable HLL distinct
-    # (fixed 256-row register state per group), and fastText-shaped
-    # hashed-ngram classifier inference (broadcast weight table, one
-    # doc-keyed shuffle)
-    "pipeline_semantic_curation",
-    "profile_hll_estimate",
-    "text_classifier_score",
-    # round-6d: count-min heavy hitters (shard-sketch + cell-sum merge,
-    # broadcast point queries) and n-gram Bloom decontamination (the
-    # training-side membership test is a pure in-row projection against
-    # a 1-row broadcast bit array -- zero train-side shuffle)
-    "profile_cms_heavy_hitters",
-    "dedup_bloom_ngram_decontaminate",
-    # binned quantile sketch: bounded (group, bin, cnt) state, window
-    # only over occupied bins
-    "profile_quantile_sketch",
-    # full IVF-PQ composition: coarse probe -> fixed-point ADC over PQ
-    # codes -> exact re-rank; corpus never shuffles
-    "sim_ivf_pq_topk",
-    # round-7 additions
-    "mm_phash_pairs",
-    "profile_theta_setops",
-    "dedup_substring_spans",
-    # exact n-per-group weighted sampling via two-phase bucketed
-    # prefix sums (no corpus-wide per-group window)
-    "sample_pps_systematic",
-    # CCNet segment dedup: counts keyed on 52-bit hash, one inherent
-    # reassembly shuffle
-    "dedup_segments_ccnet",
-    # 3 unrolled integer PageRank iterations over O(n*d) LSH edges
-    "graph_pagerank_sim",
-    # stateful session windows merged across 4 file-triggers through
-    # the complete-mode memory sink (the third streaming headline)
-    "streaming_sessions_result",
-    # interpolated-bigram LM scoring: broadcast top-B/top-V LM tables,
-    # one token-stream shuffle shared by the lag window and the per-doc
-    # mean (the CCNet-perplexity-gate shape)
-    "text_bigram_logprob",
-    # SQ8 scalar-quantized ANN: exact integer-dot shortlist over int8
-    # codes (quarter-bandwidth corpus pass), float re-rank of refine*k
-    "sim_sq8_topk",
-    # stateful stream-stream interval join replayed across 4 triggers
-    # (the fourth streaming headline)
-    "streaming_attribution_result",
-    # LEFT OUTER variant: watermark-evicted NULL emission across
-    # time-ordered triggers with sentinel flush (round 10b)
-    "streaming_attribution_left_result",
-    # classifier training: unrolled logistic GD, broadcast weight
-    # table per epoch, exact-integer gradients
-    "text_lr_train",
-    # sliding windows accumulated across 4 triggers (the fifth
-    # streaming headline)
-    "streaming_sliding_result",
-    # IVF-SQ8: trained coarse probe bounds candidates, integer SQ8
-    # ADC bounds bytes per candidate
-    "sim_ivf_sq8_topk",
-    # custom stateful op (applyInPandasWithState) with fixed-point
-    # state, replayed across 4 triggers (the sixth streaming headline)
-    "streaming_running_totals_result",
-    # stateless stream-static broadcast enrichment (the seventh)
-    "streaming_enrich_result",
-    # round-8 additions: MERGE INTO / TABLESAMPLE statement forms
-    # (parse -> desugared IR -> Catalyst; the upsert is one anti-join
-    # union, the sample a pushed-down scan filter) and the cross-tier
-    # HLL consistency row (native datasketches + portable registers +
-    # exact audit in one pass over events)
-    "parsed_merge_upsert",
-    "parsed_tablesample",
-    "profile_hll_native_vs_portable",
-    # cross-corpus ANN join: neither side broadcasts, one cell_id
-    # shuffle each, multi-probe assignment is a zero-shuffle fold
-    "sim_ann_join",
-    # ... and its brute-force recall audit on a 25-query sample
-    "sim_ann_join_recall",
-    # embedding-level benchmark decontamination (ann_join + τ gate +
-    # per-source accounting)
-    "pipeline_embedding_decontamination",
-    # BPE merge-rule training: 6 iterations of pair-count + argmax +
-    # literal replace over the capped word-shape table
-    "text_bpe_train",
-    "text_bpe_encode",
-    # round 9-10 statement forms: conditional/cascaded MERGE arms (one
-    # left join + CASE / filter), BY SOURCE full sync (one semi join),
-    # column-list insert (anti-join append), and the single-table DML
-    # desugars (zero-shuffle projection / filter / positional union)
-    "parsed_merge_conditional",
-    "parsed_merge_full_sync",
-    "parsed_merge_insert_cols",
-    "parsed_merge_multi_arm",
-    "parsed_merge_insert_arms",
-    "parsed_update_where",
-    "parsed_delete_where",
-    "parsed_insert_select",
-    # round-10 row-value membership (LeftSemi on two keys) and the
-    # generate_series spine left join
-    "parsed_row_in_subquery",
-    "parsed_series_spine",
-    "parsed_similar_to",
-    "parsed_unnest_words",
-    "parsed_array_agg_ordered",
-    # round-10b surface: peer-group frame exclusion (two extra window
-    # passes over the same sort), NATURAL JOIN (equi-join after lazy
-    # shared-column resolution), ASOF — union+window AsofJoin node
-    # since r11 (one exchange, the join_asof_events shape)
-    "parsed_win_exclude_group",
-    "parsed_natural_join",
-    "parsed_asof_join",
-    # window FILTER (CASE-desugared window pass), CREATE TEMP VIEW
-    # script (one With — CTE bindings), try_ scalars (zero-shuffle)
-    "parsed_win_filter",
-    "parsed_script_views",
-    "expr_try_funcs",
-    # triangle counting (3 degree-oriented equi joins + aggregate) and
-    # hard-negative mining (broadcast-query brute with label gate)
-    "graph_triangle_count",
-    "sim_hard_negatives",
-    # Heaps-law growth curve: one token-keyed min aggregate + bucket
-    # window cumulation
-    "text_vocab_growth",
-    # GROUPS frame desugar: dense_rank pre-pass + RANGE windows over
-    # one shared sort
-    "parsed_win_groups_frame",
-    # DISTINCT-over-window desugar: first-occurrence flag + plain
-    # windowed aggregates; ordered variant = running distinct count
-    "parsed_win_distinct_agg",
-    "parsed_win_running_distinct",
-    # ASOF LEFT — union+window AsofJoin node since r11 (one exchange,
-    # no join operator; the r10 lateral desugar BNLJ'd at 9.55s)
-    "parsed_asof_left_join",
-    # round-11 surface: SQL-92 comma cross-join (Catalyst folds the
-    # WHERE equality into a hash equi-join) and PG regex operators
-    # (JVM RLIKE scans, zero shuffle)
-    "parsed_comma_join",
-    "parsed_pg_regex_match",
-    # streaming point-in-time enrichment: two chained stateful ops
-    # (interval join -> max_by aggregate) across ordered triggers
-    "streaming_pit_enrich_result",
-    # Zipf head fit: one combined count shuffle + TakeOrdered + k-row fit
-    "text_zipf_slope",
-    # k-means cluster quality: zero-corpus-shuffle assign + k x k grid
-    "sim_kmeans_quality",
-]
+
+def __getattr__(name: str):
+    # HEADLINE, the queries the bench times, is a representative slice
+    # of the catalog (scan/filter, the canonical agg shapes, multi-join,
+    # window, set-op and the LLM-pipeline operators) marked by the
+    # registry's headline flags. It is read lazily so that importing
+    # this module for SF_DIR does not build the catalog.
+    if name == "HEADLINE":
+        from datafusion_sqlgen_spark.workloads import headline
+
+        return headline()
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def _machine_canary() -> float:
@@ -493,7 +211,7 @@ def main() -> None:
             2))
 
     from datafusion_sqlgen_spark import get_spark, register_tables
-    from datafusion_sqlgen_spark.workloads import build_queries
+    from datafusion_sqlgen_spark.workloads import build_queries, headline
 
     spark = get_spark(app_name="dsq-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -519,12 +237,13 @@ def main() -> None:
             tables[name].count()
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-    # test hook: comma-separated subset of HEADLINE (contract tests run
-    # one query at sf0.001 to check the stdout protocol end-to-end)
+    # test hook: comma-separated subset of the headline (contract tests
+    # run one query at sf0.001 to check the stdout protocol end-to-end)
+    timed = headline()
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if only:
         wanted = set(only.split(","))
-        unknown = wanted - set(HEADLINE)
+        unknown = wanted - set(timed)
         if unknown:
             # fail BEFORE Spark warmup: a typo'd name would otherwise
             # surface minutes later as statistics.median([]) on an
@@ -533,14 +252,12 @@ def main() -> None:
                 f"SPARK_GRAFT_BENCH_QUERIES names not in HEADLINE: "
                 f"{sorted(unknown)}"
             )
-        headline = [n for n in HEADLINE if n in wanted]
-    else:
-        headline = HEADLINE
+        timed = [n for n in timed if n in wanted]
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     spreads: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
-    for name in headline:
+    for name in timed:
         q = queries[name]
 
         def run_once() -> float:

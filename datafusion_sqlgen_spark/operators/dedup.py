@@ -683,15 +683,6 @@ def canonical_dedup(
     )
 
 
-def canonical_dedup_oracle(table: str = "documents") -> str:
-    return f"""
-    SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS canon_md5,
-           min(doc_id) AS keep_id, count(*) AS n_copies
-    FROM {table}
-    GROUP BY 1
-    """
-
-
 def materialize_dedup(
     df: DataFrame,
     text_col: str = "text",

@@ -471,28 +471,6 @@ def chunk_documents(
     )
 
 
-def chunk_documents_oracle(
-    table: str = "documents",
-    where: str = "",
-    size: int = 32,
-    stride: int = 24,
-) -> str:
-    w = f"WHERE {where}" if where else ""
-    # unnest(range(...)) rather than a lateral generate_series: DuckDB's
-    # generate_series table function cannot take lateral column params
-    return f"""
-    SELECT doc_id,
-           CAST((start - 1) / {stride} AS INT) AS chunk_idx,
-           array_to_string(list_slice(ws, start, start + {size} - 1), ' ') AS chunk,
-           CAST(len(list_slice(ws, start, start + {size} - 1)) AS INT) AS n_words
-    FROM (
-        SELECT doc_id, ws,
-               unnest(range(1, greatest(len(ws), 1) + 1, {stride})) AS start
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM {table} {w}) t0
-    ) t
-    """
-
-
 def pack_sequences(
     df: DataFrame,
     budget: int = 2048,

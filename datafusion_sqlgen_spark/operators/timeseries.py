@@ -149,29 +149,6 @@ def ohlc_resample(
     )
 
 
-def ohlc_resample_oracle(
-    table: str = "events",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    key_col: str = "event_type",
-    bucket: str = "hour",
-) -> str:
-    """DuckDB twin: arg_min/arg_max are min_by/max_by. Ties on the
-    timestamp are impossible per (bucket, key) in the driver data
-    (checked); with ties both engines would pick arbitrarily."""
-    return f"""
-    SELECT CAST(date_trunc('{bucket}', {ts_col}) AS TIMESTAMP) AS bucket,
-           {key_col},
-           round(arg_min({value_col}, {ts_col}), 2) AS open,
-           round(max({value_col}), 2) AS high,
-           round(min({value_col}), 2) AS low,
-           round(arg_max({value_col}, {ts_col}), 2) AS close,
-           count(*) AS n
-    FROM {table}
-    GROUP BY 1, 2
-    """
-
-
 def sessionize(
     df: "DataFrame",
     key_col: str = "user_id",

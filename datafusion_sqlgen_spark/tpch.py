@@ -10,11 +10,12 @@ plan shape — the thing being tested: join topology, correlated subqueries,
 HAVING-with-subquery, CTE + scalar max, left-join distributions.
 
 Every query is a single Plan: ``to_df`` executes DataFrame-side,
-``to_sql('duckdb')`` is the oracle, ``to_sql('spark')`` the dual-render
-check. Scale notes per query live in the comments: at 100 TB the join
-order here keeps dimensions broadcast-able and fact-to-fact joins keyed on
-the natural distribution keys (orderkey/partkey/suppkey), so Catalyst's
-CBO/AQE picks broadcast or shuffled-hash joins without repartition hints.
+``to_sql('spark')`` is the dual-render check, and the oracle is the
+hand-written DuckDB SQL declared next to it. Scale notes per query
+live in the comments: at 100 TB the join order here keeps dimensions
+broadcast-able and fact-to-fact joins keyed on the natural distribution
+keys (orderkey/partkey/suppkey), so Catalyst's CBO/AQE picks broadcast
+or shuffled-hash joins without repartition hints.
 """
 
 from __future__ import annotations
@@ -25,7 +26,8 @@ from datafusion_sqlgen_spark.expressions.core import (
     InSubquery,
     ScalarSubquery,
 )
-from datafusion_sqlgen_spark.plans import Plan, With, scan
+from datafusion_sqlgen_spark.plans import With, scan
+from datafusion_sqlgen_spark.registry import Workload, planned
 
 
 def _money(e):
@@ -46,8 +48,8 @@ def _revenue():
     return _money(col("l_extendedprice")) * (lit(1) - _money(col("l_discount")))
 
 
-def tpch_workloads() -> dict[str, Plan]:
-    w: dict[str, Plan] = {}
+def tpch_workloads() -> dict[str, Workload]:
+    w: dict[str, Workload] = {}
 
     # q2 — minimum-cost supplier: the *correlated scalar-min* subquery
     # (reference intent: commented tests at
@@ -74,7 +76,7 @@ def tpch_workloads() -> dict[str, Plan]:
         .group_by()
         .agg(agg("min", col("l2.l_extendedprice")).alias("min_cost"))
     )
-    w["tpch_q2"] = (
+    w["tpch_q2"] = planned(
         scan("part")
         .join(scan("lineitem"), on=col("p_partkey") == col("l_partkey"))
         .join(scan("supplier"), on=col("l_suppkey") == col("s_suppkey"))
@@ -101,13 +103,41 @@ def tpch_workloads() -> dict[str, Plan]:
             col("s_name").asc(),
             col("p_partkey").asc(),
         )
-        .limit(100)
-    )
+        .limit(100),
+        # min-cost via a pre-aggregated per-part min table joined back in,
+        # instead of the correlated scalar subquery
+        oracle="""
+WITH eur AS (
+    SELECT l_partkey, l_suppkey, l_extendedprice
+    FROM lineitem
+    JOIN supplier ON l_suppkey = s_suppkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = 'EUROPE'
+),
+mc AS (
+    SELECT l_partkey AS pk, min(l_extendedprice) AS min_cost
+    FROM eur GROUP BY 1
+)
+SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_brand,
+       l_extendedprice AS supplycost
+FROM part
+JOIN lineitem ON p_partkey = l_partkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+JOIN mc ON mc.pk = p_partkey AND l_extendedprice = mc.min_cost
+WHERE p_size BETWEEN 10 AND 20 AND p_type = 'STANDARD'
+  AND r_name = 'EUROPE'
+ORDER BY s_acctbal DESC NULLS LAST, n_name ASC NULLS FIRST,
+         s_name ASC NULLS FIRST, p_partkey ASC NULLS FIRST
+LIMIT 100
+""")
 
     # q3 — shipping priority. customer->orders is a broadcastable dim join
     # at any scale (customer << lineitem); orders->lineitem shuffles on
     # orderkey. o_orderpriority stands in for o_shippriority.
-    w["tpch_q3"] = (
+    w["tpch_q3"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"))
         .join(scan("lineitem"), on=col("l_orderkey") == col("o_orderkey"))
@@ -123,13 +153,35 @@ def tpch_workloads() -> dict[str, Plan]:
             col("o_orderdate").asc(),
             col("l_orderkey").asc(),
         )
-        .limit(10)
-    )
+        .limit(10),
+        headline=True,
+        # revenue aggregated per order from lineitem ALONE first (decimal
+        # sums are exact, so pre-aggregation is safe), then joined out
+        oracle="""
+WITH rev AS (
+    SELECT l_orderkey,
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
+                AS DOUBLE) AS revenue
+    FROM lineitem
+    WHERE l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
+    GROUP BY l_orderkey
+)
+SELECT l_orderkey, o_orderdate, o_orderpriority, revenue
+FROM rev
+JOIN orders ON o_orderkey = l_orderkey
+JOIN customer ON c_custkey = o_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
+ORDER BY revenue DESC NULLS LAST, o_orderdate ASC NULLS FIRST,
+         l_orderkey ASC NULLS FIRST
+LIMIT 10
+""")
 
     # q4 — order priority checking: correlated EXISTS. In the original the
     # lineitem test is commitdate < receiptdate; here: shipped strictly
     # after the order month ended (a late-shipment proxy).
-    w["tpch_q4"] = (
+    w["tpch_q4"] = planned(
         scan("orders")
         .filter(
             (col("o_orderdate") >= _ts("1997-07-01"))
@@ -143,8 +195,22 @@ def tpch_workloads() -> dict[str, Plan]:
         )
         .group_by(col("o_orderpriority"))
         .agg(agg("count").alias("order_count"))
-        .sort(col("o_orderpriority").asc())
-    )
+        .sort(col("o_orderpriority").asc()),
+        # EXISTS decorrelated into a join against the distinct qualifying
+        # order keys
+        oracle="""
+WITH late AS (
+    SELECT DISTINCT l_orderkey
+    FROM lineitem JOIN orders o2 ON l_orderkey = o2.o_orderkey
+    WHERE l_shipdate > CAST(o2.o_orderdate AS DATE) + CAST(60 AS INTEGER)
+)
+SELECT o_orderpriority, count(*) AS order_count
+FROM orders JOIN late ON o_orderkey = late.l_orderkey
+WHERE o_orderdate >= TIMESTAMP '1997-07-01 00:00:00'
+  AND o_orderdate < TIMESTAMP '1997-10-01 00:00:00'
+GROUP BY o_orderpriority
+ORDER BY o_orderpriority ASC NULLS FIRST
+""")
 
     # q5 — local supplier volume: the full 6-table star (customer →
     # orders → lineitem → supplier ⋈ nation ⋈ region) with the
@@ -154,7 +220,7 @@ def tpch_workloads() -> dict[str, Plan]:
     # customer⋈orders and orders⋈lineitem joins shuffle on their natural
     # keys; the locality equality rides the supplier join — no extra
     # exchange.
-    w["tpch_q5"] = (
+    w["tpch_q5"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"))
         .join(scan("lineitem"), on=col("l_orderkey") == col("o_orderkey"))
@@ -174,13 +240,37 @@ def tpch_workloads() -> dict[str, Plan]:
         )
         .group_by(col("n_name"))
         .agg(_money_out(agg("sum", _revenue())).alias("revenue"))
-        .sort(col("revenue").desc(), col("n_name").asc())
-    )
+        .sort(col("revenue").desc(), col("n_name").asc()),
+        headline=True,
+        # q5 replayed with lineitem pre-aggregated per (orderkey, suppkey)
+        # BELOW the joins in DECIMAL (the q5ish house pattern), region/date
+        # gates applied on the flattened comma-join
+        oracle="""
+WITH li AS (
+    SELECT l_orderkey, l_suppkey,
+           sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS rev
+    FROM lineitem GROUP BY 1, 2
+)
+SELECT n_name, CAST(round(sum(rev), 2) AS DOUBLE) AS revenue
+FROM li, supplier, orders, customer, nation, region
+WHERE l_suppkey = s_suppkey
+  AND o_orderkey = l_orderkey
+  AND c_custkey = o_custkey
+  AND c_nationkey = s_nationkey
+  AND s_nationkey = n_nationkey
+  AND n_regionkey = r_regionkey
+  AND r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1997-01-01'
+  AND o_orderdate < TIMESTAMP '1998-01-01'
+GROUP BY n_name
+ORDER BY revenue DESC, n_name
+""")
 
     # q6 — forecasting revenue change: pure scan-side filter + global agg.
     # At scale this is the pushdown showcase: all four predicates reach the
     # parquet scan, the agg is a partial+final sum with no shuffle of rows.
-    w["tpch_q6"] = (
+    w["tpch_q6"] = planned(
         scan("lineitem")
         .filter(
             (col("l_shipdate") >= _ts("1997-01-01"))
@@ -193,12 +283,27 @@ def tpch_workloads() -> dict[str, Plan]:
             _money_out(
                 agg("sum", _money(col("l_extendedprice")) * _money(col("l_discount")))
             ).alias("revenue")
-        )
-    )
+        ),
+        # re-aggregated per-order partials (decimal-exact re-aggregation);
+        # BETWEEN opened into inequalities
+        oracle="""
+WITH per_order AS (
+    SELECT l_orderkey,
+           sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * CAST(l_discount AS DECIMAL(18,4))) AS s
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+      AND l_discount >= 0.05 AND l_discount <= 0.07
+      AND l_quantity < 24
+    GROUP BY l_orderkey
+)
+SELECT CAST(round(sum(s), 2) AS DOUBLE) AS revenue FROM per_order
+""")
 
     # q7 — volume shipping between two nations: the same dimension scanned
     # twice under different aliases (n1 supplier-side, n2 customer-side).
-    w["tpch_q7"] = (
+    w["tpch_q7"] = planned(
         scan("supplier")
         .join(scan("lineitem"), on=col("s_suppkey") == col("l_suppkey"))
         .join(scan("orders"), on=col("o_orderkey") == col("l_orderkey"))
@@ -219,8 +324,29 @@ def tpch_workloads() -> dict[str, Plan]:
             fn("year", col("l_shipdate")).cast("bigint").alias("l_year"),
         )
         .agg(_money_out(agg("sum", _revenue())).alias("revenue"))
-        .sort(col("supp_nation").asc(), col("cust_nation").asc(), col("l_year").asc())
-    )
+        .sort(col("supp_nation").asc(), col("cust_nation").asc(), col("l_year").asc()),
+        # nation-pair disjunction as a concatenated-pair IN list; year via
+        # strftime; customer-rooted join order
+        oracle="""
+SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+       CAST(strftime(l_shipdate, '%Y') AS BIGINT) AS l_year,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                      * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
+            AS DOUBLE) AS revenue
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON o_orderkey = l_orderkey
+JOIN supplier ON s_suppkey = l_suppkey
+JOIN nation n1 ON s_nationkey = n1.n_nationkey
+JOIN nation n2 ON c_nationkey = n2.n_nationkey
+WHERE (n1.n_name || '|' || n2.n_name)
+      IN ('NATION_12|NATION_11', 'NATION_11|NATION_12')
+  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+GROUP BY n1.n_name, n2.n_name, CAST(strftime(l_shipdate, '%Y') AS BIGINT)
+ORDER BY supp_nation ASC NULLS FIRST, cust_nation ASC NULLS FIRST,
+         l_year ASC NULLS FIRST
+""")
 
     # q8 — national market share: nested projection (all_nations) then a
     # conditional-sum ratio. The inner query is the 5-way join; the outer
@@ -246,7 +372,7 @@ def tpch_workloads() -> dict[str, Plan]:
             col("n2.n_name").alias("nation"),
         )
     )
-    w["tpch_q8"] = (
+    w["tpch_q8"] = planned(
         all_nations.group_by(col("o_year"))
         .agg(
             fn(
@@ -260,11 +386,37 @@ def tpch_workloads() -> dict[str, Plan]:
             .cast("double")
             .alias("mkt_share")
         )
-        .sort(col("o_year").asc())
-    )
+        .sort(col("o_year").asc()),
+        # same CASE numerator but the share computed from per-(year, nation)
+        # decimal partials re-aggregated — exact decimal re-aggregation
+        oracle="""
+WITH vols AS (
+    SELECT CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS o_year,
+           n2.n_name AS nation,
+           sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS v
+    FROM part
+    JOIN lineitem ON p_partkey = l_partkey
+    JOIN supplier ON s_suppkey = l_suppkey
+    JOIN orders ON o_orderkey = l_orderkey
+    JOIN customer ON c_custkey = o_custkey
+    JOIN nation n1 ON c_nationkey = n1.n_nationkey
+    JOIN region ON n1.n_regionkey = r_regionkey
+    JOIN nation n2 ON s_nationkey = n2.n_nationkey
+    WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
+      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+    GROUP BY 1, 2
+)
+SELECT o_year,
+       CAST(round(sum(CASE WHEN nation = 'NATION_5' THEN v
+                           ELSE CAST(0 AS DECIMAL(18,4)) END)
+                  / sum(v), 6) AS DOUBLE) AS mkt_share
+FROM vols GROUP BY o_year ORDER BY o_year ASC NULLS FIRST
+""")
 
     # q9 — product type profit (p_retailprice stands in for ps_supplycost).
-    w["tpch_q9"] = (
+    w["tpch_q9"] = planned(
         scan("part")
         .join(scan("lineitem"), on=col("p_partkey") == col("l_partkey"))
         .join(scan("supplier"), on=col("s_suppkey") == col("l_suppkey"))
@@ -285,11 +437,31 @@ def tpch_workloads() -> dict[str, Plan]:
                 )
             ).alias("sum_profit")
         )
-        .sort(col("nation").asc(), col("o_year").desc())
-    )
+        .sort(col("nation").asc(), col("o_year").desc()),
+        headline=True,
+        # profit as a DIFFERENCE of two exact decimal sums (sum(a-b) ==
+        # sum(a)-sum(b) in decimal); year from strftime; LIKE not contains
+        oracle="""
+SELECT n_name AS nation,
+       CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS o_year,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                      * (1 - CAST(l_discount AS DECIMAL(18,4))))
+                  - sum(CAST(p_retailprice AS DECIMAL(18,4))
+                        * CAST(l_quantity AS DECIMAL(18,4))
+                        * CAST(0.1 AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS sum_profit
+FROM part
+JOIN lineitem ON p_partkey = l_partkey
+JOIN supplier ON s_suppkey = l_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN orders ON o_orderkey = l_orderkey
+WHERE p_name LIKE '%red%'
+GROUP BY n_name, CAST(strftime(o_orderdate, '%Y') AS BIGINT)
+ORDER BY nation ASC NULLS FIRST, o_year DESC NULLS LAST
+""")
 
     # q10 — returned item reporting: top-20 customers by lost revenue.
-    w["tpch_q10"] = (
+    w["tpch_q10"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"))
         .join(scan("lineitem"), on=col("l_orderkey") == col("o_orderkey"))
@@ -308,14 +480,34 @@ def tpch_workloads() -> dict[str, Plan]:
         )
         .agg(_money_out(agg("sum", _revenue())).alias("revenue"))
         .sort(col("revenue").desc(), col("c_custkey").asc())
-        .limit(20)
-    )
+        .limit(20),
+        # revenue pre-aggregated per order from lineitem alone, then joined
+        # out and re-aggregated per customer (decimal-exact)
+        oracle="""
+WITH rev AS (
+    SELECT l_orderkey,
+           sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS r
+    FROM lineitem WHERE l_returnflag = 'R' GROUP BY l_orderkey
+)
+SELECT c_custkey, c_name, c_acctbal, n_name, c_mktsegment,
+       CAST(round(sum(r), 2) AS DOUBLE) AS revenue
+FROM rev
+JOIN orders ON o_orderkey = l_orderkey
+JOIN customer ON c_custkey = o_custkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE o_orderdate >= TIMESTAMP '1997-10-01 00:00:00'
+  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
+ORDER BY revenue DESC NULLS LAST, c_custkey ASC NULLS FIRST
+LIMIT 20
+""")
 
     # q11 — important stock (no partsupp: per-part shipped value instead).
     # HAVING compares against an uncorrelated scalar subquery — the
     # fraction is scaled so the result set stays small at every sf.
     part_value = _money(col("l_extendedprice")) * _money(col("l_quantity"))
-    w["tpch_q11"] = (
+    w["tpch_q11"] = planned(
         scan("lineitem")
         .group_by(col("l_partkey"))
         .agg(_money_out(agg("sum", part_value)).alias("value"))
@@ -331,13 +523,32 @@ def tpch_workloads() -> dict[str, Plan]:
                 )
             )
         )
-        .sort(col("value").desc(), col("l_partkey").asc())
-    )
+        .sort(col("value").desc(), col("l_partkey").asc()),
+        # HAVING-with-scalar-subquery as a filtered CTE join
+        oracle="""
+WITH vals AS (
+    SELECT l_partkey,
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                          * CAST(l_quantity AS DECIMAL(18,4))), 2)
+                AS DOUBLE) AS value
+    FROM lineitem GROUP BY l_partkey
+),
+thr AS (
+    SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                          * CAST(l_quantity AS DECIMAL(18,4)))
+                      * CAST(0.0005 AS DECIMAL(18,8)), 2) AS DOUBLE)
+           AS threshold
+    FROM lineitem
+)
+SELECT l_partkey, value FROM vals, thr
+WHERE value > threshold
+ORDER BY value DESC NULLS LAST, l_partkey ASC NULLS FIRST
+""")
 
     # q12 — shipping modes -> priority classes (no l_shipmode column):
     # conditional counts per linestatus.
     high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    w["tpch_q12"] = (
+    w["tpch_q12"] = planned(
         scan("orders")
         .join(scan("lineitem"), on=col("o_orderkey") == col("l_orderkey"))
         .filter(
@@ -349,13 +560,31 @@ def tpch_workloads() -> dict[str, Plan]:
             agg("sum", when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
             agg("sum", when(~high, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
         )
-        .sort(col("l_linestatus").asc())
-    )
+        .sort(col("l_linestatus").asc()),
+        # high/low counts as total-minus-high arithmetic over two grouped
+        # counts (no CASE)
+        oracle="""
+WITH j AS (
+    SELECT l_linestatus, o_orderpriority
+    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+),
+t AS (SELECT l_linestatus, count(*) AS total FROM j GROUP BY 1),
+h AS (SELECT l_linestatus, count(*) AS high FROM j
+      WHERE o_orderpriority = '1-URGENT' OR o_orderpriority = '2-HIGH'
+      GROUP BY 1)
+SELECT t.l_linestatus,
+       CAST(coalesce(h.high, 0) AS BIGINT) AS high_line_count,
+       CAST(t.total - coalesce(h.high, 0) AS BIGINT) AS low_line_count
+FROM t LEFT JOIN h ON t.l_linestatus = h.l_linestatus
+ORDER BY t.l_linestatus ASC NULLS FIRST
+""")
 
     # q13 — customer distribution: LEFT JOIN with an extra non-key
     # predicate in the ON clause, then a distribution over group counts
     # (Aggregate above Aggregate -> nested derived table in SQL).
-    w["tpch_q13"] = (
+    w["tpch_q13"] = planned(
         scan("customer")
         .join(
             scan("orders"),
@@ -367,11 +596,24 @@ def tpch_workloads() -> dict[str, Plan]:
         .agg(agg("count", col("o_orderkey")).alias("c_count"))
         .group_by(col("c_count"))
         .agg(agg("count").alias("custdist"))
-        .sort(col("custdist").desc(), col("c_count").desc())
-    )
+        .sort(col("custdist").desc(), col("c_count").desc()),
+        headline=True,
+        # left-join count as a correlated scalar COUNT subquery
+        oracle="""
+WITH cc AS (
+    SELECT c_custkey,
+           (SELECT count(*) FROM orders
+            WHERE o_custkey = c_custkey
+              AND o_orderpriority <> '5-LOW') AS c_count
+    FROM customer
+)
+SELECT c_count, count(*) AS custdist
+FROM cc GROUP BY c_count
+ORDER BY custdist DESC NULLS LAST, c_count DESC NULLS LAST
+""")
 
     # q14 — promotion effect: conditional-revenue percentage for one month.
-    w["tpch_q14"] = (
+    w["tpch_q14"] = planned(
         scan("lineitem")
         .join(scan("part"), on=col("l_partkey") == col("p_partkey"))
         .filter(
@@ -394,8 +636,29 @@ def tpch_workloads() -> dict[str, Plan]:
             )
             .cast("double")
             .alias("promo_revenue")
-        )
-    )
+        ),
+        # promo share from separate numerator/denominator sums (typed
+        # coalesce keeps the division operand types identical)
+        oracle="""
+WITH d AS (
+    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS den
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
+),
+n AS (
+    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS num
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE p_type = 'PROMO'
+      AND l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
+)
+SELECT CAST(round(100.0 * coalesce(num, CAST(0 AS DECIMAL(18,4))) / den,
+                  4) AS DOUBLE) AS promo_revenue
+FROM d, n
+""")
 
     # q15 — top supplier: CTE (WITH) + uncorrelated scalar MAX subquery
     # over the same CTE. Equality is on a decimal-rounded value, so the
@@ -409,33 +672,57 @@ def tpch_workloads() -> dict[str, Plan]:
         .group_by(col("l_suppkey").alias("supplier_no"))
         .agg(_money_out(agg("sum", _revenue())).alias("total_revenue"))
     )
-    w["tpch_q15"] = With(
-        ctes=(("supplier_revenue", supplier_revenue),),
-        body=(
-            scan("supplier")
-            .join(
-                scan("supplier_revenue"),
-                on=col("s_suppkey") == col("supplier_no"),
-            )
-            .filter(
-                col("total_revenue")
-                == ScalarSubquery(
-                    scan("supplier_revenue")
-                    .group_by()
-                    .agg(agg("max", col("total_revenue")).alias("mx"))
+    w["tpch_q15"] = planned(
+        With(
+            ctes=(("supplier_revenue", supplier_revenue),),
+            body=(
+                scan("supplier")
+                .join(
+                    scan("supplier_revenue"),
+                    on=col("s_suppkey") == col("supplier_no"),
                 )
-            )
-            .select(
-                col("s_suppkey"),
-                col("s_name"),
-                col("total_revenue"),
-            )
-            .sort(col("s_suppkey").asc())
+                .filter(
+                    col("total_revenue")
+                    == ScalarSubquery(
+                        scan("supplier_revenue")
+                        .group_by()
+                        .agg(agg("max", col("total_revenue")).alias("mx"))
+                    )
+                )
+                .select(
+                    col("s_suppkey"),
+                    col("s_name"),
+                    col("total_revenue"),
+                )
+                .sort(col("s_suppkey").asc())
+            ),
         ),
-    )
+        # argmax via rank()-keeps-ties window instead of the scalar max
+        # subquery
+        oracle="""
+WITH supplier_revenue AS (
+    SELECT l_suppkey AS supplier_no,
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
+                AS DOUBLE) AS total_revenue
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
+    GROUP BY l_suppkey
+),
+r AS (
+    SELECT supplier_no, total_revenue,
+           rank() OVER (ORDER BY total_revenue DESC) AS rk
+    FROM supplier_revenue
+)
+SELECT s_suppkey, s_name, total_revenue
+FROM supplier JOIN r ON s_suppkey = supplier_no
+WHERE rk = 1
+ORDER BY s_suppkey ASC NULLS FIRST
+""")
 
     # q16 — parts/supplier relationship: NOT IN subquery + count distinct.
-    w["tpch_q16"] = (
+    w["tpch_q16"] = planned(
         scan("lineitem")
         .join(scan("part"), on=col("p_partkey") == col("l_partkey"))
         .filter(
@@ -453,13 +740,28 @@ def tpch_workloads() -> dict[str, Plan]:
             col("p_brand").asc(),
             col("p_type").asc(),
             col("p_size").asc(),
-        )
-    )
+        ),
+        # NOT IN as a left-anti join; the size IN-list as modular arithmetic
+        # (1,4,...,22 are exactly == 1 mod 3 within [1, 22])
+        oracle="""
+SELECT p_brand, p_type, p_size,
+       count(DISTINCT l_suppkey) AS supplier_cnt
+FROM lineitem
+JOIN part ON p_partkey = l_partkey
+LEFT JOIN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) bad
+       ON l_suppkey = bad.s_suppkey
+WHERE NOT (p_brand = 'Brand#1')
+  AND p_size % 3 = 1 AND p_size >= 1 AND p_size <= 22
+  AND bad.s_suppkey IS NULL
+GROUP BY p_brand, p_type, p_size
+ORDER BY supplier_cnt DESC NULLS LAST, p_brand ASC NULLS FIRST,
+         p_type ASC NULLS FIRST, p_size ASC NULLS FIRST
+""")
 
     # q17 — small-quantity-order revenue: *correlated* scalar subquery
     # (per-part average). Catalyst decorrelates this into an aggregate +
     # join; DuckDB does the same — no row-at-a-time execution on either side.
-    w["tpch_q17"] = (
+    w["tpch_q17"] = planned(
         scan("lineitem")
         .join(scan("part"), on=col("p_partkey") == col("l_partkey"))
         .filter(
@@ -480,8 +782,19 @@ def tpch_workloads() -> dict[str, Plan]:
             _money_out(
                 fn("round", agg("sum", _money(col("l_extendedprice"))) / lit(7.0), lit(2))
             ).alias("avg_yearly")
-        )
-    )
+        ),
+        headline=True,
+        # correlated per-part threshold = pre-aggregated join
+        oracle="""
+WITH thr AS (SELECT l_partkey, 0.5 * avg(l_quantity) AS t
+               FROM lineitem GROUP BY l_partkey)
+SELECT CAST(round(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,4))) / 7.0,
+                        2), 2) AS DOUBLE) AS avg_yearly
+FROM lineitem l
+JOIN part p ON p.p_partkey = l.l_partkey
+JOIN thr ON thr.l_partkey = l.l_partkey
+WHERE p.p_brand = 'Brand#5' AND l.l_quantity < thr.t
+""")
 
     # q18 — large-volume customers: IN over a grouped HAVING subquery.
     big_orders = (
@@ -491,7 +804,7 @@ def tpch_workloads() -> dict[str, Plan]:
         .filter(col("qty") > 120)
         .select(col("l_orderkey"))
     )
-    w["tpch_q18"] = (
+    w["tpch_q18"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"))
         .join(scan("lineitem"), on=col("o_orderkey") == col("l_orderkey"))
@@ -505,12 +818,29 @@ def tpch_workloads() -> dict[str, Plan]:
         )
         .agg(fn("round", agg("sum", col("l_quantity")), lit(2)).alias("sum_qty"))
         .sort(col("o_totalprice").desc(), col("o_orderkey").asc())
-        .limit(100)
-    )
+        .limit(100),
+        headline=True,
+        # q18's IN-over-HAVING decorrelated by hand to a plain join against
+        # the pre-aggregated qty table (unique keys by construction)
+        oracle="""
+WITH big AS (
+    SELECT l_orderkey
+    FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 120
+)
+SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+       round(sum(l_quantity), 2) AS sum_qty
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN big ON big.l_orderkey = o_orderkey
+JOIN lineitem ON o_orderkey = lineitem.l_orderkey
+GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+ORDER BY o_totalprice DESC, o_orderkey ASC
+LIMIT 100
+""")
 
     # q19 — discounted revenue: disjunction of conjunctive brand/size/qty
     # bands — one join, one OR-of-ANDs predicate, no subqueries.
-    w["tpch_q19"] = (
+    w["tpch_q19"] = planned(
         scan("lineitem")
         .join(scan("part"), on=col("p_partkey") == col("l_partkey"))
         .filter(
@@ -531,8 +861,35 @@ def tpch_workloads() -> dict[str, Plan]:
             )
         )
         .group_by()
-        .agg(_money_out(agg("sum", _revenue())).alias("revenue"))
-    )
+        .agg(_money_out(agg("sum", _revenue())).alias("revenue")),
+        # the OR-of-AND branches are brand-disjoint: total = exact decimal
+        # sum of three branch sums
+        oracle="""
+WITH b1 AS (
+    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS s
+    FROM lineitem JOIN part ON p_partkey = l_partkey
+    WHERE p_brand = 'Brand#1' AND l_quantity >= 1 AND l_quantity <= 11
+      AND p_size >= 1 AND p_size <= 5
+),
+b2 AS (
+    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS s
+    FROM lineitem JOIN part ON p_partkey = l_partkey
+    WHERE p_brand = 'Brand#10' AND l_quantity >= 10 AND l_quantity <= 20
+      AND p_size >= 1 AND p_size <= 10
+),
+b3 AS (
+    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS s
+    FROM lineitem JOIN part ON p_partkey = l_partkey
+    WHERE p_brand = 'Brand#20' AND l_quantity >= 20 AND l_quantity <= 30
+      AND p_size >= 1 AND p_size <= 15
+)
+SELECT CAST(round(coalesce(b1.s, 0) + coalesce(b2.s, 0)
+                  + coalesce(b3.s, 0), 2) AS DOUBLE) AS revenue
+FROM b1, b2, b3
+""")
 
     # q20 — suppliers with excess shipped quantity of 'red' parts:
     # IN over (join -> group -> having) subquery.
@@ -545,20 +902,33 @@ def tpch_workloads() -> dict[str, Plan]:
         .filter(col("qty") > 100)
         .select(col("l_suppkey"))
     )
-    w["tpch_q20"] = (
+    w["tpch_q20"] = planned(
         scan("supplier")
         .join(scan("nation"), on=col("s_nationkey") == col("n_nationkey"))
         .filter(InSubquery(col("s_suppkey"), red_heavy_suppliers))
         .select(col("s_name"), col("n_name"))
-        .sort(col("s_name").asc())
-    )
+        .sort(col("s_name").asc()),
+        # q20's IN-over-(join->group->having) as a correlated EXISTS with
+        # HAVING — the opposite decorrelation direction from the IR render
+        oracle="""
+SELECT s_name, n_name
+FROM supplier JOIN nation ON s_nationkey = n_nationkey
+WHERE EXISTS (
+    SELECT 1
+    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE contains(p.p_name, 'red') AND l.l_suppkey = s_suppkey
+    GROUP BY l.l_suppkey
+    HAVING sum(l.l_quantity) > 100
+)
+ORDER BY s_name ASC
+""")
 
     # q21 — suppliers who kept orders waiting: EXISTS + NOT EXISTS, both
     # correlated, the NOT EXISTS with a non-equi correlated predicate
     # (l3.l_shipdate > l1.l_shipdate). l_shipdate > o_orderdate + 60 days
     # stands in for receiptdate > commitdate.
     l1, l2, l3 = (scan("lineitem").alias(a) for a in ("l1", "l2", "l3"))
-    w["tpch_q21"] = (
+    w["tpch_q21"] = planned(
         scan("supplier")
         .join(l1, on=col("s_suppkey") == col("l1.l_suppkey"))
         .join(scan("orders"), on=col("o_orderkey") == col("l1.l_orderkey"))
@@ -584,8 +954,29 @@ def tpch_workloads() -> dict[str, Plan]:
         .group_by(col("s_name"))
         .agg(agg("count").alias("numwait"))
         .sort(col("numwait").desc(), col("s_name").asc())
-        .limit(100)
-    )
+        .limit(100),
+        # hand-phrased EXISTS/NOT EXISTS (aliases and predicates authored
+        # independently of the renderer's subquery emission)
+        oracle="""
+SELECT s.s_name AS s_name, count(*) AS numwait
+FROM supplier s
+JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
+JOIN orders o ON o.o_orderkey = l1.l_orderkey
+JOIN nation n ON n.n_nationkey = s.s_nationkey
+WHERE o.o_orderstatus = 'F'
+  AND n.n_name = 'NATION_3'
+  AND l1.l_shipdate > CAST(o.o_orderdate AS DATE) + 60
+  AND EXISTS (SELECT 1 FROM lineitem l2
+               WHERE l2.l_orderkey = l1.l_orderkey
+                 AND l2.l_suppkey <> l1.l_suppkey)
+  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                   WHERE l3.l_orderkey = l1.l_orderkey
+                     AND l3.l_suppkey <> l1.l_suppkey
+                     AND l3.l_shipdate > l1.l_shipdate)
+GROUP BY s.s_name
+ORDER BY numwait DESC, s_name ASC
+LIMIT 100
+""")
 
     # q22 — global sales opportunity: the customer id's last digit
     # (c_name 'Customer#000000123') stands in for the phone country code;
@@ -593,7 +984,7 @@ def tpch_workloads() -> dict[str, Plan]:
     # has *some* order in this data, so "no recent order" is the dormancy
     # test instead of "no order ever".
     cntrycode = fn("right", col("c_name"), lit(1))
-    w["tpch_q22"] = (
+    w["tpch_q22"] = planned(
         scan("customer")
         .filter(
             cntrycode.isin("1", "2", "3", "4")
@@ -624,7 +1015,33 @@ def tpch_workloads() -> dict[str, Plan]:
             agg("count").alias("numcust"),
             _money_out(agg("sum", _money(col("c_acctbal")))).alias("totacctbal"),
         )
-        .sort(col("cntrycode").asc())
-    )
+        .sort(col("cntrycode").asc()),
+        # q22's NOT EXISTS as a LEFT JOIN .. IS NULL anti join, and the
+        # correlated scalar avg as an uncorrelated CTE cross join
+        oracle="""
+WITH eligible AS (
+    SELECT c_custkey, c_acctbal, right(c_name, 1) AS cntrycode
+    FROM customer
+    WHERE right(c_name, 1) IN ('1', '2', '3', '4')
+),
+avg_bal AS (
+    SELECT round(avg(c_acctbal), 4) AS a
+    FROM customer
+    WHERE c_acctbal > 0.0 AND right(c_name, 1) IN ('1', '2', '3', '4')
+),
+recent AS (
+    SELECT DISTINCT o_custkey FROM orders
+    WHERE o_orderdate >= TIMESTAMP '2001-01-01'
+)
+SELECT cntrycode, count(*) AS numcust,
+       CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS totacctbal
+FROM eligible e
+CROSS JOIN avg_bal
+LEFT JOIN recent r ON r.o_custkey = e.c_custkey
+WHERE e.c_acctbal > avg_bal.a AND r.o_custkey IS NULL
+GROUP BY cntrycode
+ORDER BY cntrycode ASC
+""")
 
     return w

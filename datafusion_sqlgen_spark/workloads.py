@@ -1,16 +1,20 @@
 """The query catalog: every operator from SURVEY.md §2 as a named,
 oracle-checked workload.
 
-Two kinds of entries:
+Each workload is declared once, as a ``registry.Workload`` record: how
+Spark builds it, the DuckDB SQL that checks it, and whether the bench
+headline times it. Two kinds:
 
-* **IR workloads** — built with the plan/expression IR; the Spark side
-  executes ``plan.to_df(spark)`` and the oracle is *generated* from the
-  same IR via ``plan.to_sql("duckdb")``. One definition, two engines —
-  the reference's plan→SQL trick as an executable invariant.
+* **Plan workloads** — built with the plan/expression IR; the Spark side
+  executes ``plan.to_df(spark)``. The oracle is hand-written in a
+  deliberately different formulation from ``plan.to_sql("duckdb")``, so
+  a rendering bug shared by both dialects cannot confirm itself.
 * **Operator workloads** — the LLM-pipeline operators (dedup/similarity/
   text/as-of), whose Spark side is higher-order-function DataFrame code
-  and whose oracle is the hand-built DuckDB SQL shipped next to each
-  operator.
+  and whose oracle is DuckDB SQL shipped next to each operator.
+
+``catalog()`` holds the records in the driver-sample rotation order;
+``build_queries()`` / ``build_oracles()`` are the driver's views of it.
 
 Naming/aliasing rule (driver contract): every computed column is aliased
 identically on both sides so the driver's sorted-column value hash
@@ -23,7 +27,12 @@ between engines cannot flip the hash.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+from collections.abc import Callable, Mapping
+from functools import lru_cache
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,11 +71,12 @@ from datafusion_sqlgen_spark.functions import udfs
 from datafusion_sqlgen_spark.materialize import (
     materialize, release_session, work_dir,
 )
+from datafusion_sqlgen_spark.registry import Workload, planned
 from datafusion_sqlgen_spark.tpch import tpch_workloads
 
 
 # --------------------------------------------------------------------------
-# IR workloads: name -> Plan. Oracle SQL is generated from the same plan.
+# Plan workloads: the IR plan runs on Spark, a hand-written oracle on DuckDB
 # --------------------------------------------------------------------------
 
 def _money(e):
@@ -85,20 +95,41 @@ def _money_out(e, digits=2):
     return fn("round", e, lit(digits)).cast("double")
 
 
-def _ir_workloads() -> dict[str, Plan]:
-    w: dict[str, Plan] = {}
+# Quantified comparisons over orders: Spark runs the parser's desugar,
+# DuckDB its native quantified forms; the text is both the workload's
+# SQL and its oracle.
+_QUANTIFIED_FORMS_SQL = """
+SELECT c_custkey,
+       c_acctbal > ALL (SELECT o_totalprice AS v FROM orders
+                         WHERE o_custkey = 999999999) AS gt_all_empty,
+       c_acctbal * 100 >= ANY (SELECT o_totalprice AS v FROM orders
+                                WHERE o_orderkey % 1000 = 0) AS ge_any_mix,
+       c_acctbal < ALL (SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
+                                    ELSE o_totalprice END AS v
+                          FROM orders WHERE o_custkey < 100) AS lt_all_nulls
+FROM customer
+"""
+
+
+def _plan_workloads() -> dict[str, Workload]:
+    w: dict[str, Workload] = {}
 
     # --- the reference's live surface (SURVEY.md §2.1 ✅ rows) ---
 
     # it_works shape: scan+filter+projection (tests/select.rs:71-85)
-    w["ref_scan_filter"] = (
+    w["ref_scan_filter"] = planned(
         scan("customer")
         .filter(col("c_mktsegment") == "BUILDING")
-        .select(col("c_custkey"), col("c_name"))
-    )
+        .select(col("c_custkey"), col("c_name")),
+        headline=True,
+        # equality filter as null-guarded double negation
+        oracle="""
+SELECT c_custkey, c_name FROM customer
+WHERE NOT (c_mktsegment <> 'BUILDING') AND c_mktsegment IS NOT NULL
+""")
 
     # select_distinct_simple_4 shape: DISTINCT + CAST + arith + alias
-    w["ref_project_cast_arith"] = (
+    w["ref_project_cast_arith"] = planned(
         scan("lineitem")
         .filter(col("l_orderkey") < 200)
         .select(
@@ -106,24 +137,49 @@ def _ir_workloads() -> dict[str, Plan]:
             col("l_linenumber"),
             _money_out(_money(col("l_extendedprice")) * (lit(1) - _money(col("l_discount"))))
             .alias("net_price"),
-        )
-    )
+        ),
+        headline=True,
+        # price*(1-d) re-derived by the distributive law — exact in
+        # DECIMAL, so the two routes must agree to the last digit
+        oracle="""
+SELECT l_orderkey, l_linenumber,
+       CAST(round(CAST(l_extendedprice AS DECIMAL(18,4))
+                  - CAST(l_extendedprice AS DECIMAL(18,4))
+                    * CAST(l_discount AS DECIMAL(18,4)), 2) AS DOUBLE)
+           AS net_price
+FROM lineitem WHERE l_orderkey < 200
+""")
 
-    w["ref_distinct"] = (
-        scan("lineitem").select(col("l_returnflag"), col("l_linestatus")).distinct()
-    )
+    w["ref_distinct"] = planned(
+        scan("lineitem").select(col("l_returnflag"), col("l_linestatus")).distinct(),
+        # DISTINCT as GROUP BY
+        oracle="""
+SELECT l_returnflag, l_linestatus FROM lineitem
+GROUP BY l_returnflag, l_linestatus
+""")
 
     # explicit direction + nulls ordering (the reference drops these)
-    w["ref_sort_limit_offset"] = (
+    w["ref_sort_limit_offset"] = planned(
         scan("orders")
         .select(col("o_orderkey"), col("o_totalprice"))
         .sort(col("o_totalprice").desc(nulls_first=False), col("o_orderkey").asc())
         .offset(5)
-        .limit(20)
-    )
+        .limit(20),
+        # LIMIT/OFFSET as row_number arithmetic (rows 6..25)
+        oracle="""
+WITH r AS (
+    SELECT o_orderkey, o_totalprice,
+           row_number() OVER (ORDER BY o_totalprice DESC NULLS LAST,
+                              o_orderkey ASC NULLS FIRST) AS rn
+    FROM orders
+)
+SELECT o_orderkey, o_totalprice FROM r
+WHERE rn > 5 AND rn <= 25
+ORDER BY rn
+""")
 
     # BETWEEN + scalar functions (use_between_expression, tests/select.rs:234-249)
-    w["ref_between_scalar_fns"] = (
+    w["ref_between_scalar_fns"] = planned(
         scan("lineitem")
         .filter(col("l_quantity").between(10, 20))
         .select(
@@ -131,44 +187,80 @@ def _ir_workloads() -> dict[str, Plan]:
             col("l_linenumber"),
             fn("abs", col("l_extendedprice") * lit(-1)).alias("abs_price"),
             fn("round", fn("ln", col("l_extendedprice")), lit(6)).alias("ln_price"),
-        )
-    )
+        ),
+        # BETWEEN as double negation; abs as greatest(x, -x)
+        oracle="""
+SELECT l_orderkey, l_linenumber,
+       greatest(l_extendedprice, -l_extendedprice) AS abs_price,
+       round(ln(l_extendedprice), 6) AS ln_price
+FROM lineitem
+WHERE NOT (l_quantity < 10) AND NOT (l_quantity > 20)
+""")
 
     # IS [NOT] DISTINCT FROM on a no-FROM relation (tests/select.rs:199-231)
-    w["ref_null_safe_cmp"] = EmptyRelation().select(
-        IsDistinctFrom(lit(1), lit(None)).alias("a"),
-        IsDistinctFrom(lit(None), lit(None)).alias("b"),
-        lit(1).eq_null_safe(lit(1)).alias("c"),
-        lit("x").eq_null_safe(lit(None)).alias("d"),
-    )
+    w["ref_null_safe_cmp"] = planned(
+        EmptyRelation().select(
+            IsDistinctFrom(lit(1), lit(None)).alias("a"),
+            IsDistinctFrom(lit(None), lit(None)).alias("b"),
+            lit(1).eq_null_safe(lit(1)).alias("c"),
+            lit("x").eq_null_safe(lit(None)).alias("d"),
+        ),
+        # three-valued IS [NOT] DISTINCT FROM truth table folded by hand
+        oracle="""
+SELECT TRUE AS a, FALSE AS b, TRUE AS c, FALSE AS d
+""")
 
     # 1-based array indexing (query_get_indexed_field, tests/select.rs:252-281)
-    w["ref_array_index"] = (
+    w["ref_array_index"] = planned(
         scan("embeddings")
         .filter(col("vec_id") < 100)
         .select(
             col("vec_id"),
             fn("round", col("embedding")[1].cast("double"), lit(6)).alias("dim1"),
             fn("round", col("embedding")[64].cast("double"), lit(6)).alias("dim64"),
-        )
-    )
+        ),
+        # array indexing replayed through unnest + subscripts + pick-outs
+        oracle="""
+SELECT vec_id,
+       round(CAST(max(CASE WHEN i = 1 THEN x END) AS DOUBLE), 6) AS dim1,
+       round(CAST(max(CASE WHEN i = 64 THEN x END) AS DOUBLE), 6) AS dim64
+FROM (SELECT vec_id, unnest(embedding) AS x,
+             generate_subscripts(embedding, 1) AS i
+      FROM embeddings WHERE vec_id < 100) u
+GROUP BY vec_id
+""")
 
     # stacked filters AND-merge + stacked projections nest (§2.4.6 fix)
-    w["ref_nested_slots"] = (
+    w["ref_nested_slots"] = planned(
         scan("customer")
-        .select(col("c_custkey"), (_money(col("c_acctbal")) * 2).alias("bal2"), col("c_mktsegment"))
+        .select(col("c_custkey"), (_money(col("c_acctbal")) * 2).alias("bal2"),
+                col("c_mktsegment"))
         .filter(col("bal2") > 5000)
         .filter(col("c_mktsegment") != "BUILDING")
-        .select(col("c_custkey"), _money_out(col("bal2")).alias("bal2"))
-    )
+        .select(col("c_custkey"), _money_out(col("bal2")).alias("bal2")),
+        # nested projection slots flattened away: filter and output both
+        # inline the decimal arithmetic on base columns (no subquery)
+        oracle="""
+SELECT c_custkey,
+       CAST(round(CAST(c_acctbal AS DECIMAL(18,4)) * 2, 2) AS DOUBLE)
+           AS bal2
+FROM customer
+WHERE CAST(c_acctbal AS DECIMAL(18,4)) * 2 > 5000
+  AND c_mktsegment <> 'BUILDING'
+""")
 
     # wildcard projection (reference renders `*`/`t.*` but its AST layer
     # silently drops them — SURVEY.md §2.4.7; ours round-trips them)
-    w["ref_wildcard"] = scan("region").select(star()).filter(col("r_regionkey") < 4)
+    w["ref_wildcard"] = planned(
+        scan("region").select(star()).filter(col("r_regionkey") < 4),
+        # wildcard expansion written out by hand; filter as NOT(negation)
+        oracle="""
+SELECT r_regionkey, r_name FROM region WHERE NOT (r_regionkey >= 4)
+""")
 
     # --- aspirational surface: expressions (§2.2) ---
 
-    w["expr_like_rlike_concat"] = (
+    w["expr_like_rlike_concat"] = planned(
         scan("part")
         .filter(
             col("p_type").like("%AND%")          # STANDARD
@@ -179,21 +271,42 @@ def _ir_workloads() -> dict[str, Plan]:
             col("p_partkey"),
             fn("concat", col("p_brand"), lit("/"), col("p_type")).alias("brand_type"),
             fn("upper", col("p_name")).alias("uname"),
-        )
-    )
+        ),
+        # LIKE/ILIKE/RLIKE replayed as contains/starts_with; concat as ||
+        oracle="""
+SELECT p_partkey,
+       p_brand || '/' || p_type AS brand_type,
+       ucase(p_name) AS uname
+FROM part
+WHERE contains(p_type, 'AND')
+   OR contains(lcase(p_name), 'red')
+   OR starts_with(p_name, 'blue b')
+""")
 
-    w["expr_case_in_isnull"] = scan("orders").select(
-        col("o_orderkey"),
-        when(col("o_orderstatus") == "F", "finished")
-        .when(col("o_orderstatus") == "O", "open")
-        .otherwise("partial")
-        .alias("status_label"),
-        col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("is_hot"),
-        col("o_totalprice").is_not_null().alias("has_price"),
-    )
+    w["expr_case_in_isnull"] = planned(
+        scan("orders").select(
+            col("o_orderkey"),
+            when(col("o_orderstatus") == "F", "finished")
+            .when(col("o_orderstatus") == "O", "open")
+            .otherwise("partial")
+            .alias("status_label"),
+            col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("is_hot"),
+            col("o_totalprice").is_not_null().alias("has_price"),
+        ),
+        # CASE as a VALUES lookup; IN as OR-equality; IS NOT NULL negated
+        oracle="""
+SELECT o.o_orderkey,
+       coalesce(m.lbl, 'partial') AS status_label,
+       (o.o_orderpriority = '1-URGENT'
+        OR o.o_orderpriority = '2-HIGH') AS is_hot,
+       NOT (o.o_totalprice IS NULL) AS has_price
+FROM orders o
+LEFT JOIN (VALUES ('F', 'finished'), ('O', 'open')) AS m(st, lbl)
+       ON m.st = o.o_orderstatus
+""")
 
     # bitwise &, |, ^ (DuckDB renders ^ as xor()) and unary NOT / -
-    w["expr_bitwise_unary"] = (
+    w["expr_bitwise_unary"] = planned(
         scan("nation")
         .select(
             col("n_nationkey"),
@@ -202,12 +315,25 @@ def _ir_workloads() -> dict[str, Plan]:
             col("n_nationkey").bitwise_xor(5).alias("xor5"),
             (-col("n_nationkey")).alias("neg"),
             (~(col("n_nationkey") > 10)).alias("not_gt10"),
-        )
-    )
+        ),
+        # every bitwise op replayed as modular arithmetic (valid for the
+        # non-negative key domain): &3 = %4, |8 and xor5 from bit
+        # decomposition, NOT > as <=
+        oracle="""
+SELECT n_nationkey,
+       n_nationkey % 4 AS and3,
+       n_nationkey + 8 * (1 - ((n_nationkey // 8) % 2)) AS or8,
+       n_nationkey + 5
+           - 2 * ((n_nationkey % 2) + 4 * ((n_nationkey // 4) % 2))
+           AS xor5,
+       0 - n_nationkey AS neg,
+       n_nationkey <= 10 AS not_gt10
+FROM nation
+""")
 
     # struct build + field access (reference documents struct keys only in
     # commented tests, tests/select.rs:418-445)
-    w["expr_struct_field"] = (
+    w["expr_struct_field"] = planned(
         scan("customer")
         .filter(col("c_custkey") < 100)
         .select(
@@ -216,20 +342,38 @@ def _ir_workloads() -> dict[str, Plan]:
                lit("nk"), col("c_nationkey")).field("seg").alias("seg"),
             fn("named_struct", lit("seg"), col("c_mktsegment"),
                lit("nk"), col("c_nationkey")).field("nk").cast("int").alias("nk"),
-        )
-    )
+        ),
+        # struct pack-then-extract is the identity on the base columns
+        oracle="""
+SELECT c_custkey, c_mktsegment AS seg, CAST(c_nationkey AS INTEGER) AS nk
+FROM customer WHERE c_custkey < 100
+""")
 
-    w["expr_string_funcs"] = scan("part").select(
-        col("p_partkey"),
-        fn("lower", col("p_name")).alias("lname"),
-        fn("length", col("p_name")).cast("bigint").alias("name_len"),
-        fn("substr", col("p_brand"), lit(1), lit(6)).alias("brand6"),
-        fn("replace", col("p_type"), lit(" "), lit("_")).alias("type_snake"),
-        fn("lpad", col("p_size").cast("string"), lit(3), lit("0")).alias("size_pad"),
-        fn("reverse", col("p_brand")).alias("brand_rev"),
-    )
+    w["expr_string_funcs"] = planned(
+        scan("part").select(
+            col("p_partkey"),
+            fn("lower", col("p_name")).alias("lname"),
+            fn("length", col("p_name")).cast("bigint").alias("name_len"),
+            fn("substr", col("p_brand"), lit(1), lit(6)).alias("brand6"),
+            fn("replace", col("p_type"), lit(" "), lit("_")).alias("type_snake"),
+            fn("lpad", col("p_size").cast("string"), lit(3), lit("0")).alias("size_pad"),
+            fn("reverse", col("p_brand")).alias("brand_rev"),
+        ),
+        # every string function replayed through a different one: lower
+        # via lcase, length via len, substr via left, replace via global
+        # regexp, lpad via printf
+        oracle="""
+SELECT p_partkey,
+       lcase(p_name) AS lname,
+       CAST(len(p_name) AS BIGINT) AS name_len,
+       left(p_brand, 6) AS brand6,
+       regexp_replace(p_type, ' ', '_', 'g') AS type_snake,
+       printf('%03d', CAST(p_size AS INTEGER)) AS size_pad,
+       reverse(p_brand) AS brand_rev
+FROM part
+""")
 
-    w["expr_math_funcs"] = (
+    w["expr_math_funcs"] = planned(
         scan("lineitem")
         .filter(col("l_orderkey") < 50)
         .select(
@@ -241,10 +385,26 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("ceil", col("l_quantity")).cast("bigint").alias("ceil_qty"),
             fn("floor", col("l_tax") * 100).cast("bigint").alias("floor_tax_pct"),
             fn("round", fn("pow", col("l_discount"), lit(2)), lit(8)).alias("disc_sq"),
-        )
-    )
+        ),
+        # ceil as -floor(-x), floor as x - x%1, pow(d,2) as d*d (IEEE-
+        # identical single rounding); transcendentals restructured via CTE
+        oracle="""
+WITH b AS (
+    SELECT l_orderkey, l_linenumber, l_extendedprice AS p,
+           l_discount AS d, l_quantity AS q, l_tax * 100 AS t100
+    FROM lineitem WHERE l_orderkey < 50
+)
+SELECT l_orderkey, l_linenumber,
+       round(sqrt(p), 6) AS sqrt_price,
+       round(exp(d), 6) AS exp_disc,
+       round(log10(p), 6) AS log10_price,
+       CAST(-floor(-q) AS BIGINT) AS ceil_qty,
+       CAST(t100 - (t100 % 1) AS BIGINT) AS floor_tax_pct,
+       round(d * d, 8) AS disc_sq
+FROM b
+""")
 
-    w["expr_date_funcs"] = (
+    w["expr_date_funcs"] = planned(
         scan("orders")
         .filter(col("o_orderkey") < 300)
         .select(
@@ -254,12 +414,24 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("day", col("o_orderdate")).cast("bigint").alias("d"),
             fn("hour", col("o_orderdate")).cast("bigint").alias("h"),
             fn("date_trunc", lit("month"), col("o_orderdate")).alias("month_start"),
-        )
-    )
+        ),
+        # date parts via strftime, month-truncation rebuilt with
+        # make_timestamp
+        oracle="""
+SELECT o_orderkey,
+       CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS y,
+       CAST(strftime(o_orderdate, '%m') AS BIGINT) AS m,
+       CAST(strftime(o_orderdate, '%d') AS BIGINT) AS d,
+       CAST(strftime(o_orderdate, '%H') AS BIGINT) AS h,
+       make_timestamp(CAST(strftime(o_orderdate, '%Y') AS INTEGER),
+                      CAST(strftime(o_orderdate, '%m') AS INTEGER),
+                      1, 0, 0, 0.0) AS month_start
+FROM orders WHERE o_orderkey < 300
+""")
 
     # array function suite over the embeddings vector column (the
     # reference's one complex type is List, 1-based — §2.2 Array index)
-    w["expr_array_funcs"] = (
+    w["expr_array_funcs"] = planned(
         scan("embeddings")
         .filter(col("vec_id") < 200)
         .select(
@@ -279,8 +451,25 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("array_position",
                fn("array", lit(7), col("vec_id") % 3, lit(7)), lit(7))
             .cast("bigint").alias("pos7"),
-        )
-    )
+        ),
+        # array probes re-derived: length/extremes/picks over unnest;
+        # slice-then-index collapsed to the direct element; the two
+        # list-literal membership probes constant-fold (2 and the leading
+        # 7 are literally present whatever vec_id is)
+        oracle="""
+SELECT vec_id,
+       CAST(max(i) AS BIGINT) AS dim,
+       round(CAST(max(x) AS DOUBLE), 5) AS vmax,
+       round(CAST(min(x) AS DOUBLE), 5) AS vmin,
+       round(CAST(max(CASE WHEN i = 3 THEN x END) AS DOUBLE), 5) AS s2,
+       round(CAST(max(CASE WHEN i = 8 THEN x END) AS DOUBLE), 5) AS e8,
+       TRUE AS has2,
+       CAST(1 AS BIGINT) AS pos7
+FROM (SELECT vec_id, unnest(embedding) AS x,
+             generate_subscripts(embedding, 1) AS i
+      FROM embeddings WHERE vec_id < 200) u
+GROUP BY vec_id
+""")
 
     # Higher-order array functions (lambda exprs): transform / filter /
     # exists / forall / aggregate / zip_with. DataFusion 10 (the
@@ -288,7 +477,7 @@ def _ir_workloads() -> dict[str, Plan]:
     # codegen'd JVM expressions — the fast path for array columns at
     # scale (never a Python UDF). Floats fold left-to-right in both
     # engines; round exactly once at output.
-    w["expr_higher_order"] = (
+    w["expr_higher_order"] = planned(
         scan("embeddings")
         .filter(col("vec_id") < 300)
         .select(
@@ -315,14 +504,45 @@ def _ir_workloads() -> dict[str, Plan]:
                fn("transform", col("embedding"),
                   lam("x", lambda x: x * lit(2.0)))[3].cast("double"),
                lit(5)).alias("t3"),
-        )
-    )
+        ),
+        headline=True,
+        # integer/boolean folds re-derived over unnest (exact regardless
+        # of order); the two float folds keep the rendered left-fold —
+        # the ONLY order that reproduces Spark's doubles bit-for-bit
+        oracle="""
+WITH u AS (
+    SELECT vec_id, unnest(embedding) AS x,
+           generate_subscripts(embedding, 1) AS i
+    FROM embeddings WHERE vec_id < 300
+),
+agg AS (
+    SELECT vec_id,
+           CAST(sum(CASE WHEN x > 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_pos,
+           bool_or(x > 0.45) AS has_big,
+           bool_and(x > -1) AS bounded,
+           round(CAST(max(CASE WHEN i = 3 THEN x END) AS DOUBLE)
+                 * 2.0, 5) AS t3
+    FROM u GROUP BY vec_id
+),
+folds AS (
+    SELECT vec_id,
+           round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                 embedding), (acc, x) -> acc + x), 5) AS vsum,
+           round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                 list_transform(embedding, x -> x * x)),
+                 (acc, x) -> acc + x), 5) AS dot_self
+    FROM embeddings WHERE vec_id < 300
+)
+SELECT a.vec_id, f.vsum, a.n_pos, a.has_big, a.bounded, f.dot_self, a.t3
+FROM agg a JOIN folds f ON f.vec_id = a.vec_id
+""")
 
     # Scalar function batch 3: levenshtein / printf / regexp_like /
     # width_bucket / hyperbolics / cbrt / factorial / datediff / make_date /
     # make_timestamp. DuckDB 1.0 lacks sinh/cosh/tanh and width_bucket —
     # the registry renders exp-identities and a CASE formula for the oracle.
-    w["expr_scalar_funcs3"] = (
+    w["expr_scalar_funcs3"] = planned(
         scan("lineitem")
         .filter(col("l_orderkey") < 400)
         .select(
@@ -347,13 +567,46 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("make_timestamp", lit(2020),
                ((col("l_orderkey") % lit(12)) + lit(1)).cast("int"),
                lit(3), lit(4), lit(5), lit(6.5)).alias("mts"),
-        )
-    )
+        ),
+        # levenshtein of 1-char flags is an inequality test; printf
+        # rebuilt by concat+lpad; regexp anchor as OR-equality; factorial
+        # as a lookup list; day-diff as DATE subtraction; hyperbolics
+        # share single exp() CTE values (same doubles, same ops)
+        oracle="""
+WITH b AS (
+    SELECT *, exp(l_discount) AS e1, exp(-l_discount) AS em1,
+           exp(2 * l_discount) AS e2
+    FROM lineitem WHERE l_orderkey < 400
+)
+SELECT l_orderkey,
+       CAST(l_linenumber AS BIGINT) AS line_no,
+       CAST(CASE WHEN l_returnflag = l_linestatus THEN 0 ELSE 1 END
+            AS BIGINT) AS lev,
+       l_returnflag || '-'
+           || lpad(CAST(l_orderkey % 1000 AS VARCHAR), 3, '0') AS tag,
+       (l_returnflag = 'A' OR l_returnflag = 'R') AS is_ret,
+       CAST(CASE WHEN l_extendedprice < 0 THEN 0
+                 WHEN l_extendedprice >= 100000 THEN 21
+                 ELSE CAST(floor((l_extendedprice - 0) * 20
+                                 / (100000 - 0)) AS BIGINT) + 1
+            END AS BIGINT) AS price_bkt,
+       round((e1 - em1) / 2, 9) AS sh,
+       round((e1 + em1) / 2, 9) AS ch,
+       round((e2 - 1) / (e2 + 1), 9) AS th,
+       round(cbrt(l_quantity), 9) AS cb,
+       CAST(list_extract([1, 2, 6, 24, 120, 720, 5040],
+                         CAST(l_linenumber AS INTEGER)) AS BIGINT) AS fact,
+       CAST(CAST(l_shipdate AS DATE) - DATE '1995-01-01' AS BIGINT)
+           AS days_since,
+       make_timestamp(2020, CAST((l_orderkey % 12) + 1 AS INTEGER),
+                      3, 4, 5, 6.5) AS mts
+FROM b
+""")
 
     # Array function batch 2: array_distinct / flatten / array_intersect.
     # Element order of distinct/intersect differs between engines —
     # sort_array before joining to a hashable string.
-    w["expr_array_funcs2"] = (
+    w["expr_array_funcs2"] = planned(
         scan("orders")
         .filter(col("o_orderkey") < 500)
         .select(
@@ -377,15 +630,28 @@ def _ir_workloads() -> dict[str, Plan]:
                         col("o_orderkey") % lit(4)),
                      fn("array", lit(2), lit(3), lit(9)))),
                lit(",")).alias("ixn"),
-        )
-    )
+        ),
+        # list surgeries rebuilt from scalar arithmetic: distinct-sort
+        # from a reordered construction, flatten from the flat literal,
+        # and the intersection constant-folds to '2,3' (k%4 never adds a
+        # new member and list_intersect dedups)
+        oracle="""
+SELECT o_orderkey,
+       array_to_string(list_sort(list_distinct(list_value(
+           o_orderkey % 5, 2, o_orderkey % 3, o_orderkey % 3))), ',')
+           AS dedup,
+       array_to_string(list_value(o_orderkey % 2, o_orderkey % 3, 7),
+                       ',') AS flat,
+       '2,3' AS ixn
+FROM orders WHERE o_orderkey < 500
+""")
 
     # Linear-regression aggregates + bitwise aggregates + count_if —
     # single hash aggregate, partial+final (map-side combine carries six
     # regr moments per group, not rows).
     _rx, _ry = col("l_quantity"), col("l_extendedprice")
     _bits = (col("l_orderkey") % lit(256)).cast("int")
-    w["agg_regr_bitwise"] = (
+    w["agg_regr_bitwise"] = planned(
         scan("lineitem")
         .group_by(col("l_returnflag"))
         .agg(
@@ -401,14 +667,47 @@ def _ir_workloads() -> dict[str, Plan]:
             agg("bit_or", _bits).cast("bigint").alias("k_or"),
             agg("bit_xor", _bits).cast("bigint").alias("k_xor"),
         )
-        .sort(col("l_returnflag"))
-    )
+        .sort(col("l_returnflag")),
+        headline=True,
+        # regression family recomputed from raw power sums (a third
+        # algorithm vs Spark's and DuckDB's native covariance updates), bit
+        # ops unchanged
+        oracle="""
+WITH sums AS (
+    SELECT l_returnflag,
+           count(*) AS n,
+           CAST(sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_disc,
+           sum(l_quantity) AS sx, sum(l_extendedprice) AS sy,
+           sum(l_quantity * l_quantity) AS sxx,
+           sum(l_extendedprice * l_extendedprice) AS syy,
+           sum(l_quantity * l_extendedprice) AS sxy,
+           CAST(bit_and(CAST(l_orderkey % 256 AS INT)) AS BIGINT) AS k_and,
+           CAST(bit_or(CAST(l_orderkey % 256 AS INT)) AS BIGINT) AS k_or,
+           CAST(bit_xor(CAST(l_orderkey % 256 AS INT)) AS BIGINT) AS k_xor
+    FROM lineitem
+    WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
+    GROUP BY l_returnflag
+)
+SELECT l_returnflag, n_disc,
+       round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4) AS slope,
+       round(sy / n - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * (sx / n), 4)
+           AS icept,
+       round(power(n * sxy - sx * sy, 2)
+             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2,
+       n AS n,
+       round(sx / n, 4) AS avg_x,
+       round(sy / n, 4) AS avg_y,
+       k_and, k_or, k_xor
+FROM sums
+ORDER BY l_returnflag ASC
+""")
 
     # mode() (global — the corpus-dominant language is unambiguous at
     # every SF; per-group mode risks engine-divergent tie-breaks) and
     # ordered string_agg (listagg WITHIN GROUP <-> string_agg ORDER BY);
     # the unique order key makes the concatenation deterministic.
-    w["agg_mode_global"] = (
+    w["agg_mode_global"] = planned(
         scan("documents")
         .group_by()
         .agg(
@@ -416,9 +715,23 @@ def _ir_workloads() -> dict[str, Plan]:
             agg("count_if", col("n_chars") > lit(1000))
             .cast("bigint").alias("n_long"),
             agg("count").alias("n_docs"),
-        )
-    )
-    w["agg_string_agg"] = (
+        ),
+        # mode as an explicit count ranking (exact when the mode is unique,
+        # which the driver data guarantees; ties would be engine-defined)
+        oracle="""
+WITH counts AS (
+    SELECT lang, count(*) AS c FROM documents GROUP BY lang
+),
+top AS (
+    SELECT lang FROM counts ORDER BY c DESC, lang ASC LIMIT 1
+)
+SELECT (SELECT lang FROM top) AS top_lang,
+       CAST(sum(CASE WHEN n_chars > 1000 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_long,
+       count(*) AS n_docs
+FROM documents
+""")
+    w["agg_string_agg"] = planned(
         scan("customer")
         .filter(col("c_custkey") < 150)
         .group_by(col("c_nationkey"))
@@ -426,13 +739,20 @@ def _ir_workloads() -> dict[str, Plan]:
             agg("string_agg", col("c_name"), lit(","), col("c_custkey"))
             .alias("names"),
             agg("count").alias("n"),
-        )
-    )
+        ),
+        # ordered string_agg as list(... ORDER BY) + array_to_string
+        oracle="""
+SELECT c_nationkey,
+       array_to_string(list(c_name ORDER BY c_custkey), ',') AS names,
+       count(*) AS n
+FROM customer WHERE c_custkey < 150
+GROUP BY c_nationkey
+""")
 
     # JSON path extraction over the events payload column — semi-structured
     # access is table stakes for event pipelines; NULL (not error) on
     # missing path in both engines
-    w["expr_json_extract"] = (
+    w["expr_json_extract"] = planned(
         scan("events")
         .filter(col("event_id") < 2000)
         .select(
@@ -442,13 +762,20 @@ def _ir_workloads() -> dict[str, Plan]:
             .cast("bigint")
             .alias("k_val"),
             fn("get_json_object", col("props"), lit("$.missing")).alias("absent"),
-        )
-    )
+        ),
+        # JSON path access through DuckDB's arrow operator instead of the
+        # registry's get_json_object mapping; missing key -> NULL not error
+        oracle="""
+SELECT event_id, event_type,
+       CAST(props->>'$.k' AS BIGINT) AS k_val,
+       props->>'$.missing' AS absent
+FROM events WHERE event_id < 2000
+""")
 
     # --- aggregates (§2.1 Aggregate + grouping sets) ---
 
     # TPC-H Q1 (pricing summary) — the canonical agg benchmark shape
-    w["agg_tpch_q1"] = (
+    w["agg_tpch_q1"] = planned(
         scan("lineitem")
         .filter(col("l_shipdate") <= fn("to_timestamp", lit("2024-11-01 00:00:00")))
         .group_by(col("l_returnflag"), col("l_linestatus"))
@@ -466,75 +793,252 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("round", agg("avg", col("l_discount")), lit(4)).alias("avg_disc"),
             agg("count").alias("count_order"),
         )
-        .sort(col("l_returnflag").asc(), col("l_linestatus").asc())
-    )
+        .sort(col("l_returnflag").asc(), col("l_linestatus").asc()),
+        headline=True,
+        # TPC-H Q1 via correlated scalar subqueries per distinct group —
+        # the oracle never runs a GROUP BY over the measures at all
+        oracle="""
+WITH g AS (
+    SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2024-11-01 00:00:00'
+)
+SELECT l_returnflag, l_linestatus,
+  (SELECT CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_qty,
+  (SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_base_price,
+  (SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_disc_price,
+  (SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                         * (1 - CAST(l_discount AS DECIMAL(18,4)))
+                         * (1 + CAST(l_tax AS DECIMAL(18,4)))), 2) AS DOUBLE)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_charge,
+  (SELECT round(avg(l_quantity), 4)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS avg_qty,
+  (SELECT round(avg(l_discount), 4)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS avg_disc,
+  (SELECT count(*)
+   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
+     AND li.l_linestatus = g.l_linestatus
+     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS count_order
+FROM g
+ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
+""")
 
-    w["agg_distinct"] = (
+    w["agg_distinct"] = planned(
         scan("orders")
         .group_by(col("o_orderstatus"))
         .agg(
             agg("count", col("o_custkey"), distinct=True).alias("n_cust"),
             agg("count").alias("n_orders"),
-        )
-    )
+        ),
+        # distinct counts from a pre-deduplicated subquery join instead of
+        # count(DISTINCT) inside the aggregate
+        oracle="""
+WITH d AS (
+    SELECT o_orderstatus, count(*) AS n_cust
+    FROM (SELECT DISTINCT o_orderstatus, o_custkey FROM orders)
+    GROUP BY o_orderstatus
+),
+t AS (
+    SELECT o_orderstatus, count(*) AS n_orders FROM orders GROUP BY 1
+)
+SELECT o_orderstatus, d.n_cust, t.n_orders
+FROM d JOIN t USING (o_orderstatus)
+""")
 
-    w["agg_rollup"] = (
+    w["agg_rollup"] = planned(
         scan("lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(agg("count").alias("cnt"),
-             _money_out(agg("sum", _money(col("l_quantity")))).alias("sum_qty"))
-    )
+             _money_out(agg("sum", _money(col("l_quantity")))).alias("sum_qty")),
+        headline=True,
+        # rollup = explicit union of the three grouping levels
+        oracle="""
+SELECT l_returnflag, l_linestatus, count(*) AS cnt,
+       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty
+FROM lineitem GROUP BY l_returnflag, l_linestatus
+UNION ALL
+SELECT l_returnflag, CAST(NULL AS VARCHAR), count(*),
+       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
+FROM lineitem GROUP BY l_returnflag
+UNION ALL
+SELECT CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), count(*),
+       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
+FROM lineitem
+""")
 
-    w["agg_cube"] = (
+    w["agg_cube"] = planned(
         scan("orders")
         .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(agg("count").alias("cnt"))
-    )
+        .agg(agg("count").alias("cnt")),
+        # cube = union of all four grouping levels
+        oracle="""
+SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
+FROM orders GROUP BY o_orderstatus, o_orderpriority
+UNION ALL
+SELECT o_orderstatus, CAST(NULL AS VARCHAR), count(*)
+FROM orders GROUP BY o_orderstatus
+UNION ALL
+SELECT CAST(NULL AS VARCHAR), o_orderpriority, count(*)
+FROM orders GROUP BY o_orderpriority
+UNION ALL
+SELECT CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), count(*)
+FROM orders
+""")
 
     # GROUPING() disambiguates "NULL because subtotal" from "NULL in data"
-    w["agg_rollup_grouping"] = (
+    w["agg_rollup_grouping"] = planned(
         scan("lineitem")
         .rollup(col("l_returnflag"))
         .agg(
             fn("grouping", col("l_returnflag")).cast("int").alias("is_total"),
             agg("count").alias("cnt"),
-        )
-    )
+        ),
+        # rollup + GROUPING() as the explicit two-level union
+        oracle="""
+SELECT l_returnflag, 0 AS is_total, count(*) AS cnt
+FROM lineitem GROUP BY l_returnflag
+UNION ALL
+SELECT CAST(NULL AS VARCHAR), 1, count(*) FROM lineitem
+""")
 
-    w["agg_grouping_sets"] = (
+    w["agg_grouping_sets"] = planned(
         scan("orders")
         .grouping_sets(
             [[col("o_orderstatus"), col("o_orderpriority")], [col("o_orderstatus")], []],
             col("o_orderstatus"), col("o_orderpriority"),
         )
-        .agg(agg("count").alias("cnt"))
-    )
+        .agg(agg("count").alias("cnt")),
+        # grouping sets = explicit union of exactly the requested sets
+        oracle="""
+SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
+FROM orders GROUP BY o_orderstatus, o_orderpriority
+UNION ALL
+SELECT o_orderstatus, CAST(NULL AS VARCHAR), count(*)
+FROM orders GROUP BY o_orderstatus
+UNION ALL
+SELECT CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), count(*)
+FROM orders
+""")
 
-    w["agg_stats"] = (
+    w["agg_stats"] = planned(
         scan("lineitem")
         .group_by(col("l_returnflag"))
         .agg(
             fn("round", agg("stddev_samp", col("l_quantity")), lit(4)).alias("sd_qty"),
             fn("round", agg("var_samp", col("l_discount")), lit(6)).alias("var_disc"),
-            fn("round", agg("corr", col("l_quantity"), col("l_extendedprice")), lit(4)).alias("corr_qty_price"),
+            fn("round", agg("corr", col("l_quantity"), col("l_extendedprice")), lit(4))
+            .alias("corr_qty_price"),
             agg("min", col("l_shipdate")).alias("first_ship"),
             agg("max", col("l_shipdate")).alias("last_ship"),
-        )
-    )
+        ),
+        # sample stats from raw power sums (third algorithm vs both
+        # engines' native streaming-update implementations)
+        oracle="""
+WITH sums AS (
+    SELECT l_returnflag,
+           count(*) AS n,
+           sum(l_quantity) AS sq, sum(l_quantity * l_quantity) AS sqq,
+           sum(l_discount) AS sd, sum(l_discount * l_discount) AS sdd,
+           sum(l_extendedprice) AS sp,
+           sum(l_extendedprice * l_extendedprice) AS spp,
+           sum(l_quantity * l_extendedprice) AS sqp,
+           min(l_shipdate) AS first_ship, max(l_shipdate) AS last_ship
+    FROM lineitem GROUP BY l_returnflag
+)
+SELECT l_returnflag,
+       round(sqrt((sqq - sq * sq / n) / (n - 1)), 4) AS sd_qty,
+       round((sdd - sd * sd / n) / (n - 1), 6) AS var_disc,
+       round((n * sqp - sq * sp)
+             / sqrt((n * sqq - sq * sq) * (n * spp - sp * sp)), 4)
+           AS corr_qty_price,
+       first_ship, last_ship
+FROM sums
+""")
 
-    w["agg_percentiles"] = (
+    w["agg_percentiles"] = planned(
         scan("lineitem")
         .group_by(col("l_returnflag"))
         .agg(
-            fn("round", agg("percentile_cont", col("l_quantity"), lit(0.5)), lit(4)).alias("p50_qty"),
+            fn("round", agg("percentile_cont", col("l_quantity"), lit(0.5)), lit(4))
+            .alias("p50_qty"),
             fn("round", agg("percentile_cont", col("l_extendedprice"), lit(0.95)), lit(4)).alias("p95_price"),
             fn("round", agg("median", col("l_discount")), lit(4)).alias("med_disc"),
-        )
-    )
+        ),
+        headline=True,
+        # interpolated percentiles derived from row_number arithmetic
+        # (h = 1 + (n-1)p; value = lo + frac * (hi - lo)), not the native
+        # quantile_cont the plan's DuckDB render uses
+        oracle="""
+WITH q AS (
+    SELECT l_returnflag, l_quantity AS v,
+           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS r,
+           count(*) OVER (PARTITION BY l_returnflag) AS n
+    FROM lineitem
+),
+p AS (
+    SELECT l_returnflag, l_extendedprice AS v,
+           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS r,
+           count(*) OVER (PARTITION BY l_returnflag) AS n
+    FROM lineitem
+),
+d AS (
+    SELECT l_returnflag, l_discount AS v,
+           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_discount) AS r,
+           count(*) OVER (PARTITION BY l_returnflag) AS n
+    FROM lineitem
+),
+qq AS (
+    SELECT l_returnflag,
+           round(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)
+                 + ((n - 1) * 0.5 - floor((n - 1) * 0.5))
+                   * (coalesce(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 2 THEN v END),
+                               max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END))
+                      - max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)), 4)
+               AS p50_qty
+    FROM q GROUP BY l_returnflag, n
+),
+pp AS (
+    SELECT l_returnflag,
+           round(max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1 THEN v END)
+                 + ((n - 1) * 0.95 - floor((n - 1) * 0.95))
+                   * (coalesce(max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 2 THEN v END),
+                               max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1 THEN v END))
+                      - max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1 THEN v END)), 4)
+               AS p95_price
+    FROM p GROUP BY l_returnflag, n
+),
+dd AS (
+    SELECT l_returnflag,
+           round(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)
+                 + ((n - 1) * 0.5 - floor((n - 1) * 0.5))
+                   * (coalesce(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 2 THEN v END),
+                               max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END))
+                      - max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)), 4)
+               AS med_disc
+    FROM d GROUP BY l_returnflag, n
+)
+SELECT l_returnflag, qq.p50_qty, pp.p95_price, dd.med_disc
+FROM qq JOIN pp USING (l_returnflag) JOIN dd USING (l_returnflag)
+""")
 
     # deterministic array agg: collect_list wrapped in sort_array, joined
     # to a string so the driver's value hash is structure-free
-    w["agg_collect"] = (
+    w["agg_collect"] = planned(
         scan("orders")
         .filter(col("o_custkey") < 30)
         .group_by(col("o_custkey"))
@@ -543,20 +1047,36 @@ def _ir_workloads() -> dict[str, Plan]:
                fn("sort_array", agg("collect_list", col("o_orderkey"))),
                lit(",")).alias("order_keys"),
             agg("count").alias("n"),
-        )
-    )
+        ),
+        # ordered collect via string_agg instead of sort_array(collect_list)
+        oracle="""
+SELECT o_custkey,
+       string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey)
+           AS order_keys,
+       count(*) AS n
+FROM orders WHERE o_custkey < 30
+GROUP BY o_custkey
+""")
 
-    w["agg_having"] = (
+    w["agg_having"] = planned(
         scan("orders")
         .group_by(col("o_custkey"))
         .agg(agg("count").alias("n"),
              _money_out(agg("sum", _money(col("o_totalprice")))).alias("spend"))
-        .filter(col("n") > 12)
-    )
+        .filter(col("n") > 12),
+        # HAVING as WHERE over the aggregated subquery
+        oracle="""
+SELECT o_custkey, n, spend FROM (
+    SELECT o_custkey, count(*) AS n,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
+               AS spend
+    FROM orders GROUP BY o_custkey
+) WHERE n > 12
+""")
 
     # --- joins (§2.1 Join row, all modes) ---
 
-    w["join_broadcast_dims"] = (
+    w["join_broadcast_dims"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"))
         .join(scan("nation"), on=col("c_nationkey") == col("n_nationkey"), broadcast=True)
@@ -565,60 +1085,117 @@ def _ir_workloads() -> dict[str, Plan]:
         .agg(
             _money_out(agg("sum", _money(col("o_totalprice")))).alias("revenue"),
             agg("count").alias("n_orders"),
-        )
-    )
+        ),
+        headline=True,
+        # dimension rollup with the order aggregation PUSHED BELOW the
+        # dimension joins (partial-aggregate reassociation is exact
+        # because the money sums stay DECIMAL until the final round)
+        oracle="""
+WITH po AS (
+    SELECT o_custkey,
+           sum(CAST(o_totalprice AS DECIMAL(18,4))) AS rev,
+           count(*) AS n
+    FROM orders GROUP BY o_custkey
+)
+SELECT r_name, n_name,
+       CAST(round(sum(rev), 2) AS DOUBLE) AS revenue,
+       CAST(sum(n) AS BIGINT) AS n_orders
+FROM po
+JOIN customer ON c_custkey = o_custkey
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY r_name, n_name
+""")
 
-    w["join_left"] = (
+    w["join_left"] = planned(
         scan("nation")
         .join(scan("supplier"), on=col("n_nationkey") == col("s_nationkey"), how="left")
         .group_by(col("n_name"))
-        .agg(agg("count", col("s_suppkey")).alias("n_suppliers"))
-    )
+        .agg(agg("count", col("s_suppkey")).alias("n_suppliers")),
+        # left outer as matched counts UNION zero rows for unmatched keys
+        oracle="""
+SELECT n_name, CAST(coalesce(m.c, 0) AS BIGINT) AS n_suppliers
+FROM nation
+LEFT JOIN (SELECT s_nationkey, count(*) AS c FROM supplier GROUP BY 1) m
+       ON m.s_nationkey = n_nationkey
+""")
 
-    w["join_right"] = (
+    w["join_right"] = planned(
         scan("supplier")
         .join(scan("nation"), on=col("s_nationkey") == col("n_nationkey"), how="right")
         .group_by(col("n_name"))
-        .agg(agg("count", col("s_suppkey")).alias("n_suppliers"))
-    )
+        .agg(agg("count", col("s_suppkey")).alias("n_suppliers")),
+        # right outer == the same aggregate keyed from the preserved side
+        oracle="""
+SELECT n_name, CAST(coalesce(m.c, 0) AS BIGINT) AS n_suppliers
+FROM nation
+LEFT JOIN (SELECT s_nationkey, count(*) AS c FROM supplier GROUP BY 1) m
+       ON m.s_nationkey = n_nationkey
+""")
 
-    w["join_semi"] = (
+    w["join_semi"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"), how="left_semi")
-        .select(col("c_custkey"), col("c_name"))
-    )
+        .select(col("c_custkey"), col("c_name")),
+        headline=True,
+        # semi join as EXISTS (the decorrelated twin of the join-operator form)
+        oracle="""
+SELECT c_custkey, c_name FROM customer c
+WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+""")
 
     # anti against a FILTERED right side: every customer has *some*
     # order at every sf, which made the original anti-join return 0 rows
     # — a trivially-matching correctness row. Customers with no URGENT
-    # order is non-empty and actually discriminates (round-6 hardening).
-    w["join_anti"] = (
+    # order is non-empty and actually discriminates.
+    w["join_anti"] = planned(
         scan("customer")
         .join(
             scan("orders").filter(col("o_orderpriority") == lit("1-URGENT")),
             on=col("c_custkey") == col("o_custkey"),
             how="left_anti",
         )
-        .select(col("c_custkey"), col("c_name"))
-    )
+        .select(col("c_custkey"), col("c_name")),
+        # anti join as NOT EXISTS against the filtered right side
+        oracle="""
+SELECT c_custkey, c_name FROM customer c
+WHERE NOT EXISTS (SELECT 1 FROM orders o
+                  WHERE o.o_custkey = c.c_custkey
+                    AND o.o_orderpriority = '1-URGENT')
+""")
 
-    w["join_full_outer"] = (
+    w["join_full_outer"] = planned(
         scan("customer").filter(col("c_custkey") < 50).alias("c")
         .join(
             scan("orders").filter(col("o_custkey") > 30).alias("o"),
             on=col("c_custkey") == col("o_custkey"),
             how="full",
         )
-        .select(col("c_custkey"), col("o_orderkey"))
-    )
+        .select(col("c_custkey"), col("o_orderkey")),
+        # FULL OUTER as inner + left-only + right-only union
+        oracle="""
+WITH c AS (SELECT c_custkey FROM customer WHERE c_custkey < 50),
+o AS (SELECT o_orderkey, o_custkey FROM orders WHERE o_custkey > 30)
+SELECT c.c_custkey, o.o_orderkey FROM c JOIN o ON c.c_custkey = o.o_custkey
+UNION ALL
+SELECT c.c_custkey, NULL FROM c
+WHERE NOT EXISTS (SELECT 1 FROM o WHERE o.o_custkey = c.c_custkey)
+UNION ALL
+SELECT NULL, o.o_orderkey FROM o
+WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
+""")
 
-    w["join_cross_small"] = (
+    w["join_cross_small"] = planned(
         scan("region")
         .join(scan("nation").filter(col("n_nationkey") < 3), how="cross")
-        .select(col("r_name"), col("n_name"))
-    )
+        .select(col("r_name"), col("n_name")),
+        # CROSS JOIN as an inner join whose condition touches one side
+        oracle="""
+SELECT r_name, n_name
+FROM region JOIN nation ON n_nationkey < 3
+""")
 
-    w["join_nonequi_range"] = (
+    w["join_nonequi_range"] = planned(
         scan("lineitem")
         .join(
             scan("part"),
@@ -627,11 +1204,16 @@ def _ir_workloads() -> dict[str, Plan]:
             broadcast=True,
         )
         .select(col("l_orderkey"), col("l_partkey"),
-                fn("round", col("l_extendedprice"), lit(2)).alias("price"))
-    )
+                fn("round", col("l_extendedprice"), lit(2)).alias("price")),
+        # range join spelled as join + WHERE, broadcast-free formulation
+        oracle="""
+SELECT l.l_orderkey, l.l_partkey, round(l.l_extendedprice, 2) AS price
+FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+WHERE l.l_extendedprice > p.p_retailprice * 20
+""")
 
     # TPC-H Q5-ish: local supplier volume (6-way join)
-    w["join_tpch_q5ish"] = (
+    w["join_tpch_q5ish"] = planned(
         scan("customer")
         .join(scan("orders"), on=col("c_custkey") == col("o_custkey"))
         .join(scan("lineitem"), on=col("o_orderkey") == col("l_orderkey"))
@@ -644,25 +1226,86 @@ def _ir_workloads() -> dict[str, Plan]:
             _money_out(
                agg("sum", _money(col("l_extendedprice")) * (lit(1) - _money(col("l_discount"))))
                ).alias("revenue"),
-        )
-    )
+        ),
+        headline=True,
+        # revenue pushed below the joins as a per-(order, supplier)
+        # DECIMAL partial aggregate — exact, so the reassociated total
+        # must match the flat join-then-aggregate to the last cent
+        oracle="""
+WITH li AS (
+    SELECT l_orderkey, l_suppkey,
+           sum(CAST(l_extendedprice AS DECIMAL(18,4))
+               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS rev
+    FROM lineitem GROUP BY 1, 2
+)
+SELECT n_name, CAST(round(sum(rev), 2) AS DOUBLE) AS revenue
+FROM li
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN orders ON o_orderkey = l_orderkey
+JOIN customer ON c_custkey = o_custkey AND c_nationkey = s_nationkey
+JOIN nation ON s_nationkey = n_nationkey
+GROUP BY n_name
+""")
 
     # --- set ops ---
     cust_nk = scan("customer").select(col("c_nationkey").cast("int").alias("nk"))
     supp_nk = scan("supplier").select(col("s_nationkey").cast("int").alias("nk"))
-    w["setop_union_all"] = SetOp(cust_nk, supp_nk, "union_all")
-    w["setop_union"] = SetOp(cust_nk, supp_nk, "union")
-    w["setop_intersect"] = SetOp(cust_nk.distinct(), supp_nk.distinct(), "intersect")
+    w["setop_union_all"] = planned(
+        SetOp(cust_nk, supp_nk, "union_all"),
+        headline=True,
+        # UNION ALL as bag arithmetic: per-key multiplicities from a FULL
+        # OUTER join of per-table counts, rows regenerated by unnest(range)
+        oracle="""
+WITH cc AS (SELECT c_nationkey AS nk, count(*) AS n FROM customer GROUP BY 1),
+ss AS (SELECT s_nationkey AS nk, count(*) AS n FROM supplier GROUP BY 1),
+m AS (
+    SELECT coalesce(cc.nk, ss.nk) AS nk,
+           coalesce(cc.n, 0) + coalesce(ss.n, 0) AS n
+    FROM cc FULL JOIN ss ON cc.nk = ss.nk
+)
+SELECT CAST(nk AS INTEGER) AS nk
+FROM (SELECT nk, unnest(range(n)) FROM m)
+""")
+    w["setop_union"] = planned(
+        SetOp(cust_nk, supp_nk, "union"),
+        # UNION distinct via GROUP BY over the bag union
+        oracle="""
+SELECT nk FROM (
+    SELECT CAST(c_nationkey AS INT) AS nk FROM customer
+    UNION ALL
+    SELECT CAST(s_nationkey AS INT) AS nk FROM supplier
+) GROUP BY nk
+""")
+    w["setop_intersect"] = planned(
+        SetOp(cust_nk.distinct(), supp_nk.distinct(), "intersect"),
+        # INTERSECT as EXISTS + GROUP BY (no set operator)
+        oracle="""
+SELECT CAST(c_nationkey AS INTEGER) AS nk
+FROM customer c
+WHERE EXISTS (SELECT 1 FROM supplier s
+              WHERE s.s_nationkey = c.c_nationkey)
+GROUP BY 1
+""")
     # EXCEPT against a filtered right side: suppliers cover all 25
     # nations at every sf, so the original distinct-except returned 0
     # rows — trivially matching. Nations with no negative-balance
-    # supplier is non-empty and discriminating (round-6 hardening).
+    # supplier is non-empty and discriminating.
     supp_nk_neg = (
         scan("supplier")
         .filter(col("s_acctbal") < lit(0))
         .select(col("s_nationkey").cast("int").alias("nk"))
     )
-    w["setop_except"] = SetOp(cust_nk.distinct(), supp_nk_neg.distinct(), "except")
+    w["setop_except"] = planned(
+        SetOp(cust_nk.distinct(), supp_nk_neg.distinct(), "except"),
+        # EXCEPT as NOT EXISTS + GROUP BY (no set operator)
+        oracle="""
+SELECT CAST(c_nationkey AS INTEGER) AS nk
+FROM customer c
+WHERE NOT EXISTS (SELECT 1 FROM supplier s
+                  WHERE s.s_nationkey = c.c_nationkey
+                    AND s.s_acctbal < 0)
+GROUP BY 1
+""")
     # bag semantics: multiplicity-aware intersect/except.  EXCEPT ALL
     # keeps left multiplicities beyond the right's — customers outnumber
     # suppliers ~15x per nation AT EVERY SCALE FACTOR (both tables scale
@@ -670,10 +1313,36 @@ def _ir_workloads() -> dict[str, Plan]:
     # non-empty and multiplicity-sensitive at any sf.  (Round-6 history:
     # the original supplier-minus-customer direction was always empty,
     # and a first fix capping customers at c_custkey <= 400 was again
-    # empty at sf >= ~0.04 where suppliers outnumber the capped slice —
-    # caught by the round-6 code review's data-level audit.)
-    w["setop_intersect_all"] = SetOp(cust_nk, supp_nk, "intersect_all")
-    w["setop_except_all"] = SetOp(cust_nk, supp_nk, "except_all")
+    # empty at sf >= ~0.04 where suppliers outnumber the capped slice.)
+    w["setop_intersect_all"] = planned(
+        SetOp(cust_nk, supp_nk, "intersect_all"),
+        # INTERSECT ALL as multiplicity arithmetic: least(cn, sn) repeats
+        oracle="""
+WITH c AS (SELECT CAST(c_nationkey AS INT) AS nk, count(*) AS cn
+           FROM customer GROUP BY 1),
+s AS (SELECT CAST(s_nationkey AS INT) AS nk, count(*) AS sn
+      FROM supplier GROUP BY 1),
+reps AS (
+    SELECT c.nk, least(c.cn, s.sn) AS r FROM c JOIN s USING (nk)
+)
+SELECT nk FROM (SELECT nk, unnest(range(r)) AS i FROM reps)
+""")
+    w["setop_except_all"] = planned(
+        SetOp(cust_nk, supp_nk, "except_all"),
+        # EXCEPT ALL as multiplicity arithmetic: per-key counts, left minus
+        # right, each surviving key repeated (cn - sn) times
+        oracle="""
+WITH c AS (SELECT CAST(c_nationkey AS INT) AS nk, count(*) AS cn
+           FROM customer GROUP BY 1),
+s AS (SELECT CAST(s_nationkey AS INT) AS nk, count(*) AS sn
+      FROM supplier GROUP BY 1),
+reps AS (
+    SELECT c.nk, c.cn - coalesce(s.sn, 0) AS r
+    FROM c LEFT JOIN s USING (nk)
+    WHERE c.cn - coalesce(s.sn, 0) > 0
+)
+SELECT nk FROM (SELECT nk, unnest(range(r)) AS i FROM reps)
+""")
 
     # --- CTE + subqueries ---
     rev = (
@@ -681,14 +1350,24 @@ def _ir_workloads() -> dict[str, Plan]:
         .group_by(col("o_custkey"))
         .agg(_money_out(agg("sum", _money(col("o_totalprice")))).alias("total"))
     )
-    w["cte_top_customers"] = With(
-        (("cust_rev", rev),),
-        scan("cust_rev")
-        .filter(col("total") > 200000)
-        .select(col("o_custkey"), col("total")),
-    )
+    w["cte_top_customers"] = planned(
+        With(
+            (("cust_rev", rev),),
+            scan("cust_rev")
+            .filter(col("total") > 200000)
+            .select(col("o_custkey"), col("total")),
+        ),
+        # CTE + filter = plain GROUP BY ... HAVING
+        oracle="""
+SELECT o_custkey,
+       CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS total
+FROM orders GROUP BY o_custkey
+HAVING CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
+       > 200000
+""")
 
-    w["subq_scalar_avg"] = (
+    w["subq_scalar_avg"] = planned(
         scan("orders")
         .filter(
             col("o_totalprice")
@@ -696,10 +1375,17 @@ def _ir_workloads() -> dict[str, Plan]:
                 scan("orders").group_by().agg(agg("avg", col("o_totalprice")).alias("a"))
             )
         )
-        .select(col("o_orderkey"), _money_out(_money(col("o_totalprice"))).alias("price"))
-    )
+        .select(col("o_orderkey"), _money_out(_money(col("o_totalprice"))).alias("price")),
+        # scalar-avg filter = cross-joined 1-row aggregate
+        oracle="""
+SELECT o.o_orderkey,
+       CAST(round(CAST(o.o_totalprice AS DECIMAL(18,4)), 2) AS DOUBLE)
+           AS price
+FROM orders o, (SELECT avg(o_totalprice) AS a FROM orders) t
+WHERE o.o_totalprice > t.a
+""")
 
-    w["subq_in"] = (
+    w["subq_in"] = planned(
         scan("customer")
         .filter(
             InSubquery(
@@ -709,10 +1395,16 @@ def _ir_workloads() -> dict[str, Plan]:
                 .select(col("o_custkey")),
             )
         )
-        .select(col("c_custkey"), col("c_mktsegment"))
-    )
+        .select(col("c_custkey"), col("c_mktsegment")),
+        # IN-subquery = correlated EXISTS
+        oracle="""
+SELECT c.c_custkey, c.c_mktsegment FROM customer c
+WHERE EXISTS (SELECT 1 FROM orders o
+               WHERE o.o_custkey = c.c_custkey
+                 AND o.o_totalprice > 400000)
+""")
 
-    w["subq_exists"] = (
+    w["subq_exists"] = planned(
         scan("customer")
         .filter(
             Exists(
@@ -721,11 +1413,15 @@ def _ir_workloads() -> dict[str, Plan]:
                 .select(lit(1))
             )
         )
-        .select(col("c_custkey"), col("c_name"))
-    )
+        .select(col("c_custkey"), col("c_name")),
+        # EXISTS = key-set membership
+        oracle="""
+SELECT c_custkey, c_name FROM customer
+WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
+""")
 
     # --- windows ---
-    w["win_rank_topn"] = (
+    w["win_rank_topn"] = planned(
         scan("orders")
         .select(
             col("o_orderkey"),
@@ -744,58 +1440,113 @@ def _ir_workloads() -> dict[str, Plan]:
             )
             .alias("status_rank"),
         )
-        .filter(col("rn") <= 3)
-    )
+        .filter(col("rn") <= 3),
+        headline=True,
+        # row_number/rank = correlated order-statistic counts
+        oracle="""
+SELECT * FROM (
+  SELECT o.o_orderkey, o.o_custkey,
+         CAST(round(CAST(o.o_totalprice AS DECIMAL(18,4)), 2) AS DOUBLE) AS price,
+         (SELECT count(*) FROM orders o2
+           WHERE o2.o_custkey = o.o_custkey
+             AND (o2.o_totalprice > o.o_totalprice
+                  OR (o2.o_totalprice = o.o_totalprice
+                      AND o2.o_orderkey <= o.o_orderkey))) AS rn,
+         (SELECT 1 + count(*) FROM orders o3
+           WHERE o3.o_custkey = o.o_custkey
+             AND o3.o_orderstatus < o.o_orderstatus) AS status_rank
+  FROM orders o
+) t WHERE rn <= 3
+""")
 
-    w["win_running_sum"] = scan("events").select(
-        col("event_id"),
-        col("user_id"),
-        fn("round",
-           agg("sum", col("value")).over(
-               partition_by=[col("user_id")],
-               order_by=[col("ts").asc(), col("event_id").asc()],
-               rows_between=("unbounded", 0),
-           ), lit(2)).alias("running_value"),
-    )
+    w["win_running_sum"] = planned(
+        scan("events").select(
+            col("event_id"),
+            col("user_id"),
+            fn("round",
+               agg("sum", col("value")).over(
+                   partition_by=[col("user_id")],
+                   order_by=[col("ts").asc(), col("event_id").asc()],
+                   rows_between=("unbounded", 0),
+               ), lit(2)).alias("running_value"),
+        ),
+        headline=True,
+        # hand-typed named-WINDOW forms (same frame semantics, authored
+        # independently of the renderer's OVER emission; frame addition
+        # order is preserved so float running sums stay bit-comparable)
+        oracle="""
+SELECT event_id, user_id,
+       round(sum(value) OVER w, 2) AS running_value
+FROM events
+WINDOW w AS (PARTITION BY user_id
+             ORDER BY ts ASC NULLS FIRST, event_id ASC NULLS FIRST
+             ROWS UNBOUNDED PRECEDING)
+""")
 
-    w["win_lag_lead"] = scan("events").select(
-        col("event_id"),
-        col("user_id"),
-        fn("round",
-           (col("value") - fn("lag", col("value"), lit(1)).over(
-               partition_by=[col("user_id")],
-               order_by=[col("ts").asc(), col("event_id").asc()],
-           )), lit(2)).alias("delta_prev"),
-        fn("lead", col("event_type"), lit(1)).over(
-            partition_by=[col("user_id")],
-            order_by=[col("ts").asc(), col("event_id").asc()],
-        ).alias("next_type"),
-    )
+    w["win_lag_lead"] = planned(
+        scan("events").select(
+            col("event_id"),
+            col("user_id"),
+            fn("round",
+               (col("value") - fn("lag", col("value"), lit(1)).over(
+                   partition_by=[col("user_id")],
+                   order_by=[col("ts").asc(), col("event_id").asc()],
+               )), lit(2)).alias("delta_prev"),
+            fn("lead", col("event_type"), lit(1)).over(
+                partition_by=[col("user_id")],
+                order_by=[col("ts").asc(), col("event_id").asc()],
+            ).alias("next_type"),
+        ),
+        oracle="""
+SELECT event_id, user_id,
+       round(value - lag(value) OVER w, 2) AS delta_prev,
+       lead(event_type) OVER w AS next_type
+FROM events
+WINDOW w AS (PARTITION BY user_id
+             ORDER BY ts ASC NULLS FIRST, event_id ASC NULLS FIRST)
+""")
 
-    w["win_first_last"] = scan("events").select(
-        col("event_id"),
-        col("user_id"),
-        fn("first_value", col("event_type"))
-        .over(
-            partition_by=[col("user_id")],
-            order_by=[col("ts").asc(), col("event_id").asc()],
-            rows_between=("unbounded", "unbounded"),
-        )
-        .alias("first_type"),
-        fn("last_value", col("event_type"))
-        .over(
-            partition_by=[col("user_id")],
-            order_by=[col("ts").asc(), col("event_id").asc()],
-            rows_between=("unbounded", "unbounded"),
-        )
-        .alias("last_type"),
-    )
+    w["win_first_last"] = planned(
+        scan("events").select(
+            col("event_id"),
+            col("user_id"),
+            fn("first_value", col("event_type"))
+            .over(
+                partition_by=[col("user_id")],
+                order_by=[col("ts").asc(), col("event_id").asc()],
+                rows_between=("unbounded", "unbounded"),
+            )
+            .alias("first_type"),
+            fn("last_value", col("event_type"))
+            .over(
+                partition_by=[col("user_id")],
+                order_by=[col("ts").asc(), col("event_id").asc()],
+                rows_between=("unbounded", "unbounded"),
+            )
+            .alias("last_type"),
+        ),
+        # first/last over the full frame as joins against per-user extreme
+        # rows (row_number ranking both directions), no window navigation fns
+        oracle="""
+WITH r AS (
+    SELECT event_id, user_id, event_type,
+           row_number() OVER (PARTITION BY user_id
+                              ORDER BY ts ASC, event_id ASC) AS rf,
+           row_number() OVER (PARTITION BY user_id
+                              ORDER BY ts DESC, event_id DESC) AS rl
+    FROM events
+),
+f AS (SELECT user_id, event_type AS first_type FROM r WHERE rf = 1),
+l AS (SELECT user_id, event_type AS last_type FROM r WHERE rl = 1)
+SELECT e.event_id, e.user_id, f.first_type, l.last_type
+FROM events e JOIN f USING (user_id) JOIN l USING (user_id)
+""")
 
     # IGNORE NULLS navigation: LOCF of the last click value per user —
     # Spark renders `last_value(x) IGNORE NULLS OVER`, DuckDB
     # `last_value(x IGNORE NULLS) OVER`; the Column path maps to
     # F.last(ignorenulls=True)
-    w["win_ignore_nulls_locf"] = (
+    w["win_ignore_nulls_locf"] = planned(
         scan("events")
         .filter(col("event_id") < 5000)
         .select(
@@ -811,11 +1562,29 @@ def _ir_workloads() -> dict[str, Plan]:
                    rows_between=("unbounded", 0),
                ),
                lit(4)).alias("last_click_value"),
-        )
-    )
+        ),
+        # LOCF without IGNORE NULLS: segment ids from a running count of
+        # non-null clicks, then the segment's single non-null via max()
+        oracle="""
+WITH e AS (
+    SELECT event_id, user_id, ts,
+           CASE WHEN event_type = 'click' THEN value END AS cv
+    FROM events WHERE event_id < 5000
+),
+g AS (
+    SELECT event_id, user_id, cv,
+           count(cv) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS UNBOUNDED PRECEDING) AS grp
+    FROM e
+)
+SELECT event_id, user_id,
+       round(max(cv) OVER (PARTITION BY user_id, grp), 4)
+           AS last_click_value
+FROM g
+""")
 
     # RANGE frame: value-based window over a numeric ordering key
-    w["win_range_frame"] = (
+    w["win_range_frame"] = planned(
         scan("orders")
         .filter(col("o_custkey") < 50)
         .select(
@@ -832,11 +1601,24 @@ def _ir_workloads() -> dict[str, Plan]:
                 order_by=[col("o_orderkey").asc()],
                 rows_between=("unbounded", "unbounded"),
             ).alias("second_status"),
-        )
-    )
+        ),
+        # RANGE frame + nth_value = correlated aggregates / ordered OFFSET
+        oracle="""
+SELECT o.o_orderkey, o.o_custkey,
+       round(CAST((SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,4)))
+                     FROM orders o2
+                    WHERE o2.o_custkey = o.o_custkey
+                      AND o2.o_orderkey BETWEEN o.o_orderkey - 1000
+                                            AND o.o_orderkey) AS DOUBLE),
+             2) AS near_sum,
+       (SELECT o3.o_orderstatus FROM orders o3
+         WHERE o3.o_custkey = o.o_custkey
+         ORDER BY o3.o_orderkey LIMIT 1 OFFSET 1) AS second_status
+FROM orders o WHERE o.o_custkey < 50
+""")
 
     # the remaining ranking/analytic family over one partition spec
-    w["win_analytic_suite"] = (
+    w["win_analytic_suite"] = planned(
         scan("orders")
         .filter(col("o_custkey") < 100)
         .select(
@@ -865,18 +1647,61 @@ def _ir_workloads() -> dict[str, Plan]:
                    partition_by=[col("o_custkey")],
                    order_by=[col("o_totalprice").desc(), col("o_orderkey").asc()],
                ), lit(6)).alias("cdist"),
-        )
-    )
+        ),
+        # ranking family recomputed from row_number + group-size arithmetic
+        # (exact because the ordering is a total order: no ties); ntile uses
+        # the SQL big-tiles-first rule explicitly
+        oracle="""
+WITH r AS (
+    SELECT o_orderkey, o_custkey,
+           row_number() OVER (PARTITION BY o_custkey
+               ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn,
+           count(*) OVER (PARTITION BY o_custkey) AS n
+    FROM orders WHERE o_custkey < 100
+)
+SELECT o_orderkey, o_custkey,
+       CAST(rn AS BIGINT) AS drnk,
+       CAST(CASE
+           WHEN rn <= (n % 4) * (n // 4 + 1)
+               THEN (rn - 1) // (n // 4 + 1) + 1
+           ELSE (n % 4) + ((rn - 1) - (n % 4) * (n // 4 + 1)) // (n // 4) + 1
+       END AS BIGINT) AS quartile,
+       round(CAST(rn - 1 AS DOUBLE) / (n - 1), 6) AS pct_rank,
+       round(CAST(rn AS DOUBLE) / n, 6) AS cdist
+FROM r
+""")
 
-    w["win_moving_avg"] = scan("events").select(
-        col("event_id"),
-        fn("round",
-           agg("avg", col("value")).over(
-               partition_by=[col("user_id")],
-               order_by=[col("ts").asc(), col("event_id").asc()],
-               rows_between=(-3, 0),
-           ), lit(4)).alias("avg_4"),
-    )
+    w["win_moving_avg"] = planned(
+        scan("events").select(
+            col("event_id"),
+            fn("round",
+               agg("avg", col("value")).over(
+                   partition_by=[col("user_id")],
+                   order_by=[col("ts").asc(), col("event_id").asc()],
+                   rows_between=(-3, 0),
+               ), lit(4)).alias("avg_4"),
+        ),
+        # moving average from ordered per-user arrays and list slices, not a
+        # window frame
+        oracle="""
+WITH u AS (
+    SELECT user_id,
+           list(value ORDER BY ts, event_id) AS vs,
+           list(event_id ORDER BY ts, event_id) AS ids
+    FROM events GROUP BY user_id
+),
+x AS (
+    SELECT unnest(ids) AS event_id,
+           unnest(vs) AS v,
+           generate_subscripts(ids, 1) AS i,
+           vs
+    FROM u
+)
+SELECT event_id,
+       round(list_aggregate(vs[CASE WHEN i > 3 THEN i - 3 ELSE 1 END : i],
+                            'avg'), 4) AS avg_4
+FROM x
+""")
 
     # time-based sliding window: RANGE over an INTERVAL — the value-based
     # frame is tie-safe (all rows in the trailing hour, however many),
@@ -895,16 +1720,30 @@ def _ir_workloads() -> dict[str, Plan]:
         order_by=[col("ts").asc()],
         range_between=(FrameBound(Interval(1, "HOUR")), 0),
     )
-    w["ts_sliding_1h_stats"] = scan("events").select(
-        col("event_id"),
-        col("event_type"),
-        fn("round", agg("sum", col("value").cast("decimal(18,6)")).over(**_w1h),
-           lit(2)).cast("double").alias("sum_1h"),
-        agg("count").over(**_w1h).alias("n_1h"),
-    )
+    w["ts_sliding_1h_stats"] = planned(
+        scan("events").select(
+            col("event_id"),
+            col("event_type"),
+            fn("round", agg("sum", col("value").cast("decimal(18,6)")).over(**_w1h),
+               lit(2)).cast("double").alias("sum_1h"),
+            agg("count").over(**_w1h).alias("n_1h"),
+        ),
+        # RANGE interval frame as an explicit self-join window (decimal
+        # sums are exact, so join order is irrelevant)
+        oracle="""
+SELECT a.event_id, a.event_type,
+       CAST(round(sum(CAST(b.value AS DECIMAL(18,6))), 2) AS DOUBLE)
+           AS sum_1h,
+       count(*) AS n_1h
+FROM events a
+JOIN events b
+  ON a.event_type = b.event_type
+ AND b.ts >= a.ts - INTERVAL 1 HOUR AND b.ts <= a.ts
+GROUP BY a.event_id, a.event_type
+""")
 
     # --- time-series rollup on the events table (streaming-shape, batch) ---
-    w["events_hourly_rollup"] = (
+    w["events_hourly_rollup"] = planned(
         scan("events")
         .group_by(
             fn("date_trunc", lit("hour"), col("ts")).alias("hour"),
@@ -913,10 +1752,20 @@ def _ir_workloads() -> dict[str, Plan]:
         .agg(
             agg("count").alias("n"),
             fn("round", agg("sum", col("value")), lit(2)).alias("sum_value"),
-        )
-    )
+        ),
+        headline=True,
+        # hour bucket from integer epoch arithmetic instead of date_trunc
+        oracle="""
+SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600)
+            AS TIMESTAMP) AS hour,
+       event_type,
+       CAST(sum(1) AS BIGINT) AS n,
+       round(sum(value), 2) AS sum_value
+FROM events
+GROUP BY 1, 2
+""")
 
-    w["events_sessionize_gap"] = (
+    w["events_sessionize_gap"] = planned(
         # session boundaries: gap > 30 min per user (classic sessionization
         # via window lag + cumulative sum of boundary flags)
         scan("events")
@@ -932,12 +1781,23 @@ def _ir_workloads() -> dict[str, Plan]:
                       ))) > 1800,
                 1,
             ).otherwise(0).alias("new_session"),
-        )
-    )
+        ),
+        # previous-event timestamp via a correlated tuple-ordered LIMIT 1
+        # subquery instead of lag()
+        oracle="""
+SELECT event_id, user_id,
+       CASE WHEN epoch(ts) - epoch(
+                (SELECT e2.ts FROM events e2
+                 WHERE e2.user_id = e.user_id
+                   AND (e2.ts, e2.event_id) < (e.ts, e.event_id)
+                 ORDER BY e2.ts DESC, e2.event_id DESC LIMIT 1)) > 1800
+            THEN 1 ELSE 0 END AS new_session
+FROM events e
+""")
 
     # remainder of the DataFusion-10 builtin string surface (the
     # reference passes ANY DF builtin through by name, expr.rs:76-94)
-    w["expr_string_funcs2"] = (
+    w["expr_string_funcs2"] = planned(
         scan("part")
         .filter(col("p_partkey") < 500)
         .select(
@@ -951,8 +1811,25 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("to_hex", col("p_partkey")).alias("hex_key"),
             fn("sha256", col("p_name")).alias("sha"),
             fn("btrim", col("p_type"), lit("DS")).alias("trimmed"),
-        )
-    )
+        ),
+        # every function swapped for an equivalent formulation: unicode for
+        # ascii, alphabet substr for chr, byte-length identities, list index
+        # for split_part, replace for translate, printf for to_hex,
+        # ltrim+rtrim for trim(charset)
+        oracle="""
+SELECT p_partkey,
+       unicode(p_name) AS first_byte,
+       substr('ABCDEFGHIJKLMNOPQRSTUVWXYZ',
+              CAST((p_partkey % 26) + 1 AS INTEGER), 1) AS letter,
+       CAST(strlen(p_name) * 8 AS INTEGER) AS bits,
+       CAST(strlen(p_name) AS INTEGER) AS octets,
+       coalesce(string_split(p_name, ' ')[2], '') AS second_word,
+       replace(p_brand, '#', '-') AS brand_t,
+       upper(printf('%x', p_partkey)) AS hex_key,
+       sha256(p_name) AS sha,
+       rtrim(ltrim(p_type, 'DS'), 'DS') AS trimmed
+FROM part WHERE p_partkey < 500
+""")
 
     # inline VALUES lookup joined (broadcast) to a fact table — the
     # classic tiny-dim pattern (plans.Values; DataFusion's
@@ -967,7 +1844,7 @@ def _ir_workloads() -> dict[str, Plan]:
         ),
         ("prio", "rank"),
     )
-    w["values_lookup_join"] = (
+    w["values_lookup_join"] = planned(
         scan("orders")
         .join(_prio_rank, on=col("o_orderpriority") == col("prio"),
               how="left", broadcast=False)
@@ -976,14 +1853,26 @@ def _ir_workloads() -> dict[str, Plan]:
             agg("count").alias("n_orders"),
             fn("round", agg("sum", col("o_totalprice").cast("decimal(18,4)")),
                lit(2)).cast("double").alias("total"),
-        )
-    )
+        ),
+        # VALUES lookup folded into a CASE mapping (LEFT JOIN miss == CASE
+        # ELSE NULL)
+        oracle="""
+SELECT CASE o_orderpriority
+           WHEN '1-URGENT' THEN 1 WHEN '2-HIGH' THEN 2
+           WHEN '3-MEDIUM' THEN 3 WHEN '4-NOT SPECIFIED' THEN 4
+           WHEN '5-LOW' THEN 5 END AS rank,
+       count(*) AS n_orders,
+       CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS total
+FROM orders
+GROUP BY 1
+""")
 
     # SQL-standard FILTER (WHERE ...) conditional aggregation — one pass
     # computes disjoint conditional aggregates (the k-scan UNION ALL or
     # self-join would be the anti-pattern at scale). Column path rewrites
     # to fn(CASE WHEN cond THEN arg END), SQL path renders the clause.
-    w["agg_filter_where"] = (
+    w["agg_filter_where"] = planned(
         scan("orders")
         .group_by(col("o_orderstatus"))
         .agg(
@@ -997,15 +1886,27 @@ def _ir_workloads() -> dict[str, Plan]:
             agg("max", col("o_totalprice"))
             .filtered(col("o_orderpriority") == lit("5-LOW"))
             .alias("low_max"),
-        )
-    )
+        ),
+        # FILTER (WHERE ...) as CASE-conditional aggregation
+        oracle="""
+SELECT o_orderstatus,
+       count(*) AS n,
+       CAST(sum(CASE WHEN o_totalprice > 200000 THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_big,
+       CAST(round(sum(CASE WHEN o_orderpriority = '1-URGENT'
+                           THEN CAST(o_totalprice AS DECIMAL(18,4)) END),
+                  2) AS DOUBLE) AS urgent_total,
+       max(CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END)
+           AS low_max
+FROM orders GROUP BY o_orderstatus
+""")
 
-    # round-4 registry audit: the DataFusion-10 builtin stragglers
+    # the DataFusion-10 builtin stragglers
     # (signum/trunc/initcap/digest/regexp_match/to_timestamp_* — the
     # reference forwards every BuiltinScalarFunction by name,
     # datafusion-sqlgen/src/expr.rs:76-94). Deterministic subset only;
     # now()/random() exist in the registry but have no stable oracle.
-    w["expr_scalar_funcs5"] = (
+    w["expr_scalar_funcs5"] = planned(
         scan("orders")
         .filter(col("o_orderkey") < 500)
         .select(
@@ -1026,8 +1927,34 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("to_timestamp_micros",
                col("o_orderkey").cast("bigint") * lit(86400000000))
             .alias("ts_us"),
-        )
-    )
+        ),
+        headline=True,
+        # sign/trunc as CASE arithmetic; initcap + regexp word extraction
+        # hand-constant-folded over the closed priority domain; the three
+        # epoch constructors swapped for each other (same instants)
+        oracle="""
+SELECT o_orderkey,
+       CASE WHEN o_totalprice > 150000 THEN 1.0
+            WHEN o_totalprice < 150000 THEN -1.0 ELSE 0.0 END AS sgn,
+       CASE WHEN o_totalprice >= 0 THEN floor(o_totalprice / 1000)
+            ELSE ceil(o_totalprice / 1000) END AS price_k,
+       CASE o_orderpriority
+           WHEN '1-URGENT' THEN '1-urgent' WHEN '2-HIGH' THEN '2-high'
+           WHEN '3-MEDIUM' THEN '3-medium'
+           WHEN '4-NOT SPECIFIED' THEN '4-not Specified'
+           WHEN '5-LOW' THEN '5-low' END AS prio_t,
+       sha256(o_orderpriority) AS prio_sha,
+       md5(o_orderpriority) AS prio_md5,
+       CASE o_orderpriority
+           WHEN '1-URGENT' THEN 'URGENT' WHEN '2-HIGH' THEN 'HIGH'
+           WHEN '3-MEDIUM' THEN 'MEDIUM'
+           WHEN '4-NOT SPECIFIED' THEN 'NOT,SPECIFIED'
+           WHEN '5-LOW' THEN 'LOW' END AS prio_words,
+       epoch_ms(CAST(o_orderkey * 86400 AS BIGINT) * 1000) AS ts_s,
+       CAST(to_timestamp(o_orderkey * 86400) AS TIMESTAMP) AS ts_ms,
+       CAST(to_timestamp(o_orderkey * 86400) AS TIMESTAMP) AS ts_us
+FROM orders WHERE o_orderkey < 500
+""")
 
     # recursive CTE (Spark >= 4.0 WITH RECURSIVE ≡ DuckDB): generate a
     # dense month spine by iteration, left-join monthly order revenue —
@@ -1038,26 +1965,41 @@ def _ir_workloads() -> dict[str, Plan]:
         .group_by(fn("date_trunc", lit("month"), col("o_orderdate")).alias("mo"))
         .agg(_money_out(agg("sum", _money(col("o_totalprice")))).alias("rev"))
     )
-    w["cte_recursive_month_spine"] = RecursiveWith(
-        name="month_spine",
-        columns=("m",),
-        base=EmptyRelation().select(_m0.alias("m")),
-        step=(
-            scan("month_spine")
-            .filter(col("m") < fn("to_timestamp", lit("1996-12-01 00:00:00")))
-            .select((col("m") + Interval(1, "MONTH")).alias("m"))
+    w["cte_recursive_month_spine"] = planned(
+        RecursiveWith(
+            name="month_spine",
+            columns=("m",),
+            base=EmptyRelation().select(_m0.alias("m")),
+            step=(
+                scan("month_spine")
+                .filter(col("m") < fn("to_timestamp", lit("1996-12-01 00:00:00")))
+                .select((col("m") + Interval(1, "MONTH")).alias("m"))
+            ),
+            body=(
+                scan("month_spine")
+                .join(_monthly.alias("mrev"), on=col("mo") == col("m"), how="left")
+                .select(col("m"), fn("coalesce", col("rev"), lit(0).cast("double")).alias("rev"))
+                .sort(col("m").asc())
+            ),
         ),
-        body=(
-            scan("month_spine")
-            .join(_monthly.alias("mrev"), on=col("mo") == col("m"), how="left")
-            .select(col("m"), fn("coalesce", col("rev"), lit(0).cast("double")).alias("rev"))
-            .sort(col("m").asc())
-        ),
-    )
+        headline=True,
+        # recursive spine = generate_series (inclusive stop, same months)
+        oracle="""
+SELECT m, coalesce(rev, CAST(0 AS DOUBLE)) AS rev
+FROM (SELECT CAST(g AS TIMESTAMP) AS m
+        FROM generate_series(TIMESTAMP '1995-01-01 00:00:00',
+                             TIMESTAMP '1996-12-01 00:00:00',
+                             INTERVAL 1 MONTH) t(g)) spine
+LEFT JOIN (SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS mo,
+                  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2)
+                       AS DOUBLE) AS rev
+             FROM orders GROUP BY 1) mrev ON mo = m
+ORDER BY m
+""")
 
     # scalar subquery in the SELECT list (projection side; the filter
     # side is subq_scalar_avg) — to_df falls back to generated SQL
-    w["subq_scalar_in_select"] = (
+    w["subq_scalar_in_select"] = planned(
         scan("nation")
         .select(
             col("n_nationkey"),
@@ -1074,12 +2016,21 @@ def _ir_workloads() -> dict[str, Plan]:
                 .agg(agg("count").alias("c"))
             ).alias("nation_customers"),
         )
-        .sort(col("n_nationkey").asc())
-    )
+        .sort(col("n_nationkey").asc()),
+        # scalar-in-SELECT = cross-joined total + left-join group count
+        oracle="""
+SELECT n.n_nationkey, n.n_name, t.total_customers,
+       count(c.c_custkey) AS nation_customers
+FROM nation n
+CROSS JOIN (SELECT count(*) AS total_customers FROM customer) t
+LEFT JOIN customer c ON c.c_nationkey = n.n_nationkey
+GROUP BY n.n_nationkey, n.n_name, t.total_customers
+ORDER BY n.n_nationkey
+""")
 
     # extended date parts (engine numbering aligned: Spark dayofweek is
     # Sunday=1, DuckDB Sunday=0) + TRY_CAST null-on-failure semantics
-    w["expr_date_parts_trycast"] = (
+    w["expr_date_parts_trycast"] = planned(
         scan("orders")
         .filter(col("o_orderkey") < 500)
         .select(
@@ -1091,8 +2042,22 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("last_day", col("o_orderdate")).cast("timestamp").alias("month_end"),
             col("o_orderstatus").try_cast("int").alias("bad_cast"),
             fn("concat", lit("4"), lit("2")).try_cast("int").alias("good_cast"),
-        )
-    )
+        ),
+        # date parts from strftime formatting, month end from interval
+        # arithmetic, try_cast from a regex guard
+        oracle="""
+SELECT o_orderkey,
+       CAST(strftime(o_orderdate, '%w') AS INTEGER) + 1 AS dow,
+       CAST(strftime(o_orderdate, '%j') AS INTEGER) AS doy,
+       CAST(strftime(o_orderdate, '%V') AS INTEGER) AS woy,
+       (CAST(strftime(o_orderdate, '%m') AS INTEGER) + 2) // 3 AS q,
+       CAST(CAST(date_trunc('month', o_orderdate) AS DATE)
+            + INTERVAL 1 MONTH - INTERVAL 1 DAY AS TIMESTAMP) AS month_end,
+       CASE WHEN regexp_matches(o_orderstatus, '^[+-]?[0-9]+$')
+            THEN CAST(o_orderstatus AS INTEGER) END AS bad_cast,
+       CAST(40 + 2 AS INTEGER) AS good_cast
+FROM orders WHERE o_orderkey < 500
+""")
 
     # map type end-to-end: build, extract (value-or-NULL), keys/size
     _m = fn(
@@ -1100,7 +2065,7 @@ def _ir_workloads() -> dict[str, Plan]:
         lit("st"), col("o_orderstatus"),
         lit("pri"), col("o_orderpriority"),
     )
-    w["expr_map_funcs"] = (
+    w["expr_map_funcs"] = planned(
         scan("orders")
         .filter(col("o_orderkey") < 500)
         .select(
@@ -1110,14 +2075,24 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("map_size", _m).cast("int").alias("n_entries"),
             fn("array_join", fn("map_keys", _m), lit(",")).alias("ks"),
             fn("map_contains_key", _m, lit("pri")).alias("has_pri"),
-        )
-    )
+        ),
+        # the map literal is constant-foldable by hand: every output is a
+        # direct expression over the row, no map functions at all
+        oracle="""
+SELECT o_orderkey,
+       o_orderstatus AS st,
+       CAST(NULL AS VARCHAR) AS missing,
+       CAST(2 AS INTEGER) AS n_entries,
+       'st,pri' AS ks,
+       TRUE AS has_pri
+FROM orders WHERE o_orderkey < 500
+""")
 
     # --- lateral / unnest (DataFusion Unnest plan node; absent in the
     # reference -> catch-all logical_plan.rs:200-203) ---
 
     # explode a computed array (word list), aggregate over the rows
-    w["lat_explode_words"] = (
+    w["lat_explode_words"] = planned(
         scan("documents")
         .filter(col("doc_id") < 50)
         .select(col("doc_id"), fn("split", col("text"), lit(" ")).alias("words"))
@@ -1126,11 +2101,23 @@ def _ir_workloads() -> dict[str, Plan]:
         .group_by(col("word"))
         .agg(agg("count").alias("n"))
         .sort(col("n").desc(), col("word").asc())
-        .limit(50)
-    )
+        .limit(50),
+        headline=True,
+        # tokens via regexp_extract_all of non-space runs instead of
+        # split + unnest + length filter
+        oracle="""
+SELECT word, count(*) AS n
+FROM (
+    SELECT unnest(regexp_extract_all(text, '[^ ]+')) AS word
+    FROM documents WHERE doc_id < 50
+)
+GROUP BY word
+ORDER BY n DESC NULLS LAST, word ASC NULLS FIRST
+LIMIT 50
+""")
 
     # posexplode with 0-based position over a stored float array
-    w["lat_posexplode_embedding"] = (
+    w["lat_posexplode_embedding"] = planned(
         scan("embeddings")
         .filter(col("vec_id") < 10)
         .explode(col("embedding"), "val", pos_alias="pos")
@@ -1139,13 +2126,20 @@ def _ir_workloads() -> dict[str, Plan]:
             col("pos").cast("int").alias("pos"),
             fn("round", col("val").cast("double"), lit(4)).alias("val"),
         )
-        .sort(col("vec_id").asc(), col("pos").asc())
-    )
+        .sort(col("vec_id").asc(), col("pos").asc()),
+        # positional explode as a join against an index range + list index
+        oracle="""
+SELECT vec_id, CAST(i AS INTEGER) AS pos,
+       round(CAST(embedding[CAST(i + 1 AS INTEGER)] AS DOUBLE), 4) AS val
+FROM embeddings, unnest(range(0, len(embedding))) AS t(i)
+WHERE vec_id < 10
+ORDER BY vec_id ASC NULLS FIRST, pos ASC NULLS FIRST
+""")
 
     # UNPIVOT: wide per-nation measure columns -> long (measure, val)
     # rows. Narrow flatMap, no shuffle beyond the feeding aggregate;
     # measures share DOUBLE type (UNPIVOT requires a common type).
-    w["unpivot_measures"] = (
+    w["unpivot_measures"] = planned(
         scan("customer")
         .group_by(col("c_nationkey"))
         .agg(
@@ -1159,8 +2153,23 @@ def _ir_workloads() -> dict[str, Plan]:
         )
         .unpivot(["c_nationkey"], ["m_bal", "m_cnt", "m_max"],
                  var_col="measure", value_col="val")
-        .sort(col("c_nationkey").asc(), col("measure").asc())
-    )
+        .sort(col("c_nationkey").asc(), col("measure").asc()),
+        # manual unpivot: UNION ALL of one SELECT per measure
+        oracle="""
+WITH a AS (
+    SELECT c_nationkey,
+           CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS m_bal,
+           CAST(count(*) AS DOUBLE) AS m_cnt,
+           CAST(round(max(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS m_max
+    FROM customer GROUP BY c_nationkey
+)
+SELECT c_nationkey, 'm_bal' AS measure, m_bal AS val FROM a
+UNION ALL
+SELECT c_nationkey, 'm_cnt' AS measure, m_cnt AS val FROM a
+UNION ALL
+SELECT c_nationkey, 'm_max' AS measure, m_max AS val FROM a
+ORDER BY c_nationkey ASC NULLS FIRST, measure ASC NULLS FIRST
+""")
 
     # LATERAL: per-nation top-1 customer by balance — a correlated,
     # ordered, limited subquery per outer row. Catalyst decorrelates this
@@ -1173,7 +2182,7 @@ def _ir_workloads() -> dict[str, Plan]:
         .sort(col("c_acctbal").desc(), col("c_custkey").asc())
         .limit(1)
     )
-    w["lat_topn_per_group"] = (
+    w["lat_topn_per_group"] = planned(
         scan("nation")
         .lateral(_best, "best")
         .select(
@@ -1182,8 +2191,29 @@ def _ir_workloads() -> dict[str, Plan]:
             fn("round", col("best.c_acctbal").cast("double"), lit(2))
             .alias("top_balance"),
         )
-        .sort(col("n_name").asc())
-    )
+        .sort(col("n_name").asc()),
+        headline=True,
+        # greatest-per-group via max-join + min-custkey tie-break, no
+        # LATERAL and no window
+        oracle="""
+WITH m AS (
+    SELECT c_nationkey, max(c_acctbal) AS mb FROM customer GROUP BY 1
+),
+b AS (
+    SELECT c.c_nationkey, c.c_name, c.c_acctbal, c.c_custkey
+    FROM customer c JOIN m
+      ON c.c_nationkey = m.c_nationkey AND c.c_acctbal = m.mb
+),
+best AS (
+    SELECT * FROM b
+    WHERE c_custkey = (SELECT min(b2.c_custkey) FROM b b2
+                       WHERE b2.c_nationkey = b.c_nationkey)
+)
+SELECT n_name, best.c_name AS top_customer,
+       round(CAST(best.c_acctbal AS DOUBLE), 2) AS top_balance
+FROM nation JOIN best ON n_nationkey = best.c_nationkey
+ORDER BY n_name ASC NULLS FIRST
+""")
 
     # Adapted TPC-H suite (q3-q22): the canonical multi-join / subquery /
     # CTE shapes the reference's commented-out corpus aspires to.
@@ -1195,392 +2225,852 @@ def _ir_workloads() -> dict[str, Plan]:
     # IR workload — so the parser itself sits inside the correctness gate.
     from datafusion_sqlgen_spark.parser import parse_sql
 
-    w["parsed_scan_filter_sort"] = parse_sql(
-        "SELECT c_custkey, c_name, c_acctbal FROM customer "
-        "WHERE c_mktsegment = 'BUILDING' AND c_acctbal BETWEEN 100 AND 5000 "
-        "ORDER BY c_acctbal DESC NULLS LAST, c_custkey ASC NULLS FIRST LIMIT 50"
-    )
-    w["parsed_join_agg_having"] = parse_sql(
-        "SELECT c_mktsegment, count(*) AS n_orders, "
-        "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue "
-        "FROM customer JOIN orders ON c_custkey = o_custkey "
-        "GROUP BY c_mktsegment HAVING count(*) > 10 "
-        "ORDER BY c_mktsegment ASC NULLS FIRST"
-    )
-    w["parsed_case_in_distinct"] = parse_sql(
-        "SELECT DISTINCT o_orderstatus, "
-        "CASE WHEN o_totalprice > 200000 THEN 'big' "
-        "WHEN o_totalprice > 50000 THEN 'mid' ELSE 'small' END AS bucket "
-        "FROM orders WHERE o_orderstatus IN ('F', 'O') "
-        "ORDER BY o_orderstatus ASC NULLS FIRST, bucket ASC NULLS FIRST"
-    )
-    # round 4: window + CTE SQL through the parser (the two clause
-    # families round 3's parser rejected — VERDICT r3 "What's missing" §2)
-    w["parsed_win_topn"] = parse_sql(
-        "WITH ranked AS (SELECT o_custkey, o_orderkey, o_totalprice, "
-        "row_number() OVER (PARTITION BY o_custkey "
-        "ORDER BY o_totalprice DESC NULLS LAST, o_orderkey ASC NULLS FIRST) AS rn, "
-        "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER "
-        "(PARTITION BY o_custkey), 2) AS DOUBLE) AS cust_total "
-        "FROM orders) "
-        "SELECT o_custkey, o_orderkey, o_totalprice, cust_total FROM ranked "
-        "WHERE rn = 1 AND o_custkey < 300 "
-        "ORDER BY o_custkey ASC NULLS FIRST"
-    )
-    # round-4b parser surface in one query: named WINDOW clause shared
+    w["parsed_scan_filter_sort"] = planned(
+        parse_sql(
+            "SELECT c_custkey, c_name, c_acctbal FROM customer "
+            "WHERE c_mktsegment = 'BUILDING' AND c_acctbal BETWEEN 100 AND 5000 "
+            "ORDER BY c_acctbal DESC NULLS LAST, c_custkey ASC NULLS FIRST LIMIT 50"
+        ),
+        # top-50 via row_number arithmetic instead of ORDER BY ... LIMIT
+        oracle="""
+WITH r AS (
+    SELECT c_custkey, c_name, c_acctbal,
+           row_number() OVER (ORDER BY c_acctbal DESC NULLS LAST,
+                              c_custkey ASC NULLS FIRST) AS rn
+    FROM customer
+    WHERE c_mktsegment IN ('BUILDING')
+      AND c_acctbal >= 100 AND c_acctbal <= 5000
+)
+SELECT c_custkey, c_name, c_acctbal FROM r WHERE rn <= 50
+ORDER BY rn
+""")
+    w["parsed_join_agg_having"] = planned(
+        parse_sql(
+            "SELECT c_mktsegment, count(*) AS n_orders, "
+            "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue "
+            "FROM customer JOIN orders ON c_custkey = o_custkey "
+            "GROUP BY c_mktsegment HAVING count(*) > 10 "
+            "ORDER BY c_mktsegment ASC NULLS FIRST"
+        ),
+        # HAVING as a filtered subquery; orders pre-aggregated per customer
+        # first (counts and decimal sums re-aggregate exactly)
+        oracle="""
+WITH per_cust AS (
+    SELECT o_custkey, count(*) AS n,
+           sum(CAST(o_totalprice AS DECIMAL(18,4))) AS rev
+    FROM orders GROUP BY o_custkey
+),
+seg AS (
+    SELECT c_mktsegment,
+           CAST(sum(n) AS BIGINT) AS n_orders,
+           CAST(round(sum(rev), 2) AS DOUBLE) AS revenue
+    FROM customer JOIN per_cust ON c_custkey = o_custkey
+    GROUP BY c_mktsegment
+)
+SELECT c_mktsegment, n_orders, revenue FROM seg
+WHERE n_orders > 10
+ORDER BY c_mktsegment ASC NULLS FIRST
+""")
+    w["parsed_case_in_distinct"] = planned(
+        parse_sql(
+            "SELECT DISTINCT o_orderstatus, "
+            "CASE WHEN o_totalprice > 200000 THEN 'big' "
+            "WHEN o_totalprice > 50000 THEN 'mid' ELSE 'small' END AS bucket "
+            "FROM orders WHERE o_orderstatus IN ('F', 'O') "
+            "ORDER BY o_orderstatus ASC NULLS FIRST, bucket ASC NULLS FIRST"
+        ),
+        # bucket from boolean arithmetic list-indexing, not a CASE chain;
+        # IN-list as disjunction; DISTINCT as GROUP BY
+        oracle="""
+SELECT o_orderstatus,
+       list_extract(['small', 'mid', 'big'],
+                    1 + CAST(coalesce(o_totalprice > 50000, FALSE) AS INTEGER)
+                      + CAST(coalesce(o_totalprice > 200000, FALSE) AS INTEGER))
+           AS bucket
+FROM orders
+WHERE o_orderstatus = 'F' OR o_orderstatus = 'O'
+GROUP BY 1, 2
+ORDER BY o_orderstatus ASC NULLS FIRST, bucket ASC NULLS FIRST
+""")
+    # window + CTE SQL through the parser (the two clause families)
+    w["parsed_win_topn"] = planned(
+        parse_sql(
+            "WITH ranked AS (SELECT o_custkey, o_orderkey, o_totalprice, "
+            "row_number() OVER (PARTITION BY o_custkey "
+            "ORDER BY o_totalprice DESC NULLS LAST, o_orderkey ASC NULLS FIRST) AS rn, "
+            "CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER "
+            "(PARTITION BY o_custkey), 2) AS DOUBLE) AS cust_total "
+            "FROM orders) "
+            "SELECT o_custkey, o_orderkey, o_totalprice, cust_total FROM ranked "
+            "WHERE rn = 1 AND o_custkey < 300 "
+            "ORDER BY o_custkey ASC NULLS FIRST"
+        ),
+        # top-1-per-customer via max-join + min-orderkey tie-break instead
+        # of row_number
+        oracle="""
+WITH g AS (
+    SELECT o_custkey, max(o_totalprice) AS mp,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2)
+                AS DOUBLE) AS cust_total
+    FROM orders WHERE o_custkey < 300 GROUP BY o_custkey
+),
+cand AS (
+    SELECT o.o_custkey, o.o_orderkey, o.o_totalprice, g.cust_total
+    FROM orders o JOIN g
+      ON o.o_custkey = g.o_custkey AND o.o_totalprice = g.mp
+)
+SELECT o_custkey, o_orderkey, o_totalprice, cust_total
+FROM cand
+WHERE o_orderkey = (SELECT min(c2.o_orderkey) FROM cand c2
+                    WHERE c2.o_custkey = cand.o_custkey)
+ORDER BY o_custkey ASC NULLS FIRST
+""")
+    # parser surface in one query: named WINDOW clause shared
     # by two functions, QUALIFY (renders as a nested post-window
     # filter), a USING join (merged join column), and `::` casts
-    w["parsed_qualify_using"] = parse_sql(
-        "SELECT c_mktsegment, c_custkey, "
-        "c_acctbal::DOUBLE AS bal, "
-        "row_number() OVER w AS rn, "
-        "count(*) OVER w AS seg_n "
-        "FROM customer JOIN (SELECT c_custkey FROM customer "
-        "WHERE c_custkey % 3 = 0) AS picked USING (c_custkey) "
-        "WINDOW w AS (PARTITION BY c_mktsegment "
-        "ORDER BY c_acctbal DESC NULLS LAST, c_custkey ASC NULLS FIRST) "
-        "QUALIFY rn <= 5 "
-        "ORDER BY c_mktsegment ASC NULLS FIRST, rn ASC NULLS FIRST"
-    )
-    w["parsed_cte_agg"] = parse_sql(
-        "WITH region_nations AS (SELECT n_nationkey, n_name, r_name "
-        "FROM nation JOIN region ON n_regionkey = r_regionkey), "
-        "cust_per_nation AS (SELECT c_nationkey, count(*) AS n_cust, "
-        "CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS bal "
-        "FROM customer GROUP BY c_nationkey) "
-        "SELECT r_name, n_name, n_cust, bal FROM region_nations "
-        "JOIN cust_per_nation ON n_nationkey = c_nationkey "
-        "ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST"
-    )
-    # round-4c reader-side surface in one query: operand-form CASE,
+    w["parsed_qualify_using"] = planned(
+        parse_sql(
+            "SELECT c_mktsegment, c_custkey, "
+            "c_acctbal::DOUBLE AS bal, "
+            "row_number() OVER w AS rn, "
+            "count(*) OVER w AS seg_n "
+            "FROM customer JOIN (SELECT c_custkey FROM customer "
+            "WHERE c_custkey % 3 = 0) AS picked USING (c_custkey) "
+            "WINDOW w AS (PARTITION BY c_mktsegment "
+            "ORDER BY c_acctbal DESC NULLS LAST, c_custkey ASC NULLS FIRST) "
+            "QUALIFY rn <= 5 "
+            "ORDER BY c_mktsegment ASC NULLS FIRST, rn ASC NULLS FIRST"
+        ),
+        # QUALIFY top-5 via a correlated tuple-rank count subquery; also
+        # encodes that the running count(*) over a unique ORDER BY equals
+        # row_number, so seg_n is emitted as rn
+        oracle="""
+WITH picked AS (
+    SELECT c_mktsegment, c_custkey, c_acctbal
+    FROM customer WHERE c_custkey % 3 = 0
+),
+r AS (
+    SELECT p.c_mktsegment, p.c_custkey,
+           CAST(p.c_acctbal AS DOUBLE) AS bal,
+           (SELECT count(*) FROM picked q
+            WHERE q.c_mktsegment = p.c_mktsegment
+              AND (q.c_acctbal > p.c_acctbal
+                   OR (q.c_acctbal = p.c_acctbal
+                       AND q.c_custkey < p.c_custkey))) + 1 AS rn
+    FROM picked p
+)
+SELECT c_mktsegment, c_custkey, bal, rn, rn AS seg_n
+FROM r WHERE rn <= 5
+ORDER BY c_mktsegment ASC, rn ASC
+""")
+    w["parsed_cte_agg"] = planned(
+        parse_sql(
+            "WITH region_nations AS (SELECT n_nationkey, n_name, r_name "
+            "FROM nation JOIN region ON n_regionkey = r_regionkey), "
+            "cust_per_nation AS (SELECT c_nationkey, count(*) AS n_cust, "
+            "CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS bal "
+            "FROM customer GROUP BY c_nationkey) "
+            "SELECT r_name, n_name, n_cust, bal FROM region_nations "
+            "JOIN cust_per_nation ON n_nationkey = c_nationkey "
+            "ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST"
+        ),
+        # the two CTEs inlined into one flat join + aggregate
+        oracle="""
+SELECT r_name, n_name, count(*) AS n_cust,
+       CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
+           AS bal
+FROM customer
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY r_name, n_name
+ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST
+""")
+    # reader-side surface in one query: operand-form CASE,
     # EXTRACT, SUBSTRING FROM/FOR, TRIM spec, POSITION IN, IS NOT TRUE,
     # quoted INTERVAL arithmetic
-    w["parsed_reader_forms"] = parse_sql(
-        "SELECT o_orderkey, "
-        "CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'done' "
-        "ELSE 'other' END AS status_word, "
-        "EXTRACT(YEAR FROM o_orderdate) AS yr, "
-        "SUBSTRING(o_orderpriority FROM 1 FOR 1) AS prio, "
-        "TRIM(BOTH '0' FROM CAST(o_orderkey AS VARCHAR)) AS trimmed, "
-        "POSITION('URGENT' IN o_orderpriority) AS urg_pos, "
-        "o_orderdate + INTERVAL '30' DAY AS due, "
-        "(o_totalprice > 100000) IS NOT TRUE AS small_order "
-        "FROM orders WHERE o_orderkey < 2000 "
-        "ORDER BY o_orderkey ASC NULLS FIRST"
-    )
+    w["parsed_reader_forms"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, "
+            "CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'done' "
+            "ELSE 'other' END AS status_word, "
+            "EXTRACT(YEAR FROM o_orderdate) AS yr, "
+            "SUBSTRING(o_orderpriority FROM 1 FOR 1) AS prio, "
+            "TRIM(BOTH '0' FROM CAST(o_orderkey AS VARCHAR)) AS trimmed, "
+            "POSITION('URGENT' IN o_orderpriority) AS urg_pos, "
+            "o_orderdate + INTERVAL '30' DAY AS due, "
+            "(o_totalprice > 100000) IS NOT TRUE AS small_order "
+            "FROM orders WHERE o_orderkey < 2000 "
+            "ORDER BY o_orderkey ASC NULLS FIRST"
+        ),
+        # every scalar replayed through a different function: CASE as a
+        # VALUES lookup, year via strftime, substring as left, trim as
+        # two-sided regexp, strpos via split_part, IS DISTINCT FROM TRUE
+        # as <= on the non-null price
+        oracle="""
+SELECT o.o_orderkey,
+       coalesce(m.word, 'other') AS status_word,
+       CAST(strftime(o.o_orderdate, '%Y') AS BIGINT) AS yr,
+       left(o.o_orderpriority, 1) AS prio,
+       regexp_replace(regexp_replace(CAST(o.o_orderkey AS VARCHAR),
+                                     '^0+', ''), '0+$', '') AS trimmed,
+       CASE WHEN o.o_orderpriority LIKE '%URGENT%'
+            THEN length(split_part(o.o_orderpriority, 'URGENT', 1)) + 1
+            ELSE 0 END AS urg_pos,
+       o.o_orderdate + INTERVAL 30 DAY AS due,
+       o.o_totalprice <= 100000 AS small_order
+FROM orders o
+LEFT JOIN (VALUES ('O', 'open'), ('F', 'done')) AS m(st, word)
+       ON m.st = o.o_orderstatus
+WHERE o.o_orderkey < 2000
+ORDER BY o.o_orderkey ASC
+""")
     # FROM-clause PIVOT (Snowflake-style syntax both engines execute
     # verbatim; plans.Pivot node; decimal sum keeps values bit-exact)
-    w["parsed_pivot_status"] = parse_sql(
-        "SELECT o_custkey, CAST(O AS DOUBLE) AS open_total, "
-        "CAST(F AS DOUBLE) AS filled_total, "
-        "CAST(P AS DOUBLE) AS pending_total "
-        "FROM (SELECT o_custkey, o_orderstatus, "
-        "CAST(o_totalprice AS DECIMAL(18,4)) AS price FROM orders "
-        "WHERE o_orderkey < 5000) "
-        "PIVOT (sum(price) FOR o_orderstatus IN ('O', 'F', 'P')) "
-        "ORDER BY o_custkey ASC NULLS FIRST"
-    )
+    w["parsed_pivot_status"] = planned(
+        parse_sql(
+            "SELECT o_custkey, CAST(O AS DOUBLE) AS open_total, "
+            "CAST(F AS DOUBLE) AS filled_total, "
+            "CAST(P AS DOUBLE) AS pending_total "
+            "FROM (SELECT o_custkey, o_orderstatus, "
+            "CAST(o_totalprice AS DECIMAL(18,4)) AS price FROM orders "
+            "WHERE o_orderkey < 5000) "
+            "PIVOT (sum(price) FOR o_orderstatus IN ('O', 'F', 'P')) "
+            "ORDER BY o_custkey ASC NULLS FIRST"
+        ),
+        headline=True,
+        # PIVOT as FILTERed conditional aggregation (no PIVOT clause)
+        oracle="""
+SELECT o_custkey,
+       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
+            FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS open_total,
+       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
+            FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS filled_total,
+       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
+            FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS pending_total
+FROM orders
+WHERE o_orderkey < 5000
+GROUP BY o_custkey
+ORDER BY o_custkey ASC
+""")
     # DISTINCT ON desugar: first row per group in ORDER BY order via the
     # row_number group-limit window (no Spark-native equivalent)
-    w["parsed_distinct_on"] = parse_sql(
-        "SELECT DISTINCT ON (c_nationkey) c_nationkey, c_name, c_acctbal "
-        "FROM customer "
-        "ORDER BY c_nationkey ASC NULLS FIRST, c_acctbal DESC NULLS LAST, "
-        "c_custkey ASC NULLS FIRST"
-    )
+    w["parsed_distinct_on"] = planned(
+        parse_sql(
+            "SELECT DISTINCT ON (c_nationkey) c_nationkey, c_name, c_acctbal "
+            "FROM customer "
+            "ORDER BY c_nationkey ASC NULLS FIRST, c_acctbal DESC NULLS LAST, "
+            "c_custkey ASC NULLS FIRST"
+        ),
+        # DISTINCT ON as a NOT EXISTS greatest-per-group anti-pattern (no
+        # window at all)
+        oracle="""
+SELECT c_nationkey, c_name, c_acctbal
+FROM customer c
+WHERE NOT EXISTS (
+    SELECT 1 FROM customer d
+    WHERE d.c_nationkey = c.c_nationkey
+      AND (d.c_acctbal > c.c_acctbal
+           OR (d.c_acctbal = c.c_acctbal AND d.c_custkey < c.c_custkey))
+)
+ORDER BY c_nationkey ASC, c_acctbal DESC, c_custkey ASC
+""")
 
-    # round 6: the exact three-valued quantified-comparison desugar,
-    # driver-checked against DuckDB's NATIVE ANY/ALL (hand oracle in
-    # _HAND_ORACLES — maximum independence: the oracle never sees the
-    # CASE rewrite).  The three projection columns pin the three fixed
-    # edges: empty subquery (TRUE for ALL), plain TRUE/FALSE mix, and a
-    # NULL-containing subquery whose undecided rows must be NULL.
-    w["parsed_quantified_forms"] = parse_sql(_QUANTIFIED_FORMS_SQL)
+    # the exact three-valued quantified-comparison desugar,
+    # driver-checked against DuckDB's NATIVE ANY/ALL (maximum
+    # independence: the oracle never sees the CASE rewrite). The three
+    # projection columns pin the three fixed edges: empty subquery (TRUE
+    # for ALL), plain TRUE/FALSE mix, and a NULL-containing subquery
+    # whose undecided rows must be NULL.
+    w["parsed_quantified_forms"] = planned(
+        parse_sql(_QUANTIFIED_FORMS_SQL),
+        # DuckDB executes its NATIVE quantified comparisons; Spark runs the
+        # parser's three-valued CASE desugar — the two meet only in results
+        oracle=_QUANTIFIED_FORMS_SQL)
 
-    # round 8 (VERDICT r7 item 6): the two statement forms a pipeline's
+    # the two statement forms a pipeline's
     # maintenance job writes, entering through SQL text like every other
     # parsed_* row.  MERGE INTO desugars to the joins.upsert shape
     # (updates ∪ target-ANTI-updates); the source mixes in-place updates
     # (custkey % 7) with brand-new keys (custkey % 11, shifted past the
     # keyspace) so BOTH merge arms produce rows at every SF.
-    w["parsed_merge_upsert"] = parse_sql(
-        "MERGE INTO customer AS t USING ("
-        "SELECT c_custkey, c_name, c_nationkey, c_acctbal, "
-        "'UPDATED' AS c_mktsegment FROM customer WHERE c_custkey % 7 = 0 "
-        "UNION ALL "
-        "SELECT c_custkey + 10000000 AS c_custkey, c_name, c_nationkey, "
-        "c_acctbal, 'INSERTED' AS c_mktsegment FROM customer "
-        "WHERE c_custkey % 11 = 0) AS s "
-        "ON t.c_custkey = s.c_custkey "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
+    w["parsed_merge_upsert"] = planned(
+        parse_sql(
+            "MERGE INTO customer AS t USING ("
+            "SELECT c_custkey, c_name, c_nationkey, c_acctbal, "
+            "'UPDATED' AS c_mktsegment FROM customer WHERE c_custkey % 7 = 0 "
+            "UNION ALL "
+            "SELECT c_custkey + 10000000 AS c_custkey, c_name, c_nationkey, "
+            "c_acctbal, 'INSERTED' AS c_mktsegment FROM customer "
+            "WHERE c_custkey % 11 = 0) AS s "
+            "ON t.c_custkey = s.c_custkey "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *"
+        ),
+        headline=True,
+        # MERGE upsert replayed WITHOUT any join: source ⊂ target keys become
+        # a CASE rewrite over the whole table; the shifted insert arm appends.
+        # Maximum independence — the oracle never sees ANTI JOIN or UNION
+        # of survivors.
+        oracle="""
+SELECT c_custkey, c_name, c_nationkey, c_acctbal,
+       CASE WHEN c_custkey % 7 = 0 THEN 'UPDATED' ELSE c_mktsegment END
+           AS c_mktsegment
+FROM customer
+UNION ALL
+SELECT c_custkey + 10000000, c_name, c_nationkey, c_acctbal, 'INSERTED'
+FROM customer WHERE c_custkey % 11 = 0
+""")
     # TABLESAMPLE in its deterministic dialect (ON <id_col> — random
     # sampling can never hash-match across engines) desugars to the
     # sampling.stable_sample md5-bucket filter.
-    w["parsed_tablesample"] = parse_sql(
-        "SELECT doc_id, lang, length(text) AS text_len FROM documents "
-        "TABLESAMPLE (10 PERCENT ON doc_id) REPEATABLE ('r8') "
-        "ORDER BY doc_id ASC NULLS FIRST"
-    )
+    w["parsed_tablesample"] = planned(
+        parse_sql(
+            "SELECT doc_id, lang, length(text) AS text_len FROM documents "
+            "TABLESAMPLE (10 PERCENT ON doc_id) REPEATABLE ('r8') "
+            "ORDER BY doc_id ASC NULLS FIRST"
+        ),
+        headline=True,
+        # deterministic TABLESAMPLE: substr + || instead of the render's
+        # substring + concat, threshold hex hard-coded (0.10 * 65536 = 6553
+        # -> '1999')
+        oracle="""
+SELECT doc_id, lang, length(text) AS text_len FROM documents
+WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':r8'), 1, 4) < '1999'
+ORDER BY doc_id ASC
+""")
     # ... and its exactly-n ROWS form (stable_topk_sample's permutation
     # prefix; TakeOrdered plan, never a global sort)
-    w["parsed_tablesample_rows"] = parse_sql(
-        "SELECT doc_id, lang FROM documents "
-        "TABLESAMPLE (40 ROWS ON doc_id)"
-    )
+    w["parsed_tablesample_rows"] = planned(
+        parse_sql(
+            "SELECT doc_id, lang FROM documents "
+            "TABLESAMPLE (40 ROWS ON doc_id)"
+        ),
+        # ROWS form as a window rank instead of ORDER BY ... LIMIT
+        oracle="""
+SELECT doc_id, lang FROM (
+    SELECT doc_id, lang,
+           row_number() OVER (
+               ORDER BY md5(CAST(doc_id AS VARCHAR) || ':topk'), doc_id
+           ) AS rn
+    FROM documents
+) WHERE rn <= 40
+""")
     # per-column UPDATE SET MERGE: one left join, SET columns re-emitted
     # last via CASE over the matched test (source keys unique by
     # construction — a projection of the target's own keys)
-    w["parsed_merge_update_set"] = parse_sql(
-        "MERGE INTO customer AS t USING ("
-        "SELECT c_custkey, c_acctbal FROM customer "
-        "WHERE c_custkey % 3 = 0) AS s "
-        "ON t.c_custkey = s.c_custkey "
-        "WHEN MATCHED THEN UPDATE SET c_acctbal = s.c_acctbal * 2, "
-        "c_mktsegment = 'BOOSTED'"
-    )
+    w["parsed_merge_update_set"] = planned(
+        parse_sql(
+            "MERGE INTO customer AS t USING ("
+            "SELECT c_custkey, c_acctbal FROM customer "
+            "WHERE c_custkey % 3 = 0) AS s "
+            "ON t.c_custkey = s.c_custkey "
+            "WHEN MATCHED THEN UPDATE SET c_acctbal = s.c_acctbal * 2, "
+            "c_mktsegment = 'BOOSTED'"
+        ),
+        # per-column SET replayed WITHOUT any join: source ⊂ target keys
+        # become CASE rewrites in place (column order: SET columns last,
+        # matching the t.* EXCEPT desugar)
+        oracle="""
+SELECT c_custkey, c_name, c_nationkey,
+       CASE WHEN c_custkey % 3 = 0 THEN c_acctbal * 2
+            ELSE c_acctbal END AS c_acctbal,
+       CASE WHEN c_custkey % 3 = 0 THEN 'BOOSTED'
+            ELSE c_mktsegment END AS c_mktsegment
+FROM customer
+""")
 
-    # round 9 (VERDICT r8 items 2 and 5): the remaining common MERGE
+    # the remaining common MERGE
     # statement forms.  Conditional arm — the condition ANDs into the
     # CASE's match test, so matched-but-condition-false rows keep their
     # target values (three-valued: NULL conditions do not fire).
-    w["parsed_merge_conditional"] = parse_sql(
-        "MERGE INTO customer AS t USING ("
-        "SELECT c_custkey, c_acctbal FROM customer "
-        "WHERE c_custkey % 3 = 0) AS s "
-        "ON t.c_custkey = s.c_custkey "
-        "WHEN MATCHED AND s.c_acctbal > 5000 "
-        "THEN UPDATE SET c_acctbal = s.c_acctbal * 2, "
-        "c_mktsegment = 'HIGHROLLER'"
-    )
+    w["parsed_merge_conditional"] = planned(
+        parse_sql(
+            "MERGE INTO customer AS t USING ("
+            "SELECT c_custkey, c_acctbal FROM customer "
+            "WHERE c_custkey % 3 = 0) AS s "
+            "ON t.c_custkey = s.c_custkey "
+            "WHEN MATCHED AND s.c_acctbal > 5000 "
+            "THEN UPDATE SET c_acctbal = s.c_acctbal * 2, "
+            "c_mktsegment = 'HIGHROLLER'"
+        ),
+        headline=True,
+        # conditional arm folded into a plain CASE over the whole table
+        oracle="""
+SELECT c_custkey, c_name, c_nationkey,
+       CASE WHEN c_custkey % 3 = 0 AND c_acctbal > 5000
+            THEN c_acctbal * 2 ELSE c_acctbal END AS c_acctbal,
+       CASE WHEN c_custkey % 3 = 0 AND c_acctbal > 5000
+            THEN 'HIGHROLLER' ELSE c_mktsegment END AS c_mktsegment
+FROM customer
+""")
     # snapshot full sync (scd2_merge's close-missing as a statement):
     # UPDATE SET * + BY SOURCE DELETE = the survivors union loses its
     # anti-join arm, leaving one semi join
-    w["parsed_merge_full_sync"] = parse_sql(
-        "MERGE INTO customer AS t USING ("
-        "SELECT c_custkey, c_name, c_nationkey, c_acctbal, "
-        "'SYNCED' AS c_mktsegment FROM customer "
-        "WHERE c_custkey % 2 = 0) AS s "
-        "ON t.c_custkey = s.c_custkey "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED BY SOURCE THEN DELETE"
-    )
+    w["parsed_merge_full_sync"] = planned(
+        parse_sql(
+            "MERGE INTO customer AS t USING ("
+            "SELECT c_custkey, c_name, c_nationkey, c_acctbal, "
+            "'SYNCED' AS c_mktsegment FROM customer "
+            "WHERE c_custkey % 2 = 0) AS s "
+            "ON t.c_custkey = s.c_custkey "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED BY SOURCE THEN DELETE"
+        ),
+        headline=True,
+        # full sync (UPDATE SET * + BY SOURCE DELETE) = the source filter,
+        # applied directly — the oracle never sees the semi join
+        oracle="""
+SELECT c_custkey, c_name, c_nationkey, c_acctbal,
+       'SYNCED' AS c_mktsegment
+FROM customer WHERE c_custkey % 2 = 0
+""")
     # column-list INSERT with an arm condition: the list defines the
     # merged output layout (every arm projects exactly those columns),
     # the condition filters only the insert arm
-    w["parsed_merge_insert_cols"] = parse_sql(
-        "MERGE INTO customer AS t USING ("
-        "SELECT c_custkey + 10000000 AS new_key, c_name, c_acctbal "
-        "FROM customer WHERE c_custkey % 9 = 0) AS s "
-        "ON t.c_custkey = s.new_key "
-        "WHEN NOT MATCHED AND s.c_acctbal > 0 "
-        "THEN INSERT (c_custkey, c_name, c_acctbal) "
-        "VALUES (s.new_key, s.c_name, s.c_acctbal)"
-    )
+    w["parsed_merge_insert_cols"] = planned(
+        parse_sql(
+            "MERGE INTO customer AS t USING ("
+            "SELECT c_custkey + 10000000 AS new_key, c_name, c_acctbal "
+            "FROM customer WHERE c_custkey % 9 = 0) AS s "
+            "ON t.c_custkey = s.new_key "
+            "WHEN NOT MATCHED AND s.c_acctbal > 0 "
+            "THEN INSERT (c_custkey, c_name, c_acctbal) "
+            "VALUES (s.new_key, s.c_name, s.c_acctbal)"
+        ),
+        headline=True,
+        # column-list INSERT: target re-projected to the listed layout plus
+        # the shifted, condition-filtered insert arm
+        oracle="""
+SELECT c_custkey, c_name, c_acctbal FROM customer
+UNION ALL
+SELECT c_custkey + 10000000, c_name, c_acctbal
+FROM customer WHERE c_custkey % 9 = 0 AND c_acctbal > 0
+""")
 
-    # round 10 (VERDICT r9 item 6): cascaded multi-arm chain, first
+    # cascaded multi-arm chain, first
     # match wins — one left join, one filter for the DELETE arm, one
     # nested CASE per set column; all three arms fire at every SF
     # (negative / >5000 / remaining balances all exist in customer)
-    w["parsed_merge_multi_arm"] = parse_sql(
-        "MERGE INTO customer AS t USING ("
-        "SELECT c_custkey, c_acctbal FROM customer "
-        "WHERE c_custkey % 2 = 0) AS s "
-        "ON t.c_custkey = s.c_custkey "
-        "WHEN MATCHED AND s.c_acctbal < 0 THEN DELETE "
-        "WHEN MATCHED AND s.c_acctbal > 5000 "
-        "THEN UPDATE SET c_acctbal = s.c_acctbal * 2, "
-        "c_mktsegment = 'HIGH' "
-        "WHEN MATCHED THEN UPDATE SET c_acctbal = s.c_acctbal + 100"
-    )
-    # round 10: the insert-side cascade twin — first-match-wins
+    w["parsed_merge_multi_arm"] = planned(
+        parse_sql(
+            "MERGE INTO customer AS t USING ("
+            "SELECT c_custkey, c_acctbal FROM customer "
+            "WHERE c_custkey % 2 = 0) AS s "
+            "ON t.c_custkey = s.c_custkey "
+            "WHEN MATCHED AND s.c_acctbal < 0 THEN DELETE "
+            "WHEN MATCHED AND s.c_acctbal > 5000 "
+            "THEN UPDATE SET c_acctbal = s.c_acctbal * 2, "
+            "c_mktsegment = 'HIGH' "
+            "WHEN MATCHED THEN UPDATE SET c_acctbal = s.c_acctbal + 100"
+        ),
+        headline=True,
+        oracle="""
+SELECT c_custkey, c_name, c_nationkey,
+       CASE WHEN c_custkey % 2 = 0 AND NOT (c_acctbal < 0)
+                 AND c_acctbal > 5000
+            THEN c_acctbal * 2
+            WHEN c_custkey % 2 = 0 AND NOT (c_acctbal < 0)
+            THEN c_acctbal + 100
+            ELSE c_acctbal END AS c_acctbal,
+       CASE WHEN c_custkey % 2 = 0 AND NOT (c_acctbal < 0)
+                 AND c_acctbal > 5000
+            THEN 'HIGH' ELSE c_mktsegment END AS c_mktsegment
+FROM customer
+WHERE NOT (c_custkey % 2 = 0 AND c_acctbal < 0)
+""")
+    # the insert-side cascade twin — first-match-wins
     # WHEN NOT MATCHED value chains over ONE anti join (per-column
     # CASE; no arm claimed → row not inserted, here via the trailing
     # unconditioned arm)
-    w["parsed_merge_insert_arms"] = parse_sql(
-        "MERGE INTO region AS t USING ("
-        "SELECT n_nationkey AS k, n_name AS nm, n_regionkey AS rk "
-        "FROM nation) AS s ON t.r_regionkey = s.k "
-        "WHEN NOT MATCHED AND s.rk = 0 "
-        "THEN INSERT (r_regionkey, r_name) VALUES (s.k, upper(s.nm)) "
-        "WHEN NOT MATCHED AND s.rk = 1 "
-        "THEN INSERT (r_regionkey, r_name) VALUES (s.k + 100, lower(s.nm)) "
-        "WHEN NOT MATCHED THEN INSERT (r_regionkey, r_name) "
-        "VALUES (s.k, 'OTHER')"
-    )
+    w["parsed_merge_insert_arms"] = planned(
+        parse_sql(
+            "MERGE INTO region AS t USING ("
+            "SELECT n_nationkey AS k, n_name AS nm, n_regionkey AS rk "
+            "FROM nation) AS s ON t.r_regionkey = s.k "
+            "WHEN NOT MATCHED AND s.rk = 0 "
+            "THEN INSERT (r_regionkey, r_name) VALUES (s.k, upper(s.nm)) "
+            "WHEN NOT MATCHED AND s.rk = 1 "
+            "THEN INSERT (r_regionkey, r_name) VALUES (s.k + 100, lower(s.nm)) "
+            "WHEN NOT MATCHED THEN INSERT (r_regionkey, r_name) "
+            "VALUES (s.k, 'OTHER')"
+        ),
+        headline=True,
+        # insert-cascade replayed with NO merge machinery: the appended
+        # rows re-derived from nation with plain CASE arms and an
+        # anti-EXISTS, target passed through untouched
+        oracle="""
+SELECT r_regionkey, r_name FROM region
+UNION ALL
+SELECT CASE WHEN n_regionkey = 1 THEN n_nationkey + 100
+            ELSE n_nationkey END AS r_regionkey,
+       CASE WHEN n_regionkey = 0 THEN upper(n_name)
+            WHEN n_regionkey = 1 THEN lower(n_name)
+            ELSE 'OTHER' END AS r_name
+FROM nation
+WHERE NOT EXISTS (SELECT 1 FROM region WHERE r_regionkey = n_nationkey)
+""")
 
-    # round 10: the remaining single-table DML statement forms, same
+    # the remaining single-table DML statement forms, same
     # batch contract as MERGE (tests/test_parser_dml.py) — UPDATE is
     # the CASE projection, DELETE the NOT-TRUE filter (three-valued:
     # NULL predicates neither update nor delete), INSERT the
     # positional append with the column list renaming the SELECT
-    # round 10: row-value membership — the multi-key semi join entered
+    # row-value membership — the multi-key semi join entered
     # as standard SQL (Spark takes the bare multi-column IN, the DuckDB
     # render wraps the subquery outputs into one struct); Catalyst
     # plans it as a LeftSemi on both keys
-    w["parsed_row_in_subquery"] = parse_sql(
-        "SELECT o_orderkey, o_totalprice FROM orders "
-        "WHERE (o_custkey, o_orderstatus) IN ("
-        "SELECT c_custkey, 'O' FROM customer WHERE c_acctbal > 5000)"
-    )
-    # round 10: generate_series spine joined to data — the gap-proof
+    w["parsed_row_in_subquery"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, o_totalprice FROM orders "
+            "WHERE (o_custkey, o_orderstatus) IN ("
+            "SELECT c_custkey, 'O' FROM customer WHERE c_acctbal > 5000)"
+        ),
+        headline=True,
+        # row-value IN replayed as a correlated EXISTS + literal equality —
+        # no row-value syntax, no struct wrap
+        oracle="""
+SELECT o_orderkey, o_totalprice FROM orders o
+WHERE o.o_orderstatus = 'O'
+  AND EXISTS (SELECT 1 FROM customer c
+              WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 5000)
+""")
+    # generate_series spine joined to data — the gap-proof
     # per-bucket count idiom (left join FROM the generated axis so
     # empty buckets surface as zeros)
-    w["parsed_series_spine"] = parse_sql(
-        "SELECT g.generate_series AS bucket, count(o_orderkey) AS n "
-        "FROM generate_series(0, 9) AS g "
-        "LEFT JOIN orders ON o_orderkey % 10 = g.generate_series "
-        "GROUP BY g.generate_series"
-    )
-    # round 10: SIMILAR TO (the standard's LIKE/regex hybrid — both
+    w["parsed_series_spine"] = planned(
+        parse_sql(
+            "SELECT g.generate_series AS bucket, count(o_orderkey) AS n "
+            "FROM generate_series(0, 9) AS g "
+            "LEFT JOIN orders ON o_orderkey % 10 = g.generate_series "
+            "GROUP BY g.generate_series"
+        ),
+        headline=True,
+        # series spine replayed over DuckDB's end-EXCLUSIVE range() —
+        # different generator, different bound convention
+        oracle="""
+SELECT b.bucket, count(o.o_orderkey) AS n
+FROM (SELECT range AS bucket FROM range(0, 10)) b
+LEFT JOIN orders o ON o.o_orderkey % 10 = b.bucket
+GROUP BY b.bucket
+""")
+    # SIMILAR TO (the standard's LIKE/regex hybrid — both
     # renders share one compiled regex, Spark anchored RLIKE / DuckDB
     # regexp_full_match) plus PG quantity-in-string INTERVAL arithmetic
-    w["parsed_similar_to"] = parse_sql(
-        "SELECT o_orderpriority, count(*) AS n "
-        "FROM orders JOIN customer ON o_custkey = c_custkey "
-        "WHERE c_name SIMILAR TO 'Customer#%[0-4]' "
-        "AND o_orderdate < DATE '1995-01-01' + INTERVAL '6 months' "
-        "GROUP BY o_orderpriority"
-    )
-    # round 10: ordered array_agg — the always-sorted contract
+    w["parsed_similar_to"] = planned(
+        parse_sql(
+            "SELECT o_orderpriority, count(*) AS n "
+            "FROM orders JOIN customer ON o_custkey = c_custkey "
+            "WHERE c_name SIMILAR TO 'Customer#%[0-4]' "
+            "AND o_orderdate < DATE '1995-01-01' + INTERVAL '6 months' "
+            "GROUP BY o_orderpriority"
+        ),
+        headline=True,
+        # SIMILAR TO replayed with NO pattern language at all: the prefix
+        # as a substring test, the [0-4] class as a last-char IN-list, the
+        # interval arithmetic as the pre-computed literal date
+        oracle="""
+SELECT o_orderpriority, count(*) AS n
+FROM orders o, customer c
+WHERE o.o_custkey = c.c_custkey
+  AND substr(c.c_name, 1, 9) = 'Customer#'
+  AND substr(c.c_name, length(c.c_name), 1) IN ('0','1','2','3','4')
+  AND o.o_orderdate < DATE '1995-07-01'
+GROUP BY o_orderpriority
+""")
+    # ordered array_agg — the always-sorted contract
     # (collect_list order is partition-dependent; both engines sort by
     # (key, value) so ties cannot diverge)
     # (array output stringified — the agg_collect driver-compare
     # pattern: array cells don't hash in the value compare)
-    w["parsed_array_agg_ordered"] = parse_sql(
-        "SELECT o_orderstatus, "
-        "array_join(array_agg(CAST(o_orderkey AS STRING) "
-        "ORDER BY o_totalprice), ',') AS keys_by_price, "
-        "count(*) AS n "
-        "FROM orders WHERE o_orderkey < 200 GROUP BY o_orderstatus"
-    )
-    # round 10: frame EXCLUDE CURRENT ROW — desugared to frame_agg
+    w["parsed_array_agg_ordered"] = planned(
+        parse_sql(
+            "SELECT o_orderstatus, "
+            "array_join(array_agg(CAST(o_orderkey AS STRING) "
+            "ORDER BY o_totalprice), ',') AS keys_by_price, "
+            "count(*) AS n "
+            "FROM orders WHERE o_orderkey < 200 GROUP BY o_orderstatus"
+        ),
+        headline=True,
+        # ordered array_agg replayed via DuckDB's list() (a different
+        # aggregate spelling) with the same (key, value) tie-break
+        oracle="""
+SELECT o_orderstatus,
+       array_to_string(list(CAST(o_orderkey AS VARCHAR)
+           ORDER BY o_totalprice, CAST(o_orderkey AS VARCHAR)), ',')
+           AS keys_by_price,
+       count(*) AS n
+FROM orders WHERE o_orderkey < 200
+GROUP BY o_orderstatus
+""")
+    # frame EXCLUDE CURRENT ROW — desugared to frame_agg
     # minus the current row on BOTH renders (exact integer arithmetic
     # here, so the hand oracle can use DuckDB's NATIVE exclusion)
-    w["parsed_win_exclude_current"] = parse_sql(
-        "SELECT o_orderkey, "
-        "CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus "
-        "ORDER BY o_orderkey ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING "
-        "EXCLUDE CURRENT ROW) AS BIGINT) AS s, "
-        "count(*) OVER (PARTITION BY o_orderstatus ORDER BY o_orderkey "
-        "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING EXCLUDE CURRENT ROW) "
-        "AS c "
-        "FROM orders WHERE o_orderkey < 3000"
-    )
-    # round 10: correlated UNNEST in FROM (the standard spelling of the
+    w["parsed_win_exclude_current"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, "
+            "CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus "
+            "ORDER BY o_orderkey ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING "
+            "EXCLUDE CURRENT ROW) AS BIGINT) AS s, "
+            "count(*) OVER (PARTITION BY o_orderstatus ORDER BY o_orderkey "
+            "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING EXCLUDE CURRENT ROW) "
+            "AS c "
+            "FROM orders WHERE o_orderkey < 3000"
+        ),
+        headline=True,
+        # EXCLUDE CURRENT ROW replayed via DuckDB's NATIVE frame exclusion
+        # — exact integer sums, so native-vs-desugar cannot ULP-diverge
+        oracle="""
+SELECT o_orderkey,
+       CAST(sum(o_custkey) OVER w AS BIGINT) AS s,
+       count(*) OVER w AS c
+FROM orders WHERE o_orderkey < 3000
+WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderkey
+             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING
+             EXCLUDE CURRENT ROW)
+""")
+    # correlated UNNEST in FROM (the standard spelling of the
     # Explode node) — the word-frequency idiom over documents; explode
     # is a narrow per-row generate, so the only shuffle is the count
-    w["parsed_unnest_words"] = parse_sql(
-        "SELECT word, count(*) AS n "
-        "FROM documents, UNNEST(split(text, ' ')) AS t(word) "
-        "WHERE lang = 'en' AND length(word) > 4 "
-        "GROUP BY word ORDER BY n DESC, word ASC NULLS FIRST LIMIT 20"
-    )
+    w["parsed_unnest_words"] = planned(
+        parse_sql(
+            "SELECT word, count(*) AS n "
+            "FROM documents, UNNEST(split(text, ' ')) AS t(word) "
+            "WHERE lang = 'en' AND length(word) > 4 "
+            "GROUP BY word ORDER BY n DESC, word ASC NULLS FIRST LIMIT 20"
+        ),
+        headline=True,
+        # correlated UNNEST replayed as a SELECT-list unnest over plain
+        # str_split (not the FROM-clause table form, not the regex split)
+        oracle="""
+SELECT word, count(*) AS n
+FROM (SELECT unnest(str_split(text, ' ')) AS word
+      FROM documents WHERE lang = 'en') u
+WHERE length(word) > 4
+GROUP BY word
+ORDER BY n DESC, word
+LIMIT 20
+""")
 
-    w["parsed_update_where"] = parse_sql(
-        "UPDATE customer SET c_acctbal = c_acctbal * 2, "
-        "c_mktsegment = 'DOUBLED' WHERE c_acctbal > 5000"
-    )
-    w["parsed_delete_where"] = parse_sql(
-        "DELETE FROM customer WHERE c_acctbal < 0 OR c_custkey % 5 = 0"
-    )
-    w["parsed_insert_select"] = parse_sql(
-        "INSERT INTO region (r_regionkey, r_name) "
-        "SELECT r_regionkey + 50 AS shifted, upper(r_name) FROM region"
-    )
+    w["parsed_update_where"] = planned(
+        parse_sql(
+            "UPDATE customer SET c_acctbal = c_acctbal * 2, "
+            "c_mktsegment = 'DOUBLED' WHERE c_acctbal > 5000"
+        ),
+        headline=True,
+        oracle="""
+SELECT c_custkey, c_name, c_nationkey, c_acctbal * 2 AS c_acctbal,
+       'DOUBLED' AS c_mktsegment
+FROM customer WHERE c_acctbal > 5000
+UNION ALL
+SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+FROM customer WHERE NOT (c_acctbal > 5000)
+""")
+    w["parsed_delete_where"] = planned(
+        parse_sql(
+            "DELETE FROM customer WHERE c_acctbal < 0 OR c_custkey % 5 = 0"
+        ),
+        headline=True,
+        oracle="""
+SELECT * FROM customer c
+WHERE NOT EXISTS (
+    SELECT 1 FROM customer d
+    WHERE d.c_custkey = c.c_custkey
+      AND (d.c_acctbal < 0 OR d.c_custkey % 5 = 0)
+)
+""")
+    w["parsed_insert_select"] = planned(
+        parse_sql(
+            "INSERT INTO region (r_regionkey, r_name) "
+            "SELECT r_regionkey + 50 AS shifted, upper(r_name) FROM region"
+        ),
+        headline=True,
+        oracle="""
+SELECT r_regionkey, r_name FROM region
+UNION ALL
+SELECT r_regionkey + 50, upper(r_name) FROM region
+""")
 
-    # round 10b: frame EXCLUDE GROUP / TIES — the remaining standard
+    # frame EXCLUDE GROUP / TIES — the remaining standard
     # exclusion modes, desugared to frame_agg minus the ORDER-BY peer
     # group's aggregate (a second window partitioned by
     # partition+order keys; TIES adds the current row back). Integer
     # sums, and o_orderdate is coarse so peer groups are wide — both
     # modes differ from EXCLUDE CURRENT ROW on real ties here. The
     # hand oracle replays DuckDB's NATIVE exclusion.
-    w["parsed_win_exclude_group"] = parse_sql(
-        "SELECT o_orderkey, "
-        "CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus "
-        "ORDER BY o_orderdate EXCLUDE GROUP) AS BIGINT) AS sg, "
-        "count(*) OVER (PARTITION BY o_orderstatus "
-        "ORDER BY o_orderdate EXCLUDE TIES) AS ct "
-        "FROM orders WHERE o_orderkey < 3000"
-    )
-    # round 10b: NATURAL JOIN — USING over every shared column name,
+    w["parsed_win_exclude_group"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, "
+            "CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus "
+            "ORDER BY o_orderdate EXCLUDE GROUP) AS BIGINT) AS sg, "
+            "count(*) OVER (PARTITION BY o_orderstatus "
+            "ORDER BY o_orderdate EXCLUDE TIES) AS ct "
+            "FROM orders WHERE o_orderkey < 3000"
+        ),
+        headline=True,
+        oracle="""
+SELECT o_orderkey,
+       CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus
+            ORDER BY o_orderdate
+            RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+            EXCLUDE GROUP) AS BIGINT) AS sg,
+       count(*) OVER (PARTITION BY o_orderstatus ORDER BY o_orderdate
+            RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+            EXCLUDE TIES) AS ct
+FROM orders WHERE o_orderkey < 3000
+""")
+    # NATURAL JOIN — USING over every shared column name,
     # resolved from the two schemas at execution (both engines render
     # the keyword natively); the derived tables rename to a shared key
     # the way heterogeneous-source pipelines do
-    w["parsed_natural_join"] = parse_sql(
-        "SELECT custkey, c_name, n_orders, total "
-        "FROM (SELECT c_custkey AS custkey, c_name FROM customer "
-        "WHERE c_acctbal > 9000) AS c "
-        "NATURAL JOIN (SELECT o_custkey AS custkey, count(*) AS n_orders, "
-        "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total "
-        "FROM orders GROUP BY o_custkey) AS o"
-    )
-    # round 10b (exec path replaced r11): ASOF JOIN (DuckDB dialect) —
+    w["parsed_natural_join"] = planned(
+        parse_sql(
+            "SELECT custkey, c_name, n_orders, total "
+            "FROM (SELECT c_custkey AS custkey, c_name FROM customer "
+            "WHERE c_acctbal > 9000) AS c "
+            "NATURAL JOIN (SELECT o_custkey AS custkey, count(*) AS n_orders, "
+            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total "
+            "FROM orders GROUP BY o_custkey) AS o"
+        ),
+        headline=True,
+        # NATURAL JOIN replayed with NO natural/using machinery: the
+        # pre-rename base tables joined on explicit equality
+        oracle="""
+SELECT c.c_custkey AS custkey, c.c_name, o.n_orders, o.total
+FROM customer c
+JOIN (SELECT o_custkey, count(*) AS n_orders,
+             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                 AS total
+      FROM orders GROUP BY o_custkey) o
+  ON o.o_custkey = c.c_custkey
+WHERE c.c_acctbal > 9000
+""")
+    # ASOF JOIN (DuckDB dialect) —
     # each click pairs with the same user's most recent purchase at or
     # before it. Parses to the AsofJoin node: to_df runs the one-shuffle
     # union+window shape (no join operator in the physical plan); the
     # right side is GROUP BY (user_id, ts)-unique, the ASOF
     # precondition. The hand oracle is DuckDB's NATIVE ASOF JOIN.
-    w["parsed_asof_join"] = parse_sql(
-        "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval "
-        "FROM (SELECT event_id, ts, user_id FROM events "
-        "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
-        "ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events "
-        "WHERE event_type = 'purchase' GROUP BY user_id, ts) AS r "
-        "ON l.user_id = r.user_id AND l.ts >= r.ts"
-    )
-    # round 10b: GROUPS frame mode — Spark has none, so the parser
+    w["parsed_asof_join"] = planned(
+        parse_sql(
+            "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval "
+            "FROM (SELECT event_id, ts, user_id FROM events "
+            "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
+            "ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events "
+            "WHERE event_type = 'purchase' GROUP BY user_id, ts) AS r "
+            "ON l.user_id = r.user_id AND l.ts >= r.ts"
+        ),
+        headline=True,
+        # ASOF replayed via DuckDB's NATIVE ASOF JOIN (the desugar is the
+        # inner join + correlated-max filter — entirely different machinery)
+        oracle="""
+SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
+FROM (SELECT event_id, ts, user_id FROM events
+      WHERE event_type = 'click' AND event_id % 20 = 0) l
+ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events
+           WHERE event_type = 'purchase' GROUP BY user_id, ts) r
+ON l.user_id = r.user_id AND l.ts >= r.ts
+""")
+    # GROUPS frame mode — Spark has none, so the parser
     # desugars to RANGE over a dense_rank pre-projection (peer-group
     # distance IS rank distance; one shared sort for both windows).
     # DuckDB 1.0 has no GROUPS either ("not implemented yet"), so the
     # hand oracle replays WINDOW-FRAME-FREE: a rank self-join with
     # conditional aggregation. Integer sums.
-    w["parsed_win_groups_frame"] = parse_sql(
-        "SELECT o_orderkey, "
-        "CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus "
-        "ORDER BY o_orderdate GROUPS BETWEEN 1 PRECEDING AND "
-        "1 FOLLOWING) AS BIGINT) AS sg, "
-        "count(*) OVER (PARTITION BY o_orderstatus "
-        "ORDER BY o_orderdate GROUPS BETWEEN 2 PRECEDING AND "
-        "CURRENT ROW) AS cg "
-        "FROM orders WHERE o_orderkey < 3000"
-    )
-    # round 10b: DISTINCT aggregates over windows — Spark rejects them
+    w["parsed_win_groups_frame"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, "
+            "CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus "
+            "ORDER BY o_orderdate GROUPS BETWEEN 1 PRECEDING AND "
+            "1 FOLLOWING) AS BIGINT) AS sg, "
+            "count(*) OVER (PARTITION BY o_orderstatus "
+            "ORDER BY o_orderdate GROUPS BETWEEN 2 PRECEDING AND "
+            "CURRENT ROW) AS cg "
+            "FROM orders WHERE o_orderkey < 3000"
+        ),
+        headline=True,
+        # GROUPS frame replayed with NO window frame at all: a dense_rank
+        # self-join with conditional aggregation (peer-group distance as an
+        # explicit join band) — the desugar's RANGE-over-rank machinery
+        # never runs
+        oracle="""
+WITH r AS (
+    SELECT o_orderkey, o_orderstatus, o_custkey,
+           dense_rank() OVER (PARTITION BY o_orderstatus
+                              ORDER BY o_orderdate) AS dr
+    FROM orders WHERE o_orderkey < 3000
+)
+SELECT a.o_orderkey,
+       CAST(sum(CASE WHEN b.dr BETWEEN a.dr - 1 AND a.dr + 1
+                     THEN b.o_custkey END) AS BIGINT) AS sg,
+       count(CASE WHEN b.dr BETWEEN a.dr - 2 AND a.dr
+                  THEN 1 END) AS cg
+FROM r a JOIN r b
+  ON b.o_orderstatus = a.o_orderstatus
+ AND b.dr BETWEEN a.dr - 2 AND a.dr + 1
+GROUP BY a.o_orderkey
+""")
+    # DISTINCT aggregates over windows — Spark rejects them
     # outright ("Distinct window functions are not supported"); the
     # desugar marks one row per (partition, value) group with a
     # row_number pre-column and wraps the argument in CASE WHEN
     # __dst = 1, so the plain windowed aggregate sees each distinct
     # value once. DECIMAL below the sum; the hand oracle replays
     # DuckDB's NATIVE DISTINCT-over-window.
-    w["parsed_win_distinct_agg"] = parse_sql(
-        "SELECT o_orderkey, "
-        "count(DISTINCT o_orderpriority) OVER "
-        "(PARTITION BY o_custkey) AS n_prio, "
-        "CAST(sum(DISTINCT CAST(o_totalprice AS DECIMAL(18,2))) OVER "
-        "(PARTITION BY o_orderstatus) AS DOUBLE) AS s_price, "
-        "avg(DISTINCT o_custkey % 100) OVER "
-        "(PARTITION BY o_orderstatus) AS a_mod "
-        "FROM orders WHERE o_orderkey < 4000"
-    )
-    # round 10b (exec path replaced r11): ASOF LEFT JOIN — unmatched
+    w["parsed_win_distinct_agg"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, "
+            "count(DISTINCT o_orderpriority) OVER "
+            "(PARTITION BY o_custkey) AS n_prio, "
+            "CAST(sum(DISTINCT CAST(o_totalprice AS DECIMAL(18,2))) OVER "
+            "(PARTITION BY o_orderstatus) AS DOUBLE) AS s_price, "
+            "avg(DISTINCT o_custkey % 100) OVER "
+            "(PARTITION BY o_orderstatus) AS a_mod "
+            "FROM orders WHERE o_orderkey < 4000"
+        ),
+        headline=True,
+        # DISTINCT-over-window replayed via DuckDB's NATIVE distinct window
+        # aggregates (the desugar's first-occurrence-flag machinery never
+        # runs)
+        oracle="""
+SELECT o_orderkey,
+       count(DISTINCT o_orderpriority) OVER
+           (PARTITION BY o_custkey) AS n_prio,
+       CAST(sum(DISTINCT CAST(o_totalprice AS DECIMAL(18,2))) OVER
+           (PARTITION BY o_orderstatus) AS DOUBLE) AS s_price,
+       avg(DISTINCT o_custkey % 100) OVER
+           (PARTITION BY o_orderstatus) AS a_mod
+FROM orders WHERE o_orderkey < 4000
+""")
+    # ASOF LEFT JOIN — unmatched
     # clicks survive NULL-padded. The AsofJoin node's union+window
-    # to_df keeps them naturally (NULL match struct); the r10
+    # to_df keeps them naturally (NULL match struct); a
     # lateral-LIMIT-1 execution compiled to a BroadcastNestedLoopJoin
     # (9.55s at sf0.1 vs ~0.5s now — plan-gated: no join operator at
     # all). Hand oracle: native ASOF LEFT.
-    w["parsed_asof_left_join"] = parse_sql(
-        "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
-        "r.pval "
-        "FROM (SELECT event_id, ts, user_id FROM events "
-        "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
-        "ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval "
-        "FROM events WHERE event_type = 'purchase' "
-        "GROUP BY user_id, ts) AS r "
-        "ON l.user_id = r.user_id AND l.ts >= r.ts"
-    )
-    # round 12 (VERDICT r11 item 5): ASOF with a merge_asof-style
+    w["parsed_asof_left_join"] = planned(
+        parse_sql(
+            "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
+            "r.pval "
+            "FROM (SELECT event_id, ts, user_id FROM events "
+            "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
+            "ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval "
+            "FROM events WHERE event_type = 'purchase' "
+            "GROUP BY user_id, ts) AS r "
+            "ON l.user_id = r.user_id AND l.ts >= r.ts"
+        ),
+        headline=True,
+        # ASOF LEFT replayed via DuckDB's NATIVE ASOF LEFT JOIN (the
+        # lateral-LIMIT-1 desugar machinery never runs)
+        oracle="""
+SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
+FROM (SELECT event_id, ts, user_id FROM events
+      WHERE event_type = 'click' AND event_id % 20 = 0) l
+ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval FROM events
+                WHERE event_type = 'purchase'
+                GROUP BY user_id, ts) r
+ON l.user_id = r.user_id AND l.ts >= r.ts
+""")
+    # ASOF with a merge_asof-style
     # TOLERANCE bound — a second, opposite-direction range conjunct on
     # the right time column bounds the match window (the feature-store
     # shape: a click only joins a purchase from the last day; the
@@ -1591,93 +3081,205 @@ def _ir_workloads() -> dict[str, Plan]:
     # node's duckdb render fails closed and both rows carry HAND
     # oracles: native ASOF inside a MATERIALIZED CTE (a pushdown
     # barrier), tolerance applied outside.
-    w["parsed_asof_tolerance"] = parse_sql(
-        "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
-        "r.pval "
-        "FROM (SELECT event_id, ts, user_id FROM events "
-        "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
-        "ASOF JOIN (SELECT user_id, ts, max(value) AS pval "
-        "FROM events WHERE event_type = 'purchase' "
-        "GROUP BY user_id, ts) AS r "
-        "ON l.user_id = r.user_id AND l.ts >= r.ts "
-        "AND r.ts >= l.ts - INTERVAL '1' DAY"
-    )
-    # round 12: MULTI-KEY asof with an EXPRESSION-valued left key —
+    w["parsed_asof_tolerance"] = planned(
+        parse_sql(
+            "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
+            "r.pval "
+            "FROM (SELECT event_id, ts, user_id FROM events "
+            "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
+            "ASOF JOIN (SELECT user_id, ts, max(value) AS pval "
+            "FROM events WHERE event_type = 'purchase' "
+            "GROUP BY user_id, ts) AS r "
+            "ON l.user_id = r.user_id AND l.ts >= r.ts "
+            "AND r.ts >= l.ts - INTERVAL '1' DAY"
+        ),
+        headline=True,
+        # ASOF + tolerance replayed via DuckDB's NATIVE ASOF inside a
+        # MATERIALIZED CTE (pushdown barrier — DuckDB would otherwise push
+        # the tolerance WHERE into the join and reject it as a second ASOF
+        # inequality), tolerance applied OUTSIDE: inner filters the row
+        # out, LEFT nulls the payload and keeps the row. The repo-side
+        # union+window desugar machinery never runs here.
+        oracle="""
+WITH m AS MATERIALIZED (
+    SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
+    FROM (SELECT event_id, ts, user_id FROM events
+          WHERE event_type = 'click' AND event_id % 20 = 0) l
+    ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events
+               WHERE event_type = 'purchase' GROUP BY user_id, ts) r
+    ON l.user_id = r.user_id AND l.ts >= r.ts)
+SELECT event_id, ts, user_id, purchase_ts, pval
+FROM m WHERE purchase_ts >= ts - INTERVAL 1 DAY
+""")
+    # MULTI-KEY asof with an EXPRESSION-valued left key —
     # the union+window desugar generalizes to N equality keys
     # (plans/core.py AsofJoin.eqs); DuckDB's native ASOF takes the same
-    # multi-equality ON, so the IR-generated oracle is native ASOF
-    w["parsed_asof_multikey"] = parse_sql(
-        "SELECT l.event_id, l.ts, r.ts AS obs_ts, r.v AS obs_v "
-        "FROM (SELECT event_id, ts, user_id FROM events "
-        "WHERE event_type = 'click' AND event_id % 10 = 0) AS l "
-        "ASOF JOIN (SELECT user_id, event_id % 4 AS grp, ts, "
-        "max(value) AS v FROM events WHERE event_type = 'purchase' "
-        "GROUP BY user_id, event_id % 4, ts) AS r "
-        "ON l.user_id = r.user_id AND r.grp = l.event_id % 4 "
-        "AND l.ts >= r.ts"
-    )
-    w["parsed_asof_tolerance_left"] = parse_sql(
-        "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
-        "r.pval "
-        "FROM (SELECT event_id, ts, user_id FROM events "
-        "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
-        "ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval "
-        "FROM events WHERE event_type = 'purchase' "
-        "GROUP BY user_id, ts) AS r "
-        "ON l.user_id = r.user_id AND l.ts >= r.ts "
-        "AND r.ts >= l.ts - INTERVAL '1' DAY"
-    )
-    # round 10b: RUNNING distinct count (cumulative unique users) — the
+    # multi-equality ON, so the plan's DuckDB render is native ASOF
+    w["parsed_asof_multikey"] = planned(
+        parse_sql(
+            "SELECT l.event_id, l.ts, r.ts AS obs_ts, r.v AS obs_v "
+            "FROM (SELECT event_id, ts, user_id FROM events "
+            "WHERE event_type = 'click' AND event_id % 10 = 0) AS l "
+            "ASOF JOIN (SELECT user_id, event_id % 4 AS grp, ts, "
+            "max(value) AS v FROM events WHERE event_type = 'purchase' "
+            "GROUP BY user_id, event_id % 4, ts) AS r "
+            "ON l.user_id = r.user_id AND r.grp = l.event_id % 4 "
+            "AND l.ts >= r.ts"
+        ),
+        headline=True,
+        # multi-key asof replayed WITHOUT the ASOF keyword at all:
+        # correlated max / max_by scalar subqueries over both equality keys
+        # (the union+window desugar machinery and DuckDB's native ASOF
+        # executor both never run)
+        oracle="""
+WITH l AS (SELECT event_id, ts, user_id FROM events
+           WHERE event_type = 'click' AND event_id % 10 = 0),
+r AS (SELECT user_id, event_id % 4 AS grp, ts, max(value) AS v
+      FROM events WHERE event_type = 'purchase'
+      GROUP BY user_id, event_id % 4, ts)
+SELECT event_id, ts, obs_ts, obs_v FROM (
+    SELECT l.event_id, l.ts,
+           (SELECT max(r.ts) FROM r
+             WHERE r.user_id = l.user_id AND r.grp = l.event_id % 4
+               AND r.ts <= l.ts) AS obs_ts,
+           (SELECT max_by(r.v, r.ts) FROM r
+             WHERE r.user_id = l.user_id AND r.grp = l.event_id % 4
+               AND r.ts <= l.ts) AS obs_v
+    FROM l
+) WHERE obs_ts IS NOT NULL
+""")
+    w["parsed_asof_tolerance_left"] = planned(
+        parse_sql(
+            "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
+            "r.pval "
+            "FROM (SELECT event_id, ts, user_id FROM events "
+            "WHERE event_type = 'click' AND event_id % 20 = 0) AS l "
+            "ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval "
+            "FROM events WHERE event_type = 'purchase' "
+            "GROUP BY user_id, ts) AS r "
+            "ON l.user_id = r.user_id AND l.ts >= r.ts "
+            "AND r.ts >= l.ts - INTERVAL '1' DAY"
+        ),
+        headline=True,
+        oracle="""
+WITH m AS MATERIALIZED (
+    SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
+    FROM (SELECT event_id, ts, user_id FROM events
+          WHERE event_type = 'click' AND event_id % 20 = 0) l
+    ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval FROM events
+                    WHERE event_type = 'purchase'
+                    GROUP BY user_id, ts) r
+    ON l.user_id = r.user_id AND l.ts >= r.ts)
+SELECT event_id, ts, user_id,
+       CASE WHEN purchase_ts >= ts - INTERVAL 1 DAY
+            THEN purchase_ts END AS purchase_ts,
+       CASE WHEN purchase_ts >= ts - INTERVAL 1 DAY
+            THEN pval END AS pval
+FROM m
+""")
+    # RUNNING distinct count (cumulative unique users) — the
     # ordered extension of the DISTINCT-over-window desugar: the
     # first-occurrence flag is ordered by the window's keys, so "seen
     # at or before this position" is exactly "flag row in the running
     # frame". Hand oracle: DuckDB's native ordered DISTINCT window.
-    w["parsed_win_running_distinct"] = parse_sql(
-        "SELECT event_id, "
-        "count(DISTINCT user_id) OVER (PARTITION BY event_type "
-        "ORDER BY ts, event_id) AS uniq_users "
-        "FROM events WHERE event_id % 5 = 0"
-    )
-    # round 10b: FILTER (WHERE ...) on a WINDOW aggregate — Spark
+    w["parsed_win_running_distinct"] = planned(
+        parse_sql(
+            "SELECT event_id, "
+            "count(DISTINCT user_id) OVER (PARTITION BY event_type "
+            "ORDER BY ts, event_id) AS uniq_users "
+            "FROM events WHERE event_id % 5 = 0"
+        ),
+        headline=True,
+        # running distinct replayed via DuckDB's NATIVE ordered DISTINCT
+        # window (the flag machinery never runs)
+        oracle="""
+SELECT event_id,
+       count(DISTINCT user_id) OVER (PARTITION BY event_type
+           ORDER BY ts, event_id) AS uniq_users
+FROM events WHERE event_id % 5 = 0
+""")
+    # FILTER (WHERE ...) on a WINDOW aggregate — Spark
     # rejects the clause there ("not supported yet"), so the Spark
     # render desugars to the exact CASE rewrite while DuckDB keeps the
     # native clause; DECIMAL below the window so the conditional sum is
     # engine-order-proof. The hand oracle replays the native clause.
-    w["parsed_win_filter"] = parse_sql(
-        "SELECT o_orderkey, o_custkey, "
-        "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) "
-        "FILTER (WHERE o_orderstatus = 'O') "
-        "OVER (PARTITION BY o_custkey) AS DOUBLE) AS open_total, "
-        "count(*) FILTER (WHERE o_totalprice > 100000) "
-        "OVER (PARTITION BY o_custkey) AS big_n "
-        "FROM orders WHERE o_orderkey < 4000"
-    )
-    # round 10b: multi-statement script — CREATE TEMP VIEW chain + final
+    w["parsed_win_filter"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, o_custkey, "
+            "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) "
+            "FILTER (WHERE o_orderstatus = 'O') "
+            "OVER (PARTITION BY o_custkey) AS DOUBLE) AS open_total, "
+            "count(*) FILTER (WHERE o_totalprice > 100000) "
+            "OVER (PARTITION BY o_custkey) AS big_n "
+            "FROM orders WHERE o_orderkey < 4000"
+        ),
+        headline=True,
+        # window FILTER replayed via DuckDB's NATIVE FILTER clause on the
+        # window aggregate (the Spark render is the CASE desugar — native
+        # vs desugar cannot both be wrong the same way)
+        oracle="""
+SELECT o_orderkey, o_custkey,
+       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
+            FILTER (WHERE o_orderstatus = 'O')
+            OVER (PARTITION BY o_custkey) AS DOUBLE) AS open_total,
+       count(*) FILTER (WHERE o_totalprice > 100000)
+            OVER (PARTITION BY o_custkey) AS big_n
+FROM orders WHERE o_orderkey < 4000
+""")
+    # multi-statement script — CREATE TEMP VIEW chain + final
     # SELECT desugars to ONE With (a CTE IS a session-scoped named
     # query; With.to_df registers temp views, literally the statement's
     # semantics). Counts are integer-exact.
-    w["parsed_script_views"] = parse_sql(
-        "CREATE TEMP VIEW big_cust AS "
-        "SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 5000; "
-        "CREATE OR REPLACE TEMP VIEW cust_orders AS "
-        "SELECT b.c_custkey, b.c_name, count(*) AS n FROM big_cust b "
-        "JOIN orders ON o_custkey = b.c_custkey "
-        "GROUP BY b.c_custkey, b.c_name; "
-        "SELECT c_name, n FROM cust_orders WHERE n > 12"
-    )
-    # round 10b: ANSI-mode error-safe scalars — try_divide (NULL on /0,
+    w["parsed_script_views"] = planned(
+        parse_sql(
+            "CREATE TEMP VIEW big_cust AS "
+            "SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 5000; "
+            "CREATE OR REPLACE TEMP VIEW cust_orders AS "
+            "SELECT b.c_custkey, b.c_name, count(*) AS n FROM big_cust b "
+            "JOIN orders ON o_custkey = b.c_custkey "
+            "GROUP BY b.c_custkey, b.c_name; "
+            "SELECT c_name, n FROM cust_orders WHERE n > 12"
+        ),
+        headline=True,
+        # script views replayed with NO WITH clause at all: each view
+        # manually inlined as a nested derived table
+        oracle="""
+SELECT c_name, n FROM (
+    SELECT b.c_custkey, b.c_name, count(*) AS n
+    FROM (SELECT c_custkey, c_name FROM customer
+          WHERE c_acctbal > 5000) b
+    JOIN orders ON o_custkey = b.c_custkey
+    GROUP BY b.c_custkey, b.c_name
+) cust_orders
+WHERE n > 12
+""")
+    # ANSI-mode error-safe scalars — try_divide (NULL on /0,
     # always float division) and try_element_at (NULL out of range);
     # Spark natives, DuckDB twins spell the NULL contract out
-    w["expr_try_funcs"] = parse_sql(
-        "SELECT o_orderkey, "
-        # one FP division is correctly rounded — bit-exact cross-engine
-        "try_divide(o_totalprice, o_custkey % 3) AS d, "
-        "try_element_at(split(o_orderpriority, '-'), 2) AS p2, "
-        "try_element_at(split(o_orderpriority, '-'), 5) AS p5 "
-        "FROM orders WHERE o_orderkey < 2000"
-    )
-    # round 11: implicit comma cross-join (SQL-92, the most common join
-    # spelling in the wild — VERDICT r10 missing #1; reference renders
+    w["expr_try_funcs"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, "
+            # one FP division is correctly rounded — bit-exact cross-engine
+            "try_divide(o_totalprice, o_custkey % 3) AS d, "
+            "try_element_at(split(o_orderpriority, '-'), 2) AS p2, "
+            "try_element_at(split(o_orderpriority, '-'), 5) AS p5 "
+            "FROM orders WHERE o_orderkey < 2000"
+        ),
+        headline=True,
+        # try_ scalars replayed with explicit CASE guards (no nullif, no
+        # bare subscript: the out-of-range probe checks len() first)
+        oracle="""
+SELECT o_orderkey,
+       CASE WHEN o_custkey % 3 = 0 THEN NULL
+            ELSE o_totalprice / (o_custkey % 3) END AS d,
+       CASE WHEN len(string_split(o_orderpriority, '-')) >= 2
+            THEN string_split(o_orderpriority, '-')[2] END AS p2,
+       CASE WHEN len(string_split(o_orderpriority, '-')) >= 5
+            THEN string_split(o_orderpriority, '-')[5] END AS p5
+FROM orders WHERE o_orderkey < 2000
+""")
+    # implicit comma cross-join (SQL-92, the most common join
+    # spelling in the wild; the reference renders
     # comma-separated FROM tables, sqlgenerator/src/lib.rs:79-102,
     # corpus intent tests/select.rs:817-837 csv_join_unaliased_
     # subqueries). Parses to Join(cross) + Filter; Catalyst's
@@ -1685,38 +3287,70 @@ def _ir_workloads() -> dict[str, Plan]:
     # equi-join, so the plan is identical to the explicit-ON spelling
     # (plan-gated: no CartesianProduct). DECIMAL below the sum; the
     # hand oracle replays with explicit JOIN ... ON.
-    # round 11: PG regex-match operator spellings ~ ~* !~ !~* (VERDICT
-    # r10 missing #2; the reference's DF side maps all four,
+    # PG regex-match operator spellings ~ ~* !~ !~* (the
+    # reference's DF side maps all four,
     # datafusion-sqlgen/src/expr.rs:202-205). Parse-time normalization
     # onto RLike: partial-match PG semantics on both engines (NOTE:
     # DuckDB's own native `~` is regexp_full_match — a different
     # operator — so the duckdb render spells regexp_matches, never the
     # bare operator). Case-folding via inline (?i). Hand oracle counts
     # matches with regexp_extract_all instead of testing membership.
-    w["parsed_pg_regex_match"] = parse_sql(
-        "SELECT o_orderkey, o_orderpriority, "
-        "(o_orderpriority ~ 'HIGH$') AS is_high, "
-        "(o_orderpriority ~* '^[0-4]-[a-z]+') AS pri_ci, "
-        "(o_orderpriority !~ '[3-5]') AS pri_low, "
-        "(o_orderstatus !~* '[fo]') AS status_p "
-        "FROM orders WHERE o_orderkey < 2000"
-    )
-    w["parsed_comma_join"] = parse_sql(
-        "SELECT c.c_mktsegment, n.n_name, count(*) AS n_orders, "
-        "CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) "
-        "AS revenue "
-        "FROM customer AS c, orders AS o, nation AS n "
-        "WHERE c.c_custkey = o.o_custkey "
-        "AND c.c_nationkey = n.n_nationkey "
-        "AND c.c_acctbal > 1000 "
-        "GROUP BY c.c_mktsegment, n.n_name"
-    )
+    w["parsed_pg_regex_match"] = planned(
+        parse_sql(
+            "SELECT o_orderkey, o_orderpriority, "
+            "(o_orderpriority ~ 'HIGH$') AS is_high, "
+            "(o_orderpriority ~* '^[0-4]-[a-z]+') AS pri_ci, "
+            "(o_orderpriority !~ '[3-5]') AS pri_low, "
+            "(o_orderstatus !~* '[fo]') AS status_p "
+            "FROM orders WHERE o_orderkey < 2000"
+        ),
+        headline=True,
+        # PG regex operators replayed via regexp_extract_all match COUNTS
+        # (len(...) > 0 / = 0) with the 'i' options flag for the
+        # case-folded forms — a different mechanism from the engine render
+        # (regexp_matches membership with an inline (?i) flag)
+        oracle="""
+SELECT o_orderkey, o_orderpriority,
+       len(regexp_extract_all(o_orderpriority, 'HIGH$')) > 0 AS is_high,
+       len(regexp_extract_all(o_orderpriority, '^[0-4]-[a-z]+', 0, 'i'))
+           > 0 AS pri_ci,
+       len(regexp_extract_all(o_orderpriority, '[3-5]')) = 0 AS pri_low,
+       len(regexp_extract_all(o_orderstatus, '[fo]', 0, 'i')) = 0
+           AS status_p
+FROM orders WHERE o_orderkey < 2000
+""")
+    w["parsed_comma_join"] = planned(
+        parse_sql(
+            "SELECT c.c_mktsegment, n.n_name, count(*) AS n_orders, "
+            "CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) "
+            "AS revenue "
+            "FROM customer AS c, orders AS o, nation AS n "
+            "WHERE c.c_custkey = o.o_custkey "
+            "AND c.c_nationkey = n.n_nationkey "
+            "AND c.c_acctbal > 1000 "
+            "GROUP BY c.c_mktsegment, n.n_name"
+        ),
+        headline=True,
+        # comma cross-join replayed with explicit INNER JOIN ... ON — the
+        # engine side parses the SQL-92 comma spelling to Join(cross) +
+        # Filter, so the oracle's explicit-ON formulation shares none of
+        # that desugar path
+        oracle="""
+SELECT c.c_mktsegment, n.n_name, count(*) AS n_orders,
+       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+           AS revenue
+FROM customer c
+JOIN orders o ON c.c_custkey = o.o_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+WHERE c.c_acctbal > 1000
+GROUP BY c.c_mktsegment, n.n_name
+""")
 
     return w
 
 
 # --------------------------------------------------------------------------
-# Operator workloads: name -> (spark_fn, duckdb_oracle_sql | None)
+# Operator workloads: DataFrame code on Spark, the operator's DuckDB oracle
 # --------------------------------------------------------------------------
 
 def _union_by_name(s: SparkSession) -> DataFrame:
@@ -1823,7 +3457,7 @@ def _sink_zorder_roundtrip(s: SparkSession) -> DataFrame:
     out = work_dir("sink_z_") + "/orders_z"
     orders = s.table("orders")
     # bounds computed inside the write job (broadcast 1-row min/max) —
-    # no .first() driver round-trip (VERDICT r4 item 6)
+    # no .first() driver round-trip
     sio.write_zordered_auto(
         orders, out, ["o_custkey", "o_totalprice"], n_files=8
     )
@@ -2730,7 +4364,7 @@ def _pipeline_curation(s: SparkSession) -> DataFrame:
 
 
 def _pipeline_semantic_curation(s: SparkSession) -> DataFrame:
-    """The round-6 curation pipeline upgraded to the published
+    """The curation pipeline upgraded to the published
     cluster-then-prune recipe, as ONE composed plan: normalize -> C4
     rule filter -> SemDeDup semantic prune over the *kept* documents'
     embeddings (filter first, then cluster — the cheap gate runs before
@@ -2739,7 +4373,7 @@ def _pipeline_semantic_curation(s: SparkSession) -> DataFrame:
     repo; the oracle below replays the identical chain in one DuckDB
     WITH pipeline, k-means CTEs included."""
     docs = text.prepare_documents(s.table("documents"))
-    # round-13: materialize the C4-kept slice once (guide 2.4) — it
+    # materialize the C4-kept slice once (guide 2.4) — it
     # feeds the embedding semi-join AND the post-dedup survivor join,
     # and the filter chain re-ran per reference otherwise
     kept = materialize(
@@ -3014,3814 +4648,23 @@ GROUP BY o_orderstatus
 """
 
 
-def _operator_workloads() -> dict[str, tuple[Callable[[SparkSession], DataFrame], str | None]]:
+def _operator_workloads() -> dict[str, Workload]:
     return {
         # by-name set union (SQL UNION is positional in both engines; the
         # oracle re-aligns explicitly — the operator does it by schema)
-        "setop_union_by_name": (_union_by_name, _UNION_BY_NAME_ORACLE),
+        "setop_union_by_name": Workload(_union_by_name, _UNION_BY_NAME_ORACLE),
         # partitioned-parquet write -> read-back -> aggregate (sink path)
-        "sink_partitioned_roundtrip": (
+        "sink_partitioned_roundtrip": Workload(
             _sink_partitioned_roundtrip, _SINK_ROUNDTRIP_ORACLE,
+            headline=True,
         ),
-        "dedup_exact": (
+        "dedup_exact": Workload(
             lambda s: dedup.exact_dedup(s.table("documents")),
-            dedup.exact_dedup_oracle(),
-        ),
-        # near-exact: case/whitespace-canonicalized content hash
-        "dedup_canonical": (
-            lambda s: dedup.canonical_dedup(s.table("documents")),
-            dedup.canonical_dedup_oracle(),
-        ),
-        "dedup_minhash_signatures": (
-            lambda s: dedup.minhash_signatures(s.table("documents")),
-            dedup.minhash_signatures_oracle(),
-        ),
-        "dedup_minhash_buckets": (
-            lambda s: dedup.minhash_buckets(s.table("documents")),
-            dedup.minhash_buckets_oracle(),
-        ),
-        "dedup_minhash_verify": (
-            lambda s: dedup.minhash_dedup_pairs(s.table("documents"), threshold=0.2),
-            dedup.minhash_dedup_pairs_oracle(threshold=0.2),
-        ),
-        "text_top_terms": (
-            lambda s: text.top_terms(s.table("documents")),
-            text.top_terms_oracle(),
-        ),
-        # Heaps-law vocabulary-growth curve per source (round 10b):
-        # template-spam / OCR-noise red flag + tokenizer-sizing input;
-        # BIGINT-exact bucket checkpoints, 1e-6-snapped slope
-        "text_vocab_growth": (
-            lambda s: text.vocab_growth(s.table("documents")),
-            text.vocab_growth_oracle(),
-        ),
-        # Zipf-law head fit (round 11): slope of ln(freq) vs ln(rank)
-        # over the top-k terms — the second classic corpus-health
-        # diagnostic next to the Heaps curve; one combined count
-        # shuffle + TakeOrdered, regression over a bounded k-row set;
-        # the oracle spells the regression as closed-form sums, a
-        # different mechanism from Spark's regr_slope accumulator
-        "text_zipf_slope": (
-            lambda s: text.zipf_slope(s.table("documents")),
-            text.zipf_slope_oracle(),
-        ),
-        # per-cluster quality over the trained k-means fit (round 11):
-        # cohesion (fixed-point mean member-to-centroid cosine) vs
-        # separation (max other-centroid cosine) — the SemDeDup cell
-        # granularity / IVF nprobe tuning signal; corpus never
-        # shuffles, separation is a codebook-bounded k x k grid
-        "sim_kmeans_quality": (
-            lambda s: similarity.kmeans_quality(s.table("embeddings")),
-            similarity.kmeans_quality_oracle(),
-        ),
-        # single-pass column profiling (data-quality gate before a training
-        # run); oracle is the k-scan UNION ALL formulation — same numbers,
-        # the shape our one-pass stack avoids at scale
-        "profile_orders": (
-            lambda s: profiling.profile_columns(
-                s.table("orders"),
-                ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"],
-            ),
-            profiling.profile_columns_oracle(
-                "orders",
-                ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"],
-            ),
-        ),
-        # training-batch prep: fixed token-budget packing within language
-        # shards (window-per-shard running offset — parallel by design)
-        "text_pack_sequences": (
-            lambda s: text.pack_sequences(s.table("documents")),
-            text.pack_sequences_oracle(),
-        ),
-        # PII-style scrubbing; the corpus has no PII, so synthesize an
-        # email + long number per row, then mask (same synth in oracle)
-        "text_redact": (
-            lambda s: text.redact(
-                s.table("documents").selectExpr(
-                    "doc_id",
-                    "concat(text, ' contact user', doc_id,"
-                    " '@example.com ref ', doc_id * 1000003) AS text",
-                )
-            ),
-            text.redact_oracle(
-                "(SELECT doc_id, concat(text, ' contact user', doc_id,"
-                " '@example.com ref ', doc_id * 1000003) AS text"
-                " FROM documents) t"
-            ),
-        ),
-        # overlapping word-window chunking (training/RAG prep); pure
-        # built-in composition — the UDTF twin is tested equal in
-        # tests/test_multimodal_sources_udfs.py
-        "text_chunk_documents": (
-            lambda s: text.chunk_documents(s.table("documents").filter("doc_id < 200")),
-            text.chunk_documents_oracle(where="doc_id < 200"),
-        ),
-        # posexplode with 1-based ordinality (positional tokenization)
-        "text_word_positions": (
-            lambda s: text.word_positions(s.table("documents").filter("doc_id < 100")),
-            text.word_positions_oracle(where="WHERE doc_id < 100"),
-        ),
-        # deterministic md5-keyed sampling: same rows every run/engine
-        "sample_stable_hash": (
-            lambda s: sampling.stable_sample(s.table("documents"), rate=0.1)
-            .select("doc_id", "lang", "source"),
-            sampling.stable_sample_oracle(rate=0.1, cols="doc_id, lang, source"),
-        ),
-        # per-stratum rates (downsample dominant lang, keep rare ones)
-        "sample_stratified": (
-            lambda s: sampling.stratified_sample(
-                s.table("documents"),
-                rates={"en": 0.1, "de": 1.0, "fr": 0.5},
-            ).select("doc_id", "lang"),
-            sampling.stratified_sample_oracle(
-                rates={"en": 0.1, "de": 1.0, "fr": 0.5}, cols="doc_id, lang"
-            ),
-        ),
-        # exactly-k reproducible sample via hash-ordered TakeOrdered
-        "sample_stable_topk": (
-            lambda s: sampling.stable_topk_sample(s.table("documents"), k=100)
-            .select("doc_id", "lang"),
-            sampling.stable_topk_sample_oracle(k=100, cols="doc_id, lang"),
-        ),
-        # leak-free train/holdout assignment keyed on md5(id:salt)
-        "sample_hash_split": (
-            lambda s: sampling.hash_split(s.table("documents"), holdout=0.2)
-            .select("doc_id", "split"),
-            sampling.hash_split_oracle(holdout=0.2, cols="doc_id"),
-        ),
-        # dense hourly grid: downsample + gap-fill (missing hours -> 0)
-        "ts_gap_fill_hourly": (
-            lambda s: timeseries.hourly_counts_gap_filled(s.table("events")),
-            timeseries.hourly_counts_gap_filled_oracle(),
-        ),
-        # OHLC candle downsampling: time-ordered open/close via
-        # min_by/max_by (DuckDB arg_min/arg_max), one hash aggregate
-        "ts_ohlc_hourly": (
-            lambda s: timeseries.ohlc_resample(s.table("events")),
-            timeseries.ohlc_resample_oracle(),
-        ),
-        # resample to hourly means + last-observation-carried-forward
-        "ts_locf_resample": (
-            lambda s: timeseries.locf_resample(
-                s.table("events").filter("user_id < 50")
-            ),
-            timeseries.locf_resample_oracle(where="WHERE user_id < 50"),
-        ),
-        # rolling z-score anomaly gate over hourly counts: integer
-        # metric makes window avg/stddev bit-identical cross-engine
-        "ts_rolling_anomaly": (
-            lambda s: timeseries.rolling_anomaly(s.table("events")),
-            timeseries.rolling_anomaly_oracle(),
-        ),
-        # gap-based sessionization: lag-flag + running-sum session ids,
-        # then per-session aggregates — batch twin of the streaming
-        # session_window; one hash exchange total (window + agg share it)
-        "ts_sessionize": (
-            lambda s: timeseries.sessionize(s.table("events")),
-            timeseries.sessionize_oracle(),
-        ),
-        # near-dup clustering: LSH pairs -> connected components
-        # (iterative min-label propagation vs DuckDB WITH RECURSIVE)
-        "dedup_cluster_cc": (
-            lambda s: dedup.near_dup_clusters(s.table("documents"), threshold=0.2),
-            dedup.near_dup_clusters_oracle(threshold=0.2),
-        ),
-        # pipeline terminus: corpus minus clustered non-representatives
-        # (documents never shuffle; the drop list broadcasts)
-        "dedup_materialize": (
-            lambda s: dedup.materialize_dedup(s.table("documents"), threshold=0.2),
-            dedup.materialize_dedup_oracle(threshold=0.2),
-        ),
-        "dedup_simhash": (
-            lambda s: dedup.simhash(s.table("documents")),
-            dedup.simhash_oracle(),
-        ),
-        # quality-aware terminus: each cluster keeps its highest-quality
-        # doc (ties -> smallest id); only clustered docs are ever scored
-        "dedup_quality_rep": (
-            lambda s: dedup.quality_dedup(s.table("documents"), threshold=0.2),
-            dedup.quality_dedup_oracle(threshold=0.2),
-        ),
-        "dedup_ngram_jaccard": (
-            lambda s: dedup.ngram_jaccard_pairs(
-                s.table("documents"), max_left_id=20, threshold=0.05
-            ),
-            dedup.ngram_jaccard_pairs_oracle(max_left_id=20, threshold=0.05),
-        ),
-        # round 13: asymmetric containment (|A∩B| / min(|A|,|B|)) —
-        # the sub-document/quote-inclusion dup class symmetric Jaccard
-        # misses by construction (Broder resemblance vs containment)
-        "dedup_ngram_containment": (
-            lambda s: dedup.ngram_containment_pairs(
-                s.table("documents"), max_left_id=60, threshold=0.1
-            ),
-            dedup.ngram_containment_pairs_oracle(
-                max_left_id=60, threshold=0.1
-            ),
-        ),
-        "text_token_stats": (
-            lambda s: text.token_stats(s.table("documents")),
-            text.token_stats_oracle(),
-        ),
-        "text_quality_score": (
-            lambda s: text.quality_score(s.table("documents")),
-            text.quality_score_oracle(),
-        ),
-        "text_language_id": (
-            lambda s: text.language_id(s.table("documents")),
-            text.language_id_oracle(),
-        ),
-        "text_fingerprint": (
-            lambda s: text.fingerprint(s.table("documents")),
-            text.fingerprint_oracle(),
-        ),
-        # per-doc top-k TF-IDF terms: doc-keyed repartition reused by tf
-        # agg + rank window; vocabulary-sized idf table broadcast back
-        "text_tfidf_topk": (
-            lambda s: text.tfidf_top_terms(s.table("documents")),
-            text.tfidf_top_terms_oracle(),
-        ),
-        # intra-doc repetition (Gopher-style quality filters): top-gram
-        # and repeated-gram fractions; one doc-keyed shuffle reused by
-        # both aggregation levels
-        "text_repetition": (
-            lambda s: text.repetition_stats(s.table("documents")),
-            text.repetition_stats_oracle(),
-        ),
-        # benchmark decontamination: distinct-shingle overlap of corpus
-        # docs vs a (broadcast) benchmark shingle set — one corpus pass,
-        # one doc-keyed aggregate shuffle
-        "text_decontaminate": (
-            lambda s: text.decontaminate(
-                s.table("documents").filter("doc_id >= 20"),
-                s.table("documents").filter("doc_id < 20"),
-            ),
-            text.decontaminate_oracle(),
-        ),
-        "sim_cosine_topk": (
-            lambda s: similarity.cosine_topk(
-                s.table("embeddings"), s.table("embeddings").filter("vec_id < 10")
-            ),
-            similarity.cosine_topk_oracle(max_query_id=10),
-        ),
-        # round 12: MMR diversity re-ranking (Carbonell-Goldstein) —
-        # top-n candidate search then a bounded per-query greedy via
-        # applyInPandas; oracle is the same greedy unrolled into k
-        # chained CTEs, every score snapped to 1e-6 before each argmax
-        "sim_mmr_diversify": (
-            lambda s: similarity.mmr_diversify(
-                s.table("embeddings"),
-                s.table("embeddings").filter("vec_id < 3"),
-            ),
-            similarity.mmr_diversify_oracle(max_query_id=3),
-        ),
-        "sim_lsh_bucket_stats": (
-            lambda s: similarity.lsh_bucket_stats(s.table("embeddings")),
-            similarity.lsh_bucket_stats_oracle(),
-        ),
-        "sim_cosine_topk_bucketed": (
-            lambda s: similarity.cosine_topk_bucketed(
-                s.table("embeddings"), s.table("embeddings").filter("vec_id < 10")
-            ),
-            similarity.cosine_topk_bucketed_oracle(max_query_id=10),
-        ),
-        "sim_embedding_norms": (
-            lambda s: similarity.embedding_norm_stats(s.table("embeddings")),
-            similarity.embedding_norm_stats_oracle(),
-        ),
-        # symmetric int8 quantization + reconstruction-error audit: all
-        # JVM higher-order fns, narrow map, no shuffle; codes are
-        # bit-identical cross-engine (double promotion + half-away round)
-        "sim_quantize_int8": (
-            lambda s: similarity.quantize_int8(s.table("embeddings")),
-            similarity.quantize_int8_oracle(),
-        ),
-        "sim_ivf_topk": (
-            lambda s: similarity.ivf_topk(
-                s.table("embeddings"), s.table("embeddings").filter("vec_id < 10")
-            ),
-            similarity.ivf_topk_oracle(max_query_id=10),
-        ),
-        # round 8: cross-corpus ANN JOIN — odd-id vectors probe their
-        # nprobe=2 nearest cells of an even-id index; neither side
-        # broadcasts (both are corpus-scale by construction), the join
-        # is pure cell-equi
-        "sim_ann_join": (
-            lambda s: similarity.ann_join(
-                s.table("embeddings").filter("vec_id % 2 = 1"),
-                s.table("embeddings").filter("vec_id % 2 = 0"),
-            ),
-            similarity.ann_join_oracle(),
-        ),
-        # embedding-level benchmark decontamination: ann_join against a
-        # held-out benchmark split (vec_id % 10), τ-gate, per-source
-        # keep/drop accounting — the semantic sibling of the Bloom
-        # n-gram decontaminators
-        "pipeline_embedding_decontamination": (
-            lambda s: dedup.embedding_decontaminate(
-                s.table("embeddings").filter("vec_id % 10 <> 0"),
-                s.table("embeddings").filter("vec_id % 10 = 0"),
-                s.table("documents"),
-            ),
-            dedup.embedding_decontaminate_oracle(),
-        ),
-        # ... and its acceptance audit: recall@k of the multi-probe
-        # join vs exact brute force, on a 25-query left sample (the
-        # audit shape — ground truth broadcasts the sample)
-        "sim_ann_join_recall": (
-            lambda s: similarity.ann_join_recall(
-                s.table("embeddings").filter(
-                    "vec_id % 2 = 1 AND vec_id < 50"),
-                s.table("embeddings").filter("vec_id % 2 = 0"),
-            ),
-            similarity.ann_join_recall_oracle(
-                left_pred="vec_id % 2 = 1 AND vec_id < 50"),
-        ),
-        # b=6 -> 64 sign-LSH buckets: total pair count scales ~1/buckets
-        # and the pair join's parallelism is bucket-count-bound, so more
-        # (smaller) buckets is the scale knob (2.5x faster than b=4 at
-        # sf0.1 with plenty of surviving candidates)
-        "dedup_embedding_cosine": (
-            lambda s: dedup.embedding_near_dup(s.table("embeddings"), b=6),
-            dedup.embedding_near_dup_oracle(b=6),
-        ),
-        # multimodal pipeline: binary payload + metadata -> mapInPandas
-        # feature extraction; the fake decode is deterministic MD5
-        # expansion, so since round 5 a DuckDB md5-replay twin hash-checks
-        # mean_intensity (the 64-float vector column is dropped to keep
-        # the driver comparison light)
-        # binaryFile-source ingest: raw files written to a dir, read
-        # back through Spark's binary source (payloads never cross the
-        # driver), id parsed from the file name, md5-checked against
-        # the original text bytes (the 40-file write is test setup)
-        "mm_binary_ingest": (
-            _mm_binary_ingest,
+            # exact dedup via a correlated-aggregate formulation over the RAW
+            # text (not GROUP BY md5): one row per first-occurrence doc, copies
+            # counted by an equality subquery — any disagreement with the
+            # hash-group form means md5 collided or grouping diverged
             """
-SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS payload_md5
-FROM documents WHERE doc_id < 40 AND text IS NOT NULL
-""",
-        ),
-        "mm_feature_extract": (
-            lambda s: multimodal.extract_features(
-                multimodal.as_multimodal(s.table("documents"))
-            ).select("doc_id", "mean_intensity"),
-            multimodal.extract_features_oracle("documents", "text", 64),
-        ),
-        # multimodal frame sampling: JVM-side explode of the frame index,
-        # duration derived from payload size -> fully oracle-checkable
-        # perceptual-hash near-dup pairs (the last pytest-only
-        # capability until round 7): aHash over the deterministic fake
-        # decode, 16-bit LSH banding, popcount verify — the DuckDB twin
-        # replays the md5 pixel stream and states the band predicate
-        # explicitly; a doc_id+10M twin copy plants exact duplicates so
-        # the result is non-empty at every SF
-        "mm_phash_pairs": (
-            _mm_phash_pairs,
-            multimodal.phash_pairs_oracle(),
-        ),
-        "mm_frame_sample": (
-            lambda s: multimodal.sample_frames(
-                multimodal.as_multimodal(s.table("documents"))
-            ).select("doc_id", "frame_ms"),
-            multimodal.sample_frames_oracle(),
-        ),
-        # pandas-UDF tier, oracle-checked: BPE-ish regex token counts
-        # (duckdb regexp_extract_all uses the same RE2-compatible pattern)
-        "udf_bpeish_token_count": (
-            lambda s: s.table("documents").select(
-                "doc_id",
-                udfs.bpeish_token_count("text").cast("bigint").alias("n_bpeish"),
-            ),
-            r"""SELECT doc_id,
-                       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]')) AS n_bpeish
-                FROM documents""",
-        ),
-        # native DataFrame pivot (fillna(0) aligns Spark's null-for-absent
-        # with the oracle's count FILTER semantics)
-        "agg_pivot_status": (
-            lambda s: s.table("orders")
-            .groupBy("o_orderpriority")
-            .pivot("o_orderstatus", ["F", "O", "P"])
-            .count()
-            .na.fill(0, ["F", "O", "P"]),
-            """SELECT o_orderpriority,
-                      count(*) FILTER (o_orderstatus = 'F') AS "F",
-                      count(*) FILTER (o_orderstatus = 'O') AS "O",
-                      count(*) FILTER (o_orderstatus = 'P') AS "P"
-               FROM orders GROUP BY o_orderpriority""",
-        ),
-        # skew-flattening salted join; result row-identical to the plain
-        # join, which is exactly what the oracle asserts
-        "join_salted_skew": (
-            lambda s: joins.salted_join(
-                s.table("orders").select("o_orderkey", "o_custkey", "o_orderstatus"),
-                s.table("customer").select("c_custkey", "c_mktsegment")
-                .withColumnRenamed("c_custkey", "o_custkey"),
-                on="o_custkey",
-            )
-            .groupBy("o_orderstatus", "c_mktsegment")
-            .count()
-            .withColumnRenamed("count", "n"),
-            """SELECT o_orderstatus, c_mktsegment, count(*) AS n
-               FROM orders JOIN customer ON o_custkey = c_custkey
-               GROUP BY o_orderstatus, c_mktsegment""",
-        ),
-        # two-large-sides range join via bucketization: equi on bucket id
-        # + exact filter (vs the nested-loop a raw theta join costs);
-        # oracle is the plain theta join — identical pairs
-        "join_range_bucketed": (
-            lambda s: joins.range_join_bucketed(
-                s.table("lineitem").filter("l_orderkey < 2000")
-                .select("l_orderkey", "l_linenumber", "l_extendedprice"),
-                s.table("part").filter("p_partkey < 100")
-                .selectExpr("p_partkey", "p_retailprice * 10 AS lo",
-                            "p_retailprice * 10 + 500 AS hi"),
-                "l_extendedprice", "lo", "hi", 500.0,
-            ).select("l_orderkey", "l_linenumber", "p_partkey"),
-            """SELECT l_orderkey, l_linenumber, p_partkey
-               FROM (SELECT l_orderkey, l_linenumber, l_extendedprice
-                     FROM lineitem WHERE l_orderkey < 2000) l
-               JOIN (SELECT p_partkey, p_retailprice * 10 AS lo,
-                            p_retailprice * 10 + 500 AS hi
-                     FROM part WHERE p_partkey < 100) p
-               ON l.l_extendedprice >= p.lo AND l.l_extendedprice <= p.hi""",
-        ),
-        "join_asof_forward": (
-            lambda s: joins.asof_join(
-                s.table("events").filter("event_type = 'error'")
-                .select("event_id", "user_id", "ts"),
-                s.table("events").filter("event_type = 'purchase'")
-                .select("user_id", "ts", "value"),
-                on="user_id", left_time="ts", right_time="ts",
-                value_cols=["value"], direction="forward",
-            ),
-            joins.asof_join_oracle(
-                "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')",
-                "(SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')",
-                on="user_id", left_time="ts", right_time="ts",
-                left_cols=["event_id", "user_id", "ts"], value_cols=["value"],
-                direction="forward",
-            ),
-        ),
-        # tolerance-bounded as-of (pandas merge_asof-style): only matches
-        # within the last hour count — the window bound that makes the
-        # join bucketable at scale
-        "join_asof_tolerance": (
-            lambda s: joins.asof_join(
-                s.table("events").filter("event_type = 'error'")
-                .select("event_id", "user_id", "ts"),
-                s.table("events").filter("event_type = 'click'")
-                .select("user_id", "ts", "value"),
-                on="user_id", left_time="ts", right_time="ts",
-                value_cols=["value"], tolerance_s=3600,
-            ),
-            joins.asof_join_oracle(
-                "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')",
-                "(SELECT user_id, ts, value FROM events WHERE event_type = 'click')",
-                on="user_id", left_time="ts", right_time="ts",
-                left_cols=["event_id", "user_id", "ts"], value_cols=["value"],
-                tolerance_s=3600,
-            ),
-        ),
-        "join_asof_events": (
-            lambda s: joins.asof_join(
-                s.table("events").filter("event_type = 'error'")
-                .select("event_id", "user_id", "ts"),
-                s.table("events").filter("event_type = 'click'")
-                .select("user_id", "ts", "value"),
-                on="user_id", left_time="ts", right_time="ts",
-                value_cols=["value"],
-            ),
-            joins.asof_join_oracle(
-                "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')",
-                "(SELECT user_id, ts, value FROM events WHERE event_type = 'click')",
-                on="user_id", left_time="ts", right_time="ts",
-                left_cols=["event_id", "user_id", "ts"], value_cols=["value"],
-            ),
-        ),
-        # --- round-4c additions ---
-        # sub-document (C4-style line/block-level) dedup with reassembly
-        "dedup_block_level": (
-            lambda s: dedup.block_dedup(s.table("documents")),
-            dedup.block_dedup_oracle(),
-        ),
-        # the published C4 heuristic filter set, one flag per rule
-        "text_c4_filters": (
-            lambda s: text.c4_filters(s.table("documents")),
-            text.c4_filters_oracle(),
-        ),
-        # SemDeDup-style semantic dedup: k-means cluster, prune
-        # within-cluster near-dups (pairwise cosine >= tau), keep
-        # lowest-id representatives — the published cluster-then-prune
-        # scale shape (pair join keyed on cell_id, never all-pairs)
-        "dedup_semantic": (
-            lambda s: dedup.semantic_dedup(s.table("embeddings")),
-            dedup.semantic_dedup_oracle(),
-        ),
-        # per-domain token-budget mixture (The Pile / DoReMi-style
-        # mixture recipe): md5-ordered admission until each source hits
-        # its all-bigint weighted share of the corpus token budget
-        "sample_token_budget_mix": (
-            lambda s: sampling.token_budget_mix(s.table("documents")),
-            sampling.token_budget_mix_oracle(),
-        ),
-        # round 13: domain-mixture water-filling solver — target
-        # weights + token budget + max-epochs repeat cap -> per-domain
-        # draws via the closed-form capacity-ratio prefix scan;
-        # all-BIGINT cross-multiplication, corpus collapses to a
-        # |domains|-row stats table after ONE aggregate
-        "sample_mixture_waterfill": (
-            lambda s: sampling.mixture_waterfill(s.table("documents")),
-            sampling.mixture_waterfill_oracle(),
-        ),
-        # deterministic PPS systematic sampling (round 7): exactly n
-        # picks per source, probability proportional to integer weight;
-        # two-phase bucket prefix sums on the Spark side vs a single
-        # window on the oracle side — identical integers either way
-        "sample_pps_systematic": (
-            lambda s: sampling.pps_systematic_sample(s.table("documents")),
-            sampling.pps_systematic_sample_oracle(),
-        ),
-        # temperature-based source mixing (multilingual-LLM sampling)
-        "sample_temperature_mix": (
-            lambda s: sampling.temperature_mix(s.table("documents"))
-            .select("doc_id", "source"),
-            sampling.temperature_mix_oracle(cols="t.doc_id, t.source"),
-        ),
-        # round 13: the nprobe TUNING CURVE — recall@k vs scored-pair
-        # cost at each probe width over ONE checkpointed index build;
-        # |nprobes| probe joins, never |nprobes| index builds
-        "sim_recall_frontier": (
-            lambda s: similarity.ivf_recall_frontier(
-                s.table("embeddings"),
-                s.table("embeddings").filter(F.col("vec_id") < 10),
-            ),
-            similarity.ivf_recall_frontier_oracle(),
-        ),
-        # ANN acceptance gate: IVF recall@k vs exact brute force
-        "sim_recall_at_k": (
-            lambda s: similarity.recall_at_k(
-                s.table("embeddings"),
-                s.table("embeddings").filter(F.col("vec_id") < 10),
-            ),
-            similarity.recall_at_k_oracle(),
-        ),
-        # deterministic hash-sharded training-set write -> read-back counts
-        "sink_sharded_write": (_sink_sharded_write, _SINK_SHARDED_ORACLE),
-        # Lloyd's k-means centroid training (the IVF index-build step),
-        # flattened to hashable (cell, pos, component, n_members) rows
-        "sim_kmeans_fit": (
-            lambda s: similarity.kmeans_fit(s.table("embeddings")),
-            similarity.kmeans_fit_oracle(),
-        ),
-        # top principal component by power iteration (round 10) — the
-        # dimensionality-reduction substrate; Gram matrix never forms
-        "sim_pca_component": (
-            lambda s: similarity.pca_power_component(s.table("embeddings")),
-            similarity.pca_power_component_oracle(),
-        ),
-        # join-key skew diagnostic: heavy hitters + global skew ratio
-        "profile_key_skew": (
-            lambda s: profiling.key_skew(s.table("events"), "user_id"),
-            profiling.key_skew_oracle("events", "user_id"),
-        ),
-        # round 12: PSI drift gate between two cohort distributions —
-        # 1-row edge/total broadcasts + one n_buckets-group count
-        # shuffle; nothing after the scan scales with the data
-        "profile_drift_psi": (
-            lambda s: profiling.drift_psi(
-                s.table("events"), "value", "event_type",
-                "click", "purchase"),
-            profiling.drift_psi_oracle(
-                "events", "value", "event_type", "click", "purchase"),
-        ),
-        # round 12: KS drift twin — worst cumulative displacement of
-        # the bucketed CDFs (PSI sees per-bucket mass, KS sees a shift
-        # smeared across every bucket); same one-count-shuffle shape,
-        # the CDF window runs over the bounded n_buckets count rows
-        "profile_drift_ks": (
-            lambda s: profiling.drift_ks(
-                s.table("events"), "value", "event_type",
-                "click", "purchase"),
-            profiling.drift_ks_oracle(
-                "events", "value", "event_type", "click", "purchase"),
-        ),
-        # winsorized per-group stats: exact percentiles broadcast back,
-        # clipped re-aggregation (outlier-robust metric gate)
-        "profile_robust_stats": (
-            lambda s: profiling.robust_stats(s.table("events")),
-            profiling.robust_stats_oracle(),
-        ),
-        # one-pass pairwise Pearson correlations, long-form via stack
-        "profile_correlations": (
-            lambda s: profiling.correlation_matrix(
-                s.table("lineitem"),
-                ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-            ),
-            profiling.correlation_matrix_oracle(
-                "lineitem",
-                ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-            ),
-        ),
-        # fixed-range histogram with densified empty bins
-        "profile_histogram": (
-            lambda s: profiling.histogram(
-                s.table("orders"), "o_totalprice", 0.0, 600000.0, 12
-            ),
-            profiling.histogram_oracle(
-                "orders", "o_totalprice", 0.0, 600000.0, 12
-            ),
-        ),
-        # fastText-shaped hashed uni+bigram linear classifier inference:
-        # broadcast V-row weight table, in-row gram build, one explode,
-        # fixed-point integer sums so the sigmoid input is order-free
-        "text_classifier_score": (
-            lambda s: text.classifier_score(
-                s.table("documents"), text.make_hash_weights(s)
-            ),
-            text.classifier_score_oracle(),
-        ),
-        # round 12: reliability-diagram bins for the classifier —
-        # where mean score and empirical positive rate diverge is
-        # where a score threshold misbehaves; n_bins-row output
-        "text_calibration_bins": (
-            lambda s: text.calibration_bins(
-                s.table("documents"), text.make_hash_weights(s)
-            ),
-            text.calibration_bins_oracle(),
-        ),
-        # deterministic portable HLL: the md5-derived register table is
-        # itself the driver-checked artifact (unlike the opaque native
-        # sketch bytes of distinct_sketches)
-        "profile_hll_registers": (
-            lambda s: profiling.hll_registers(s.table("events")),
-            profiling.hll_registers_oracle(),
-        ),
-        # ... and the estimate derived from those registers, with the
-        # exact count joined in so the error is audit-visible
-        "profile_hll_estimate": (
-            lambda s: profiling.hll_estimate(s.table("events")),
-            profiling.hll_estimate_oracle(),
-        ),
-        # round 8: the native Datasketches tier becomes sweep-checkable —
-        # both estimators' error bounds asserted per group; the oracle
-        # recomputes exact + portable and pins the native flag TRUE
-        "profile_hll_native_vs_portable": (
-            lambda s: profiling.hll_native_vs_portable(s.table("events")),
-            profiling.hll_native_vs_portable_oracle(),
-        ),
-        # count-min sketch heavy hitters: two disjoint shards sketched
-        # independently and cell-sum-merged on the Spark side, one-pass
-        # build on the oracle side — the hash match IS the merge law
-        "profile_cms_heavy_hitters": (
-            lambda s: profiling.cms_heavy_hitters(s.table("events")),
-            profiling.cms_heavy_hitters_oracle(),
-        ),
-        # binned quantile sketch (third mergeable family after HLL and
-        # CMS): fixed-point bins, two-shard build + per-bin-sum merge on
-        # the Spark side vs one-pass oracle — hash match = merge law
-        "profile_quantile_sketch": (
-            lambda s: profiling.binned_quantiles(s.table("events")),
-            profiling.binned_quantiles_oracle(),
-        ),
-        # KMV theta sketch (fourth mergeable family): pairwise
-        # INTERSECTION + UNION distinct estimates — the set operation
-        # HLL registers cannot express; md5-derived k-min state makes
-        # the estimates engine-identical (integer thresholds into IEEE
-        # division). Merge law + error bound proven in tests.
-        "profile_theta_setops": (
-            lambda s: profiling.theta_set_estimates(
-                profiling.theta_sketch(s.table("events"))
-            ),
-            profiling.theta_estimates_oracle(),
-        ),
-        # Lee-et-al-style cross-document duplicated-substring spans:
-        # fixed-length char grams every stride chars, flagged when the
-        # gram occurs in >1 doc; per-doc dup fraction is the curation
-        # signal. Shuffle key is the 52-bit gram hash, never span text.
-        "dedup_substring_spans": (
-            lambda s: dedup.substring_span_stats(s.table("documents")),
-            dedup.substring_span_stats_oracle(),
-        ),
-        # CCNet-style cross-document segment dedup (round 7): drop every
-        # copy of a segment seen in >=2 docs and fingerprint the cleaned
-        # text; occurrence counts group on a 52-bit hash with map-side
-        # combine, reassembly via sort_array (no window)
-        "dedup_segments_ccnet": (
-            lambda s: dedup.segment_dedup(s.table("documents")),
-            dedup.segment_dedup_oracle(),
-        ),
-        # fixed-point PageRank centrality over a bounded-degree LSH
-        # similarity graph (round 7): the link-analysis quality signal
-        # (CommonCrawl harmonic-centrality ranking) as 3 unrolled
-        # integer iterations — bit-identical in any engine
-        "graph_pagerank_sim": (
-            lambda s: graph.pagerank(
-                graph.knn_edges(s.table("embeddings")), iterations=3
-            ),
-            graph.pagerank_oracle(graph.knn_edges_oracle_cte(), iterations=3),
-        ),
-        # per-node triangle counts over the same similarity graph
-        # (round 10b): the duplicate-community density signal, via
-        # degree-ordered orientation (each wedge center O(sqrt(m))
-        # out-degree — skew-proof); oracle replays with NO orientation
-        # at all (id-ordered a<b<c triple join) — both count each
-        # triangle exactly once
-        "graph_triangle_count": (
-            lambda s: graph.triangle_count(
-                graph.knn_edges(s.table("embeddings"))
-            ),
-            graph.triangle_count_oracle(graph.knn_edges_oracle_cte()),
-        ),
-        # contrastive-training hard-negative mining (round 10b): top-k
-        # most-similar DIFFERENT-label vectors per sampled query —
-        # brute baseline (broadcast query side, label gate in the join
-        # condition); scale path = ann_join + label filter + re-rank
-        "sim_hard_negatives": (
-            lambda s: similarity.hard_negatives(s.table("embeddings")),
-            similarity.hard_negatives_oracle(),
-        ),
-        # GPT-3/PaLM-style n-gram decontamination through a broadcast
-        # Bloom bit array: the training-side membership test is a pure
-        # in-row projection (no train-side shuffle at all); exact
-        # verification joined in so the FP gap is audit-visible
-        "dedup_bloom_ngram_decontaminate": (
-            lambda s: dedup.bloom_ngram_decontaminate(s.table("documents")),
-            dedup.bloom_ngram_decontaminate_oracle(),
-        ),
-        # JSON-lines write -> schema-on-read -> aggregate (source path)
-        "source_orc_roundtrip": (
-            _source_orc_roundtrip, _SOURCE_ORC_ORACLE,
-        ),
-        "source_jsonl_roundtrip": (
-            _source_jsonl_roundtrip, _SOURCE_JSONL_ORACLE,
-        ),
-        # CSV write -> schema-on-read -> cross-source join (source path)
-        "source_csv_roundtrip": (
-            _source_csv_roundtrip, _SOURCE_CSV_ORACLE,
-        ),
-        # two-generation parquet dataset read under mergeSchema
-        "source_schema_evolution": (
-            _source_schema_evolution, _SOURCE_EVOLUTION_ORACLE,
-        ),
-        # Z-order clustered write -> read-back aggregate (the layout
-        # lever for multi-dimensional file pruning)
-        "sink_zorder_roundtrip": (
-            _sink_zorder_roundtrip, _SINK_ZORDER_ORACLE,
-        ),
-        # the composed curation pipeline: prepare -> C4 -> dedup ->
-        # sample -> per-source stats, one plan, two shuffles
-        "pipeline_curation": (_pipeline_curation, _PIPELINE_CURATION_ORACLE),
-        # the same composition upgraded to the published cluster-then-
-        # prune recipe: C4 gate -> SemDeDup over kept embeddings ->
-        # token-budget mixture -> per-source stats, one composed plan
-        "pipeline_semantic_curation": (
-            _pipeline_semantic_curation, _pipeline_semantic_oracle(),
-        ),
-        # perplexity-proxy quality score: mean unigram logprob under the
-        # corpus's own top-V distribution (CCNet-style filter stand-in)
-        "text_unigram_logprob": (
-            lambda s: text.unigram_logprob(s.table("documents")),
-            text.unigram_logprob_oracle(),
-        ),
-        # interpolated-bigram LM scoring (round 7): one step closer to
-        # the CCNet KenLM gate — Jelinek-Mercer lam*P(w|prev) +
-        # (1-lam)*P_uni(w) under the corpus's own top-B/top-V tables,
-        # per-token logs snapped to 1e-6 fixed point so the per-doc
-        # mean is summation-order-free across engines
-        "text_bigram_logprob": (
-            lambda s: text.bigram_interp_logprob(s.table("documents")),
-            text.bigram_interp_logprob_oracle(),
-        ),
-        # classifier TRAINING (round 7): full-batch logistic GD over
-        # hashed-gram count features, label = lang=='en'; exact integer
-        # gradients (errors snap to 1e-6 fixed point first) make the
-        # TRAINED weight table engine-identical — the missing half of
-        # text_classifier_score's inference
-        "text_lr_train": (
-            lambda s: text.lr_train_hashed(s.table("documents")),
-            text.lr_train_hashed_oracle(),
-        ),
-        # round 8: BPE merge-rule training — the tokenizer-training step
-        # on the same engine (Sennrich 2016); bounded word-shape table,
-        # one pair-count aggregate + 1-row argmax + literal replace per
-        # iteration; oracle is the iteration-unrolled CTE chain
-        "text_bpe_train": (
-            lambda s: text.bpe_train_merges(s.table("documents")),
-            text.bpe_train_merges_oracle(),
-        ),
-        # the serving half: apply the trained merges to the FULL vocab,
-        # per-doc token budgets (broadcast-rules + distinct-vocab join)
-        "text_bpe_encode": (
-            lambda s: text.bpe_encode(
-                s.table("documents"),
-                text.bpe_train_merges(s.table("documents")),
-            ),
-            text.bpe_encode_oracle(),
-        ),
-        # ordered funnel: per-user earliest reach time per step, each
-        # step constrained to follow the previous (one user-keyed agg)
-        "ts_funnel_steps": (
-            lambda s: timeseries.funnel(s.table("events")),
-            timeseries.funnel_oracle(),
-        ),
-        # weekly cohort retention curve substrate
-        "ts_cohort_retention": (
-            lambda s: timeseries.cohort_retention(s.table("events")),
-            timeseries.cohort_retention_oracle(),
-        ),
-        # incremental corpus update: new batch deduped against the
-        # existing corpus (exact md5 anti-join -> LSH candidates vs the
-        # corpus band table -> Jaccard verify)
-        "dedup_incremental": (
-            lambda s: dedup.incremental_dedup(
-                s.table("documents").filter(F.col("doc_id") >= 400),
-                s.table("documents").filter(F.col("doc_id") < 400),
-            ),
-            dedup.incremental_dedup_oracle(),
-        ),
-        # market-basket pair affinity with lift (per-basket-bounded
-        # self-join; rounded-lift TakeOrdered)
-        "affinity_basket_pairs": (
-            lambda s: affinity.basket_pairs(s.table("lineitem")),
-            affinity.basket_pairs_oracle(),
-        ),
-        # type-2 SCD merge: changed keys close their open version and
-        # append a new one; history stays immutable
-        "join_scd2_merge": (
-            lambda s: joins.scd2_merge(
-                s.table("customer").select(
-                    "c_custkey", "c_name", "c_acctbal",
-                    F.lit("2024-01-01").cast("timestamp")
-                    .alias("valid_from"),
-                    F.lit(None).cast("timestamp").alias("valid_to"),
-                    F.lit(True).alias("is_current"),
-                ),
-                s.table("customer").select(
-                    "c_custkey", "c_name",
-                    F.when(
-                        F.col("c_custkey") % 10 == 0,
-                        F.col("c_acctbal") + 100,
-                    ).otherwise(F.col("c_acctbal")).alias("c_acctbal"),
-                ),
-                "c_custkey", ["c_name", "c_acctbal"], "2024-06-01",
-            ),
-            """
-            SELECT c_custkey, c_name, c_acctbal,
-                   TIMESTAMP '2024-01-01' AS valid_from,
-                   NULL::TIMESTAMP AS valid_to, true AS is_current
-            FROM customer WHERE c_custkey % 10 <> 0
-            UNION ALL
-            SELECT c_custkey, c_name, c_acctbal,
-                   TIMESTAMP '2024-01-01', TIMESTAMP '2024-06-01', false
-            FROM customer WHERE c_custkey % 10 = 0
-            UNION ALL
-            SELECT c_custkey, c_name, c_acctbal + 100,
-                   TIMESTAMP '2024-06-01', NULL::TIMESTAMP, true
-            FROM customer WHERE c_custkey % 10 = 0
-            """,
-        ),
-        # round 13: snapshot diff audit — one full-outer key join
-        # classifying added/removed/changed/unchanged + 4-group count
-        # (old/new snapshots derived in-query from customer)
-        "join_snapshot_diff": (
-            lambda s: joins.snapshot_diff(
-                s.table("customer")
-                .filter(F.col("c_custkey") % 89 != 0)
-                .select("c_custkey", "c_name", "c_acctbal"),
-                s.table("customer")
-                .filter(F.col("c_custkey") % 97 != 0)
-                .select(
-                    "c_custkey", "c_name",
-                    F.when(F.col("c_custkey") % 10 == 0,
-                           F.col("c_acctbal") + 100)
-                    .otherwise(F.col("c_acctbal")).alias("c_acctbal"),
-                ),
-                "c_custkey", ["c_name", "c_acctbal"],
-            ),
-            joins.snapshot_diff_oracle(
-                "SELECT c_custkey, c_name, c_acctbal FROM customer "
-                "WHERE c_custkey % 89 <> 0",
-                "SELECT c_custkey, c_name, CASE WHEN c_custkey % 10 = 0 "
-                "THEN c_acctbal + 100 ELSE c_acctbal END AS c_acctbal "
-                "FROM customer WHERE c_custkey % 97 <> 0",
-                "c_custkey", ["c_name", "c_acctbal"],
-            ),
-        ),
-        # round 13: event-time lateness histogram — per-key running-max
-        # window in exact integer microseconds + bounded-bucket reduce;
-        # the measurement that sizes a watermark delay
-        # the fixture stream is perfectly ordered (every lateness would
-        # be 0), so the workload derives a jittered arrival order
-        # in-query — a deterministic multiplicative shuffle of the low
-        # bits simulating network reordering; the audit is what's
-        # under test, against the same derivation in the oracle
-        "ts_lateness_audit": (
-            lambda s: timeseries.lateness_audit(
-                s.table("events").withColumn(
-                    "arrival",
-                    F.col("event_id")
-                    + (F.col("event_id") * F.lit(2654435761)) % 16,
-                ),
-                arrival_col="arrival", bucket_minutes=1,
-                tie_col="event_id",
-            ),
-            timeseries.lateness_audit_oracle(
-                table="(SELECT *, event_id + (event_id * 2654435761) "
-                      "% 16 AS arrival FROM events)",
-                arrival_col="arrival", bucket_minutes=1,
-                tie_col="event_id",
-            ),
-        ),
-        # round 13: time-weighted average under LOCF — the
-        # irregular-sampling mean (TimescaleDB time_weight shape);
-        # exact integer-microsecond durations x 1e-3 fixed-point
-        # values, ONE key exchange serving both window and group-by
-        "ts_time_weighted_avg": (
-            lambda s: timeseries.time_weighted_avg(s.table("events")),
-            timeseries.time_weighted_avg_oracle(),
-        ),
-        # round 13: PMI collocation mining — sliding-window
-        # co-occurrence pairs ranked by pointwise mutual information;
-        # the PMI argument is ONE double division of exact BIGINT
-        # products so a single ln + 1e-6 snap is engine-stable
-        "text_pmi_collocations": (
-            lambda s: text.pmi_collocations(s.table("documents")),
-            text.pmi_collocations_oracle(),
-        ),
-        # round 13: per-COLUMN snapshot drift audit — null-rate bp,
-        # exact distinct counts, 1e-3 fixed-point means per column
-        # across a baseline/current time split; the schema-level
-        # companion to the value-level PSI/KS gates (the fixture has
-        # no nulls, so a nullable column is derived in-query — the
-        # audit is what's under test, same derivation in the oracle)
-        "profile_snapshot_drift": (
-            lambda s: profiling.snapshot_drift(
-                s.table("events").withColumn(
-                    "value_n",
-                    F.expr("CASE WHEN value < 20 THEN NULL ELSE value END"),
-                ),
-                cohort_sql="ts >= TIMESTAMP '2024-01-16'",
-                columns=["event_type", "props", "value_n", "user_id"],
-                numeric_cols=["value_n", "user_id"],
-            ),
-            profiling.snapshot_drift_oracle(
-                table="(SELECT *, CASE WHEN value < 20 THEN NULL "
-                      "ELSE value END AS value_n FROM events)",
-                cohort_sql="ts >= TIMESTAMP '2024-01-16'",
-                columns=["event_type", "props", "value_n", "user_id"],
-                numeric_cols=["value_n", "user_id"],
-            ),
-        ),
-        # round 13: nearest-direction as-of join — the third merge_asof
-        # direction (backward/forward exist above); both candidates
-        # from ONE keyed exchange + one sorted pass, exact
-        # integer-microsecond distance compare, backward tie-break,
-        # tolerance bounding each direction BEFORE the compare
-        "join_asof_nearest": (
-            lambda s: joins.asof_join_nearest(
-                s.table("events").filter("event_type = 'error'")
-                .select("event_id", "user_id", "ts"),
-                s.table("events").filter("event_type = 'click'")
-                .select("user_id", "ts", "value"),
-                on="user_id", left_time="ts", right_time="ts",
-                value_cols=["value"], tolerance_s=86400,
-            ),
-            joins.asof_join_nearest_oracle(
-                "(SELECT event_id, user_id, ts FROM events "
-                "WHERE event_type = 'error')",
-                "(SELECT user_id, ts, value FROM events "
-                "WHERE event_type = 'click')",
-                on="user_id", left_time="ts", right_time="ts",
-                left_id="event_id",
-                left_cols=["event_id", "user_id", "ts"],
-                value_cols=["value"], tolerance_s=86400,
-            ),
-        ),
-        # round 13: SCD2 point-in-time lookup — THE consumption pattern
-        # for versioned history: fold the events CDC feed into an SCD2
-        # history batch-side (the streaming sink's batch twin), then
-        # each event picks the version current AT its timestamp via a
-        # broadcast equi-join with the interval test as residual (the
-        # fact side never shuffles)
-        "join_scd2_pointlookup": (
-            lambda s: joins.scd2_point_in_time(
-                s.table("events").select("event_id", "user_id", "ts"),
-                joins.scd2_history_from_cdc(s.table("events")),
-            ).select("event_id", "user_id", "ts",
-                     F.col("dim_event_type")),
-            _scd2_pointlookup_oracle(),
-        ),
-        # type-1 upsert (batch MERGE): updated customer rows replace
-        # same-key rows, the standing table never shuffles
-        "join_upsert_snapshot": (
-            lambda s: joins.upsert(
-                s.table("customer").select(
-                    "c_custkey", "c_name", "c_acctbal"
-                ),
-                s.table("customer").filter("c_custkey % 10 = 0").select(
-                    "c_custkey", "c_name",
-                    (F.col("c_acctbal") + 100).alias("c_acctbal"),
-                ),
-                "c_custkey",
-            ),
-            """
-            SELECT c_custkey, c_name, c_acctbal + 100 AS c_acctbal
-            FROM customer WHERE c_custkey % 10 = 0
-            UNION ALL
-            SELECT c_custkey, c_name, c_acctbal
-            FROM customer WHERE c_custkey % 10 <> 0
-            """,
-        ),
-        # interval-interval overlap join, bucketized equi + canonical
-        # first-bucket emission (no dedup shuffle); naive oracle
-        "join_interval_overlap": (
-            lambda s: joins.interval_overlap_join(
-                s.table("events").filter("event_type = 'error'").select(
-                    F.col("event_id").alias("err_id"), "user_id",
-                    F.unix_timestamp("ts").alias("e_lo"),
-                    (F.unix_timestamp("ts") + 3600).alias("e_hi"),
-                ),
-                s.table("events").filter("event_type = 'purchase'").select(
-                    F.col("event_id").alias("purch_id"), "user_id",
-                    F.unix_timestamp("ts").alias("p_lo"),
-                    (F.unix_timestamp("ts") + 1800).alias("p_hi"),
-                ),
-                "e_lo", "e_hi", "p_lo", "p_hi", 3600.0, on="user_id",
-            ).select("err_id", "purch_id"),
-            """
-            SELECT a.err_id, b.purch_id
-            FROM (SELECT event_id AS err_id, user_id,
-                         epoch(ts)::BIGINT AS e_lo,
-                         epoch(ts)::BIGINT + 3600 AS e_hi
-                  FROM events WHERE event_type = 'error') a
-            JOIN (SELECT event_id AS purch_id, user_id,
-                         epoch(ts)::BIGINT AS p_lo,
-                         epoch(ts)::BIGINT + 1800 AS p_hi
-                  FROM events WHERE event_type = 'purchase') b
-            ON a.user_id = b.user_id
-               AND a.e_lo <= b.p_hi AND b.p_lo <= a.e_hi
-            """,
-        ),
-        # edit-distance join via positional q-gram blocking; the naive
-        # oracle proves the candidate generation lossless
-        "join_fuzzy_names": (
-            lambda s: joins.fuzzy_join(
-                s.table("part").filter(F.col("p_partkey") < 100).select(
-                    F.col("p_partkey").alias("id_a"),
-                    F.col("p_name").alias("name_a"),
-                ),
-                s.table("part").select(
-                    F.col("p_partkey").alias("id_b"),
-                    F.col("p_name").alias("name_b"),
-                ),
-                "id_a", "name_a", "id_b", "name_b", max_dist=1,
-            ).filter(F.col("id_a") < F.col("id_b")),
-            joins.fuzzy_join_oracle(
-                "SELECT p_partkey AS id_a, p_name AS name_a FROM part"
-                " WHERE p_partkey < 100",
-                "SELECT p_partkey AS id_b, p_name AS name_b FROM part",
-                "id_a", "name_a", "id_b", "name_b", max_dist=1,
-                extra_cond="AND a.id_a < b.id_b",
-            ),
-        ),
-        # mergeable hourly rollup: two disjoint halves rolled up
-        # independently, merged via the state algebra, finalized — the
-        # oracle is the rollup of ALL raw rows (proves merge lossless)
-        "ts_mergeable_rollup": (
-            lambda s: timeseries.finalize_rollup(
-                timeseries.merge_rollups(
-                    timeseries.mergeable_rollup(
-                        s.table("events").filter("event_id % 2 = 0")
-                    ),
-                    timeseries.mergeable_rollup(
-                        s.table("events").filter("event_id % 2 = 1")
-                    ),
-                )
-            ),
-            timeseries.mergeable_rollup_oracle(),
-        ),
-        # STREAMING driver-visible workload (first CORRECTNESS row whose
-        # compute path goes through a streaming query — VERDICT r4 item
-        # 8): events split into 4 files, replayed as a bounded file
-        # stream through the foreachBatch materialized-rollup sink (one
-        # state merge per trigger), finalized standing table returned;
-        # the oracle is the batch rollup of ALL raw rows
-        "streaming_rollup_result": (
-            _streaming_rollup_result,
-            timeseries.mergeable_rollup_oracle(),
-        ),
-        # STREAMING drift monitoring (round 12): per-day PSI of the
-        # purchase value stream vs the batch click reference — bucketed
-        # windowed counts through a real 4-trigger streaming replay,
-        # PSI finalized batch-side; STRONG oracle (the batch SQL twin)
-        "streaming_drift_psi_result": (
-            _streaming_drift_psi_result,
-            _STREAMING_DRIFT_PSI_ORACLE,
-        ),
-        # STREAMING k-means model maintenance (round 12): the MODEL
-        # state-algebra class (batch contribution depends on observed
-        # state) — 4-trigger replay over hash-split batches, finalized
-        # centroids hash-checked vs the unrolled-stage SQL twin
-        "streaming_kmeans_result": (
-            _streaming_kmeans_result,
-            _streaming_kmeans_oracle(),
-        ),
-        # STREAMING windowed top-k (round 12): trending keys per
-        # event-time day through a real 4-trigger replay; state is
-        # O(open windows x distinct keys) — the honest exact-top-k
-        # cost (CMS is the sketch fallback); rank cut batch-side
-        "streaming_topk_result": (
-            _streaming_topk_result,
-            _STREAMING_TOPK_ORACLE,
-        ),
-        # STREAMING CDC-apply / SCD2 sink (round 13): the fourth sink
-        # state-algebra class (history-versioned — order-dependent,
-        # replay-guarded); 4 time-ordered triggers, each CDC-compacted
-        # and type-2-merged; history hash-checked vs the unrolled
-        # MATERIALIZED-CTE batch twin
-        "streaming_scd2_result": (
-            _streaming_scd2_result,
-            _streaming_scd2_oracle(),
-        ),
-        # STREAMING CDC deletes (round 13): 'error' rows are
-        # tombstones — close-at-event-time without re-open; keys may
-        # re-appear later as fresh versions
-        "streaming_scd2_tombstones_result": (
-            _streaming_scd2_tombstones_result,
-            _streaming_scd2_oracle(
-                tombstone_where="event_type = 'error'"),
-        ),
-        # STREAMING driver-visible workload #2 (round 6): the
-        # continuous-dedup corpus sink replayed over a bounded 2-file
-        # stream (deterministic batch order via file mtimes), final
-        # corpus hash-checked against the sequential two-stage batch
-        # twin — makes the atomic batch-commit path a CORRECTNESS row
-        "streaming_dedup_result": (
-            _streaming_dedup_result,
-            _streaming_dedup_oracle(),
-        ),
-        # STREAMING driver-visible workload #3 (round 6): the standing
-        # HLL register table built by 4 successive trigger max-merges —
-        # by the union law the streamed state equals DuckDB's one-pass
-        # register build, so the IDEMPOTENT-merge replay class gets a
-        # CORRECTNESS row next to the rollup sink's additive class
-        "streaming_hll_registers": (
-            _streaming_hll_result,
-            profiling.hll_registers_oracle(),
-        ),
-        # STREAMING driver-visible workload #4 (round 7): per-user
-        # session windows built by a stateful streaming query over 4
-        # file-triggers (sessions merge across batches), hash-checked
-        # against the batch gaps-and-islands twin
-        "streaming_sessions_result": (
-            _streaming_sessions_result,
-            _STREAMING_SESSIONS_ORACLE,
-        ),
-        # STREAMING driver-visible workload #5 (round 7): stateful
-        # stream-stream interval join — purchases attributed to prior
-        # clicks ACROSS trigger boundaries, hash-checked against the
-        # batch self-join twin (values pass through unrounded)
-        "streaming_attribution_result": (
-            _streaming_attribution_result,
-            _STREAMING_ATTRIBUTION_ORACLE,
-        ),
-        # STREAMING driver-visible workload #9 (round 10b): LEFT OUTER
-        # stream-stream interval join — unattributed clicks emitted as
-        # watermark-evicted NULL rows across time-ordered triggers with
-        # sentinel flush; hash-checked against the batch LEFT-JOIN twin
-        "streaming_attribution_left_result": (
-            _streaming_attribution_left_result,
-            _STREAMING_ATTRIBUTION_LEFT_ORACLE,
-        ),
-        # STREAMING driver-visible workload #10 (round 11): point-in-
-        # time (ASOF) enrichment — TWO chained stateful operators
-        # (LEFT OUTER interval join -> per-click max_by aggregate), the
-        # feature-store primitive; hash-checked against a batch window
-        # twin (deterministic whole-struct tie order on both sides)
-        "streaming_pit_enrich_result": (
-            _streaming_pit_enrich_result,
-            _STREAMING_PIT_ENRICH_ORACLE,
-        ),
-        # STREAMING driver-visible workload #6 (round 7): sliding
-        # event-time windows accumulated across 4 file-triggers,
-        # hash-checked against integer epoch-arithmetic window
-        # assignment (each event in exactly 2 overlapping windows)
-        "streaming_sliding_result": (
-            _streaming_sliding_result,
-            _STREAMING_SLIDING_ORACLE,
-        ),
-        # STREAMING driver-visible workload #7 (round 7): the custom
-        # stateful operator (applyInPandasWithState) with fixed-point
-        # BIGINT state — running totals exact across trigger
-        # boundaries, hash-checked against the batch GROUP BY
-        "streaming_running_totals_result": (
-            _streaming_running_totals_result,
-            _STREAMING_TOTALS_ORACLE,
-        ),
-        # STREAMING driver-visible workload #8 (round 7): stateless
-        # stream-static broadcast enrichment — every micro-batch joins
-        # the static customer dim, hash-checked against the batch join
-        "streaming_enrich_result": (
-            _streaming_enrich_result,
-            _STREAMING_ENRICH_ORACLE,
-        ),
-        # language ID with top1-top2 confidence margin (the fastText-
-        # style gate real pipelines filter on)
-        "text_language_confidence": (
-            lambda s: text.language_id_confidence(s.table("documents")),
-            text.language_id_confidence_oracle(),
-        ),
-        # DSIR selection: exp((w - w_max)/T) keep rates over the
-        # importance weights, md5-threshold membership (deterministic)
-        "text_dsir_resample": (
-            lambda s: text.dsir_resample(
-                s.table("documents"),
-                s.table("documents").filter(F.col("lang") == "de"),
-                temperature=0.05,
-            ),
-            text.dsir_resample_oracle(
-                target_where="lang = 'de'", temperature=0.05
-            ),
-        ),
-        # corpus top-k word bigrams: in-row zip_with pairing (no
-        # positional self-join), map-side-combined count, TakeOrdered
-        "text_ngram_counts": (
-            lambda s: text.ngram_counts(s.table("documents"), k=50),
-            text.ngram_counts_oracle(k=50),
-        ),
-        # DSIR-style importance weights: mean unigram log-likelihood
-        # ratio of a target domain vs the corpus's own distribution
-        # (broadcast top-V vocabs; corpus shuffles once for its counts)
-        "text_dsir_weights": (
-            lambda s: text.dsir_weights(
-                s.table("documents"),
-                s.table("documents").filter(F.col("lang") == "de"),
-            ),
-            text.dsir_weights_oracle(target_where="lang = 'de'"),
-        ),
-        # Okapi BM25 top-k retrieval, explode-free (per-row tf for the
-        # fixed query; 1-row corpus stats broadcast; TakeOrdered top-k)
-        "text_bm25_topk": (
-            lambda s: text.bm25_topk(
-                s.table("documents"), ["hash", "join", "vector"], k=25
-            ),
-            text.bm25_topk_oracle(["hash", "join", "vector"], k=25),
-        ),
-        # round 13: SentencePiece-style unigram-LM tokenizer training
-        # (hard-EM Viterbi prune loop over a substring seed vocab;
-        # integer fixed-point costs make the DP and its unrolled
-        # array-DP DuckDB twin bit-identical)
-        "text_unigram_train": (
-            lambda s: text.unigram_lm_train(s.table("documents")),
-            text.unigram_lm_train_oracle(),
-        ),
-        # round 13: the unigram family's serving half — Viterbi
-        # tokenization under the trained vocab over the distinct-word
-        # table (Arrow-batched UDF, broadcast model), emitting per-doc
-        # token budgets + total piece log-likelihood
-        "text_unigram_encode": (
-            lambda s: text.unigram_encode(
-                s.table("documents"),
-                text.unigram_lm_train(s.table("documents")),
-            ),
-            text.unigram_encode_oracle(),
-        ),
-        # round 13: curriculum binning — quality-ranked equal-count
-        # tiers via ntile (one range exchange, deterministic id
-        # tie-break) + tiny bucket aggregate
-        "sample_curriculum_buckets": (
-            lambda s: sampling.curriculum_buckets(
-                text.quality_score(s.table("documents"))),
-            sampling.curriculum_buckets_oracle(
-                text.quality_score_oracle()),
-        ),
-        # round 13: per-group winsorization audit — exact percentile
-        # bounds (1e-6-snapped before clipping), broadcast bounds join,
-        # fixed-point clipped means
-        "profile_winsorize": (
-            lambda s: profiling.winsorize_stats(s.table("events")),
-            profiling.winsorize_stats_oracle(),
-        ),
-        # round 13: cross-source duplication matrix — the provenance
-        # view over the verified MinHash near-dup pairs (pair-bounded
-        # label joins + sources^2 reduce)
-        "dedup_cross_source_matrix": (
-            lambda s: dedup.cross_source_matrix(s.table("documents")),
-            dedup.cross_source_matrix_oracle(),
-        ),
-        # round 13: inter-labeler agreement (Cohen's kappa) between the
-        # thresholded hashed-ngram classifier and the lang label —
-        # classifier plan + co-partitioned label join + 1-row aggregate
-        "text_label_agreement": (
-            lambda s: text.label_agreement(
-                s.table("documents"), text.make_hash_weights(s)),
-            text.label_agreement_oracle(),
-        ),
-        # round 13: per-dimension embedding stats (collapse/staleness
-        # audit) — fixed-point moment sums, one dims-group aggregate
-        "profile_embedding_dims": (
-            lambda s: profiling.embedding_dim_stats(
-                s.table("embeddings")),
-            profiling.embedding_dim_stats_oracle(),
-        ),
-        # round 13: tokenizer fertility audit — tokens/word per lang
-        # under the trained BPE rules (bpe_encode's plan + one
-        # co-partitioned label join + tiny group reduce)
-        "text_tokenizer_fertility": (
-            lambda s: text.tokenizer_fertility(
-                s.table("documents"),
-                text.bpe_train_merges(s.table("documents")),
-            ),
-            text.tokenizer_fertility_oracle(),
-        ),
-        # round 13: regex PII scrub (emails/IPs/phones counted then
-        # masked, zero-shuffle narrow map). The fixture text carries no
-        # PII, so the workload derives a deterministic PII-bearing
-        # column IN-QUERY from doc_id (2/3 of docs get one of each
-        # class, 1/3 stay clean) — the scrub itself is what's under
-        # test, against the same derivation in the oracle
-        "text_pii_scrub": (
-            lambda s: text.pii_scrub(
-                s.table("documents").select(
-                    "doc_id",
-                    F.concat(
-                        F.substring(
-                            F.coalesce(F.col("text"), F.lit("")), 1, 80),
-                        F.when(
-                            F.col("doc_id") % 3 != 2,
-                            F.concat(
-                                F.lit(" contact user"),
-                                F.col("doc_id").cast("string"),
-                                F.lit("@example.com at 10.0."),
-                                (F.col("doc_id") % 256).cast("string"),
-                                F.lit(".7 or +1-555-0"),
-                                F.lpad((F.col("doc_id") % 1000)
-                                       .cast("string"), 3, "0"),
-                            ),
-                        ).otherwise(F.lit("")),
-                    ).alias("text"),
-                )
-            ),
-            "WITH src AS (\n"
-            "    SELECT doc_id,\n"
-            "           substr(coalesce(text, ''), 1, 80) ||\n"
-            "           CASE WHEN doc_id % 3 <> 2 THEN\n"
-            "                ' contact user' || doc_id ||\n"
-            "                '@example.com at 10.0.' || (doc_id % 256)\n"
-            "                || '.7 or +1-555-0' ||\n"
-            "                lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')\n"
-            "           ELSE '' END AS text\n"
-            "    FROM documents\n"
-            ")\n" + text.pii_scrub_oracle(table="src"),
-        ),
-        # round 13: the OTHER standard hybrid fusion — weighted min-max
-        # score fusion (rank-insensitive, keeps score margins where RRF
-        # flattens to 1/(c+rank)); IEEE-exact normalization over the
-        # two snapped top-depth lists, fused score snapped to 1e-6
-        "text_weighted_hybrid_topk": (
-            lambda s: text.weighted_hybrid_topk(
-                s.table("documents"), s.table("embeddings"),
-                ["hash", "join", "vector"], query_vec_id=0,
-            ),
-            text.weighted_hybrid_topk_oracle(
-                ["hash", "join", "vector"], query_vec_id=0,
-            ),
-        ),
-        # round 13: hybrid retrieval fusion — BM25 top-depth + cosine
-        # top-depth fused by reciprocal-rank (Cormack et al. 2009),
-        # fixed-point 1e12/(60+rank) contributions so the fused order
-        # is integer-exact on both engines; fusion is a union + tiny
-        # groupBy over the two <=depth-row lists, zero corpus shuffle
-        "text_rrf_hybrid_topk": (
-            lambda s: text.rrf_hybrid_topk(
-                s.table("documents"), s.table("embeddings"),
-                ["hash", "join", "vector"], query_vec_id=0,
-            ),
-            text.rrf_hybrid_topk_oracle(
-                ["hash", "join", "vector"], query_vec_id=0,
-            ),
-        ),
-        # deterministic per-group cap (class balancing; WindowGroupLimit)
-        "sample_capped_per_group": (
-            lambda s: sampling.capped_per_group(
-                s.table("documents"), k=40, group_col="lang"
-            ).select("doc_id", "lang"),
-            sampling.capped_per_group_oracle(
-                40, group_col="lang", cols="doc_id, lang"
-            ),
-        ),
-        # deterministic k-fold assignment (leak-free CV splits)
-        "sample_kfold": (
-            lambda s: sampling.kfold_assign(s.table("documents"))
-            .select("doc_id", "source", "fold"),
-            sampling.kfold_assign_oracle(cols="doc_id, source"),
-        ),
-        # round 6: GROUP-aware k-fold — near-dup clusters (LSH -> CC)
-        # land in one fold, so eval near-copies cannot leak into train;
-        # fold keyed on the cluster representative, singletons on
-        # their own id
-        "sample_leakage_safe_split": (
-            lambda s: sampling.leakage_safe_split(s.table("documents")),
-            sampling.leakage_safe_split_oracle(),
-        ),
-        # reproducible global shuffle (training-order randomization):
-        # md5 epoch key + ONE range exchange, no single-partition sort
-        "sample_global_shuffle": (
-            lambda s: sampling.deterministic_shuffle(s.table("documents"))
-            .select("doc_id", "source", "shuffle_key"),
-            sampling.deterministic_shuffle_oracle(cols="doc_id, source"),
-        ),
-        # the published Gopher/MassiveText quality rule set, one flag
-        # per rule (the c4_filters companion — together the standard
-        # public pre-training filter stack)
-        "text_gopher_filters": (
-            lambda s: text.gopher_filters(s.table("documents")),
-            text.gopher_filters_oracle(),
-        ),
-        # per-component embedding stats (dead dims, centering, range)
-        "sim_component_stats": (
-            lambda s: similarity.component_stats(s.table("embeddings")),
-            similarity.component_stats_oracle(),
-        ),
-        # product quantization: per-subspace L2 codebooks + m-code
-        # encoding (with the IVF tier, the IVF-PQ index family)
-        "sim_pq_encode": (
-            lambda s: similarity.pq_encode(
-                s.table("embeddings"), dim=64, m=4, k=4, n_iter=1
-            ),
-            similarity.pq_encode_oracle(dim=64, m=4, k=4, n_iter=1),
-        ),
-        # IVF probe over kmeans-trained centroids (index build + search)
-        "sim_ivf_topk_trained": (
-            lambda s: similarity.ivf_topk_trained(
-                s.table("embeddings"),
-                s.table("embeddings").filter(F.col("vec_id") < 10),
-            ),
-            similarity.ivf_topk_trained_oracle(),
-        ),
-        # the full IVF-PQ composition: coarse kmeans probe (nprobe
-        # cells) -> fixed-point asymmetric-distance shortlist over PQ
-        # codes (candidate vectors never touched) -> exact re-rank of
-        # refine*k survivors; corpus never shuffles
-        "sim_ivf_pq_topk": (
-            lambda s: similarity.ivf_pq_topk(
-                s.table("embeddings"),
-                s.table("embeddings").filter(F.col("vec_id") < 10),
-            ),
-            similarity.ivf_pq_topk_oracle(),
-        ),
-        # SQ8 scalar-quantized search (round 7): int8 codes, EXACT
-        # integer-dot shortlist (order-free without fixed-point — int8
-        # products can't lose bits in a double sum), float re-rank of
-        # refine*k — the 4x-bandwidth tier between brute force and PQ
-        "sim_sq8_topk": (
-            lambda s: similarity.sq8_topk(
-                s.table("embeddings"),
-                s.table("embeddings").filter(F.col("vec_id") < 10),
-            ),
-            similarity.sq8_topk_oracle(),
-        ),
-        # IVF-SQ8 composition (round 7): trained coarse cells bound
-        # WHICH vectors are scored, SQ8 codes bound how much is READ
-        # per scored row — the FAISS IVFx,SQ8 shape completing the
-        # index ladder
-        "sim_ivf_sq8_topk": (
-            lambda s: similarity.ivf_sq8_topk(
-                s.table("embeddings"),
-                s.table("embeddings").filter(F.col("vec_id") < 10),
-            ),
-            similarity.ivf_sq8_topk_oracle(),
-        ),
-    }
-
-
-# --------------------------------------------------------------------------
-# Driver contract assembly
-# --------------------------------------------------------------------------
-
-# The external correctness harness samples the FIRST 50 entries of
-# ``queries()`` in dict-insertion order.  To rotate verification coverage
-# across the whole 130+ workload catalog, ``build_queries`` emits entries in
-# the order below: a handful of reference-behavior canaries first, then the
-# workloads that have NOT yet appeared in any CORRECTNESS_r* sample
-# (round-3 rotation: windows, lateral/unpivot, recursive CTE, TPC-H,
-# dedup/similarity/text/sampling/timeseries/as-of operators), then
-# everything else in catalog order.  Rounds 4+ should rotate this list so
-# every workload is externally sampled over time.
-# Round-4 rotation: positions 1-50 are exactly the driver sample.  The 35
-# workloads below that have never appeared in any CORRECTNESS_r* file (the
-# list was generated programmatically: catalog keys minus the union of
-# CORRECTNESS_r01..r03 keys — do not hand-edit it) fill the sample, behind
-# 5 reference-behavior canaries.  tests/test_advice_fixes_r3.py pins both
-# the 50-entry boundary and that every name here exists in the catalog.
-# Workloads first added during round 4 — no CORRECTNESS_r01-r03 row by
-# construction. tests/test_advice_fixes_r3.py verifies the
-# never-driver-verified bookkeeping against this single source of
-# truth; round 5 folds the un-sampled tail into its rotation.
-R4_ADDITIONS: list[str] = [
-    "parsed_win_topn", "parsed_cte_agg", "sink_partitioned_roundtrip",
-    "expr_scalar_funcs5", "ts_sliding_1h_stats", "values_lookup_join",
-    "agg_filter_where", "ts_sessionize", "text_decontaminate",
-    "sim_quantize_int8", "text_repetition",
-    # late round-4 additions (the round-5 rotation queue below)
-    "parsed_qualify_using", "text_tfidf_topk", "ts_rolling_anomaly",
-    "dedup_materialize", "dedup_block_level", "text_c4_filters",
-    "sample_temperature_mix", "sim_recall_at_k", "sink_sharded_write",
-    "sim_kmeans_fit", "profile_key_skew", "parsed_reader_forms",
-    "parsed_distinct_on", "parsed_pivot_status",
-    "source_jsonl_roundtrip", "sim_ivf_topk_trained", "dedup_incremental",
-    "ts_funnel_steps", "ts_cohort_retention", "source_csv_roundtrip",
-    "pipeline_curation", "text_unigram_logprob", "profile_histogram",
-    # round-4d additions (this session; also round-5 rotation queue)
-    "text_gopher_filters", "sample_global_shuffle", "dedup_quality_rep",
-    "text_bm25_topk", "text_dsir_weights", "join_fuzzy_names",
-    "source_schema_evolution", "sim_pq_encode", "profile_correlations",
-    "sink_zorder_roundtrip", "join_interval_overlap", "text_ngram_counts",
-    "text_dsir_resample", "text_language_confidence", "sample_kfold",
-    "ts_mergeable_rollup", "join_upsert_snapshot", "profile_robust_stats",
-    "sample_capped_per_group", "join_scd2_merge", "sim_component_stats",
-    "affinity_basket_pairs",
-]
-
-# Round-6 deferral bookkeeping (kept for history): agg_tpch_q1 was the
-# one r2-stale row the round-6 50-slot budget could not fit; it leads
-# the stale cohort of the round-7 rotation below.
-R6_DEFERRED: list[str] = ["agg_tpch_q1"]
-
-_ROTATION_DOC = """Driver-sample rotation, auto-derived (round 12).
-
-Through round 11 this was a hand-staged literal regenerated from
-``scripts/rotation_next.py`` each round; four rounds running the
-restage landed AFTER the driver dropped its CORRECTNESS file, so the
-self-updating pin tests (tests/test_advice_fixes_r3.py) opened every
-round red (VERDICT r11 "What's wrong" §1 / "Next round" item 8).  The
-rotation is now computed at catalog-build time from the
-CORRECTNESS_r*.json artifacts themselves, so the restage IS the
-artifact landing.  Fixed policy (unchanged since r7): red-at-latest
-first, then never-driver-sampled (weakest evidence — includes any
-workload added this round), then once-green stale rows oldest-first,
-catalog order as the tiebreak.  ``scripts/rotation_next.py`` remains
-the standalone view of the same computation and the pin tests diff the
-two, so drift between tool and catalog is a red test, not a judge
-finding.
-"""
-
-
-from functools import lru_cache
-
-
-@lru_cache(maxsize=4)  # the artifact set is immutable within a process
-def _latest_driver_rows(
-    repo: str | None = None,
-) -> tuple[dict[str, int], dict[str, dict]]:
-    """Latest driver-sampled round and row per workload, across every
-    CORRECTNESS_r*.json in ``repo`` (default: the repo root; later
-    rounds win)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    if repo is None:
-        repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    latest_round: dict[str, int] = {}
-    latest_row: dict[str, dict] = {}
-    # sort by the PARSED round number, not lexically: a 3-digit round
-    # (CORRECTNESS_r100.json) sorts lexically BEFORE r12, which would
-    # let an older round silently overwrite a newer one (ADVICE r12)
-    def _round_of(p: str) -> int:
-        return int("".join(c for c in _os.path.basename(p) if c.isdigit()))
-
-    for path in sorted(
-        _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")),
-        key=_round_of,
-    ):
-        rnd = _round_of(path)
-        with open(path) as f:
-            for name, row in _json.load(f).items():
-                latest_round[name] = rnd
-                latest_row[name] = row
-    return latest_round, latest_row
-
-
-def _rotation(catalog: list[str]) -> list[str]:
-    """Order ``catalog`` by the fixed rotation policy (see
-    _ROTATION_DOC): red -> never-sampled -> stale-oldest."""
-    latest_round, latest_row = _latest_driver_rows()
-    idx = {n: i for i, n in enumerate(catalog)}
-    red = [n for n in catalog
-           if n in latest_row and not latest_row[n].get("hash_match")]
-    never = [n for n in catalog if n not in latest_round]
-    stale = sorted(
-        (n for n in catalog if n in latest_round and n not in red),
-        key=lambda n: (latest_round[n], idx[n]),
-    )
-    return red + never + stale
-
-
-def __getattr__(name: str):  # PEP 562: _SAMPLE_PRIORITY stays importable
-    if name == "_SAMPLE_PRIORITY":
-        return list(build_queries())
-    raise AttributeError(name)
-
-
-
-def _sample_order(d: dict) -> dict:
-    """Reorder a workload dict by the auto-derived rotation (the first
-    50 entries are the driver sample; see _ROTATION_DOC)."""
-    return {n: d[n] for n in _rotation(list(d))}
-
-
-def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    def runner(build: Callable[[SparkSession], DataFrame]):
-        # the previous build's materialisations and work dirs go before
-        # this build starts; this build's live until the next one
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            release_session()
-            register_tables(spark, sf_dir)
-            return build(spark)
-
-        return run
-
-    for name, plan in _ir_workloads().items():
-        out[name] = runner(plan.to_df)
-    for name, (fn_, _oracle) in _operator_workloads().items():
-        out[name] = runner(fn_)
-    return _sample_order(out)
-
-
-# Quantified comparisons over orders: runs desugared on Spark, native
-# on DuckDB (the _HAND_ORACLES entry is this exact text).
-_QUANTIFIED_FORMS_SQL = """
-SELECT c_custkey,
-       c_acctbal > ALL (SELECT o_totalprice AS v FROM orders
-                         WHERE o_custkey = 999999999) AS gt_all_empty,
-       c_acctbal * 100 >= ANY (SELECT o_totalprice AS v FROM orders
-                                WHERE o_orderkey % 1000 = 0) AS ge_any_mix,
-       c_acctbal < ALL (SELECT CASE WHEN o_orderkey % 97 = 0 THEN NULL
-                                    ELSE o_totalprice END AS v
-                          FROM orders WHERE o_custkey < 100) AS lt_all_nulls
-FROM customer
-"""
-
-
-# ----------------------------------------------------------------------
-# Hand-written oracles for high-value IR workloads (round-6 VERDICT item
-# 6): for IR workloads the DuckDB oracle is normally GENERATED from the
-# same plan IR, so a semantic bug expressed identically in both dialect
-# renderers would self-confirm.  These replacements are authored from
-# the workload's English spec in deliberately DIFFERENT formulations
-# (UNION ALL instead of ROLLUP, correlated counts instead of window
-# ranks, generate_series instead of recursion, a pre-aggregated join
-# instead of a correlated scalar subquery), neutralizing the shared-IR
-# blind spot for the rows that exercise the trickiest semantics.
-_HAND_ORACLES: dict[str, str] = {
-    # PG regex operators replayed via regexp_extract_all match COUNTS
-    # (len(...) > 0 / = 0) with the 'i' options flag for the
-    # case-folded forms — a different mechanism from the engine render
-    # (regexp_matches membership with an inline (?i) flag)
-    "parsed_pg_regex_match": """
-SELECT o_orderkey, o_orderpriority,
-       len(regexp_extract_all(o_orderpriority, 'HIGH$')) > 0 AS is_high,
-       len(regexp_extract_all(o_orderpriority, '^[0-4]-[a-z]+', 0, 'i'))
-           > 0 AS pri_ci,
-       len(regexp_extract_all(o_orderpriority, '[3-5]')) = 0 AS pri_low,
-       len(regexp_extract_all(o_orderstatus, '[fo]', 0, 'i')) = 0
-           AS status_p
-FROM orders WHERE o_orderkey < 2000
-""",
-    # comma cross-join replayed with explicit INNER JOIN ... ON — the
-    # engine side parses the SQL-92 comma spelling to Join(cross) +
-    # Filter, so the oracle's explicit-ON formulation shares none of
-    # that desugar path
-    "parsed_comma_join": """
-SELECT c.c_mktsegment, n.n_name, count(*) AS n_orders,
-       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-           AS revenue
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE c.c_acctbal > 1000
-GROUP BY c.c_mktsegment, n.n_name
-""",
-    # LOCF without IGNORE NULLS: segment ids from a running count of
-    # non-null clicks, then the segment's single non-null via max()
-    "win_ignore_nulls_locf": """
-WITH e AS (
-    SELECT event_id, user_id, ts,
-           CASE WHEN event_type = 'click' THEN value END AS cv
-    FROM events WHERE event_id < 5000
-),
-g AS (
-    SELECT event_id, user_id, cv,
-           count(cv) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS grp
-    FROM e
-)
-SELECT event_id, user_id,
-       round(max(cv) OVER (PARTITION BY user_id, grp), 4)
-           AS last_click_value
-FROM g
-""",
-    # EXCEPT ALL as multiplicity arithmetic: per-key counts, left minus
-    # right, each surviving key repeated (cn - sn) times
-    "setop_except_all": """
-WITH c AS (SELECT CAST(c_nationkey AS INT) AS nk, count(*) AS cn
-           FROM customer GROUP BY 1),
-s AS (SELECT CAST(s_nationkey AS INT) AS nk, count(*) AS sn
-      FROM supplier GROUP BY 1),
-reps AS (
-    SELECT c.nk, c.cn - coalesce(s.sn, 0) AS r
-    FROM c LEFT JOIN s USING (nk)
-    WHERE c.cn - coalesce(s.sn, 0) > 0
-)
-SELECT nk FROM (SELECT nk, unnest(range(r)) AS i FROM reps)
-""",
-    # interpolated percentiles derived from row_number arithmetic
-    # (h = 1 + (n-1)p; value = lo + frac * (hi - lo)), not the native
-    # quantile_cont the generated oracle would use
-    "agg_percentiles": """
-WITH q AS (
-    SELECT l_returnflag, l_quantity AS v,
-           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS r,
-           count(*) OVER (PARTITION BY l_returnflag) AS n
-    FROM lineitem
-),
-p AS (
-    SELECT l_returnflag, l_extendedprice AS v,
-           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS r,
-           count(*) OVER (PARTITION BY l_returnflag) AS n
-    FROM lineitem
-),
-d AS (
-    SELECT l_returnflag, l_discount AS v,
-           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_discount) AS r,
-           count(*) OVER (PARTITION BY l_returnflag) AS n
-    FROM lineitem
-),
-qq AS (
-    SELECT l_returnflag,
-           round(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)
-                 + ((n - 1) * 0.5 - floor((n - 1) * 0.5))
-                   * (coalesce(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 2 THEN v END),
-                               max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END))
-                      - max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)), 4)
-               AS p50_qty
-    FROM q GROUP BY l_returnflag, n
-),
-pp AS (
-    SELECT l_returnflag,
-           round(max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1 THEN v END)
-                 + ((n - 1) * 0.95 - floor((n - 1) * 0.95))
-                   * (coalesce(max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 2 THEN v END),
-                               max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1 THEN v END))
-                      - max(CASE WHEN r = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1 THEN v END)), 4)
-               AS p95_price
-    FROM p GROUP BY l_returnflag, n
-),
-dd AS (
-    SELECT l_returnflag,
-           round(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)
-                 + ((n - 1) * 0.5 - floor((n - 1) * 0.5))
-                   * (coalesce(max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 2 THEN v END),
-                               max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END))
-                      - max(CASE WHEN r = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1 THEN v END)), 4)
-               AS med_disc
-    FROM d GROUP BY l_returnflag, n
-)
-SELECT l_returnflag, qq.p50_qty, pp.p95_price, dd.med_disc
-FROM qq JOIN pp USING (l_returnflag) JOIN dd USING (l_returnflag)
-""",
-    # range join spelled as join + WHERE, broadcast-free formulation
-    "join_nonequi_range": """
-SELECT l.l_orderkey, l.l_partkey, round(l.l_extendedprice, 2) AS price
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_extendedprice > p.p_retailprice * 20
-""",
-    # q18's IN-over-HAVING decorrelated by hand to a plain join against
-    # the pre-aggregated qty table (unique keys by construction)
-    "tpch_q18": """
-WITH big AS (
-    SELECT l_orderkey
-    FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 120
-)
-SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-       round(sum(l_quantity), 2) AS sum_qty
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN big ON big.l_orderkey = o_orderkey
-JOIN lineitem ON o_orderkey = lineitem.l_orderkey
-GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-ORDER BY o_totalprice DESC, o_orderkey ASC
-LIMIT 100
-""",
-    # q20's IN-over-(join->group->having) as a correlated EXISTS with
-    # HAVING — the opposite decorrelation direction from the IR render
-    "tpch_q20": """
-SELECT s_name, n_name
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-WHERE EXISTS (
-    SELECT 1
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE contains(p.p_name, 'red') AND l.l_suppkey = s_suppkey
-    GROUP BY l.l_suppkey
-    HAVING sum(l.l_quantity) > 100
-)
-ORDER BY s_name ASC
-""",
-    # q22's NOT EXISTS as a LEFT JOIN .. IS NULL anti join, and the
-    # correlated scalar avg as an uncorrelated CTE cross join
-    "tpch_q22": """
-WITH eligible AS (
-    SELECT c_custkey, c_acctbal, right(c_name, 1) AS cntrycode
-    FROM customer
-    WHERE right(c_name, 1) IN ('1', '2', '3', '4')
-),
-avg_bal AS (
-    SELECT round(avg(c_acctbal), 4) AS a
-    FROM customer
-    WHERE c_acctbal > 0.0 AND right(c_name, 1) IN ('1', '2', '3', '4')
-),
-recent AS (
-    SELECT DISTINCT o_custkey FROM orders
-    WHERE o_orderdate >= TIMESTAMP '2001-01-01'
-)
-SELECT cntrycode, count(*) AS numcust,
-       CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
-           AS totacctbal
-FROM eligible e
-CROSS JOIN avg_bal
-LEFT JOIN recent r ON r.o_custkey = e.c_custkey
-WHERE e.c_acctbal > avg_bal.a AND r.o_custkey IS NULL
-GROUP BY cntrycode
-ORDER BY cntrycode ASC
-""",
-    # regression family recomputed from raw power sums (a third
-    # algorithm vs Spark's and DuckDB's native covariance updates), bit
-    # ops unchanged
-    "agg_regr_bitwise": """
-WITH sums AS (
-    SELECT l_returnflag,
-           count(*) AS n,
-           CAST(sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_disc,
-           sum(l_quantity) AS sx, sum(l_extendedprice) AS sy,
-           sum(l_quantity * l_quantity) AS sxx,
-           sum(l_extendedprice * l_extendedprice) AS syy,
-           sum(l_quantity * l_extendedprice) AS sxy,
-           CAST(bit_and(CAST(l_orderkey % 256 AS INT)) AS BIGINT) AS k_and,
-           CAST(bit_or(CAST(l_orderkey % 256 AS INT)) AS BIGINT) AS k_or,
-           CAST(bit_xor(CAST(l_orderkey % 256 AS INT)) AS BIGINT) AS k_xor
-    FROM lineitem
-    WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    GROUP BY l_returnflag
-)
-SELECT l_returnflag, n_disc,
-       round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4) AS slope,
-       round(sy / n - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * (sx / n), 4)
-           AS icept,
-       round(power(n * sxy - sx * sy, 2)
-             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2,
-       n AS n,
-       round(sx / n, 4) AS avg_x,
-       round(sy / n, 4) AS avg_y,
-       k_and, k_or, k_xor
-FROM sums
-ORDER BY l_returnflag ASC
-""",
-    # ordered string_agg as list(... ORDER BY) + array_to_string
-    "agg_string_agg": """
-SELECT c_nationkey,
-       array_to_string(list(c_name ORDER BY c_custkey), ',') AS names,
-       count(*) AS n
-FROM customer WHERE c_custkey < 150
-GROUP BY c_nationkey
-""",
-    # mode as an explicit count ranking (exact when the mode is unique,
-    # which the driver data guarantees; ties would be engine-defined)
-    "agg_mode_global": """
-WITH counts AS (
-    SELECT lang, count(*) AS c FROM documents GROUP BY lang
-),
-top AS (
-    SELECT lang FROM counts ORDER BY c DESC, lang ASC LIMIT 1
-)
-SELECT (SELECT lang FROM top) AS top_lang,
-       CAST(sum(CASE WHEN n_chars > 1000 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_long,
-       count(*) AS n_docs
-FROM documents
-""",
-    # UNION distinct via GROUP BY over the bag union
-    "setop_union": """
-SELECT nk FROM (
-    SELECT CAST(c_nationkey AS INT) AS nk FROM customer
-    UNION ALL
-    SELECT CAST(s_nationkey AS INT) AS nk FROM supplier
-) GROUP BY nk
-""",
-    # INTERSECT ALL as multiplicity arithmetic: least(cn, sn) repeats
-    "setop_intersect_all": """
-WITH c AS (SELECT CAST(c_nationkey AS INT) AS nk, count(*) AS cn
-           FROM customer GROUP BY 1),
-s AS (SELECT CAST(s_nationkey AS INT) AS nk, count(*) AS sn
-      FROM supplier GROUP BY 1),
-reps AS (
-    SELECT c.nk, least(c.cn, s.sn) AS r FROM c JOIN s USING (nk)
-)
-SELECT nk FROM (SELECT nk, unnest(range(r)) AS i FROM reps)
-""",
-    # FULL OUTER as inner + left-only + right-only union
-    "join_full_outer": """
-WITH c AS (SELECT c_custkey FROM customer WHERE c_custkey < 50),
-o AS (SELECT o_orderkey, o_custkey FROM orders WHERE o_custkey > 30)
-SELECT c.c_custkey, o.o_orderkey FROM c JOIN o ON c.c_custkey = o.o_custkey
-UNION ALL
-SELECT c.c_custkey, NULL FROM c
-WHERE NOT EXISTS (SELECT 1 FROM o WHERE o.o_custkey = c.c_custkey)
-UNION ALL
-SELECT NULL, o.o_orderkey FROM o
-WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
-""",
-    # first/last over the full frame as joins against per-user extreme
-    # rows (row_number ranking both directions), no window navigation fns
-    "win_first_last": """
-WITH r AS (
-    SELECT event_id, user_id, event_type,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts ASC, event_id ASC) AS rf,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts DESC, event_id DESC) AS rl
-    FROM events
-),
-f AS (SELECT user_id, event_type AS first_type FROM r WHERE rf = 1),
-l AS (SELECT user_id, event_type AS last_type FROM r WHERE rl = 1)
-SELECT e.event_id, e.user_id, f.first_type, l.last_type
-FROM events e JOIN f USING (user_id) JOIN l USING (user_id)
-""",
-    # rollup + GROUPING() as the explicit two-level union
-    "agg_rollup_grouping": """
-SELECT l_returnflag, 0 AS is_total, count(*) AS cnt
-FROM lineitem GROUP BY l_returnflag
-UNION ALL
-SELECT CAST(NULL AS VARCHAR), 1, count(*) FROM lineitem
-""",
-    # JSON path access through DuckDB's arrow operator instead of the
-    # registry's get_json_object mapping; missing key -> NULL not error
-    "expr_json_extract": """
-SELECT event_id, event_type,
-       CAST(props->>'$.k' AS BIGINT) AS k_val,
-       props->>'$.missing' AS absent
-FROM events WHERE event_id < 2000
-""",
-    # sample stats from raw power sums (third algorithm vs both
-    # engines' native streaming-update implementations)
-    "agg_stats": """
-WITH sums AS (
-    SELECT l_returnflag,
-           count(*) AS n,
-           sum(l_quantity) AS sq, sum(l_quantity * l_quantity) AS sqq,
-           sum(l_discount) AS sd, sum(l_discount * l_discount) AS sdd,
-           sum(l_extendedprice) AS sp,
-           sum(l_extendedprice * l_extendedprice) AS spp,
-           sum(l_quantity * l_extendedprice) AS sqp,
-           min(l_shipdate) AS first_ship, max(l_shipdate) AS last_ship
-    FROM lineitem GROUP BY l_returnflag
-)
-SELECT l_returnflag,
-       round(sqrt((sqq - sq * sq / n) / (n - 1)), 4) AS sd_qty,
-       round((sdd - sd * sd / n) / (n - 1), 6) AS var_disc,
-       round((n * sqp - sq * sp)
-             / sqrt((n * sqq - sq * sq) * (n * spp - sp * sp)), 4)
-           AS corr_qty_price,
-       first_ship, last_ship
-FROM sums
-""",
-    # distinct counts from a pre-deduplicated subquery join instead of
-    # count(DISTINCT) inside the aggregate
-    "agg_distinct": """
-WITH d AS (
-    SELECT o_orderstatus, count(*) AS n_cust
-    FROM (SELECT DISTINCT o_orderstatus, o_custkey FROM orders)
-    GROUP BY o_orderstatus
-),
-t AS (
-    SELECT o_orderstatus, count(*) AS n_orders FROM orders GROUP BY 1
-)
-SELECT o_orderstatus, d.n_cust, t.n_orders
-FROM d JOIN t USING (o_orderstatus)
-""",
-    # left outer as matched counts UNION zero rows for unmatched keys
-    "join_left": """
-SELECT n_name, CAST(coalesce(m.c, 0) AS BIGINT) AS n_suppliers
-FROM nation
-LEFT JOIN (SELECT s_nationkey, count(*) AS c FROM supplier GROUP BY 1) m
-       ON m.s_nationkey = n_nationkey
-""",
-    # right outer == the same aggregate keyed from the preserved side
-    "join_right": """
-SELECT n_name, CAST(coalesce(m.c, 0) AS BIGINT) AS n_suppliers
-FROM nation
-LEFT JOIN (SELECT s_nationkey, count(*) AS c FROM supplier GROUP BY 1) m
-       ON m.s_nationkey = n_nationkey
-""",
-    # HAVING as WHERE over the aggregated subquery
-    "agg_having": """
-SELECT o_custkey, n, spend FROM (
-    SELECT o_custkey, count(*) AS n,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-               AS spend
-    FROM orders GROUP BY o_custkey
-) WHERE n > 12
-""",
-    # ordered collect via string_agg instead of sort_array(collect_list)
-    "agg_collect": """
-SELECT o_custkey,
-       string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY o_orderkey)
-           AS order_keys,
-       count(*) AS n
-FROM orders WHERE o_custkey < 30
-GROUP BY o_custkey
-""",
-    # ranking family recomputed from row_number + group-size arithmetic
-    # (exact because the ordering is a total order: no ties); ntile uses
-    # the SQL big-tiles-first rule explicitly
-    "win_analytic_suite": """
-WITH r AS (
-    SELECT o_orderkey, o_custkey,
-           row_number() OVER (PARTITION BY o_custkey
-               ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn,
-           count(*) OVER (PARTITION BY o_custkey) AS n
-    FROM orders WHERE o_custkey < 100
-)
-SELECT o_orderkey, o_custkey,
-       CAST(rn AS BIGINT) AS drnk,
-       CAST(CASE
-           WHEN rn <= (n % 4) * (n // 4 + 1)
-               THEN (rn - 1) // (n // 4 + 1) + 1
-           ELSE (n % 4) + ((rn - 1) - (n % 4) * (n // 4 + 1)) // (n // 4) + 1
-       END AS BIGINT) AS quartile,
-       round(CAST(rn - 1 AS DOUBLE) / (n - 1), 6) AS pct_rank,
-       round(CAST(rn AS DOUBLE) / n, 6) AS cdist
-FROM r
-""",
-    # semi join as EXISTS (the decorrelated twin of the join-operator form)
-    "join_semi": """
-SELECT c_custkey, c_name FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-""",
-    # anti join as NOT EXISTS against the filtered right side
-    "join_anti": """
-SELECT c_custkey, c_name FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-""",
-    # DuckDB executes its NATIVE quantified comparisons; Spark runs the
-    # parser's three-valued CASE desugar — the two meet only in results
-    "parsed_quantified_forms": _QUANTIFIED_FORMS_SQL,
-    # grouping sets = explicit union of exactly the requested sets
-    "agg_grouping_sets": """
-SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-FROM orders GROUP BY o_orderstatus, o_orderpriority
-UNION ALL
-SELECT o_orderstatus, CAST(NULL AS VARCHAR), count(*)
-FROM orders GROUP BY o_orderstatus
-UNION ALL
-SELECT CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), count(*)
-FROM orders
-""",
-    # cube = union of all four grouping levels
-    "agg_cube": """
-SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-FROM orders GROUP BY o_orderstatus, o_orderpriority
-UNION ALL
-SELECT o_orderstatus, CAST(NULL AS VARCHAR), count(*)
-FROM orders GROUP BY o_orderstatus
-UNION ALL
-SELECT CAST(NULL AS VARCHAR), o_orderpriority, count(*)
-FROM orders GROUP BY o_orderpriority
-UNION ALL
-SELECT CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), count(*)
-FROM orders
-""",
-    # IN-subquery = correlated EXISTS
-    "subq_in": """
-SELECT c.c_custkey, c.c_mktsegment FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-               WHERE o.o_custkey = c.c_custkey
-                 AND o.o_totalprice > 400000)
-""",
-    # scalar-avg filter = cross-joined 1-row aggregate
-    "subq_scalar_avg": """
-SELECT o.o_orderkey,
-       CAST(round(CAST(o.o_totalprice AS DECIMAL(18,4)), 2) AS DOUBLE)
-           AS price
-FROM orders o, (SELECT avg(o_totalprice) AS a FROM orders) t
-WHERE o.o_totalprice > t.a
-""",
-    # CTE + filter = plain GROUP BY ... HAVING
-    "cte_top_customers": """
-SELECT o_custkey,
-       CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-           AS total
-FROM orders GROUP BY o_custkey
-HAVING CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-       > 200000
-""",
-    # hand-typed named-WINDOW forms (same frame semantics, authored
-    # independently of the renderer's OVER emission; frame addition
-    # order is preserved so float running sums stay bit-comparable)
-    "win_running_sum": """
-SELECT event_id, user_id,
-       round(sum(value) OVER w, 2) AS running_value
-FROM events
-WINDOW w AS (PARTITION BY user_id
-             ORDER BY ts ASC NULLS FIRST, event_id ASC NULLS FIRST
-             ROWS UNBOUNDED PRECEDING)
-""",
-    "win_lag_lead": """
-SELECT event_id, user_id,
-       round(value - lag(value) OVER w, 2) AS delta_prev,
-       lead(event_type) OVER w AS next_type
-FROM events
-WINDOW w AS (PARTITION BY user_id
-             ORDER BY ts ASC NULLS FIRST, event_id ASC NULLS FIRST)
-""",
-    # rollup = explicit union of the three grouping levels
-    "agg_rollup": """
-SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-UNION ALL
-SELECT l_returnflag, CAST(NULL AS VARCHAR), count(*),
-       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
-FROM lineitem GROUP BY l_returnflag
-UNION ALL
-SELECT CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), count(*),
-       CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
-FROM lineitem
-""",
-    # row_number/rank = correlated order-statistic counts
-    "win_rank_topn": """
-SELECT * FROM (
-  SELECT o.o_orderkey, o.o_custkey,
-         CAST(round(CAST(o.o_totalprice AS DECIMAL(18,4)), 2) AS DOUBLE) AS price,
-         (SELECT count(*) FROM orders o2
-           WHERE o2.o_custkey = o.o_custkey
-             AND (o2.o_totalprice > o.o_totalprice
-                  OR (o2.o_totalprice = o.o_totalprice
-                      AND o2.o_orderkey <= o.o_orderkey))) AS rn,
-         (SELECT 1 + count(*) FROM orders o3
-           WHERE o3.o_custkey = o.o_custkey
-             AND o3.o_orderstatus < o.o_orderstatus) AS status_rank
-  FROM orders o
-) t WHERE rn <= 3
-""",
-    # EXISTS = key-set membership
-    "subq_exists": """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 300000)
-""",
-    # RANGE frame + nth_value = correlated aggregates / ordered OFFSET
-    "win_range_frame": """
-SELECT o.o_orderkey, o.o_custkey,
-       round(CAST((SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,4)))
-                     FROM orders o2
-                    WHERE o2.o_custkey = o.o_custkey
-                      AND o2.o_orderkey BETWEEN o.o_orderkey - 1000
-                                            AND o.o_orderkey) AS DOUBLE),
-             2) AS near_sum,
-       (SELECT o3.o_orderstatus FROM orders o3
-         WHERE o3.o_custkey = o.o_custkey
-         ORDER BY o3.o_orderkey LIMIT 1 OFFSET 1) AS second_status
-FROM orders o WHERE o.o_custkey < 50
-""",
-    # recursive spine = generate_series (inclusive stop, same months)
-    "cte_recursive_month_spine": """
-SELECT m, coalesce(rev, CAST(0 AS DOUBLE)) AS rev
-FROM (SELECT CAST(g AS TIMESTAMP) AS m
-        FROM generate_series(TIMESTAMP '1995-01-01 00:00:00',
-                             TIMESTAMP '1996-12-01 00:00:00',
-                             INTERVAL 1 MONTH) t(g)) spine
-LEFT JOIN (SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS mo,
-                  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2)
-                       AS DOUBLE) AS rev
-             FROM orders GROUP BY 1) mrev ON mo = m
-ORDER BY m
-""",
-    # scalar-in-SELECT = cross-joined total + left-join group count
-    "subq_scalar_in_select": """
-SELECT n.n_nationkey, n.n_name, t.total_customers,
-       count(c.c_custkey) AS nation_customers
-FROM nation n
-CROSS JOIN (SELECT count(*) AS total_customers FROM customer) t
-LEFT JOIN customer c ON c.c_nationkey = n.n_nationkey
-GROUP BY n.n_nationkey, n.n_name, t.total_customers
-ORDER BY n.n_nationkey
-""",
-    # correlated per-part threshold = pre-aggregated join
-    "tpch_q17": """
-WITH thr AS (SELECT l_partkey, 0.5 * avg(l_quantity) AS t
-               FROM lineitem GROUP BY l_partkey)
-SELECT CAST(round(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,4))) / 7.0,
-                        2), 2) AS DOUBLE) AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN thr ON thr.l_partkey = l.l_partkey
-WHERE p.p_brand = 'Brand#5' AND l.l_quantity < thr.t
-""",
-    # hand-phrased EXISTS/NOT EXISTS (aliases and predicates authored
-    # independently of the renderer's subquery emission)
-    "tpch_q21": """
-SELECT s.s_name AS s_name, count(*) AS numwait
-FROM supplier s
-JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-JOIN orders o ON o.o_orderkey = l1.l_orderkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-WHERE o.o_orderstatus = 'F'
-  AND n.n_name = 'NATION_3'
-  AND l1.l_shipdate > CAST(o.o_orderdate AS DATE) + 60
-  AND EXISTS (SELECT 1 FROM lineitem l2
-               WHERE l2.l_orderkey = l1.l_orderkey
-                 AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                   WHERE l3.l_orderkey = l1.l_orderkey
-                     AND l3.l_suppkey <> l1.l_suppkey
-                     AND l3.l_shipdate > l1.l_shipdate)
-GROUP BY s.s_name
-ORDER BY numwait DESC, s_name ASC
-LIMIT 100
-""",
-    # ---- round-7 campaign (VERDICT r6 item 2): independent
-    # formulations for every r7-sampled row whose oracle was
-    # IR-generated — correlated-scalar-subquery Q1, list-slice
-    # moving averages, epoch-arithmetic hour buckets, tuple-ordered
-    # LIMIT-1 lag, strftime date parts, hand-constant-folded map
-    # literals, UNION-ALL unpivot, max-join greatest-per-group,
-    # pre-aggregated-min TPC-H Q2, row_number top-k, filtered-
-    # subquery HAVING, and boolean-arithmetic bucket indexing ----
-    # TPC-H Q1 via correlated scalar subqueries per distinct group —
-    # the oracle never runs a GROUP BY over the measures at all
-    "agg_tpch_q1": """
-WITH g AS (
-    SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2024-11-01 00:00:00'
-)
-SELECT l_returnflag, l_linestatus,
-  (SELECT CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_qty,
-  (SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_base_price,
-  (SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                         * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2) AS DOUBLE)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_disc_price,
-  (SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                         * (1 - CAST(l_discount AS DECIMAL(18,4)))
-                         * (1 + CAST(l_tax AS DECIMAL(18,4)))), 2) AS DOUBLE)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS sum_charge,
-  (SELECT round(avg(l_quantity), 4)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS avg_qty,
-  (SELECT round(avg(l_discount), 4)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS avg_disc,
-  (SELECT count(*)
-   FROM lineitem li WHERE li.l_returnflag = g.l_returnflag
-     AND li.l_linestatus = g.l_linestatus
-     AND li.l_shipdate <= TIMESTAMP '2024-11-01 00:00:00') AS count_order
-FROM g
-ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-""",
-    # wildcard expansion written out by hand; filter as NOT(negation)
-    "ref_wildcard": """
-SELECT r_regionkey, r_name FROM region WHERE NOT (r_regionkey >= 4)
-""",
-    # moving average from ordered per-user arrays and list slices, not a
-    # window frame
-    "win_moving_avg": """
-WITH u AS (
-    SELECT user_id,
-           list(value ORDER BY ts, event_id) AS vs,
-           list(event_id ORDER BY ts, event_id) AS ids
-    FROM events GROUP BY user_id
-),
-x AS (
-    SELECT unnest(ids) AS event_id,
-           unnest(vs) AS v,
-           generate_subscripts(ids, 1) AS i,
-           vs
-    FROM u
-)
-SELECT event_id,
-       round(list_aggregate(vs[CASE WHEN i > 3 THEN i - 3 ELSE 1 END : i],
-                            'avg'), 4) AS avg_4
-FROM x
-""",
-    # hour bucket from integer epoch arithmetic instead of date_trunc
-    "events_hourly_rollup": """
-SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600)
-            AS TIMESTAMP) AS hour,
-       event_type,
-       CAST(sum(1) AS BIGINT) AS n,
-       round(sum(value), 2) AS sum_value
-FROM events
-GROUP BY 1, 2
-""",
-    # previous-event timestamp via a correlated tuple-ordered LIMIT 1
-    # subquery instead of lag()
-    "events_sessionize_gap": """
-SELECT event_id, user_id,
-       CASE WHEN epoch(ts) - epoch(
-                (SELECT e2.ts FROM events e2
-                 WHERE e2.user_id = e.user_id
-                   AND (e2.ts, e2.event_id) < (e.ts, e.event_id)
-                 ORDER BY e2.ts DESC, e2.event_id DESC LIMIT 1)) > 1800
-            THEN 1 ELSE 0 END AS new_session
-FROM events e
-""",
-    # date parts from strftime formatting, month end from interval
-    # arithmetic, try_cast from a regex guard
-    "expr_date_parts_trycast": """
-SELECT o_orderkey,
-       CAST(strftime(o_orderdate, '%w') AS INTEGER) + 1 AS dow,
-       CAST(strftime(o_orderdate, '%j') AS INTEGER) AS doy,
-       CAST(strftime(o_orderdate, '%V') AS INTEGER) AS woy,
-       (CAST(strftime(o_orderdate, '%m') AS INTEGER) + 2) // 3 AS q,
-       CAST(CAST(date_trunc('month', o_orderdate) AS DATE)
-            + INTERVAL 1 MONTH - INTERVAL 1 DAY AS TIMESTAMP) AS month_end,
-       CASE WHEN regexp_matches(o_orderstatus, '^[+-]?[0-9]+$')
-            THEN CAST(o_orderstatus AS INTEGER) END AS bad_cast,
-       CAST(40 + 2 AS INTEGER) AS good_cast
-FROM orders WHERE o_orderkey < 500
-""",
-    # the map literal is constant-foldable by hand: every output is a
-    # direct expression over the row, no map functions at all
-    "expr_map_funcs": """
-SELECT o_orderkey,
-       o_orderstatus AS st,
-       CAST(NULL AS VARCHAR) AS missing,
-       CAST(2 AS INTEGER) AS n_entries,
-       'st,pri' AS ks,
-       TRUE AS has_pri
-FROM orders WHERE o_orderkey < 500
-""",
-    # tokens via regexp_extract_all of non-space runs instead of
-    # split + unnest + length filter
-    "lat_explode_words": """
-SELECT word, count(*) AS n
-FROM (
-    SELECT unnest(regexp_extract_all(text, '[^ ]+')) AS word
-    FROM documents WHERE doc_id < 50
-)
-GROUP BY word
-ORDER BY n DESC NULLS LAST, word ASC NULLS FIRST
-LIMIT 50
-""",
-    # manual unpivot: UNION ALL of one SELECT per measure
-    "unpivot_measures": """
-WITH a AS (
-    SELECT c_nationkey,
-           CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS m_bal,
-           CAST(count(*) AS DOUBLE) AS m_cnt,
-           CAST(round(max(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS m_max
-    FROM customer GROUP BY c_nationkey
-)
-SELECT c_nationkey, 'm_bal' AS measure, m_bal AS val FROM a
-UNION ALL
-SELECT c_nationkey, 'm_cnt' AS measure, m_cnt AS val FROM a
-UNION ALL
-SELECT c_nationkey, 'm_max' AS measure, m_max AS val FROM a
-ORDER BY c_nationkey ASC NULLS FIRST, measure ASC NULLS FIRST
-""",
-    # greatest-per-group via max-join + min-custkey tie-break, no
-    # LATERAL and no window
-    "lat_topn_per_group": """
-WITH m AS (
-    SELECT c_nationkey, max(c_acctbal) AS mb FROM customer GROUP BY 1
-),
-b AS (
-    SELECT c.c_nationkey, c.c_name, c.c_acctbal, c.c_custkey
-    FROM customer c JOIN m
-      ON c.c_nationkey = m.c_nationkey AND c.c_acctbal = m.mb
-),
-best AS (
-    SELECT * FROM b
-    WHERE c_custkey = (SELECT min(b2.c_custkey) FROM b b2
-                       WHERE b2.c_nationkey = b.c_nationkey)
-)
-SELECT n_name, best.c_name AS top_customer,
-       round(CAST(best.c_acctbal AS DOUBLE), 2) AS top_balance
-FROM nation JOIN best ON n_nationkey = best.c_nationkey
-ORDER BY n_name ASC NULLS FIRST
-""",
-    # min-cost via a pre-aggregated per-part min table joined back in,
-    # instead of the correlated scalar subquery
-    "tpch_q2": """
-WITH eur AS (
-    SELECT l_partkey, l_suppkey, l_extendedprice
-    FROM lineitem
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = 'EUROPE'
-),
-mc AS (
-    SELECT l_partkey AS pk, min(l_extendedprice) AS min_cost
-    FROM eur GROUP BY 1
-)
-SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey, p_brand,
-       l_extendedprice AS supplycost
-FROM part
-JOIN lineitem ON p_partkey = l_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-JOIN mc ON mc.pk = p_partkey AND l_extendedprice = mc.min_cost
-WHERE p_size BETWEEN 10 AND 20 AND p_type = 'STANDARD'
-  AND r_name = 'EUROPE'
-ORDER BY s_acctbal DESC NULLS LAST, n_name ASC NULLS FIRST,
-         s_name ASC NULLS FIRST, p_partkey ASC NULLS FIRST
-LIMIT 100
-""",
-    # revenue aggregated per order from lineitem ALONE first (decimal
-    # sums are exact, so pre-aggregation is safe), then joined out
-    "tpch_q3": """
-WITH rev AS (
-    SELECT l_orderkey,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
-                AS DOUBLE) AS revenue
-    FROM lineitem
-    WHERE l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY l_orderkey
-)
-SELECT l_orderkey, o_orderdate, o_orderpriority, revenue
-FROM rev
-JOIN orders ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-ORDER BY revenue DESC NULLS LAST, o_orderdate ASC NULLS FIRST,
-         l_orderkey ASC NULLS FIRST
-LIMIT 10
-""",
-    # profit as a DIFFERENCE of two exact decimal sums (sum(a-b) ==
-    # sum(a)-sum(b) in decimal); year from strftime; LIKE not contains
-    "tpch_q9": """
-SELECT n_name AS nation,
-       CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS o_year,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                      * (1 - CAST(l_discount AS DECIMAL(18,4))))
-                  - sum(CAST(p_retailprice AS DECIMAL(18,4))
-                        * CAST(l_quantity AS DECIMAL(18,4))
-                        * CAST(0.1 AS DECIMAL(18,4))), 2) AS DOUBLE)
-           AS sum_profit
-FROM part
-JOIN lineitem ON p_partkey = l_partkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN orders ON o_orderkey = l_orderkey
-WHERE p_name LIKE '%red%'
-GROUP BY n_name, CAST(strftime(o_orderdate, '%Y') AS BIGINT)
-ORDER BY nation ASC NULLS FIRST, o_year DESC NULLS LAST
-""",
-    # top-50 via row_number arithmetic instead of ORDER BY ... LIMIT
-    "parsed_scan_filter_sort": """
-WITH r AS (
-    SELECT c_custkey, c_name, c_acctbal,
-           row_number() OVER (ORDER BY c_acctbal DESC NULLS LAST,
-                              c_custkey ASC NULLS FIRST) AS rn
-    FROM customer
-    WHERE c_mktsegment IN ('BUILDING')
-      AND c_acctbal >= 100 AND c_acctbal <= 5000
-)
-SELECT c_custkey, c_name, c_acctbal FROM r WHERE rn <= 50
-ORDER BY rn
-""",
-    # HAVING as a filtered subquery; orders pre-aggregated per customer
-    # first (counts and decimal sums re-aggregate exactly)
-    "parsed_join_agg_having": """
-WITH per_cust AS (
-    SELECT o_custkey, count(*) AS n,
-           sum(CAST(o_totalprice AS DECIMAL(18,4))) AS rev
-    FROM orders GROUP BY o_custkey
-),
-seg AS (
-    SELECT c_mktsegment,
-           CAST(sum(n) AS BIGINT) AS n_orders,
-           CAST(round(sum(rev), 2) AS DOUBLE) AS revenue
-    FROM customer JOIN per_cust ON c_custkey = o_custkey
-    GROUP BY c_mktsegment
-)
-SELECT c_mktsegment, n_orders, revenue FROM seg
-WHERE n_orders > 10
-ORDER BY c_mktsegment ASC NULLS FIRST
-""",
-    # bucket from boolean arithmetic list-indexing, not a CASE chain;
-    # IN-list as disjunction; DISTINCT as GROUP BY
-    "parsed_case_in_distinct": """
-SELECT o_orderstatus,
-       list_extract(['small', 'mid', 'big'],
-                    1 + CAST(coalesce(o_totalprice > 50000, FALSE) AS INTEGER)
-                      + CAST(coalesce(o_totalprice > 200000, FALSE) AS INTEGER))
-           AS bucket
-FROM orders
-WHERE o_orderstatus = 'F' OR o_orderstatus = 'O'
-GROUP BY 1, 2
-ORDER BY o_orderstatus ASC NULLS FIRST, bucket ASC NULLS FIRST
-""",
-    # ---- round-7 PROACTIVE batch 3: the last nine IR rows without
-    # independent formulations — with these, EVERY IR workload's
-    # oracle has a hand-written twin and the "dialect-symmetric bug
-    # passes generated oracles" caveat is retired.  Float-exactness
-    # rules observed throughout: transcendental call sites keep the
-    # generated expression (1-ulp libm divergence would flip rounded
-    # values), while every integer/boolean/decimal output is
-    # re-derived differently ----
-    # ceil as -floor(-x), floor as x - x%1, pow(d,2) as d*d (IEEE-
-    # identical single rounding); transcendentals restructured via CTE
-    "expr_math_funcs": """
-WITH b AS (
-    SELECT l_orderkey, l_linenumber, l_extendedprice AS p,
-           l_discount AS d, l_quantity AS q, l_tax * 100 AS t100
-    FROM lineitem WHERE l_orderkey < 50
-)
-SELECT l_orderkey, l_linenumber,
-       round(sqrt(p), 6) AS sqrt_price,
-       round(exp(d), 6) AS exp_disc,
-       round(log10(p), 6) AS log10_price,
-       CAST(-floor(-q) AS BIGINT) AS ceil_qty,
-       CAST(t100 - (t100 % 1) AS BIGINT) AS floor_tax_pct,
-       round(d * d, 8) AS disc_sq
-FROM b
-""",
-    # every string function replayed through a different one: lower
-    # via lcase, length via len, substr via left, replace via global
-    # regexp, lpad via printf
-    "expr_string_funcs": """
-SELECT p_partkey,
-       lcase(p_name) AS lname,
-       CAST(len(p_name) AS BIGINT) AS name_len,
-       left(p_brand, 6) AS brand6,
-       regexp_replace(p_type, ' ', '_', 'g') AS type_snake,
-       printf('%03d', CAST(p_size AS INTEGER)) AS size_pad,
-       reverse(p_brand) AS brand_rev
-FROM part
-""",
-    # date parts via strftime, month-truncation rebuilt with
-    # make_timestamp
-    "expr_date_funcs": """
-SELECT o_orderkey,
-       CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS y,
-       CAST(strftime(o_orderdate, '%m') AS BIGINT) AS m,
-       CAST(strftime(o_orderdate, '%d') AS BIGINT) AS d,
-       CAST(strftime(o_orderdate, '%H') AS BIGINT) AS h,
-       make_timestamp(CAST(strftime(o_orderdate, '%Y') AS INTEGER),
-                      CAST(strftime(o_orderdate, '%m') AS INTEGER),
-                      1, 0, 0, 0.0) AS month_start
-FROM orders WHERE o_orderkey < 300
-""",
-    # levenshtein of 1-char flags is an inequality test; printf
-    # rebuilt by concat+lpad; regexp anchor as OR-equality; factorial
-    # as a lookup list; day-diff as DATE subtraction; hyperbolics
-    # share single exp() CTE values (same doubles, same ops)
-    "expr_scalar_funcs3": """
-WITH b AS (
-    SELECT *, exp(l_discount) AS e1, exp(-l_discount) AS em1,
-           exp(2 * l_discount) AS e2
-    FROM lineitem WHERE l_orderkey < 400
-)
-SELECT l_orderkey,
-       CAST(l_linenumber AS BIGINT) AS line_no,
-       CAST(CASE WHEN l_returnflag = l_linestatus THEN 0 ELSE 1 END
-            AS BIGINT) AS lev,
-       l_returnflag || '-'
-           || lpad(CAST(l_orderkey % 1000 AS VARCHAR), 3, '0') AS tag,
-       (l_returnflag = 'A' OR l_returnflag = 'R') AS is_ret,
-       CAST(CASE WHEN l_extendedprice < 0 THEN 0
-                 WHEN l_extendedprice >= 100000 THEN 21
-                 ELSE CAST(floor((l_extendedprice - 0) * 20
-                                 / (100000 - 0)) AS BIGINT) + 1
-            END AS BIGINT) AS price_bkt,
-       round((e1 - em1) / 2, 9) AS sh,
-       round((e1 + em1) / 2, 9) AS ch,
-       round((e2 - 1) / (e2 + 1), 9) AS th,
-       round(cbrt(l_quantity), 9) AS cb,
-       CAST(list_extract([1, 2, 6, 24, 120, 720, 5040],
-                         CAST(l_linenumber AS INTEGER)) AS BIGINT) AS fact,
-       CAST(CAST(l_shipdate AS DATE) - DATE '1995-01-01' AS BIGINT)
-           AS days_since,
-       make_timestamp(2020, CAST((l_orderkey % 12) + 1 AS INTEGER),
-                      3, 4, 5, 6.5) AS mts
-FROM b
-""",
-    # LIKE/ILIKE/RLIKE replayed as contains/starts_with; concat as ||
-    "expr_like_rlike_concat": """
-SELECT p_partkey,
-       p_brand || '/' || p_type AS brand_type,
-       ucase(p_name) AS uname
-FROM part
-WHERE contains(p_type, 'AND')
-   OR contains(lcase(p_name), 'red')
-   OR starts_with(p_name, 'blue b')
-""",
-    # integer/boolean folds re-derived over unnest (exact regardless
-    # of order); the two float folds keep the generated left-fold —
-    # the ONLY order that reproduces Spark's doubles bit-for-bit
-    "expr_higher_order": """
-WITH u AS (
-    SELECT vec_id, unnest(embedding) AS x,
-           generate_subscripts(embedding, 1) AS i
-    FROM embeddings WHERE vec_id < 300
-),
-agg AS (
-    SELECT vec_id,
-           CAST(sum(CASE WHEN x > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_pos,
-           bool_or(x > 0.45) AS has_big,
-           bool_and(x > -1) AS bounded,
-           round(CAST(max(CASE WHEN i = 3 THEN x END) AS DOUBLE)
-                 * 2.0, 5) AS t3
-    FROM u GROUP BY vec_id
-),
-folds AS (
-    SELECT vec_id,
-           round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                 embedding), (acc, x) -> acc + x), 5) AS vsum,
-           round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                 list_transform(embedding, x -> x * x)),
-                 (acc, x) -> acc + x), 5) AS dot_self
-    FROM embeddings WHERE vec_id < 300
-)
-SELECT a.vec_id, f.vsum, a.n_pos, a.has_big, a.bounded, f.dot_self, a.t3
-FROM agg a JOIN folds f ON f.vec_id = a.vec_id
-""",
-    # array probes re-derived: length/extremes/picks over unnest;
-    # slice-then-index collapsed to the direct element; the two
-    # list-literal membership probes constant-fold (2 and the leading
-    # 7 are literally present whatever vec_id is)
-    "expr_array_funcs": """
-SELECT vec_id,
-       CAST(max(i) AS BIGINT) AS dim,
-       round(CAST(max(x) AS DOUBLE), 5) AS vmax,
-       round(CAST(min(x) AS DOUBLE), 5) AS vmin,
-       round(CAST(max(CASE WHEN i = 3 THEN x END) AS DOUBLE), 5) AS s2,
-       round(CAST(max(CASE WHEN i = 8 THEN x END) AS DOUBLE), 5) AS e8,
-       TRUE AS has2,
-       CAST(1 AS BIGINT) AS pos7
-FROM (SELECT vec_id, unnest(embedding) AS x,
-             generate_subscripts(embedding, 1) AS i
-      FROM embeddings WHERE vec_id < 200) u
-GROUP BY vec_id
-""",
-    # list surgeries rebuilt from scalar arithmetic: distinct-sort
-    # from a reordered construction, flatten from the flat literal,
-    # and the intersection constant-folds to '2,3' (k%4 never adds a
-    # new member and list_intersect dedups)
-    "expr_array_funcs2": """
-SELECT o_orderkey,
-       array_to_string(list_sort(list_distinct(list_value(
-           o_orderkey % 5, 2, o_orderkey % 3, o_orderkey % 3))), ',')
-           AS dedup,
-       array_to_string(list_value(o_orderkey % 2, o_orderkey % 3, 7),
-                       ',') AS flat,
-       '2,3' AS ixn
-FROM orders WHERE o_orderkey < 500
-""",
-    # revenue pushed below the joins as a per-(order, supplier)
-    # DECIMAL partial aggregate — exact, so the reassociated total
-    # must match the flat join-then-aggregate to the last cent
-    "join_tpch_q5ish": """
-WITH li AS (
-    SELECT l_orderkey, l_suppkey,
-           sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS rev
-    FROM lineitem GROUP BY 1, 2
-)
-SELECT n_name, CAST(round(sum(rev), 2) AS DOUBLE) AS revenue
-FROM li
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY n_name
-""",
-    # ---- round-7 PROACTIVE batch 2: r6-fresh structural rows, so
-    # every set-op / join / scalar family has at least one
-    # independent formulation before it rotates again ----
-    # UNION ALL as bag arithmetic: per-key multiplicities from a FULL
-    # OUTER join of per-table counts, rows regenerated by unnest(range)
-    "setop_union_all": """
-WITH cc AS (SELECT c_nationkey AS nk, count(*) AS n FROM customer GROUP BY 1),
-ss AS (SELECT s_nationkey AS nk, count(*) AS n FROM supplier GROUP BY 1),
-m AS (
-    SELECT coalesce(cc.nk, ss.nk) AS nk,
-           coalesce(cc.n, 0) + coalesce(ss.n, 0) AS n
-    FROM cc FULL JOIN ss ON cc.nk = ss.nk
-)
-SELECT CAST(nk AS INTEGER) AS nk
-FROM (SELECT nk, unnest(range(n)) FROM m)
-""",
-    # INTERSECT as EXISTS + GROUP BY (no set operator)
-    "setop_intersect": """
-SELECT CAST(c_nationkey AS INTEGER) AS nk
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM supplier s
-              WHERE s.s_nationkey = c.c_nationkey)
-GROUP BY 1
-""",
-    # EXCEPT as NOT EXISTS + GROUP BY (no set operator)
-    "setop_except": """
-SELECT CAST(c_nationkey AS INTEGER) AS nk
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM supplier s
-                  WHERE s.s_nationkey = c.c_nationkey
-                    AND s.s_acctbal < 0)
-GROUP BY 1
-""",
-    # DISTINCT as GROUP BY
-    "ref_distinct": """
-SELECT l_returnflag, l_linestatus FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-""",
-    # CROSS JOIN as an inner join whose condition touches one side
-    "join_cross_small": """
-SELECT r_name, n_name
-FROM region JOIN nation ON n_nationkey < 3
-""",
-    # dimension rollup with the order aggregation PUSHED BELOW the
-    # dimension joins (partial-aggregate reassociation is exact
-    # because the money sums stay DECIMAL until the final round)
-    "join_broadcast_dims": """
-WITH po AS (
-    SELECT o_custkey,
-           sum(CAST(o_totalprice AS DECIMAL(18,4))) AS rev,
-           count(*) AS n
-    FROM orders GROUP BY o_custkey
-)
-SELECT r_name, n_name,
-       CAST(round(sum(rev), 2) AS DOUBLE) AS revenue,
-       CAST(sum(n) AS BIGINT) AS n_orders
-FROM po
-JOIN customer ON c_custkey = o_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-""",
-    # price*(1-d) re-derived by the distributive law — exact in
-    # DECIMAL, so the two routes must agree to the last digit
-    "ref_project_cast_arith": """
-SELECT l_orderkey, l_linenumber,
-       CAST(round(CAST(l_extendedprice AS DECIMAL(18,4))
-                  - CAST(l_extendedprice AS DECIMAL(18,4))
-                    * CAST(l_discount AS DECIMAL(18,4)), 2) AS DOUBLE)
-           AS net_price
-FROM lineitem WHERE l_orderkey < 200
-""",
-    # BETWEEN as double negation; abs as greatest(x, -x)
-    "ref_between_scalar_fns": """
-SELECT l_orderkey, l_linenumber,
-       greatest(l_extendedprice, -l_extendedprice) AS abs_price,
-       round(ln(l_extendedprice), 6) AS ln_price
-FROM lineitem
-WHERE NOT (l_quantity < 10) AND NOT (l_quantity > 20)
-""",
-    # array indexing replayed through unnest + subscripts + pick-outs
-    "ref_array_index": """
-SELECT vec_id,
-       round(CAST(max(CASE WHEN i = 1 THEN x END) AS DOUBLE), 6) AS dim1,
-       round(CAST(max(CASE WHEN i = 64 THEN x END) AS DOUBLE), 6) AS dim64
-FROM (SELECT vec_id, unnest(embedding) AS x,
-             generate_subscripts(embedding, 1) AS i
-      FROM embeddings WHERE vec_id < 100) u
-GROUP BY vec_id
-""",
-    # struct pack-then-extract is the identity on the base columns
-    "expr_struct_field": """
-SELECT c_custkey, c_mktsegment AS seg, CAST(c_nationkey AS INTEGER) AS nk
-FROM customer WHERE c_custkey < 100
-""",
-    # CASE as a VALUES lookup; IN as OR-equality; IS NOT NULL negated
-    "expr_case_in_isnull": """
-SELECT o.o_orderkey,
-       coalesce(m.lbl, 'partial') AS status_label,
-       (o.o_orderpriority = '1-URGENT'
-        OR o.o_orderpriority = '2-HIGH') AS is_hot,
-       NOT (o.o_totalprice IS NULL) AS has_price
-FROM orders o
-LEFT JOIN (VALUES ('F', 'finished'), ('O', 'open')) AS m(st, lbl)
-       ON m.st = o.o_orderstatus
-""",
-    # every bitwise op replayed as modular arithmetic (valid for the
-    # non-negative key domain): &3 = %4, |8 and xor5 from bit
-    # decomposition, NOT > as <=
-    "expr_bitwise_unary": """
-SELECT n_nationkey,
-       n_nationkey % 4 AS and3,
-       n_nationkey + 8 * (1 - ((n_nationkey // 8) % 2)) AS or8,
-       n_nationkey + 5
-           - 2 * ((n_nationkey % 2) + 4 * ((n_nationkey // 4) % 2))
-           AS xor5,
-       0 - n_nationkey AS neg,
-       n_nationkey <= 10 AS not_gt10
-FROM nation
-""",
-    # ---- round-7 PROACTIVE batch for the projected r9 cohort: the
-    # last five r5-stale IR rows without independent formulations ----
-    # nested projection slots flattened away: filter and output both
-    # inline the decimal arithmetic on base columns (no subquery)
-    "ref_nested_slots": """
-SELECT c_custkey,
-       CAST(round(CAST(c_acctbal AS DECIMAL(18,4)) * 2, 2) AS DOUBLE)
-           AS bal2
-FROM customer
-WHERE CAST(c_acctbal AS DECIMAL(18,4)) * 2 > 5000
-  AND c_mktsegment <> 'BUILDING'
-""",
-    # QUALIFY top-5 via a correlated tuple-rank count subquery; also
-    # encodes that the running count(*) over a unique ORDER BY equals
-    # row_number, so seg_n is emitted as rn
-    "parsed_qualify_using": """
-WITH picked AS (
-    SELECT c_mktsegment, c_custkey, c_acctbal
-    FROM customer WHERE c_custkey % 3 = 0
-),
-r AS (
-    SELECT p.c_mktsegment, p.c_custkey,
-           CAST(p.c_acctbal AS DOUBLE) AS bal,
-           (SELECT count(*) FROM picked q
-            WHERE q.c_mktsegment = p.c_mktsegment
-              AND (q.c_acctbal > p.c_acctbal
-                   OR (q.c_acctbal = p.c_acctbal
-                       AND q.c_custkey < p.c_custkey))) + 1 AS rn
-    FROM picked p
-)
-SELECT c_mktsegment, c_custkey, bal, rn, rn AS seg_n
-FROM r WHERE rn <= 5
-ORDER BY c_mktsegment ASC, rn ASC
-""",
-    # every scalar replayed through a different function: CASE as a
-    # VALUES lookup, year via strftime, substring as left, trim as
-    # two-sided regexp, strpos via split_part, IS DISTINCT FROM TRUE
-    # as <= on the non-null price
-    "parsed_reader_forms": """
-SELECT o.o_orderkey,
-       coalesce(m.word, 'other') AS status_word,
-       CAST(strftime(o.o_orderdate, '%Y') AS BIGINT) AS yr,
-       left(o.o_orderpriority, 1) AS prio,
-       regexp_replace(regexp_replace(CAST(o.o_orderkey AS VARCHAR),
-                                     '^0+', ''), '0+$', '') AS trimmed,
-       CASE WHEN o.o_orderpriority LIKE '%URGENT%'
-            THEN length(split_part(o.o_orderpriority, 'URGENT', 1)) + 1
-            ELSE 0 END AS urg_pos,
-       o.o_orderdate + INTERVAL 30 DAY AS due,
-       o.o_totalprice <= 100000 AS small_order
-FROM orders o
-LEFT JOIN (VALUES ('O', 'open'), ('F', 'done')) AS m(st, word)
-       ON m.st = o.o_orderstatus
-WHERE o.o_orderkey < 2000
-ORDER BY o.o_orderkey ASC
-""",
-    # PIVOT as FILTERed conditional aggregation (no PIVOT clause)
-    "parsed_pivot_status": """
-SELECT o_custkey,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-            FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS open_total,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-            FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS filled_total,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-            FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS pending_total
-FROM orders
-WHERE o_orderkey < 5000
-GROUP BY o_custkey
-ORDER BY o_custkey ASC
-""",
-    # DISTINCT ON as a NOT EXISTS greatest-per-group anti-pattern (no
-    # window at all)
-    "parsed_distinct_on": """
-SELECT c_nationkey, c_name, c_acctbal
-FROM customer c
-WHERE NOT EXISTS (
-    SELECT 1 FROM customer d
-    WHERE d.c_nationkey = c.c_nationkey
-      AND (d.c_acctbal > c.c_acctbal
-           OR (d.c_acctbal = c.c_acctbal AND d.c_custkey < c.c_custkey))
-)
-ORDER BY c_nationkey ASC, c_acctbal DESC, c_custkey ASC
-""",
-    # ---- round 8: statement forms (VERDICT r7 item 6) ----
-    # MERGE upsert replayed WITHOUT any join: source ⊂ target keys become
-    # a CASE rewrite over the whole table; the shifted insert arm appends.
-    # Maximum independence — the oracle never sees ANTI JOIN or UNION
-    # of survivors.
-    "parsed_merge_upsert": """
-SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-       CASE WHEN c_custkey % 7 = 0 THEN 'UPDATED' ELSE c_mktsegment END
-           AS c_mktsegment
-FROM customer
-UNION ALL
-SELECT c_custkey + 10000000, c_name, c_nationkey, c_acctbal, 'INSERTED'
-FROM customer WHERE c_custkey % 11 = 0
-""",
-    # deterministic TABLESAMPLE: substr + || instead of the generated
-    # substring + concat, threshold hex hard-coded (0.10 * 65536 = 6553
-    # -> '1999')
-    "parsed_tablesample": """
-SELECT doc_id, lang, length(text) AS text_len FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':r8'), 1, 4) < '1999'
-ORDER BY doc_id ASC
-""",
-    # ROWS form as a window rank instead of ORDER BY ... LIMIT
-    "parsed_tablesample_rows": """
-SELECT doc_id, lang FROM (
-    SELECT doc_id, lang,
-           row_number() OVER (
-               ORDER BY md5(CAST(doc_id AS VARCHAR) || ':topk'), doc_id
-           ) AS rn
-    FROM documents
-) WHERE rn <= 40
-""",
-    # per-column SET replayed WITHOUT any join: source ⊂ target keys
-    # become CASE rewrites in place (column order: SET columns last,
-    # matching the t.* EXCEPT desugar)
-    "parsed_merge_update_set": """
-SELECT c_custkey, c_name, c_nationkey,
-       CASE WHEN c_custkey % 3 = 0 THEN c_acctbal * 2
-            ELSE c_acctbal END AS c_acctbal,
-       CASE WHEN c_custkey % 3 = 0 THEN 'BOOSTED'
-            ELSE c_mktsegment END AS c_mktsegment
-FROM customer
-""",
-    # ---- round 9: the remaining MERGE statement forms (VERDICT r8
-    # items 2 and 5), each replayed WITHOUT any join or CASE-over-key
-    # machinery the desugar itself uses ----
-    # conditional arm folded into a plain CASE over the whole table
-    "parsed_merge_conditional": """
-SELECT c_custkey, c_name, c_nationkey,
-       CASE WHEN c_custkey % 3 = 0 AND c_acctbal > 5000
-            THEN c_acctbal * 2 ELSE c_acctbal END AS c_acctbal,
-       CASE WHEN c_custkey % 3 = 0 AND c_acctbal > 5000
-            THEN 'HIGHROLLER' ELSE c_mktsegment END AS c_mktsegment
-FROM customer
-""",
-    # full sync (UPDATE SET * + BY SOURCE DELETE) = the source filter,
-    # applied directly — the oracle never sees the semi join
-    "parsed_merge_full_sync": """
-SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-       'SYNCED' AS c_mktsegment
-FROM customer WHERE c_custkey % 2 = 0
-""",
-    # column-list INSERT: target re-projected to the listed layout plus
-    # the shifted, condition-filtered insert arm
-    "parsed_merge_insert_cols": """
-SELECT c_custkey, c_name, c_acctbal FROM customer
-UNION ALL
-SELECT c_custkey + 10000000, c_name, c_acctbal
-FROM customer WHERE c_custkey % 9 = 0 AND c_acctbal > 0
-""",
-    # ---- round 10: cascaded multi-arm chain (VERDICT r9 item 6) as a
-    # flat CASE over the whole table — first-match-wins replayed by
-    # guarding each arm with the negation of every earlier condition,
-    # the DELETE arm as a plain WHERE; no join, no IS-NOT-NULL test ----
-    "parsed_merge_multi_arm": """
-SELECT c_custkey, c_name, c_nationkey,
-       CASE WHEN c_custkey % 2 = 0 AND NOT (c_acctbal < 0)
-                 AND c_acctbal > 5000
-            THEN c_acctbal * 2
-            WHEN c_custkey % 2 = 0 AND NOT (c_acctbal < 0)
-            THEN c_acctbal + 100
-            ELSE c_acctbal END AS c_acctbal,
-       CASE WHEN c_custkey % 2 = 0 AND NOT (c_acctbal < 0)
-                 AND c_acctbal > 5000
-            THEN 'HIGH' ELSE c_mktsegment END AS c_mktsegment
-FROM customer
-WHERE NOT (c_custkey % 2 = 0 AND c_acctbal < 0)
-""",
-    # ---- round 10: single-table DML statement forms, replayed without
-    # the CASE/filter desugar machinery — UPDATE as two filtered
-    # passes unioned, DELETE as an anti-EXISTS over its own keys,
-    # INSERT re-deriving the append arm from scratch ----
-    # row-value IN replayed as a correlated EXISTS + literal equality —
-    # no row-value syntax, no struct wrap
-    "parsed_row_in_subquery": """
-SELECT o_orderkey, o_totalprice FROM orders o
-WHERE o.o_orderstatus = 'O'
-  AND EXISTS (SELECT 1 FROM customer c
-              WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 5000)
-""",
-    # series spine replayed over DuckDB's end-EXCLUSIVE range() —
-    # different generator, different bound convention
-    "parsed_series_spine": """
-SELECT b.bucket, count(o.o_orderkey) AS n
-FROM (SELECT range AS bucket FROM range(0, 10)) b
-LEFT JOIN orders o ON o.o_orderkey % 10 = b.bucket
-GROUP BY b.bucket
-""",
-    # EXCLUDE CURRENT ROW replayed via DuckDB's NATIVE frame exclusion
-    # — exact integer sums, so native-vs-desugar cannot ULP-diverge
-    "parsed_win_exclude_current": """
-SELECT o_orderkey,
-       CAST(sum(o_custkey) OVER w AS BIGINT) AS s,
-       count(*) OVER w AS c
-FROM orders WHERE o_orderkey < 3000
-WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderkey
-             ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING
-             EXCLUDE CURRENT ROW)
-""",
-    # ordered array_agg replayed via DuckDB's list() (a different
-    # aggregate spelling) with the same (key, value) tie-break
-    "parsed_array_agg_ordered": """
-SELECT o_orderstatus,
-       array_to_string(list(CAST(o_orderkey AS VARCHAR)
-           ORDER BY o_totalprice, CAST(o_orderkey AS VARCHAR)), ',')
-           AS keys_by_price,
-       count(*) AS n
-FROM orders WHERE o_orderkey < 200
-GROUP BY o_orderstatus
-""",
-    # insert-cascade replayed with NO merge machinery: the appended
-    # rows re-derived from nation with plain CASE arms and an
-    # anti-EXISTS, target passed through untouched
-    "parsed_merge_insert_arms": """
-SELECT r_regionkey, r_name FROM region
-UNION ALL
-SELECT CASE WHEN n_regionkey = 1 THEN n_nationkey + 100
-            ELSE n_nationkey END AS r_regionkey,
-       CASE WHEN n_regionkey = 0 THEN upper(n_name)
-            WHEN n_regionkey = 1 THEN lower(n_name)
-            ELSE 'OTHER' END AS r_name
-FROM nation
-WHERE NOT EXISTS (SELECT 1 FROM region WHERE r_regionkey = n_nationkey)
-""",
-    # q5 replayed with lineitem pre-aggregated per (orderkey, suppkey)
-    # BELOW the joins in DECIMAL (the q5ish house pattern), region/date
-    # gates applied on the flattened comma-join
-    "tpch_q5": """
-WITH li AS (
-    SELECT l_orderkey, l_suppkey,
-           sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS rev
-    FROM lineitem GROUP BY 1, 2
-)
-SELECT n_name, CAST(round(sum(rev), 2) AS DOUBLE) AS revenue
-FROM li, supplier, orders, customer, nation, region
-WHERE l_suppkey = s_suppkey
-  AND o_orderkey = l_orderkey
-  AND c_custkey = o_custkey
-  AND c_nationkey = s_nationkey
-  AND s_nationkey = n_nationkey
-  AND n_regionkey = r_regionkey
-  AND r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""",
-    # SIMILAR TO replayed with NO pattern language at all: the prefix
-    # as a substring test, the [0-4] class as a last-char IN-list, the
-    # interval arithmetic as the pre-computed literal date
-    "parsed_similar_to": """
-SELECT o_orderpriority, count(*) AS n
-FROM orders o, customer c
-WHERE o.o_custkey = c.c_custkey
-  AND substr(c.c_name, 1, 9) = 'Customer#'
-  AND substr(c.c_name, length(c.c_name), 1) IN ('0','1','2','3','4')
-  AND o.o_orderdate < DATE '1995-07-01'
-GROUP BY o_orderpriority
-""",
-    # correlated UNNEST replayed as a SELECT-list unnest over plain
-    # str_split (not the FROM-clause table form, not the regex split)
-    "parsed_unnest_words": """
-SELECT word, count(*) AS n
-FROM (SELECT unnest(str_split(text, ' ')) AS word
-      FROM documents WHERE lang = 'en') u
-WHERE length(word) > 4
-GROUP BY word
-ORDER BY n DESC, word
-LIMIT 20
-""",
-    "parsed_update_where": """
-SELECT c_custkey, c_name, c_nationkey, c_acctbal * 2 AS c_acctbal,
-       'DOUBLED' AS c_mktsegment
-FROM customer WHERE c_acctbal > 5000
-UNION ALL
-SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-FROM customer WHERE NOT (c_acctbal > 5000)
-""",
-    "parsed_delete_where": """
-SELECT * FROM customer c
-WHERE NOT EXISTS (
-    SELECT 1 FROM customer d
-    WHERE d.c_custkey = c.c_custkey
-      AND (d.c_acctbal < 0 OR d.c_custkey % 5 = 0)
-)
-""",
-    "parsed_insert_select": """
-SELECT r_regionkey, r_name FROM region
-UNION ALL
-SELECT r_regionkey + 50, upper(r_name) FROM region
-""",
-    # ---- round 10b: EXCLUDE GROUP/TIES replayed via DuckDB's NATIVE
-    # frame exclusion (the desugar subtracts the peer-group window;
-    # native re-aggregates the surviving frame — exact integer sums,
-    # so the two cannot ULP-diverge), default frame spelled out ----
-    "parsed_win_exclude_group": """
-SELECT o_orderkey,
-       CAST(sum(o_custkey) OVER (PARTITION BY o_orderstatus
-            ORDER BY o_orderdate
-            RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            EXCLUDE GROUP) AS BIGINT) AS sg,
-       count(*) OVER (PARTITION BY o_orderstatus ORDER BY o_orderdate
-            RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-            EXCLUDE TIES) AS ct
-FROM orders WHERE o_orderkey < 3000
-""",
-    # NATURAL JOIN replayed with NO natural/using machinery: the
-    # pre-rename base tables joined on explicit equality
-    "parsed_natural_join": """
-SELECT c.c_custkey AS custkey, c.c_name, o.n_orders, o.total
-FROM customer c
-JOIN (SELECT o_custkey, count(*) AS n_orders,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                 AS total
-      FROM orders GROUP BY o_custkey) o
-  ON o.o_custkey = c.c_custkey
-WHERE c.c_acctbal > 9000
-""",
-    # ASOF replayed via DuckDB's NATIVE ASOF JOIN (the desugar is the
-    # inner join + correlated-max filter — entirely different machinery)
-    "parsed_asof_join": """
-SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
-FROM (SELECT event_id, ts, user_id FROM events
-      WHERE event_type = 'click' AND event_id % 20 = 0) l
-ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events
-           WHERE event_type = 'purchase' GROUP BY user_id, ts) r
-ON l.user_id = r.user_id AND l.ts >= r.ts
-""",
-    # GROUPS frame replayed with NO window frame at all: a dense_rank
-    # self-join with conditional aggregation (peer-group distance as an
-    # explicit join band) — the desugar's RANGE-over-rank machinery
-    # never runs
-    "parsed_win_groups_frame": """
-WITH r AS (
-    SELECT o_orderkey, o_orderstatus, o_custkey,
-           dense_rank() OVER (PARTITION BY o_orderstatus
-                              ORDER BY o_orderdate) AS dr
-    FROM orders WHERE o_orderkey < 3000
-)
-SELECT a.o_orderkey,
-       CAST(sum(CASE WHEN b.dr BETWEEN a.dr - 1 AND a.dr + 1
-                     THEN b.o_custkey END) AS BIGINT) AS sg,
-       count(CASE WHEN b.dr BETWEEN a.dr - 2 AND a.dr
-                  THEN 1 END) AS cg
-FROM r a JOIN r b
-  ON b.o_orderstatus = a.o_orderstatus
- AND b.dr BETWEEN a.dr - 2 AND a.dr + 1
-GROUP BY a.o_orderkey
-""",
-    # ASOF LEFT replayed via DuckDB's NATIVE ASOF LEFT JOIN (the
-    # lateral-LIMIT-1 desugar machinery never runs)
-    "parsed_asof_left_join": """
-SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
-FROM (SELECT event_id, ts, user_id FROM events
-      WHERE event_type = 'click' AND event_id % 20 = 0) l
-ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval FROM events
-                WHERE event_type = 'purchase'
-                GROUP BY user_id, ts) r
-ON l.user_id = r.user_id AND l.ts >= r.ts
-""",
-    # multi-key asof replayed WITHOUT the ASOF keyword at all:
-    # correlated max / max_by scalar subqueries over both equality keys
-    # (the union+window desugar machinery and DuckDB's native ASOF
-    # executor both never run)
-    "parsed_asof_multikey": """
-WITH l AS (SELECT event_id, ts, user_id FROM events
-           WHERE event_type = 'click' AND event_id % 10 = 0),
-r AS (SELECT user_id, event_id % 4 AS grp, ts, max(value) AS v
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY user_id, event_id % 4, ts)
-SELECT event_id, ts, obs_ts, obs_v FROM (
-    SELECT l.event_id, l.ts,
-           (SELECT max(r.ts) FROM r
-             WHERE r.user_id = l.user_id AND r.grp = l.event_id % 4
-               AND r.ts <= l.ts) AS obs_ts,
-           (SELECT max_by(r.v, r.ts) FROM r
-             WHERE r.user_id = l.user_id AND r.grp = l.event_id % 4
-               AND r.ts <= l.ts) AS obs_v
-    FROM l
-) WHERE obs_ts IS NOT NULL
-""",
-    # ASOF + tolerance replayed via DuckDB's NATIVE ASOF inside a
-    # MATERIALIZED CTE (pushdown barrier — DuckDB would otherwise push
-    # the tolerance WHERE into the join and reject it as a second ASOF
-    # inequality), tolerance applied OUTSIDE: inner filters the row
-    # out, LEFT nulls the payload and keeps the row. The repo-side
-    # union+window desugar machinery never runs here.
-    "parsed_asof_tolerance": """
-WITH m AS MATERIALIZED (
-    SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
-    FROM (SELECT event_id, ts, user_id FROM events
-          WHERE event_type = 'click' AND event_id % 20 = 0) l
-    ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events
-               WHERE event_type = 'purchase' GROUP BY user_id, ts) r
-    ON l.user_id = r.user_id AND l.ts >= r.ts)
-SELECT event_id, ts, user_id, purchase_ts, pval
-FROM m WHERE purchase_ts >= ts - INTERVAL 1 DAY
-""",
-    "parsed_asof_tolerance_left": """
-WITH m AS MATERIALIZED (
-    SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, r.pval
-    FROM (SELECT event_id, ts, user_id FROM events
-          WHERE event_type = 'click' AND event_id % 20 = 0) l
-    ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval FROM events
-                    WHERE event_type = 'purchase'
-                    GROUP BY user_id, ts) r
-    ON l.user_id = r.user_id AND l.ts >= r.ts)
-SELECT event_id, ts, user_id,
-       CASE WHEN purchase_ts >= ts - INTERVAL 1 DAY
-            THEN purchase_ts END AS purchase_ts,
-       CASE WHEN purchase_ts >= ts - INTERVAL 1 DAY
-            THEN pval END AS pval
-FROM m
-""",
-    # running distinct replayed via DuckDB's NATIVE ordered DISTINCT
-    # window (the flag machinery never runs)
-    "parsed_win_running_distinct": """
-SELECT event_id,
-       count(DISTINCT user_id) OVER (PARTITION BY event_type
-           ORDER BY ts, event_id) AS uniq_users
-FROM events WHERE event_id % 5 = 0
-""",
-    # DISTINCT-over-window replayed via DuckDB's NATIVE distinct window
-    # aggregates (the desugar's first-occurrence-flag machinery never
-    # runs)
-    "parsed_win_distinct_agg": """
-SELECT o_orderkey,
-       count(DISTINCT o_orderpriority) OVER
-           (PARTITION BY o_custkey) AS n_prio,
-       CAST(sum(DISTINCT CAST(o_totalprice AS DECIMAL(18,2))) OVER
-           (PARTITION BY o_orderstatus) AS DOUBLE) AS s_price,
-       avg(DISTINCT o_custkey % 100) OVER
-           (PARTITION BY o_orderstatus) AS a_mod
-FROM orders WHERE o_orderkey < 4000
-""",
-    # window FILTER replayed via DuckDB's NATIVE FILTER clause on the
-    # window aggregate (the Spark render is the CASE desugar — native
-    # vs desugar cannot both be wrong the same way)
-    "parsed_win_filter": """
-SELECT o_orderkey, o_custkey,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-            FILTER (WHERE o_orderstatus = 'O')
-            OVER (PARTITION BY o_custkey) AS DOUBLE) AS open_total,
-       count(*) FILTER (WHERE o_totalprice > 100000)
-            OVER (PARTITION BY o_custkey) AS big_n
-FROM orders WHERE o_orderkey < 4000
-""",
-    # script views replayed with NO WITH clause at all: each view
-    # manually inlined as a nested derived table
-    "parsed_script_views": """
-SELECT c_name, n FROM (
-    SELECT b.c_custkey, b.c_name, count(*) AS n
-    FROM (SELECT c_custkey, c_name FROM customer
-          WHERE c_acctbal > 5000) b
-    JOIN orders ON o_custkey = b.c_custkey
-    GROUP BY b.c_custkey, b.c_name
-) cust_orders
-WHERE n > 12
-""",
-    # try_ scalars replayed with explicit CASE guards (no nullif, no
-    # bare subscript: the out-of-range probe checks len() first)
-    "expr_try_funcs": """
-SELECT o_orderkey,
-       CASE WHEN o_custkey % 3 = 0 THEN NULL
-            ELSE o_totalprice / (o_custkey % 3) END AS d,
-       CASE WHEN len(string_split(o_orderpriority, '-')) >= 2
-            THEN string_split(o_orderpriority, '-')[2] END AS p2,
-       CASE WHEN len(string_split(o_orderpriority, '-')) >= 5
-            THEN string_split(o_orderpriority, '-')[5] END AS p5
-FROM orders WHERE o_orderkey < 2000
-""",
-    # ---- round-7 PROACTIVE batch for the projected r8 cohort
-    # (VERDICT r6 item 2 "keep growing it with each rotation"):
-    # independent formulations for the r4-stale IR rows queued to
-    # rotate in round 8 — EXISTS decorrelated to joins, FILTER as
-    # CASE aggregation, VALUES lookups constant-folded, LIMIT/
-    # OFFSET as row_number arithmetic, RANGE frames as self-join
-    # windows, argmax via rank-keeps-ties, NOT IN as anti-join,
-    # modular-arithmetic IN-lists, and decimal-exact partial
-    # re-aggregation throughout ----
-    # equality filter as null-guarded double negation
-    "ref_scan_filter": """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT (c_mktsegment <> 'BUILDING') AND c_mktsegment IS NOT NULL
-""",
-    # LIMIT/OFFSET as row_number arithmetic (rows 6..25)
-    "ref_sort_limit_offset": """
-WITH r AS (
-    SELECT o_orderkey, o_totalprice,
-           row_number() OVER (ORDER BY o_totalprice DESC NULLS LAST,
-                              o_orderkey ASC NULLS FIRST) AS rn
-    FROM orders
-)
-SELECT o_orderkey, o_totalprice FROM r
-WHERE rn > 5 AND rn <= 25
-ORDER BY rn
-""",
-    # three-valued IS [NOT] DISTINCT FROM truth table folded by hand
-    "ref_null_safe_cmp": """
-SELECT TRUE AS a, FALSE AS b, TRUE AS c, FALSE AS d
-""",
-    # RANGE interval frame as an explicit self-join window (decimal
-    # sums are exact, so join order is irrelevant)
-    "ts_sliding_1h_stats": """
-SELECT a.event_id, a.event_type,
-       CAST(round(sum(CAST(b.value AS DECIMAL(18,6))), 2) AS DOUBLE)
-           AS sum_1h,
-       count(*) AS n_1h
-FROM events a
-JOIN events b
-  ON a.event_type = b.event_type
- AND b.ts >= a.ts - INTERVAL 1 HOUR AND b.ts <= a.ts
-GROUP BY a.event_id, a.event_type
-""",
-    # every function swapped for an equivalent formulation: unicode for
-    # ascii, alphabet substr for chr, byte-length identities, list index
-    # for split_part, replace for translate, printf for to_hex,
-    # ltrim+rtrim for trim(charset)
-    "expr_string_funcs2": """
-SELECT p_partkey,
-       unicode(p_name) AS first_byte,
-       substr('ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-              CAST((p_partkey % 26) + 1 AS INTEGER), 1) AS letter,
-       CAST(strlen(p_name) * 8 AS INTEGER) AS bits,
-       CAST(strlen(p_name) AS INTEGER) AS octets,
-       coalesce(string_split(p_name, ' ')[2], '') AS second_word,
-       replace(p_brand, '#', '-') AS brand_t,
-       upper(printf('%x', p_partkey)) AS hex_key,
-       sha256(p_name) AS sha,
-       rtrim(ltrim(p_type, 'DS'), 'DS') AS trimmed
-FROM part WHERE p_partkey < 500
-""",
-    # VALUES lookup folded into a CASE mapping (LEFT JOIN miss == CASE
-    # ELSE NULL)
-    "values_lookup_join": """
-SELECT CASE o_orderpriority
-           WHEN '1-URGENT' THEN 1 WHEN '2-HIGH' THEN 2
-           WHEN '3-MEDIUM' THEN 3 WHEN '4-NOT SPECIFIED' THEN 4
-           WHEN '5-LOW' THEN 5 END AS rank,
-       count(*) AS n_orders,
-       CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-           AS total
-FROM orders
-GROUP BY 1
-""",
-    # FILTER (WHERE ...) as CASE-conditional aggregation
-    "agg_filter_where": """
-SELECT o_orderstatus,
-       count(*) AS n,
-       CAST(sum(CASE WHEN o_totalprice > 200000 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_big,
-       CAST(round(sum(CASE WHEN o_orderpriority = '1-URGENT'
-                           THEN CAST(o_totalprice AS DECIMAL(18,4)) END),
-                  2) AS DOUBLE) AS urgent_total,
-       max(CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END)
-           AS low_max
-FROM orders GROUP BY o_orderstatus
-""",
-    # sign/trunc as CASE arithmetic; initcap + regexp word extraction
-    # hand-constant-folded over the closed priority domain; the three
-    # epoch constructors swapped for each other (same instants)
-    "expr_scalar_funcs5": """
-SELECT o_orderkey,
-       CASE WHEN o_totalprice > 150000 THEN 1.0
-            WHEN o_totalprice < 150000 THEN -1.0 ELSE 0.0 END AS sgn,
-       CASE WHEN o_totalprice >= 0 THEN floor(o_totalprice / 1000)
-            ELSE ceil(o_totalprice / 1000) END AS price_k,
-       CASE o_orderpriority
-           WHEN '1-URGENT' THEN '1-urgent' WHEN '2-HIGH' THEN '2-high'
-           WHEN '3-MEDIUM' THEN '3-medium'
-           WHEN '4-NOT SPECIFIED' THEN '4-not Specified'
-           WHEN '5-LOW' THEN '5-low' END AS prio_t,
-       sha256(o_orderpriority) AS prio_sha,
-       md5(o_orderpriority) AS prio_md5,
-       CASE o_orderpriority
-           WHEN '1-URGENT' THEN 'URGENT' WHEN '2-HIGH' THEN 'HIGH'
-           WHEN '3-MEDIUM' THEN 'MEDIUM'
-           WHEN '4-NOT SPECIFIED' THEN 'NOT,SPECIFIED'
-           WHEN '5-LOW' THEN 'LOW' END AS prio_words,
-       epoch_ms(CAST(o_orderkey * 86400 AS BIGINT) * 1000) AS ts_s,
-       CAST(to_timestamp(o_orderkey * 86400) AS TIMESTAMP) AS ts_ms,
-       CAST(to_timestamp(o_orderkey * 86400) AS TIMESTAMP) AS ts_us
-FROM orders WHERE o_orderkey < 500
-""",
-    # positional explode as a join against an index range + list index
-    "lat_posexplode_embedding": """
-SELECT vec_id, CAST(i AS INTEGER) AS pos,
-       round(CAST(embedding[CAST(i + 1 AS INTEGER)] AS DOUBLE), 4) AS val
-FROM embeddings, unnest(range(0, len(embedding))) AS t(i)
-WHERE vec_id < 10
-ORDER BY vec_id ASC NULLS FIRST, pos ASC NULLS FIRST
-""",
-    # EXISTS decorrelated into a join against the distinct qualifying
-    # order keys
-    "tpch_q4": """
-WITH late AS (
-    SELECT DISTINCT l_orderkey
-    FROM lineitem JOIN orders o2 ON l_orderkey = o2.o_orderkey
-    WHERE l_shipdate > CAST(o2.o_orderdate AS DATE) + CAST(60 AS INTEGER)
-)
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders JOIN late ON o_orderkey = late.l_orderkey
-WHERE o_orderdate >= TIMESTAMP '1997-07-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1997-10-01 00:00:00'
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority ASC NULLS FIRST
-""",
-    # re-aggregated per-order partials (decimal-exact re-aggregation);
-    # BETWEEN opened into inequalities
-    "tpch_q6": """
-WITH per_order AS (
-    SELECT l_orderkey,
-           sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * CAST(l_discount AS DECIMAL(18,4))) AS s
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount >= 0.05 AND l_discount <= 0.07
-      AND l_quantity < 24
-    GROUP BY l_orderkey
-)
-SELECT CAST(round(sum(s), 2) AS DOUBLE) AS revenue FROM per_order
-""",
-    # nation-pair disjunction as a concatenated-pair IN list; year via
-    # strftime; customer-rooted join order
-    "tpch_q7": """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(strftime(l_shipdate, '%Y') AS BIGINT) AS l_year,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                      * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
-            AS DOUBLE) AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE (n1.n_name || '|' || n2.n_name)
-      IN ('NATION_12|NATION_11', 'NATION_11|NATION_12')
-  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY n1.n_name, n2.n_name, CAST(strftime(l_shipdate, '%Y') AS BIGINT)
-ORDER BY supp_nation ASC NULLS FIRST, cust_nation ASC NULLS FIRST,
-         l_year ASC NULLS FIRST
-""",
-    # same CASE numerator but the share computed from per-(year, nation)
-    # decimal partials re-aggregated — exact decimal re-aggregation
-    "tpch_q8": """
-WITH vols AS (
-    SELECT CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS o_year,
-           n2.n_name AS nation,
-           sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS v
-    FROM part
-    JOIN lineitem ON p_partkey = l_partkey
-    JOIN supplier ON s_suppkey = l_suppkey
-    JOIN orders ON o_orderkey = l_orderkey
-    JOIN customer ON c_custkey = o_custkey
-    JOIN nation n1 ON c_nationkey = n1.n_nationkey
-    JOIN region ON n1.n_regionkey = r_regionkey
-    JOIN nation n2 ON s_nationkey = n2.n_nationkey
-    WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
-      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY 1, 2
-)
-SELECT o_year,
-       CAST(round(sum(CASE WHEN nation = 'NATION_5' THEN v
-                           ELSE CAST(0 AS DECIMAL(18,4)) END)
-                  / sum(v), 6) AS DOUBLE) AS mkt_share
-FROM vols GROUP BY o_year ORDER BY o_year ASC NULLS FIRST
-""",
-    # revenue pre-aggregated per order from lineitem alone, then joined
-    # out and re-aggregated per customer (decimal-exact)
-    "tpch_q10": """
-WITH rev AS (
-    SELECT l_orderkey,
-           sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS r
-    FROM lineitem WHERE l_returnflag = 'R' GROUP BY l_orderkey
-)
-SELECT c_custkey, c_name, c_acctbal, n_name, c_mktsegment,
-       CAST(round(sum(r), 2) AS DOUBLE) AS revenue
-FROM rev
-JOIN orders ON o_orderkey = l_orderkey
-JOIN customer ON c_custkey = o_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1997-10-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
-ORDER BY revenue DESC NULLS LAST, c_custkey ASC NULLS FIRST
-LIMIT 20
-""",
-    # HAVING-with-scalar-subquery as a filtered CTE join
-    "tpch_q11": """
-WITH vals AS (
-    SELECT l_partkey,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * CAST(l_quantity AS DECIMAL(18,4))), 2)
-                AS DOUBLE) AS value
-    FROM lineitem GROUP BY l_partkey
-),
-thr AS (
-    SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * CAST(l_quantity AS DECIMAL(18,4)))
-                      * CAST(0.0005 AS DECIMAL(18,8)), 2) AS DOUBLE)
-           AS threshold
-    FROM lineitem
-)
-SELECT l_partkey, value FROM vals, thr
-WHERE value > threshold
-ORDER BY value DESC NULLS LAST, l_partkey ASC NULLS FIRST
-""",
-    # high/low counts as total-minus-high arithmetic over two grouped
-    # counts (no CASE)
-    "tpch_q12": """
-WITH j AS (
-    SELECT l_linestatus, o_orderpriority
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-),
-t AS (SELECT l_linestatus, count(*) AS total FROM j GROUP BY 1),
-h AS (SELECT l_linestatus, count(*) AS high FROM j
-      WHERE o_orderpriority = '1-URGENT' OR o_orderpriority = '2-HIGH'
-      GROUP BY 1)
-SELECT t.l_linestatus,
-       CAST(coalesce(h.high, 0) AS BIGINT) AS high_line_count,
-       CAST(t.total - coalesce(h.high, 0) AS BIGINT) AS low_line_count
-FROM t LEFT JOIN h ON t.l_linestatus = h.l_linestatus
-ORDER BY t.l_linestatus ASC NULLS FIRST
-""",
-    # left-join count as a correlated scalar COUNT subquery
-    "tpch_q13": """
-WITH cc AS (
-    SELECT c_custkey,
-           (SELECT count(*) FROM orders
-            WHERE o_custkey = c_custkey
-              AND o_orderpriority <> '5-LOW') AS c_count
-    FROM customer
-)
-SELECT c_count, count(*) AS custdist
-FROM cc GROUP BY c_count
-ORDER BY custdist DESC NULLS LAST, c_count DESC NULLS LAST
-""",
-    # promo share from separate numerator/denominator sums (typed
-    # coalesce keeps the division operand types identical)
-    "tpch_q14": """
-WITH d AS (
-    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS den
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
-),
-n AS (
-    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS num
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE p_type = 'PROMO'
-      AND l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
-)
-SELECT CAST(round(100.0 * coalesce(num, CAST(0 AS DECIMAL(18,4))) / den,
-                  4) AS DOUBLE) AS promo_revenue
-FROM d, n
-""",
-    # argmax via rank()-keeps-ties window instead of the scalar max
-    # subquery
-    "tpch_q15": """
-WITH supplier_revenue AS (
-    SELECT l_suppkey AS supplier_no,
-           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * (1 - CAST(l_discount AS DECIMAL(18,4)))), 2)
-                AS DOUBLE) AS total_revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-    GROUP BY l_suppkey
-),
-r AS (
-    SELECT supplier_no, total_revenue,
-           rank() OVER (ORDER BY total_revenue DESC) AS rk
-    FROM supplier_revenue
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM supplier JOIN r ON s_suppkey = supplier_no
-WHERE rk = 1
-ORDER BY s_suppkey ASC NULLS FIRST
-""",
-    # NOT IN as a left-anti join; the size IN-list as modular arithmetic
-    # (1,4,...,22 are exactly == 1 mod 3 within [1, 22])
-    "tpch_q16": """
-SELECT p_brand, p_type, p_size,
-       count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
-LEFT JOIN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0) bad
-       ON l_suppkey = bad.s_suppkey
-WHERE NOT (p_brand = 'Brand#1')
-  AND p_size % 3 = 1 AND p_size >= 1 AND p_size <= 22
-  AND bad.s_suppkey IS NULL
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC NULLS LAST, p_brand ASC NULLS FIRST,
-         p_type ASC NULLS FIRST, p_size ASC NULLS FIRST
-""",
-    # the OR-of-AND branches are brand-disjoint: total = exact decimal
-    # sum of three branch sums
-    "tpch_q19": """
-WITH b1 AS (
-    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS s
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#1' AND l_quantity >= 1 AND l_quantity <= 11
-      AND p_size >= 1 AND p_size <= 5
-),
-b2 AS (
-    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS s
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#10' AND l_quantity >= 10 AND l_quantity <= 20
-      AND p_size >= 1 AND p_size <= 10
-),
-b3 AS (
-    SELECT sum(CAST(l_extendedprice AS DECIMAL(18,4))
-               * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS s
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand = 'Brand#20' AND l_quantity >= 20 AND l_quantity <= 30
-      AND p_size >= 1 AND p_size <= 15
-)
-SELECT CAST(round(coalesce(b1.s, 0) + coalesce(b2.s, 0)
-                  + coalesce(b3.s, 0), 2) AS DOUBLE) AS revenue
-FROM b1, b2, b3
-""",
-    # top-1-per-customer via max-join + min-orderkey tie-break instead
-    # of row_number
-    "parsed_win_topn": """
-WITH g AS (
-    SELECT o_custkey, max(o_totalprice) AS mp,
-           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))), 2)
-                AS DOUBLE) AS cust_total
-    FROM orders WHERE o_custkey < 300 GROUP BY o_custkey
-),
-cand AS (
-    SELECT o.o_custkey, o.o_orderkey, o.o_totalprice, g.cust_total
-    FROM orders o JOIN g
-      ON o.o_custkey = g.o_custkey AND o.o_totalprice = g.mp
-)
-SELECT o_custkey, o_orderkey, o_totalprice, cust_total
-FROM cand
-WHERE o_orderkey = (SELECT min(c2.o_orderkey) FROM cand c2
-                    WHERE c2.o_custkey = cand.o_custkey)
-ORDER BY o_custkey ASC NULLS FIRST
-""",
-    # the two CTEs inlined into one flat join + aggregate
-    "parsed_cte_agg": """
-SELECT r_name, n_name, count(*) AS n_cust,
-       CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE)
-           AS bal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST
-""",
-    # ---- round 7: hand oracles for the six r3 rows displaced into the
-    # r8 rotation lead (they resample with independent evidence) ----
-    # hex-prefix threshold re-expressed NUMERICALLY: the generated
-    # oracle compares substr(md5) < '1999' lexicographically; here the
-    # 4 hex chars parse to an integer against 0x1999 = 6553 — equal
-    # if and only if hex-string order really is numeric order
-    "sample_stable_hash": """
-SELECT doc_id, lang, source FROM documents
-WHERE CAST(concat('0x',
-        substr(md5(CAST(doc_id AS VARCHAR) || ':sample'), 1, 4))
-      AS INTEGER) < 6553
-""",
-    # per-stratum CASE threshold unrolled into three UNION ALL branches
-    # with numeric cutoffs (de keeps everything: its generated cutoff
-    # 'g' sorts above every hex digit)
-    "sample_stratified": """
-SELECT doc_id, lang FROM documents WHERE lang = 'de'
-UNION ALL
-SELECT doc_id, lang FROM documents
-WHERE lang = 'en' AND CAST(concat('0x',
-        substr(md5(CAST(doc_id AS VARCHAR) || ':strat'), 1, 4))
-      AS INTEGER) < 6553
-UNION ALL
-SELECT doc_id, lang FROM documents
-WHERE lang = 'fr' AND CAST(concat('0x',
-        substr(md5(CAST(doc_id AS VARCHAR) || ':strat'), 1, 4))
-      AS INTEGER) < 32768
-""",
-    # hour spine from a RECURSIVE CTE (not generate_series), counts from
-    # a grid LEFT JOIN against the RAW events (not a pre-aggregated
-    # hourly table)
-    "ts_gap_fill_hourly": """
-WITH RECURSIVE span AS (
-    SELECT CAST(min(date_trunc('hour', ts)) AS TIMESTAMP) AS a,
-           CAST(max(date_trunc('hour', ts)) AS TIMESTAMP) AS b
-    FROM events
-),
-hours(hr) AS (
-    SELECT a FROM span
-    UNION ALL
-    SELECT hr + INTERVAL 1 HOUR FROM hours, span WHERE hr < b
-),
-types AS (SELECT DISTINCT event_type FROM events)
-SELECT t.event_type, g.hr, CAST(count(e.event_id) AS BIGINT) AS n
-FROM types t
-CROSS JOIN hours g
-LEFT JOIN events e
-    ON e.event_type = t.event_type
-   AND CAST(date_trunc('hour', e.ts) AS TIMESTAMP) = g.hr
-GROUP BY t.event_type, g.hr
-""",
-    # open/close fetched by joining back to the row holding the
-    # bucket's min/max timestamp (no arg_min/arg_max) — valid because
-    # the driver's nanosecond timestamps never tie within a bucket,
-    # which the generated oracle's arg_min would mask if they did
-    "ts_ohlc_hourly": """
-WITH base AS (
-    SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket,
-           event_type, ts, value
-    FROM events
-),
-ext AS (
-    SELECT bucket, event_type,
-           min(ts) AS tmin, max(ts) AS tmax,
-           round(max(value), 2) AS high,
-           round(min(value), 2) AS low,
-           count(*) AS n
-    FROM base GROUP BY bucket, event_type
-)
-SELECT e.bucket, e.event_type,
-       round(o.value, 2) AS open, e.high, e.low,
-       round(c.value, 2) AS close, e.n
-FROM ext e
-JOIN base o ON o.bucket = e.bucket AND o.event_type = e.event_type
-           AND o.ts = e.tmin
-JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
-           AND c.ts = e.tmax
-""",
-    # chunk membership by POSITION-RANGE JOIN (word p belongs to chunk
-    # start s iff s <= p < s+size) with ordered string_agg — not the
-    # generated oracle's list_slice; truncated tail chunks fall out of
-    # the count(*) instead of len(list_slice)
-    "text_chunk_documents": """
-WITH words AS (
-    SELECT doc_id, w, CAST(p AS INT) AS p
-    FROM (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS w,
-               generate_subscripts(string_split(text, ' '), 1) AS p
-        FROM documents WHERE doc_id < 200
-    ) u
-),
-nw AS (SELECT doc_id, max(p) AS nword FROM words GROUP BY doc_id),
-starts AS (
-    SELECT doc_id,
-           CAST(unnest(range(1, greatest(nword, 1) + 1, 24)) AS INT)
-               AS start
-    FROM nw
-)
-SELECT w.doc_id,
-       CAST((s.start - 1) / 24 AS INT) AS chunk_idx,
-       string_agg(w.w, ' ' ORDER BY w.p) AS chunk,
-       CAST(count(*) AS INT) AS n_words
-FROM starts s
-JOIN words w ON w.doc_id = s.doc_id
-            AND w.p >= s.start AND w.p < s.start + 32
-GROUP BY w.doc_id, s.start
-""",
-    # exact dedup via a correlated-aggregate formulation over the RAW
-    # text (not GROUP BY md5): one row per first-occurrence doc, copies
-    # counted by an equality subquery — any disagreement with the
-    # hash-group form means md5 collided or grouping diverged
-    "dedup_exact": """
 SELECT md5(d.text) AS text_md5,
        d.doc_id AS keep_id,
        (SELECT count(*) FROM documents c
@@ -6832,11 +4675,16 @@ WHERE NOT EXISTS (
     WHERE e.text = d.text AND e.doc_id < d.doc_id
 )
 """,
-    # canonical dedup via WINDOW aggregates + DISTINCT over the raw
-    # canonical string (not GROUP BY md5): if the hash-group and the
-    # string-window disagree on any group, md5 collided or the
-    # canonicalizations diverged
-    "dedup_canonical": """
+            headline=True,
+        ),
+        # near-exact: case/whitespace-canonicalized content hash
+        "dedup_canonical": Workload(
+            lambda s: dedup.canonical_dedup(s.table("documents")),
+            # canonical dedup via WINDOW aggregates + DISTINCT over the raw
+            # canonical string (not GROUP BY md5): if the hash-group and the
+            # string-window disagree on any group, md5 collided or the
+            # canonicalizations diverged
+            """
 SELECT DISTINCT
        md5(c) AS canon_md5,
        min(doc_id) OVER (PARTITION BY c) AS keep_id,
@@ -6845,11 +4693,14 @@ FROM (SELECT doc_id,
              trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS c
       FROM documents)
 """,
-    # signatures as min AGGREGATES over unnested distinct shingles —
-    # grouped-min rows instead of the generated oracle's list_min over
-    # list_transform (set-min is slice-order- and multiplicity-free, so
-    # the two formulations must agree exactly)
-    "dedup_minhash_signatures": """
+        ),
+        "dedup_minhash_signatures": Workload(
+            lambda s: dedup.minhash_signatures(s.table("documents")),
+            # signatures as min AGGREGATES over unnested distinct shingles —
+            # grouped-min rows instead of the operator oracle's list_min over
+            # list_transform (set-min is slice-order- and multiplicity-free, so
+            # the two formulations must agree exactly)
+            """
 WITH toks AS (
     SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
     FROM documents
@@ -6869,10 +4720,13 @@ FROM (
 ) u
 GROUP BY doc_id
 """,
-    # signatures as min AGGREGATES over unnested distinct shingles (not
-    # list_min of list_transform); the two band branches aggregated in
-    # one grouped pass over an unpivoted (band, bucket) projection
-    "dedup_minhash_buckets": """
+        ),
+        "dedup_minhash_buckets": Workload(
+            lambda s: dedup.minhash_buckets(s.table("documents")),
+            # signatures as min AGGREGATES over unnested distinct shingles (not
+            # list_min of list_transform); the two band branches aggregated in
+            # one grouped pass over an unpivoted (band, bucket) projection
+            """
 WITH toks AS (
     SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
     FROM documents
@@ -6903,11 +4757,15 @@ SELECT band, bucket, count(*) AS n_docs, min(doc_id) AS min_doc
 FROM bb GROUP BY band, bucket
 HAVING count(*) > 1
 """,
-    # band collision expressed directly on minhash equality — (mh0,mh1)
-    # or (mh2,mh3) pairwise equal — over an all-pairs join of per-doc
-    # signatures; no banded UNION/DISTINCT, no md5 bucket ids, so the
-    # banding semantics are checked rather than replayed
-    "dedup_minhash_verify": """
+            headline=True,
+        ),
+        "dedup_minhash_verify": Workload(
+            lambda s: dedup.minhash_dedup_pairs(s.table("documents"), threshold=0.2),
+            # band collision expressed directly on minhash equality — (mh0,mh1)
+            # or (mh2,mh3) pairwise equal — over an all-pairs join of per-doc
+            # signatures; no banded UNION/DISTINCT, no md5 bucket ids, so the
+            # banding semantics are checked rather than replayed
+            """
 WITH toks AS (
     SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws
     FROM documents
@@ -6942,15 +4800,1769 @@ JOIN shing sb ON sb.doc_id = b.doc_id
 WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
             / len(list_distinct(list_concat(sa.sh, sb.sh))), 4) >= 0.2
 """,
-}
+            headline=True,
+        ),
+        "text_top_terms": Workload(
+            lambda s: text.top_terms(s.table("documents")),
+            text.top_terms_oracle(),
+            headline=True,
+        ),
+        # Heaps-law vocabulary-growth curve per source:
+        # template-spam / OCR-noise red flag + tokenizer-sizing input;
+        # BIGINT-exact bucket checkpoints, 1e-6-snapped slope
+        "text_vocab_growth": Workload(
+            lambda s: text.vocab_growth(s.table("documents")),
+            text.vocab_growth_oracle(),
+            headline=True,
+        ),
+        # Zipf-law head fit: slope of ln(freq) vs ln(rank)
+        # over the top-k terms — the second classic corpus-health
+        # diagnostic next to the Heaps curve; one combined count
+        # shuffle + TakeOrdered, regression over a bounded k-row set;
+        # the oracle spells the regression as closed-form sums, a
+        # different mechanism from Spark's regr_slope accumulator
+        "text_zipf_slope": Workload(
+            lambda s: text.zipf_slope(s.table("documents")),
+            text.zipf_slope_oracle(),
+            headline=True,
+        ),
+        # per-cluster quality over the trained k-means fit:
+        # cohesion (fixed-point mean member-to-centroid cosine) vs
+        # separation (max other-centroid cosine) — the SemDeDup cell
+        # granularity / IVF nprobe tuning signal; corpus never
+        # shuffles, separation is a codebook-bounded k x k grid
+        "sim_kmeans_quality": Workload(
+            lambda s: similarity.kmeans_quality(s.table("embeddings")),
+            similarity.kmeans_quality_oracle(),
+            headline=True,
+        ),
+        # single-pass column profiling (data-quality gate before a training
+        # run); oracle is the k-scan UNION ALL formulation — same numbers,
+        # the shape our one-pass stack avoids at scale
+        "profile_orders": Workload(
+            lambda s: profiling.profile_columns(
+                s.table("orders"),
+                ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"],
+            ),
+            profiling.profile_columns_oracle(
+                "orders",
+                ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"],
+            ),
+            headline=True,
+        ),
+        # training-batch prep: fixed token-budget packing within language
+        # shards (window-per-shard running offset — parallel by design)
+        "text_pack_sequences": Workload(
+            lambda s: text.pack_sequences(s.table("documents")),
+            text.pack_sequences_oracle(),
+            headline=True,
+        ),
+        # PII-style scrubbing; the corpus has no PII, so synthesize an
+        # email + long number per row, then mask (same synth in oracle)
+        "text_redact": Workload(
+            lambda s: text.redact(
+                s.table("documents").selectExpr(
+                    "doc_id",
+                    "concat(text, ' contact user', doc_id,"
+                    " '@example.com ref ', doc_id * 1000003) AS text",
+                )
+            ),
+            text.redact_oracle(
+                "(SELECT doc_id, concat(text, ' contact user', doc_id,"
+                " '@example.com ref ', doc_id * 1000003) AS text"
+                " FROM documents) t"
+            ),
+        ),
+        # overlapping word-window chunking (training/RAG prep); pure
+        # built-in composition — the UDTF twin is tested equal in
+        # tests/test_multimodal_sources_udfs.py
+        "text_chunk_documents": Workload(
+            lambda s: text.chunk_documents(s.table("documents").filter("doc_id < 200")),
+            # chunk membership by POSITION-RANGE JOIN (word p belongs to chunk
+            # start s iff s <= p < s+size) with ordered string_agg — not a
+            # list_slice formulation; truncated tail chunks fall out of
+            # the count(*) instead of len(list_slice)
+            """
+WITH words AS (
+    SELECT doc_id, w, CAST(p AS INT) AS p
+    FROM (
+        SELECT doc_id,
+               unnest(string_split(text, ' ')) AS w,
+               generate_subscripts(string_split(text, ' '), 1) AS p
+        FROM documents WHERE doc_id < 200
+    ) u
+),
+nw AS (SELECT doc_id, max(p) AS nword FROM words GROUP BY doc_id),
+starts AS (
+    SELECT doc_id,
+           CAST(unnest(range(1, greatest(nword, 1) + 1, 24)) AS INT)
+               AS start
+    FROM nw
+)
+SELECT w.doc_id,
+       CAST((s.start - 1) / 24 AS INT) AS chunk_idx,
+       string_agg(w.w, ' ' ORDER BY w.p) AS chunk,
+       CAST(count(*) AS INT) AS n_words
+FROM starts s
+JOIN words w ON w.doc_id = s.doc_id
+            AND w.p >= s.start AND w.p < s.start + 32
+GROUP BY w.doc_id, s.start
+""",
+            headline=True,
+        ),
+        # posexplode with 1-based ordinality (positional tokenization)
+        "text_word_positions": Workload(
+            lambda s: text.word_positions(s.table("documents").filter("doc_id < 100")),
+            text.word_positions_oracle(where="WHERE doc_id < 100"),
+        ),
+        # deterministic md5-keyed sampling: same rows every run/engine
+        "sample_stable_hash": Workload(
+            lambda s: sampling.stable_sample(s.table("documents"), rate=0.1)
+            .select("doc_id", "lang", "source"),
+            # hex-prefix threshold re-expressed NUMERICALLY: the operator's
+            # own oracle compares substr(md5) < '1999' lexicographically; here the
+            # 4 hex chars parse to an integer against 0x1999 = 6553 — equal
+            # if and only if hex-string order really is numeric order
+            """
+SELECT doc_id, lang, source FROM documents
+WHERE CAST(concat('0x',
+        substr(md5(CAST(doc_id AS VARCHAR) || ':sample'), 1, 4))
+      AS INTEGER) < 6553
+""",
+        ),
+        # per-stratum rates (downsample dominant lang, keep rare ones)
+        "sample_stratified": Workload(
+            lambda s: sampling.stratified_sample(
+                s.table("documents"),
+                rates={"en": 0.1, "de": 1.0, "fr": 0.5},
+            ).select("doc_id", "lang"),
+            # per-stratum CASE threshold unrolled into three UNION ALL branches
+            # with numeric cutoffs (de keeps everything: the operator's cutoff
+            # 'g' sorts above every hex digit)
+            """
+SELECT doc_id, lang FROM documents WHERE lang = 'de'
+UNION ALL
+SELECT doc_id, lang FROM documents
+WHERE lang = 'en' AND CAST(concat('0x',
+        substr(md5(CAST(doc_id AS VARCHAR) || ':strat'), 1, 4))
+      AS INTEGER) < 6553
+UNION ALL
+SELECT doc_id, lang FROM documents
+WHERE lang = 'fr' AND CAST(concat('0x',
+        substr(md5(CAST(doc_id AS VARCHAR) || ':strat'), 1, 4))
+      AS INTEGER) < 32768
+""",
+        ),
+        # exactly-k reproducible sample via hash-ordered TakeOrdered
+        "sample_stable_topk": Workload(
+            lambda s: sampling.stable_topk_sample(s.table("documents"), k=100)
+            .select("doc_id", "lang"),
+            sampling.stable_topk_sample_oracle(k=100, cols="doc_id, lang"),
+        ),
+        # leak-free train/holdout assignment keyed on md5(id:salt)
+        "sample_hash_split": Workload(
+            lambda s: sampling.hash_split(s.table("documents"), holdout=0.2)
+            .select("doc_id", "split"),
+            sampling.hash_split_oracle(holdout=0.2, cols="doc_id"),
+        ),
+        # dense hourly grid: downsample + gap-fill (missing hours -> 0)
+        "ts_gap_fill_hourly": Workload(
+            lambda s: timeseries.hourly_counts_gap_filled(s.table("events")),
+            # hour spine from a RECURSIVE CTE (not generate_series), counts from
+            # a grid LEFT JOIN against the RAW events (not a pre-aggregated
+            # hourly table)
+            """
+WITH RECURSIVE span AS (
+    SELECT CAST(min(date_trunc('hour', ts)) AS TIMESTAMP) AS a,
+           CAST(max(date_trunc('hour', ts)) AS TIMESTAMP) AS b
+    FROM events
+),
+hours(hr) AS (
+    SELECT a FROM span
+    UNION ALL
+    SELECT hr + INTERVAL 1 HOUR FROM hours, span WHERE hr < b
+),
+types AS (SELECT DISTINCT event_type FROM events)
+SELECT t.event_type, g.hr, CAST(count(e.event_id) AS BIGINT) AS n
+FROM types t
+CROSS JOIN hours g
+LEFT JOIN events e
+    ON e.event_type = t.event_type
+   AND CAST(date_trunc('hour', e.ts) AS TIMESTAMP) = g.hr
+GROUP BY t.event_type, g.hr
+""",
+        ),
+        # OHLC candle downsampling: time-ordered open/close via
+        # min_by/max_by (DuckDB arg_min/arg_max), one hash aggregate
+        "ts_ohlc_hourly": Workload(
+            lambda s: timeseries.ohlc_resample(s.table("events")),
+            # open/close fetched by joining back to the row holding the
+            # bucket's min/max timestamp (no arg_min/arg_max) — valid because
+            # the driver's nanosecond timestamps never tie within a bucket,
+            # which an arg_min formulation would mask if they did
+            """
+WITH base AS (
+    SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket,
+           event_type, ts, value
+    FROM events
+),
+ext AS (
+    SELECT bucket, event_type,
+           min(ts) AS tmin, max(ts) AS tmax,
+           round(max(value), 2) AS high,
+           round(min(value), 2) AS low,
+           count(*) AS n
+    FROM base GROUP BY bucket, event_type
+)
+SELECT e.bucket, e.event_type,
+       round(o.value, 2) AS open, e.high, e.low,
+       round(c.value, 2) AS close, e.n
+FROM ext e
+JOIN base o ON o.bucket = e.bucket AND o.event_type = e.event_type
+           AND o.ts = e.tmin
+JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
+           AND c.ts = e.tmax
+""",
+        ),
+        # resample to hourly means + last-observation-carried-forward
+        "ts_locf_resample": Workload(
+            lambda s: timeseries.locf_resample(
+                s.table("events").filter("user_id < 50")
+            ),
+            timeseries.locf_resample_oracle(where="WHERE user_id < 50"),
+        ),
+        # rolling z-score anomaly gate over hourly counts: integer
+        # metric makes window avg/stddev bit-identical cross-engine
+        "ts_rolling_anomaly": Workload(
+            lambda s: timeseries.rolling_anomaly(s.table("events")),
+            timeseries.rolling_anomaly_oracle(),
+            headline=True,
+        ),
+        # gap-based sessionization: lag-flag + running-sum session ids,
+        # then per-session aggregates — batch twin of the streaming
+        # session_window; one hash exchange total (window + agg share it)
+        "ts_sessionize": Workload(
+            lambda s: timeseries.sessionize(s.table("events")),
+            timeseries.sessionize_oracle(),
+            headline=True,
+        ),
+        # near-dup clustering: LSH pairs -> connected components
+        # (iterative min-label propagation vs DuckDB WITH RECURSIVE)
+        "dedup_cluster_cc": Workload(
+            lambda s: dedup.near_dup_clusters(s.table("documents"), threshold=0.2),
+            dedup.near_dup_clusters_oracle(threshold=0.2),
+            headline=True,
+        ),
+        # pipeline terminus: corpus minus clustered non-representatives
+        # (documents never shuffle; the drop list broadcasts)
+        "dedup_materialize": Workload(
+            lambda s: dedup.materialize_dedup(s.table("documents"), threshold=0.2),
+            dedup.materialize_dedup_oracle(threshold=0.2),
+        ),
+        "dedup_simhash": Workload(
+            lambda s: dedup.simhash(s.table("documents")),
+            dedup.simhash_oracle(),
+        ),
+        # quality-aware terminus: each cluster keeps its highest-quality
+        # doc (ties -> smallest id); only clustered docs are ever scored
+        "dedup_quality_rep": Workload(
+            lambda s: dedup.quality_dedup(s.table("documents"), threshold=0.2),
+            dedup.quality_dedup_oracle(threshold=0.2),
+        ),
+        "dedup_ngram_jaccard": Workload(
+            lambda s: dedup.ngram_jaccard_pairs(
+                s.table("documents"), max_left_id=20, threshold=0.05
+            ),
+            dedup.ngram_jaccard_pairs_oracle(max_left_id=20, threshold=0.05),
+        ),
+        # asymmetric containment (|A∩B| / min(|A|,|B|)) —
+        # the sub-document/quote-inclusion dup class symmetric Jaccard
+        # misses by construction (Broder resemblance vs containment)
+        "dedup_ngram_containment": Workload(
+            lambda s: dedup.ngram_containment_pairs(
+                s.table("documents"), max_left_id=60, threshold=0.1
+            ),
+            dedup.ngram_containment_pairs_oracle(
+                max_left_id=60, threshold=0.1
+            ),
+            headline=True,
+        ),
+        "text_token_stats": Workload(
+            lambda s: text.token_stats(s.table("documents")),
+            text.token_stats_oracle(),
+        ),
+        "text_quality_score": Workload(
+            lambda s: text.quality_score(s.table("documents")),
+            text.quality_score_oracle(),
+            headline=True,
+        ),
+        "text_language_id": Workload(
+            lambda s: text.language_id(s.table("documents")),
+            text.language_id_oracle(),
+            headline=True,
+        ),
+        "text_fingerprint": Workload(
+            lambda s: text.fingerprint(s.table("documents")),
+            text.fingerprint_oracle(),
+        ),
+        # per-doc top-k TF-IDF terms: doc-keyed repartition reused by tf
+        # agg + rank window; vocabulary-sized idf table broadcast back
+        "text_tfidf_topk": Workload(
+            lambda s: text.tfidf_top_terms(s.table("documents")),
+            text.tfidf_top_terms_oracle(),
+            headline=True,
+        ),
+        # intra-doc repetition (Gopher-style quality filters): top-gram
+        # and repeated-gram fractions; one doc-keyed shuffle reused by
+        # both aggregation levels
+        "text_repetition": Workload(
+            lambda s: text.repetition_stats(s.table("documents")),
+            text.repetition_stats_oracle(),
+            headline=True,
+        ),
+        # benchmark decontamination: distinct-shingle overlap of corpus
+        # docs vs a (broadcast) benchmark shingle set — one corpus pass,
+        # one doc-keyed aggregate shuffle
+        "text_decontaminate": Workload(
+            lambda s: text.decontaminate(
+                s.table("documents").filter("doc_id >= 20"),
+                s.table("documents").filter("doc_id < 20"),
+            ),
+            text.decontaminate_oracle(),
+            headline=True,
+        ),
+        "sim_cosine_topk": Workload(
+            lambda s: similarity.cosine_topk(
+                s.table("embeddings"), s.table("embeddings").filter("vec_id < 10")
+            ),
+            similarity.cosine_topk_oracle(max_query_id=10),
+            headline=True,
+        ),
+        # MMR diversity re-ranking (Carbonell-Goldstein) —
+        # top-n candidate search then a bounded per-query greedy via
+        # applyInPandas; oracle is the same greedy unrolled into k
+        # chained CTEs, every score snapped to 1e-6 before each argmax
+        "sim_mmr_diversify": Workload(
+            lambda s: similarity.mmr_diversify(
+                s.table("embeddings"),
+                s.table("embeddings").filter("vec_id < 3"),
+            ),
+            similarity.mmr_diversify_oracle(max_query_id=3),
+            headline=True,
+        ),
+        "sim_lsh_bucket_stats": Workload(
+            lambda s: similarity.lsh_bucket_stats(s.table("embeddings")),
+            similarity.lsh_bucket_stats_oracle(),
+            headline=True,
+        ),
+        "sim_cosine_topk_bucketed": Workload(
+            lambda s: similarity.cosine_topk_bucketed(
+                s.table("embeddings"), s.table("embeddings").filter("vec_id < 10")
+            ),
+            similarity.cosine_topk_bucketed_oracle(max_query_id=10),
+        ),
+        "sim_embedding_norms": Workload(
+            lambda s: similarity.embedding_norm_stats(s.table("embeddings")),
+            similarity.embedding_norm_stats_oracle(),
+        ),
+        # symmetric int8 quantization + reconstruction-error audit: all
+        # JVM higher-order fns, narrow map, no shuffle; codes are
+        # bit-identical cross-engine (double promotion + half-away round)
+        "sim_quantize_int8": Workload(
+            lambda s: similarity.quantize_int8(s.table("embeddings")),
+            similarity.quantize_int8_oracle(),
+            headline=True,
+        ),
+        "sim_ivf_topk": Workload(
+            lambda s: similarity.ivf_topk(
+                s.table("embeddings"), s.table("embeddings").filter("vec_id < 10")
+            ),
+            similarity.ivf_topk_oracle(max_query_id=10),
+            headline=True,
+        ),
+        # cross-corpus ANN JOIN — odd-id vectors probe their
+        # nprobe=2 nearest cells of an even-id index; neither side
+        # broadcasts (both are corpus-scale by construction), the join
+        # is pure cell-equi
+        "sim_ann_join": Workload(
+            lambda s: similarity.ann_join(
+                s.table("embeddings").filter("vec_id % 2 = 1"),
+                s.table("embeddings").filter("vec_id % 2 = 0"),
+            ),
+            similarity.ann_join_oracle(),
+            headline=True,
+        ),
+        # embedding-level benchmark decontamination: ann_join against a
+        # held-out benchmark split (vec_id % 10), τ-gate, per-source
+        # keep/drop accounting — the semantic sibling of the Bloom
+        # n-gram decontaminators
+        "pipeline_embedding_decontamination": Workload(
+            lambda s: dedup.embedding_decontaminate(
+                s.table("embeddings").filter("vec_id % 10 <> 0"),
+                s.table("embeddings").filter("vec_id % 10 = 0"),
+                s.table("documents"),
+            ),
+            dedup.embedding_decontaminate_oracle(),
+            headline=True,
+        ),
+        # ... and its acceptance audit: recall@k of the multi-probe
+        # join vs exact brute force, on a 25-query left sample (the
+        # audit shape — ground truth broadcasts the sample)
+        "sim_ann_join_recall": Workload(
+            lambda s: similarity.ann_join_recall(
+                s.table("embeddings").filter(
+                    "vec_id % 2 = 1 AND vec_id < 50"),
+                s.table("embeddings").filter("vec_id % 2 = 0"),
+            ),
+            similarity.ann_join_recall_oracle(
+                left_pred="vec_id % 2 = 1 AND vec_id < 50"),
+            headline=True,
+        ),
+        # b=6 -> 64 sign-LSH buckets: total pair count scales ~1/buckets
+        # and the pair join's parallelism is bucket-count-bound, so more
+        # (smaller) buckets is the scale knob (2.5x faster than b=4 at
+        # sf0.1 with plenty of surviving candidates)
+        "dedup_embedding_cosine": Workload(
+            lambda s: dedup.embedding_near_dup(s.table("embeddings"), b=6),
+            dedup.embedding_near_dup_oracle(b=6),
+            headline=True,
+        ),
+        # multimodal pipeline: binary payload + metadata -> mapInPandas
+        # feature extraction; the fake decode is deterministic MD5
+        # expansion, so a DuckDB md5-replay twin hash-checks
+        # mean_intensity (the 64-float vector column is dropped to keep
+        # the driver comparison light)
+        # binaryFile-source ingest: raw files written to a dir, read
+        # back through Spark's binary source (payloads never cross the
+        # driver), id parsed from the file name, md5-checked against
+        # the original text bytes (the 40-file write is test setup)
+        "mm_binary_ingest": Workload(
+            _mm_binary_ingest,
+            """
+SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+       md5(text) AS payload_md5
+FROM documents WHERE doc_id < 40 AND text IS NOT NULL
+""",
+        ),
+        "mm_feature_extract": Workload(
+            lambda s: multimodal.extract_features(
+                multimodal.as_multimodal(s.table("documents"))
+            ).select("doc_id", "mean_intensity"),
+            multimodal.extract_features_oracle("documents", "text", 64),
+            headline=True,
+        ),
+        # multimodal frame sampling: JVM-side explode of the frame index,
+        # duration derived from payload size -> fully oracle-checkable
+        # perceptual-hash near-dup pairs: aHash over the deterministic fake
+        # decode, 16-bit LSH banding, popcount verify — the DuckDB twin
+        # replays the md5 pixel stream and states the band predicate
+        # explicitly; a doc_id+10M twin copy plants exact duplicates so
+        # the result is non-empty at every SF
+        "mm_phash_pairs": Workload(
+            _mm_phash_pairs,
+            multimodal.phash_pairs_oracle(),
+            headline=True,
+        ),
+        "mm_frame_sample": Workload(
+            lambda s: multimodal.sample_frames(
+                multimodal.as_multimodal(s.table("documents"))
+            ).select("doc_id", "frame_ms"),
+            multimodal.sample_frames_oracle(),
+        ),
+        # pandas-UDF tier, oracle-checked: BPE-ish regex token counts
+        # (duckdb regexp_extract_all uses the same RE2-compatible pattern)
+        "udf_bpeish_token_count": Workload(
+            lambda s: s.table("documents").select(
+                "doc_id",
+                udfs.bpeish_token_count("text").cast("bigint").alias("n_bpeish"),
+            ),
+            r"""SELECT doc_id,
+                       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]')) AS n_bpeish
+                FROM documents""",
+            headline=True,
+        ),
+        # native DataFrame pivot (fillna(0) aligns Spark's null-for-absent
+        # with the oracle's count FILTER semantics)
+        "agg_pivot_status": Workload(
+            lambda s: s.table("orders")
+            .groupBy("o_orderpriority")
+            .pivot("o_orderstatus", ["F", "O", "P"])
+            .count()
+            .na.fill(0, ["F", "O", "P"]),
+            """SELECT o_orderpriority,
+                      count(*) FILTER (o_orderstatus = 'F') AS "F",
+                      count(*) FILTER (o_orderstatus = 'O') AS "O",
+                      count(*) FILTER (o_orderstatus = 'P') AS "P"
+               FROM orders GROUP BY o_orderpriority""",
+        ),
+        # skew-flattening salted join; result row-identical to the plain
+        # join, which is exactly what the oracle asserts
+        "join_salted_skew": Workload(
+            lambda s: joins.salted_join(
+                s.table("orders").select("o_orderkey", "o_custkey", "o_orderstatus"),
+                s.table("customer").select("c_custkey", "c_mktsegment")
+                .withColumnRenamed("c_custkey", "o_custkey"),
+                on="o_custkey",
+            )
+            .groupBy("o_orderstatus", "c_mktsegment")
+            .count()
+            .withColumnRenamed("count", "n"),
+            """SELECT o_orderstatus, c_mktsegment, count(*) AS n
+               FROM orders JOIN customer ON o_custkey = c_custkey
+               GROUP BY o_orderstatus, c_mktsegment""",
+            headline=True,
+        ),
+        # two-large-sides range join via bucketization: equi on bucket id
+        # + exact filter (vs the nested-loop a raw theta join costs);
+        # oracle is the plain theta join — identical pairs
+        "join_range_bucketed": Workload(
+            lambda s: joins.range_join_bucketed(
+                s.table("lineitem").filter("l_orderkey < 2000")
+                .select("l_orderkey", "l_linenumber", "l_extendedprice"),
+                s.table("part").filter("p_partkey < 100")
+                .selectExpr("p_partkey", "p_retailprice * 10 AS lo",
+                            "p_retailprice * 10 + 500 AS hi"),
+                "l_extendedprice", "lo", "hi", 500.0,
+            ).select("l_orderkey", "l_linenumber", "p_partkey"),
+            """SELECT l_orderkey, l_linenumber, p_partkey
+               FROM (SELECT l_orderkey, l_linenumber, l_extendedprice
+                     FROM lineitem WHERE l_orderkey < 2000) l
+               JOIN (SELECT p_partkey, p_retailprice * 10 AS lo,
+                            p_retailprice * 10 + 500 AS hi
+                     FROM part WHERE p_partkey < 100) p
+               ON l.l_extendedprice >= p.lo AND l.l_extendedprice <= p.hi""",
+            headline=True,
+        ),
+        "join_asof_forward": Workload(
+            lambda s: joins.asof_join(
+                s.table("events").filter("event_type = 'error'")
+                .select("event_id", "user_id", "ts"),
+                s.table("events").filter("event_type = 'purchase'")
+                .select("user_id", "ts", "value"),
+                on="user_id", left_time="ts", right_time="ts",
+                value_cols=["value"], direction="forward",
+            ),
+            joins.asof_join_oracle(
+                "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')",
+                "(SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')",
+                on="user_id", left_time="ts", right_time="ts",
+                left_cols=["event_id", "user_id", "ts"], value_cols=["value"],
+                direction="forward",
+            ),
+        ),
+        # tolerance-bounded as-of (pandas merge_asof-style): only matches
+        # within the last hour count — the window bound that makes the
+        # join bucketable at scale
+        "join_asof_tolerance": Workload(
+            lambda s: joins.asof_join(
+                s.table("events").filter("event_type = 'error'")
+                .select("event_id", "user_id", "ts"),
+                s.table("events").filter("event_type = 'click'")
+                .select("user_id", "ts", "value"),
+                on="user_id", left_time="ts", right_time="ts",
+                value_cols=["value"], tolerance_s=3600,
+            ),
+            joins.asof_join_oracle(
+                "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')",
+                "(SELECT user_id, ts, value FROM events WHERE event_type = 'click')",
+                on="user_id", left_time="ts", right_time="ts",
+                left_cols=["event_id", "user_id", "ts"], value_cols=["value"],
+                tolerance_s=3600,
+            ),
+        ),
+        "join_asof_events": Workload(
+            lambda s: joins.asof_join(
+                s.table("events").filter("event_type = 'error'")
+                .select("event_id", "user_id", "ts"),
+                s.table("events").filter("event_type = 'click'")
+                .select("user_id", "ts", "value"),
+                on="user_id", left_time="ts", right_time="ts",
+                value_cols=["value"],
+            ),
+            joins.asof_join_oracle(
+                "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'error')",
+                "(SELECT user_id, ts, value FROM events WHERE event_type = 'click')",
+                on="user_id", left_time="ts", right_time="ts",
+                left_cols=["event_id", "user_id", "ts"], value_cols=["value"],
+            ),
+            headline=True,
+        ),
+        # sub-document (C4-style line/block-level) dedup with reassembly
+        "dedup_block_level": Workload(
+            lambda s: dedup.block_dedup(s.table("documents")),
+            dedup.block_dedup_oracle(),
+            headline=True,
+        ),
+        # the published C4 heuristic filter set, one flag per rule
+        "text_c4_filters": Workload(
+            lambda s: text.c4_filters(s.table("documents")),
+            text.c4_filters_oracle(),
+            headline=True,
+        ),
+        # SemDeDup-style semantic dedup: k-means cluster, prune
+        # within-cluster near-dups (pairwise cosine >= tau), keep
+        # lowest-id representatives — the published cluster-then-prune
+        # scale shape (pair join keyed on cell_id, never all-pairs)
+        "dedup_semantic": Workload(
+            lambda s: dedup.semantic_dedup(s.table("embeddings")),
+            dedup.semantic_dedup_oracle(),
+            headline=True,
+        ),
+        # per-domain token-budget mixture (The Pile / DoReMi-style
+        # mixture recipe): md5-ordered admission until each source hits
+        # its all-bigint weighted share of the corpus token budget
+        "sample_token_budget_mix": Workload(
+            lambda s: sampling.token_budget_mix(s.table("documents")),
+            sampling.token_budget_mix_oracle(),
+            headline=True,
+        ),
+        # domain-mixture water-filling solver — target
+        # weights + token budget + max-epochs repeat cap -> per-domain
+        # draws via the closed-form capacity-ratio prefix scan;
+        # all-BIGINT cross-multiplication, corpus collapses to a
+        # |domains|-row stats table after ONE aggregate
+        "sample_mixture_waterfill": Workload(
+            lambda s: sampling.mixture_waterfill(s.table("documents")),
+            sampling.mixture_waterfill_oracle(),
+            headline=True,
+        ),
+        # deterministic PPS systematic sampling: exactly n
+        # picks per source, probability proportional to integer weight;
+        # two-phase bucket prefix sums on the Spark side vs a single
+        # window on the oracle side — identical integers either way
+        "sample_pps_systematic": Workload(
+            lambda s: sampling.pps_systematic_sample(s.table("documents")),
+            sampling.pps_systematic_sample_oracle(),
+            headline=True,
+        ),
+        # temperature-based source mixing (multilingual-LLM sampling)
+        "sample_temperature_mix": Workload(
+            lambda s: sampling.temperature_mix(s.table("documents"))
+            .select("doc_id", "source"),
+            sampling.temperature_mix_oracle(cols="t.doc_id, t.source"),
+            headline=True,
+        ),
+        # the nprobe TUNING CURVE — recall@k vs scored-pair
+        # cost at each probe width over ONE checkpointed index build;
+        # |nprobes| probe joins, never |nprobes| index builds
+        "sim_recall_frontier": Workload(
+            lambda s: similarity.ivf_recall_frontier(
+                s.table("embeddings"),
+                s.table("embeddings").filter(F.col("vec_id") < 10),
+            ),
+            similarity.ivf_recall_frontier_oracle(),
+        ),
+        # ANN acceptance gate: IVF recall@k vs exact brute force
+        "sim_recall_at_k": Workload(
+            lambda s: similarity.recall_at_k(
+                s.table("embeddings"),
+                s.table("embeddings").filter(F.col("vec_id") < 10),
+            ),
+            similarity.recall_at_k_oracle(),
+            headline=True,
+        ),
+        # deterministic hash-sharded training-set write -> read-back counts
+        "sink_sharded_write": Workload(
+            _sink_sharded_write, _SINK_SHARDED_ORACLE, headline=True,
+        ),
+        # Lloyd's k-means centroid training (the IVF index-build step),
+        # flattened to hashable (cell, pos, component, n_members) rows
+        "sim_kmeans_fit": Workload(
+            lambda s: similarity.kmeans_fit(s.table("embeddings")),
+            similarity.kmeans_fit_oracle(),
+            headline=True,
+        ),
+        # top principal component by power iteration — the
+        # dimensionality-reduction substrate; Gram matrix never forms
+        "sim_pca_component": Workload(
+            lambda s: similarity.pca_power_component(s.table("embeddings")),
+            similarity.pca_power_component_oracle(),
+            headline=True,
+        ),
+        # join-key skew diagnostic: heavy hitters + global skew ratio
+        "profile_key_skew": Workload(
+            lambda s: profiling.key_skew(s.table("events"), "user_id"),
+            profiling.key_skew_oracle("events", "user_id"),
+            headline=True,
+        ),
+        # PSI drift gate between two cohort distributions —
+        # 1-row edge/total broadcasts + one n_buckets-group count
+        # shuffle; nothing after the scan scales with the data
+        "profile_drift_psi": Workload(
+            lambda s: profiling.drift_psi(
+                s.table("events"), "value", "event_type",
+                "click", "purchase"),
+            profiling.drift_psi_oracle(
+                "events", "value", "event_type", "click", "purchase"),
+            headline=True,
+        ),
+        # KS drift twin — worst cumulative displacement of
+        # the bucketed CDFs (PSI sees per-bucket mass, KS sees a shift
+        # smeared across every bucket); same one-count-shuffle shape,
+        # the CDF window runs over the bounded n_buckets count rows
+        "profile_drift_ks": Workload(
+            lambda s: profiling.drift_ks(
+                s.table("events"), "value", "event_type",
+                "click", "purchase"),
+            profiling.drift_ks_oracle(
+                "events", "value", "event_type", "click", "purchase"),
+            headline=True,
+        ),
+        # winsorized per-group stats: exact percentiles broadcast back,
+        # clipped re-aggregation (outlier-robust metric gate)
+        "profile_robust_stats": Workload(
+            lambda s: profiling.robust_stats(s.table("events")),
+            profiling.robust_stats_oracle(),
+            headline=True,
+        ),
+        # one-pass pairwise Pearson correlations, long-form via stack
+        "profile_correlations": Workload(
+            lambda s: profiling.correlation_matrix(
+                s.table("lineitem"),
+                ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
+            ),
+            profiling.correlation_matrix_oracle(
+                "lineitem",
+                ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
+            ),
+            headline=True,
+        ),
+        # fixed-range histogram with densified empty bins
+        "profile_histogram": Workload(
+            lambda s: profiling.histogram(
+                s.table("orders"), "o_totalprice", 0.0, 600000.0, 12
+            ),
+            profiling.histogram_oracle(
+                "orders", "o_totalprice", 0.0, 600000.0, 12
+            ),
+        ),
+        # fastText-shaped hashed uni+bigram linear classifier inference:
+        # broadcast V-row weight table, in-row gram build, one explode,
+        # fixed-point integer sums so the sigmoid input is order-free
+        "text_classifier_score": Workload(
+            lambda s: text.classifier_score(
+                s.table("documents"), text.make_hash_weights(s)
+            ),
+            text.classifier_score_oracle(),
+            headline=True,
+        ),
+        # reliability-diagram bins for the classifier —
+        # where mean score and empirical positive rate diverge is
+        # where a score threshold misbehaves; n_bins-row output
+        "text_calibration_bins": Workload(
+            lambda s: text.calibration_bins(
+                s.table("documents"), text.make_hash_weights(s)
+            ),
+            text.calibration_bins_oracle(),
+            headline=True,
+        ),
+        # deterministic portable HLL: the md5-derived register table is
+        # itself the driver-checked artifact (unlike the opaque native
+        # sketch bytes of distinct_sketches)
+        "profile_hll_registers": Workload(
+            lambda s: profiling.hll_registers(s.table("events")),
+            profiling.hll_registers_oracle(),
+        ),
+        # ... and the estimate derived from those registers, with the
+        # exact count joined in so the error is audit-visible
+        "profile_hll_estimate": Workload(
+            lambda s: profiling.hll_estimate(s.table("events")),
+            profiling.hll_estimate_oracle(),
+            headline=True,
+        ),
+        # the native Datasketches tier becomes sweep-checkable —
+        # both estimators' error bounds asserted per group; the oracle
+        # recomputes exact + portable and pins the native flag TRUE
+        "profile_hll_native_vs_portable": Workload(
+            lambda s: profiling.hll_native_vs_portable(s.table("events")),
+            profiling.hll_native_vs_portable_oracle(),
+            headline=True,
+        ),
+        # count-min sketch heavy hitters: two disjoint shards sketched
+        # independently and cell-sum-merged on the Spark side, one-pass
+        # build on the oracle side — the hash match IS the merge law
+        "profile_cms_heavy_hitters": Workload(
+            lambda s: profiling.cms_heavy_hitters(s.table("events")),
+            profiling.cms_heavy_hitters_oracle(),
+            headline=True,
+        ),
+        # binned quantile sketch (third mergeable family after HLL and
+        # CMS): fixed-point bins, two-shard build + per-bin-sum merge on
+        # the Spark side vs one-pass oracle — hash match = merge law
+        "profile_quantile_sketch": Workload(
+            lambda s: profiling.binned_quantiles(s.table("events")),
+            profiling.binned_quantiles_oracle(),
+            headline=True,
+        ),
+        # KMV theta sketch (fourth mergeable family): pairwise
+        # INTERSECTION + UNION distinct estimates — the set operation
+        # HLL registers cannot express; md5-derived k-min state makes
+        # the estimates engine-identical (integer thresholds into IEEE
+        # division). Merge law + error bound proven in tests.
+        "profile_theta_setops": Workload(
+            lambda s: profiling.theta_set_estimates(
+                profiling.theta_sketch(s.table("events"))
+            ),
+            profiling.theta_estimates_oracle(),
+            headline=True,
+        ),
+        # Lee-et-al-style cross-document duplicated-substring spans:
+        # fixed-length char grams every stride chars, flagged when the
+        # gram occurs in >1 doc; per-doc dup fraction is the curation
+        # signal. Shuffle key is the 52-bit gram hash, never span text.
+        "dedup_substring_spans": Workload(
+            lambda s: dedup.substring_span_stats(s.table("documents")),
+            dedup.substring_span_stats_oracle(),
+            headline=True,
+        ),
+        # CCNet-style cross-document segment dedup: drop every
+        # copy of a segment seen in >=2 docs and fingerprint the cleaned
+        # text; occurrence counts group on a 52-bit hash with map-side
+        # combine, reassembly via sort_array (no window)
+        "dedup_segments_ccnet": Workload(
+            lambda s: dedup.segment_dedup(s.table("documents")),
+            dedup.segment_dedup_oracle(),
+            headline=True,
+        ),
+        # fixed-point PageRank centrality over a bounded-degree LSH
+        # similarity graph: the link-analysis quality signal
+        # (CommonCrawl harmonic-centrality ranking) as 3 unrolled
+        # integer iterations — bit-identical in any engine
+        "graph_pagerank_sim": Workload(
+            lambda s: graph.pagerank(
+                graph.knn_edges(s.table("embeddings")), iterations=3
+            ),
+            graph.pagerank_oracle(graph.knn_edges_oracle_cte(), iterations=3),
+            headline=True,
+        ),
+        # per-node triangle counts over the same similarity graph:
+        # the duplicate-community density signal, via
+        # degree-ordered orientation (each wedge center O(sqrt(m))
+        # out-degree — skew-proof); oracle replays with NO orientation
+        # at all (id-ordered a<b<c triple join) — both count each
+        # triangle exactly once
+        "graph_triangle_count": Workload(
+            lambda s: graph.triangle_count(
+                graph.knn_edges(s.table("embeddings"))
+            ),
+            graph.triangle_count_oracle(graph.knn_edges_oracle_cte()),
+            headline=True,
+        ),
+        # contrastive-training hard-negative mining: top-k
+        # most-similar DIFFERENT-label vectors per sampled query —
+        # brute baseline (broadcast query side, label gate in the join
+        # condition); scale path = ann_join + label filter + re-rank
+        "sim_hard_negatives": Workload(
+            lambda s: similarity.hard_negatives(s.table("embeddings")),
+            similarity.hard_negatives_oracle(),
+            headline=True,
+        ),
+        # GPT-3/PaLM-style n-gram decontamination through a broadcast
+        # Bloom bit array: the training-side membership test is a pure
+        # in-row projection (no train-side shuffle at all); exact
+        # verification joined in so the FP gap is audit-visible
+        "dedup_bloom_ngram_decontaminate": Workload(
+            lambda s: dedup.bloom_ngram_decontaminate(s.table("documents")),
+            dedup.bloom_ngram_decontaminate_oracle(),
+            headline=True,
+        ),
+        # JSON-lines write -> schema-on-read -> aggregate (source path)
+        "source_orc_roundtrip": Workload(
+            _source_orc_roundtrip, _SOURCE_ORC_ORACLE,
+        ),
+        "source_jsonl_roundtrip": Workload(
+            _source_jsonl_roundtrip, _SOURCE_JSONL_ORACLE,
+        ),
+        # CSV write -> schema-on-read -> cross-source join (source path)
+        "source_csv_roundtrip": Workload(
+            _source_csv_roundtrip, _SOURCE_CSV_ORACLE,
+        ),
+        # two-generation parquet dataset read under mergeSchema
+        "source_schema_evolution": Workload(
+            _source_schema_evolution, _SOURCE_EVOLUTION_ORACLE,
+        ),
+        # Z-order clustered write -> read-back aggregate (the layout
+        # lever for multi-dimensional file pruning)
+        "sink_zorder_roundtrip": Workload(
+            _sink_zorder_roundtrip, _SINK_ZORDER_ORACLE,
+            headline=True,
+        ),
+        # the composed curation pipeline: prepare -> C4 -> dedup ->
+        # sample -> per-source stats, one plan, two shuffles
+        "pipeline_curation": Workload(
+            _pipeline_curation, _PIPELINE_CURATION_ORACLE, headline=True,
+        ),
+        # the same composition upgraded to the published cluster-then-
+        # prune recipe: C4 gate -> SemDeDup over kept embeddings ->
+        # token-budget mixture -> per-source stats, one composed plan
+        "pipeline_semantic_curation": Workload(
+            _pipeline_semantic_curation, _pipeline_semantic_oracle(),
+            headline=True,
+        ),
+        # perplexity-proxy quality score: mean unigram logprob under the
+        # corpus's own top-V distribution (CCNet-style filter stand-in)
+        "text_unigram_logprob": Workload(
+            lambda s: text.unigram_logprob(s.table("documents")),
+            text.unigram_logprob_oracle(),
+            headline=True,
+        ),
+        # interpolated-bigram LM scoring: one step closer to
+        # the CCNet KenLM gate — Jelinek-Mercer lam*P(w|prev) +
+        # (1-lam)*P_uni(w) under the corpus's own top-B/top-V tables,
+        # per-token logs snapped to 1e-6 fixed point so the per-doc
+        # mean is summation-order-free across engines
+        "text_bigram_logprob": Workload(
+            lambda s: text.bigram_interp_logprob(s.table("documents")),
+            text.bigram_interp_logprob_oracle(),
+            headline=True,
+        ),
+        # classifier TRAINING: full-batch logistic GD over
+        # hashed-gram count features, label = lang=='en'; exact integer
+        # gradients (errors snap to 1e-6 fixed point first) make the
+        # TRAINED weight table engine-identical — the missing half of
+        # text_classifier_score's inference
+        "text_lr_train": Workload(
+            lambda s: text.lr_train_hashed(s.table("documents")),
+            text.lr_train_hashed_oracle(),
+            headline=True,
+        ),
+        # BPE merge-rule training — the tokenizer-training step
+        # on the same engine (Sennrich 2016); bounded word-shape table,
+        # one pair-count aggregate + 1-row argmax + literal replace per
+        # iteration; oracle is the iteration-unrolled CTE chain
+        "text_bpe_train": Workload(
+            lambda s: text.bpe_train_merges(s.table("documents")),
+            text.bpe_train_merges_oracle(),
+            headline=True,
+        ),
+        # the serving half: apply the trained merges to the FULL vocab,
+        # per-doc token budgets (broadcast-rules + distinct-vocab join)
+        "text_bpe_encode": Workload(
+            lambda s: text.bpe_encode(
+                s.table("documents"),
+                text.bpe_train_merges(s.table("documents")),
+            ),
+            text.bpe_encode_oracle(),
+            headline=True,
+        ),
+        # ordered funnel: per-user earliest reach time per step, each
+        # step constrained to follow the previous (one user-keyed agg)
+        "ts_funnel_steps": Workload(
+            lambda s: timeseries.funnel(s.table("events")),
+            timeseries.funnel_oracle(),
+            headline=True,
+        ),
+        # weekly cohort retention curve substrate
+        "ts_cohort_retention": Workload(
+            lambda s: timeseries.cohort_retention(s.table("events")),
+            timeseries.cohort_retention_oracle(),
+            headline=True,
+        ),
+        # incremental corpus update: new batch deduped against the
+        # existing corpus (exact md5 anti-join -> LSH candidates vs the
+        # corpus band table -> Jaccard verify)
+        "dedup_incremental": Workload(
+            lambda s: dedup.incremental_dedup(
+                s.table("documents").filter(F.col("doc_id") >= 400),
+                s.table("documents").filter(F.col("doc_id") < 400),
+            ),
+            dedup.incremental_dedup_oracle(),
+            headline=True,
+        ),
+        # market-basket pair affinity with lift (per-basket-bounded
+        # self-join; rounded-lift TakeOrdered)
+        "affinity_basket_pairs": Workload(
+            lambda s: affinity.basket_pairs(s.table("lineitem")),
+            affinity.basket_pairs_oracle(),
+        ),
+        # type-2 SCD merge: changed keys close their open version and
+        # append a new one; history stays immutable
+        "join_scd2_merge": Workload(
+            lambda s: joins.scd2_merge(
+                s.table("customer").select(
+                    "c_custkey", "c_name", "c_acctbal",
+                    F.lit("2024-01-01").cast("timestamp")
+                    .alias("valid_from"),
+                    F.lit(None).cast("timestamp").alias("valid_to"),
+                    F.lit(True).alias("is_current"),
+                ),
+                s.table("customer").select(
+                    "c_custkey", "c_name",
+                    F.when(
+                        F.col("c_custkey") % 10 == 0,
+                        F.col("c_acctbal") + 100,
+                    ).otherwise(F.col("c_acctbal")).alias("c_acctbal"),
+                ),
+                "c_custkey", ["c_name", "c_acctbal"], "2024-06-01",
+            ),
+            """
+            SELECT c_custkey, c_name, c_acctbal,
+                   TIMESTAMP '2024-01-01' AS valid_from,
+                   NULL::TIMESTAMP AS valid_to, true AS is_current
+            FROM customer WHERE c_custkey % 10 <> 0
+            UNION ALL
+            SELECT c_custkey, c_name, c_acctbal,
+                   TIMESTAMP '2024-01-01', TIMESTAMP '2024-06-01', false
+            FROM customer WHERE c_custkey % 10 = 0
+            UNION ALL
+            SELECT c_custkey, c_name, c_acctbal + 100,
+                   TIMESTAMP '2024-06-01', NULL::TIMESTAMP, true
+            FROM customer WHERE c_custkey % 10 = 0
+            """,
+            headline=True,
+        ),
+        # snapshot diff audit — one full-outer key join
+        # classifying added/removed/changed/unchanged + 4-group count
+        # (old/new snapshots derived in-query from customer)
+        "join_snapshot_diff": Workload(
+            lambda s: joins.snapshot_diff(
+                s.table("customer")
+                .filter(F.col("c_custkey") % 89 != 0)
+                .select("c_custkey", "c_name", "c_acctbal"),
+                s.table("customer")
+                .filter(F.col("c_custkey") % 97 != 0)
+                .select(
+                    "c_custkey", "c_name",
+                    F.when(F.col("c_custkey") % 10 == 0,
+                           F.col("c_acctbal") + 100)
+                    .otherwise(F.col("c_acctbal")).alias("c_acctbal"),
+                ),
+                "c_custkey", ["c_name", "c_acctbal"],
+            ),
+            joins.snapshot_diff_oracle(
+                "SELECT c_custkey, c_name, c_acctbal FROM customer "
+                "WHERE c_custkey % 89 <> 0",
+                "SELECT c_custkey, c_name, CASE WHEN c_custkey % 10 = 0 "
+                "THEN c_acctbal + 100 ELSE c_acctbal END AS c_acctbal "
+                "FROM customer WHERE c_custkey % 97 <> 0",
+                "c_custkey", ["c_name", "c_acctbal"],
+            ),
+            headline=True,
+        ),
+        # event-time lateness histogram — per-key running-max
+        # window in exact integer microseconds + bounded-bucket reduce;
+        # the measurement that sizes a watermark delay
+        # the fixture stream is perfectly ordered (every lateness would
+        # be 0), so the workload derives a jittered arrival order
+        # in-query — a deterministic multiplicative shuffle of the low
+        # bits simulating network reordering; the audit is what's
+        # under test, against the same derivation in the oracle
+        "ts_lateness_audit": Workload(
+            lambda s: timeseries.lateness_audit(
+                s.table("events").withColumn(
+                    "arrival",
+                    F.col("event_id")
+                    + (F.col("event_id") * F.lit(2654435761)) % 16,
+                ),
+                arrival_col="arrival", bucket_minutes=1,
+                tie_col="event_id",
+            ),
+            timeseries.lateness_audit_oracle(
+                table="(SELECT *, event_id + (event_id * 2654435761) "
+                      "% 16 AS arrival FROM events)",
+                arrival_col="arrival", bucket_minutes=1,
+                tie_col="event_id",
+            ),
+            headline=True,
+        ),
+        # time-weighted average under LOCF — the
+        # irregular-sampling mean (TimescaleDB time_weight shape);
+        # exact integer-microsecond durations x 1e-3 fixed-point
+        # values, ONE key exchange serving both window and group-by
+        "ts_time_weighted_avg": Workload(
+            lambda s: timeseries.time_weighted_avg(s.table("events")),
+            timeseries.time_weighted_avg_oracle(),
+            headline=True,
+        ),
+        # PMI collocation mining — sliding-window
+        # co-occurrence pairs ranked by pointwise mutual information;
+        # the PMI argument is ONE double division of exact BIGINT
+        # products so a single ln + 1e-6 snap is engine-stable
+        "text_pmi_collocations": Workload(
+            lambda s: text.pmi_collocations(s.table("documents")),
+            text.pmi_collocations_oracle(),
+            headline=True,
+        ),
+        # per-COLUMN snapshot drift audit — null-rate bp,
+        # exact distinct counts, 1e-3 fixed-point means per column
+        # across a baseline/current time split; the schema-level
+        # companion to the value-level PSI/KS gates (the fixture has
+        # no nulls, so a nullable column is derived in-query — the
+        # audit is what's under test, same derivation in the oracle)
+        "profile_snapshot_drift": Workload(
+            lambda s: profiling.snapshot_drift(
+                s.table("events").withColumn(
+                    "value_n",
+                    F.expr("CASE WHEN value < 20 THEN NULL ELSE value END"),
+                ),
+                cohort_sql="ts >= TIMESTAMP '2024-01-16'",
+                columns=["event_type", "props", "value_n", "user_id"],
+                numeric_cols=["value_n", "user_id"],
+            ),
+            profiling.snapshot_drift_oracle(
+                table="(SELECT *, CASE WHEN value < 20 THEN NULL "
+                      "ELSE value END AS value_n FROM events)",
+                cohort_sql="ts >= TIMESTAMP '2024-01-16'",
+                columns=["event_type", "props", "value_n", "user_id"],
+                numeric_cols=["value_n", "user_id"],
+            ),
+            headline=True,
+        ),
+        # nearest-direction as-of join — the third merge_asof
+        # direction (backward/forward exist above); both candidates
+        # from ONE keyed exchange + one sorted pass, exact
+        # integer-microsecond distance compare, backward tie-break,
+        # tolerance bounding each direction BEFORE the compare
+        "join_asof_nearest": Workload(
+            lambda s: joins.asof_join_nearest(
+                s.table("events").filter("event_type = 'error'")
+                .select("event_id", "user_id", "ts"),
+                s.table("events").filter("event_type = 'click'")
+                .select("user_id", "ts", "value"),
+                on="user_id", left_time="ts", right_time="ts",
+                value_cols=["value"], tolerance_s=86400,
+            ),
+            joins.asof_join_nearest_oracle(
+                "(SELECT event_id, user_id, ts FROM events "
+                "WHERE event_type = 'error')",
+                "(SELECT user_id, ts, value FROM events "
+                "WHERE event_type = 'click')",
+                on="user_id", left_time="ts", right_time="ts",
+                left_id="event_id",
+                left_cols=["event_id", "user_id", "ts"],
+                value_cols=["value"], tolerance_s=86400,
+            ),
+            headline=True,
+        ),
+        # SCD2 point-in-time lookup — THE consumption pattern
+        # for versioned history: fold the events CDC feed into an SCD2
+        # history batch-side (the streaming sink's batch twin), then
+        # each event picks the version current AT its timestamp via a
+        # broadcast equi-join with the interval test as residual (the
+        # fact side never shuffles)
+        "join_scd2_pointlookup": Workload(
+            lambda s: joins.scd2_point_in_time(
+                s.table("events").select("event_id", "user_id", "ts"),
+                joins.scd2_history_from_cdc(s.table("events")),
+            ).select("event_id", "user_id", "ts",
+                     F.col("dim_event_type")),
+            _scd2_pointlookup_oracle(),
+            headline=True,
+        ),
+        # type-1 upsert (batch MERGE): updated customer rows replace
+        # same-key rows, the standing table never shuffles
+        "join_upsert_snapshot": Workload(
+            lambda s: joins.upsert(
+                s.table("customer").select(
+                    "c_custkey", "c_name", "c_acctbal"
+                ),
+                s.table("customer").filter("c_custkey % 10 = 0").select(
+                    "c_custkey", "c_name",
+                    (F.col("c_acctbal") + 100).alias("c_acctbal"),
+                ),
+                "c_custkey",
+            ),
+            """
+            SELECT c_custkey, c_name, c_acctbal + 100 AS c_acctbal
+            FROM customer WHERE c_custkey % 10 = 0
+            UNION ALL
+            SELECT c_custkey, c_name, c_acctbal
+            FROM customer WHERE c_custkey % 10 <> 0
+            """,
+        ),
+        # interval-interval overlap join, bucketized equi + canonical
+        # first-bucket emission (no dedup shuffle); naive oracle
+        "join_interval_overlap": Workload(
+            lambda s: joins.interval_overlap_join(
+                s.table("events").filter("event_type = 'error'").select(
+                    F.col("event_id").alias("err_id"), "user_id",
+                    F.unix_timestamp("ts").alias("e_lo"),
+                    (F.unix_timestamp("ts") + 3600).alias("e_hi"),
+                ),
+                s.table("events").filter("event_type = 'purchase'").select(
+                    F.col("event_id").alias("purch_id"), "user_id",
+                    F.unix_timestamp("ts").alias("p_lo"),
+                    (F.unix_timestamp("ts") + 1800).alias("p_hi"),
+                ),
+                "e_lo", "e_hi", "p_lo", "p_hi", 3600.0, on="user_id",
+            ).select("err_id", "purch_id"),
+            """
+            SELECT a.err_id, b.purch_id
+            FROM (SELECT event_id AS err_id, user_id,
+                         epoch(ts)::BIGINT AS e_lo,
+                         epoch(ts)::BIGINT + 3600 AS e_hi
+                  FROM events WHERE event_type = 'error') a
+            JOIN (SELECT event_id AS purch_id, user_id,
+                         epoch(ts)::BIGINT AS p_lo,
+                         epoch(ts)::BIGINT + 1800 AS p_hi
+                  FROM events WHERE event_type = 'purchase') b
+            ON a.user_id = b.user_id
+               AND a.e_lo <= b.p_hi AND b.p_lo <= a.e_hi
+            """,
+            headline=True,
+        ),
+        # edit-distance join via positional q-gram blocking; the naive
+        # oracle proves the candidate generation lossless
+        "join_fuzzy_names": Workload(
+            lambda s: joins.fuzzy_join(
+                s.table("part").filter(F.col("p_partkey") < 100).select(
+                    F.col("p_partkey").alias("id_a"),
+                    F.col("p_name").alias("name_a"),
+                ),
+                s.table("part").select(
+                    F.col("p_partkey").alias("id_b"),
+                    F.col("p_name").alias("name_b"),
+                ),
+                "id_a", "name_a", "id_b", "name_b", max_dist=1,
+            ).filter(F.col("id_a") < F.col("id_b")),
+            joins.fuzzy_join_oracle(
+                "SELECT p_partkey AS id_a, p_name AS name_a FROM part"
+                " WHERE p_partkey < 100",
+                "SELECT p_partkey AS id_b, p_name AS name_b FROM part",
+                "id_a", "name_a", "id_b", "name_b", max_dist=1,
+                extra_cond="AND a.id_a < b.id_b",
+            ),
+            headline=True,
+        ),
+        # mergeable hourly rollup: two disjoint halves rolled up
+        # independently, merged via the state algebra, finalized — the
+        # oracle is the rollup of ALL raw rows (proves merge lossless)
+        "ts_mergeable_rollup": Workload(
+            lambda s: timeseries.finalize_rollup(
+                timeseries.merge_rollups(
+                    timeseries.mergeable_rollup(
+                        s.table("events").filter("event_id % 2 = 0")
+                    ),
+                    timeseries.mergeable_rollup(
+                        s.table("events").filter("event_id % 2 = 1")
+                    ),
+                )
+            ),
+            timeseries.mergeable_rollup_oracle(),
+            headline=True,
+        ),
+        # STREAMING driver-visible workload (first CORRECTNESS row whose
+        # compute path goes through a streaming query): events split
+        # into 4 files, replayed as a bounded file stream through the
+        # foreachBatch materialized-rollup sink (one state merge per
+        # trigger), finalized standing table returned;
+        # the oracle is the batch rollup of ALL raw rows
+        "streaming_rollup_result": Workload(
+            _streaming_rollup_result,
+            timeseries.mergeable_rollup_oracle(),
+            headline=True,
+        ),
+        # STREAMING drift monitoring: per-day PSI of the purchase value
+        # stream vs the batch click reference — bucketed windowed counts
+        # through a real 4-trigger streaming replay, PSI finalized
+        # batch-side; STRONG oracle (the batch SQL twin)
+        "streaming_drift_psi_result": Workload(
+            _streaming_drift_psi_result,
+            _STREAMING_DRIFT_PSI_ORACLE,
+            headline=True,
+        ),
+        # STREAMING k-means model maintenance: the MODEL
+        # state-algebra class (batch contribution depends on observed
+        # state) — 4-trigger replay over hash-split batches, finalized
+        # centroids hash-checked vs the unrolled-stage SQL twin
+        "streaming_kmeans_result": Workload(
+            _streaming_kmeans_result,
+            _streaming_kmeans_oracle(),
+            headline=True,
+        ),
+        # STREAMING windowed top-k: trending keys per
+        # event-time day through a real 4-trigger replay; state is
+        # O(open windows x distinct keys) — the honest exact-top-k
+        # cost (CMS is the sketch fallback); rank cut batch-side
+        "streaming_topk_result": Workload(
+            _streaming_topk_result,
+            _STREAMING_TOPK_ORACLE,
+            headline=True,
+        ),
+        # STREAMING CDC-apply / SCD2 sink: the fourth sink
+        # state-algebra class (history-versioned — order-dependent,
+        # replay-guarded); 4 time-ordered triggers, each CDC-compacted
+        # and type-2-merged; history hash-checked vs the unrolled
+        # MATERIALIZED-CTE batch twin
+        "streaming_scd2_result": Workload(
+            _streaming_scd2_result,
+            _streaming_scd2_oracle(),
+            headline=True,
+        ),
+        # STREAMING CDC deletes: 'error' rows are
+        # tombstones — close-at-event-time without re-open; keys may
+        # re-appear later as fresh versions
+        "streaming_scd2_tombstones_result": Workload(
+            _streaming_scd2_tombstones_result,
+            _streaming_scd2_oracle(
+                tombstone_where="event_type = 'error'"),
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #2: the
+        # continuous-dedup corpus sink replayed over a bounded 2-file
+        # stream (deterministic batch order via file mtimes), final
+        # corpus hash-checked against the sequential two-stage batch
+        # twin — makes the atomic batch-commit path a CORRECTNESS row
+        "streaming_dedup_result": Workload(
+            _streaming_dedup_result,
+            _streaming_dedup_oracle(),
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #3: the standing
+        # HLL register table built by 4 successive trigger max-merges —
+        # by the union law the streamed state equals DuckDB's one-pass
+        # register build, so the IDEMPOTENT-merge replay class gets a
+        # CORRECTNESS row next to the rollup sink's additive class
+        "streaming_hll_registers": Workload(
+            _streaming_hll_result,
+            profiling.hll_registers_oracle(),
+        ),
+        # STREAMING driver-visible workload #4: per-user
+        # session windows built by a stateful streaming query over 4
+        # file-triggers (sessions merge across batches), hash-checked
+        # against the batch gaps-and-islands twin
+        "streaming_sessions_result": Workload(
+            _streaming_sessions_result,
+            _STREAMING_SESSIONS_ORACLE,
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #5: stateful
+        # stream-stream interval join — purchases attributed to prior
+        # clicks ACROSS trigger boundaries, hash-checked against the
+        # batch self-join twin (values pass through unrounded)
+        "streaming_attribution_result": Workload(
+            _streaming_attribution_result,
+            _STREAMING_ATTRIBUTION_ORACLE,
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #9: LEFT OUTER
+        # stream-stream interval join — unattributed clicks emitted as
+        # watermark-evicted NULL rows across time-ordered triggers with
+        # sentinel flush; hash-checked against the batch LEFT-JOIN twin
+        "streaming_attribution_left_result": Workload(
+            _streaming_attribution_left_result,
+            _STREAMING_ATTRIBUTION_LEFT_ORACLE,
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #10: point-in-
+        # time (ASOF) enrichment — TWO chained stateful operators
+        # (LEFT OUTER interval join -> per-click max_by aggregate), the
+        # feature-store primitive; hash-checked against a batch window
+        # twin (deterministic whole-struct tie order on both sides)
+        "streaming_pit_enrich_result": Workload(
+            _streaming_pit_enrich_result,
+            _STREAMING_PIT_ENRICH_ORACLE,
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #6: sliding
+        # event-time windows accumulated across 4 file-triggers,
+        # hash-checked against integer epoch-arithmetic window
+        # assignment (each event in exactly 2 overlapping windows)
+        "streaming_sliding_result": Workload(
+            _streaming_sliding_result,
+            _STREAMING_SLIDING_ORACLE,
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #7: the custom
+        # stateful operator (applyInPandasWithState) with fixed-point
+        # BIGINT state — running totals exact across trigger
+        # boundaries, hash-checked against the batch GROUP BY
+        "streaming_running_totals_result": Workload(
+            _streaming_running_totals_result,
+            _STREAMING_TOTALS_ORACLE,
+            headline=True,
+        ),
+        # STREAMING driver-visible workload #8: stateless
+        # stream-static broadcast enrichment — every micro-batch joins
+        # the static customer dim, hash-checked against the batch join
+        "streaming_enrich_result": Workload(
+            _streaming_enrich_result,
+            _STREAMING_ENRICH_ORACLE,
+            headline=True,
+        ),
+        # language ID with top1-top2 confidence margin (the fastText-
+        # style gate real pipelines filter on)
+        "text_language_confidence": Workload(
+            lambda s: text.language_id_confidence(s.table("documents")),
+            text.language_id_confidence_oracle(),
+        ),
+        # DSIR selection: exp((w - w_max)/T) keep rates over the
+        # importance weights, md5-threshold membership (deterministic)
+        "text_dsir_resample": Workload(
+            lambda s: text.dsir_resample(
+                s.table("documents"),
+                s.table("documents").filter(F.col("lang") == "de"),
+                temperature=0.05,
+            ),
+            text.dsir_resample_oracle(
+                target_where="lang = 'de'", temperature=0.05
+            ),
+            headline=True,
+        ),
+        # corpus top-k word bigrams: in-row zip_with pairing (no
+        # positional self-join), map-side-combined count, TakeOrdered
+        "text_ngram_counts": Workload(
+            lambda s: text.ngram_counts(s.table("documents"), k=50),
+            text.ngram_counts_oracle(k=50),
+            headline=True,
+        ),
+        # DSIR-style importance weights: mean unigram log-likelihood
+        # ratio of a target domain vs the corpus's own distribution
+        # (broadcast top-V vocabs; corpus shuffles once for its counts)
+        "text_dsir_weights": Workload(
+            lambda s: text.dsir_weights(
+                s.table("documents"),
+                s.table("documents").filter(F.col("lang") == "de"),
+            ),
+            text.dsir_weights_oracle(target_where="lang = 'de'"),
+            headline=True,
+        ),
+        # Okapi BM25 top-k retrieval, explode-free (per-row tf for the
+        # fixed query; 1-row corpus stats broadcast; TakeOrdered top-k)
+        "text_bm25_topk": Workload(
+            lambda s: text.bm25_topk(
+                s.table("documents"), ["hash", "join", "vector"], k=25
+            ),
+            text.bm25_topk_oracle(["hash", "join", "vector"], k=25),
+            headline=True,
+        ),
+        # SentencePiece-style unigram-LM tokenizer training
+        # (hard-EM Viterbi prune loop over a substring seed vocab;
+        # integer fixed-point costs make the DP and its unrolled
+        # array-DP DuckDB twin bit-identical)
+        "text_unigram_train": Workload(
+            lambda s: text.unigram_lm_train(s.table("documents")),
+            text.unigram_lm_train_oracle(),
+            headline=True,
+        ),
+        # the unigram family's serving half — Viterbi
+        # tokenization under the trained vocab over the distinct-word
+        # table (Arrow-batched UDF, broadcast model), emitting per-doc
+        # token budgets + total piece log-likelihood
+        "text_unigram_encode": Workload(
+            lambda s: text.unigram_encode(
+                s.table("documents"),
+                text.unigram_lm_train(s.table("documents")),
+            ),
+            text.unigram_encode_oracle(),
+            headline=True,
+        ),
+        # curriculum binning — quality-ranked equal-count
+        # tiers via ntile (one range exchange, deterministic id
+        # tie-break) + tiny bucket aggregate
+        "sample_curriculum_buckets": Workload(
+            lambda s: sampling.curriculum_buckets(
+                text.quality_score(s.table("documents"))),
+            sampling.curriculum_buckets_oracle(
+                text.quality_score_oracle()),
+            headline=True,
+        ),
+        # per-group winsorization audit — exact percentile
+        # bounds (1e-6-snapped before clipping), broadcast bounds join,
+        # fixed-point clipped means
+        "profile_winsorize": Workload(
+            lambda s: profiling.winsorize_stats(s.table("events")),
+            profiling.winsorize_stats_oracle(),
+            headline=True,
+        ),
+        # cross-source duplication matrix — the provenance
+        # view over the verified MinHash near-dup pairs (pair-bounded
+        # label joins + sources^2 reduce)
+        "dedup_cross_source_matrix": Workload(
+            lambda s: dedup.cross_source_matrix(s.table("documents")),
+            dedup.cross_source_matrix_oracle(),
+            headline=True,
+        ),
+        # inter-labeler agreement (Cohen's kappa) between the
+        # thresholded hashed-ngram classifier and the lang label —
+        # classifier plan + co-partitioned label join + 1-row aggregate
+        "text_label_agreement": Workload(
+            lambda s: text.label_agreement(
+                s.table("documents"), text.make_hash_weights(s)),
+            text.label_agreement_oracle(),
+            headline=True,
+        ),
+        # per-dimension embedding stats (collapse/staleness
+        # audit) — fixed-point moment sums, one dims-group aggregate
+        "profile_embedding_dims": Workload(
+            lambda s: profiling.embedding_dim_stats(
+                s.table("embeddings")),
+            profiling.embedding_dim_stats_oracle(),
+            headline=True,
+        ),
+        # tokenizer fertility audit — tokens/word per lang
+        # under the trained BPE rules (bpe_encode's plan + one
+        # co-partitioned label join + tiny group reduce)
+        "text_tokenizer_fertility": Workload(
+            lambda s: text.tokenizer_fertility(
+                s.table("documents"),
+                text.bpe_train_merges(s.table("documents")),
+            ),
+            text.tokenizer_fertility_oracle(),
+            headline=True,
+        ),
+        # regex PII scrub (emails/IPs/phones counted then
+        # masked, zero-shuffle narrow map). The fixture text carries no
+        # PII, so the workload derives a deterministic PII-bearing
+        # column IN-QUERY from doc_id (2/3 of docs get one of each
+        # class, 1/3 stay clean) — the scrub itself is what's under
+        # test, against the same derivation in the oracle
+        "text_pii_scrub": Workload(
+            lambda s: text.pii_scrub(
+                s.table("documents").select(
+                    "doc_id",
+                    F.concat(
+                        F.substring(
+                            F.coalesce(F.col("text"), F.lit("")), 1, 80),
+                        F.when(
+                            F.col("doc_id") % 3 != 2,
+                            F.concat(
+                                F.lit(" contact user"),
+                                F.col("doc_id").cast("string"),
+                                F.lit("@example.com at 10.0."),
+                                (F.col("doc_id") % 256).cast("string"),
+                                F.lit(".7 or +1-555-0"),
+                                F.lpad((F.col("doc_id") % 1000)
+                                       .cast("string"), 3, "0"),
+                            ),
+                        ).otherwise(F.lit("")),
+                    ).alias("text"),
+                )
+            ),
+            "WITH src AS (\n"
+            "    SELECT doc_id,\n"
+            "           substr(coalesce(text, ''), 1, 80) ||\n"
+            "           CASE WHEN doc_id % 3 <> 2 THEN\n"
+            "                ' contact user' || doc_id ||\n"
+            "                '@example.com at 10.0.' || (doc_id % 256)\n"
+            "                || '.7 or +1-555-0' ||\n"
+            "                lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')\n"
+            "           ELSE '' END AS text\n"
+            "    FROM documents\n"
+            ")\n" + text.pii_scrub_oracle(table="src"),
+            headline=True,
+        ),
+        # the OTHER standard hybrid fusion — weighted min-max
+        # score fusion (rank-insensitive, keeps score margins where RRF
+        # flattens to 1/(c+rank)); IEEE-exact normalization over the
+        # two snapped top-depth lists, fused score snapped to 1e-6
+        "text_weighted_hybrid_topk": Workload(
+            lambda s: text.weighted_hybrid_topk(
+                s.table("documents"), s.table("embeddings"),
+                ["hash", "join", "vector"], query_vec_id=0,
+            ),
+            text.weighted_hybrid_topk_oracle(
+                ["hash", "join", "vector"], query_vec_id=0,
+            ),
+            headline=True,
+        ),
+        # hybrid retrieval fusion — BM25 top-depth + cosine
+        # top-depth fused by reciprocal-rank (Cormack et al. 2009),
+        # fixed-point 1e12/(60+rank) contributions so the fused order
+        # is integer-exact on both engines; fusion is a union + tiny
+        # groupBy over the two <=depth-row lists, zero corpus shuffle
+        "text_rrf_hybrid_topk": Workload(
+            lambda s: text.rrf_hybrid_topk(
+                s.table("documents"), s.table("embeddings"),
+                ["hash", "join", "vector"], query_vec_id=0,
+            ),
+            text.rrf_hybrid_topk_oracle(
+                ["hash", "join", "vector"], query_vec_id=0,
+            ),
+            headline=True,
+        ),
+        # deterministic per-group cap (class balancing; WindowGroupLimit)
+        "sample_capped_per_group": Workload(
+            lambda s: sampling.capped_per_group(
+                s.table("documents"), k=40, group_col="lang"
+            ).select("doc_id", "lang"),
+            sampling.capped_per_group_oracle(
+                40, group_col="lang", cols="doc_id, lang"
+            ),
+            headline=True,
+        ),
+        # deterministic k-fold assignment (leak-free CV splits)
+        "sample_kfold": Workload(
+            lambda s: sampling.kfold_assign(s.table("documents"))
+            .select("doc_id", "source", "fold"),
+            sampling.kfold_assign_oracle(cols="doc_id, source"),
+        ),
+        # GROUP-aware k-fold — near-dup clusters (LSH -> CC)
+        # land in one fold, so eval near-copies cannot leak into train;
+        # fold keyed on the cluster representative, singletons on
+        # their own id
+        "sample_leakage_safe_split": Workload(
+            lambda s: sampling.leakage_safe_split(s.table("documents")),
+            sampling.leakage_safe_split_oracle(),
+            headline=True,
+        ),
+        # reproducible global shuffle (training-order randomization):
+        # md5 epoch key + ONE range exchange, no single-partition sort
+        "sample_global_shuffle": Workload(
+            lambda s: sampling.deterministic_shuffle(s.table("documents"))
+            .select("doc_id", "source", "shuffle_key"),
+            sampling.deterministic_shuffle_oracle(cols="doc_id, source"),
+            headline=True,
+        ),
+        # the published Gopher/MassiveText quality rule set, one flag
+        # per rule (the c4_filters companion — together the standard
+        # public pre-training filter stack)
+        "text_gopher_filters": Workload(
+            lambda s: text.gopher_filters(s.table("documents")),
+            text.gopher_filters_oracle(),
+            headline=True,
+        ),
+        # per-component embedding stats (dead dims, centering, range)
+        "sim_component_stats": Workload(
+            lambda s: similarity.component_stats(s.table("embeddings")),
+            similarity.component_stats_oracle(),
+        ),
+        # product quantization: per-subspace L2 codebooks + m-code
+        # encoding (with the IVF tier, the IVF-PQ index family)
+        "sim_pq_encode": Workload(
+            lambda s: similarity.pq_encode(
+                s.table("embeddings"), dim=64, m=4, k=4, n_iter=1
+            ),
+            similarity.pq_encode_oracle(dim=64, m=4, k=4, n_iter=1),
+            headline=True,
+        ),
+        # IVF probe over kmeans-trained centroids (index build + search)
+        "sim_ivf_topk_trained": Workload(
+            lambda s: similarity.ivf_topk_trained(
+                s.table("embeddings"),
+                s.table("embeddings").filter(F.col("vec_id") < 10),
+            ),
+            similarity.ivf_topk_trained_oracle(),
+            headline=True,
+        ),
+        # the full IVF-PQ composition: coarse kmeans probe (nprobe
+        # cells) -> fixed-point asymmetric-distance shortlist over PQ
+        # codes (candidate vectors never touched) -> exact re-rank of
+        # refine*k survivors; corpus never shuffles
+        "sim_ivf_pq_topk": Workload(
+            lambda s: similarity.ivf_pq_topk(
+                s.table("embeddings"),
+                s.table("embeddings").filter(F.col("vec_id") < 10),
+            ),
+            similarity.ivf_pq_topk_oracle(),
+            headline=True,
+        ),
+        # SQ8 scalar-quantized search: int8 codes, EXACT
+        # integer-dot shortlist (order-free without fixed-point — int8
+        # products can't lose bits in a double sum), float re-rank of
+        # refine*k — the 4x-bandwidth tier between brute force and PQ
+        "sim_sq8_topk": Workload(
+            lambda s: similarity.sq8_topk(
+                s.table("embeddings"),
+                s.table("embeddings").filter(F.col("vec_id") < 10),
+            ),
+            similarity.sq8_topk_oracle(),
+            headline=True,
+        ),
+        # IVF-SQ8 composition: trained coarse cells bound
+        # WHICH vectors are scored, SQ8 codes bound how much is READ
+        # per scored row — the FAISS IVFx,SQ8 shape completing the
+        # index ladder
+        "sim_ivf_sq8_topk": Workload(
+            lambda s: similarity.ivf_sq8_topk(
+                s.table("embeddings"),
+                s.table("embeddings").filter(F.col("vec_id") < 10),
+            ),
+            similarity.ivf_sq8_topk_oracle(),
+            headline=True,
+        ),
+    }
+
+
+# --------------------------------------------------------------------------
+# The registry and the driver contract
+# --------------------------------------------------------------------------
+
+@lru_cache(maxsize=None)
+def _defined() -> Mapping[str, Workload]:
+    """Every workload in definition order, built once per process."""
+    return MappingProxyType({**_plan_workloads(), **_operator_workloads()})
+
+
+@lru_cache(maxsize=4)  # the artifact set is immutable within a process
+def _latest_driver_rows(
+    repo: str | None = None,
+) -> tuple[dict[str, int], dict[str, dict]]:
+    """Latest driver-sampled round and row per workload, across every
+    CORRECTNESS_r*.json in ``repo`` (default: the repo root; later
+    rounds win)."""
+    if repo is None:
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    latest_round: dict[str, int] = {}
+    latest_row: dict[str, dict] = {}
+
+    # sort by the PARSED round number, not lexically: a 3-digit round
+    # (CORRECTNESS_r100.json) sorts lexically BEFORE r12, which would
+    # let an older round silently overwrite a newer one
+    def _round_of(p: str) -> int:
+        return int("".join(c for c in os.path.basename(p) if c.isdigit()))
+
+    for path in sorted(
+        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
+        key=_round_of,
+    ):
+        rnd = _round_of(path)
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                latest_round[name] = rnd
+                latest_row[name] = row
+    return latest_round, latest_row
+
+
+def _rotation(names: list[str]) -> list[str]:
+    """Order ``names`` for the driver, which checks the first 50
+    entries: workloads red at their latest driver check first, then
+    never-sampled ones, then the rest stalest first; catalog order
+    breaks ties. Reads the CORRECTNESS_r*.json artifacts."""
+    latest_round, latest_row = _latest_driver_rows()
+    idx = {n: i for i, n in enumerate(names)}
+    red = [n for n in names
+           if n in latest_row and not latest_row[n].get("hash_match")]
+    never = [n for n in names if n not in latest_round]
+    stale = sorted(
+        (n for n in names if n in latest_round and n not in red),
+        key=lambda n: (latest_round[n], idx[n]),
+    )
+    return red + never + stale
+
+
+@lru_cache(maxsize=None)
+def catalog() -> Mapping[str, Workload]:
+    """Every workload, in the driver-sample rotation order (see
+    ``_rotation``); the registry behind it is built once per process."""
+    defined = _defined()
+    return MappingProxyType({n: defined[n] for n in _rotation(list(defined))})
+
+
+def _ir_workloads() -> dict[str, Plan]:
+    """The plan workloads' plans, in definition order."""
+    return {n: w.plan for n, w in _defined().items() if w.plan is not None}
+
+
+def headline() -> list[str]:
+    """The workloads the bench times, in definition order."""
+    return [n for n, w in _defined().items() if w.headline]
+
+
+def _runner(build: Callable[[SparkSession], DataFrame]):
+    # the previous build's materialisations and work dirs go before
+    # this build starts; this build's live until the next one
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_session()
+        register_tables(spark, sf_dir)
+        return build(spark)
+
+    return run
+
+
+def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: _runner(w.build) for n, w in catalog().items()}
 
 
 def build_oracles() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for name, plan in _ir_workloads().items():
-        out[name] = _HAND_ORACLES.get(name) or plan.to_sql("duckdb")
-    for name, (_fn, oracle) in _operator_workloads().items():
-        shipped = _HAND_ORACLES.get(name) or oracle
-        if shipped is not None:
-            out[name] = shipped
-    return _sample_order(out)
+    return {n: w.oracle for n, w in catalog().items()}

@@ -1,28 +1,20 @@
 #!/usr/bin/env python
-"""Print the next round's oldest-first driver-sample rotation.
+"""Print the driver-sample rotation the catalog currently emits.
 
-Reads every CORRECTNESS_r*.json in the repo root, computes each catalog
-workload's latest-sampled round, and emits:
+The order is ``workloads._rotation`` over the CORRECTNESS_r*.json
+artifacts in the repo root (``workloads._latest_driver_rows``): red at
+the latest check first, then never-sampled workloads, then the rest
+stalest first. Prints:
 
-  1. the 50 names to place first in ``_SAMPLE_PRIORITY``: red-at-latest
-     first, then NEVER-driver-sampled workloads (weakest evidence) in
-     catalog order, then once-green stale rows oldest-first (VERDICT r6
-     "What's wrong" §2 ordered never ahead of stale),
-  2. the overflow queue (position 51+), and
-  3. any workload whose LATEST driver row is red — flagged loudly.
+  1. any workload whose LATEST driver row is red — flagged loudly,
+  2. the next sample (the first 50 names), and
+  3. the head of the overflow queue (position 51+).
 
-``--through-round N`` pins the artifact set to CORRECTNESS_r01..r0N so
-the computed rotation is stable even after the driver drops a newer
-CORRECTNESS file (the round-6 self-invalidating-test defect):
-
-    python scripts/rotation_next.py --through-round 6
+    python scripts/rotation_next.py
 """
 
 from __future__ import annotations
 
-import argparse
-import glob
-import json
 import os
 import sys
 
@@ -31,70 +23,33 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SAMPLE = 50
 
 
-def compute_rotation(through_round: int | None = None):
-    """Return (catalog, ordered, latest_round, red).
-
-    Ordering (VERDICT r6 "What's wrong" §2): red-at-latest first, then
-    NEVER-driver-sampled workloads (weakest evidence — no driver check
-    ever), then once-green stale rows oldest-first.  ``through_round``
-    pins the artifact set so callers (tests) stay stable when the driver
-    drops a newer CORRECTNESS file mid-round.
-    """
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    from datafusion_sqlgen_spark.workloads import build_queries
-
-    catalog = list(build_queries())
-    latest_round: dict[str, int] = {}
-    latest_row: dict[str, dict] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()))
-        if through_round is not None and rnd > through_round:
-            continue
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                latest_round[name] = rnd
-                latest_row[name] = row
-
-    red = [
-        n for n in catalog
-        if n in latest_row and not latest_row[n].get("hash_match")
-    ]
-    # red first, then never-sampled (catalog order), then stalest-first
-    never = [n for n in catalog if n not in latest_round]
-    sampled = [n for n in catalog if n in latest_round and n not in red]
-    by_staleness = sorted(
-        sampled, key=lambda n: (latest_round[n], catalog.index(n))
-    )
-    ordered = red + never + by_staleness
-    return catalog, ordered, latest_round, red
-
-
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--through-round", type=int, default=None,
-        help="only read CORRECTNESS_r*.json up to this round number "
-             "(pins the rotation to a known artifact set)",
-    )
-    args = ap.parse_args()
-    catalog, ordered, latest_round, red = compute_rotation(args.through_round)
-    never = [n for n in catalog if n not in latest_round]
+    from datafusion_sqlgen_spark.workloads import _latest_driver_rows, catalog
+
+    ordered = list(catalog())
+    latest_round, latest_row = _latest_driver_rows()
+    red = [n for n in ordered
+           if n in latest_row and not latest_row[n].get("hash_match")]
+    never = [n for n in ordered if n not in latest_round]
 
     if red:
         print("!! RED at latest check (fix first, sample first):")
         for n in red:
             print(f"   {n} (r{latest_round[n]})")
 
-    print(f"# catalog: {len(catalog)} | ever sampled: {len(latest_round)} | "
-          f"never: {len(never)} | red-at-latest: {len(red)}")
+    print(f"# catalog: {len(ordered)} | ever sampled: "
+          f"{len(ordered) - len(never)} | never: {len(never)} | "
+          f"red-at-latest: {len(red)}")
+
+    def tag(n: str) -> str:
+        return f"r{latest_round[n]}" if n in latest_round else "never"
+
     print(f"# --- next sample (positions 1-{SAMPLE}) ---")
     for n in ordered[:SAMPLE]:
-        tag = f"r{latest_round[n]}" if n in latest_round else "never"
-        print(f"{n}  # {tag}")
-    print("# --- overflow queue (51+) ---")
+        print(f"{n}  # {tag(n)}")
+    print(f"# --- overflow queue ({SAMPLE + 1}+) ---")
     for n in ordered[SAMPLE:SAMPLE + 15]:
-        tag = f"r{latest_round[n]}" if n in latest_round else "never"
-        print(f"{n}  # {tag}")
+        print(f"{n}  # {tag(n)}")
 
 
 if __name__ == "__main__":

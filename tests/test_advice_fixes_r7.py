@@ -1,64 +1,25 @@
 """Round-13 ADVICE fixes (ADVICE r12, all low):
 
-1. ``_latest_driver_rows`` merged CORRECTNESS_r*.json in LEXICAL path
-   order for its "later rounds win" overwrite — correct only while
-   round numbers stay zero-padded two-digit (r01..r99).  An unpadded or
-   3-digit round (CORRECTNESS_r100.json sorts lexically before r12)
-   would let an OLDER round overwrite a newer one and mis-rank the
-   red/stale rotation.  Fixed: sort by the parsed round number.
-2. ``calibration_bins_oracle`` interpolated the label predicate as
+1. ``calibration_bins_oracle`` interpolated the label predicate as
    ``d.{label_sql}``, table-qualifying only the FIRST identifier — a
    multi-column predicate ("lang = 'en' AND doc_id % 2 = 0") left the
    later refs unqualified, free to resolve against the scored CTE.
    Fixed: the predicate now evaluates in a subselect whose only scope
    is the docs table, matching the Spark side's label_col-over-docs
    semantics for ANY docs-column predicate.
-3. ``topk_finalize`` broke rank ties with ``F.col(key).asc()`` (Spark:
+2. ``topk_finalize`` broke rank ties with ``F.col(key).asc()`` (Spark:
    NULLS FIRST) while the batch oracle says ``user_id ASC`` (DuckDB:
    NULLS LAST) — a NULL key tying at the rank-k boundary would diverge.
    Fixed: ``asc_nulls_last`` on the Spark side, ``NULLS LAST`` spelled
    in the oracle.
 """
 
-import json
-import os
-
 import duckdb
 import pytest
 
 
 # ---------------------------------------------------------------------------
-# 1. CORRECTNESS_r*.json merge order is numeric, not lexical
-# ---------------------------------------------------------------------------
-
-def test_latest_driver_rows_numeric_round_order(tmp_path):
-    from datafusion_sqlgen_spark.workloads import _latest_driver_rows
-
-    # r2 (green) then r100 (red): lexically r100 < r2, so a lexical
-    # merge would let r2 overwrite r100 and report the row green/stale
-    (tmp_path / "CORRECTNESS_r2.json").write_text(json.dumps(
-        {"wl": {"hash_match": True}}))
-    (tmp_path / "CORRECTNESS_r100.json").write_text(json.dumps(
-        {"wl": {"hash_match": False}}))
-    latest_round, latest_row = _latest_driver_rows(str(tmp_path))
-    assert latest_round["wl"] == 100
-    assert latest_row["wl"]["hash_match"] is False
-
-
-def test_latest_driver_rows_padded_files_still_ordered(tmp_path):
-    from datafusion_sqlgen_spark.workloads import _latest_driver_rows
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(
-        {"wl": {"hash_match": False}, "only_r01": {"hash_match": True}}))
-    (tmp_path / "CORRECTNESS_r12.json").write_text(json.dumps(
-        {"wl": {"hash_match": True}}))
-    latest_round, latest_row = _latest_driver_rows(str(tmp_path))
-    assert latest_round == {"wl": 12, "only_r01": 1}
-    assert latest_row["wl"]["hash_match"] is True
-
-
-# ---------------------------------------------------------------------------
-# 2. calibration label_sql: multi-column predicates resolve over docs
+# 1. calibration label_sql: multi-column predicates resolve over docs
 # ---------------------------------------------------------------------------
 
 def test_calibration_multicolumn_label_predicate(spark):
@@ -100,7 +61,7 @@ def test_calibration_multicolumn_label_predicate(spark):
 
 
 # ---------------------------------------------------------------------------
-# 3. topk_finalize NULL-key rank ties match the oracle (NULLS LAST)
+# 2. topk_finalize NULL-key rank ties match the oracle (NULLS LAST)
 # ---------------------------------------------------------------------------
 
 def test_topk_finalize_null_key_tie_nulls_last(spark):

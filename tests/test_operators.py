@@ -1997,3 +1997,17 @@ def test_weighted_hybrid_topk(spark, duck):
         assert 0.0 <= r["lex_norm"] <= 1.0
         assert 0.0 <= r["vec_norm"] <= 1.0
     assert any(r["lex_norm"] > 0 and r["vec_norm"] > 0 for r in rows)
+
+
+def test_kmeans_membership_partitions_corpus(spark):
+    """Every corpus vector lands in exactly one cell: n_members sums to
+    the corpus size, and components are finite."""
+    import math
+
+    emb = spark.table("embeddings")
+    res = similarity.kmeans_fit(emb, k=4, n_iter=1).collect()
+    per_cell = {}
+    for r in res:
+        per_cell[r["cell_id"]] = r["n_members"]
+        assert math.isfinite(r["component"])
+    assert sum(per_cell.values()) == emb.count()

@@ -224,18 +224,18 @@ def test_catalog_reparse_preserves_semantics():
     def norm(rows):
         return sorted(tuple(str(v) for v in r) for r in rows)
 
-    from datafusion_sqlgen_spark.workloads import _HAND_ORACLES
+    from datafusion_sqlgen_spark.workloads import catalog
 
     for name, plan in _catalog_plans().items():
         try:
             orig_sql = plan.to_sql("duckdb")
         except ValueError:
             # documented fail-closed render (ASOF + tolerance: DuckDB
-            # rejects a second ASOF inequality even via WHERE, r12) —
-            # the registered hand-written windowed twin stands in as
-            # the original semantics; the REPARSED spark desugar still
+            # rejects a second ASOF inequality even via WHERE) — the
+            # workload's hand-written windowed oracle stands in as the
+            # original semantics; the REPARSED spark desugar still
             # must execute on DuckDB and agree with it
-            orig_sql = _HAND_ORACLES[name]
+            orig_sql = catalog()[name].oracle
         orig = norm(con.execute(orig_sql).fetchall())
         reparsed = parse_sql(plan.to_sql("spark")).to_sql("duckdb")
         back = norm(con.execute(reparsed).fetchall())

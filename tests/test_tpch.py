@@ -10,7 +10,7 @@ _WORKLOADS = tpch_workloads()
 
 @pytest.mark.parametrize("name", sorted(_WORKLOADS))
 def test_tpch_oracle(spark, duck, name):
-    rows = assert_plan_matches_oracle(spark, duck, _WORKLOADS[name])
+    rows = assert_plan_matches_oracle(spark, duck, _WORKLOADS[name].plan)
     # q21's waiting-supplier predicate can legitimately drain to zero at
     # tiny scale; every other query must produce rows at sf0.001.
     if name not in ("tpch_q21",):
