@@ -9,15 +9,15 @@ Each query executes through ``df.write.format("noop")`` — a full
 materialization of every output column (a bare ``count()`` would let
 Catalyst prune the computed projections and under-report).
 
-Round-4 hardening (VERDICT r3 "What's wrong" §2: best-of-2 had ±2-4x
-per-query noise at sf0.1, swamping every regression signal): each query
-now gets one UNTIMED warm run (whole-stage-codegen compilation — a
-per-shape constant that vanishes at real scale) followed by
-$SPARK_GRAFT_BENCH_RUNS (default 5) timed runs. ``queries`` reports the
-per-query MEDIAN; ``queries_min`` / ``queries_spread`` report the
-per-query minimum and (max-min)/median dispersion so a regression can
-be distinguished from noise; ``spread_median`` summarizes measurement
-quality for the round-over-round comparison.
+Each query gets one UNTIMED warm run (whole-stage-codegen compilation
+— a per-shape constant that vanishes at real scale) followed by
+$SPARK_GRAFT_BENCH_RUNS (default 5) timed runs: best-of-2 had ±2-4x
+per-query noise at sf0.1, swamping every regression signal.
+``queries`` reports the per-query MEDIAN; ``queries_min`` /
+``queries_spread`` report the per-query minimum and (max-min)/median
+dispersion so a regression can be distinguished from noise;
+``spread_median`` summarizes measurement quality for the comparison
+across runs.
 """
 
 from __future__ import annotations
@@ -34,12 +34,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Contention gate: runs whose 8-process/1-process canary ratio exceeds
 # the effective threshold never overwrite bench_full.json. The absolute
-# base (1.12) was calibrated on a host with a 1.10 idle floor; the r13
+# base (1.12) was calibrated on a host with a 1.10 idle floor; another
 # host measured an IDLE floor of 1.15-1.22 (single-core vs all-core
 # turbo — a hardware property, see SCALE.md), branding every clean run
-# "contended". Round-14 fix (VERDICT r13 item 2): measure the idle
-# floor at startup (3 probe pairs, before Spark exists) and gate on
-# ratio vs max(base, floor * margin), capped at 1.5 (the documented
+# "contended". So the gate measures the idle floor at startup (3 probe
+# pairs, before Spark exists) and gates on the ratio vs max(base,
+# floor * margin), capped at 1.5 (the documented
 # "unusable" level) so a genuinely loaded box can never calibrate the
 # gate open. An explicit SPARK_GRAFT_CONTENTION_MAX pins the threshold
 # EXACTLY (no calibration) — the contract tests force the gate open
@@ -72,10 +72,10 @@ def __getattr__(name: str):
 def _machine_canary() -> float:
     """Fixed single-thread CPU workload (200k chained md5 of 1 KiB) —
     a hardware-speed constant, independent of Spark and of this repo's
-    code.  Round-over-round query comparisons are only meaningful after
-    normalizing by this: an archived-tree A/B in round 6 showed the
-    SAME code running 2.5-3x slower than round 5's recorded numbers
-    because the round-6 host was simply slower."""
+    code.  Query comparisons across runs are only meaningful after
+    normalizing by this: an archived-tree A/B showed the SAME code
+    running 2.5-3x slower than its earlier recorded numbers because
+    the later host was simply slower."""
     import hashlib
 
     t0 = time.perf_counter()
@@ -100,13 +100,13 @@ def _parallel_canary(procs: int = 8) -> float:
     """The single-thread canary run in `procs` concurrent PROCESSES —
     wall time for all of them together. On an idle many-core host this
     reads ~= the single-thread canary (each process gets its own core);
-    under co-tenant load it degrades in proportion to contention. The
-    r11 driver bench read 1.4x slower on byte-identical code while its
+    under co-tenant load it degrades in proportion to contention. A
+    bench run once read 1.4x slower on byte-identical code while its
     single-thread canary said the host was FASTER — a single-thread
     probe provably cannot see co-tenant load on a 32-core box, which is
     exactly what a 32-thread Spark query does see. Read the
     parallel/single ratio: ~1.0 = idle, >>1 = contended; treat the
-    bench as unusable for round-over-round comparison when > ~1.5."""
+    bench as unusable for comparison across runs when > ~1.5."""
     import concurrent.futures
 
     t0 = time.perf_counter()
@@ -133,12 +133,12 @@ def _median_contention_ratio(first_canary: float, first_par8: float) -> float:
 def _pack_top_queries(compact: dict, timings: dict[str, float],
                       budget: int = TAIL_LINE_BUDGET) -> dict:
     """Fill ``compact['queries']`` with as many per-query medians as fit
-    the tail budget, most expensive first (VERDICT r13 item 1: the
-    driver's per-query round-over-round machinery reads the final
-    stdout line, which survives only if the whole line stays under the
-    ~2,000-char tail the driver keeps). Deterministic: ties break on
-    name. Returns a new dict; ``n_queries_reported`` records how many
-    of ``timings`` made the cut."""
+    the tail budget, most expensive first (a per-query comparison
+    across runs reads only the final stdout line, which survives only if
+    the whole line stays under the ~2,000-char tail that is kept).
+    Deterministic: ties break on name. Returns a new dict;
+    ``n_queries_reported`` records how many of ``timings`` made the
+    cut."""
     out = dict(compact)
     out["queries"] = {}
     # placeholder at max width so the budget check already pays for it
@@ -286,41 +286,39 @@ def main() -> None:
         "runs_per_query": n_runs,
         "machine_canary_sec": (canary := _machine_canary()),
         # 8-process canary + contention ratio: a single-thread canary
-        # cannot see co-tenant load on a many-core box (the r11 driver
-        # artifact was poisoned exactly that way) — ratio ~1.0 = idle,
-        # > ~1.5 = contended, don't compare round-over-round.
-        # MEDIAN of 3 probe pairs (round-13 hardening): three clean
-        # ~193s runs in a row gated on a SINGLE post-run probe read
-        # 1.13/1.15/1.21 while agreeing within 1% on every query — the
-        # single sample was the noise, not the run. The median keeps
-        # the same 1.12 threshold and still catches sustained load
-        # (every poisoned-run signature in the SCALE.md ledger held
-        # for minutes, not one probe); only a sub-probe blip is
-        # filtered, in BOTH directions.
+        # cannot see co-tenant load on a many-core box (a bench
+        # artifact was once poisoned exactly that way) — ratio ~1.0 =
+        # idle, > ~1.5 = contended, don't compare across runs.
+        # MEDIAN of 3 probe pairs: three clean ~193s runs in a row
+        # gated on a SINGLE post-run probe read 1.13/1.15/1.21 while
+        # agreeing within 1% on every query — the single sample was the
+        # noise, not the run. The median keeps the same 1.12 threshold
+        # and still catches sustained load (every poisoned-run
+        # signature in the SCALE.md ledger held for minutes, not one
+        # probe); only a sub-probe blip is filtered, in BOTH directions.
         "machine_canary_par8_sec": (par8 := _parallel_canary()),
         "canary_contention_ratio": (
             _median_contention_ratio(canary, par8) if canary else None),
-        # hardware-normalized total: compare THIS across rounds (the
-        # round-6 A/B showed hosts differing 2.5-3x in raw speed)
+        # hardware-normalized total: compare THIS across runs (an A/B
+        # showed hosts differing 2.5-3x in raw speed)
         "value_per_canary": round(total / canary, 1) if canary else None,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # host-calibrated gate inputs (VERDICT r13 item 2)
+        # host-calibrated gate inputs
         "idle_floor_ratio": idle_floor,
         "contention_threshold": contention_threshold,
     }
     # The driver keeps only a ~2,000-char TAIL of stdout, which truncates
-    # the per-query dicts (r5 VERDICT "What's wrong" §2: spread evidence
-    # destroyed, 3-7x median movements unadjudicable). Persist the FULL
+    # the per-query dicts (the spread evidence is lost and 3-7x median
+    # movements cannot be judged). Persist the FULL
     # result — including every raw sample — to a sibling file the judge
     # can read, and point at it from the tail-surviving end of the line.
     full = dict(payload)
     full["samples"] = all_samples
-    # Fail-closed contention gate (VERDICT r12 item 1, recalibrated per
-    # VERDICT r13 item 2): a contended run must never overwrite the
+    # Fail-closed contention gate: a contended run must never overwrite the
     # committed clean baseline. The threshold is the startup-measured
     # idle floor x margin (bounded to [CONTENTION_MAX, 1.5]); anything
     # above it means cores were being stolen mid-run and the numbers
-    # are not comparable round-over-round. Such runs are diverted to a
+    # are not comparable across runs. Such runs are diverted to a
     # `.contended.json` sibling so the committed artifact stays clean.
     ratio = payload["canary_contention_ratio"]
     contended = ratio is not None and ratio > contention_threshold
@@ -336,17 +334,15 @@ def main() -> None:
     print(json.dumps(payload))
     # The driver keeps only a ~2,000-char stdout TAIL: the big line above
     # loses its HEAD (the "metric"/"value" keys) once `queries` exceeds
-    # the tail budget, so BENCH_r{N}.json records "parsed": null (r8/r9
-    # VERDICT item: make the artifact parse). Emit a compact summary as
-    # the FINAL line — small enough to always survive the tail — so the
-    # driver's last-line JSON parse succeeds regardless of catalog size.
-    # Round-14 (VERDICT r13 item 1): the compact line now carries a
-    # per-query dict with as many entries as fit the tail budget, most
-    # expensive queries first, so the driver's round-over-round per-query
-    # machinery (n_common / geomean / scaling.per_query) sees the rows
-    # that matter. The FULL 180-entry dict is ~5 KB and mathematically
-    # cannot survive a 2,000-char tail; the complete record stays in the
-    # full artifact(s) written above.
+    # the tail budget, so BENCH_r{N}.json records "parsed": null. Emit a
+    # compact summary as the FINAL line — small enough to always survive
+    # the tail — so a last-line JSON parse succeeds regardless of catalog
+    # size. The compact line carries a per-query dict with as many
+    # entries as fit the tail budget, most expensive queries first, so a
+    # per-query comparison across runs (n_common / geomean /
+    # scaling.per_query) sees the rows that matter. The FULL 180-entry
+    # dict is ~5 KB and mathematically cannot survive a 2,000-char tail;
+    # the complete record stays in the full artifact(s) written above.
     compact = {
         "metric": "headline_queries_total",
         "value": total,

@@ -156,8 +156,8 @@ def drift_psi_stream(
     # clamp BOTH ends: the live stream can drift outside the reference
     # snapshot's [lo, hi] in either direction, and an unclamped
     # negative bucket would fall off the finalize grid and silently
-    # drop exactly the below-range mass this monitor exists to see
-    # (review r12 #3) — out-of-range values pile into the edge buckets
+    # drop exactly the below-range mass this monitor exists to see —
+    # out-of-range values pile into the edge buckets
     bucket = (
         F.lit(0) if hi <= lo
         else F.greatest(
@@ -275,8 +275,8 @@ def topk_finalize(counts: DataFrame, key: str = "user_id",
 
     # asc_nulls_last pins the tie-break: Spark defaults ASC to NULLS
     # FIRST while DuckDB defaults to NULLS LAST, so a NULL key tying at
-    # the rank-k boundary would otherwise flip the top-k set (ADVICE
-    # r12; the oracle says NULLS LAST explicitly too)
+    # the rank-k boundary would otherwise flip the top-k set (the
+    # oracle says NULLS LAST explicitly too)
     w = Window.partitionBy("day").orderBy(
         F.col("n").desc(), F.col(key).asc_nulls_last())
     return (
@@ -354,50 +354,22 @@ def hourly_rollup_stream(events: DataFrame, watermark: str = "30 minutes") -> Da
     )
 
 
-_RUNNING_STATE_SCHEMA = "total double, n bigint"
-_RUNNING_OUT_SCHEMA = (
-    "user_id bigint, n_events bigint, total_value double"
-)
 _RUNNING_FX_STATE_SCHEMA = "total_fx bigint, n bigint"
 _RUNNING_FX_OUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_fx bigint"
 )
 
 
-def user_running_totals_stream(events: DataFrame) -> DataFrame:
+def user_running_totals_stream_exact(events: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     running event count + value total, state carried across triggers.
 
     This is the escape hatch tier (c) of the custom-operator ladder —
     used only because 'running total across the whole stream' is not
-    expressible as a windowed aggregation. State is (double, long) per
-    user: O(users) memory, partitioned by user_id hash."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    import pandas as pd
+    expressible as a windowed aggregation. State is (bigint, bigint)
+    per user: O(users) memory, partitioned by user_id hash.
 
-    def update(key, pdfs: Iterator["pd.DataFrame"], state: GroupState):
-        total, n = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            total += float(pdf["value"].sum())
-            n += int(len(pdf))
-        state.update((total, n))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_RUNNING_OUT_SCHEMA,
-        stateStructType=_RUNNING_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def user_running_totals_stream_exact(events: DataFrame) -> DataFrame:
-    """Cross-engine-exact twin of :func:`user_running_totals_stream`
-    (round 7, making the custom-stateful tier driver-hash-checkable):
-    per-user state carries the value total as a 1e4 FIXED-POINT BIGINT
+    Cross-engine exact: the value total is a 1e4 FIXED-POINT BIGINT
     — each value snaps to ``floor(v * 10^4 + 0.5)`` (the engine-
     identical IEEE formulation) before an integer accumulation, so the
     running total is independent of batch boundaries, pandas summation
@@ -472,9 +444,10 @@ def click_purchase_attribution_stream(
     nodes) passes ``click_ts + attribution``, so a bounded replay must
     (a) feed files in event-time order with a REAL watermark delay —
     not the wide inner-join replay delay, under which nothing ever
-    flushes — and (b) end with sentinel triggers that advance both
+    flushes — and (b) end with a sentinel trigger that advances both
     sides past all real data (watermarks computed in batch N evict and
-    emit in batch N+1).  See ``workloads._streaming_attribution_left_result``.
+    emit in batch N+1, the no-data batch Spark runs after it).  See
+    ``workloads._streaming_attribution_left_result``.
 
     Returns (user_id, click_ts, purchase_ts, value)."""
     clicks = (
@@ -792,7 +765,8 @@ def dedup_ingest_batch(
 
     spark = batch_df.sparkSession
     commit_dir = f"{corpus_path}/batch={batch_id}"
-    if _hadoop_exists(spark, commit_dir):
+    fs, hcommit = _hadoop_fs(spark, commit_dir)
+    if fs.exists(hcommit):
         return  # crash-recovery replay of a committed batch: no-op
     w = Window.partitionBy(F.md5(F.col("text"))).orderBy(F.col("doc_id"))
     batch_unique = (
@@ -800,7 +774,7 @@ def dedup_ingest_batch(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # explicit committed-batch probe, same rationale as the rollup sink:
+    # explicit committed-batch probe, not a try/except around the read:
     # a corrupt corpus must FAIL the batch, not silently re-admit every
     # document as if the corpus were empty
     corpus = read_dedup_corpus(spark, corpus_path)
@@ -827,22 +801,15 @@ def read_dedup_corpus(spark: SparkSession, corpus_path: str):
     contains no parquet footers, so the read selects only data-bearing
     directories explicitly instead of letting schema inference fail on
     the empty ones.  Hidden staging leftovers never count."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return None
-    _reject_foreign_layout(fs, root, "batch=")
-    with_data = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith("batch=")):
-            continue
+    fs, root = _hadoop_fs(spark, corpus_path)
+    with_data = [
+        f"{corpus_path}/{status.getPath().getName()}"
+        for status in _reject_foreign_layout(fs, root, "batch=")
         if any(
             f.getPath().getName().endswith(".parquet")
             for f in fs.listStatus(status.getPath())
-        ):
-            with_data.append(f"{corpus_path}/{name}")
+        )
+    ]
     if not with_data:
         return None
     return (
@@ -852,17 +819,28 @@ def read_dedup_corpus(spark: SparkSession, corpus_path: str):
     )
 
 
-def _reject_foreign_layout(fs, root, expected_prefix: str) -> None:
-    """FAIL LOUD when the state root contains visible entries that are
-    not this layout's committed directories — e.g. flat parquet part
-    files written by the pre-generation (round-5) layout.  Treating
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FileSystem
+    API, which probes local disks, HDFS and object stores alike."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _reject_foreign_layout(fs, root, expected_prefix: str) -> list:
+    """List the state root ``root`` once and return the statuses of its
+    committed ``<expected_prefix><id>`` directories (none when the root
+    does not exist yet).  FAIL LOUD on any other visible entry — e.g.
+    flat parquet part files of an older, pre-generation layout: treating
     such a root as 'never committed' would silently reset accumulated
-    state / re-admit every document, the exact failure mode the
-    explicit-probe design exists to prevent.  Hidden (dot/underscore)
-    names — staging, _SUCCESS — are exempt."""
+    state or re-admit every document, the exact failure the explicit
+    probe exists to prevent.  Hidden (dot/underscore) names — staging,
+    _SUCCESS — are exempt."""
+    if not fs.exists(root):
+        return []
+    committed = []
     for status in fs.listStatus(root):
         name = status.getPath().getName()
-        if name.startswith(".") or name.startswith("_"):
+        if name.startswith((".", "_")):
             continue
         if not (status.isDirectory() and name.startswith(expected_prefix)):
             raise IOError(
@@ -872,6 +850,8 @@ def _reject_foreign_layout(fs, root, expected_prefix: str) -> None:
                 "pre-generation-layout state, migrate it by writing it "
                 f"as {expected_prefix}0 under the root."
             )
+        committed.append(status)
+    return committed
 
 
 def _atomic_commit_dir(
@@ -883,28 +863,25 @@ def _atomic_commit_dir(
     crash before the rename leaves the visible state untouched and the
     retry starts clean (stale staging is deleted first).
 
-    FILESYSTEM CAVEAT (round-7 VERDICT item 8): the commit point is
-    atomic only where directory rename is atomic — HDFS, POSIX local
-    disks, and object stores with real rename semantics (GCS-compose,
-    ADLS Gen2 hierarchical namespaces).  On S3-style flat object stores
-    a "rename" is copy-then-delete per object: a reader could list a
-    half-promoted generation and a crash mid-copy leaves a partial
-    commit directory.  Production shapes on S3: (a) point the sinks at
-    an HDFS/EFS/FSx scratch tier and publish from there, (b) write
-    through a transactional table format — Delta/Iceberg replace the
-    rename with a log/manifest commit, and every sink here already
-    funnels its admitted batch through this single function, so the
-    swap is one `df.write.format("delta")...` + log-commit in place of
-    the rename (the container ships neither library, so that variant
-    stays a documented non-goal, gated behind the same optional-import
-    pattern the media codecs use), or (c) S3-committer-style
-    two-phase publish with a `_SUCCESS` marker readers filter on.
-    SCALE.md "Streaming sink commit semantics" carries the full
-    decision table."""
-    jvm = spark._jvm
-    hstaging = jvm.org.apache.hadoop.fs.Path(staging)
-    hcommit = jvm.org.apache.hadoop.fs.Path(commit_dir)
-    fs = hstaging.getFileSystem(spark._jsc.hadoopConfiguration())
+    FILESYSTEM CAVEAT: the commit point is atomic only where directory
+    rename is atomic — HDFS, POSIX local disks, and object stores with
+    real rename semantics (GCS-compose, ADLS Gen2 hierarchical
+    namespaces).  On S3-style flat object stores a "rename" is
+    copy-then-delete per object: a reader could list a half-promoted
+    generation and a crash mid-copy leaves a partial commit directory.
+    Production shapes on S3: (a) point the sinks at an HDFS/EFS/FSx
+    scratch tier and publish from there, (b) write through a
+    transactional table format — Delta/Iceberg replace the rename with
+    a log/manifest commit, and every sink here already funnels its
+    admitted batch through this single function, so the swap is one
+    `df.write.format("delta")...` + log-commit in place of the rename
+    (the container ships neither library, so that variant stays a
+    documented non-goal, gated behind the same optional-import pattern
+    the media codecs use), or (c) S3-committer-style two-phase publish
+    with a `_SUCCESS` marker readers filter on.  SCALE.md "Streaming
+    sink commit semantics" carries the full decision table."""
+    fs, hstaging = _hadoop_fs(spark, staging)
+    hcommit = spark._jvm.org.apache.hadoop.fs.Path(commit_dir)
     if fs.exists(hstaging):
         fs.delete(hstaging, True)  # crashed earlier attempt
     df.write.mode("overwrite").parquet(staging)
@@ -953,104 +930,22 @@ def run_bounded_dedup(
     )
 
 
-def streaming_rollup_sink(
-    events_stream: DataFrame,
-    state_path: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Continuously-maintained rollup (the materialized-view pattern):
-    each micro-batch MERGES into the standing state table of mergeable
-    partial states (``timeseries.mergeable_rollup``) — history is never
-    recomputed, the merge touches only fixed-width (hour, key) state
-    rows. Readers finalize on demand (``timeseries.finalize_rollup``).
-
-    The state table is tiny (one row per open (hour, key)), so each
-    batch writes a complete new GENERATION of it: merged state lands in
-    a hidden staging directory and is promoted by ONE filesystem rename
-    to ``gen-<batch_id>`` — the commit point.  Readers resolve the
-    highest committed generation (:func:`read_rollup_state`), so a crash
-    at ANY point leaves the previous generation fully readable.  On a
-    transactional format (Delta/Iceberg) the body becomes a MERGE; the
-    stream graph is unchanged.
-
-    Shape per trigger (:func:`rollup_merge_batch`): ONE aggregate over
-    the previous generation unioned with the batch's raw rows, written
-    as the next generation — one shuffle-map job plus one write job.
-    There is no emptiness probe and no separate batch pre-aggregate.
-
-    Replay safety: the merge is ADDITIVE, so re-merging a batch would
-    double-count.  The generation directory name IS the applied-batch
-    record: ``rollup_merge_batch`` skips any batch id at or below the
-    latest committed generation, making the crash-recovery replay of
-    the last uncommitted batch a no-op.  Committed generations are
-    probed explicitly via the Hadoop FileSystem API, and their parquet
-    footers are checked on the driver — a corrupt state file or schema
-    drift FAILS the batch (and the query) instead of silently
-    discarding accumulated state."""
-    return _writer(
-        events_stream, partial(rollup_merge_batch, state_path=state_path),
-        checkpoint,
-    ).start()
-
-
-def _hadoop_exists(spark: SparkSession, p: str) -> bool:
-    """Portable existence probe (local FS, HDFS, object stores) via the
-    Hadoop FileSystem API — replaces the bare try/except around the
-    state read, which used to swallow corrupt-file and schema-drift
-    errors and silently reset accumulated state (ADVICE r4 item 1)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(p)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def rollup_merge_batch(
-    batch_df: DataFrame, batch_id: int, state_path: str
-) -> None:
-    """One micro-batch of the materialized-rollup sink, module-level so
-    the replay AND crash-promote contracts are directly testable: merge
-    the batch into a NEW generation of the standing table unless
-    ``batch_id`` was already applied (the additive merge would
-    double-count a crash-recovery replay otherwise).  The generation
-    directory name carries the applied batch id; promote is stage + one
-    atomic rename (see :func:`streaming_rollup_sink`).
-
-    Shape: every raw batch row is lifted to its own state row
-    (``timeseries.rollup_state_rows``) and the previous generation plus
-    those rows fold in ONE ``merge_rollups`` aggregate — the first batch
-    is one ``mergeable_rollup`` aggregate.  The previous generation is
-    read with the explicit state schema (no schema-inference job) after
-    :func:`_check_state_footers` has verified, on the driver, that every
-    committed file carries exactly that schema.  An empty batch is not
-    special-cased: it commits an unchanged copy of the state."""
-    from datafusion_sqlgen_spark.operators.timeseries import (
-        merge_rollups,
-        mergeable_rollup,
-        rollup_state_rows,
-    )
-
-    spark = batch_df.sparkSession
-    latest = _latest_generation(spark, state_path)
-    if latest is not None and batch_id <= latest:
-        return  # replayed batch already committed — idempotent
-    if latest is None:
-        states = mergeable_rollup(batch_df)
-    else:
-        rows = rollup_state_rows(batch_df)
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType) for f in rows.schema]
-        )
-        gen = f"{state_path}/gen-{latest}"
-        _check_state_footers(spark, gen, schema)
-        states = merge_rollups(spark.read.schema(schema).parquet(gen), rows)
-    _atomic_commit_dir(
-        spark,
-        states,
-        f"{state_path}/.staging-gen-{batch_id}",
-        f"{state_path}/gen-{batch_id}",
-    )
-    _retire_generations(spark, state_path, keep=2)
-
+# ---------------------------------------------------------------------------
+# Generation sinks. The rollup, sketch, k-means and SCD2 sinks each keep
+# a small standing state table that every trigger rewrites whole, as a
+# new generation ``gen-<batch_id>``; _Generations owns that layout, and
+# each foreachBatch body is only its merge step plus its state schema.
+# The four merge steps cover four state algebras, which is why the
+# batch-id replay guard lives in the owner:
+#   * rollup: ADDITIVE counters — a replayed batch would double-count;
+#   * sketch: IDEMPOTENT HLL max-merge — a replay is harmless by
+#     algebra, and the guard only saves the wasted work;
+#   * k-means: ORDER-DEPENDENT MODEL — a batch's contribution depends
+#     on the centroids it observed;
+#   * SCD2: ORDER-DEPENDENT HISTORY — a replay would close and re-open
+#     versions a second time.
+# Each final state is hash-checked against a batch or unrolled-SQL twin.
+# ---------------------------------------------------------------------------
 
 _SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
@@ -1067,19 +962,16 @@ def _check_state_footers(
     silently drop an extra one."""
     import json
 
-    jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(gen_dir)
-    fs = root.getFileSystem(conf)
+    fs, root = _hadoop_fs(spark, gen_dir)
     want = {f.name: f.dataType for f in schema}
     for status in fs.listStatus(root):
         path = status.getPath()
         if path.getName().startswith((".", "_")):
             continue
         meta = (
-            jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-                conf, path
-            )
+            spark._jvm.org.apache.parquet.hadoop.ParquetFileReader
+            .readFooter(conf, path)
             .getFileMetaData()
             .getKeyValueMetaData()
             .get(_SPARK_ROW_METADATA)
@@ -1103,59 +995,146 @@ def _check_state_footers(
                 if got[c] != want[c]
             )
             raise IOError(
-                f"rollup state {path} has drifted from the state schema: "
-                f"missing columns {missing}, unexpected columns {extra}, "
-                f"wrong types {wrong} — refusing to merge into it"
+                f"generation state {path} has drifted from the state "
+                f"schema: missing columns {missing}, unexpected columns "
+                f"{extra}, wrong types {wrong} — refusing to merge into it"
             )
 
 
-def _latest_generation(spark: SparkSession, state_path: str):
-    """Highest committed ``gen-<batch_id>`` under ``state_path``, or
-    None when no generation has ever committed.  Hidden staging
-    directories (crashed promotes) never count."""
-    gens = _generation_ids(spark, state_path)
-    return gens[-1] if gens else None
+class _Generations:
+    """The ``gen-<batch_id>`` layout of one generation sink's state root
+    ``root`` — the only code that builds its paths.
 
-
-def _generation_ids(spark: SparkSession, state_path: str) -> list:
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    _reject_foreign_layout(fs, root, "gen-")
-    out = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("gen-"):
-            out.append(int(name[4:]))
-    return sorted(out)
-
-
-def _retire_generations(
-    spark: SparkSession, state_path: str, keep: int
-) -> None:
-    """Delete all but the ``keep`` newest committed generations — the
-    state stays O(1) on disk while a reader mid-scan of the previous
+    Construction lists the root once (:func:`_reject_foreign_layout`);
+    ``ids`` are the committed batch ids, ascending.  A generation
+    commits by a hidden-staging write plus ONE rename
+    (:func:`_atomic_commit_dir`), so a crash at ANY point leaves the
+    previous generation fully readable, and the directory name is the
+    applied-batch record.  Only the two newest generations are kept:
+    the state stays O(1) on disk, and a reader mid-scan of the previous
     generation is never yanked."""
-    gens = _generation_ids(spark, state_path)
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    for g in gens[:-keep] if keep else gens:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{state_path}/gen-{g}"), True
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark, self.root = spark, root
+        fs, hroot = _hadoop_fs(spark, root)
+        self.ids = sorted(
+            int(status.getPath().getName()[len("gen-"):])
+            for status in _reject_foreign_layout(fs, hroot, "gen-")
         )
+
+    def _dir(self, gen: int) -> str:
+        return f"{self.root}/gen-{gen}"
+
+    def read(self, schema: T.StructType | None = None) -> DataFrame | None:
+        """The latest generation, or None before the first commit.  With
+        the state ``schema`` its footers are checked first
+        (:func:`_check_state_footers`) and the read infers nothing, so a
+        corrupt or drifted generation fails here, naming the cause;
+        without one, Spark infers the schema (one job)."""
+        if not self.ids:
+            return None
+        gen = self._dir(self.ids[-1])
+        if schema is None:
+            return self.spark.read.parquet(gen)
+        _check_state_footers(self.spark, gen, schema)
+        return self.spark.read.schema(schema).parquet(gen)
+
+    def apply(
+        self,
+        batch_id: int,
+        schema: T.StructType,
+        merge: Callable[[DataFrame | None], DataFrame | None],
+    ) -> None:
+        """One trigger: skip a ``batch_id`` at or below the latest
+        generation (the crash-recovery replay of a committed batch);
+        otherwise commit ``merge(previous generation or None)`` as
+        ``gen-<batch_id>`` and retire all but the two newest.  ``merge``
+        returning None commits nothing."""
+        if self.ids and batch_id <= self.ids[-1]:
+            return
+        state = merge(self.read(schema))
+        if state is None:
+            return
+        _atomic_commit_dir(
+            self.spark, state,
+            f"{self.root}/.staging-gen-{batch_id}", self._dir(batch_id),
+        )
+        for gen in self.ids[:-1]:
+            fs, path = _hadoop_fs(self.spark, self._dir(gen))
+            fs.delete(path, True)
 
 
 def read_rollup_state(spark: SparkSession, state_path: str):
     """The standing state of a generation sink (rollup, sketch, k-means,
-    SCD2) = its highest committed generation.  Returns None when no
-    batch has ever committed (callers decide the empty-state shape)."""
-    latest = _latest_generation(spark, state_path)
-    if latest is None:
-        return None
-    return spark.read.parquet(f"{state_path}/gen-{latest}")
+    SCD2) = its highest committed generation, schema inferred.  Returns
+    None when no batch has ever committed (callers decide the
+    empty-state shape)."""
+    return _Generations(spark, state_path).read()
+
+
+def _replay_generations(
+    stream: DataFrame, work: str, body: Callable, empty: DataFrame
+) -> DataFrame:
+    """:func:`replay` ``stream`` through the generation sink ``body``,
+    its state under ``work``, and return the last generation read with
+    ``empty``'s schema (footers checked, nothing inferred) — or
+    ``empty`` itself when no batch committed."""
+    state_path = os.path.join(work, "state")
+    replay(stream, work, partial(body, state_path=state_path))
+    state = _Generations(stream.sparkSession, state_path).read(empty.schema)
+    return empty if state is None else state
+
+
+def streaming_rollup_sink(
+    events_stream: DataFrame,
+    state_path: str,
+    checkpoint: str,
+) -> StreamingQuery:
+    """Continuously-maintained rollup (the materialized-view pattern):
+    each micro-batch MERGES into the standing state table of mergeable
+    partial states (``timeseries.mergeable_rollup``) — history is never
+    recomputed, the merge touches only fixed-width (hour, key) state
+    rows. Readers finalize on demand (``timeseries.finalize_rollup``)
+    over the highest committed generation (:func:`read_rollup_state`).
+
+    The state table is tiny (one row per open (hour, key)), so each
+    batch writes a complete new generation of it (:class:`_Generations`).
+    On a transactional format (Delta/Iceberg) the body becomes a MERGE;
+    the stream graph is unchanged."""
+    return _writer(
+        events_stream, partial(rollup_merge_batch, state_path=state_path),
+        checkpoint,
+    ).start()
+
+
+def rollup_merge_batch(
+    batch_df: DataFrame, batch_id: int, state_path: str
+) -> None:
+    """One micro-batch of the materialized-rollup sink, module-level so
+    the replay AND crash-promote contracts are directly testable.  The
+    merge is ADDITIVE, so only the batch-id guard keeps a crash-recovery
+    replay from double-counting.
+
+    Shape: every raw batch row is lifted to its own state row
+    (``timeseries.rollup_state_rows``) and the previous generation plus
+    those rows fold in ONE ``merge_rollups`` aggregate — one shuffle-map
+    job plus the generation write, with no emptiness probe and no batch
+    pre-aggregate; the first batch is one ``mergeable_rollup``
+    aggregate.  The state schema is the lifted rows' schema, derived by
+    analysis.  An empty batch is not special-cased: it commits an
+    unchanged copy of the state."""
+    from datafusion_sqlgen_spark.operators.timeseries import (
+        merge_rollups,
+        mergeable_rollup,
+        rollup_state_rows,
+    )
+
+    rows = rollup_state_rows(batch_df)
+    _Generations(batch_df.sparkSession, state_path).apply(
+        batch_id, rows.schema,
+        lambda prev: mergeable_rollup(batch_df) if prev is None
+        else merge_rollups(prev, rows),
+    )
 
 
 def run_bounded_rollup(
@@ -1172,28 +1151,10 @@ def run_bounded_rollup(
         mergeable_rollup,
     )
 
-    state_path = os.path.join(work, "rollup_state")
-    replay(
-        read_events_stream(spark, events_path), work,
-        partial(rollup_merge_batch, state_path=state_path),
-    )
-    states = read_rollup_state(spark, state_path)
-    if states is None:
-        states = mergeable_rollup(spark.createDataFrame([], EVENTS_SCHEMA))
-    return finalize_rollup(states)
-
-
-# ---------------------------------------------------------------------------
-# Streaming sketch maintenance: a standing HLL register table kept
-# current by per-trigger max-merges. The rollup sink above maintains
-# ADDITIVE state (needs the batch-id guard to survive replays); HLL
-# registers are the IDEMPOTENT counterpart — max-merge makes replaying
-# a batch harmless by algebra — so together they cover both replay
-# classes a 100-TB ingest pipeline meets. The guard is kept anyway (a
-# replay is wasted work even when it is correct), and the final state
-# is oracle-checkable: by the union law, N trigger merges equal the
-# one-pass register build DuckDB replays (profiling.hll_registers_oracle).
-# ---------------------------------------------------------------------------
+    return finalize_rollup(_replay_generations(
+        read_events_stream(spark, events_path), work, rollup_merge_batch,
+        mergeable_rollup(spark.createDataFrame([], EVENTS_SCHEMA)),
+    ))
 
 
 def sketch_merge_batch(
@@ -1205,30 +1166,22 @@ def sketch_merge_batch(
 ) -> None:
     """One micro-batch of the streaming-sketch sink (module-level so the
     replay and crash-promote contracts are directly testable): sketch
-    the batch, max-merge into the standing register table, commit as a
-    new generation via stage + one atomic rename. An empty batch is not
-    special-cased: it commits an unchanged copy of the registers."""
+    the batch and max-merge it into the standing register table, whose
+    schema is the batch sketch's. By the union law, N trigger merges
+    equal the one-pass register build (``profiling.hll_registers``). An
+    empty batch is not special-cased: it commits an unchanged copy of
+    the registers."""
     from datafusion_sqlgen_spark.operators.profiling import hll_registers
 
-    spark = batch_df.sparkSession
-    latest = _latest_generation(spark, state_path)
-    if latest is not None and batch_id <= latest:
-        return  # replayed batch already committed
     regs = hll_registers(batch_df, key_col, group_col)
-    if latest is not None:
-        existing = spark.read.parquet(f"{state_path}/gen-{latest}")
-        regs = (
-            existing.unionByName(regs)
+    _Generations(batch_df.sparkSession, state_path).apply(
+        batch_id, regs.schema,
+        lambda prev: regs if prev is None else (
+            prev.unionByName(regs)
             .groupBy(group_col, "register")
             .agg(F.max("rho").cast("int").alias("rho"))
-        )
-    _atomic_commit_dir(
-        spark,
-        regs,
-        f"{state_path}/.staging-gen-{batch_id}",
-        f"{state_path}/gen-{batch_id}",
+        ),
     )
-    _retire_generations(spark, state_path, keep=2)
 
 
 def streaming_sketch_sink(
@@ -1254,34 +1207,26 @@ def run_bounded_sketch(
     registers. An empty source returns an empty register table."""
     from datafusion_sqlgen_spark.operators.profiling import hll_registers
 
-    state_path = os.path.join(work, "sketch_state")
-    replay(
-        read_events_stream(spark, events_path), work,
-        partial(sketch_merge_batch, state_path=state_path),
-    )
-    state = read_rollup_state(spark, state_path)
-    if state is None:
-        state = hll_registers(spark.createDataFrame([], EVENTS_SCHEMA))
-    return state.select("event_type", "register", "rho")
+    return _replay_generations(
+        read_events_stream(spark, events_path), work, sketch_merge_batch,
+        hll_registers(spark.createDataFrame([], EVENTS_SCHEMA)),
+    ).select("event_type", "register", "rho")
 
 
-# ---------------------------------------------------------------------------
-# Streaming k-means maintenance: a standing centroid model kept current
-# by per-trigger accumulation — the third state-algebra class after the
-# rollup sink (additive counters) and the sketch sink (idempotent
-# max-merge): MODEL state, where each batch's contribution depends on
-# the state it observed (assignment against the current centroids).
-# Replays are therefore guarded by batch id exactly like the rollup
-# sink, and determinism comes from (a) deterministic batch membership
-# (the workload hash-splits by id, not repartition), (b) order-free
+# Streaming k-means determinism: (a) deterministic batch membership (the
+# workload hash-splits by id, not repartition), (b) order-free
 # fixed-point integer state (per-dim micro-unit sums — never a float
 # accumulation), and (c) snapped-integer assignment distances with id
-# tie-breaks. The oracle replays the SAME batch sequence as unrolled
-# SQL stages.
-# ---------------------------------------------------------------------------
-
+# tie-breaks. The oracle replays the SAME batch sequence as unrolled SQL
+# stages.
 _KM_FP = 1_000_000  # micro-units for coordinate sums
 _KM_DFP = 1_000_000_000_000  # fixed point for squared distances
+_KM_STATE = T.StructType([
+    T.StructField("cell", T.IntegerType()),
+    T.StructField("dim", T.IntegerType()),
+    T.StructField("s", T.LongType()),
+    T.StructField("n", T.LongType()),
+])
 
 
 def _km_fp(c: Column) -> Column:
@@ -1321,58 +1266,56 @@ def kmeans_update_batch(
     break on the lower cell id — bit-identical across engines and
     partitionings. A later empty batch commits an unchanged copy of
     the state."""
-    spark = batch_df.sparkSession
-    latest = _latest_generation(spark, state_path)
-    if latest is not None and batch_id <= latest:
-        return  # replayed batch already committed — idempotent
-    if latest is None and batch_df.isEmpty():
-        return  # no rows to seed from: the first non-empty batch seeds
-    pts = _km_long(batch_df, id_col, vec_col)
-    if latest is None:
-        from pyspark.sql import Window
 
-        seed = (batch_df.orderBy(F.col(id_col).asc()).limit(k)
-                .select(F.col(id_col).alias("sid")))
-        w = Window.orderBy(F.col("sid").asc())
-        cells = seed.select(
-            (F.row_number().over(w) - 1).alias("cell"), "sid")
-        cent = (
-            F.broadcast(cells).join(pts, F.col("sid") == F.col("pid"))
-            .select("cell", "dim", F.col("val").alias("c"))
+    def merge(state: DataFrame | None) -> DataFrame | None:
+        if state is None and batch_df.isEmpty():
+            return None  # no rows to seed from: the first non-empty batch seeds
+        pts = _km_long(batch_df, id_col, vec_col)
+        if state is None:
+            from pyspark.sql import Window
+
+            seed = (batch_df.orderBy(F.col(id_col).asc()).limit(k)
+                    .select(F.col(id_col).alias("sid")))
+            w = Window.orderBy(F.col("sid").asc())
+            cells = seed.select(
+                (F.row_number().over(w) - 1).alias("cell"), "sid")
+            cent = (
+                F.broadcast(cells).join(pts, F.col("sid") == F.col("pid"))
+                .select("cell", "dim", F.col("val").alias("c"))
+            )
+        else:
+            cent = state.select(
+                "cell", "dim",
+                (F.col("s").cast("double") / F.lit(float(_KM_FP))
+                 / F.col("n").cast("double")).alias("c"),
+            )
+        d2 = (F.col("val") - F.col("c")) * (F.col("val") - F.col("c"))
+        dfp = F.floor(d2 * F.lit(float(_KM_DFP)) + F.lit(0.5)).cast("bigint")
+        dists = (
+            pts.join(F.broadcast(cent), "dim")
+            .groupBy("pid", "cell")
+            .agg(F.sum(dfp).alias("dist"))
         )
-    else:
-        state = spark.read.parquet(f"{state_path}/gen-{latest}")
-        cent = state.select(
-            "cell", "dim",
-            (F.col("s").cast("double") / F.lit(float(_KM_FP))
-             / F.col("n").cast("double")).alias("c"),
+        assign = (
+            dists.groupBy("pid")
+            .agg(F.min(F.struct(F.col("dist"), F.col("cell"))).alias("m"))
+            .select("pid", F.col("m.cell").alias("cell"))
         )
-    d2 = (F.col("val") - F.col("c")) * (F.col("val") - F.col("c"))
-    dfp = F.floor(d2 * F.lit(float(_KM_DFP)) + F.lit(0.5)).cast("bigint")
-    dists = (
-        pts.join(F.broadcast(cent), "dim")
-        .groupBy("pid", "cell")
-        .agg(F.sum(dfp).alias("dist"))
-    )
-    assign = (
-        dists.groupBy("pid")
-        .agg(F.min(F.struct(F.col("dist"), F.col("cell"))).alias("m"))
-        .select("pid", F.col("m.cell").alias("cell"))
-    )
-    batch_state = (
-        pts.join(assign, "pid")
-        .groupBy("cell", "dim")
-        .agg(
-            F.sum(_km_fp(F.col("val"))).alias("s"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
+        batch_state = (
+            pts.join(assign, "pid")
+            .groupBy("cell", "dim")
+            .agg(
+                F.sum(_km_fp(F.col("val"))).alias("s"),
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+            )
         )
-    )
-    if latest is not None:
-        old = spark.read.parquet(f"{state_path}/gen-{latest}").select(
+        if state is None:
+            return batch_state
+        old = state.select(
             F.col("cell").alias("o_cell"), F.col("dim").alias("o_dim"),
             F.col("s").alias("o_s"), F.col("n").alias("o_n"),
         )
-        batch_state = (
+        return (
             batch_state.join(
                 old,
                 (F.col("cell") == F.col("o_cell"))
@@ -1388,13 +1331,9 @@ def kmeans_update_batch(
                  + F.coalesce(F.col("o_n"), F.lit(0))).alias("n"),
             )
         )
-    _atomic_commit_dir(
-        spark,
-        batch_state,
-        f"{state_path}/.staging-gen-{batch_id}",
-        f"{state_path}/gen-{batch_id}",
-    )
-    _retire_generations(spark, state_path, keep=2)
+
+    _Generations(batch_df.sparkSession, state_path).apply(
+        batch_id, _KM_STATE, merge)
 
 
 def run_bounded_kmeans(
@@ -1405,15 +1344,11 @@ def run_bounded_kmeans(
     (cell, dim, n, centroid); an empty source returns an empty model."""
     from datafusion_sqlgen_spark.operators.similarity import _stable_round
 
-    state_path = os.path.join(work, "kmeans_state")
-    replay(
+    state = _replay_generations(
         _file_stream(spark, vectors_path, VECTORS_SCHEMA), work,
-        partial(kmeans_update_batch, state_path=state_path, k=k),
+        partial(kmeans_update_batch, k=k),
+        spark.createDataFrame([], _KM_STATE),
     )
-    state = read_rollup_state(spark, state_path)
-    if state is None:
-        return spark.createDataFrame(
-            [], "cell INT, dim INT, n BIGINT, centroid DOUBLE")
     return state.select(
         "cell", "dim", "n",
         _stable_round(
@@ -1422,19 +1357,6 @@ def run_bounded_kmeans(
             6,
         ).alias("centroid"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming CDC-apply (SCD2) sink: a versioned dimension-history table
-# kept current by applying each micro-batch as a type-2 slowly-changing
-# merge. This is the fourth sink state-algebra class (round 13): the
-# rollup sink is ADDITIVE (replay double-counts), the sketch sink is
-# IDEMPOTENT (max-merge), the k-means sink is an ORDER-DEPENDENT MODEL,
-# and this one is ORDER-DEPENDENT HISTORY — a batch's merge result
-# depends on the open-row slice it observed, and a replay would close
-# and re-open versions a second time, so the batch-id guard is
-# mandatory, not advisory.
-# ---------------------------------------------------------------------------
 
 
 def scd2_apply_batch(
@@ -1466,7 +1388,8 @@ def scd2_apply_batch(
     then applied to the standing history via
     ``operators.joins.scd2_merge`` with each key's effective time taken
     from ITS OWN row (``effective_from_col``): changed keys close at
-    and re-open from their event time, new keys open at theirs.
+    and re-open from their event time, new keys open at theirs.  The
+    history schema is typed off the batch by analysis.
 
     Scale shape per batch: one key-partitioned WindowGroupLimit over
     the BATCH (compaction), then scd2_merge's single full-outer hash
@@ -1480,10 +1403,6 @@ def scd2_apply_batch(
 
     from datafusion_sqlgen_spark.operators.joins import scd2_merge
 
-    spark = batch_df.sparkSession
-    latest = _latest_generation(spark, state_path)
-    if latest is not None and batch_id <= latest:
-        return  # replayed batch already committed — idempotent
     w = Window.partitionBy(key).orderBy(
         F.col(ts_col).desc(),
         *[F.col(c).desc() for c in order_cols],
@@ -1503,46 +1422,43 @@ def scd2_apply_batch(
     else:
         snap = compacted.select(key, *attrs, ts_col)
         tombs = None
-    if latest is not None:
-        history = spark.read.parquet(f"{state_path}/gen-{latest}")
-    else:
-        # empty history with the output schema, typed off the batch
-        history = (
-            snap.select(
-                key, *attrs,
-                F.col(ts_col).cast("timestamp").alias("valid_from"),
+    # empty history with the state schema, typed off the batch
+    empty = (
+        snap.select(
+            key, *attrs,
+            F.col(ts_col).cast("timestamp").alias("valid_from"),
+        )
+        .withColumn("valid_to", F.lit(None).cast("timestamp"))
+        .withColumn("is_current", F.lit(True))
+        .limit(0)
+    )
+
+    def merge(history: DataFrame | None) -> DataFrame:
+        if history is None:
+            history = empty
+        if tombs is not None:
+            # close tombstoned open rows BEFORE the live merge (the key
+            # sets are disjoint after compaction: one row per key). One
+            # extra left join over the dimension-sized open slice only.
+            cur = history.filter(F.col("is_current"))
+            past = history.filter(~F.col("is_current"))
+            j = cur.join(tombs, F.col(key) == F.col("__t_key"), "left")
+            closed_now = j.filter(F.col("__t_key").isNotNull()).select(
+                key, *attrs, "valid_from",
+                F.col("__del_ts").cast("timestamp").alias("valid_to"),
+                F.lit(False).alias("is_current"),
             )
-            .withColumn("valid_to", F.lit(None).cast("timestamp"))
-            .withColumn("is_current", F.lit(True))
-            .limit(0)
+            kept = j.filter(F.col("__t_key").isNull()).select(
+                key, *attrs, "valid_from", "valid_to", "is_current")
+            history = past.select(
+                key, *attrs, "valid_from", "valid_to", "is_current"
+            ).unionByName(kept).unionByName(closed_now)
+        return scd2_merge(
+            history, snap, key, list(attrs), effective_from_col=ts_col
         )
-    if tombs is not None:
-        # close tombstoned open rows BEFORE the live merge (the key
-        # sets are disjoint after compaction: one row per key). One
-        # extra left join over the dimension-sized open slice only.
-        cur = history.filter(F.col("is_current"))
-        past = history.filter(~F.col("is_current"))
-        j = cur.join(tombs, F.col(key) == F.col("__t_key"), "left")
-        closed_now = j.filter(F.col("__t_key").isNotNull()).select(
-            key, *attrs, "valid_from",
-            F.col("__del_ts").cast("timestamp").alias("valid_to"),
-            F.lit(False).alias("is_current"),
-        )
-        kept = j.filter(F.col("__t_key").isNull()).select(
-            key, *attrs, "valid_from", "valid_to", "is_current")
-        history = past.select(
-            key, *attrs, "valid_from", "valid_to", "is_current"
-        ).unionByName(kept).unionByName(closed_now)
-    merged = scd2_merge(
-        history, snap, key, list(attrs), effective_from_col=ts_col
-    )
-    _atomic_commit_dir(
-        spark,
-        merged,
-        f"{state_path}/.staging-gen-{batch_id}",
-        f"{state_path}/gen-{batch_id}",
-    )
-    _retire_generations(spark, state_path, keep=2)
+
+    _Generations(batch_df.sparkSession, state_path).apply(
+        batch_id, empty.schema, merge)
 
 
 def run_bounded_scd2(
@@ -1556,15 +1472,10 @@ def run_bounded_scd2(
     and return the standing history table, hash-checked against the
     same batch sequence replayed as unrolled SQL merges; an empty
     source returns an empty history."""
-    state_path = os.path.join(work, "scd2_state")
-    replay(
+    return _replay_generations(
         read_events_stream(spark, events_path), work,
-        partial(scd2_apply_batch, state_path=state_path,
-                tombstone_where=tombstone_where),
-    )
-    history = read_rollup_state(spark, state_path)
-    if history is None:
-        return spark.createDataFrame(
+        partial(scd2_apply_batch, tombstone_where=tombstone_where),
+        spark.createDataFrame(
             [], "user_id BIGINT, event_type STRING, valid_from TIMESTAMP, "
-                "valid_to TIMESTAMP, is_current BOOLEAN")
-    return history
+                "valid_to TIMESTAMP, is_current BOOLEAN"),
+    )

@@ -4152,11 +4152,12 @@ def _sentinel_quartiles(s: SparkSession) -> DataFrame:
     """The watermark-eviction replay input shared by the LEFT OUTER
     attribution and point-in-time enrichment workloads: the events
     table as four event-TIME quartiles (``__b`` 0-3, staged as files in
-    that trigger order), plus two trailing sentinel click+purchase
-    pairs for reserved ``user_id -1`` (``__b`` 4 and 5; 10 and 20 days
-    past max ts) that advance BOTH sides' watermark nodes past all real
-    data — watermarks computed in batch N evict and emit in batch N+1,
-    so the last sentinel's batch flushes every real unmatched row.
+    that trigger order), plus one trailing sentinel click+purchase pair
+    for reserved ``user_id -1`` (``__b`` 4, 10 days past max ts) that
+    advances BOTH sides' watermark nodes past all real data. Watermarks
+    computed in batch N evict and emit in batch N+1: here that is the
+    no-data micro-batch Spark runs by default once the sentinel's batch
+    has moved the watermark, and it flushes every real unmatched row.
     Callers filter sentinel rows out by user_id sign."""
     import datetime
 
@@ -4169,13 +4170,11 @@ def _sentinel_quartiles(s: SparkSession) -> DataFrame:
     q = ev.withColumn(
         "__b", F.ntile(4).over(Window.orderBy("ts", "event_id")) - 1
     )
-    sent_rows = []
-    for j in (1, 2):  # sentinel click+purchase pair per file
-        sent_ts = max_ts + datetime.timedelta(days=10 * j)
-        sent_rows += [
-            (10**9 + 2 * j, sent_ts, -1, "click", 0.0, "", 3 + j),
-            (10**9 + 2 * j + 1, sent_ts, -1, "purchase", 0.0, "", 3 + j),
-        ]
+    sent_ts = max_ts + datetime.timedelta(days=10)
+    sent_rows = [
+        (10**9 + 2, sent_ts, -1, "click", 0.0, "", 4),
+        (10**9 + 3, sent_ts, -1, "purchase", 0.0, "", 4),
+    ]
     return q.unionByName(s.createDataFrame(sent_rows, q.schema))
 
 
@@ -4190,12 +4189,12 @@ def _streaming_attribution_left_result(s: SparkSession) -> DataFrame:
       mtimes (the file source triggers them in order), so a REAL
       watermark ("1 hour" > the 30-minute window) never drops a batch
       and never evicts a click before its window closes;
-    * two trailing sentinel files (a far-future click+purchase pair
-      for reserved user_id -1, 10 and 20 days past max ts) advance
-      both sides' watermark nodes past all real data — watermarks
-      computed in batch N evict and emit outer rows in batch N+1, so
-      the LAST sentinel's batch flushes every real unmatched click
-      without relying on no-data micro-batches;
+    * one trailing sentinel file (a far-future click+purchase pair
+      for reserved user_id -1, 10 days past max ts) advances both
+      sides' watermark nodes past all real data — watermarks computed
+      in batch N evict and emit outer rows in batch N+1, so the
+      no-data micro-batch Spark runs by default after the sentinel's
+      batch flushes every real unmatched click;
     * sentinel rows filter out of the result by user_id sign.
 
     Values pass through unrounded (exact=True); the oracle is the
@@ -4208,7 +4207,7 @@ def _streaming_attribution_left_result(s: SparkSession) -> DataFrame:
     )
 
     work, src = stage_replay(
-        _sentinel_quartiles(s), "stream_attr_left_", files=6, bucket="__b")
+        _sentinel_quartiles(s), "stream_attr_left_", files=5, bucket="__b")
     return replay(
         click_purchase_attribution_stream(
             read_events_stream(s, src), watermark="1 hour", exact=True,
@@ -4225,8 +4224,9 @@ def _streaming_pit_enrich_result(s: SparkSession) -> DataFrame:
     with the single most recent same-user purchase in its 30-minute
     lookback window (NULL-enriched otherwise).  The replay input is the
     shared `_sentinel_quartiles` (event-time-quartile files in mtime
-    order, two far-future sentinel pairs so both watermark nodes
-    advance past all real data and the aggregate groups close);
+    order, then one far-future sentinel pair so both watermark nodes
+    advance past all real data, and the trailing no-data micro-batch
+    closes the aggregate groups);
     sentinel rows filter out by user_id sign.  Values pass through
     unrounded; the hand oracle is a batch window twin (rank over the
     lookback join), a formulation that shares no streaming
@@ -4239,7 +4239,7 @@ def _streaming_pit_enrich_result(s: SparkSession) -> DataFrame:
     )
 
     work, src = stage_replay(
-        _sentinel_quartiles(s), "stream_pit_", files=6, bucket="__b")
+        _sentinel_quartiles(s), "stream_pit_", files=5, bucket="__b")
     return replay(
         point_in_time_enrich_stream(
             read_events_stream(s, src), tolerance="30 minutes",

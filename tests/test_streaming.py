@@ -79,28 +79,6 @@ def test_stream_dedup(spark, stream_dir, tmp_path):
     assert n_total == n_batch  # duplicates within watermark dropped
 
 
-def test_stateful_running_totals(spark, stream_dir, tmp_path):
-    ev = st.read_events_stream(spark, stream_dir)
-    st.replay(
-        st.user_running_totals_stream(ev), str(tmp_path), "t_state", "update"
-    )
-    # final state per user (last update) must equal the batch totals
-    final = spark.sql(
-        """
-        SELECT user_id, max(n_events) AS n_events
-        FROM t_state GROUP BY user_id
-        """
-    ).collect()
-    batch = (
-        spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
-        .groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-        .collect()
-    )
-    assert {r["user_id"]: r["n_events"] for r in final} == {
-        r["user_id"]: r["n_events"] for r in batch
-    }
-
-
 def test_stream_static_enrich(spark, stream_dir, tmp_path):
     batch_ev = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
     dim = (
@@ -695,45 +673,156 @@ def test_legacy_flat_layout_fails_loud_not_silent_reset(
         st.dedup_ingest_batch(docs, 0, corpus)
 
 
-def test_rollup_sink_fails_loud_on_corrupt_state(spark, stream_dir, tmp_path):
-    """A corrupt COMMITTED generation must FAIL the next merging batch,
-    not silently reset accumulated state to the current batch (the old
-    bare-except bug).  Replays at or below the committed id short-
-    circuit before reading, so only a NEW batch id trips the read."""
-    import pytest
-
-    state = str(tmp_path / "state")
-    import os
-
-    gen0 = os.path.join(state, "gen-0")
-    os.makedirs(gen0, exist_ok=True)
-    with open(os.path.join(gen0, "part-00000.parquet"), "wb") as f:
-        f.write(b"not a parquet file")
-    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
-    with pytest.raises(Exception):
-        st.rollup_merge_batch(batch, 1, state)
-    # the corrupt generation was NOT overwritten by the failed batch
-    with open(os.path.join(gen0, "part-00000.parquet"), "rb") as f:
-        assert f.read() == b"not a parquet file"
-    assert not os.path.exists(os.path.join(state, "gen-1"))
+_GENERATION_SINKS = ["rollup", "sketch", "kmeans", "scd2"]
 
 
-def test_rollup_merge_batch_is_one_aggregate_job_pair(
-    spark, stream_dir, tmp_path
+def _generation_body(spark, stream_dir, sink):
+    """``(body, batch)`` of one generation sink over the test fixtures."""
+    from datafusion_sqlgen_spark.streaming import ops
+
+    events = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
+    return {
+        "rollup": (ops.rollup_merge_batch, events),
+        "sketch": (ops.sketch_merge_batch, events),
+        "kmeans": (partial(ops.kmeans_update_batch, k=4),
+                   spark.table("embeddings").limit(40)),
+        "scd2": (ops.scd2_apply_batch, events),
+        "scd2_tombstones": (
+            partial(ops.scd2_apply_batch,
+                    tombstone_where="event_type = 'error'"),
+            events,
+        ),
+    }[sink]
+
+
+def _visible(state):
+    return sorted(d for d in os.listdir(state) if not d.startswith("."))
+
+
+@pytest.mark.parametrize("sink", _GENERATION_SINKS)
+def test_generation_sink_replay_and_torn_staging(
+    spark, stream_dir, tmp_path, sink
 ):
-    """A non-first trigger is ONE aggregate over the previous generation
-    unioned with the batch rows: one shuffle-map job plus the generation
-    write — no emptiness probe, no schema-inference read of the
-    previous generation, no second aggregate."""
+    """The state contract every generation sink shares: replaying an
+    applied batch id is a no-op; a torn ``.staging-gen-<id>`` left by a
+    crash mid-promote never shadows the committed generation, and the
+    retry deletes it and commits; at most two generations stay on
+    disk."""
+    body, batch = _generation_body(spark, stream_dir, sink)
+    state = str(tmp_path / "state")
+
+    def current():
+        return sorted(
+            tuple(r) for r in st.read_rollup_state(spark, state).collect()
+        )
+
+    body(batch, 0, state)
+    once = current()
+    assert once
+    body(batch, 0, state)  # crash-recovery replay of the applied id
+    assert current() == once and _visible(state) == ["gen-0"]
+    staging = os.path.join(state, ".staging-gen-1")
+    os.makedirs(staging)
+    with open(os.path.join(staging, "part-00000.parquet"), "wb") as f:
+        f.write(b"torn promote")
+    assert current() == once
+    body(batch, 1, state)
+    assert not os.path.exists(staging)
+    body(batch, 2, state)
+    assert _visible(state) == ["gen-1", "gen-2"]
+
+
+@pytest.mark.parametrize("sink", _GENERATION_SINKS)
+def test_generation_sink_fails_loud_on_corrupt_state(
+    spark, stream_dir, tmp_path, sink
+):
+    """A corrupt COMMITTED generation must FAIL the next merging batch,
+    naming the file, not silently reset accumulated state to the
+    current batch (the old bare-except bug).  Replays at or below the
+    committed id short-circuit before reading, so only a NEW batch id
+    trips the read."""
+    body, batch = _generation_body(spark, stream_dir, sink)
+    state = str(tmp_path / "state")
+    part = os.path.join(state, "gen-0", "part-00000.parquet")
+    os.makedirs(os.path.dirname(part))
+    with open(part, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(
+        Exception, match=r"part-00000\.parquet is not a Parquet file"
+    ):
+        body(batch, 1, state)
+    # the corrupt generation was NOT overwritten by the failed batch
+    with open(part, "rb") as f:
+        assert f.read() == b"not a parquet file"
+    assert _visible(state) == ["gen-0"]
+
+
+# per sink: a state column to drop, and a state column with a type it
+# must not have
+_STATE_DRIFT = {
+    "rollup": ("max_v", "n", "int"),
+    "sketch": ("register", "rho", "string"),
+    "kmeans": ("s", "n", "int"),
+    "scd2": ("valid_to", "is_current", "string"),
+}
+
+
+@pytest.mark.parametrize(
+    "drift", ["missing_column", "wrong_type", "extra_column"]
+)
+@pytest.mark.parametrize("sink", _GENERATION_SINKS)
+def test_generation_sink_fails_loud_on_drifted_state(
+    spark, stream_dir, tmp_path, sink, drift
+):
+    """A committed generation whose schema drifted (a column missing,
+    of the wrong type, or unexpected) FAILS the next merging batch,
+    naming the column, before any merge runs; the drifted generation
+    stays as it was and no new generation commits."""
+    body, batch = _generation_body(spark, stream_dir, sink)
+    body(batch, 0, str(tmp_path / "clean"))
+    gen0 = st.read_rollup_state(spark, str(tmp_path / "clean"))
+    dropped, col, typ = _STATE_DRIFT[sink]
+    drifted, cause = {
+        "missing_column": (
+            gen0.drop(dropped), rf"missing columns \['{dropped}'\]"),
+        "wrong_type": (
+            gen0.withColumn(col, F.col(col).cast(typ)),
+            rf"{col}: {typ} \(expected "
+            rf"{gen0.schema[col].dataType.simpleString()}\)"),
+        "extra_column": (
+            gen0.withColumn("extra", F.lit(1)),
+            r"unexpected columns \['extra'\]"),
+    }[drift]
+    state = str(tmp_path / "state")
+    drifted.write.parquet(os.path.join(state, "gen-0"))
+    with pytest.raises(IOError, match=cause):
+        body(batch, 1, state)
+    assert _visible(state) == ["gen-0"]
+
+
+@pytest.mark.parametrize(
+    "sink, jobs",
+    [("rollup", 2), ("sketch", 3), ("kmeans", 6), ("scd2", 3),
+     ("scd2_tombstones", 6)],
+)
+def test_generation_sink_trigger_jobs(
+    spark, stream_dir, tmp_path, sink, jobs
+):
+    """The job count of a non-first trigger. The previous generation is
+    read with the body's state schema after a driver-side footer check,
+    so no trigger pays a schema-inference job. The rollup trigger is
+    ONE aggregate over the previous generation unioned with the batch
+    rows: one shuffle-map job plus the generation write — no emptiness
+    probe, no second aggregate."""
     from perfbench.probes import SparkCounters
 
     counters = SparkCounters(spark)
+    body, batch = _generation_body(spark, stream_dir, sink)
     state = str(tmp_path / "state")
-    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
-    st.rollup_merge_batch(batch, 0, state)
+    body(batch, 0, state)
     start = counters.mark()
-    st.rollup_merge_batch(batch, 1, state)
-    assert counters.delta(start, counters.mark())["jobs"] == 2
+    body(batch, 1, state)
+    assert counters.delta(start, counters.mark())["jobs"] == jobs
 
 
 def test_rollup_empty_batch_leaves_state_unchanged(
@@ -821,36 +910,6 @@ def test_bounded_rollup_runs_one_trigger_per_file(
     streamed = sorted(tuple(r) for r in out.collect())
     assert streamed == sorted(tuple(r) for r in batch.collect())
     assert len(streamed) > 0
-
-
-@pytest.mark.parametrize(
-    "drift, cause",
-    [
-        (lambda df: df.drop("max_v"), r"missing columns \['max_v'\]"),
-        (lambda df: df.withColumn("n", F.col("n").cast("int")),
-         r"n: int \(expected bigint\)"),
-    ],
-    ids=["missing_column", "wrong_type"],
-)
-def test_rollup_sink_fails_loud_on_drifted_state(
-    spark, stream_dir, tmp_path, drift, cause
-):
-    """A committed generation whose schema drifted (a column missing,
-    or of the wrong type) FAILS the next merging batch, naming the
-    column, before any merge runs; the drifted generation stays as it
-    was and no new generation commits."""
-    from datafusion_sqlgen_spark.operators import timeseries as ts
-
-    state = str(tmp_path / "state")
-    batch = spark.read.schema(st.EVENTS_SCHEMA).parquet(stream_dir)
-    drift(ts.mergeable_rollup(batch)).write.parquet(
-        os.path.join(state, "gen-0")
-    )
-    with pytest.raises(IOError, match=cause):
-        st.rollup_merge_batch(batch, 1, state)
-    assert sorted(
-        d for d in os.listdir(state) if not d.startswith(".")
-    ) == ["gen-0"]
 
 
 def test_streaming_sketch_sink_matches_one_pass(spark, stream_dir, tmp_path):
@@ -1052,6 +1111,19 @@ def test_running_totals_exact_multi_trigger(spark, stream_dir, tmp_path):
     assert final == batch and len(final) > 0
 
 
+def _replay_counting_triggers(spark, build):
+    """Rows of the replayed workload ``build`` and how many streaming
+    triggers its replay ran."""
+    from perfbench.probes import trigger_log
+
+    log = trigger_log(spark)
+    try:
+        rows = build(spark).collect()
+        return rows, len(log.take())
+    finally:
+        spark.streams.removeListener(log)
+
+
 def test_stream_attribution_left_outer_flushes_unmatched(spark):
     """LEFT OUTER stream-stream interval join (round 10b): the bounded
     replay must emit EVERY unmatched click as a NULL-purchase row (the
@@ -1061,7 +1133,10 @@ def test_stream_attribution_left_outer_flushes_unmatched(spark):
         _streaming_attribution_left_result,
     )
 
-    res = _streaming_attribution_left_result(spark).collect()
+    res, triggers = _replay_counting_triggers(
+        spark, _streaming_attribution_left_result)
+    # 4 quartile files + 1 sentinel file + the no-data flush batch
+    assert triggers == 6
     assert any(r.purchase_ts is None for r in res), (
         "no unmatched clicks flushed — outer state never evicted"
     )
@@ -1105,8 +1180,10 @@ def test_stream_point_in_time_enrich_matches_batch_twin(spark):
         _streaming_pit_enrich_result,
     )
 
-    res = _streaming_pit_enrich_result(spark)
-    rows = res.collect()
+    rows, triggers = _replay_counting_triggers(
+        spark, _streaming_pit_enrich_result)
+    # 4 quartile files + 1 sentinel file + the no-data flush batch
+    assert triggers == 6
     n_clicks = (
         spark.table("events").filter(F.col("event_type") == "click")
         .count()
@@ -1150,24 +1227,15 @@ def test_kmeans_sink_replay_is_idempotent(spark, tmp_path):
     would re-observe a different model on replay, so the batch-id guard
     is mandatory (not just wasted-work protection like the sketch
     sink's)."""
-    import os
-
-    from datafusion_sqlgen_spark.streaming.ops import (
-        _latest_generation,
-        kmeans_update_batch,
-    )
+    from datafusion_sqlgen_spark.streaming.ops import kmeans_update_batch
 
     emb = spark.table("embeddings").limit(40)
     state = os.path.join(str(tmp_path), "km_state")
     kmeans_update_batch(emb, 0, state, k=4)
-    g1 = _latest_generation(spark, state)
-    first = sorted(
-        map(tuple, spark.read.parquet(f"{state}/gen-{g1}").collect()))
+    first = sorted(map(tuple, st.read_rollup_state(spark, state).collect()))
     kmeans_update_batch(emb, 0, state, k=4)  # replay: must be a no-op
-    g2 = _latest_generation(spark, state)
-    assert g2 == g1
-    again = sorted(
-        map(tuple, spark.read.parquet(f"{state}/gen-{g2}").collect()))
+    assert _visible(state) == ["gen-0"]
+    again = sorted(map(tuple, st.read_rollup_state(spark, state).collect()))
     assert again == first
 
 
@@ -1175,24 +1243,15 @@ def test_scd2_sink_replay_is_idempotent(spark, tmp_path):
     """Replaying an already-committed batch id is a no-op: HISTORY
     state is order-dependent — a replayed merge would close and re-open
     versions a second time — so the batch-id guard is mandatory."""
-    import os
-
-    from datafusion_sqlgen_spark.streaming.ops import (
-        _latest_generation,
-        scd2_apply_batch,
-    )
+    from datafusion_sqlgen_spark.streaming.ops import scd2_apply_batch
 
     ev = spark.table("events").limit(200)
     state = os.path.join(str(tmp_path), "scd2_state")
     scd2_apply_batch(ev, 0, state)
-    g1 = _latest_generation(spark, state)
-    first = sorted(
-        map(tuple, spark.read.parquet(f"{state}/gen-{g1}").collect()))
+    first = sorted(map(tuple, st.read_rollup_state(spark, state).collect()))
     scd2_apply_batch(ev, 0, state)  # replay: must be a no-op
-    g2 = _latest_generation(spark, state)
-    assert g2 == g1
-    again = sorted(
-        map(tuple, spark.read.parquet(f"{state}/gen-{g2}").collect()))
+    assert _visible(state) == ["gen-0"]
+    again = sorted(map(tuple, st.read_rollup_state(spark, state).collect()))
     assert again == first
 
 
