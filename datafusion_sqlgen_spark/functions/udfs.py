@@ -8,9 +8,12 @@ Spark's are first-class. House rules, enforced by example here:
 2. ``@pandas_udf`` (Arrow batches) when Python is genuinely needed;
 3. row-at-a-time ``F.udf`` never in a hot path.
 
-These UDFs exist as the vetted patterns for tier 2 — each has a
-built-in twin in operators/ used in the oracle-checked workloads, so
-the UDFs themselves are regression-tested against JVM results.
+These UDFs exist as the vetted patterns for tier 2, and each is
+regression-tested: ``grouped_zscore`` against its Window twin
+``grouped_zscore_window``, ``make_chunk_udtf`` against the built-in
+``operators.text.chunk_documents``, and ``bpeish_token_count`` against
+the same regex in Python and, as the ``udf_bpeish_token_count`` catalog
+row, against its DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -33,28 +36,6 @@ def bpeish_token_count(text: pd.Series) -> pd.Series:
     """Vectorized token counting with a BPE-ish regex — the Python-only
     sibling of the whitespace counter in operators.text.token_stats."""
     return text.fillna("").map(lambda t: len(_BPEISH.findall(t))).astype("int32")
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def bpeish_tokens(text: pd.Series) -> pd.Series:
-    return text.fillna("").map(_BPEISH.findall)
-
-
-@pandas_udf(T.DoubleType())
-def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Pandas-UDF cosine — benchmark twin of the JVM zip_with version in
-    operators.similarity (kept for perf comparison; the JVM version is
-    the production path)."""
-
-    def cos(x, y):
-        if x is None or y is None:
-            return None
-        dot = sum(float(p) * float(q) for p, q in zip(x, y))
-        nx = math.sqrt(sum(float(p) * float(p) for p in x))
-        ny = math.sqrt(sum(float(q) * float(q) for q in y))
-        return dot / (nx * ny) if nx and ny else None
-
-    return pd.Series([cos(x, y) for x, y in zip(a, b)])
 
 
 def grouped_zscore(df, group_col: str, value_col: str):

@@ -14,11 +14,18 @@ Two tiers, mirroring how ANN works at 100 TB:
   queries probe only their own bucket — the candidate set shrinks by
   ~2^b — then exact cosine re-ranks.
 
+The approximate tiers (IVF, SQ8, IVF-SQ8, IVF-PQ) are one filter-and-
+refine pipeline over (query_id, neighbor_id) pairs, built from shared
+stages: the IVF probe is :func:`ivf_assign_multi`, SQ8 codes come from
+:func:`_sq8`, every per-query cut (final top-k or ``refine*k``
+shortlist) is :func:`_top_n`, and every exact score is
+:func:`_exact_cosine` (the shortlist re-rank is :func:`_refine`).
+
 Everything here is oracle-checkable: every DuckDB oracle replays cosine
 as the SAME strict left-fold Spark's zip_with dot product evaluates
-(:func:`_duck_cos` — since round 10, repo-wide; ``list_cosine_similarity``
-only matches to ULP noise, which flips ranks and 1e-6 snaps at floor
-boundaries); results are rounded before hashing.
+(:func:`_duck_cos`, repo-wide; ``list_cosine_similarity`` only matches
+to ULP noise, which flips ranks and 1e-6 snaps at floor boundaries);
+results are rounded before hashing.
 """
 
 from __future__ import annotations
@@ -80,6 +87,109 @@ def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return _dot(a, b) / (norm_a * norm_b)
 
 
+def _queries(df: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """Query rows (query_id, qvec, qn, *extra): the vector and its norm."""
+    return df.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
+        _norm(F.col(vec_col)).alias("qn"), *extra,
+    )
+
+
+def _neighbors(df: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """Corpus rows (neighbor_id, cvec, cn, *extra): the vector and its
+    norm."""
+    return df.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
+        _norm(F.col(vec_col)).alias("cn"), *extra,
+    )
+
+
+def _exact_cosine(q: DataFrame, c: DataFrame, on: Column | str) -> DataFrame:
+    """The exact scorer: :func:`_queries` rows, broadcast, joined to
+    :func:`_neighbors` rows on ``on`` and scored as (query_id,
+    neighbor_id, cos_sim) by the full-precision cosine."""
+    return F.broadcast(q).join(c, on).select(
+        "query_id", "neighbor_id",
+        cosine_pre(
+            F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
+        ).alias("cos_sim"),
+    )
+
+
+def _top_n(pairs: DataFrame, n: int, key: Column) -> DataFrame:
+    """Per-query cut: the ``n`` best (query_id, neighbor_id) rows by
+    ``key``, ties to the lowest neighbor_id, ranked 1..n in ``rnk``."""
+    w = Window.partitionBy("query_id").orderBy(key, F.col("neighbor_id").asc())
+    return pairs.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= n
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The tiers' output: the top-``k`` of scored pairs by cos_sim,
+    rounded to 4 places — (query_id, neighbor_id, cos_sim, rnk)."""
+    return _top_n(scored, k, F.col("cos_sim").desc()).select(
+        "query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"),
+        "rnk",
+    )
+
+
+def _refine(
+    scored: DataFrame,
+    key: Column,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    refine: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Shortlist + exact re-rank: cut the ``refine * k`` best candidates
+    per query by their approximate ``key``, then re-rank only those by
+    exact cosine.  The shortlist (with its query vectors) is the
+    broadcast side; the corpus streams past it by neighbor_id."""
+    shortlist = _top_n(scored, refine * k, key).select("query_id", "neighbor_id")
+    q = shortlist.join(_queries(queries, id_col, vec_col), "query_id")
+    c = _neighbors(corpus, id_col, vec_col)
+    return _topk(_exact_cosine(q, c, "neighbor_id"), k)
+
+
+def _sq8(df: DataFrame, prefix: str, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """SQ8 codes (<prefix>id, <prefix>scale, <prefix>codes, *extra):
+    :func:`quantize_int8`'s symmetric int8 codes, scale = 127/max|x|.
+    Zero vectors (NULL scale) are dropped."""
+    v = F.col(vec_col)
+    maxabs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
+    scale = F.lit(127.0) / F.nullif(maxabs, F.lit(0.0))
+    return df.select(
+        F.col(id_col).alias(f"{prefix}id"),
+        scale.alias(f"{prefix}scale"),
+        F.transform(
+            v, lambda x: F.round(x.cast("double") * scale).cast("bigint")
+        ).alias(f"{prefix}codes"),
+        *extra,
+    ).where(F.col(f"{prefix}scale").isNotNull())
+
+
+def _sq8_scored(qq: DataFrame, cq: DataFrame, on: Column) -> DataFrame:
+    """SQ8 candidate scores: the broadcast ``q_`` codes joined to the
+    ``c_`` codes on ``on``, as (query_id, neighbor_id, __approx) — the
+    integer dot of the codes rescaled by both scales.  int8 x int8
+    products summed over dim stay far below 2^53, so the dot is exact in
+    any summation order."""
+    idot = F.aggregate(
+        F.zip_with(F.col("q_codes"), F.col("c_codes"), lambda a, b: a * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    return F.broadcast(qq).join(cq, on).select(
+        F.col("q_id").alias("query_id"),
+        F.col("c_id").alias("neighbor_id"),
+        (idot.cast("double") / (F.col("q_scale") * F.col("c_scale")))
+        .alias("__approx"),
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -92,28 +202,12 @@ def cosine_topk(
     ``queries`` is broadcast (must be driver-small — the usual ANN-search
     shape); the corpus is streamed once. Ties broken by neighbor id for
     determinism. Self-matches excluded."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
+    scored = _exact_cosine(
+        _queries(queries, id_col, vec_col),
+        _neighbors(corpus, id_col, vec_col),
+        F.col("query_id") != F.col("neighbor_id"),
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-    sim = cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn"))
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("query_id")
-        .orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    )
-    return (
-        scored.select("query_id", "neighbor_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rnk")
-    )
+    return _topk(scored, k)
 
 
 def cosine_topk_oracle(
@@ -192,31 +286,13 @@ def cosine_topk_bucketed(
     ``cosine_topk`` is the verifier."""
     cb = lsh_buckets(corpus, b, id_col, vec_col).join(corpus, id_col)
     qb = lsh_buckets(queries, b, id_col, vec_col).join(queries, id_col)
-    q = qb.select(
-        F.col(id_col).alias("query_id"), F.col("bucket"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
+    scored = _exact_cosine(
+        _queries(qb, id_col, vec_col, "bucket"),
+        _neighbors(cb, id_col, vec_col, F.col("bucket").alias("cbucket")),
+        (F.col("bucket") == F.col("cbucket"))
+        & (F.col("query_id") != F.col("neighbor_id")),
     )
-    c = cb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("bucket").alias("cbucket"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = F.broadcast(q).join(
-        c, (F.col("bucket") == F.col("cbucket")) & (F.col("query_id") != F.col("neighbor_id"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    sim = cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn"))
-    return (
-        scored.select("query_id", "neighbor_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rnk")
-    )
+    return _topk(scored, k)
 
 
 def cosine_topk_bucketed_oracle(
@@ -296,11 +372,6 @@ def _codebook_from_means(means: DataFrame) -> DataFrame:
     ))
 
 
-def _centroid_rows(cb: DataFrame) -> DataFrame:
-    """(cell_id, centroid, __cn) rows of a one-row codebook."""
-    return cb.selectExpr("inline(__cb)")
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -366,37 +437,17 @@ def ivf_topk(
     *index build* (one pass, done once at 100 TB and persisted, e.g.
     written bucketed-by-cell); the probe join is then cell-equi and
     touches 1/n_cells of the corpus per query."""
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = corpus.filter(F.col(id_col) < n_cells)
     c_assigned = ivf_assign(corpus, centroids, id_col, vec_col)
     q_assigned = ivf_assign(queries, centroids, id_col, vec_col)
-    q = q_assigned.select(
-        F.col(id_col).alias("query_id"), F.col("cell_id"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = c_assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("cell_id").alias("c_cell"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = F.broadcast(q).join(
-        c,
+    scored = _exact_cosine(
+        _queries(q_assigned, id_col, vec_col, "cell_id"),
+        _neighbors(c_assigned, id_col, vec_col, F.col("cell_id").alias("c_cell")),
         (F.col("cell_id") == F.col("c_cell"))
         & (F.col("query_id") != F.col("neighbor_id")),
     )
-    sim = cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select("query_id", "neighbor_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"), "rnk")
-    )
+    return _topk(scored, k)
 
 
 def ivf_topk_oracle(
@@ -551,73 +602,14 @@ def sq8_topk(
     free); ties break on neighbor_id; the re-rank rounds like the
     other tiers.  Zero vectors quantize to NULL scale (nullif) and are
     excluded rather than divide-by-zero."""
-    def _q(df: DataFrame, prefix: str) -> DataFrame:
-        v = F.col(vec_col)
-        maxabs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-        scale = F.lit(127.0) / F.nullif(maxabs, F.lit(0.0))
-        return df.select(
-            F.col(id_col).alias(f"{prefix}id"),
-            scale.alias(f"{prefix}scale"),
-            F.transform(
-                v, lambda x: F.round(x.cast("double") * scale).cast("bigint")
-            ).alias(f"{prefix}codes"),
-        ).where(F.col(f"{prefix}scale").isNotNull())
-
-    qq = _q(queries, "q_")
-    cq = _q(corpus, "c_")
-    idot = F.aggregate(
-        F.zip_with(F.col("q_codes"), F.col("c_codes"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    scored = _sq8_scored(
+        _sq8(queries, "q_", id_col, vec_col),
+        _sq8(corpus, "c_", id_col, vec_col),
+        F.col("q_id") != F.col("c_id"),
     )
-    scored = (
-        F.broadcast(qq)
-        .join(cq, F.col("q_id") != F.col("c_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            (idot.cast("double") / (F.col("q_scale") * F.col("c_scale")))
-            .alias("__approx"),
-        )
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("__approx").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("__rn", F.row_number().over(ws))
-        .where(F.col("__rn") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    rer = (
-        F.broadcast(shortlist.join(q, "query_id"))
-        .join(c, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine_pre(
-                F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
-            ).alias("cos_sim"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"), "rnk",
-        )
+    return _refine(
+        scored, F.col("__approx").desc(), queries, corpus, k, refine,
+        id_col, vec_col,
     )
 
 
@@ -701,103 +693,27 @@ def ivf_sq8_topk(
     Scale shape: the index build (Lloyd loop + cell assignment + SQ8
     codes) is broadcast-join passes over the corpus — persisted/
     bucketed in production; at query time every join is against a
-    broadcast side (nprobe cells/query, the k-row quantized queries,
-    the refine·k shortlist), and the ADC pass shuffles only scalar
-    (query, neighbor, approx) rows.  Determinism: the integer dot is
-    exact in any summation order (int8 products never lose bits in a
-    double sum); probe and shortlist ties break on ids; the re-rank
-    rounds like every other tier."""
+    broadcast side (the quantized queries, one row per probed cell; the
+    refine·k shortlist), and the ADC pass shuffles only scalar
+    (query, neighbor, approx) rows.  Determinism: the probe is
+    :func:`ivf_assign_multi` (1e-6-snapped cosine, lowest cell on
+    ties); the integer dot is exact in any summation order (int8
+    products never lose bits in a double sum); shortlist ties break on
+    ids; the re-rank rounds like every other tier."""
     _, coarse = _kmeans_centroids(corpus, n_cells, n_iter, id_col, vec_col, 6)
-    assigned = ivf_assign(corpus, coarse, id_col, vec_col)
-
-    def _q(df: DataFrame, prefix: str, extra: list = ()) -> DataFrame:
-        v = F.col(vec_col)
-        maxabs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-        scale = F.lit(127.0) / F.nullif(maxabs, F.lit(0.0))
-        return df.select(
-            F.col(id_col).alias(f"{prefix}id"),
-            scale.alias(f"{prefix}scale"),
-            F.transform(
-                v, lambda x: F.round(x.cast("double") * scale).cast("bigint")
-            ).alias(f"{prefix}codes"),
-            *extra,
-        ).where(F.col(f"{prefix}scale").isNotNull())
-
-    codes = _q(assigned, "c_", [F.col("cell_id")])
-    qq = _q(queries, "q_")
-    # --- coarse probe: nprobe nearest trained centroids per query ---
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
+    codes = _sq8(ivf_assign(corpus, coarse, id_col, vec_col), "c_",
+                 id_col, vec_col, "cell_id")
+    # one quantized query row per probed cell: its nprobe nearest cells
+    probes = _sq8(ivf_assign_multi(queries, coarse, nprobe, id_col, vec_col),
+                  "q_", id_col, vec_col, F.col("cell_id").alias("q_cell"))
+    scored = _sq8_scored(
+        probes, codes,
+        (F.col("q_cell") == F.col("cell_id"))
+        & (F.col("q_id") != F.col("c_id")),
     )
-    ccents = _centroid_rows(coarse)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__csim").desc(), F.col("cell_id").asc()
-    )
-    qcells = (
-        F.broadcast(q).join(ccents)
-        .select(
-            "query_id", "cell_id",
-            cosine_pre(
-                F.col("qvec"), F.col("centroid"), F.col("qn"), F.col("__cn")
-            ).alias("__csim"),
-        )
-        .withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select("query_id", "cell_id")
-    )
-    # --- SQ8 ADC over the probed cells only ---
-    idot = F.aggregate(
-        F.zip_with(F.col("q_codes"), F.col("c_codes"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        F.broadcast(qcells.join(qq, qcells.query_id == qq.q_id))
-        .join(codes, "cell_id")
-        .where(F.col("query_id") != F.col("c_id"))
-        .select(
-            "query_id",
-            F.col("c_id").alias("neighbor_id"),
-            (idot.cast("double") / (F.col("q_scale") * F.col("c_scale")))
-            .alias("__approx"),
-        )
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("__approx").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("__rn", F.row_number().over(ws))
-        .where(F.col("__rn") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    # --- exact re-rank of the shortlist only ---
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    rer = (
-        F.broadcast(shortlist.join(q, "query_id"))
-        .join(c, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine_pre(
-                F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
-            ).alias("cos_sim"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"), "rnk",
-        )
+    return _refine(
+        scored, F.col("__approx").desc(), queries, corpus, k, refine,
+        id_col, vec_col,
     )
 
 
@@ -904,10 +820,17 @@ def recall_at_k(
     exact = cosine_topk(corpus, queries, k, id_col, vec_col).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_topk(corpus, queries, k, n_cells, id_col, vec_col).select(
-        "query_id", "neighbor_id"
+    approx = ivf_topk(corpus, queries, k, n_cells, id_col, vec_col)
+    return _recall(exact, approx, k)
+
+
+def _recall(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Per-query (query_id, n_hits, recall_at_k) of the ``approx``
+    (query_id, neighbor_id) pairs against the ``exact`` ones."""
+    hits = exact.join(
+        approx.select("query_id", "neighbor_id"),
+        ["query_id", "neighbor_id"], "left_semi",
     )
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     per_q = hits.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_hits")
     )
@@ -1023,7 +946,7 @@ def kmeans_quality(
     """
     _, codebook = _kmeans_centroids(corpus, k, n_iter, id_col, vec_col, 6)
     assigned = ivf_assign(corpus, codebook, id_col, vec_col)
-    cb = _centroid_rows(codebook)
+    cb = codebook.selectExpr("inline(__cb)")  # (cell_id, centroid, __cn)
     scaled = F.floor(
         cosine_pre(F.col(vec_col), F.col("centroid"),
                    _norm(F.col(vec_col)), F.col("__cn"))
@@ -1196,49 +1119,36 @@ def ann_join(
     lowest neighbor id; rows whose probed cells are empty of right
     vectors emit nothing (the documented ANN recall trade, audited by
     recall_at_k)."""
-    from pyspark.sql import Window
-
     if centroids is None:
         # the n_cells lowest-id right vectors — deterministic stand-in
         # for k-means (pass trained centroids for a real index)
         centroids = right.orderBy(F.col(id_col)).limit(n_cells)
-    r = ivf_assign(right, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("cell_id"),
-        F.col(vec_col).alias("rvec"),
-        _norm(F.col(vec_col)).alias("rn"),
-    )
-    l = ivf_assign_multi(left, centroids, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("cell_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    # snap the ranking key to 1e-6 fixed point BEFORE the window (house
-    # _stable_round rule, VERDICT r8 item 3).  The snap alone does NOT
+    r = _neighbors(ivf_assign(right, centroids, id_col, vec_col),
+                   id_col, vec_col, "cell_id")
+    l = _queries(ivf_assign_multi(left, centroids, nprobe, id_col, vec_col),
+                 id_col, vec_col, "cell_id")
+    # snap the ranking key to 1e-6 fixed point BEFORE the window (the
+    # _stable_round rule: a raw-double near-tie at the k boundary must
+    # break on neighbor id in every engine).  The snap alone does NOT
     # close the boundary class — a 1-ULP cross-engine difference landing
-    # AT a floor boundary snaps to adjacent cells (ADVICE r9) — so since
-    # round 10 ann_join_oracle replays the identical strict left-fold
-    # cosine (_duck_cos) in every window: raw doubles are bit-identical
-    # first, and the snap is defense-in-depth on top
+    # AT a floor boundary snaps to adjacent cells — so ann_join_oracle
+    # replays the identical strict left-fold cosine (_duck_cos) in every
+    # window: raw doubles are bit-identical first, and the snap is
+    # defense-in-depth on top
     sim = _stable_round(
-        cosine_pre(F.col("qvec"), F.col("rvec"), F.col("qn"), F.col("rn")),
+        cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")),
         6,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    pairs = l.join(r, "cell_id").select(
+        "query_id", "neighbor_id", sim.alias("cos_sim")
     )
-    return (
-        l.join(r, "cell_id")
-        .select("query_id", "neighbor_id", sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        # the output round must ALSO be the floor formulation: snapping
-        # to 1e-6 manufactures exact ....x5 values at 4 decimals, where
-        # Spark's round (HALF_UP on the decimal string) and DuckDB's
-        # (binary) disagree — caught by the sf0.01 sweep on this change
-        .select("query_id", "neighbor_id",
-                _stable_round(F.col("cos_sim"), 4).alias("cos_sim"), "rnk")
+    # the output round must ALSO be the floor formulation: snapping to
+    # 1e-6 manufactures exact ....x5 values at 4 decimals, where Spark's
+    # round (HALF_UP on the decimal string) and DuckDB's (binary)
+    # disagree
+    return _top_n(pairs, k, F.col("cos_sim").desc()).select(
+        "query_id", "neighbor_id",
+        _stable_round(F.col("cos_sim"), 4).alias("cos_sim"), "rnk",
     )
 
 
@@ -1328,25 +1238,7 @@ def ann_join_recall(
         "query_id", "neighbor_id"
     )
     approx = ann_join(left, right, k, n_cells, nprobe, id_col, vec_col)
-    hits = exact.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"], "left_semi",
-    )
-    per_q = hits.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    base = exact.select("query_id").distinct()
-    return (
-        base.join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint")
-            .alias("n_hits"),
-            F.round(
-                F.coalesce(F.col("n_hits"), F.lit(0)) / F.lit(k), 4
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall(exact, approx, k)
 
 
 def ann_join_recall_oracle(
@@ -1524,8 +1416,8 @@ def _stable_round(c: Column, decimals: int) -> Column:
     ``round`` does NOT have this property: Spark rounds the shortest
     decimal string HALF_UP while DuckDB rounds the binary value, which
     diverges deterministically at representable-boundary values (the
-    round-6 sf0.1 sweep caught exactly this on pq_encode distances —
-    same class as the documented workloads._money hazard)."""
+    sf0.1 sweep caught exactly this on pq_encode distances — same class
+    as the documented workloads._money hazard)."""
     f = float(10 ** decimals)
     return F.floor(c * F.lit(f) + F.lit(0.5)) / F.lit(f)
 
@@ -1642,7 +1534,7 @@ def pq_encode(
     code, dist)`` — the m-byte-per-vector compressed representation
     that, with the IVF tier, completes the IVF-PQ index family.
 
-    Scale shape (round-6 single-pass rewrite): the corpus EXPLODES once
+    Scale shape (single pass): the corpus EXPLODES once
     into (vec_id, subspace, subvector) rows — same total data volume,
     m× the rows at 1/m the width — and ALL m subspaces train together:
     one corpus-wide assignment pass + one (subspace, cell, pos) mean
@@ -1695,10 +1587,9 @@ def _duck_cos(a: str, b: str) -> str:
     sequence as the Spark side.  ``list_cosine_similarity`` is NOT
     that: its fold order/arithmetic is unspecified, and a 1-ULP
     difference landing at a 1e-6 floor boundary snaps to the adjacent
-    fixed-point cell and flips rank AND value (ADVICE r9 on
-    ann_join_oracle — same class as the _l2_dist/list_distance
-    divergence the round-6 sweep caught).  Args must already be
-    ``::DOUBLE[]`` expressions."""
+    fixed-point cell and flips rank AND value (seen on ann_join_oracle
+    — same class as the _l2_dist/list_distance divergence the sf0.1
+    sweep caught).  Args must already be ``::DOUBLE[]`` expressions."""
     return (
         f"({_duck_dot(a, b)} / "
         f"(sqrt({_duck_dot(a, a)}) * sqrt({_duck_dot(b, b)})))"
@@ -1811,18 +1702,16 @@ def pca_power_component(
     accumulated error (~1e-8 absolute) is ~1% of a snap cell — and the
     dual-scale sweeps are the standing detector for this class.
 
-    Round-13 optimization (guide 2.4 "remove shuffles outright" +
-    guide 5 driver): the centered table is hash-partitioned by row id
+    Shuffles: the centered table is hash-partitioned by row id
     ONCE, so every iteration's row-keyed aggregate and row-keyed join
-    reuse that partitioning with ZERO further wide exchanges — the
-    previous plan re-shuffled ``cx`` by rid inside every iteration's
-    ``join(dots)`` (n*d rows moved per iteration at scale) and paid a
-    broadcast build for ``v``, which is now a d-element array LITERAL
-    (a narrow map). The d-row normalize/sign step runs driver-side on
-    the collected s vector (dimension-bounded, never data-scaled) with
-    the identical floor-snap arithmetic — same accepted risk class as
-    before: cross-row SUM order was never pinned on either engine, the
-    1e-6 snap absorbs it, and the dual-scale sweeps stand as detector."""
+    reuse that partitioning with ZERO further wide exchanges (no
+    per-iteration re-shuffle of ``cx`` by rid, n*d rows at scale), and
+    ``v`` is a d-element array LITERAL (a narrow map, no broadcast
+    build). The d-row normalize/sign step runs in Python on the
+    collected s vector (dimension-bounded, never data-scaled) with the
+    identical floor-snap arithmetic — the same accepted risk class:
+    cross-row SUM order is not pinned on either engine, the 1e-6 snap
+    absorbs it, and the dual-scale sweeps stand as detector."""
     import math
 
     x = corpus.select(
@@ -1869,13 +1758,10 @@ def pca_power_component(
             # Degenerate (constant-vector) corpus: every centered value
             # is 0, so s is all-zero and there is no direction. Emit
             # all-NaN weights — matching the DuckDB oracle's IEEE 0/0.
-            # NOTE (ADVICE r13): this is a deliberate divergence from
-            # the retired distributed plan, which pushed the 0/0 NaN
-            # through _stable_round's F.floor (BIGINT cast maps NaN to
-            # 0) and emitted all-ZERO weights that did NOT match the
-            # oracle; the driver never sampled that corpus shape, so
-            # the r13 rewrite both sped the loop up and fixed the
-            # degenerate case. Pinned by test_pca_degenerate_corpus.
+            # (Pushing the 0/0 through _stable_round's F.floor would
+            # give all-ZERO weights instead — the BIGINT cast maps NaN
+            # to 0 — which do NOT match the oracle.) Pinned by
+            # test_pca_degenerate_corpus.
             w = [float("nan")] * dim
             break
         w = [math.floor(si / nrm * snap + 0.5) / snap for si in sv]
@@ -2010,12 +1896,13 @@ def ivf_pq_topk(
     cells (IVF), per-subspace PQ codebooks, asymmetric-distance
     shortlist, exact re-rank.
 
-    Per query: (1) rank the coarse centroids and probe the ``nprobe``
-    nearest cells; (2) score every candidate in those cells from its
-    m-byte PQ code via the query's distance table (ADC — the candidate
-    VECTORS are never touched); (3) exact-cosine re-rank only the
-    ``refine * k`` best ADC candidates. Output matches ivf_topk:
-    (query_id, neighbor_id, cos_sim, rnk).
+    Per query: (1) probe the ``nprobe`` nearest coarse cells
+    (:func:`ivf_assign_multi`: snapped cosine, lowest cell on ties);
+    (2) score every candidate in those cells from its m-byte PQ code
+    via the query's distance table (ADC — the candidate VECTORS are
+    never touched); (3) exact-cosine re-rank only the ``refine * k``
+    best ADC candidates. Output matches ivf_topk: (query_id,
+    neighbor_id, cos_sim, rnk).
 
     Scale shape — the corpus never shuffles: cell assignment and PQ
     encoding are broadcast-join passes (the one-time index build, both
@@ -2051,36 +1938,17 @@ def ivf_pq_topk(
             .cast("bigint").alias("code"),
         )
     )
-    # --- query side ---
-    q = queries.select(
+    # --- query side: the nprobe nearest cells, and the per-query ADC
+    # table — distance from each query subvector to each codeword,
+    # fixed-point (m * kcode rows per query, broadcast) ---
+    qcells = ivf_assign_multi(queries, coarse, nprobe, id_col, vec_col).select(
+        F.col(id_col).alias("query_id"), "cell_id"
+    )
+    qvec = F.col(vec_col).cast("array<double>")
+    qsub = queries.select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    ccents = _centroid_rows(coarse)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__csim").desc(), F.col("cell_id").asc()
-    )
-    qcells = (
-        F.broadcast(q).join(ccents)
-        .select(
-            "query_id", "cell_id",
-            cosine_pre(
-                F.col("qvec"), F.col("centroid"), F.col("qn"), F.col("__cn")
-            ).alias("__csim"),
-        )
-        .withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select("query_id", "cell_id")
-    )
-    # per-query ADC table: distance from each query subvector to each
-    # codeword, fixed-point (m * kcode rows per query, broadcast)
-    qsub = q.select(
-        "query_id",
         F.posexplode(
-            F.array(*[
-                F.slice(F.col("qvec"), j * sd + 1, sd) for j in range(m)
-            ])
+            F.array(*[F.slice(qvec, j * sd + 1, sd) for j in range(m)])
         ).alias("subspace", "__qv"),
     )
     dtable = qsub.join(F.broadcast(cents), "subspace").select(
@@ -2115,40 +1983,8 @@ def ivf_pq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d_int").cast("bigint").alias("adc"))
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        adc.withColumn("__rn", F.row_number().over(ws))
-        .where(F.col("__rn") <= refine * k)
-        .select("query_id", "neighbor_id")
-    )
-    # --- exact re-rank of the shortlist only ---
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    rer = (
-        F.broadcast(shortlist.join(q, "query_id"))
-        .join(c, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine_pre(
-                F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
-            ).alias("cos_sim"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"), "rnk",
-        )
+    return _refine(
+        adc, F.col("adc").asc(), queries, corpus, k, refine, id_col, vec_col
     )
 
 
@@ -2310,36 +2146,20 @@ def hard_negatives(
     contract, so the DuckDB twin cannot rank-diverge at float
     boundaries.
     """
-    q = df.filter((F.col(id_col) % every) == 0).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
-        F.col(label_col).alias("qlabel"),
-    )
-    c = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-        F.col(label_col).alias("neg_label"),
-    )
+    q = _queries(df.filter((F.col(id_col) % every) == 0), id_col, vec_col,
+                 F.col(label_col).alias("qlabel"))
+    c = _neighbors(df, id_col, vec_col, F.col(label_col).alias("neg_label"))
     scored = F.broadcast(q).join(c, F.col("qlabel") != F.col("neg_label"))
     sim = _stable_round(
         cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")),
         6,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    pairs = scored.select(
+        "query_id", "neighbor_id", "neg_label", sim.alias("cos_sim")
     )
-    return (
-        scored.select(
-            "query_id", "neighbor_id", "neg_label", sim.alias("cos_sim")
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id", "neighbor_id", "neg_label",
-            _stable_round(F.col("cos_sim"), 4).alias("cos_sim"), "rnk",
-        )
+    return _top_n(pairs, k, F.col("cos_sim").desc()).select(
+        "query_id", "neighbor_id", "neg_label",
+        _stable_round(F.col("cos_sim"), 4).alias("cos_sim"), "rnk",
     )
 
 
@@ -2414,31 +2234,20 @@ def mmr_diversify(
     """
     import pandas as pd
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-        _norm(F.col(vec_col)).alias("qn"),
+    scored = F.broadcast(_queries(queries, id_col, vec_col)).join(
+        _neighbors(corpus, id_col, vec_col),
+        F.col("query_id") != F.col("neighbor_id"),
     )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = F.broadcast(q).join(c, F.col("query_id") != F.col("cand_id"))
     rel = _stable_round(
         cosine_pre(F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")),
         6,
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("cand_id").asc()
+    pairs = scored.select(
+        "query_id", "neighbor_id", rel.alias("rel"),
+        F.col("cvec").cast("array<double>").alias("cvec"),
     )
-    cands = (
-        scored.select("query_id", "cand_id", rel.alias("rel"), "cvec")
-        .withColumn("__rnk", F.row_number().over(w))
-        .filter(F.col("__rnk") <= n_candidates)
-        .drop("__rnk")
+    cands = _top_n(pairs, n_candidates, F.col("rel").desc()).select(
+        "query_id", F.col("neighbor_id").alias("cand_id"), "rel", "cvec"
     )
 
     def _fold_dot(a, b) -> float:
@@ -2468,7 +2277,7 @@ def mmr_diversify(
         selected: list[int] = []
         # running max sim to the selected set — starts at -inf, NOT 0:
         # cosines can be negative and a 0 floor would understate the
-        # diversity penalty's absence (caught by the oracle diff, r12)
+        # diversity penalty's absence (caught by the oracle diff)
         maxsim = [float("-inf")] * n
         out = []
         qid = pdf["query_id"].iloc[0]
@@ -2477,8 +2286,8 @@ def mmr_diversify(
                 # the oracle's s1 argmaxes (snapped rel DESC, id ASC)
                 # — NOT the lam-scaled score, whose snap can collapse
                 # two adjacent rel fixed-point cells and flip the tie
-                # toward the smaller id (review r12 #2). rows are
-                # already in that order, so the pick is index 0.
+                # toward the smaller id. rows are already in that
+                # order, so the pick is index 0.
                 best, best_score = 0, _py_snap(lam * rels[0])
             else:
                 best, best_score = None, None
@@ -2598,16 +2407,10 @@ def ivf_recall_frontier(
     is the ivf_topk cell-equi probe shape — the frontier costs
     |nprobes| probe joins over the SAME materialized index, not
     |nprobes| index builds."""
-    from pyspark.sql import Window
-
     cents = corpus.filter(F.col(id_col) < n_cells)
     c_assigned = materialize(
-        ivf_assign(corpus, cents, id_col, vec_col).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("cell_id").alias("c_cell"),
-            F.col(vec_col).alias("cvec"),
-            _norm(F.col(vec_col)).alias("cn"),
-        ),
+        _neighbors(ivf_assign(corpus, cents, id_col, vec_col), id_col,
+                   vec_col, F.col("cell_id").alias("c_cell")),
         scale="corpus",
     )
     exact = materialize(
@@ -2619,29 +2422,15 @@ def ivf_recall_frontier(
     )
     out = None
     for p in nprobes:
-        qm = ivf_assign_multi(queries, cents, p, id_col, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            F.col("cell_id"),
-            F.col(vec_col).alias("qvec"),
-            _norm(F.col(vec_col)).alias("qn"),
-        )
-        scored = F.broadcast(qm).join(
-            c_assigned,
+        qm = _queries(ivf_assign_multi(queries, cents, p, id_col, vec_col),
+                      id_col, vec_col, "cell_id")
+        scored = _exact_cosine(
+            qm, c_assigned,
             (F.col("cell_id") == F.col("c_cell"))
             & (F.col("query_id") != F.col("neighbor_id")),
-        ).select(
-            "query_id", "neighbor_id",
-            cosine_pre(
-                F.col("qvec"), F.col("cvec"), F.col("qn"), F.col("cn")
-            ).alias("cos_sim"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-        )
-        topk = (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id")
+        topk = _top_n(scored, k, F.col("cos_sim").desc()).select(
+            "query_id", "neighbor_id"
         )
         hits = topk.join(exact, ["query_id", "neighbor_id"], "left_semi")
         row = (

@@ -50,8 +50,8 @@ the Spark side) — NOT Spark SQL's 0-based ``[]``.
 
 Round 10b widens the join/window/statement surface: NATURAL
 [INNER|LEFT|RIGHT|FULL] JOIN (shared columns resolved at execution),
-ASOF JOIN (DuckDB dialect, desugared to inner join + correlated-max —
-see ``_parse_asof_join``), window frame EXCLUDE GROUP / TIES (peer
+ASOF JOIN (DuckDB dialect; the Spark render is a join-free union +
+last-non-null-window desugar — see ``_parse_asof_join``), window frame EXCLUDE GROUP / TIES (peer
 aggregate subtraction) alongside EXCLUDE CURRENT ROW, FILTER (WHERE …)
 on window aggregates (Spark render desugars to CASE; Spark rejects the
 clause on windows), multi-statement ``CREATE TEMP VIEW …;`` scripts
@@ -2422,28 +2422,30 @@ class _Parser:
         Parses into the first-class ``AsofJoin`` node (plans/core.py):
         ``to_df`` executes the one-shuffle union+window shape (the
         ``operators.joins.asof_join`` contract — no join operator in
-        the physical plan at all; the r10 lateral-LIMIT-1 path compiled
-        to a BroadcastNestedLoopJoin, VERDICT r10 #2), and
-        ``to_sql("duckdb")`` renders native ASOF. The Spark dialect has
-        no ASOF keyword, so the node carries an executable ANSI desugar
-        built here for its spark render — inner::
+        the physical plan at all; a lateral-LIMIT-1 shape would compile
+        to a BroadcastNestedLoopJoin), and ``to_sql("duckdb")`` renders
+        native ASOF. The Spark dialect has no ASOF keyword, so
+        ``to_sql("spark")`` renders the same union+window shape as text
+        (``AsofJoin._spark_desugar``)::
 
-            FROM l JOIN r ON l.k = r.k AND l.ts >= r.ts
-            WHERE r.ts = (SELECT max(r2.ts) FROM r AS r2
-                          WHERE r2.k = l.k AND r2.ts <= l.ts)
+            left rows  (struct(l.*) AS __l, keys, l.ts AS __ts, NULL AS __p)
+            UNION ALL
+            right rows (NULL AS __l, keys, r.ts AS __ts, struct(r.*) AS __p)
+            match = last(__p) IGNORE NULLS OVER (PARTITION BY keys
+                      ORDER BY __ts ...)
 
-        left-outer: ``LEFT JOIN LATERAL (SELECT * FROM r WHERE keys
-        AND bound ORDER BY ts DESC LIMIT 1) AS r ON TRUE`` (empty
-        lateral output NULL-pads). The spark render→parse fixpoint
-        lands on the desugared form; the duckdb render fixpoints at
-        the ASOF surface form itself.
+        keeping the left rows (all of them for ``ASOF LEFT JOIN``, a
+        NULL match NULL-pads; only the matched ones for the inner
+        form). The spark render→parse fixpoint lands on the desugared
+        form; the duckdb render fixpoints at the ASOF surface form
+        itself.
 
         Preconditions (standard ASOF, documented not checked): the
         right side is unique on (key, time) — on a duplicated pinning
-        timestamp every path picks arbitrarily (to_df: arbitrary tied
-        struct; native DuckDB: arbitrary row) or emits every tied row
-        (the inner spark desugar), so build the right side with a
-        ``GROUP BY key, ts`` the way ``parsed_asof_join`` does.
+        timestamp every path picks arbitrarily (to_df and the spark
+        render: arbitrary tied struct; native DuckDB: arbitrary row),
+        so build the right side with a ``GROUP BY key, ts`` the way
+        ``parsed_asof_join`` does.
         Right-side columns must be referenced qualified above the join
         (they travel as a struct named by the right alias). NULL
         timestamps/keys match nothing (SQL comparison semantics;

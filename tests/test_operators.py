@@ -1642,6 +1642,27 @@ def test_ann_join_ranks_on_snapped_similarity(spark):
     assert [r.cos_sim for r in got] == [1.0, 1.0]
 
 
+def test_ivf_probe_ranks_cells_on_snapped_similarity(spark):
+    """The nprobe probe of ivf_sq8_topk and ivf_pq_topk ranks coarse
+    cells like ivf_assign_multi and both DuckDB oracles: by the 1e-6
+    snapped cosine, lowest cell on ties.  The query's raw cosines to
+    the two trained cells are 0.99994999 (cell 0) and 0.99995001
+    (cell 1); both snap to 0.99995, so nprobe=1 probes cell 0, whose
+    only member is neighbor 0.  A raw-cosine probe picks cell 1."""
+    schema = "vec_id bigint, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.01]), (1, [1.0, -0.01])], schema
+    )
+    queries = spark.createDataFrame([(5, [1.0, -1e-6])], schema)
+    probe = dict(k=1, n_cells=2, nprobe=1, n_iter=1)
+    sq8 = similarity.ivf_sq8_topk(corpus, queries, **probe).collect()
+    pq = similarity.ivf_pq_topk(
+        corpus, queries, dim=2, m=1, kcode=2, **probe
+    ).collect()
+    assert [r.neighbor_id for r in sq8] == [0]
+    assert [r.neighbor_id for r in pq] == [0]
+
+
 def test_pca_power_component_properties(spark):
     """Round-10 PCA power iteration: unit norm after the final snap,
     sign convention (weight at pos 0 non-negative), bit-identical

@@ -754,13 +754,16 @@ def test_ivf_pq_all_joins_broadcast_no_corpus_shuffle(spark, queries):
     """IVF-PQ: zero sort-merge joins — every join is against a
     broadcast small side (nprobe cells, ADC table, shortlist) or a
     broadcast 1-row codebook; no cartesian, no Python eval. The corpus
-    reaches the plan only through scans + broadcast-hash probes."""
+    reaches the plan only through scans + broadcast-hash probes.  The
+    nprobe probe is ivf_assign_multi's in-row sort, so the only windows
+    are the shortlist cut and the final rank."""
     plan = queries["sim_ivf_pq_topk"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
+    assert plan.count("Window [") == 2, plan
 
 
 def test_quantile_sketch_windows_only_over_state(spark, queries):
@@ -856,13 +859,16 @@ def test_ivf_sq8_topk_broadcast_joins_no_corpus_shuffle(spark, queries):
     """IVF-SQ8: every query-time join is against a broadcast side
     (probed cells, quantized queries, shortlist); no cartesian beyond
     the deliberate k-row centroid nested loops; the corpus itself is
-    never sort-merged; everything JVM-side."""
+    never sort-merged; everything JVM-side.  The nprobe probe is
+    ivf_assign_multi's in-row sort, so the only windows are the
+    shortlist cut and the final rank."""
     plan = queries["sim_ivf_sq8_topk"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastExchange") >= 3
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert plan.count("Window [") == 2, plan
 
 
 def test_ann_join_neither_corpus_broadcasts(spark, queries):
