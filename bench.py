@@ -230,11 +230,10 @@ def main() -> None:
     # tables are cached: documents/embeddings/events carry wide text /
     # array payloads whose in-memory size stats flip AQE broadcast
     # decisions in the operator pipelines (measured 2-8x slower cached).
-    for name in ("region", "nation", "customer", "supplier", "part",
-                 "orders", "lineitem"):
-        if name in tables:
-            tables[name].persist()
-            tables[name].count()
+    for name, table in tables.items():
+        if name not in ("events", "documents", "embeddings"):
+            table.persist()
+            table.count()
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     # test hook: comma-separated subset of the headline (contract tests

@@ -242,13 +242,18 @@ def lsh_buckets(
     dimensions packed into an int. Deterministic and oracle-reproducible.
     (Swap in random-hyperplane projections for production: same plumbing,
     different projection vectors.)"""
+    return df.select(F.col(id_col), _lsh_bucket(b, vec_col).alias("bucket"))
+
+
+def _lsh_bucket(b: int, vec_col: str) -> Column:
+    """The :func:`lsh_buckets` bucket id as a per-row expression."""
     vec = F.col(vec_col)
     bucket = F.lit(0)
     for j in range(b):
         bucket = bucket + (
             F.when(F.element_at(vec, j + 1) >= 0, 1).otherwise(0) * (2 ** j)
         )
-    return df.select(F.col(id_col), bucket.cast("int").alias("bucket"))
+    return bucket.cast("int")
 
 
 def lsh_bucket_stats(
@@ -284,11 +289,10 @@ def cosine_topk_bucketed(
     """Approximate top-k: probe only the query's own LSH bucket, then
     exact cosine re-rank. Recall < 1 by construction; the exact
     ``cosine_topk`` is the verifier."""
-    cb = lsh_buckets(corpus, b, id_col, vec_col).join(corpus, id_col)
-    qb = lsh_buckets(queries, b, id_col, vec_col).join(queries, id_col)
+    bucket = _lsh_bucket(b, vec_col)
     scored = _exact_cosine(
-        _queries(qb, id_col, vec_col, "bucket"),
-        _neighbors(cb, id_col, vec_col, F.col("bucket").alias("cbucket")),
+        _queries(queries, id_col, vec_col, bucket.alias("bucket")),
+        _neighbors(corpus, id_col, vec_col, bucket.alias("cbucket")),
         (F.col("bucket") == F.col("cbucket"))
         & (F.col("query_id") != F.col("neighbor_id")),
     )

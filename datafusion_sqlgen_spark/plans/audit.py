@@ -5,6 +5,8 @@ API instead of a test suite.
 scale signals the repo's plan gates assert one by one: whether filters
 reached the parquet scan, which columns each scan reads, cartesian
 products, row-at-a-time Python evaluation, exchange/broadcast counts.
+``exchange_count`` is the one definition of "exchange" the catalog's
+plan contracts (``registry.Workload.max_exchanges``) are written in.
 ``assert_scale_clean(df)`` raises on the two unconditional red flags
 (cartesian product, row-at-a-time Python in the plan).
 
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame
 class PlanAudit:
     pushed_filters: list = field(default_factory=list)
     read_schemas: list = field(default_factory=list)
-    n_exchanges: int = 0
+    n_exchanges: int = 0  # exchange_count of the executed plan
     n_broadcasts: int = 0
     n_sort_merge_joins: int = 0
     n_broadcast_joins: int = 0
@@ -64,6 +66,19 @@ class PlanAudit:
         return out
 
 
+def executed_plan(df: DataFrame) -> str:
+    """The executed physical plan's text, read without running it."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def exchange_count(executed: str) -> int:
+    """Distinct exchange operators in an executed plan's text: every
+    line naming an ``Exchange`` (shuffle, broadcast and reused alike),
+    deduplicated by text so a reused subtree counts once."""
+    return len({ln.strip() for ln in executed.split("\n")
+                if "Exchange" in ln and "AQEShuffleRead" not in ln})
+
+
 def plan_text(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -73,11 +88,10 @@ def plan_text(df: DataFrame) -> str:
 
 def audit_plan(df: DataFrame) -> PlanAudit:
     txt = plan_text(df)
-    phys = df._jdf.queryExecution().executedPlan().toString()
+    phys = executed_plan(df)
     # count operators from the formatted explain's numbered detail
     # headers — each physical node appears there exactly ONCE (the tree
-    # section repeats every node, and substring counting would also fold
-    # BroadcastExchange/ReusedExchange into the shuffle-Exchange count)
+    # section repeats every node)
     ops = re.findall(r"^\(\d+\) (\w+)", txt, re.M)
     # codegen spans are only visible in the codegen explain (the AQE
     # executedPlan hides them behind AdaptiveSparkPlan pre-execution)
@@ -88,7 +102,7 @@ def audit_plan(df: DataFrame) -> PlanAudit:
     return PlanAudit(
         pushed_filters=re.findall(r"PushedFilters: (\[[^\]]*\])", txt),
         read_schemas=re.findall(r"ReadSchema: (\S+)", txt),
-        n_exchanges=sum(1 for o in ops if o == "Exchange"),
+        n_exchanges=exchange_count(phys),
         n_broadcasts=sum(1 for o in ops if o == "BroadcastExchange"),
         n_sort_merge_joins=sum(1 for o in ops if o == "SortMergeJoin"),
         n_broadcast_joins=sum(1 for o in ops if o == "BroadcastHashJoin"),

@@ -132,7 +132,9 @@ WHERE p_size BETWEEN 10 AND 20 AND p_type = 'STANDARD'
 ORDER BY s_acctbal DESC NULLS LAST, n_name ASC NULLS FIRST,
          s_name ASC NULLS FIRST, p_partkey ASC NULLS FIRST
 LIMIT 100
-""")
+""",
+        max_exchanges=13,
+    )
 
     # q3 — shipping priority. customer->orders is a broadcastable dim join
     # at any scale (customer << lineitem); orders->lineitem shuffles on
@@ -413,7 +415,9 @@ SELECT o_year,
                            ELSE CAST(0 AS DECIMAL(18,4)) END)
                   / sum(v), 6) AS DOUBLE) AS mkt_share
 FROM vols GROUP BY o_year ORDER BY o_year ASC NULLS FIRST
-""")
+""",
+        max_exchanges=11,
+    )
 
     # q9 — product type profit (p_retailprice stands in for ps_supplycost).
     w["tpch_q9"] = planned(
@@ -836,7 +840,9 @@ JOIN lineitem ON o_orderkey = lineitem.l_orderkey
 GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
 ORDER BY o_totalprice DESC, o_orderkey ASC
 LIMIT 100
-""")
+""",
+        max_exchanges=11,
+    )
 
     # q19 — discounted revenue: disjunction of conjunctive brand/size/qty
     # bands — one join, one OR-of-ANDs predicate, no subqueries.
@@ -976,7 +982,9 @@ WHERE o.o_orderstatus = 'F'
 GROUP BY s.s_name
 ORDER BY numwait DESC, s_name ASC
 LIMIT 100
-""")
+""",
+        max_exchanges=10,
+    )
 
     # q22 — global sales opportunity: the customer id's last digit
     # (c_name 'Customer#000000123') stands in for the phone country code;

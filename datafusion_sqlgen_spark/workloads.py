@@ -2,8 +2,8 @@
 oracle-checked workload.
 
 Each workload is declared once, as a ``registry.Workload`` record: how
-Spark builds it, the DuckDB SQL that checks it, and whether the bench
-headline times it. Two kinds:
+Spark builds it, the DuckDB SQL that checks it, whether the bench
+headline times it, and its plan contract. Two kinds:
 
 * **Plan workloads** — built with the plan/expression IR; the Spark side
   executes ``plan.to_df(spark)``. The oracle is hand-written in a
@@ -1193,7 +1193,13 @@ WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.c_custkey = o.o_custkey)
         oracle="""
 SELECT r_name, n_name
 FROM region JOIN nation ON n_nationkey < 3
-""")
+""",
+        bnlj_bounded=(
+            "explicit CROSS JOIN of region (5 rows, fixed TPC-H dimension) x "
+            "nation filtered to n_nationkey < 3 (3 rows) — bounded by "
+            "construction; the catalog's intentional cross-join coverage row"
+        ),
+    )
 
     w["join_nonequi_range"] = planned(
         scan("lineitem")
@@ -1763,7 +1769,9 @@ SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600)
        round(sum(value), 2) AS sum_value
 FROM events
 GROUP BY 1, 2
-""")
+""",
+        max_exchanges=1,
+    )
 
     w["events_sessionize_gap"] = planned(
         # session boundaries: gap > 30 min per user (classic sessionization
@@ -1793,7 +1801,9 @@ SELECT event_id, user_id,
                  ORDER BY e2.ts DESC, e2.event_id DESC LIMIT 1)) > 1800
             THEN 1 ELSE 0 END AS new_session
 FROM events e
-""")
+""",
+        max_exchanges=1,
+    )
 
     # remainder of the DataFusion-10 builtin string surface (the
     # reference passes ANY DF builtin through by name, expr.rs:76-94)
@@ -2485,7 +2495,9 @@ ORDER BY c_nationkey ASC, c_acctbal DESC, c_custkey ASC
         parse_sql(_QUANTIFIED_FORMS_SQL),
         # DuckDB executes its NATIVE quantified comparisons; Spark runs the
         # parser's three-valued CASE desugar — the two meet only in results
-        oracle=_QUANTIFIED_FORMS_SQL)
+        oracle=_QUANTIFIED_FORMS_SQL,
+        max_exchanges=24,
+    )
 
     # the two statement forms a pipeline's
     # maintenance job writes, entering through SQL text like every other
@@ -2969,7 +2981,9 @@ FROM (SELECT event_id, ts, user_id FROM events
 ASOF JOIN (SELECT user_id, ts, max(value) AS pval FROM events
            WHERE event_type = 'purchase' GROUP BY user_id, ts) r
 ON l.user_id = r.user_id AND l.ts >= r.ts
-""")
+""",
+        max_exchanges=2,
+    )
     # GROUPS frame mode — Spark has none, so the parser
     # desugars to RANGE over a dense_rank pre-projection (peer-group
     # distance IS rank distance; one shared sort for both windows).
@@ -3069,7 +3083,9 @@ ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS pval FROM events
                 WHERE event_type = 'purchase'
                 GROUP BY user_id, ts) r
 ON l.user_id = r.user_id AND l.ts >= r.ts
-""")
+""",
+        max_exchanges=2,
+    )
     # ASOF with a merge_asof-style
     # TOLERANCE bound — a second, opposite-direction range conjunct on
     # the right time column bounds the match window (the feature-store
@@ -3110,7 +3126,9 @@ WITH m AS MATERIALIZED (
     ON l.user_id = r.user_id AND l.ts >= r.ts)
 SELECT event_id, ts, user_id, purchase_ts, pval
 FROM m WHERE purchase_ts >= ts - INTERVAL 1 DAY
-""")
+""",
+        max_exchanges=2,
+    )
     # MULTI-KEY asof with an EXPRESSION-valued left key —
     # the union+window desugar generalizes to N equality keys
     # (plans/core.py AsofJoin.eqs); DuckDB's native ASOF takes the same
@@ -3147,7 +3165,9 @@ SELECT event_id, ts, obs_ts, obs_v FROM (
                AND r.ts <= l.ts) AS obs_v
     FROM l
 ) WHERE obs_ts IS NOT NULL
-""")
+""",
+        max_exchanges=2,
+    )
     w["parsed_asof_tolerance_left"] = planned(
         parse_sql(
             "SELECT l.event_id, l.ts, l.user_id, r.ts AS purchase_ts, "
@@ -3176,7 +3196,9 @@ SELECT event_id, ts, user_id,
        CASE WHEN purchase_ts >= ts - INTERVAL 1 DAY
             THEN pval END AS pval
 FROM m
-""")
+""",
+        max_exchanges=2,
+    )
     # RUNNING distinct count (cumulative unique users) — the
     # ordered extension of the DISTINCT-over-window desugar: the
     # first-occurrence flag is ordered by the window's keys, so "seen
@@ -4676,6 +4698,7 @@ WHERE NOT EXISTS (
 )
 """,
             headline=True,
+            max_exchanges=1,
         ),
         # near-exact: case/whitespace-canonicalized content hash
         "dedup_canonical": Workload(
@@ -4693,6 +4716,7 @@ FROM (SELECT doc_id,
              trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS c
       FROM documents)
 """,
+            max_exchanges=1,
         ),
         "dedup_minhash_signatures": Workload(
             lambda s: dedup.minhash_signatures(s.table("documents")),
@@ -4720,6 +4744,7 @@ FROM (
 ) u
 GROUP BY doc_id
 """,
+            max_exchanges=0,
         ),
         "dedup_minhash_buckets": Workload(
             lambda s: dedup.minhash_buckets(s.table("documents")),
@@ -4758,6 +4783,7 @@ FROM bb GROUP BY band, bucket
 HAVING count(*) > 1
 """,
             headline=True,
+            max_exchanges=1,
         ),
         "dedup_minhash_verify": Workload(
             lambda s: dedup.minhash_dedup_pairs(s.table("documents"), threshold=0.2),
@@ -4801,6 +4827,7 @@ WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
             / len(list_distinct(list_concat(sa.sh, sb.sh))), 4) >= 0.2
 """,
             headline=True,
+            max_exchanges=16,
         ),
         "text_top_terms": Workload(
             lambda s: text.top_terms(s.table("documents")),
@@ -4835,6 +4862,11 @@ WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
             lambda s: similarity.kmeans_quality(s.table("embeddings")),
             similarity.kmeans_quality_oracle(),
             headline=True,
+            bnlj_bounded=(
+                "codebook broadcast assign + k x k centroid grid (both "
+                "codebook-bounded, never the corpus)"
+            ),
+            max_exchanges=33,
         ),
         # single-pass column profiling (data-quality gate before a training
         # run); oracle is the k-scan UNION ALL formulation — same numbers,
@@ -4991,6 +5023,7 @@ LEFT JOIN events e
    AND CAST(date_trunc('hour', e.ts) AS TIMESTAMP) = g.hr
 GROUP BY t.event_type, g.hr
 """,
+            bnlj_bounded="24-row hour-grid crossJoin (fixed calendar)",
         ),
         # OHLC candle downsampling: time-ordered open/close via
         # min_by/max_by (DuckDB arg_min/arg_max), one hash aggregate
@@ -5030,6 +5063,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
                 s.table("events").filter("user_id < 50")
             ),
             timeseries.locf_resample_oracle(where="WHERE user_id < 50"),
+            bnlj_bounded="24-row hour-grid crossJoin (fixed calendar)",
         ),
         # rolling z-score anomaly gate over hourly counts: integer
         # metric makes window avg/stddev bit-identical cross-engine
@@ -5037,6 +5071,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             lambda s: timeseries.rolling_anomaly(s.table("events")),
             timeseries.rolling_anomaly_oracle(),
             headline=True,
+            max_exchanges=2,
         ),
         # gap-based sessionization: lag-flag + running-sum session ids,
         # then per-session aggregates — batch twin of the streaming
@@ -5045,6 +5080,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             lambda s: timeseries.sessionize(s.table("events")),
             timeseries.sessionize_oracle(),
             headline=True,
+            max_exchanges=1,
         ),
         # near-dup clustering: LSH pairs -> connected components
         # (iterative min-label propagation vs DuckDB WITH RECURSIVE)
@@ -5052,28 +5088,34 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             lambda s: dedup.near_dup_clusters(s.table("documents"), threshold=0.2),
             dedup.near_dup_clusters_oracle(threshold=0.2),
             headline=True,
+            max_exchanges=0,
         ),
         # pipeline terminus: corpus minus clustered non-representatives
         # (documents never shuffle; the drop list broadcasts)
         "dedup_materialize": Workload(
             lambda s: dedup.materialize_dedup(s.table("documents"), threshold=0.2),
             dedup.materialize_dedup_oracle(threshold=0.2),
+            max_exchanges=1,
         ),
         "dedup_simhash": Workload(
             lambda s: dedup.simhash(s.table("documents")),
             dedup.simhash_oracle(),
+            max_exchanges=0,
         ),
         # quality-aware terminus: each cluster keeps its highest-quality
         # doc (ties -> smallest id); only clustered docs are ever scored
         "dedup_quality_rep": Workload(
             lambda s: dedup.quality_dedup(s.table("documents"), threshold=0.2),
             dedup.quality_dedup_oracle(threshold=0.2),
+            max_exchanges=4,
         ),
         "dedup_ngram_jaccard": Workload(
             lambda s: dedup.ngram_jaccard_pairs(
                 s.table("documents"), max_left_id=20, threshold=0.05
             ),
             dedup.ngram_jaccard_pairs_oracle(max_left_id=20, threshold=0.05),
+            bnlj_bounded="1-row total broadcast (Jaccard normalizer)",
+            max_exchanges=1,
         ),
         # asymmetric containment (|A∩B| / min(|A|,|B|)) —
         # the sub-document/quote-inclusion dup class symmetric Jaccard
@@ -5086,6 +5128,12 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
                 max_left_id=60, threshold=0.1
             ),
             headline=True,
+            bnlj_bounded=(
+                "bounded broadcast left side (max_left_id) x corpus — the "
+                "verification-stage contract, runs over LSH candidates at "
+                "scale"
+            ),
+            max_exchanges=1,
         ),
         "text_token_stats": Workload(
             lambda s: text.token_stats(s.table("documents")),
@@ -5111,6 +5159,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             lambda s: text.tfidf_top_terms(s.table("documents")),
             text.tfidf_top_terms_oracle(),
             headline=True,
+            bnlj_bounded="1-row doc-count aggregate broadcast",
         ),
         # intra-doc repetition (Gopher-style quality filters): top-gram
         # and repeated-gram fractions; one doc-keyed shuffle reused by
@@ -5137,6 +5186,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             ),
             similarity.cosine_topk_oracle(max_query_id=10),
             headline=True,
+            bnlj_bounded="query side capped (vec_id < 10) and broadcast",
         ),
         # MMR diversity re-ranking (Carbonell-Goldstein) —
         # top-n candidate search then a bounded per-query greedy via
@@ -5149,6 +5199,10 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             ),
             similarity.mmr_diversify_oracle(max_query_id=3),
             headline=True,
+            bnlj_bounded=(
+                "query side capped (vec_id < 3) and broadcast; the greedy "
+                "re-ranks bounded n-candidate groups via applyInPandas"
+            ),
         ),
         "sim_lsh_bucket_stats": Workload(
             lambda s: similarity.lsh_bucket_stats(s.table("embeddings")),
@@ -5179,6 +5233,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             ),
             similarity.ivf_topk_oracle(max_query_id=10),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast",
         ),
         # cross-corpus ANN JOIN — odd-id vectors probe their
         # nprobe=2 nearest cells of an even-id index; neither side
@@ -5191,6 +5246,8 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             ),
             similarity.ann_join_oracle(),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast, both sides",
+            max_exchanges=4,
         ),
         # embedding-level benchmark decontamination: ann_join against a
         # held-out benchmark split (vec_id % 10), τ-gate, per-source
@@ -5204,6 +5261,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             ),
             dedup.embedding_decontaminate_oracle(),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast (ann_join shape)",
         ),
         # ... and its acceptance audit: recall@k of the multi-probe
         # join vs exact brute force, on a 25-query left sample (the
@@ -5217,6 +5275,8 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             similarity.ann_join_recall_oracle(
                 left_pred="vec_id % 2 = 1 AND vec_id < 50"),
             headline=True,
+            bnlj_bounded="codebook broadcast + capped exact reference",
+            max_exchanges=11,
         ),
         # b=6 -> 64 sign-LSH buckets: total pair count scales ~1/buckets
         # and the pair join's parallelism is bucket-count-bound, so more
@@ -5226,6 +5286,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             lambda s: dedup.embedding_near_dup(s.table("embeddings"), b=6),
             dedup.embedding_near_dup_oracle(b=6),
             headline=True,
+            max_exchanges=4,
         ),
         # multimodal pipeline: binary payload + metadata -> mapInPandas
         # feature extraction; the fake decode is deterministic MD5
@@ -5392,6 +5453,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: dedup.block_dedup(s.table("documents")),
             dedup.block_dedup_oracle(),
             headline=True,
+            max_exchanges=3,
         ),
         # the published C4 heuristic filter set, one flag per rule
         "text_c4_filters": Workload(
@@ -5407,6 +5469,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: dedup.semantic_dedup(s.table("embeddings")),
             dedup.semantic_dedup_oracle(),
             headline=True,
+            max_exchanges=3,
         ),
         # per-domain token-budget mixture (The Pile / DoReMi-style
         # mixture recipe): md5-ordered admission until each source hits
@@ -5415,6 +5478,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: sampling.token_budget_mix(s.table("documents")),
             sampling.token_budget_mix_oracle(),
             headline=True,
+            bnlj_bounded="1-row total-token aggregate broadcast",
         ),
         # domain-mixture water-filling solver — target
         # weights + token budget + max-epochs repeat cap -> per-domain
@@ -5425,6 +5489,11 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: sampling.mixture_waterfill(s.table("documents")),
             sampling.mixture_waterfill_oracle(),
             headline=True,
+            bnlj_bounded=(
+                "1-row water-level fixpoint broadcast over the checkpointed "
+                "|domains|-row stats table — bounded by construction"
+            ),
+            max_exchanges=3,
         ),
         # deterministic PPS systematic sampling: exactly n
         # picks per source, probability proportional to integer weight;
@@ -5451,6 +5520,12 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 s.table("embeddings").filter(F.col("vec_id") < 10),
             ),
             similarity.ivf_recall_frontier_oracle(),
+            bnlj_bounded=(
+                "capped query set + codebook broadcasts per nprobe branch, "
+                "plus 1-row stat crosses — every build side bounded; the "
+                "index itself is checkpointed and probed, never broadcast"
+            ),
+            max_exchanges=45,
         ),
         # ANN acceptance gate: IVF recall@k vs exact brute force
         "sim_recall_at_k": Workload(
@@ -5460,6 +5535,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             similarity.recall_at_k_oracle(),
             headline=True,
+            bnlj_bounded="capped query set broadcast (exact reference)",
+            max_exchanges=13,
         ),
         # deterministic hash-sharded training-set write -> read-back counts
         "sink_sharded_write": Workload(
@@ -5471,6 +5548,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: similarity.kmeans_fit(s.table("embeddings")),
             similarity.kmeans_fit_oracle(),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast per iteration",
+            max_exchanges=16,
         ),
         # top principal component by power iteration — the
         # dimensionality-reduction substrate; Gram matrix never forms
@@ -5484,6 +5563,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: profiling.key_skew(s.table("events"), "user_id"),
             profiling.key_skew_oracle("events", "user_id"),
             headline=True,
+            bnlj_bounded="1-row total-rows aggregate broadcast",
         ),
         # PSI drift gate between two cohort distributions —
         # 1-row edge/total broadcasts + one n_buckets-group count
@@ -5495,6 +5575,10 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             profiling.drift_psi_oracle(
                 "events", "value", "event_type", "click", "purchase"),
             headline=True,
+            bnlj_bounded=(
+                "two 1-row broadcasts (bucket edges, cohort totals) over an "
+                "n_buckets-row count table — bounded by construction"
+            ),
         ),
         # KS drift twin — worst cumulative displacement of
         # the bucketed CDFs (PSI sees per-bucket mass, KS sees a shift
@@ -5507,6 +5591,10 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             profiling.drift_ks_oracle(
                 "events", "value", "event_type", "click", "purchase"),
             headline=True,
+            bnlj_bounded=(
+                "two 1-row broadcasts (bucket edges, cohort totals); the CDF "
+                "window runs over the bounded n_buckets count rows"
+            ),
         ),
         # winsorized per-group stats: exact percentiles broadcast back,
         # clipped re-aggregation (outlier-robust metric gate)
@@ -5555,6 +5643,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             text.calibration_bins_oracle(),
             headline=True,
+            max_exchanges=4,
         ),
         # deterministic portable HLL: the md5-derived register table is
         # itself the driver-checked artifact (unlike the opaque native
@@ -5605,6 +5694,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             profiling.theta_estimates_oracle(),
             headline=True,
+            bnlj_bounded="1-row sketch-state rows broadcast",
         ),
         # Lee-et-al-style cross-document duplicated-substring spans:
         # fixed-length char grams every stride chars, flagged when the
@@ -5614,6 +5704,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: dedup.substring_span_stats(s.table("documents")),
             dedup.substring_span_stats_oracle(),
             headline=True,
+            max_exchanges=4,
         ),
         # CCNet-style cross-document segment dedup: drop every
         # copy of a segment seen in >=2 docs and fingerprint the cleaned
@@ -5623,6 +5714,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: dedup.segment_dedup(s.table("documents")),
             dedup.segment_dedup_oracle(),
             headline=True,
+            max_exchanges=4,
         ),
         # fixed-point PageRank centrality over a bounded-degree LSH
         # similarity graph: the link-analysis quality signal
@@ -5634,6 +5726,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             graph.pagerank_oracle(graph.knn_edges_oracle_cte(), iterations=3),
             headline=True,
+            max_exchanges=9,
         ),
         # per-node triangle counts over the same similarity graph:
         # the duplicate-community density signal, via
@@ -5656,6 +5749,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: similarity.hard_negatives(s.table("embeddings")),
             similarity.hard_negatives_oracle(),
             headline=True,
+            bnlj_bounded="sampled query side broadcast (brute baseline)",
         ),
         # GPT-3/PaLM-style n-gram decontamination through a broadcast
         # Bloom bit array: the training-side membership test is a pure
@@ -5665,6 +5759,11 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: dedup.bloom_ngram_decontaminate(s.table("documents")),
             dedup.bloom_ngram_decontaminate_oracle(),
             headline=True,
+            bnlj_bounded=(
+                "1-row Bloom bit-array broadcast (GPT-3-style "
+                "decontamination)"
+            ),
+            max_exchanges=8,
         ),
         # JSON-lines write -> schema-on-read -> aggregate (source path)
         "source_orc_roundtrip": Workload(
@@ -5698,6 +5797,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
         "pipeline_semantic_curation": Workload(
             _pipeline_semantic_curation, _pipeline_semantic_oracle(),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast",
+            max_exchanges=11,
         ),
         # perplexity-proxy quality score: mean unigram logprob under the
         # corpus's own top-V distribution (CCNet-style filter stand-in)
@@ -5705,6 +5806,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: text.unigram_logprob(s.table("documents")),
             text.unigram_logprob_oracle(),
             headline=True,
+            bnlj_bounded="1-row total-count aggregate broadcast",
         ),
         # interpolated-bigram LM scoring: one step closer to
         # the CCNet KenLM gate — Jelinek-Mercer lam*P(w|prev) +
@@ -5715,6 +5817,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: text.bigram_interp_logprob(s.table("documents")),
             text.bigram_interp_logprob_oracle(),
             headline=True,
+            bnlj_bounded="1-row total-count aggregate broadcast",
+            max_exchanges=14,
         ),
         # classifier TRAINING: full-batch logistic GD over
         # hashed-gram count features, label = lang=='en'; exact integer
@@ -5725,6 +5829,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: text.lr_train_hashed(s.table("documents")),
             text.lr_train_hashed_oracle(),
             headline=True,
+            bnlj_bounded="1-row gradient/weight state broadcast per step",
+            max_exchanges=46,
         ),
         # BPE merge-rule training — the tokenizer-training step
         # on the same engine (Sennrich 2016); bounded word-shape table,
@@ -5751,12 +5857,14 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: timeseries.funnel(s.table("events")),
             timeseries.funnel_oracle(),
             headline=True,
+            max_exchanges=1,
         ),
         # weekly cohort retention curve substrate
         "ts_cohort_retention": Workload(
             lambda s: timeseries.cohort_retention(s.table("events")),
             timeseries.cohort_retention_oracle(),
             headline=True,
+            max_exchanges=4,
         ),
         # incremental corpus update: new batch deduped against the
         # existing corpus (exact md5 anti-join -> LSH candidates vs the
@@ -5768,12 +5876,15 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             dedup.incremental_dedup_oracle(),
             headline=True,
+            max_exchanges=24,
         ),
         # market-basket pair affinity with lift (per-basket-bounded
         # self-join; rounded-lift TakeOrdered)
         "affinity_basket_pairs": Workload(
             lambda s: affinity.basket_pairs(s.table("lineitem")),
             affinity.basket_pairs_oracle(),
+            bnlj_bounded="1-row total-baskets aggregate broadcast",
+            max_exchanges=19,
         ),
         # type-2 SCD merge: changed keys close their open version and
         # append a new one; history stays immutable
@@ -5838,6 +5949,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 "c_custkey", ["c_name", "c_acctbal"],
             ),
             headline=True,
+            max_exchanges=3,
         ),
         # event-time lateness histogram — per-key running-max
         # window in exact integer microseconds + bounded-bucket reduce;
@@ -5864,6 +5976,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 tie_col="event_id",
             ),
             headline=True,
+            max_exchanges=2,
         ),
         # time-weighted average under LOCF — the
         # irregular-sampling mean (TimescaleDB time_weight shape);
@@ -5873,6 +5986,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: timeseries.time_weighted_avg(s.table("events")),
             timeseries.time_weighted_avg_oracle(),
             headline=True,
+            max_exchanges=1,
         ),
         # PMI collocation mining — sliding-window
         # co-occurrence pairs ranked by pointwise mutual information;
@@ -5882,6 +5996,11 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: text.pmi_collocations(s.table("documents")),
             text.pmi_collocations_oracle(),
             headline=True,
+            bnlj_bounded=(
+                "1-row pair/token-totals broadcast over the checkpointed "
+                "co-occurrence counts — bounded by construction"
+            ),
+            max_exchanges=6,
         ),
         # per-COLUMN snapshot drift audit — null-rate bp,
         # exact distinct counts, 1e-3 fixed-point means per column
@@ -5907,6 +6026,11 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 numeric_cols=["value_n", "user_id"],
             ),
             headline=True,
+            bnlj_bounded=(
+                "1-row baseline x 1-row current aggregate cross — bounded by "
+                "construction (the corpus collapsed in the 2-group agg above)"
+            ),
+            max_exchanges=5,
         ),
         # nearest-direction as-of join — the third merge_asof
         # direction (backward/forward exist above); both candidates
@@ -5933,6 +6057,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 value_cols=["value"], tolerance_s=86400,
             ),
             headline=True,
+            max_exchanges=1,
         ),
         # SCD2 point-in-time lookup — THE consumption pattern
         # for versioned history: fold the events CDC feed into an SCD2
@@ -5948,6 +6073,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                      F.col("dim_event_type")),
             _scd2_pointlookup_oracle(),
             headline=True,
+            max_exchanges=1,
         ),
         # type-1 upsert (batch MERGE): updated customer rows replace
         # same-key rows, the standing table never shuffles
@@ -6040,6 +6166,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             timeseries.mergeable_rollup_oracle(),
             headline=True,
+            max_exchanges=2,
         ),
         # STREAMING driver-visible workload (first CORRECTNESS row whose
         # compute path goes through a streaming query): events split
@@ -6060,6 +6187,10 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             _streaming_drift_psi_result,
             _STREAMING_DRIFT_PSI_ORACLE,
             headline=True,
+            bnlj_bounded=(
+                "1-row reference-total aggregate broadcast over the "
+                "days x buckets grid"
+            ),
         ),
         # STREAMING k-means model maintenance: the MODEL
         # state-algebra class (batch contribution depends on observed
@@ -6198,6 +6329,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 target_where="lang = 'de'", temperature=0.05
             ),
             headline=True,
+            bnlj_bounded="1-row weight-normalizer broadcast",
+            max_exchanges=36,
         ),
         # corpus top-k word bigrams: in-row zip_with pairing (no
         # positional self-join), map-side-combined count, TakeOrdered
@@ -6216,6 +6349,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             text.dsir_weights_oracle(target_where="lang = 'de'"),
             headline=True,
+            bnlj_bounded="1-row weight-normalizer broadcast",
+            max_exchanges=17,
         ),
         # Okapi BM25 top-k retrieval, explode-free (per-row tf for the
         # fixed query; 1-row corpus stats broadcast; TakeOrdered top-k)
@@ -6225,6 +6360,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             text.bm25_topk_oracle(["hash", "join", "vector"], k=25),
             headline=True,
+            bnlj_bounded="1-row corpus-stats aggregate broadcast",
         ),
         # SentencePiece-style unigram-LM tokenizer training
         # (hard-EM Viterbi prune loop over a substring seed vocab;
@@ -6234,6 +6370,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: text.unigram_lm_train(s.table("documents")),
             text.unigram_lm_train_oracle(),
             headline=True,
+            max_exchanges=0,
         ),
         # the unigram family's serving half — Viterbi
         # tokenization under the trained vocab over the distinct-word
@@ -6246,6 +6383,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             text.unigram_encode_oracle(),
             headline=True,
+            max_exchanges=3,
         ),
         # curriculum binning — quality-ranked equal-count
         # tiers via ntile (one range exchange, deterministic id
@@ -6256,6 +6394,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             sampling.curriculum_buckets_oracle(
                 text.quality_score_oracle()),
             headline=True,
+            max_exchanges=1,
         ),
         # per-group winsorization audit — exact percentile
         # bounds (1e-6-snapped before clipping), broadcast bounds join,
@@ -6264,6 +6403,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: profiling.winsorize_stats(s.table("events")),
             profiling.winsorize_stats_oracle(),
             headline=True,
+            max_exchanges=3,
         ),
         # cross-source duplication matrix — the provenance
         # view over the verified MinHash near-dup pairs (pair-bounded
@@ -6272,6 +6412,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             lambda s: dedup.cross_source_matrix(s.table("documents")),
             dedup.cross_source_matrix_oracle(),
             headline=True,
+            max_exchanges=19,
         ),
         # inter-labeler agreement (Cohen's kappa) between the
         # thresholded hashed-ngram classifier and the lang label —
@@ -6281,6 +6422,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 s.table("documents"), text.make_hash_weights(s)),
             text.label_agreement_oracle(),
             headline=True,
+            max_exchanges=4,
         ),
         # per-dimension embedding stats (collapse/staleness
         # audit) — fixed-point moment sums, one dims-group aggregate
@@ -6289,6 +6431,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 s.table("embeddings")),
             profiling.embedding_dim_stats_oracle(),
             headline=True,
+            max_exchanges=1,
         ),
         # tokenizer fertility audit — tokens/word per lang
         # under the trained BPE rules (bpe_encode's plan + one
@@ -6300,6 +6443,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             text.tokenizer_fertility_oracle(),
             headline=True,
+            max_exchanges=5,
         ),
         # regex PII scrub (emails/IPs/phones counted then
         # masked, zero-shuffle narrow map). The fixture text carries no
@@ -6341,6 +6485,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             "    FROM documents\n"
             ")\n" + text.pii_scrub_oracle(table="src"),
             headline=True,
+            max_exchanges=0,
         ),
         # the OTHER standard hybrid fusion — weighted min-max
         # score fusion (rank-insensitive, keeps score margins where RRF
@@ -6355,6 +6500,12 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 ["hash", "join", "vector"], query_vec_id=0,
             ),
             headline=True,
+            bnlj_bounded=(
+                "same bounded shapes as the RRF row: bm25's 1-row "
+                "corpus-stats broadcast + cosine_topk's single broadcast "
+                "query row; fusion windows run over the two <=depth-row lists"
+            ),
+            max_exchanges=5,
         ),
         # hybrid retrieval fusion — BM25 top-depth + cosine
         # top-depth fused by reciprocal-rank (Cormack et al. 2009),
@@ -6370,6 +6521,12 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
                 ["hash", "join", "vector"], query_vec_id=0,
             ),
             headline=True,
+            bnlj_bounded=(
+                "both halves' allowlisted shapes: bm25's 1-row corpus-stats "
+                "broadcast + cosine_topk's single broadcast query row; the "
+                "fusion itself is a union of two <=depth-row lists"
+            ),
+            max_exchanges=6,
         ),
         # deterministic per-group cap (class balancing; WindowGroupLimit)
         "sample_capped_per_group": Workload(
@@ -6434,6 +6591,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             similarity.ivf_topk_trained_oracle(),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast",
+            max_exchanges=18,
         ),
         # the full IVF-PQ composition: coarse kmeans probe (nprobe
         # cells) -> fixed-point asymmetric-distance shortlist over PQ
@@ -6446,6 +6605,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             similarity.ivf_pq_topk_oracle(),
             headline=True,
+            bnlj_bounded="codebook + PQ table broadcast (k*256 entries)",
+            max_exchanges=28,
         ),
         # SQ8 scalar-quantized search: int8 codes, EXACT
         # integer-dot shortlist (order-free without fixed-point — int8
@@ -6458,6 +6619,7 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             similarity.sq8_topk_oracle(),
             headline=True,
+            bnlj_bounded="capped query-set broadcast (brute baseline)",
         ),
         # IVF-SQ8 composition: trained coarse cells bound
         # WHICH vectors are scored, SQ8 codes bound how much is READ
@@ -6470,6 +6632,8 @@ FROM documents WHERE doc_id < 40 AND text IS NOT NULL
             ),
             similarity.ivf_sq8_topk_oracle(),
             headline=True,
+            bnlj_bounded="1-row centroid codebook broadcast",
+            max_exchanges=15,
         ),
     }
 

@@ -4,7 +4,10 @@
 Usage: python scripts/explain_workload.py <workload> [sf_dir] [--full] [--jobs]
 
 Prints the audit_plan summary (pushdown, pruning, exchange/broadcast
-counts, red flags) and, with --full, the formatted physical plan.
+counts, red flags) with the workload's declared plan contract next to
+the counts it bounds (pin a new row's ``max_exchanges`` from its
+``exchanges`` line at sf0.001) and, with --full, the formatted physical
+plan.
 
 With --jobs it instead runs the workload once to warm up, then once
 more, and prints the Spark jobs, stages and tasks of that second run,
@@ -31,7 +34,7 @@ def main() -> None:
 
     from datafusion_sqlgen_spark import get_spark
     from datafusion_sqlgen_spark.plans.audit import audit_plan
-    from datafusion_sqlgen_spark.workloads import build_queries
+    from datafusion_sqlgen_spark.workloads import build_queries, catalog
 
     spark = get_spark(app_name="explain-workload", cpus=8,
                       shuffle_partitions=8,
@@ -45,12 +48,15 @@ def main() -> None:
         print_jobs(spark, name, queries[name], sf_dir)
         return
     a = audit_plan(queries[name](spark, sf_dir))
+    w = catalog()[name]
     print(f"workload            {name}")
-    print(f"shuffle exchanges   {a.n_exchanges}")
+    print(f"exchanges           {a.n_exchanges:<4} "
+          f"budget {w.max_exchanges if w.max_exchanges is not None else '-'}")
     print(f"broadcast exchanges {a.n_broadcasts}")
     print(f"broadcast joins     {a.n_broadcast_joins}")
     print(f"sort-merge joins    {a.n_sort_merge_joins}")
-    print(f"nested-loop joins   {a.n_nested_loop_joins}")
+    print(f"nested-loop joins   {a.n_nested_loop_joins:<4} "
+          f"bounded: {w.bnlj_bounded or '- (undeclared)'}")
     print(f"cartesian product   {a.has_cartesian}")
     print(f"python eval         {a.has_python_eval}")
     print(f"whole-stage codegen {a.has_whole_stage_codegen}")

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Driver-mimic correctness sweep: run every ``queries()`` entry on Spark
-and its ``oracle_sql()`` on DuckDB at the same sf dir, compare row count,
-sorted-by-name schema, and values (sorted rows, tolerant float compare —
-a stricter local stand-in for the driver's value hash).
+and its ``oracle_sql()`` on DuckDB at the same sf dir, and compare them
+with ``registry.oracle_mismatch`` — the driver-strength rule tier-1's
+catalog gate applies at sf0.001 (column names, row count, dtype kind,
+floats within rtol 1e-6, everything else exact).
 
 Usage: python scripts/oracle_sweep.py [sf_dir] [query ...]
 """
@@ -15,26 +16,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-import numpy as np
-import pandas as pd
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def _kind(series: pd.Series) -> str:
-    """Coarse dtype kind for driver-strength comparison: the driver's
-    value hash formats cells, so int vs float is a real mismatch while
-    int32 vs int64 is not."""
-    dt = series.dtype
-    if pd.api.types.is_bool_dtype(dt):
-        return "bool"
-    if pd.api.types.is_integer_dtype(dt):
-        return "int"
-    if pd.api.types.is_float_dtype(dt):
-        return "float"
-    if pd.api.types.is_datetime64_any_dtype(dt):
-        return "datetime"
-    return "obj"
 
 
 def main() -> None:
@@ -42,7 +23,8 @@ def main() -> None:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
-    from datafusion_sqlgen_spark import get_spark, register_tables
+    from datafusion_sqlgen_spark import TABLES, get_spark, register_tables
+    from datafusion_sqlgen_spark.registry import oracle_mismatch
 
     # keep ok/FAIL lines greppable: the console progress bar's \r glues
     # itself onto result lines otherwise (static conf — must be set at
@@ -66,70 +48,15 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
-            sdf = queries[name](spark, sf_dir).toPandas()
+            got = queries[name](spark, sf_dir).toPandas()
+            why = oracle_mismatch(got, con.execute(oracles[name]).df())
         except Exception as ex:  # noqa: BLE001
+            why = f"error {ex!r}"
+        if why is None:
+            print(f"ok    {name}: {len(got)} rows, values match")
+        else:
             failures.append(name)
-            print(f"FAIL  {name}: spark error {ex!r}"[:300])
-            continue
-        if name not in oracles:
-            print(f"ok    {name}: rows-only ({len(sdf)} rows)")
-            continue
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception as ex:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error {ex!r}"[:300])
-            continue
-        scols, ocols = sorted(sdf.columns), sorted(odf.columns)
-        if scols != ocols:
-            failures.append(name)
-            print(f"FAIL  {name}: schema {scols} vs {ocols}")
-            continue
-        if len(sdf) != len(odf):
-            failures.append(name)
-            print(f"FAIL  {name}: rows {len(sdf)} vs {len(odf)}")
-            continue
-        # normalize datetime units (Spark→ns, DuckDB→us) so the value
-        # compare isn't a unit-mismatch artifact
-        for df in (sdf, odf):
-            for c in df.columns:
-                if pd.api.types.is_datetime64_any_dtype(df[c]):
-                    df[c] = df[c].astype("datetime64[us]")
-        s = sdf[scols].sort_values(scols).reset_index(drop=True)
-        o = odf[ocols].sort_values(ocols).reset_index(drop=True)
-        # dtype-KIND gate (driver-strength): the driver's value hash
-        # formats cell values, so DuckDB HUGEINT→float64 ("0.0") vs
-        # Spark bigint ("0") hash-mismatches even when values are
-        # numerically equal. check_dtype=False was blind to exactly
-        # that class (shipped two r4 reds); compare kinds explicitly.
-        kind_errs = []
-        for c in scols:
-            sk, ok_ = _kind(s[c]), _kind(o[c])
-            if sk != ok_:
-                kind_errs.append(f"{c}: spark {sk} vs oracle {ok_}")
-        if kind_errs:
-            failures.append(name)
-            print(f"FAIL  {name}: dtype-kind {kind_errs}"[:300])
-            continue
-        try:
-            for c in scols:
-                if _kind(s[c]) == "float":
-                    pd.testing.assert_series_equal(
-                        s[c], o[c], check_dtype=False, check_exact=False,
-                        rtol=1e-6, atol=1e-9, check_names=False,
-                    )
-                else:
-                    # integer/string/bool/datetime: the driver hash is
-                    # exact here — so are we
-                    pd.testing.assert_series_equal(
-                        s[c], o[c], check_dtype=False, check_exact=True,
-                        check_names=False,
-                    )
-            print(f"ok    {name}: {len(sdf)} rows, values match")
-        except AssertionError as ex:
-            failures.append(name)
-            msg = str(ex).replace("\n", " | ")[:260]
-            print(f"FAIL  {name}: {msg}")
+            print(f"FAIL  {name}: {why}"[:300])
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     sys.exit(1 if failures else 0)
@@ -137,7 +64,3 @@ def main() -> None:
 
 if __name__ == "__main__":
     main()
-
-# NaN-safe note: sort_values puts NaN last consistently on both sides;
-# assert_frame_equal treats NaN == NaN, matching the driver's hash of
-# canonicalized nulls.

@@ -32,11 +32,10 @@ def _release_session_scope():
 def duck():
     import duckdb
 
+    from datafusion_sqlgen_spark.catalog import TABLES
+
     con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
+    for name in TABLES:
         path = os.path.join(SF_DIR, f"{name}.parquet")
         if os.path.exists(path):
             con.execute(

@@ -211,11 +211,11 @@ def test_catalog_reparse_preserves_semantics():
 
     import duckdb as _duckdb
 
+    from datafusion_sqlgen_spark.catalog import TABLES
     from tests.conftest import SF_DIR
 
     con = _duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
+    for t in TABLES:
         path = os.path.join(SF_DIR, f"{t}.parquet")
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"

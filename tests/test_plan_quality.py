@@ -7,20 +7,13 @@ group-limit pushdown, and aggregations combine map-side. A regression
 here is a scale bug even while every value still matches the oracle.
 """
 
-import io
-from contextlib import redirect_stdout
-
 import pytest
 
+from datafusion_sqlgen_spark.plans.audit import (
+    audit_plan, executed_plan, plan_text,
+)
 from datafusion_sqlgen_spark.workloads import build_queries
 from tests.conftest import SF_DIR
-
-
-def plan_text(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 @pytest.fixture(scope="module")
@@ -180,7 +173,7 @@ def test_join_hints_steer_physical_strategy(spark):
             .select(col("o_orderkey"), col("c_name"))
         )
         for df in (p.to_df(spark), spark.sql(p.to_sql("spark"))):
-            phys = df._jdf.queryExecution().executedPlan().toString()
+            phys = executed_plan(df)
             assert marker in phys, f"{hint}: {marker} missing\n{phys[:400]}"
 
 
@@ -215,7 +208,7 @@ def test_profile_columns_is_single_pass(spark):
     df = profiling.profile_columns(
         spark.table("orders"), ["o_orderkey", "o_custkey", "o_orderstatus"]
     )
-    phys = df._jdf.queryExecution().executedPlan().toString()
+    phys = executed_plan(df)
     assert phys.count("Scan parquet") == 1, phys[:600]
     assert df.count() == 3
 
@@ -235,7 +228,7 @@ def test_bucketed_range_join_avoids_nested_loop(spark):
     out = joins.range_join_bucketed(
         left, right, "l_extendedprice", "lo", "hi", 500.0
     ).select("l_orderkey", "l_linenumber", "p_partkey")
-    phys = out._jdf.queryExecution().executedPlan().toString()
+    phys = executed_plan(out)
     assert "NestedLoop" not in phys, phys[:600]
 
     import pyspark.sql.functions as F
@@ -275,10 +268,20 @@ def test_asof_join_single_shuffle_no_join(spark):
         errors, clicks, on="user_id", left_time="ts",
         right_time="ts", value_cols=["value"],
     )
-    phys = out._jdf.queryExecution().executedPlan().toString()
+    phys = executed_plan(out)
     assert "Join" not in phys, phys[:800]
     n_exchanges = phys.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"{n_exchanges} hash exchanges:\n{phys[:800]}"
+
+
+def test_asof_pair_stays_join_free(spark, queries):
+    """Both parsed asof rows keep the union + window shape: no join
+    operator of any kind (their ASOF LEFT desugar once compiled to a
+    nested-loop join over the left key set)."""
+    for name in ("parsed_asof_join", "parsed_asof_left_join"):
+        phys = executed_plan(queries[name](spark, SF_DIR))
+        assert "Join" not in phys, (name, phys[:500])
+        assert "Window" in phys
 
 
 def test_sink_roundtrip_readback_prunes_partitions(spark, queries):
@@ -339,7 +342,7 @@ def test_shared_window_spec_plans_one_window_one_exchange(spark, queries):
     hash exchange — a second exchange would double the shuffle for no
     semantic reason."""
     df = queries["ts_sliding_1h_stats"](spark, SF_DIR)
-    phys = df._jdf.queryExecution().executedPlan().toString()
+    phys = executed_plan(df)
     assert phys.count("Exchange hashpartitioning") == 1, phys[:600]
     assert phys.count("Window") == 1, phys[:600]
 
@@ -445,7 +448,7 @@ def test_c4_filters_single_pass_no_shuffle(spark, queries):
     reduction evaluates ONCE (inline reuse would copy it per flag —
     the simhash/decontaminate staging lesson)."""
     df = queries["text_c4_filters"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "Exchange" not in plan
     assert plan.count("aggregate(") == 1, "length reduction duplicated"
     assert plan.count("split(") == 1, "tokenization duplicated"
@@ -456,7 +459,7 @@ def test_gopher_filters_single_pass_no_shuffle(spark, queries):
     exchanges, and each staged array (words, lines) tokenizes ONCE —
     inline reuse would copy the split into every count column."""
     df = queries["text_gopher_filters"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "Exchange" not in plan
     assert plan.count("aggregate(") == 1, "length reduction duplicated"
     # exactly two tokenizations: words (regex split) + lines (newline)
@@ -526,6 +529,15 @@ def test_recall_at_k_broadcasts_queries(spark, queries):
     txt = plan_text(queries["sim_recall_at_k"](spark, SF_DIR))
     assert txt.count("BroadcastExchange") >= 2
     assert "CartesianProduct" not in txt
+
+
+def test_lsh_bucketed_topk_joins_once(spark, queries):
+    """The LSH tier's bucket is a per-row expression of the vector, so
+    the only join is the broadcast query side probing the corpus on its
+    bucket — no join back to the bucket table by id."""
+    a = audit_plan(queries["sim_cosine_topk_bucketed"](spark, SF_DIR))
+    assert a.n_broadcast_joins == 1, a.plan_text[:2000]
+    assert a.n_sort_merge_joins == 0 and a.n_nested_loop_joins == 0
 
 
 def test_kmeans_broadcasts_centroids_each_iteration(spark, queries):
@@ -885,7 +897,7 @@ def test_ann_join_neither_corpus_broadcasts(spark, queries):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         df = queries["sim_ann_join"](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "CartesianProduct" not in plan
