@@ -871,9 +871,9 @@ class Func(Expr):
             return spark_agg_column(name, cols, distinct=self.distinct)
         if self.ignore_nulls:
             cols = [a.to_column() for a in self.args]
-            if name == "last_value":
+            if name in ("last", "last_value"):
                 return F.last(cols[0], ignorenulls=True)
-            if name == "first_value":
+            if name in ("first", "first_value"):
                 return F.first(cols[0], ignorenulls=True)
             if name == "nth_value":
                 return F.nth_value(cols[0], self.args[1].value, ignoreNulls=True)

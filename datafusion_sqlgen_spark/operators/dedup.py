@@ -304,7 +304,8 @@ def embedding_near_dup(
     """Embedding-cosine near-duplicate pairs, LSH-bucketed.
 
     The O(n²) pair join is restricted to sign-projection LSH buckets
-    (``similarity.lsh_buckets``): the self-join key is the bucket id, so
+    (``similarity._lsh_bucket``, a per-row column, so no vector joins
+    back to its own bucket by id): the self-join key is the bucket id, so
     the shuffle is one hash-partition on a small int key and each bucket
     compares only its own members — the scale path for pairwise dedup.
     Recall is bounded by the bucketing (near-dups with opposite sign bits
@@ -312,14 +313,15 @@ def embedding_near_dup(
     neighbor buckets, same plumbing. Output: (id_a, id_b, cos_sim) pairs
     with cosine ≥ threshold."""
     from datafusion_sqlgen_spark.operators.similarity import (
+        _lsh_bucket,
         _norm,
         cosine_pre,
-        lsh_buckets,
     )
 
     # norm computed once per vector, not once per pair: pair count is
     # quadratic in bucket size, so per-pair array passes dominate
-    bucketed = lsh_buckets(df, b, id_col, vec_col).join(df, id_col)
+    bucketed = df.select(F.col(id_col), F.col(vec_col),
+                         _lsh_bucket(b, vec_col).alias("bucket"))
     a = bucketed.select(
         F.col(id_col).alias("id_a"), F.col("bucket"), F.col(vec_col).alias("vec_a"),
         _norm(F.col(vec_col)).alias("norm_a"),

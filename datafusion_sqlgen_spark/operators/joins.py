@@ -7,7 +7,7 @@ BASELINE.json north star.
 
 Both are *compositions of built-in DataFrame ops* (option (a) of the
 custom-operator ladder) so Catalyst keeps full visibility: the as-of
-join is a non-equi join + max_by aggregation, the range join is a plain
+joins are a union + last-non-null window, the range join is a plain
 non-equi condition that Spark executes as broadcast-nested-loop (keep
 the broadcast side small) — at scale you bucket the time axis first.
 """
@@ -19,6 +19,39 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from datafusion_sqlgen_spark.materialize import materialize
+
+
+def _asof_union(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    left_time: str,
+    right_time: str,
+    value_cols: list[str],
+) -> DataFrame:
+    """The union both as-of operators window over: every left row with
+    ``__ts`` = its time and ``__is_r`` = 0, and every right row with a
+    non-NULL key and time as (key, ``__ts``, ``__p``, ``__is_r`` = 1),
+    its payload ``__p`` a struct of the right time (``__t``) and
+    ``value_cols``. Null keys / null times never match in join
+    semantics; dropping them right-side keeps the null-key window
+    partition from pairing them with left rows."""
+    payload = F.struct(
+        F.col(right_time).alias("__t"),
+        *[F.col(c).alias(c) for c in value_cols],
+    )
+    r2 = (
+        right
+        .filter(F.col(on).isNotNull() & F.col(right_time).isNotNull())
+        .select(
+            F.col(on),
+            F.col(right_time).alias("__ts"),
+            payload.alias("__p"),
+            F.lit(1).alias("__is_r"),
+        )
+    )
+    l2 = left.withColumn("__ts", F.col(left_time)).withColumn("__is_r", F.lit(0))
+    return l2.unionByName(r2, allowMissingColumns=True)
 
 
 def asof_join(
@@ -56,24 +89,7 @@ def asof_join(
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, not {direction!r}")
-    payload = F.struct(
-        F.col(right_time).alias("__t"),
-        *[F.col(c).alias(c) for c in value_cols],
-    )
-    r2 = (
-        right
-        # null keys / null times never match in join semantics; drop them
-        # so the null-key window partition can't pair them with left rows
-        .filter(F.col(on).isNotNull() & F.col(right_time).isNotNull())
-        .select(
-            F.col(on),
-            F.col(right_time).alias("__ts"),
-            payload.alias("__p"),
-            F.lit(1).alias("__is_r"),
-        )
-    )
-    l2 = left.withColumn("__ts", F.col(left_time)).withColumn("__is_r", F.lit(0))
-    u = l2.unionByName(r2, allowMissingColumns=True)
+    u = _asof_union(left, right, on, left_time, right_time, value_cols)
     tie = F.col("__is_r").desc() if direction == "backward" else F.col("__is_r").asc()
     w = Window.partitionBy(on).orderBy(F.col("__ts").asc(), tie)
     if direction == "backward":
@@ -164,24 +180,7 @@ def asof_join_nearest(
     beats any forward candidate). No join intermediate ever exists; a
     partition's cost is its own size, and the distance compare is exact
     integer-microsecond INTERVAL arithmetic, never float seconds."""
-    payload = F.struct(
-        F.col(right_time).alias("__t"),
-        *[F.col(c).alias(c) for c in value_cols],
-    )
-    r2 = (
-        right
-        .filter(F.col(on).isNotNull() & F.col(right_time).isNotNull())
-        .select(
-            F.col(on),
-            F.col(right_time).alias("__ts"),
-            payload.alias("__p"),
-            F.lit(1).alias("__is_r"),
-        )
-    )
-    l2 = left.withColumn("__ts", F.col(left_time)).withColumn(
-        "__is_r", F.lit(0)
-    )
-    u = l2.unionByName(r2, allowMissingColumns=True)
+    u = _asof_union(left, right, on, left_time, right_time, value_cols)
     # one sort order serves both windows: rights before lefts at equal
     # __ts, so [unbounded, current] sees the at-or-before match and
     # [current, unbounded] sees only strictly-after rights

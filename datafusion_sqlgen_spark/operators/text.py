@@ -1599,17 +1599,9 @@ def ngram_counts(
     semantics, which is itself part of the check."""
     if n != 2:
         raise NotImplementedError("word bigrams only (n=2)")
-    w = words_col(F.col(text_col))
-    pairs = F.zip_with(
-        w,
-        F.slice(w, 2, F.greatest(F.size(w) - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
     return (
-        df.select(F.explode(pairs).alias("ngram"))
-        # zip_with pads the tail with NULL -> concat_ws drops the null
-        # side, leaving a bare first word: real bigrams contain a space
-        .filter(F.col("ngram").contains(" "))
+        df.select(F.explode(_bigrams(words_col(F.col(text_col))))
+                  .alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("ngram").asc())
@@ -1769,27 +1761,9 @@ def classifier_score(
     engine-stable floor formula; ``label`` thresholds the RAW score."""
     from datafusion_sqlgen_spark.operators.similarity import _stable_round
 
-    w = words_col(F.col(text_col))
-    unigrams = F.filter(w, lambda g: g != F.lit(""))
-    bigrams_raw = F.zip_with(
-        w,
-        F.slice(w, 2, F.greatest(F.size(w) - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    # zip_with pads the tail: the last element is a bare word, not a
-    # bigram — real bigrams contain the joining space
-    bigrams = F.filter(bigrams_raw, lambda g: g.contains(" "))
-    grams = F.concat(unigrams, bigrams)
-    exploded = df.select(F.col(id_col), F.explode(grams).alias("gram"))
-    bucketed = exploded.select(
-        F.col(id_col),
-        (
-            F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10)
-            .cast("bigint") % vocab_size
-        ).cast("int").alias("bucket"),
-    )
     agg = (
-        bucketed.join(F.broadcast(weights), "bucket")
+        _hashed_grams(df, vocab_size, text_col, id_col)
+        .join(F.broadcast(weights), "bucket")
         .groupBy(id_col)
         .agg(
             F.sum("w_fp").alias("__sfp"),
@@ -1856,30 +1830,44 @@ def classifier_score_oracle(
     FROM a"""
 
 
-def _hashed_gram_features(
-    df: DataFrame, vocab_size: int, text_col: str, id_col: str
-) -> DataFrame:
-    """(doc_id, bucket, cnt) count features over hashed word uni+bigrams
-    — classifier_score's gram pipeline, aggregated to counts so the
-    training loop touches one narrow row per distinct (doc, bucket)."""
-    w = words_col(F.col(text_col))
-    unigrams = F.filter(w, lambda g: g != F.lit(""))
-    bigrams_raw = F.zip_with(
+def _bigrams(w: Column) -> Column:
+    """Adjacent-word pairs of the words array ``w``, built in-row:
+    ``zip_with`` against the shifted self, no positional explode."""
+    pairs = F.zip_with(
         w,
         F.slice(w, 2, F.greatest(F.size(w) - 1, F.lit(0))),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-    bigrams = F.filter(bigrams_raw, lambda g: g.contains(" "))
-    grams = F.concat(unigrams, bigrams)
+    # zip_with pads the tail with NULL -> concat_ws drops the null side,
+    # leaving a bare last word: real bigrams contain the joining space
+    return F.filter(pairs, lambda g: g.contains(" "))
+
+
+def _hashed_grams(
+    df: DataFrame, vocab_size: int, text_col: str, id_col: str
+) -> DataFrame:
+    """(id, bucket) per word uni+bigram occurrence, the bucket being
+    the gram's md5 prefix mod ``vocab_size`` — the hashed-ngram
+    features of classifier_score and lr_train_hashed."""
+    w = words_col(F.col(text_col))
+    grams = F.concat(F.filter(w, lambda g: g != F.lit("")), _bigrams(w))
+    return df.select(F.col(id_col), F.explode(grams).alias("gram")).select(
+        F.col(id_col),
+        (
+            F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10)
+            .cast("bigint") % vocab_size
+        ).cast("int").alias("bucket"),
+    )
+
+
+def _hashed_gram_features(
+    df: DataFrame, vocab_size: int, text_col: str, id_col: str
+) -> DataFrame:
+    """(doc_id, bucket, cnt) count features over hashed word uni+bigrams
+    — ``_hashed_grams`` aggregated to counts so the training loop
+    touches one narrow row per distinct (doc, bucket)."""
     return (
-        df.select(F.col(id_col), F.explode(grams).alias("gram"))
-        .select(
-            F.col(id_col),
-            (
-                F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10)
-                .cast("bigint") % vocab_size
-            ).cast("int").alias("bucket"),
-        )
+        _hashed_grams(df, vocab_size, text_col, id_col)
         .groupBy(id_col, "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )

@@ -2420,13 +2420,13 @@ class _Parser:
         ``ASOF LEFT JOIN`` keeps unmatched left rows NULL-padded.
 
         Parses into the first-class ``AsofJoin`` node (plans/core.py):
-        ``to_df`` executes the one-shuffle union+window shape (the
-        ``operators.joins.asof_join`` contract — no join operator in
-        the physical plan at all; a lateral-LIMIT-1 shape would compile
-        to a BroadcastNestedLoopJoin), and ``to_sql("duckdb")`` renders
-        native ASOF. The Spark dialect has no ASOF keyword, so
-        ``to_sql("spark")`` renders the same union+window shape as text
-        (``AsofJoin._spark_desugar``)::
+        ``to_sql("duckdb")`` renders native ASOF. The Spark dialect has
+        no ASOF keyword, so the node's one Spark implementation is the
+        one-shuffle union+window shape of ``operators.joins.asof_join``
+        built as plan IR (``AsofJoin._spark_desugar`` — no join
+        operator in the physical plan at all; a lateral-LIMIT-1 shape
+        would compile to a BroadcastNestedLoopJoin), which
+        ``to_sql("spark")`` renders as text and ``to_df`` executes::
 
             left rows  (struct(l.*) AS __l, keys, l.ts AS __ts, NULL AS __p)
             UNION ALL

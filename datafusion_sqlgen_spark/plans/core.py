@@ -39,6 +39,7 @@ from datafusion_sqlgen_spark.expressions.core import (
     Case,
     Col,
     Expr,
+    Field,
     Func,
     IsNotNull,
     Lit,
@@ -346,80 +347,32 @@ class Project(Plan):
         exprs = self.exprs
         if dialect != DUCKDB:
             asof = _asof_below(self.input)
-            if asof is not None and any(
-                isinstance(e, Star)
-                and e.table in (None, "", asof.rname, asof._left_name())
-                for e in exprs
-            ):
-                # the spark desugar carries the matched right row as ONE
-                # struct column named rname, so a bare star would
-                # surface the struct while to_df and the native DuckDB
-                # render flatten it — rewrite the star to
-                # `* EXCEPT (rname), rname.*` (left cols then right
-                # fields, same shape as the other two paths)
-                rn = asof.rname
-                out = []
-                for e in exprs:
-                    if not (isinstance(e, Star)
-                            and e.table in (None, "", rn,
-                                            asof._left_name())):
-                        out.append(e)
-                    elif e.table == rn:
-                        out.append(e)  # rname.* expands the struct
-                    else:
-                        if e.except_cols:
-                            # a user except list cannot be split
-                            # between the two arms without the schema
-                            # (a left-only name in `rname.* EXCEPT`
-                            # — or vice versa — is an analysis error),
-                            # so fail closed instead of emitting SQL
-                            # that breaks on one side (review r12 #1)
-                            raise ValueError(
-                                "star EXCEPT/EXCLUDE over an ASOF "
-                                "join has no schema-free Spark-SQL "
-                                "render — run it via to_df, or list "
-                                "the wanted columns explicitly"
-                            )
-                        out.append(replace(e, except_cols=(rn,)))
-                        if e.table in (None, ""):
-                            out.append(Star(table=rn))
-                exprs = tuple(out)
+            out = []
+            for e in exprs:
+                arms = _asof_star(e, asof)
+                if arms and e.except_cols:
+                    # a user except list cannot be split between the
+                    # two arms without the schema (a left-only name in
+                    # `rname.* EXCEPT` — or vice versa — is an analysis
+                    # error), so fail closed instead of emitting SQL
+                    # that breaks on one side
+                    raise ValueError(
+                        "star EXCEPT/EXCLUDE over an ASOF join has no "
+                        "schema-free Spark-SQL render — run it via "
+                        "to_df, or list the wanted columns explicitly"
+                    )
+                out.extend(arms or (e,))
+            exprs = tuple(out)
         state.projection = [e.to_sql(dialect) for e in exprs]
         return state
 
     def to_df(self, spark: SparkSession) -> DataFrame:
         df = self.input.to_df(spark)
         asof = _asof_below(self.input)
+        exprs = [a for e in self.exprs for a in (_asof_star(e, asof) or (e,))]
         cols = []
         try:
-            for e in self.exprs:
-                if (isinstance(e, Star) and asof is not None
-                        and e.table in (None, "", asof.rname,
-                                        asof._left_name())):
-                    # AsofJoin's to_df carries the matched right row as
-                    # ONE struct column named by the right alias; both
-                    # SQL renders (native duckdb ASOF, the spark-dialect
-                    # desugar) flatten `*` to left-cols-then-right-cols,
-                    # so expand the star here the same way or the dual
-                    # paths diverge on shape.  _asof_below sees through
-                    # row-preserving wrappers (WHERE/ORDER/LIMIT between
-                    # the Project and the join — review r11 #1).  A
-                    # star qualified by an UNKNOWN alias falls through
-                    # to the generic path so it raises the same
-                    # analysis error the SQL renders raise (review r11
-                    # #3 — silently resolving it to the left columns
-                    # was a crash-vs-value divergence).
-                    rn = asof.rname
-                    drop = set(e.except_cols or ())
-                    lflat = [c for c in df.columns if c != rn]
-                    rfields = [f.name for f in df.schema[rn].dataType.fields]
-                    if e.table in (None, "") or e.table != rn:
-                        cols.extend(F.col(c) for c in lflat
-                                    if c not in drop)
-                    if e.table in (None, "") or e.table == rn:
-                        cols.extend(F.col(f"{rn}.{f}").alias(f)
-                                    for f in rfields if f not in drop)
-                    continue
+            for e in exprs:
                 if isinstance(e, Star):
                     if e.except_cols:
                         # expand star-except against the input schema
@@ -1062,41 +1015,32 @@ class AsofJoin(Plan):
     keyword; neither the reference nor Spark SQL has the syntax —
     reference join surface is the catch-all logical_plan.rs:200-203).
 
-    Three renderings, one per consumer:
+    Two renderings:
 
-    * ``to_df`` — the one-shuffle union + last-non-null-window shape
-      proven by ``operators.joins.asof_join`` (joins.py:22), generalized
-      to multiple equality keys and expression-valued left keys: union
-      both sides keyed on the equality columns, sort each key partition
-      once by timestamp, and take the match with ``last(payload,
-      ignoreNulls)`` (backward) / ``first`` (forward). No join
-      intermediate exists — a partition's cost is its own size, AQE's
-      skew split applies to the single exchange, and unmatched left
-      rows fall out naturally (NULL payload struct IS left-outer
-      semantics; the inner form just filters them away). This replaces
-      the LEFT JOIN LATERAL … LIMIT 1 execution path whose physical
-      plan was a BroadcastNestedLoopJoin (the left key set broadcast,
-      growing with the data — VERDICT r10 "What's wrong" #2).
     * ``to_sql("duckdb")`` — native ``ASOF [LEFT] JOIN`` text with the
       original ON conjunction (DuckDB executes it directly; re-parsing
       it reconstructs this node, so the DuckDB render is a fixpoint at
       the surface form).
-    * ``to_sql("spark")`` — renders the SAME union + window desugar as
-      TEXT (``_spark_desugar`` builds it from ordinary plan/expr IR and
-      the machinery renders it), so ``spark.sql(plan.to_sql("spark"))``
-      plans join-free exactly like ``to_df`` — closing the r11
-      render/plan parity gap (the old render delegated to a
-      lateral-LIMIT-1 fallback whose physical plan was a
-      BroadcastNestedLoopJoin). The left row travels the union as
-      ``struct(l.*)`` so the desugar needs no column list at render
-      time; the final projection re-expands it with ``__l.*``.
+    * Spark — ``_spark_desugar`` builds the one-shuffle union +
+      last-non-null-window shape of ``operators.joins.asof_join`` as
+      ordinary plan IR, generalized to multiple equality keys and
+      expression-valued left keys: union both sides keyed on the
+      equality columns, sort each key partition once by timestamp, and
+      take the match with ``last(payload) IGNORE NULLS`` (backward) /
+      ``first`` (forward). ``to_sql("spark")`` renders that plan as
+      text and ``to_df`` executes it, so both Spark paths run one
+      implementation. No join intermediate exists — a partition's cost
+      is its own size, AQE's skew split applies to the single
+      exchange, and an unmatched left row gets a NULL match struct
+      (left-outer semantics; the inner form filters it away).
 
     Output resolution: left columns keep their names (plus the left
     relation's alias when it has one); the matched right row travels as
     ONE struct column named after the right alias, so ``r.ts`` /
     ``r.pval`` resolve via Spark struct-field access. Right-side
     columns must therefore be referenced *qualified* above an ASOF
-    join (``SELECT *`` would surface the struct itself).
+    join; a star above it expands to the left columns, then the
+    struct's fields (``_asof_star``), as in the native render.
 
     Precondition (standard ASOF, documented not checked): the right
     side is unique on (keys, time) — among exactly-tied right rows both
@@ -1197,10 +1141,11 @@ class AsofJoin(Plan):
         return None
 
     def _spark_desugar(self) -> "Plan":
-        """The union + last-non-null-window desugar as plan IR — the
-        TEXT twin of ``to_df``, rendered by the ordinary machinery so
-        the parse→render fixpoint and the join-free physical plan both
-        come for free. Shape (backward, non-strict)::
+        """The union + last-non-null-window desugar as plan IR: the one
+        Spark implementation of the node. ``to_sql("spark")`` renders it
+        through the ordinary machinery and ``to_df`` executes it, so the
+        parse→render fixpoint and the join-free physical plan hold for
+        both. Shape (backward, non-strict)::
 
             WITH both sides unioned on aligned columns:
               left : struct(l.*) AS __l, keys, l_time AS __ts,
@@ -1213,15 +1158,20 @@ class AsofJoin(Plan):
             keep left rows, guard NULL left timestamps (and the
             tolerance bound when present), re-expand __l.*
 
-        One exchange on the equality keys, no join operator anywhere —
-        identical physical shape to ``to_df``.
-
-        Precondition (documented, unvalidated here — the render has no
-        schema): left columns must not collide with the machinery
-        names (__l/__k*/__ts/__p/__is_r/__tol) or with ``rname``; the
-        DataFrame path (``to_df``) checks the same precondition eagerly
-        and raises, so drive a suspect plan through ``to_df`` first.
+        One exchange on the equality keys, no join operator anywhere.
+        The left row travels inside ``struct(l.*)``, so no left column
+        name can collide with the machinery names; a left column named
+        ``rname`` duplicates the match struct's name (``to_df`` raises).
+        A left side that is a join has no render: the joined relations'
+        qualifiers do not survive the struct.
         """
+        if isinstance(self.left, Join):
+            raise ValueError(
+                "ASOF JOIN after a join has no Spark render: the left "
+                "row travels as one struct, so the joined relations' "
+                "qualifiers do not survive it — wrap the left join in "
+                "an aliased subquery, (SELECT ...) AS l"
+            )
         lname = self._left_name()
         sname = lname or "__asl"
         lsrc = self.left if lname else self.left.alias(sname)
@@ -1238,6 +1188,8 @@ class AsofJoin(Plan):
             # columns — compute it while they are still in scope
             lcols.append(Alias(self.tol_rhs, "__tol"))
         lproj = lsrc.select(*lcols)
+        # null keys / null times never match in join semantics; drop them
+        # right-side so the null-key window partition can't pair them
         rkeep: Expr = IsNotNull(Col(self.r_time, self.rname))
         for rc, _ in self.eqs:
             rkeep = BinOp("AND", rkeep, IsNotNull(Col(rc, self.rname)))
@@ -1254,6 +1206,11 @@ class AsofJoin(Plan):
         rproj = self.right.filter(rkeep).select(*rcols)
         u = lproj.union(rproj).alias("__u")
         backward = self.direction == "backward"
+        # Within equal timestamps, the tie order decides whether an
+        # exactly-equal right row is inside the left row's frame:
+        # non-strict puts right rows on the frame side (before for
+        # backward, after for forward) so equality matches; strict
+        # flips them to the other side so it does not.
         tie_desc = backward != self.strict
         nav = Func("last" if backward else "first", (Col("__p"),),
                    ignore_nulls=True)
@@ -1271,9 +1228,12 @@ class AsofJoin(Plan):
         if self.tol_op is not None:
             stage1.append(Col("__tol"))
         s1 = u.select(*stage1).filter(BinOp("=", Col("__is_r"), Lit(0)))
+        # a NULL left timestamp matches nothing (comparison semantics);
+        # NULL left keys need no guard — their partition holds no right
+        # rows. The tolerance NULLs the nearest match when it falls
+        # outside the window (exact: any farther match is farther out)
         guard: Expr = IsNotNull(Col("__ts"))
         if self.tol_op is not None:
-            from datafusion_sqlgen_spark.expressions.core import Field
             guard = BinOp("AND", guard,
                           BinOp(self.tol_op, Field(Col("__m0"), self.r_time),
                                 Col("__tol")))
@@ -1285,83 +1245,41 @@ class AsofJoin(Plan):
         return out.alias(lname) if lname else out
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql.window import Window
-
-        ldf = self.left.to_df(spark)
-        rdf = self.right.to_df(spark)
-        lcols, rcols = ldf.columns, rdf.columns
-        keys = [f"__k{i}" for i in range(len(self.eqs))]
-        reserved = set(keys) | {"__ts", "__p", "__is_r", "__m", "__tol",
-                                self.rname}
-        clash = reserved & set(lcols)
+        df = self._spark_desugar().to_df(spark)
+        # the left row travels inside struct(l.*), so the one name it
+        # can collide with is the match struct's own, the right alias
+        clash = [c for c in df.columns[:-1]
+                 if c.lower() == self.rname.lower()]
         if clash:
             raise ValueError(
-                f"ASOF JOIN left columns collide with the match "
-                f"machinery / right alias: {sorted(clash)}"
+                f"ASOF JOIN left column {clash[0]!r} collides with the "
+                f"right alias {self.rname!r}, which names the match "
+                f"struct — the output would hold two columns of that "
+                f"name; rename the column or the alias"
             )
-        lsel = [
-            *[F.col(c) for c in lcols],
-            *[lexpr.to_column().alias(k)
-              for (_, lexpr), k in zip(self.eqs, keys)],
-            self.l_time.to_column().alias("__ts"),
-            F.lit(0).alias("__is_r"),
-        ]
-        if self.tol_op is not None:
-            # the tolerance threshold is an expression over LEFT columns
-            # — compute it while the left alias is still in scope
-            lsel.append(self.tol_rhs.to_column().alias("__tol"))
-        l2 = ldf.select(*lsel)
-        # null keys / null times never match in join semantics; drop them
-        # right-side so the null-key window partition can't pair them
-        rkeep = F.col(self.r_time).isNotNull()
-        for rc, _ in self.eqs:
-            rkeep = rkeep & F.col(rc).isNotNull()
-        payload = F.struct(*[F.col(c).alias(c) for c in rcols])
-        r2 = rdf.filter(rkeep).select(
-            *[F.col(rc).alias(k)
-              for (rc, _), k in zip(self.eqs, keys)],
-            F.col(self.r_time).alias("__ts"),
-            payload.alias("__p"),
-            F.lit(1).alias("__is_r"),
-        )
-        u = l2.unionByName(r2, allowMissingColumns=True)
-        backward = self.direction == "backward"
-        # Within equal timestamps, the tie order decides whether an
-        # exactly-equal right row is inside the left row's frame:
-        # non-strict puts right rows on the frame side (before for
-        # backward, after for forward) so equality matches; strict
-        # flips them to the other side so it does not.
-        tie_desc = backward != self.strict
-        tie = F.col("__is_r").desc() if tie_desc else F.col("__is_r").asc()
-        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-            F.col("__ts").asc(), tie)
-        if backward:
-            w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            match = F.last("__p", ignorenulls=True).over(w)
-        else:
-            w = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-            match = F.first("__p", ignorenulls=True).over(w)
-        out = u.withColumn("__m", match).filter(F.col("__is_r") == 0)
-        # a NULL left timestamp matches nothing (comparison semantics);
-        # NULL left keys need no guard — their partition holds no right rows
-        keep = F.col("__ts").isNotNull()
-        if self.tol_op is not None:
-            # merge_asof tolerance: NULL the nearest match when it falls
-            # outside the window (exact — any farther match is farther
-            # outside too). The threshold is an expression over left
-            # columns, still top-level in `out`.
-            ops = {">=": "__ge__", ">": "__gt__",
-                   "<=": "__le__", "<": "__lt__"}
-            keep = keep & getattr(
-                F.col(f"__m.{self.r_time}"), ops[self.tol_op])(
-                    F.col("__tol"))
-        out = out.withColumn("__m", F.when(keep, F.col("__m")))
-        if self.how == "inner":
-            out = out.filter(F.col("__m").isNotNull())
-        res = out.select(*[F.col(c) for c in lcols],
-                         F.col("__m").alias(self.rname))
-        lname = self._left_name()
-        return res.alias(lname) if lname else res
+        return df
+
+
+def _asof_star(e: Expr, asof: Optional["AsofJoin"]) -> Optional[tuple]:
+    """The arms star ``e`` expands to over ``asof`` — the left star
+    ``EXCEPT (rname)``, then ``rname.*`` — or None when ``e`` is not a
+    star over the join. The Spark desugar carries the matched right row
+    as ONE struct column named ``rname``, so a bare star would surface
+    the struct where the native DuckDB render flattens it: ``*`` keeps
+    both arms, the left alias's star the left arm, ``rname.*`` the
+    right one. A user except list applies to both arms. A star
+    qualified by an unknown alias is left alone, so it raises the
+    analysis error the SQL renders raise."""
+    if not (isinstance(e, Star) and asof is not None
+            and e.table in (None, "", asof.rname, asof._left_name())):
+        return None
+    rn = asof.rname
+    arms = []
+    if e.table != rn:
+        arms.append(replace(e, except_cols=(*e.except_cols, rn)))
+    if e.table in (None, "", rn):
+        arms.append(Star(table=rn, except_cols=e.except_cols))
+    return tuple(arms)
 
 
 def _asof_below(p: "Plan") -> Optional["AsofJoin"]:

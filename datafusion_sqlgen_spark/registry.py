@@ -5,12 +5,13 @@ A workload states, where it is defined, how Spark builds it, the DuckDB
 SQL that checks it, whether the bench headline times it and its plan
 contract; ``workloads.catalog()`` collects the records.
 
-The plan contract bounds the executed plan: no CartesianProduct ever; a
-BroadcastNestedLoopJoin only where ``bnlj_bounded`` says why its
-broadcast build side cannot grow with the data (a 1-row aggregate, a
-fixed grid, a capped query set); and, where ``max_exchanges`` is set, at
-most that many exchanges (``plans.audit.exchange_count``) at
-``BUDGET_SCALE``. A budget is pinned at the measured count, never
+The plan contract bounds the executed plan: never a CartesianProduct,
+never row-at-a-time Python (``BatchEvalPython``; the Arrow-batched
+pandas nodes are allowed); a BroadcastNestedLoopJoin only where
+``bnlj_bounded`` says why its broadcast build side cannot grow with the
+data (a 1-row aggregate, a fixed grid, a capped query set); and, where
+``max_exchanges`` is set, at most that many exchanges
+(``plans.audit.exchange_count``) at ``BUDGET_SCALE``. A budget is pinned at the measured count, never
 above it, so any growth is a finding.
 """
 
@@ -56,6 +57,8 @@ def plan_breach(name: str, w: Workload, executed: str) -> str | None:
     breaks ``w``'s plan contract, or None when it keeps it."""
     if "CartesianProduct" in executed:
         return f"{name}: CartesianProduct"
+    if "BatchEvalPython" in executed:
+        return f"{name}: row-at-a-time Python (BatchEvalPython)"
     if "BroadcastNestedLoopJoin" in executed and w.bnlj_bounded is None:
         joins = [ln.strip()[:120] for ln in executed.split("\n")
                  if "BroadcastNestedLoopJoin" in ln]

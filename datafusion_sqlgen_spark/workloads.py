@@ -5286,7 +5286,7 @@ JOIN base c ON c.bucket = e.bucket AND c.event_type = e.event_type
             lambda s: dedup.embedding_near_dup(s.table("embeddings"), b=6),
             dedup.embedding_near_dup_oracle(b=6),
             headline=True,
-            max_exchanges=4,
+            max_exchanges=1,
         ),
         # multimodal pipeline: binary payload + metadata -> mapInPandas
         # feature extraction; the fake decode is deterministic MD5

@@ -10,12 +10,7 @@
    to silently parse as LEFT semi/anti (inverting which side
    survives); neither Spark nor DuckDB supports the spelling, so it
    now raises.
-2. (low) AsofJoin._fold's DuckDB render wraps a non-named right side
-   as ``AS {rname}`` (the alias the ON conjunction addresses by
-   contract) instead of a fresh alias that left the qualifier
-   dangling. Unreachable via the parser; pinned for direct
-   construction.
-3. (low) FrameBound covers() treats a zero-interval bound as the
+2. (low) FrameBound covers() treats a zero-interval bound as the
    current row (spanning on either side), so
    RANGE BETWEEN INTERVAL '0' DAY FOLLOWING AND UNBOUNDED FOLLOWING
    with EXCLUDE CURRENT ROW is accepted instead of over-rejected.
@@ -89,54 +84,7 @@ def test_left_semi_anti_still_parse():
 
 
 # ---------------------------------------------------------------------------
-# 2. AsofJoin duckdb render of a non-named right side keeps rname
-# ---------------------------------------------------------------------------
-
-def test_asof_fold_unnamed_right_uses_rname():
-    from datafusion_sqlgen_spark.plans.core import AsofJoin, Scan
-
-    parsed = parse_sql(
-        "SELECT l.event_id AS eid, r.p AS pval "
-        "FROM events AS l ASOF JOIN "
-        "(SELECT device_id AS d, ts, p FROM readings) AS r "
-        "ON r.d = l.device_id AND r.ts <= l.ts"
-    )
-    node = next(p for p in _walk(parsed) if isinstance(p, AsofJoin))
-    # strip the SubqueryAlias wrapper: the right side is then a bare
-    # projection, the direct-construction shape the parser forbids
-    import dataclasses
-    bare = dataclasses.replace(node, right=node.right.input)
-    sql = bare.to_sql("duckdb")
-    assert f"AS {node.rname}" in sql
-    # the ON conjunction's r.-qualified refs must resolve: execute it
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE events AS SELECT * FROM (VALUES "
-        "(1, 10, TIMESTAMP '2024-01-01 00:05:00')) "
-        "v(event_id, device_id, ts)"
-    )
-    con.execute(
-        "CREATE TABLE readings AS SELECT * FROM (VALUES "
-        "(10, TIMESTAMP '2024-01-01 00:00:00', 7.5)) v(device_id, ts, p)"
-    )
-    # bare is the join node itself (no projection above): one matched
-    # row whose right payload is 7.5
-    rows = con.execute(sql).fetchall()
-    assert len(rows) == 1 and float(rows[0][-1]) == 7.5
-
-
-def _walk(plan):
-    yield plan
-    import dataclasses
-    for f in dataclasses.fields(plan):
-        v = getattr(plan, f.name)
-        from datafusion_sqlgen_spark.plans.core import Plan
-        if isinstance(v, Plan):
-            yield from _walk(v)
-
-
-# ---------------------------------------------------------------------------
-# 3. zero-interval frame bounds span the current row
+# 2. zero-interval frame bounds span the current row
 # ---------------------------------------------------------------------------
 
 def test_zero_interval_following_frame_accepted_and_correct():
@@ -194,19 +142,6 @@ def test_nonzero_noncovering_interval_frames_still_rejected():
 # ---------------------------------------------------------------------------
 # round-12 self-review fixes (inline code review of the r12 diff)
 # ---------------------------------------------------------------------------
-
-def test_star_except_over_asof_fails_closed_on_spark_render():
-    """Review r12 #1: the user's except list cannot be split between
-    the two star arms without the schema, so the spark render raises
-    instead of emitting SQL that breaks on one side."""
-    plan = parse_sql(
-        "SELECT * EXCLUDE (ev) FROM l ASOF JOIN r "
-        "ON l.k = r.k AND l.ts >= r.ts"
-    )
-    with pytest.raises(ValueError, match="no schema-free"):
-        plan.to_sql("spark")
-    # the DuckDB render (native ASOF, flat columns) still works
-    assert "EXCLUDE" in plan.to_sql("duckdb")
 
 
 def test_struct_star_rejected_outside_struct():

@@ -72,6 +72,17 @@ def test_gate_fails_undeclared_nested_loop_join(spark, duck):
         _gate(spark, duck, name, w)
 
 
+def test_plan_breach_names_row_at_a_time_python(spark):
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    plus_one = F.udf(lambda x: x + 1, LongType())
+    df = spark.table("nation").select(plus_one(F.col("n_nationkey")))
+    w = catalog()["ref_scan_filter"]
+    assert plan_breach("udf_row", w, executed_plan(df)) == (
+        "udf_row: row-at-a-time Python (BatchEvalPython)")
+
+
 def test_oracle_rule_rejects_int_against_float():
     # DuckDB HUGEINT sums arrive as float64: equal values, another hash
     got = pd.DataFrame({"n": [0, 3]})

@@ -992,3 +992,30 @@ def test_generate_series_reparse_resugars(duck):
     q = ("SELECT * FROM (SELECT explode(sequence(0, c_custkey)) "
          "AS generate_series FROM customer) AS g")
     assert not isinstance(parse_sql(q), GenerateSeries)
+
+
+def test_struct_star_parses_and_renders_both_dialects():
+    """``struct(t.*)`` (the ASOF desugar's row form) parses as a
+    function argument: Spark expands the star inside CreateStruct,
+    DuckDB renders the bare relation alias (row struct)."""
+    p = parse_sql("SELECT struct(l.*) AS s FROM nation l")
+    s = p.to_sql("spark")
+    assert "struct(l.*)" in s
+    assert parse_sql(s).to_sql("spark") == s
+    d = p.to_sql("duckdb")
+    assert " l AS s" in d  # bare relation alias = row struct in DuckDB
+    con = duckdb.connect()
+    con.execute("CREATE TABLE nation AS SELECT 1 AS a, 'x' AS b")
+    assert con.execute(f"SELECT s.* FROM ({d})").fetchall() == [(1, 'x')]
+
+
+def test_struct_star_executes_on_spark(spark):
+    # fresh view name: redefining a shared fixture view (nation etc.)
+    # would leak into later tests in the session-scoped SparkSession
+    spark.sql("CREATE OR REPLACE TEMP VIEW ss_rel12 AS SELECT 1 AS a, "
+              "'x' AS b")
+    rows = spark.sql(
+        parse_sql("SELECT struct(l.*) AS s FROM ss_rel12 l")
+        .to_sql("spark")
+    ).collect()
+    assert rows[0].s.a == 1 and rows[0].s.b == "x"

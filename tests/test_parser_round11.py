@@ -1,7 +1,6 @@
-"""Round-11 SQL-surface batch: implicit comma cross-joins (SQL-92,
-VERDICT r10 missing #1), the AsofJoin node rework gates living in
-test_parser_round10b.py, and (later in the round) PG regex operator
-spellings and multi-index array access.
+"""SQL-surface batch: implicit comma cross-joins (SQL-92), PG regex
+operator spellings and multi-index array access. The ASOF JOIN tests
+are in ``test_asof.py``.
 
 Verification pattern per the house style: render→parse→render fixpoint,
 DuckDB equivalence on an independent formulation, Spark dual-render,
@@ -176,196 +175,8 @@ def test_multi_index_dual_render(spark):
 
 
 # ---------------------------------------------------------------------------
-# ASOF JOIN strict bounds (> / <) — DuckDB's dialect accepts all four ops
+# Comma-join edge cases
 # ---------------------------------------------------------------------------
-
-def _asof_strict_duck():
-    con = duckdb.connect()
-    # l.ts=10 ties r.ts=10 for k=1: the strict/non-strict boundary row
-    con.execute("CREATE TABLE l AS SELECT * FROM (VALUES (1,10,'a'),"
-                "(1,25,'b'),(2,5,'c'),(2,99,'d'),(3,7,'e')) t(k,ts,ev)")
-    con.execute("CREATE TABLE r AS SELECT * FROM (VALUES (1,10,1.0),"
-                "(1,20,2.0),(1,30,3.0),(2,7,4.0)) t(k,ts,price)")
-    return con
-
-
-@pytest.mark.parametrize("kw", ["ASOF JOIN", "ASOF LEFT JOIN"])
-@pytest.mark.parametrize("op", [">", "<", ">=", "<="])
-def test_asof_strict_bounds_match_duckdb_native(kw, op):
-    """Both the native duckdb render and the desugared spark render
-    (re-run on DuckDB) equal DuckDB's native ASOF for every bound op,
-    including the strict forms at an exactly-equal timestamp."""
-    con = _asof_strict_duck()
-    q = (f"SELECT l.k, l.ts, l.ev, r.ts AS rts FROM l {kw} r "
-         f"ON l.k = r.k AND l.ts {op} r.ts")
-    plan = parse_sql(q)
-    d = plan.to_sql("duckdb")
-    assert parse_sql(d).to_sql("duckdb") == d  # surface-form fixpoint
-    native = sorted(con.execute(q).fetchall())
-    assert sorted(con.execute(d).fetchall()) == native
-    des = parse_sql(plan.to_sql("spark")).to_sql("duckdb")
-    assert "ASOF JOIN" not in des.upper()
-    assert sorted(con.execute(f"SELECT * FROM ({des})").fetchall()) \
-        == native
-
-
-@pytest.mark.parametrize("op,expect_equal_match", [
-    (">=", True), (">", False),
-])
-def test_asof_strict_to_df_equal_timestamp(spark, op, expect_equal_match):
-    """The union+window tie order: a strict bound must exclude the
-    exactly-equal right row, the non-strict form must match it."""
-    spark.sql("CREATE OR REPLACE TEMP VIEW sl AS SELECT * FROM VALUES "
-              "(1, 10) AS t(k, ts)")
-    spark.sql("CREATE OR REPLACE TEMP VIEW sr AS SELECT * FROM VALUES "
-              "(1, 10, 1.0), (1, 5, 2.0) AS t(k, ts, price)")
-    q = (f"SELECT l.k, l.ts, r.ts AS rts, r.price FROM sl AS l "
-         f"ASOF JOIN sr AS r ON l.k = r.k AND l.ts {op} r.ts")
-    rows = parse_sql(q).to_df(spark).collect()
-    assert len(rows) == 1
-    assert (rows[0]["rts"] == 10) is expect_equal_match
-    assert (rows[0]["price"] == (1.0 if expect_equal_match else 2.0))
-
-
-@pytest.mark.parametrize("kw", ["ASOF JOIN", "ASOF LEFT JOIN"])
-def test_asof_using_shorthand_matches_on_form(kw):
-    """DuckDB's USING shorthand (keys first, ordering column last, >=
-    semantics) desugars to the explicit qualified ON conjunction."""
-    con = _asof_strict_duck()
-    q_using = (f"SELECT l.k, l.ts, l.ev, r.price FROM l {kw} r "
-               f"USING (k, ts)")
-    q_on = (f"SELECT l.k, l.ts, l.ev, r.price FROM l {kw} r "
-            f"ON l.k = r.k AND l.ts >= r.ts")
-    pu = parse_sql(q_using)
-    d = pu.to_sql("duckdb")
-    assert "USING" not in d and "l.ts >= r.ts" in d.replace("(", "").replace(")", "")
-    assert parse_sql(d).to_sql("duckdb") == d
-    assert sorted(con.execute(d).fetchall()) \
-        == sorted(con.execute(q_on).fetchall()) \
-        == sorted(con.execute(q_using).fetchall())
-
-
-def test_asof_using_rejections():
-    with pytest.raises(ParseError, match="at least two"):
-        parse_sql("SELECT 1 FROM l ASOF JOIN r USING (ts)")
-    with pytest.raises(ParseError, match="named left relation"):
-        parse_sql("SELECT 1 FROM a JOIN b ON a.x = b.x "
-                  "ASOF JOIN r USING (k, ts)")
-
-
-@pytest.mark.parametrize("proj", ["*", "l.*", "r.*", "l.ts, r.*"])
-def test_asof_select_star_flattens_like_sql(spark, proj):
-    """SELECT * / l.* / r.* above an ASOF join: to_df must flatten the
-    match struct to the same column shape both SQL renders produce
-    (native duckdb ASOF and the spark-dialect desugar flatten stars)."""
-    spark.sql("CREATE OR REPLACE TEMP VIEW fl AS SELECT * FROM VALUES "
-              "(1, 10), (1, 25), (2, 5) AS t(k, ts)")
-    spark.sql("CREATE OR REPLACE TEMP VIEW fr AS SELECT * FROM VALUES "
-              "(1, 8, 1.0), (1, 20, 2.0) AS t(k, ts, price)")
-    con = duckdb.connect()
-    con.execute("CREATE TABLE fl AS SELECT * FROM (VALUES (1, 10), "
-                "(1, 25), (2, 5)) t(k, ts)")
-    con.execute("CREATE TABLE fr AS SELECT * FROM (VALUES (1, 8, 1.0), "
-                "(1, 20, 2.0)) t(k, ts, price)")
-    q = (f"SELECT {proj} FROM fl AS l ASOF LEFT JOIN fr AS r "
-         "ON l.k = r.k AND l.ts >= r.ts")
-    plan = parse_sql(q)
-    mine = plan.to_df(spark)
-    via_sql = spark.sql(plan.to_sql("spark"))
-    assert mine.columns == via_sql.columns, (proj, mine.columns,
-                                             via_sql.columns)
-    native = con.execute(q)
-    assert mine.columns == [d[0] for d in native.description]
-    key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
-    a = sorted(map(tuple, normalize_rows(mine.collect())), key=key)
-    b = sorted(map(tuple, normalize_rows(native.fetchall())), key=key)
-    c = sorted(map(tuple, normalize_rows(via_sql.collect())), key=key)
-    assert a == b == c
-
-
-def test_asof_composes_in_cte_subquery_and_join_chain(spark):
-    """AsofJoin as a CTE body, as a derived table joined onward, and
-    chained with a further join at the same FROM level — all three
-    render-fixpoint, execute on DuckDB equal to the native form, and
-    the chain resolves struct-qualified right columns through the
-    downstream join on the DataFrame path too."""
-    con = _asof_strict_duck()
-    cte = ("WITH m AS (SELECT l.k, l.ts, r.price FROM l ASOF LEFT JOIN "
-           "r ON l.k = r.k AND l.ts >= r.ts) "
-           "SELECT k, count(*) AS n, sum(price) AS sp FROM m GROUP BY k")
-    chain = ("SELECT l.k, r.price, x.ev FROM l ASOF JOIN r "
-             "ON l.k = r.k AND l.ts >= r.ts "
-             "JOIN l AS x ON x.k = l.k AND x.ts = l.ts")
-    for q in (cte, chain):
-        d = parse_sql(q).to_sql("duckdb")
-        assert parse_sql(d).to_sql("duckdb") == d
-        assert sorted(con.execute(d).fetchall()) \
-            == sorted(con.execute(q).fetchall())
-    # Spark DataFrame path for the chain: the match struct survives the
-    # downstream join and keeps resolving r.price
-    spark.sql("CREATE OR REPLACE TEMP VIEW cl AS SELECT * FROM VALUES "
-              "(1, 10, 'a'), (1, 25, 'b'), (2, 5, 'c') AS t(k, ts, ev)")
-    spark.sql("CREATE OR REPLACE TEMP VIEW cr AS SELECT * FROM VALUES "
-              "(1, 8, 1.0), (1, 20, 2.0) AS t(k, ts, price)")
-    qs = ("SELECT l.k, r.price, x.ev FROM cl AS l ASOF JOIN cr AS r "
-          "ON l.k = r.k AND l.ts >= r.ts "
-          "JOIN cl AS x ON x.k = l.k AND x.ts = l.ts")
-    rows = sorted(map(tuple, parse_sql(qs).to_df(spark).collect()))
-    con2 = duckdb.connect()
-    con2.execute("CREATE TABLE cl AS SELECT * FROM (VALUES "
-                 "(1, 10, 'a'), (1, 25, 'b'), (2, 5, 'c')) t(k, ts, ev)")
-    con2.execute("CREATE TABLE cr AS SELECT * FROM (VALUES "
-                 "(1, 8, 1.0), (1, 20, 2.0)) t(k, ts, price)")
-    assert rows == sorted(con2.execute(qs).fetchall())
-
-
-def test_asof_select_star_flattens_through_where(spark):
-    """Review r11 #1: a WHERE between the star and the ASOF join
-    interposes a Filter; the star expansion must see through it (and
-    ORDER/LIMIT) or to_df surfaces the match struct while both SQL
-    renders flatten — a dual-path column-shape divergence."""
-    spark.sql("CREATE OR REPLACE TEMP VIEW wl AS SELECT * FROM VALUES "
-              "(1, 10), (1, 25), (2, 5) AS t(k, ts)")
-    spark.sql("CREATE OR REPLACE TEMP VIEW wr AS SELECT * FROM VALUES "
-              "(1, 8, 1.0), (1, 20, 2.0) AS t(k, ts, price)")
-    con = duckdb.connect()
-    con.execute("CREATE TABLE wl AS SELECT * FROM (VALUES (1, 10), "
-                "(1, 25), (2, 5)) t(k, ts)")
-    con.execute("CREATE TABLE wr AS SELECT * FROM (VALUES (1, 8, 1.0), "
-                "(1, 20, 2.0)) t(k, ts, price)")
-    for q in (
-        "SELECT * FROM wl AS l ASOF LEFT JOIN wr AS r "
-        "ON l.k = r.k AND l.ts >= r.ts WHERE l.ts > 5",
-        "SELECT l.* FROM wl AS l ASOF LEFT JOIN wr AS r "
-        "ON l.k = r.k AND l.ts >= r.ts WHERE l.ts > 5 "
-        "ORDER BY l.ts LIMIT 2",
-    ):
-        plan = parse_sql(q)
-        mine = plan.to_df(spark)
-        native = con.execute(q)
-        assert mine.columns == [d[0] for d in native.description], (
-            q, mine.columns)
-        key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
-        assert sorted(map(tuple, normalize_rows(mine.collect())),
-                      key=key) \
-            == sorted(map(tuple, normalize_rows(native.fetchall())),
-                      key=key)
-
-
-def test_asof_star_with_unknown_alias_errors_like_sql(spark):
-    """Review r11 #3: a star qualified by an alias that is neither
-    side must raise (like both SQL renders do), never silently resolve
-    to the left columns."""
-    spark.sql("CREATE OR REPLACE TEMP VIEW wl AS SELECT * FROM VALUES "
-              "(1, 10) AS t(k, ts)")
-    spark.sql("CREATE OR REPLACE TEMP VIEW wr AS SELECT * FROM VALUES "
-              "(1, 8, 1.0) AS t(k, ts, price)")
-    plan = parse_sql(
-        "SELECT q.* FROM wl AS l ASOF JOIN wr AS r "
-        "ON l.k = r.k AND l.ts >= r.ts")
-    with pytest.raises(Exception, match="q|resolve|found"):
-        plan.to_df(spark).collect()
-
 
 def test_comma_join_right_full_suffix_rejected():
     """Review r11 #2 (verified vs DuckDB): comma binds loosest, so

