@@ -495,10 +495,10 @@ class _Parser:
         """One ``CREATE [OR REPLACE] TEMP[ORARY] VIEW name AS <query>;``
         statement of a multi-statement script. The whole script
         desugars to ONE ``With`` over the final statement — a CTE *is*
-        a session-scoped named query, and ``With.to_df`` registers temp
-        views, so the DataFrame execution is literally the statement's
-        semantics. Persistent ``CREATE VIEW``/``CREATE TABLE`` are
-        rejected (this engine has no writable catalog at parse time);
+        a named query scoped to the statement that uses it, the way the
+        script's temp views are scoped to the script. Persistent
+        ``CREATE VIEW``/``CREATE TABLE`` are rejected (this engine has
+        no writable catalog at parse time);
         re-binding a name mid-script is rejected too (a CTE chain
         cannot express rebinding — later definitions would capture the
         new binding, WITH scoping captures the first)."""

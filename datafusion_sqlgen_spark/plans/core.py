@@ -10,10 +10,13 @@ derived table whenever a slot is occupied or SQL clause order would change
 semantics* — the correct version of the reference's unparse-fusion.
 
 Rendering targets:
-  * ``to_df(spark)``      — pyspark DataFrame (Catalyst optimizes; AQE at
-    runtime). This is the execution path for scale.
-  * ``to_sql("spark")``   — Spark SQL text; ``spark.sql(...)`` must give
-    the same result (dual-render invariant, tested).
+  * ``to_sql("spark")``   — Spark SQL text. ``spark.sql(...)`` of it is
+    what the workload catalog executes: one parse and one analysis per
+    query (``registry.planned``).
+  * ``to_df(spark)``      — pyspark DataFrame calls, one Py4J call and
+    one analysis per builder step; must give the same result as the
+    Spark SQL (dual-render invariant, held by the catalog gate and the
+    dual-render tests).
   * ``to_sql("duckdb")``  — oracle SQL for the driver's DuckDB check.
 
 Operator inventory covers SURVEY.md §2.1 end-to-end: Scan, Project,
@@ -1490,10 +1493,12 @@ class Values(Plan):
     reference's unparser; its tests build MemTables instead,
     tests/select.rs:253-273). Rows are tuples of Expr/literals.
 
-    Spark and DuckDB both accept the parenthesized-VALUES derived table;
-    the DataFrame rendering is ``spark.createDataFrame`` (literal rows
-    evaluate driver-side — this node is for small inline data: lookup
-    tables, test fixtures, broadcast maps)."""
+    Spark and DuckDB both accept the parenthesized-VALUES derived table,
+    and ``to_df`` executes that Spark SQL: the SQL ``VALUES`` is a
+    ``LocalRelation`` with size statistics, so the planner can broadcast
+    it, and its literals keep their SQL types (``1`` is ``int``). This
+    node is for small inline data: lookup tables, test fixtures,
+    broadcast maps."""
 
     rows: tuple  # tuple[tuple[Expr|value, ...], ...]
     columns: tuple  # column names
@@ -1512,20 +1517,7 @@ class Values(Plan):
         return _SelectState(from_sql=self._values_sql(dialect))
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        if any(
-            isinstance(v, Expr) and not hasattr(v, "value")  # non-Lit Expr
-            for row in self.rows
-            for v in row
-        ):
-            # computed row expressions: to_sql renders them, so route the
-            # DataFrame path through the generated SQL (same Catalyst plan),
-            # like the Project/Filter subquery fallbacks
-            return spark.sql(self.to_sql(SPARK))
-        data = [
-            tuple(v.value if isinstance(v, Expr) else v for v in row)
-            for row in self.rows
-        ]
-        return spark.createDataFrame(data, schema=list(self.columns))
+        return spark.sql(self.to_sql(SPARK))
 
 
 @dataclass(frozen=True)

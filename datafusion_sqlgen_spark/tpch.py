@@ -9,8 +9,8 @@ query is *adapted* to the available columns while keeping the original's
 plan shape — the thing being tested: join topology, correlated subqueries,
 HAVING-with-subquery, CTE + scalar max, left-join distributions.
 
-Every query is a single Plan: ``to_df`` executes DataFrame-side,
-``to_sql('spark')`` is the dual-render check, and the oracle is the
+Every query is a single Plan: Spark executes its ``to_sql('spark')``
+text, ``to_df`` is the dual-render check, and the oracle is the
 hand-written DuckDB SQL declared next to it. Scale notes per query
 live in the comments: at 100 TB the join order here keeps dimensions
 broadcast-able and fact-to-fact joins keyed on the natural distribution

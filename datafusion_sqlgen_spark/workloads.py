@@ -6,9 +6,11 @@ Spark builds it, the DuckDB SQL that checks it, whether the bench
 headline times it, and its plan contract. Two kinds:
 
 * **Plan workloads** — built with the plan/expression IR; the Spark side
-  executes ``plan.to_df(spark)``. The oracle is hand-written in a
-  deliberately different formulation from ``plan.to_sql("duckdb")``, so
-  a rendering bug shared by both dialects cannot confirm itself.
+  executes the plan's Spark SQL, ``spark.sql(plan.to_sql("spark"))``,
+  and the catalog gate holds ``plan.to_df(spark)`` to it. The oracle is
+  hand-written in a deliberately different formulation from
+  ``plan.to_sql("duckdb")``, so a rendering bug shared by both dialects
+  cannot confirm itself.
 * **Operator workloads** — the LLM-pipeline operators (dedup/similarity/
   text/as-of), whose Spark side is higher-order-function DataFrame code
   and whose oracle is DuckDB SQL shipped next to each operator.
@@ -1876,7 +1878,11 @@ SELECT CASE o_orderpriority
            AS total
 FROM orders
 GROUP BY 1
-""")
+""",
+        # the VALUES relation is a LocalRelation with size statistics,
+        # so the planner broadcasts it in place of a sort-merge join
+        max_exchanges=3,
+    )
 
     # SQL-standard FILTER (WHERE ...) conditional aggregation — one pass
     # computes disjoint conditional aggregates (the k-scan UNION ALL or
@@ -2958,9 +2964,9 @@ WHERE c.c_acctbal > 9000
 """)
     # ASOF JOIN (DuckDB dialect) —
     # each click pairs with the same user's most recent purchase at or
-    # before it. Parses to the AsofJoin node: to_df runs the one-shuffle
-    # union+window shape (no join operator in the physical plan); the
-    # right side is GROUP BY (user_id, ts)-unique, the ASOF
+    # before it. Parses to the AsofJoin node, whose Spark SQL is the
+    # one-shuffle union+window shape (no join operator in the physical
+    # plan); the right side is GROUP BY (user_id, ts)-unique, the ASOF
     # precondition. The hand oracle is DuckDB's NATIVE ASOF JOIN.
     w["parsed_asof_join"] = planned(
         parse_sql(
@@ -3250,8 +3256,8 @@ FROM orders WHERE o_orderkey < 4000
 """)
     # multi-statement script — CREATE TEMP VIEW chain + final
     # SELECT desugars to ONE With (a CTE IS a session-scoped named
-    # query; With.to_df registers temp views, literally the statement's
-    # semantics). Counts are integer-exact.
+    # query, bound inside the query text, so no view outlives it).
+    # Counts are integer-exact.
     w["parsed_script_views"] = planned(
         parse_sql(
             "CREATE TEMP VIEW big_cust AS "

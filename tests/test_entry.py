@@ -4,7 +4,10 @@ Every ``queries()`` entry is built once at the test scale and held to
 two checks: its executed plan, read before it runs, keeps the
 workload's plan contract (``registry.plan_breach``), and its rows match
 its ``oracle_sql()`` on DuckDB at driver strength
-(``registry.oracle_mismatch``)."""
+(``registry.oracle_mismatch``). A plan workload runs its Spark SQL
+rendering, so the gate also builds its DataFrame rendering,
+``plan.to_df``, and holds it to the same column names, Spark types and
+rows."""
 
 import os
 from dataclasses import replace
@@ -32,8 +35,15 @@ def _gate(spark, duck, name, w, check_budget=AT_BUDGET_SCALE):
     df = entry_mod.queries()[name](spark, SF_DIR)
     breach = plan_breach(name, w, executed_plan(df))
     assert breach is None, breach
-    why = oracle_mismatch(df.toPandas(), duck.execute(w.oracle).df())
+    got = df.toPandas()
+    why = oracle_mismatch(got, duck.execute(w.oracle).df())
     assert why is None, f"{name}: {why}"
+    if w.plan is not None:
+        alt = w.plan.to_df(spark)
+        assert alt.dtypes == df.dtypes, (
+            f"{name}: to_df {alt.dtypes} vs SQL {df.dtypes}")
+        why = oracle_mismatch(alt.toPandas(), got)
+        assert why is None, f"{name}: to_df vs SQL: {why}"
 
 
 def test_entry_smoke(spark):

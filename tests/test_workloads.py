@@ -132,6 +132,59 @@ def test_plan_oracles_differ_from_their_own_render():
         "parsed_asof_tolerance", "parsed_asof_tolerance_left"]
 
 
+def _plan_classes(cls):
+    for sub in cls.__subclasses__():
+        yield sub
+        yield from _plan_classes(sub)
+
+
+def test_plan_workloads_run_their_spark_sql(spark, monkeypatch):
+    """A plan workload's build is one ``spark.sql`` call on the plan's
+    Spark SQL rendering; no node's ``to_df`` runs."""
+    from datafusion_sqlgen_spark.plans import Plan
+
+    calls = {"sql": 0, "to_df": 0}
+
+    def never(self, spark):
+        calls["to_df"] += 1
+        raise AssertionError(f"{type(self).__name__}.to_df called")
+
+    for cls in (Plan, *_plan_classes(Plan)):
+        if "to_df" in vars(cls):
+            monkeypatch.setattr(cls, "to_df", never)
+    sql = spark.sql
+
+    def counted(text, *args, **kwargs):
+        calls["sql"] += 1
+        return sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", counted)
+    for name, w in catalog().items():
+        if w.plan is None:
+            continue
+        before = calls["sql"]
+        w.build(spark)
+        assert calls["sql"] == before + 1, name
+    assert calls["to_df"] == 0
+
+
+def test_with_workloads_leave_no_temp_views(spark):
+    """CTEs are bound inside the query text, so building a ``With``
+    workload registers no view that outlives it. A fresh session keeps
+    the views other tests registered out of the comparison."""
+    from datafusion_sqlgen_spark.catalog import register_tables
+    from tests.conftest import SF_DIR
+
+    session = spark.newSession()
+    register_tables(session, SF_DIR)
+    before = sorted(t.name for t in session.catalog.listTables())
+    queries = build_queries()
+    for name in ("cte_top_customers", "tpch_q15", "parsed_win_topn",
+                 "parsed_cte_agg", "parsed_script_views"):
+        queries[name](session, SF_DIR)
+    assert sorted(t.name for t in session.catalog.listTables()) == before
+
+
 def _n_workloads() -> int:
     return len(catalog())
 
